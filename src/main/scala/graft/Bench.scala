@@ -1,315 +1,230 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
+
+/** Throughput sweep over every [[SparkEntry.queries]] row: two stdout
+  * contract lines plus the on-disk `bench_detail.json` record.
+  *
+  * Env: `SPARK_GRAFT_SF_DIR` (input dir), `SPARK_GRAFT_CPUS` (via
+  * [[Session]]), `SPARK_GRAFT_BENCH_RUNS` (timed reps, default 3),
+  * `SPARK_GRAFT_BENCH_ONLY` (comma-separated query filter),
+  * `SPARK_GRAFT_BENCH_AMBIENT=0` (skip calibration) and
+  * `SPARK_GRAFT_BENCH_DETAIL` (detail path).
+  */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One timed rep and the telemetry read right after it: collector time
+    * during the rep, live heap, persistent RDD count and cached bytes. A
+    * failed rep records `sec = -1` (never its fast failure wall time), so
+    * every telemetry field still attributes to the right rep.
+    */
+  final case class Rep(sec: Double, gcSec: Double, heapGb: Double, rdds: Int,
+                       storageGb: Double)
+
+  /** An ambient sentinel's best time and its ratio to the anchor (-1 when
+    * every rep failed). */
+  final case class Sentinel(name: String, sec: Double, vsAnchor: Double)
+
+  /** What one sweep measured. `ambient` holds the start, mid and end
+    * sentinel samples; `parseBytes` the input bytes of each parser row. */
+  final case class Sweep(sf: String, reps: Map[String, Seq[Rep]],
+                         ambient: Seq[Seq[Sentinel]],
+                         parseBytes: Map[String, Long])
+
+  val json: JsonMapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  /** Best successful rep; -1 when every rep failed (never a fast failure
+    * wall time). */
+  def best(reps: Seq[Rep]): Double = {
+    val ok = reps.map(_.sec).filter(_ >= 0)
+    if (ok.isEmpty) -1.0 else ok.min
+  }
+
+  private def medianRatio(s: Seq[Sentinel]): Double = {
+    val ratios = s.map(_.vsAnchor).filter(_ > 0).sorted
+    if (ratios.isEmpty) -1.0 else ratios(ratios.length / 2)
+  }
+
+  private def ms(v: Double): Double = math.round(v * 1000) / 1000.0
+  private def r2(v: Double): Double = math.round(v * 100) / 100.0
+
+  /** The contract line, its short twin and the detail record. Times are
+    * rounded to ms, and the headline total comes BEFORE the per-query
+    * maps: a stdout capture window can truncate a long line. The
+    * short line repeats the headline alone, so the total survives
+    * truncation from EITHER end of the long one. Telemetry maps land
+    * only in the detail record — the stdout line keeps the shape its
+    * consumers parse.
+    */
+  def render(s: Sweep): (String, String, String) = {
+    val rows = s.reps.toSeq.sortBy(_._1)
+    def perQuery(f: Seq[Rep] => Any) =
+      ListMap(rows.map { case (k, reps) => k -> f(reps) }: _*)
+    val bests = rows.map { case (k, reps) => k -> best(reps) }.toMap
+    val ambient = Seq("start", "mid", "end").zip(s.ambient)
+    val phaseMedians = ambient.map { case (_, a) => medianRatio(a) }
+    val validMedians = phaseMedians.filter(_ > 0).sorted
+    val ambientIndex =
+      if (validMedians.isEmpty) -1.0 else validMedians(validMedians.length / 2)
+    val head = ListMap[String, Any](
+      "metric" -> "total",
+      "value" -> ms(bests.values.filter(_ >= 0).sum),
+      "unit" -> "sec",
+      "sf" -> s.sf,
+      "failed" -> bests.filter(_._2 < 0).keys.toSeq.sorted,
+      "ambient_index" -> r2(ambientIndex),
+      "ambient" -> (ListMap[String, Any](ambient.map { case (phase, a) =>
+        phase -> ListMap(a.map(x =>
+          x.name -> ListMap("sec" -> ms(x.sec), "vs_anchor" -> r2(x.vsAnchor))): _*)
+      }: _*) + ("phase_medians" -> phaseMedians.map(r2))),
+      // ingest-layer throughput: input MB and MB/s at the best rep
+      "parse_mb_s" -> ListMap(s.parseBytes.toSeq.sortBy(_._1).map { case (k, b) =>
+        k -> ListMap("mb" -> math.round(b / 1e4) / 100.0,
+          "mb_s" -> math.round(b / bests(k) / 1e4) / 100.0)
+      }: _*))
+    val line = head ++ ListMap(
+      "queries" -> perQuery(reps => ms(best(reps))),
+      "runs" -> perQuery(_.map(r => ms(r.sec))))
+    val detail = line ++ ListMap(
+      "gc_sec" -> perQuery(_.map(r => ms(r.gcSec))),
+      "heap_gb" -> perQuery(_.map(r => r2(r.heapGb))),
+      "persist_rdds" -> perQuery(_.map(_.rdds)),
+      "storage_gb" -> perQuery(_.map(r => r2(r.storageGb))))
+    (json.writeValueAsString(line), json.writeValueAsString(head),
+      json.writeValueAsString(detail) + "\n")
+  }
+
+  // ---- ambient-load calibration ------------------------------------- //
+  // Three pinned FIXED-PLAN sentinels run at sweep START, MID (after the
+  // first half of the query list) and END, each with a fixed 5-rep
+  // protocol (independent of SPARK_GRAFT_BENCH_RUNS). ambient_index is
+  // the median of the three phase medians of best/anchor: the shared
+  // machine drifts 1.4-2× per core across a day, so per-query regression
+  // calls divide by it first. Start compares against COLD anchors
+  // (session-start minima on a quiet machine — JIT state at position 1
+  // reads 1.5-2.2× the warm values), mid and end against WARM anchors
+  // (mid/end minima of the same quiet sf0.1 sweep, noop-write action).
+  // If a sentinel's plan changes, re-record BOTH its anchors in the same
+  // commit.
+  private val sentinelReps = 5
+  private val sentinelAnchorsCold = Seq(
+    "q60_pii_redact" -> 0.812,
+    "q62_asof_join" -> 0.684,
+    "q94_span_mask" -> 0.389)
+  private val sentinelAnchorsWarm = Seq(
+    "q60_pii_redact" -> 0.712,
+    "q62_asof_join" -> 0.523,
+    "q94_span_mask" -> 0.412)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the status store retains per-execution plan strings + metrics
-      // even with the UI off; at 320 queries × 3-4 executions each the
-      // defaults (1000 executions / jobs / stages) hold full physical
-      // plans — typedlit codebooks included — for the whole sweep.
-      // Bound them so sweep position N costs the same heap as position 1.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
+    val sc = spark.sparkContext
     // warmup: session/codegen/readers init so the first timed query
     // isn't charged ~3s of JVM warmup
     spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
       .agg(org.apache.spark.sql.functions.sum("l_quantity")).collect()
-    // best-of-N (default 3): one shared-JVM run carries multi-second
-    // GC/JIT noise per query; the minimum is the standard steady-state
-    // throughput estimate. ALL per-run times are emitted alongside the
-    // min so a noisy session is visible in the artifact itself (a 4 s
-    // recording of a 1 s query shows up as [4.1, 1.0, 1.1], not as a
-    // silent regression).
+    // best-of-N: one shared-JVM run carries multi-second GC/JIT noise per
+    // query; the minimum is the steady-state estimate, and every rep is
+    // emitted beside it so a noisy session is visible in the artifact
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    // The timed action is a NOOP WRITE, not count() (r16): count()
-    // lets the optimizer prune the final projection — for the
-    // projection-shaped parser rows (q330/q342/q371/...) it pruned
-    // the ENTIRE parse stage down to `count(1) over Relation`, so
-    // those rows measured scan+count, never the parser. The noop sink
-    // materializes every output column (including any final sort)
-    // with no side effects — the honest "produce the full result"
-    // cost. r15→r16 per-query deltas on projection-shaped rows are
-    // this measurement fix, not regressions.
-    def exec(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    // optional comma-separated query filter for single-query A/B timing
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val failed = scala.collection.mutable.ListBuffer.empty[String]
-    // SPARK_GRAFT_BENCH_COMPOSITE=1 skips the per-query cache release:
-    // queries share retained caches like a real composite session (the
-    // SharedScanAb scheduler story) — the close-out reports BOTH totals.
-    val composite = sys.env.getOrElse("SPARK_GRAFT_BENCH_COMPOSITE", "0") == "1"
-    val doWarmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
-    // per-rep JVM telemetry: GC-time delta and post-rep heap. The r9
-    // artifact carried unexplained 10x heavy tails (q155 reps
-    // [14.4, 2.2, 21.4] s) in the FULL sweep only — the same queries
-    // are flat in a 4-query session — so each rep records how much of
-    // its wall time was collector time. A rep whose gcSec ~= wall
-    // delta is a heap-pressure artifact, not a plan problem.
+    val skipAmbient = sys.env.getOrElse("SPARK_GRAFT_BENCH_AMBIENT", "1") == "0"
+    // The timed action is a NOOP WRITE, not count(): count() lets the
+    // optimizer prune the final projection (for projection-shaped parser
+    // rows, the entire parse stage). The noop sink materializes every
+    // output column, final sort included, with no side effects.
+    def exec(df: DataFrame): Unit =
+      df.write.mode("overwrite").format("noop").save()
     def gcMs: Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).filter(_ > 0).sum
     }
-    /** One query under the standard isolation protocol: cache release +
-      * heap settle, one untimed warmup, `runs` timed reps with GC/heap/
-      * storage telemetry. Returns (minOkTime | -1, reps, gc, heap,
-      * rddCount, storageGb) — index-aligned arrays, failed reps = -1.
-      */
-    def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                reps: Int = runs)
-      : (Double, Seq[Double], Seq[Double], Seq[Double], Seq[Int], Seq[Double]) = {
-      // guide §1.5: label the jobs so a UI/event-log reading of a sweep
-      // attributes every stage to its query (thread-local, zero cost)
-      spark.sparkContext.setJobDescription(s"bench: $name")
-      // isolate queries from each other: drop the cache registry (each
-      // query is measured from a clean slate — its OWN reruns still hit
-      // its caches) and settle the heap. The r8 A/B: q121 measured 11.8s
-      // mid-sweep with neighbors' retained caches + GC debt vs 2.8s
-      // isolated; r6/r7 showed the same 2-8× cross-query spread.
-      // releaseAll ALSO unpersists every persistent RDD the registry
-      // can't see (localCheckpoint blocks, unregistered persists) — the
-      // r10 official sweep showed those residues squeezing execution
-      // memory until the heavy joins spilled (q290 13-30s vs 2.2s
-      // isolated). CLEAR CACHE drops any CacheManager entries left
-      // behind; the gc + short drain window lets the async
-      // ContextCleaner reap dead broadcast blocks (they only free on
-      // GC, and a big-heap sweep may otherwise never collect).
-      if (!composite) {
-        graft.core.Caches.releaseAll()
-        spark.sql("CLEAR CACHE")
-        System.gc()
-        Thread.sleep(150)
-      }
-      // one untimed warmup execution: codegen compilation + JIT of the
-      // query's operators land here, so the timed runs measure steady-
-      // state throughput (the advisory's <2× per-run spread criterion).
-      // Disable with SPARK_GRAFT_BENCH_WARMUP=0 to time cold plans.
-      // NonFatal only: swallowing an OOM/fatal JVM error here would let
-      // the timed runs proceed on a degraded heap and report garbage.
-      if (doWarmup)
-        try exec(fn(spark, sfDir))
-        catch { case scala.util.control.NonFatal(_) => () }
-      val gcSecs = scala.collection.mutable.ListBuffer.empty[Double]
-      val heapGb = scala.collection.mutable.ListBuffer.empty[Double]
-      // per-rep STORAGE telemetry (r11 brief item 5): reps that rise
-      // within one query mean something accumulates that the per-query
-      // teardown never sees — count of persistent RDDs and cached bytes
-      // after each rep make the grower visible in the artifact itself
-      val rddN = scala.collection.mutable.ListBuffer.empty[Int]
-      val storGb = scala.collection.mutable.ListBuffer.empty[Double]
-      // reps: arrays stay INDEX-ALIGNED — a failed rep records -1 in the
-      // times array (never a fast failure wall time) alongside its own
-      // gc/heap entries, so bench_detail telemetry always attributes to
-      // the right rep (r10 advisory: flatMap-dropped failures skewed it)
-      val times = (1 to reps).map { _ =>
-        // untimed inter-rep gc: reaps the PREVIOUS rep's dead broadcast
-        // blocks (ContextCleaner only fires on GC) and makes the per-rep
-        // heap sample mean live-set, not allocation-since-last-collect
+
+    /** One query under the isolation protocol: cache release + heap
+      * settle, one untimed warmup, `reps` timed reps with telemetry. */
+    def measure(name: String, fn: Query, reps: Int = runs): Seq[Rep] = {
+      // label the jobs so an event-log reading of a sweep attributes
+      // every stage to its query
+      sc.setJobDescription(s"bench: $name")
+      // each query starts from a clean slate (its OWN reruns still hit
+      // its caches): neighbours' retained caches and GC debt measured
+      // 2-8× slower mid-sweep than isolated. releaseAll also unpersists
+      // RDDs the registry cannot see (localCheckpoint blocks); CLEAR
+      // CACHE drops CacheManager leftovers; the gc + short drain lets
+      // the ContextCleaner reap dead broadcast blocks.
+      graft.core.Caches.releaseAll()
+      spark.sql("CLEAR CACHE")
+      System.gc()
+      Thread.sleep(150)
+      // untimed warmup: codegen + JIT land here, so the timed reps
+      // measure steady state. NonFatal only here and below: swallowing
+      // an OOM would let the sweep go on with a degraded heap and
+      // report garbage.
+      try exec(fn(spark, sfDir)) catch { case NonFatal(_) => () }
+      (1 to reps).map { _ =>
+        // untimed inter-rep gc: reaps the previous rep's broadcast blocks
+        // and makes the heap sample mean live set
         System.gc()
         val g0 = gcMs
         val t0 = System.nanoTime()
         val ok = try { exec(fn(spark, sfDir)); true } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
             false
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        gcSecs += (gcMs - g0) / 1e3
+        val sec = (System.nanoTime() - t0) / 1e9
+        val gcSec = (gcMs - g0) / 1e3
         val rt = Runtime.getRuntime
-        heapGb += (rt.totalMemory - rt.freeMemory) / 1e9
-        rddN += spark.sparkContext.getPersistentRDDs.size
-        storGb += spark.sparkContext.getRDDStorageInfo
-          .map(i => i.memSize + i.diskSize).sum / 1e9
-        if (ok) dt else -1.0
+        Rep(if (ok) sec else -1.0, gcSec, (rt.totalMemory - rt.freeMemory) / 1e9,
+          sc.getPersistentRDDs.size,
+          sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum / 1e9)
       }
-      val okTimes = times.filter(_ >= 0)
-      // a query with no successful run is reported as -1, never as a
-      // (fast) failure wall time
-      (if (okTimes.isEmpty) -1.0 else okTimes.min,
-        times, gcSecs.toSeq, heapGb.toSeq, rddN.toSeq, storGb.toSeq)
     }
-    // ---- ambient-load calibration (r15, verdict task 2) ------------- //
-    // Three pinned FIXED-PLAN sentinels run before the sweep, each with
-    // a FIXED 5-rep protocol (independent of SPARK_GRAFT_BENCH_RUNS);
-    // ambient_index = median(min / anchor). The shared machine drifts
-    // 1.4-2× per-core across a day (r12-r14 disputes), so per-query
-    // regression calls must divide by this index first: a query at 2×
-    // whose sweep's ambient_index is ~1 is suspicious; at 1.9 it is
-    // environment. Anchors are SESSION-START minima from a quiet r15
-    // session (load 2.3/32) under this exact protocol — NOT the r12
-    // mid-sweep values: an r15 A/B showed session-start sentinels read
-    // 1.5-2.2× the mid-sweep anchors even on an idle machine (shared
-    // Catalyst/codegen JIT accumulated over hundreds of prior queries
-    // is unreachable at position 1), so mid-sweep anchors would bake a
-    // permanent false "loaded" reading into every artifact. If a
-    // sentinel's plan is ever touched, re-record its anchor (same
-    // protocol, quiet machine) in the same commit.
-    val sentinelReps = 5
-    // Two anchor sets per sentinel (r16, verdict task 2): the r15
-    // single start-sample inverted against the sweep it labeled (the
-    // fastest-ever sweep filed the worst index), because machine load
-    // drifts over a ~30-minute sweep. The protocol now samples the
-    // trio at sweep START, MID (after the first half of the query
-    // list) and END, and ambient_index is the MEDIAN of the three
-    // phase medians. Start compares against COLD anchors
-    // (session-start minima, quiet machine — JIT state at position 1
-    // is its own baseline, measured 1.5-2.2× apart from warm); mid
-    // and end compare against WARM anchors (mid/end minima from the
-    // same quiet session — hundreds of prior queries' shared
-    // Catalyst/codegen JIT state). If a sentinel's plan changes,
-    // re-record BOTH its anchors in the same commit.
-    // Anchors re-recorded r16 for the noop-write action (the count()
-    // anchors measured pruned plans — q94's mask work never ran):
-    // quiet machine (load 0.9/32 at launch), full sf0.1 sweep. Cold =
-    // the start-phase 5-rep minima; warm = min of the mid/end phase
-    // minima of the same sweep.
-    // (q94's anchors re-baked a second time in the same round after
-    // its own hot-path fix — the maskTokensFromTokens hoist — changed
-    // its plan; values from the post-optimization quiet full sweep,
-    // whose other two sentinels read 0.91-1.0× their anchors.)
-    val sentinelAnchorsCold = Seq(
-      "q60_pii_redact" -> 0.812,
-      "q62_asof_join" -> 0.684,
-      "q94_span_mask" -> 0.389)
-    val sentinelAnchorsWarm = Seq(
-      "q60_pii_redact" -> 0.712,
-      "q62_asof_join" -> 0.523,
-      "q94_span_mask" -> 0.412)
-    // SPARK_GRAFT_BENCH_AMBIENT=0 skips calibration (fast A/B loops);
-    // it runs by default even under BENCH_ONLY so an isolated
-    // re-measure carries its own load context
-    val skipAmbient =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_AMBIENT", "1") == "0"
-    def sampleAmbient(anchors: Seq[(String, Double)])
-      : Seq[(String, Double, Double)] =
+    def sampleAmbient(anchors: Seq[(String, Double)]): Seq[Sentinel] =
       if (skipAmbient) Seq.empty
       else anchors.flatMap { case (name, anchor) =>
         SparkEntry.queries.get(name).map { fn =>
-          val (v, _, _, _, _, _) = measure(name, fn, sentinelReps)
-          (name, v, if (v > 0) v / anchor else -1.0)
+          val v = best(measure(name, fn, sentinelReps))
+          Sentinel(name, v, if (v > 0) v / anchor else -1.0)
         }
       }
-    def medianRatio(s: Seq[(String, Double, Double)]): Double = {
-      val ratios = s.map(_._3).filter(_ > 0).sorted
-      if (ratios.isEmpty) -1.0 else ratios(ratios.length / 2)
-    }
-    val ambientStart = sampleAmbient(sentinelAnchorsCold)
-    def runQueries(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]) =
-      qs.map { case (name, fn) =>
-        val r = measure(name, fn)
-        if (r._1 < 0) failed += name
-        name -> r
-      }
+    def runQueries(qs: Seq[(String, Query)]): Seq[(String, Seq[Rep])] =
+      qs.map { case (name, fn) => name -> measure(name, fn) }
+
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val (firstHalf, secondHalf) = selected.splitAt(selected.length / 2)
-    val results1 = runQueries(firstHalf)
+    val ambientStart = sampleAmbient(sentinelAnchorsCold)
+    val reps1 = runQueries(firstHalf)
     val ambientMid =
-      if (secondHalf.isEmpty) Seq.empty
-      else sampleAmbient(sentinelAnchorsWarm)
-    val results2 = runQueries(secondHalf)
+      if (secondHalf.isEmpty) Seq.empty else sampleAmbient(sentinelAnchorsWarm)
+    val reps2 = runQueries(secondHalf)
     val ambientEnd = sampleAmbient(sentinelAnchorsWarm)
-    val results = (results1 ++ results2).toMap
-    val phaseMedians = Seq(medianRatio(ambientStart),
-      medianRatio(ambientMid), medianRatio(ambientEnd)).filter(_ > 0)
-    val ambientIndex =
-      if (phaseMedians.isEmpty) -1.0
-      else phaseMedians.sorted.apply(phaseMedians.length / 2)
-    // times rounded to ms and the headline total emitted BEFORE the
-    // per-query map: the driver's capture window can truncate the tail
-    // of a long line, and the total must survive truncation
-    def ms(v: Double): Double = math.round(v * 1000) / 1000.0
-    val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, (v, _, _, _, _, _)) => s"\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
-    val runsJson = results.toSeq.sortBy(_._1)
-      .map { case (k, (_, ts, _, _, _, _)) =>
-        s"\"" + k + "\":" + ts.map(ms).mkString("[", ",", "]")
-      }
-      .mkString("{", ",", "}")
-    // telemetry maps land only in the on-disk detail artifact (the
-    // stdout contract line keeps its driver-parsed shape)
-    val gcJson = results.toSeq.sortBy(_._1)
-      .map { case (k, (_, _, gs, _, _, _)) =>
-        s"\"" + k + "\":" + gs.map(ms).mkString("[", ",", "]")
-      }
-      .mkString("{", ",", "}")
-    val heapJson = results.toSeq.sortBy(_._1)
-      .map { case (k, (_, _, _, hs, _, _)) =>
-        s"\"" + k + "\":" + hs.map(h => math.round(h * 100) / 100.0)
-          .mkString("[", ",", "]")
-      }
-      .mkString("{", ",", "}")
-    val rddJson = results.toSeq.sortBy(_._1)
-      .map { case (k, (_, _, _, _, rs, _)) =>
-        s"\"" + k + "\":" + rs.mkString("[", ",", "]")
-      }
-      .mkString("{", ",", "}")
-    val storJson = results.toSeq.sortBy(_._1)
-      .map { case (k, (_, _, _, _, _, ss)) =>
-        s"\"" + k + "\":" + ss.map(v => math.round(v * 100) / 100.0)
-          .mkString("[", ",", "]")
-      }
-      .mkString("{", ",", "}")
-    val total = ms(results.values.map(_._1).filter(_ >= 0).sum)
-    val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // ingest-layer throughput (r16, verdict task 1): for each
-    // corpus-proportional parser row, input MB and MB/s at this SF —
-    // the byte probe runs once, untimed, after the sweep
-    val parseMbJson = SparkEntry.parseBytes.toSeq.sortBy(_._1)
-      .filter { case (name, _) => results.get(name).exists(_._1 > 0) }
+    val reps = (reps1 ++ reps2).toMap
+    // the byte probe of each parser row that succeeded runs once,
+    // untimed, after the sweep
+    val parseBytes = SparkEntry.parseBytes.toSeq
+      .filter { case (name, _) => reps.get(name).exists(best(_) > 0) }
       .flatMap { case (name, bytesFn) =>
-        try {
-          val b = bytesFn(spark, sfDir)
-          val t = results(name)._1
-          Some(s""""$name":{"mb":${math.round(b / 1e4) / 100.0}""" +
-            s""","mb_s":${math.round(b / t / 1e4) / 100.0}}""")
-        } catch { case scala.util.control.NonFatal(e) =>
+        try Some(name -> bytesFn(spark, sfDir)) catch { case NonFatal(e) =>
           System.err.println(s"parse-bytes probe failed $name: $e"); None }
-      }.mkString("{", ",", "}")
-    def phaseJson(s: Seq[(String, Double, Double)]): String = s
-      .map { case (k, v, r) =>
-        s"\"" + k + "\":{\"sec\":" + ms(v) + ",\"vs_anchor\":" +
-          (math.round(r * 100) / 100.0) + "}"
-      }
-      .mkString("{", ",", "}")
-    val ambJson = s"""{"start":${phaseJson(ambientStart)}""" +
-      s""","mid":${phaseJson(ambientMid)}""" +
-      s""","end":${phaseJson(ambientEnd)}""" +
-      s""","phase_medians":${Seq(medianRatio(ambientStart),
-        medianRatio(ambientMid), medianRatio(ambientEnd))
-        .map(r => math.round(r * 100) / 100.0)
-        .mkString("[", ",", "]")}}"""
-    val ambIdx = math.round(ambientIndex * 100) / 100.0
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","failed":$failedJson,"ambient_index":$ambIdx,"ambient":$ambJson,"parse_mb_s":$parseMbJson,"queries":$qs,"runs":$runsJson}""")
-    // The r6 artifact proved the driver's capture window can truncate
-    // the FRONT of a long line (it kept the tail), while r5 assumed it
-    // truncates the tail. Emit the headline total a second time as its
-    // own short, self-contained line so it survives truncation from
-    // EITHER end of the big line above.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","failed":$failedJson,"ambient_index":$ambIdx,"ambient":$ambJson,"parse_mb_s":$parseMbJson}""")
-    // full per-query artifact ON DISK: the driver's stdout capture
-    // truncates the big line (the r8 tail carried ~49 of 197 per-query
-    // arrays), so every (query → [runs]) also lands in a committed file
-    // a later round can diff without the lossy capture in the way
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-      "bench_detail.json")
-    try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(detailPath),
-        s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","failed":$failedJson,"ambient_index":$ambIdx,"ambient":$ambJson,"parse_mb_s":$parseMbJson,"queries":$qs,"runs":$runsJson,"gc_sec":$gcJson,"heap_gb":$heapJson,"persist_rdds":$rddJson,"storage_gb":$storJson}""" + "\n")
-    catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"bench_detail write failed: $e") }
+      }.toMap
+    val (line, short, detail) = render(
+      Sweep(sfDir, reps, Seq(ambientStart, ambientMid, ambientEnd), parseBytes))
+    println(line)
+    println(short)
+    // the full per-query record ON DISK: a stdout capture truncates the
+    // long line, so every rep also lands in a file a later round can diff
+    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detail)
+    catch { case NonFatal(e) => System.err.println(s"bench_detail write failed: $e") }
     spark.stop()
   }
 }

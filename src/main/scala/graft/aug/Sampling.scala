@@ -40,7 +40,8 @@ object Sampling {
                    withReplacement: Boolean = false): DataFrame =
     df.sample(withReplacement, fraction, seed)
 
-  /** Class-conditional sampling (reference R4): per-class fractions. */
+  /** Class-conditional sampling (reference R4,
+    * `app/data_augmentation_enhanced.py:221-222`): per-class fractions. */
   def stratifiedSample(df: DataFrame, classCol: String,
                        fractions: Map[Any, Double], seed: Long = 42L): DataFrame =
     df.stat.sampleBy(classCol, fractions, seed)

@@ -110,7 +110,8 @@ object Profiler {
     }.reduce(_ unionByName _).orderBy("column_name")
   }
 
-  /** Columns to keep under a sparsity budget (driver-side small result). */
+  /** Columns to keep under a sparsity budget (a small collected result);
+    * the >95% zero/missing feature drop (`app/LSTM_AE_enhanced.py:32-39`, A10). */
   def denseFeatureCols(df: DataFrame, cols: Seq[String], maxSparse: Double = 0.95): Seq[String] = {
     val rows = sparseFractions(df, cols).collect()
     rows.filter(r => r.getDouble(1) <= maxSparse && r.getDouble(2) <= maxSparse)

@@ -275,7 +275,8 @@ object GridSearch {
 
   /** CV winner: max mean-F1 across folds (driver-side over the tiny
     * fold grid; sequential fold order ⇒ deterministic mean), ties to
-    * the smaller quantile.
+    * the smaller quantile. Mirrors GridSearchCV cv=5
+    * (`app/IsolationForest_AE.py:210-247`, SURVEY A15).
     */
   def cvBestThreshold(df: DataFrame, idCol: String, labelCol: String,
                       scoreCol: String, ps: Seq[Double], k: Int = 5): (Double, Double) = {
@@ -288,7 +289,8 @@ object GridSearch {
     byP.toSeq.sortBy { case (p, m) => (-m, p) }.head
   }
 
-  /** The winning threshold: max F1, ties to the smaller quantile. */
+  /** The winning threshold: max F1, ties to the smaller quantile — the
+    * argmax threshold pick (`app/AE_model_enhanced.py:154-155`, SURVEY L4). */
   def bestThreshold(df: DataFrame, labelCol: String, scoreCol: String,
                     ps: Seq[Double]): DataFrame =
     thresholdGrid(df, labelCol, scoreCol, ps)

@@ -82,7 +82,8 @@ object RocPlot {
        |</svg>""".stripMargin
   }
 
-  /** Write the artifact file (the reference's `plots/` PNG analog). */
+  /** Write the artifact file (the reference's `plots/` ROC PNG analog,
+    * `app/AE_model.py:294-303`). */
   def writeRocSvg(curve: DataFrame, auc: Double, path: String,
                   maxPoints: Int = 512): Unit =
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path),

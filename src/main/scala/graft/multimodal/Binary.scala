@@ -39,13 +39,6 @@ import org.apache.spark.sql.types._
   */
 object Binary {
 
-  /** Typed metadata struct for a media column. */
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("media_type", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType)))
-
   /** Attach a metadata struct column (values may be null/unknown). */
   def withMeta(df: DataFrame, binCol: String, mediaType: Column,
                width: Column = lit(null).cast(IntegerType),
@@ -93,8 +86,6 @@ object Binary {
     udf { b: Array[Byte] => byteHash(b) }.apply(c)
   def byteHistogramCol(c: Column): Column =
     udf { b: Array[Byte] => byteHistogram(b) }.apply(c)
-  def strideSampleCol(c: Column, k: Int): Column =
-    udf { b: Array[Byte] => strideSample(b, k) }.apply(c)
 
   /** Parsed image-container metadata (header fields only — no pixel
     * decode, no codec library). */
@@ -4130,7 +4121,6 @@ object Binary {
       -1
     }
     def alignToByte(): Unit = { nb = 0 }
-    def bytePos: Int = pos - (nb + 7) / 8 // position of next unread byte
   }
 
   private def signExtend(v: Long, n: Int): Int =

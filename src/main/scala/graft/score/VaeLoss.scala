@@ -42,9 +42,10 @@ object VaeLoss {
   def loss(x: Column, xhat: Column, mu: Column, logvar: Column): Column =
     mse(x, xhat) + klDivergence(mu, logvar)
 
-  /** Reparameterization z = μ + e^{½·logσ²}·ε for a caller-supplied
-    * noise column (deterministic ε ⇒ deterministic z; pass
-    * `transform(mu, m => lit(0.0))` for the posterior mean).
+  /** Reparameterization z = μ + e^{½·logσ²}·ε (`app/LSTM_VAE.py:46-95`,
+    * SURVEY F6) for a caller-supplied noise column (deterministic ε ⇒
+    * deterministic z; pass `transform(mu, m => lit(0.0))` for the
+    * posterior mean).
     */
   def reparameterize(mu: Column, logvar: Column, eps: Column): Column =
     zip_with(mu, zip_with(logvar, eps,

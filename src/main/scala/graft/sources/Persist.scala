@@ -80,7 +80,8 @@ object Persist {
 
   /** Layout: header `mlp <act> <nLayers>`, then mean / std lines, then
     * per layer its bias line followed by `#bias` weight rows — plain
-    * comma-joined doubles, exact round-trip for any stack depth.
+    * comma-joined doubles, exact round-trip for any stack depth. The
+    * fitted-model save of the flagship AE flow (`app/AE_model.py:50-57`, S6).
     */
   def saveMlpAE(path: String, m: graft.score.MlpAE.Model): Unit = {
     val header = s"mlp ${m.act.name} ${m.weights.length}"

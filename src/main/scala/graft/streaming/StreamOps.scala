@@ -47,62 +47,6 @@ object StreamOps {
         col("window.end").as("window_end"),
         col(keyCol), col("n"), col("value_sum"), col("value_mean"))
 
-  /** Watermarked windowed DISTINCT cardinality via HyperLogLog++
-    * (`approx_count_distinct`): the sliding unique-actives metric
-    * (DAU/WAU) in streaming form. Exact COUNT(DISTINCT) is not
-    * streamable — it would buffer every key per window; HLL's
-    * fixed-size mergeable register state is precisely what makes the
-    * metric incremental, and the sketch is deterministic for fixed
-    * data, so stream and batch agree bit-for-bit on the same slice
-    * (StreamingSpec pins the parity).
-    */
-  def streamingWindowedDistinct(stream: DataFrame, tsCol: String,
-                                keyCol: String, windowDur: String,
-                                watermarkDelay: String,
-                                rsd: Double = 0.05): DataFrame =
-    stream
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur))
-      .agg(approx_count_distinct(col(keyCol), rsd).as("approx_distinct"),
-        count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col("approx_distinct"), col("n_events"))
-
-  /** Watermarked windowed AMS F₂ sketch — the streaming form of the
-    * q274 batch estimator (self-join size / repeat rate of the keyed
-    * stream per window). Each of the 16 ±1 counters is a plain
-    * associative SUM, which is exactly why AMS streams: the state per
-    * window is 16 longs regardless of volume, merges across
-    * micro-batches by addition, and is bit-deterministic for fixed
-    * data (StreamingSpec pins exact stream/batch parity — integers,
-    * not approximate agreement). Signs use the quadratic-residue
-    * parity of (h + j·1000003)² mod P (the q264/q274 measured-full-rank
-    * formula). `hashCol` must already carry the item hash (one hash
-    * per row, not one per counter — the HOF re-hash trap).
-    */
-  def streamingAmsF2(stream: DataFrame, tsCol: String, hashCol: String,
-                     windowDur: String, watermarkDelay: String): DataFrame = {
-    val P = 1000000007L
-    val sums = (1 to 16).map { j =>
-      // pre-reduce the item hash into [0, P) before squaring (the batch
-      // q317 estimator's rule): a full-range 64-bit hash would make t*t
-      // wrap Long and void the quadratic-residue balance of the ±1
-      // signs. t ≤ P + 16·1000003 < 2^31, so t*t stays well inside Long.
-      val t = pmod(col(hashCol), lit(P)) + lit(j * 1000003L)
-      sum(when((t * t) % P % 2 === 0, 1L).otherwise(-1L)).as(s"s$j")
-    } :+ count(lit(1)).as("n_events")
-    val sq = (1 to 16).map(j => col(s"s$j") * col(s"s$j")).reduce(_ + _)
-    stream
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur))
-      .agg(sums.head, sums.tail: _*)
-      .select(Seq(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("n_events"),
-        (sq.cast("double") / lit(16.0)).as("f2_est")) ++
-        (1 to 16).map(j => col(s"s$j")): _*)
-  }
-
   /** Threshold alert stream: rows whose score exceeds thr (the P9
     * anomaly-flag predicate, streaming form — pure stateless filter).
     */
@@ -200,48 +144,6 @@ object StreamOps {
     wide.select(col("window_start"), col("window_end"), pairs.as("fp"))
       .select(col("window_start"), col("window_end"),
         col("fp.feature").as("feature"), col("fp.psi").as("psi"))
-  }
-
-  /** Exactly-once-style sink wrapper for [[foreachBatchScorer]]-shaped
-    * pipelines: `foreachBatch` is AT-LEAST-ONCE (a crash between sink
-    * write and checkpoint commit replays the batch), so any sink with
-    * side effects must be idempotent per (queryKey, batchId). This
-    * wrapper makes an arbitrary sink idempotent with a processed-batch
-    * ledger: a replayed batchId is skipped instead of re-applied. The
-    * ledger here is in-memory per queryKey (the unit-testable core);
-    * production swaps `markIfNew` for a transactional INSERT into a
-    * commit table next to the data (the standard lakehouse pattern).
-    */
-  final class IdempotentSink(queryKey: String,
-                             sink: (DataFrame, Long) => Unit)
-      extends ((DataFrame, Long) => Unit) with Serializable {
-    // the ledger is marked AFTER the sink succeeds, never before: a
-    // sink that throws must stay unmarked so the replay retries it —
-    // marking first would turn a transient sink failure into silent
-    // permanent data loss. foreachBatch invokes serially per query, so
-    // check-then-mark needs no cross-batch atomicity.
-    def apply(batch: DataFrame, batchId: Long): Unit =
-      if (!IdempotentSink.processed(queryKey, batchId)) {
-        sink(batch, batchId)
-        IdempotentSink.mark(queryKey, batchId)
-      }
-  }
-
-  object IdempotentSink {
-    // batchIds are monotonically increasing per query, so the ledger is
-    // a single high-watermark Long per queryKey (max committed batchId)
-    // rather than a Set — O(1) memory over an unbounded run, and the
-    // same shape as the transactional commit-table pattern the class
-    // doc describes (SELECT max(batch_id) ... / INSERT).
-    private val watermark = scala.collection.mutable.Map.empty[String, Long]
-    def processed(queryKey: String, batchId: Long): Boolean =
-      watermark.synchronized { watermark.get(queryKey).exists(batchId <= _) }
-    def mark(queryKey: String, batchId: Long): Unit = watermark.synchronized {
-      watermark.update(queryKey, math.max(watermark.getOrElse(queryKey, Long.MinValue), batchId))
-    }
-    /** Test/reset hook. */
-    def clear(queryKey: String): Unit =
-      watermark.synchronized { watermark.remove(queryKey); () }
   }
 
   /** Open-session state for [[streamingSessionize]]: millis bounds +
@@ -342,35 +244,6 @@ object StreamOps {
       .toDF("key", "session_start", "session_end", "n_events", "value_sum")
   }
 
-  /** Watermarked stream-stream inner join — the last §2.9 shape: two
-    * unbounded sources equi-joined on a key with an event-time
-    * interval constraint (right.ts ∈ [left.ts − before, left.ts +
-    * after]). BOTH sides carry watermarks and the time-range predicate
-    * bounds BOTH buffers: Spark derives, from watermark + range, how
-    * long each side's rows can still find partners, and evicts state
-    * past that horizon — without the range constraint the buffers grow
-    * forever, which is why this wrapper makes it non-optional.
-    * Left columns are prefixed `l_`, right `r_`, to keep the joined
-    * schema collision-free.
-    *
-    * Scale: state is O(in-horizon rows per side), hash-partitioned by
-    * key; the join itself is the same shuffled equi-join as batch.
-    */
-  def streamStreamJoin(left: DataFrame, right: DataFrame,
-                       keyCol: String, tsCol: String,
-                       leftWatermark: String, rightWatermark: String,
-                       before: String, after: String): DataFrame = {
-    val l = left.columns.foldLeft(left)((df, c) => df.withColumnRenamed(c, s"l_$c"))
-      .withWatermark(s"l_$tsCol", leftWatermark)
-    val r = right.columns.foldLeft(right)((df, c) => df.withColumnRenamed(c, s"r_$c"))
-      .withWatermark(s"r_$tsCol", rightWatermark)
-    l.join(r, expr(
-      s"""l_$keyCol = r_$keyCol AND
-         | r_$tsCol >= l_$tsCol - interval $before AND
-         | r_$tsCol <= l_$tsCol + interval $after""".stripMargin
-        .replaceAll("\n", " ")))
-  }
-
   /** Streaming NEAR-DUP candidate alerts — the incremental form of the
     * MinHash-LSH banded dedup ([[graft.dedup.MinHashLSH]]): each
     * arriving document's 16×4 band keys are checked against per-bucket
@@ -448,65 +321,6 @@ object StreamOps {
           (key, n, s)
       }
       .toDF("key", "n", "ewma")
-  }
-
-  /** Streaming heavy hitters: sharded Misra–Gries over an unbounded
-    * stream. Items hash into `buckets` shards (every occurrence of a
-    * value lands in the SAME shard, so each shard's summary covers its
-    * values completely); each shard keeps a capacity-bounded MG
-    * counter map as mapGroupsWithState state — O(buckets × capacity)
-    * total, independent of stream length — and emits its tracked
-    * (item, count_lb, n_shard) rows each micro-batch. The incremental
-    * twin of [[graft.core.HeavyHitters]]: MG's guarantee carries over
-    * per shard — a tracked counter underestimates the true count by at
-    * most n_shard/capacity, and any item with true shard frequency
-    * above n_shard/capacity is still tracked — so the union of shard
-    * summaries is a superset of the exact heavy hitters at any
-    * threshold ≥ 1/capacity of a shard (StreamingSpec pins both
-    * properties against the batch-exact operator).
-    */
-  final case class MgSummary(counters: Map[String, Long], n: Long)
-
-  def streamingHeavyHitters(stream: DataFrame, itemCol: String,
-                            buckets: Int = 32,
-                            capacity: Int = 64): DataFrame = {
-    require(buckets >= 1 && capacity >= 2,
-      s"need buckets >= 1, capacity >= 2: $buckets, $capacity")
-    import stream.sparkSession.implicits._
-    stream.select(col(itemCol).cast("string").as("item"))
-      .where(col("item").isNotNull)
-      .as[String]
-      .groupByKey(item => math.floorMod(item.hashCode, buckets))
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.NoTimeout) {
-        (shard: Int, rows: Iterator[String], state: GroupState[MgSummary]) =>
-          val counters = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-          var n = 0L
-          if (state.exists) {
-            state.get.counters.toSeq.sortBy(_._1)
-              .foreach { case (k, v) => counters.update(k, v) }
-            n = state.get.n
-          }
-          rows.foreach { v =>
-            n += 1
-            counters.get(v) match {
-              case Some(c) => counters.update(v, c + 1)
-              case None if counters.size < capacity => counters.update(v, 1L)
-              case None =>
-                val dead = scala.collection.mutable.ArrayBuffer.empty[String]
-                counters.foreach { case (key, c) =>
-                  if (c == 1L) dead += key else counters.update(key, c - 1)
-                }
-                dead.foreach(counters.remove)
-            }
-          }
-          state.update(MgSummary(counters.toMap, n))
-          val nOut = n
-          counters.iterator.map { case (item, c) =>
-            (shard, item, c, nOut)
-          }.toSeq.iterator
-      }
-      .toDF("shard", "item", "count_lb", "n_shard")
   }
 
   /** Keyed running maximum via explicit state (mapGroupsWithState):

@@ -4,17 +4,12 @@ package graft.tools
 // tells planning-bound rows apart from execution-bound ones, and a
 // high warm-rep time (what the bench min measures) from cold cost.
 // Usage: runMain graft.tools.ActionProfile <name>[,name...] [reps] [sfDir]
-import org.apache.spark.sql.SparkSession
 object ActionProfile {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val dir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     // session warmup (same as Bench)
     spark.read.parquet(s"$dir/lineitem.parquet").limit(1000)
       .agg(org.apache.spark.sql.functions.sum("l_quantity")).collect()

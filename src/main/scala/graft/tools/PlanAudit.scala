@@ -5,16 +5,11 @@ package graft.tools
 // WholeStageCodegen spans, scan pushdown. Compact committed evidence
 // beside the per-touched-query full dumps in plans/r16/.
 //   runMain graft.tools.PlanAudit <outFile> [sfDir]
-import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val outFile = args.headOption.getOrElse("plans/r16/plan_audit.jsonl")
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     def count(p: String, needle: String): Int =
       needle.r.findAllIn(p).size
     val sb = new StringBuilder

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** Round close-out ANN quality measurement: recall@k of the sublinear
@@ -19,14 +19,7 @@ object RecallCheck {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nQueries = args.lift(1).map(_.toInt).getOrElse(100)
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val emb = graft.sources.Tables.load(spark, sfDir, "embeddings")
     val pred = col("id") < nQueries
     import graft.sim.Ann

@@ -120,14 +120,7 @@ object ScaleAb {
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
     val names = args.lift(3).map(_.split(",").toSeq).getOrElse(defaultQueries)
     val factor = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$outDir/lineitem.parquet"))) {
       System.err.println(s"[scaleab] materializing ${factor}x of $sfDir -> $outDir")

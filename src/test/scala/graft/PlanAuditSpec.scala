@@ -552,19 +552,6 @@ class PlanAuditSpec extends SparkSpec {
       s"FS linkage pair stage plans a cartesian:\n$q271")
     assert(q271.contains("HashJoin") || q271.contains("SortMergeJoin"),
       s"FS blocking lost its equi join:\n$q271")
-    // q274 AMS: the returned frame is a driver-assembled literal (the
-    // sketch and exact aggregates run as separate bounded actions
-    // inside), so there is no final plan to pin — the aggregate shape
-    // is pinned on the STREAMING twin instead, whose lazy plan carries
-    // the same 16-sum aggregate
-    val sams = graft.streaming.StreamOps.streamingAmsF2(
-      spark.read.parquet(s"$sf/events.parquet")
-        .select(col("ts"), col("event_id").as("h")),
-      "ts", "h", "10 minutes", "5 minutes")
-    val pSams = sams.queryExecution.optimizedPlan.toString
-    assert(pSams.contains("Aggregate"),
-      s"streaming AMS lost its grouped aggregate:\n$pSams")
-    assert(!pSams.contains("Window"), s"AMS sketch grew a window:\n$pSams")
     // causal trio: grouped decimal aggregates + metadata-sized scenario
     // joins — no data-sized cartesian anywhere
     Seq("q275_iv_late", "q276_did", "q277_rdd").foreach { n =>

@@ -34,87 +34,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streamingWindowedDistinct: HLL windowed uniques, batch parity") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, Long)]
-    val out = StreamOps.streamingWindowedDistinct(
-      in.toDF.toDF("ts", "user"), "ts", "user", "10 minutes", "5 minutes")
-    val q = out.writeStream.format("memory").queryName("swd")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // window [0,10): users 1,2,3 with a repeat; spread over batches
-      in.addData((ts(1), 1L), (ts(2), 2L), (ts(3), 1L))
-      q.processAllAvailable()
-      in.addData((ts(4), 3L), (ts(5), 2L))
-      q.processAllAvailable()
-      in.addData((ts(60), 9L)) // advance watermark, close the window
-      q.processAllAvailable()
-      val rows = spark.table("swd").collect()
-        .filter(_.getAs[Timestamp]("window_start").getTime == 0L)
-      assert(rows.length == 1)
-      val got = rows.head.getAs[Long]("approx_distinct")
-      assert(rows.head.getAs[Long]("n_events") == 5L)
-      // HLL++ is deterministic: the streamed estimate must equal the
-      // batch estimate on the same slice (merge order cannot matter)
-      val batch = Seq((ts(1), 1L), (ts(2), 2L), (ts(3), 1L), (ts(4), 3L),
-          (ts(5), 2L)).toDF("ts", "user")
-        .agg(approx_count_distinct(col("user"), 0.05)).head.getLong(0)
-      assert(got == batch, s"stream $got != batch $batch")
-      assert(got >= 2 && got <= 4, s"3 true uniques estimated as $got")
-    } finally q.stop()
-  }
-
-  test("streamingAmsF2: windowed sketch counters, exact batch parity") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, Long)]
-    val out = StreamOps.streamingAmsF2(
-      in.toDF.toDF("ts", "h"), "ts", "h", "10 minutes", "5 minutes")
-    val q = out.writeStream.format("memory").queryName("samsf2")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // one window [0,10): a skewed item mix split across micro-batches.
-      // Items carry SPREAD hash-like values (production callers pass
-      // strHash output over [0, P)): the sign parity needs well-mixed
-      // inputs — tiny adjacent ints (7, 11, 13, 17) produce correlated
-      // signs and a wildly biased toy estimate (measured 87.75 vs
-      // F2=30), which is a property of the degenerate inputs, not the
-      // sketch
-      val a = 712334556677L % 1000000007L
-      val b = 98765432101L % 1000000007L
-      val c = 55544433322L % 1000000007L
-      val d = 31415926535L % 1000000007L
-      val items = Seq(a, a, a, b, b, c, d, d, d, d)
-      in.addData(items.take(4).zipWithIndex.map { case (h, i) => (ts(i), h) }: _*)
-      q.processAllAvailable()
-      in.addData(items.drop(4).zipWithIndex.map { case (h, i) => (ts(4 + i), h) }: _*)
-      q.processAllAvailable()
-      in.addData((ts(60), 99L)) // advance watermark, close the window
-      q.processAllAvailable()
-      val rows = spark.table("samsf2").collect()
-        .filter(_.getAs[Timestamp]("window_start").getTime == 0L)
-      assert(rows.length == 1)
-      val r = rows.head
-      assert(r.getAs[Long]("n_events") == 10L)
-      // counter-exact parity with the batch formula on the same slice
-      // (addition is associative — micro-batch boundaries cannot matter)
-      val P = 1000000007L
-      (1 to 16).foreach { j =>
-        val expect = items.map { h =>
-          val t = h + j * 1000003L
-          if (t * t % P % 2 == 0) 1L else -1L
-        }.sum
-        assert(r.getAs[Long](s"s$j") == expect, s"counter s$j")
-      }
-      val sq = (1 to 16).map(j => { val v = r.getAs[Long](s"s$j"); v * v }).sum
-      assert(r.getAs[Double]("f2_est") == sq / 16.0)
-      // F2 truth for this slice is 3^2+2^2+1^2+4^2 = 30; per-counter
-      // sd on 4 items is ~33 (2(F2²−F4) = 1092), mean-of-16 sd ~8.3 —
-      // a loose 4σ sanity band, the exact assertions above are the test
-      assert(math.abs(r.getAs[Double]("f2_est") - 30.0) < 34.0,
-        s"estimate ${r.getAs[Double]("f2_est")} outside 4 sigma of F2=30")
-    } finally q.stop()
-  }
-
   test("foreachBatchScorer applies a fitted batch model per micro-batch") {
     implicit val sqlCtx = spark.sqlContext
     // fit a linear AE on static rank-1 data, then score a stream with it
@@ -140,37 +59,6 @@ class StreamingSpec extends SparkSpec {
       assert(m(1L) < 1e-10)   // on the learned subspace
       assert(m(2L) > 1.0)     // far off-subspace
     } finally q.stop()
-  }
-
-  test("IdempotentSink: a replayed batchId is skipped, new ones apply") {
-    StreamOps.IdempotentSink.clear("t1")
-    val applied = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val sink = new StreamOps.IdempotentSink("t1",
-      (_, id) => applied.synchronized { applied += id })
-    val df = spark.range(1).toDF()
-    sink(df, 0L); sink(df, 1L)
-    sink(df, 0L) // at-least-once replay: must be a no-op
-    sink(df, 2L)
-    assert(applied.toSeq == Seq(0L, 1L, 2L))
-    // a batch whose sink THROWS must stay unmarked: the replay retries
-    // it instead of silently dropping the data forever
-    StreamOps.IdempotentSink.clear("t3")
-    var failOnce = true
-    val flaky = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val fsink = new StreamOps.IdempotentSink("t3", (_, id) => {
-      if (id == 7L && failOnce) { failOnce = false; sys.error("transient") }
-      flaky.synchronized { flaky += id }
-    })
-    intercept[RuntimeException] { fsink(df, 7L) }
-    fsink(df, 7L) // replay after failure: must apply
-    fsink(df, 7L) // replay after success: must skip
-    assert(flaky.toSeq == Seq(7L))
-    // a different query key has an independent ledger
-    StreamOps.IdempotentSink.clear("t2")
-    val other = scala.collection.mutable.ArrayBuffer.empty[Long]
-    new StreamOps.IdempotentSink("t2",
-      (_, id) => other.synchronized { other += id })(df, 0L)
-    assert(other.toSeq == Seq(0L))
   }
 
   test("streamingSessionize: gap-break within a batch, timeout via watermark") {
@@ -350,32 +238,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streamStreamJoin matches keys within the event-time interval only") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(Timestamp, Long, String)]
-    val buys = MemoryStream[(Timestamp, Long, Double)]
-    val out = StreamOps.streamStreamJoin(
-      clicks.toDF.toDF("ts", "uid", "page"),
-      buys.toDF.toDF("ts", "uid", "amount"),
-      keyCol = "uid", tsCol = "ts",
-      leftWatermark = "10 minutes", rightWatermark = "10 minutes",
-      before = "0 minutes", after = "15 minutes")
-    val q = out.writeStream.format("memory").queryName("ssj")
-      .outputMode(OutputMode.Append).start()
-    try {
-      clicks.addData((ts(1), 1L, "home"), (ts(2), 2L, "search"))
-      buys.addData(
-        (ts(10), 1L, 5.0),   // within 15 min of u1's click → joins
-        (ts(40), 2L, 9.0),   // 38 min after u2's click → outside window
-        (ts(5), 3L, 7.0))    // no clicking user 3 → no partner
-      q.processAllAvailable()
-      val rows = spark.table("ssj").collect()
-        .map(r => (r.getAs[Long]("l_uid"), r.getAs[String]("l_page"),
-          r.getAs[Double]("r_amount")))
-      assert(rows.toSet == Set((1L, "home", 5.0)))
-    } finally q.stop()
-  }
-
   test("stream-static broadcast enrichment join resolves per micro-batch") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.broadcast
@@ -502,48 +364,6 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       val ids = spark.table("ta").select("id").as[Long].collect().sorted
       assert(ids.toSeq == Seq(2L, 3L))
-    } finally q.stop()
-  }
-
-  test("streamingHeavyHitters: sharded MG is a superset of batch-exact " +
-      "heavy hitters with the per-shard error bound") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[String]
-    val out = StreamOps.streamingHeavyHitters(in.toDF.toDF("item"), "item",
-      buckets = 2, capacity = 4)
-    val q = out.writeStream.format("memory").queryName("shh")
-      .outputMode(OutputMode.Update).start()
-    val b1 = Seq.fill(30)("hot") ++ Seq.fill(10)("warm") ++
-      ('a' to 'f').map(_.toString)
-    val b2 = Seq.fill(20)("hot") ++ Seq.fill(10)("warm") ++
-      ('g' to 'l').map(_.toString)
-    try {
-      in.addData(b1: _*); q.processAllAvailable()
-      in.addData(b2: _*); q.processAllAvailable()
-      val rows = spark.table("shh").collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
-      // final emission per shard = rows carrying that shard's max n
-      // (n_shard strictly grows whenever the group is invoked)
-      val fin = rows.groupBy(_._1).toSeq.flatMap { case (_, rs) =>
-        val mx = rs.map(_._4).max; rs.filter(_._4 == mx).toSeq
-      }
-      val all = b1 ++ b2
-      val trueCounts = all.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-      // totals: the shards' final ns partition the stream
-      assert(fin.groupBy(_._1).map(_._2.head._4).sum == all.size.toLong)
-      // superset: batch-exact heavy hitters (freq > n/4) all tracked
-      import spark.implicits._
-      val exact = graft.core.HeavyHitters.exact(
-        all.toDF("item"), "item", k = 4)
-        .select("item").as[String].collect().toSet
-      val tracked = fin.map(_._2).toSet
-      assert(exact.subsetOf(tracked), s"missing: ${exact diff tracked}")
-      // MG bound per tracked item: lb <= true <= lb + n_shard/capacity
-      fin.foreach { case (_, item, lb, nShard) =>
-        val t = trueCounts(item)
-        assert(lb <= t, s"$item lb $lb > true $t")
-        assert(t - lb <= nShard / 4, s"$item true $t - lb $lb > ${nShard / 4}")
-      }
     } finally q.stop()
   }
 }
