@@ -98,44 +98,6 @@ object Dedup {
       .drop("content_hash")
   }
 
-  /** [[deltaDedup]] with the documented bloom-filter prepass made
-    * real: a bloom filter of corpus content hashes (built once,
-    * `expectedCorpusDocs`/`fpp` size it) splits the batch into
-    * definitely-fresh docs (bloom miss — no false negatives, so no
-    * exact check needed) and candidates (bloom hit — verified by the
-    * exact anti-join). Output is IDENTICAL to [[deltaDedup]] (spec
-    * asserts it); the exact join's input shrinks from |batch| to
-    * |true dups| + fpp·|batch|. The filter here is built driver-side
-    * (`df.stat.bloomFilter`, memory = the bit array you sized); a
-    * production corpus maintains it incrementally at ingest instead
-    * of rebuilding per batch.
-    */
-  def deltaDedupBloom(batch: DataFrame, corpus: DataFrame, idCol: String,
-                      textCol: String, expectedCorpusDocs: Long,
-                      fpp: Double = 0.01,
-                      hash: Column => Column = TextOps.strHash(_)): DataFrame = {
-    val spark = batch.sparkSession
-    val bf = corpus.select(hash(col(textCol)).as("content_hash"))
-      .stat.bloomFilter("content_hash", math.max(1L, expectedCorpusDocs), fpp)
-    val bc = spark.sparkContext.broadcast(bf)
-    val maybe = udf { h: Long => bc.value.mightContainLong(h) }
-    // null-hash rows (null text) must take the definitely-fresh branch,
-    // matching the exact path where a null key never matches the
-    // anti-join: without the coalesce the primitive-Long UDF returns
-    // null and the row fails BOTH branch filters, silently vanishing
-    val hashed = batch.withColumn("content_hash", hash(col(textCol)))
-      .withColumn("__maybe",
-        coalesce(maybe(col("content_hash")), lit(false)))
-    val definitelyFresh = hashed.where(!col("__maybe"))
-    val corpusHashes = corpus
-      .select(hash(col(textCol)).as("content_hash")).distinct()
-    val verified = hashed.where(col("__maybe"))
-      .join(corpusHashes, Seq("content_hash"), "left_anti")
-    val fresh = definitelyFresh.unionByName(verified)
-    dropExactDupsByHash(fresh, idCol, col("content_hash"))
-      .drop("content_hash", "__maybe")
-  }
-
   /** Duplicated-span coverage — the exact-substring dedup signal of
     * Lee et al. 2021 ("Deduplicating Training Data Makes Language
     * Models Better", the ExactSubstr criterion): for every document,

@@ -4,6 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.ByteCursor
+import graft.sources.ByteCursor.{be16, be24, be32, be64, le16, le24, le32,
+  le64}
+
 /** Multimodal (image/audio/video) column plumbing.
   *
   * Media rides through the engine as an opaque `binary` column plus a
@@ -106,33 +110,27 @@ object Binary {
     * only these first bytes, so it runs as cheap per-row map work.
     */
   def parseImageMeta(b: Array[Byte]): Option[ImageMeta] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    def be32(i: Int): Int =
-      (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    if (b.length >= 25 && u8(0) == 0x89 && b(1) == 'P' && b(2) == 'N' &&
-        b(3) == 'G' && u8(4) == 0x0d && u8(5) == 0x0a && u8(6) == 0x1a &&
-        u8(7) == 0x0a && b(12) == 'I' && b(13) == 'H' && b(14) == 'D' &&
-        b(15) == 'R')
-      Some(ImageMeta("png", be32(16), be32(20), u8(24)))
-    else if (b.length >= 4 && u8(0) == 0xff && u8(1) == 0xd8) {
+    val c = ByteCursor(b)
+    if (c.tagAt(0, PngSignature) && c.tagAt(12, "IHDR"))
+      for (w <- c.be32(16); h <- c.be32(20); depth <- c.u8(24))
+        yield ImageMeta("png", w.toInt, h.toInt, depth)
+    else if (b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
       var i = 2
       while (i + 3 < b.length) {
-        if (u8(i) != 0xff) return None // desynced marker stream
-        val m = u8(i + 1)
+        if ((b(i) & 0xff) != 0xff) return None // desynced marker stream
+        val m = b(i + 1) & 0xff
         if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7) || m == 0x01) i += 2
         else if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc)
           // SOFn: len(2) precision(1) height(2) width(2)
-          return if (i + 8 < b.length)
-            Some(ImageMeta("jpeg", be16(i + 7), be16(i + 5), u8(i + 4)))
-          else None
-        else i += 2 + be16(i + 2) // skip APPn/COM/DQT/DHT/... segment
+          return for (h <- c.be16(i + 5); w <- c.be16(i + 7); p <- c.u8(i + 4))
+            yield ImageMeta("jpeg", w, h, p)
+        else i += 2 + c.be16(i + 2).getOrElse(return None) // skip APPn/COM/DQT/...
       }
       None
-    } else if (b.length >= 13 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' &&
-               b(3) == '8' && (b(4) == '7' || b(4) == '9') && b(5) == 'a')
-      Some(ImageMeta("gif", le16(6), le16(8), ((u8(10) >> 4) & 7) + 1))
+    } else if (b.length >= 13 && c.tagAt(0, "GIF8") &&
+               (b(4) == '7' || b(4) == '9') && b(5) == 'a')
+      for (w <- c.le16(6); h <- c.le16(8); p <- c.u8(10))
+        yield ImageMeta("gif", w, h, ((p >> 4) & 7) + 1)
     else if (b.length >= 20 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
              b(3) == 'F' && b(8) == 'W' && b(9) == 'E' && b(10) == 'B' &&
              b(11) == 'P') // WebP is always 8-bit-per-channel
@@ -158,16 +156,15 @@ object Binary {
     * [[parseImageMeta]] round-trips them, exercising each parser path
     * against a known-answer oracle.
     */
+  private val PngSignature = "\u0089PNG\r\n\u001a\n"
+
   def pngHeader(width: Int, height: Int, bitDepth: Int): Array[Byte] = {
-    def be32(v: Int) = Array[Byte](
-      (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
     Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
       be32(13) ++ "IHDR".getBytes("US-ASCII") ++ be32(width) ++ be32(height) ++
       Array[Byte](bitDepth.toByte, 2, 0, 0, 0) ++ be32(0) // truecolor, stub CRC
   }
 
   def jpegHeader(width: Int, height: Int): Array[Byte] = {
-    def be16(v: Int) = Array[Byte]((v >>> 8).toByte, v.toByte)
     val app0 = Array[Byte](0xff.toByte, 0xe0.toByte) ++ be16(16) ++
       "JFIF".getBytes("US-ASCII") ++ Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0)
     val sof0 = Array[Byte](0xff.toByte, 0xc0.toByte) ++ be16(17) ++
@@ -177,7 +174,6 @@ object Binary {
   }
 
   def gifHeader(width: Int, height: Int, colorBits: Int): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
     "GIF89a".getBytes("US-ASCII") ++ le16(width) ++ le16(height) ++
       Array[Byte]((((colorBits - 1) & 7) << 4).toByte, 0, 0)
   }
@@ -225,46 +221,43 @@ object Binary {
     * on — need only these bytes, so it runs as cheap per-row map work.
     */
   def parseWebpMeta(b: Array[Byte]): Option[WebpMeta] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def le24(i: Int): Int = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16)
-    def le32(i: Int): Long = le24(i).toLong | (u8(i + 3).toLong << 24)
-    def tag(i: Int, s: String): Boolean =
-      i + s.length <= b.length && s.indices.forall(k => b(i + k) == s(k).toByte)
-    if (b.length < 20 || !tag(0, "RIFF") || !tag(8, "WEBP")) return None
-    if (le32(4) != b.length - 8L) return None // RIFF size must tile the file
-    val size = le32(16) // first chunk's payload size (unsigned, kept Long)
+    val c = ByteCursor(b)
+    if (b.length < 20 || !c.tagAt(0, "RIFF") || !c.tagAt(8, "WEBP")) return None
+    // RIFF size must tile the file
+    if (c.le32(4).getOrElse(return None) != b.length - 8L) return None
+    // first chunk's payload size (unsigned, kept Long)
+    val size = c.le32(16).getOrElse(return None)
     val p = 20
-    if (tag(12, "VP8 ")) {
+    if (c.tagAt(12, "VP8 ")) {
       if (size < 10 || p + 10 > b.length) return None
-      val frameTag = le24(p)
+      // in bounds from here: p + 10 <= b.length
+      val frameTag = b(p) & 0xff
       if ((frameTag & 1) != 0) return None // interframe cannot lead a file
-      if (u8(p + 3) != 0x9d || u8(p + 4) != 0x01 || u8(p + 5) != 0x2a)
+      if ((b(p + 3) & 0xff) != 0x9d || b(p + 4) != 0x01 || b(p + 5) != 0x2a)
         return None
-      val w = le16(p + 6) & 0x3fff
-      val h = le16(p + 8) & 0x3fff
+      val w = c.le16(p + 6).getOrElse(return None) & 0x3fff
+      val h = c.le16(p + 8).getOrElse(return None) & 0x3fff
       if (w == 0 || h == 0) return None
       Some(WebpMeta("vp8", w, h, has_alpha = false))
-    } else if (tag(12, "VP8L")) {
+    } else if (c.tagAt(12, "VP8L")) {
       if (size < 5 || p + 5 > b.length) return None
-      if (u8(p) != 0x2f) return None
-      val bits = le32(p + 1)
+      if (b(p) != 0x2f) return None
+      val bits = c.le32(p + 1).getOrElse(return None)
       if (((bits >> 29) & 0x7L) != 0L) return None // version must be 0
       val w = ((bits & 0x3fffL) + 1L).toInt
       val h = (((bits >> 14) & 0x3fffL) + 1L).toInt
       Some(WebpMeta("vp8l", w, h, ((bits >> 28) & 1L) == 1L))
-    } else if (tag(12, "VP8X")) {
+    } else if (c.tagAt(12, "VP8X")) {
       if (size != 10 || p + 10 > b.length) return None
-      if ((u8(p) & 0xc1) != 0) return None // reserved flag bits must be 0
-      val w = le24(p + 4) + 1
-      val h = le24(p + 7) + 1
-      Some(WebpMeta("vp8x", w, h, (u8(p) & 0x10) != 0))
+      val flags = b(p) & 0xff
+      if ((flags & 0xc1) != 0) return None // reserved flag bits must be 0
+      val w = c.le(p + 4, 3).getOrElse(return None).toInt + 1
+      val h = c.le(p + 7, 3).getOrElse(return None).toInt + 1
+      Some(WebpMeta("vp8x", w, h, (flags & 0x10) != 0))
     } else None
   }
 
   private[multimodal] def riffWebp(fourcc: String, payload: Array[Byte]): Array[Byte] = {
-    def le32(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val padded = if (payload.length % 2 == 1) payload :+ 0.toByte else payload
     val body = "WEBP".getBytes("US-ASCII") ++ fourcc.getBytes("US-ASCII") ++
       le32(payload.length) ++ padded
@@ -278,22 +271,16 @@ object Binary {
     // keyframe (bit 0 = 0), version 0, show_frame (bit 4)
     val frameTag = 0x10
     riffWebp("VP8 ", Array[Byte](frameTag.toByte, 0, 0,
-      0x9d.toByte, 0x01, 0x2a,
-      width.toByte, (width >>> 8).toByte,
-      height.toByte, (height >>> 8).toByte))
+      0x9d.toByte, 0x01, 0x2a) ++ le16(width) ++ le16(height))
   }
 
   def webpLossless(width: Int, height: Int, alpha: Boolean): Array[Byte] = {
     val bits = (width - 1).toLong | ((height - 1).toLong << 14) |
       (if (alpha) 1L << 28 else 0L)
-    riffWebp("VP8L", Array[Byte](0x2f,
-      bits.toByte, (bits >>> 8).toByte, (bits >>> 16).toByte,
-      (bits >>> 24).toByte))
+    riffWebp("VP8L", Array[Byte](0x2f) ++ le32(bits))
   }
 
   def webpExtended(width: Int, height: Int, alpha: Boolean): Array[Byte] = {
-    def le24(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte)
     riffWebp("VP8X", Array[Byte](if (alpha) 0x10 else 0, 0, 0, 0) ++
       le24(width - 1) ++ le24(height - 1))
   }
@@ -338,14 +325,8 @@ object Binary {
     * map work.
     */
   def parseAudioMeta(b: Array[Byte]): Option[AudioMeta] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-        (u8(i + 3).toLong << 24)
-    def tag(i: Int, s: String): Boolean =
-      i + s.length <= b.length && s.indices.forall(k => b(i + k) == s(k).toByte)
-    if (tag(0, "RIFF") && tag(8, "WAVE")) {
+    val c = ByteCursor(b)
+    if (c.tagAt(0, "RIFF") && c.tagAt(8, "WAVE")) {
       // chunk walk: [id(4) size(4,LE) payload(size, word-aligned)].
       // The cursor is a Long and the unsigned 32-bit chunk size is
       // never truncated to Int: a malformed (or >= 2 GiB) size walks
@@ -357,12 +338,13 @@ object Binary {
       var rate = 0; var ch = 0; var bits = 0; var dataBytes = -1L
       var blockAlign = 0
       while (i + 8 <= b.length && (rate == 0 || dataBytes < 0)) {
-        val p = i.toInt // safe: i + 8 <= b.length <= Int.MaxValue
-        val size = le32(p + 4)
-        if (tag(p, "fmt ") && i + 24 <= b.length) {
-          ch = le16(p + 10); rate = le32(p + 12).toInt
-          blockAlign = le16(p + 20); bits = le16(p + 22)
-        } else if (tag(p, "data")) dataBytes = size
+        val size = c.le32(i + 4).getOrElse(return None)
+        if (c.tagAt(i, "fmt ") && i + 24 <= b.length) {
+          ch = c.le16(i + 10).getOrElse(return None)
+          rate = c.le32(i + 12).getOrElse(return None).toInt
+          blockAlign = c.le16(i + 20).getOrElse(return None)
+          bits = c.le16(i + 22).getOrElse(return None)
+        } else if (c.tagAt(i, "data")) dataBytes = size
         i += 8L + size + (size & 1L) // chunks are word-aligned
       }
       if (rate <= 0 || ch <= 0 || blockAlign <= 0 || dataBytes < 0) None
@@ -370,19 +352,27 @@ object Binary {
         val frames = dataBytes / blockAlign
         Some(AudioMeta("wav", rate, ch, bits, frames, frames * 1000L / rate))
       }
-    } else if (tag(0, "fLaC") && b.length >= 26 && (u8(4) & 0x7f) == 0) {
+    } else if (c.tagAt(0, "fLaC") && b.length >= 26 && (b(4) & 0x7f) == 0) {
       // STREAMINFO (block type 0, 34 bytes at offset 8); the packed
       // field at offset 18: rate(20) channels-1(3) bits-1(5) samples(36)
-      val rate = (u8(18) << 12) | (u8(19) << 4) | (u8(20) >> 4)
-      val ch = ((u8(20) >> 1) & 7) + 1
-      val bits = (((u8(20) & 1) << 4) | (u8(21) >> 4)) + 1
-      val frames = ((u8(21) & 0x0f).toLong << 32) | (u8(22).toLong << 24) |
-        (u8(23).toLong << 16) | (u8(24).toLong << 8) | u8(25).toLong
+      val (rate, ch, bits, frames) =
+        streamInfo(c.be64(18).getOrElse(return None))
       if (rate <= 0) None
       else Some(AudioMeta("flac", rate, ch, bits, frames, frames * 1000L / rate))
-    } else if (tag(0, "OggS")) parseOggOpusMeta(b)
+    } else if (c.tagAt(0, "OggS")) parseOggOpusMeta(b)
     else parseMp3Meta(b)
   }
+
+  /** ID3v2's 28-bit "syncsafe" size: four bytes, top bit of each zero. */
+  private def syncsafe(v: Long): Int =
+    (((v >>> 24) & 0x7f) << 21 | ((v >>> 16) & 0x7f) << 14 |
+      ((v >>> 8) & 0x7f) << 7 | (v & 0x7f)).toInt
+
+  /** FLAC STREAMINFO's packed 64 bits (block offset 10): sample rate
+    * (20), channels-1 (3), bits-per-sample-1 (5), total samples (36). */
+  private def streamInfo(v: Long): (Int, Int, Int, Long) =
+    ((v >>> 44).toInt, ((v >>> 41) & 7).toInt + 1,
+      ((v >>> 36) & 0x1f).toInt + 1, v & 0xfffffffffL)
 
   /** MP3 (MPEG-1/2/2.5 Layer III) metadata via a FULL frame-header
     * walk — the most common crawl audio format has no self-describing
@@ -401,13 +391,9 @@ object Binary {
     * behind [[stubDecode]].)
     */
   private def parseMp3Meta(b: Array[Byte]): Option[AudioMeta] = {
-    def u8(i: Int): Int = b(i) & 0xff
+    val c = ByteCursor(b)
     var i = 0L
-    if (b.length >= 10 && u8(0) == 'I' && u8(1) == 'D' && u8(2) == '3') {
-      val sz = ((u8(6) & 0x7f) << 21) | ((u8(7) & 0x7f) << 14) |
-        ((u8(8) & 0x7f) << 7) | (u8(9) & 0x7f)
-      i = 10L + sz
-    }
+    if (c.tagAt(0, "ID3")) i = 10L + syncsafe(c.be32(6).getOrElse(return None))
     val brV1 = Array(-1, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160,
       192, 224, 256, 320, -1)
     val brV2 = Array(-1, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96,
@@ -420,25 +406,24 @@ object Binary {
     var ch = -1
     var ver = -1 // header version bits: 0 = 2.5, 2 = MPEG-2, 3 = MPEG-1
     while (i < b.length) {
-      val p = i.toInt
       // tolerate EXACTLY a trailing ID3v1 block (fixed 128 bytes)
-      if (b.length - i == 128L && u8(p) == 'T' && u8(p + 1) == 'A' &&
-        u8(p + 2) == 'G') {
+      if (b.length - i == 128L && c.tagAt(i, "TAG")) {
         i = b.length.toLong
       } else {
-        if (i + 4 > b.length) return None // partial trailing header
+        // a partial trailing header is None
+        val h = c.be32(i).getOrElse(return None)
         // sync = 11 set bits; version 01 is reserved; layer must be III
-        if (u8(p) != 0xff || (u8(p + 1) & 0xe0) != 0xe0) return None
-        val v = (u8(p + 1) >> 3) & 3
-        if (v == 1 || ((u8(p + 1) >> 1) & 3) != 1) return None
-        val br = (if (v == 3) brV1 else brV2)(u8(p + 2) >> 4)
+        if (((h >>> 21) & 0x7ff) != 0x7ff) return None
+        val v = ((h >>> 19) & 3).toInt
+        if (v == 1 || ((h >>> 17) & 3) != 1) return None
+        val br = (if (v == 3) brV1 else brV2)(((h >>> 12) & 0xf).toInt)
         val sr = (if (v == 3) srV1 else if (v == 2) srV2 else srV25)(
-          (u8(p + 2) >> 2) & 3)
-        val pad = (u8(p + 2) >> 1) & 1
+          ((h >>> 10) & 3).toInt)
+        val pad = (h >>> 9) & 1
         if (br <= 0 || sr <= 0) return None
-        val c = if ((u8(p + 3) >> 6) == 3) 1 else 2
-        if (rate < 0) { rate = sr; ch = c; ver = v }
-        else if (rate != sr || ch != c || ver != v) return None
+        val chans = if (((h >>> 6) & 3) == 3) 1 else 2
+        if (rate < 0) { rate = sr; ch = chans; ver = v }
+        else if (rate != sr || ch != chans || ver != v) return None
         i += (if (v == 3) 144000L else 72000L) * br / sr + pad
         frames += 1
       }
@@ -513,59 +498,64 @@ object Binary {
     * input rate; `n_frames` is the 48 kHz sample count.
     */
   def parseOggOpusMeta(b: Array[Byte]): Option[AudioMeta] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-        (u8(i + 3).toLong << 24)
-    def le64(i: Int): Long = le32(i) | (le32(i + 4) << 32)
+    val c = ByteCursor(b)
     var i = 0L
     var first = true
     var channels = -1; var preskip = -1; var rate = -1L
     var lastGranule = 0L; var sawEos = false
     while (i < b.length) {
       if (sawEos) return None // bytes after the EOS page: trailing garbage
-      if (i + 27 > b.length) return None
-      val p = i.toInt
-      if (u8(p) != 'O' || u8(p + 1) != 'g' || u8(p + 2) != 'g' ||
-        u8(p + 3) != 'S' || u8(p + 4) != 0) return None
-      val flags = u8(p + 5)
-      val granule = le64(p + 6)
-      val nseg = u8(p + 26)
-      if (i + 27 + nseg > b.length) return None
-      var payLen = 0L
-      var k = 0
-      while (k < nseg) { payLen += u8(p + 27 + k); k += 1 }
-      val total = 27L + nseg + payLen
-      if (i + total > b.length) return None
-      // page CRC with the stored CRC field (bytes 22-25) read as zero
-      var crc = 0
-      var j = 0
-      while (j < total) {
-        val byt = if (j >= 22 && j < 26) 0 else u8(p + j)
-        crc = (crc << 8) ^ oggCrcTable(((crc >>> 24) ^ byt) & 0xff)
-        j += 1
-      }
-      if ((crc.toLong & 0xffffffffL) != le32(p + 22)) return None
+      val pg = readOggPage(c, i).getOrElse(return None)
       if (first) {
-        if ((flags & 2) == 0) return None // stream must open with BOS
-        val h = p + 27 + nseg
-        if (payLen < 19 || !"OpusHead".indices.forall(k =>
-          b(h + k) == "OpusHead"(k).toByte)) return None
-        if (u8(h + 8) != 1) return None // OpusHead version
-        channels = u8(h + 9)
-        preskip = le16(h + 10)
-        rate = le32(h + 12)
+        if ((pg.flags & 2) == 0) return None // stream must open with BOS
+        val h = pg.body
+        if (pg.bodyLen < 19 || !c.tagAt(h, "OpusHead")) return None
+        if (c.u8(h + 8).getOrElse(return None) != 1) return None // version
+        channels = c.u8(h + 9).getOrElse(return None)
+        preskip = c.le16(h + 10).getOrElse(return None)
+        rate = c.le32(h + 12).getOrElse(return None)
         if (channels < 1) return None
         first = false
       }
-      if ((flags & 4) != 0) { sawEos = true; lastGranule = granule }
-      i += total
+      if ((pg.flags & 4) != 0) { sawEos = true; lastGranule = pg.granule }
+      i = pg.end
     }
     if (first || !sawEos) return None
     val n = lastGranule - preskip
     if (n < 0) return None
     Some(AudioMeta("opus", rate.toInt, channels, 0, n, n * 1000L / 48000L))
+  }
+
+  /** One parsed Ogg page: header flags, granule position, and the
+    * payload span [body, body + bodyLen); the page ends at `end`. */
+  private final case class OggPage(flags: Int, granule: Long, body: Long,
+                                   bodyLen: Long, end: Long)
+
+  /** The strict RFC 3533 page read at `i`: capture pattern, version
+    * byte 0, lacing table, and the CRC computed with its own field
+    * read as zero. None on any mismatch or truncation. */
+  private def readOggPage(c: ByteCursor, i: Long): Option[OggPage] = {
+    if (!c.tagAt(i, "OggS") || c.u8(i + 4).getOrElse(return None) != 0)
+      return None
+    val flags = c.u8(i + 5).getOrElse(return None)
+    val granule = c.le64(i + 6).getOrElse(return None)
+    val stored = c.le32(i + 22).getOrElse(return None)
+    val nseg = c.u8(i + 26).getOrElse(return None)
+    if (!c.has(i + 27, nseg)) return None
+    var payLen = 0L
+    var k = 0
+    while (k < nseg) { payLen += c.buf((i + 27 + k).toInt) & 0xff; k += 1 }
+    val total = 27L + nseg + payLen
+    if (!c.has(i, total)) return None
+    var crc = 0
+    var j = 0
+    while (j < total) {
+      val byt = if (j >= 22 && j < 26) 0 else c.buf((i + j).toInt) & 0xff
+      crc = (crc << 8) ^ oggCrcTable(((crc >>> 24) ^ byt) & 0xff)
+      j += 1
+    }
+    if ((crc.toLong & 0xffffffffL) != stored) return None
+    Some(OggPage(flags, granule, i + 27 + nseg, payLen, i + total))
   }
 
   /** One Ogg page with a correct CRC (general lacing: 255-runs + the
@@ -577,8 +567,6 @@ object Binary {
     while (rem >= 255) { lacing.write(255); rem -= 255 }
     lacing.write(rem) // 0 terminator when length is a 255-multiple
     val segs = lacing.toByteArray
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val page = "OggS".getBytes("US-ASCII") ++
       Array[Byte](0, flags.toByte) ++
       le32(granule) ++ le32(granule >>> 32) ++
@@ -589,10 +577,7 @@ object Binary {
     page.foreach { byt =>
       crc = (crc << 8) ^ oggCrcTable(((crc >>> 24) ^ (byt & 0xff)) & 0xff)
     }
-    val out = page.clone()
-    out(22) = crc.toByte; out(23) = (crc >>> 8).toByte
-    out(24) = (crc >>> 16).toByte; out(25) = (crc >>> 24).toByte
-    out
+    page.patch(22, le32(crc), 4)
   }
 
   /** Minimal VALID Opus-in-Ogg stream: BOS page with OpusHead, an
@@ -601,9 +586,6 @@ object Binary {
               nSamples48k: Long, dataBytes: Array[Byte],
               vendor: String = "graft",
               comments: Seq[(String, String)] = Seq.empty): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val head = "OpusHead".getBytes("US-ASCII") ++ Array[Byte](1,
       channels.toByte) ++ le16(preskip) ++ le32(inputRate) ++
@@ -659,12 +641,8 @@ object Binary {
     * rate, so the EOS granule is n_samples directly and duration
     * needs no 48 kHz rebase. */
   def parseOggVorbisMeta(b: Array[Byte]): Option[VorbisId] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def le32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-        (u8(i + 3).toLong << 24)
-    def le64(i: Int): Long = le32(i) | (le32(i + 4) << 32)
     if (b == null || b.length < 27) return None
+    val c = ByteCursor(b)
     var i = 0L
     var first = true
     var channels = -1; var rate = -1L; var nominal = -1L
@@ -672,48 +650,31 @@ object Binary {
     var lastGranule = 0L; var sawEos = false
     while (i < b.length) {
       if (sawEos) return None // trailing garbage after EOS
-      if (i + 27 > b.length) return None
-      val p = i.toInt
-      if (u8(p) != 'O' || u8(p + 1) != 'g' || u8(p + 2) != 'g' ||
-        u8(p + 3) != 'S' || u8(p + 4) != 0) return None
-      val flags = u8(p + 5)
-      val granule = le64(p + 6)
-      val nseg = u8(p + 26)
-      if (i + 27 + nseg > b.length) return None
-      var payLen = 0L
-      var k = 0
-      while (k < nseg) { payLen += u8(p + 27 + k); k += 1 }
-      val total = 27L + nseg + payLen
-      if (i + total > b.length) return None
-      var crc = 0
-      var j = 0
-      while (j < total) {
-        val byt = if (j >= 22 && j < 26) 0 else u8(p + j)
-        crc = (crc << 8) ^ oggCrcTable(((crc >>> 24) ^ byt) & 0xff)
-        j += 1
-      }
-      if ((crc.toLong & 0xffffffffL) != le32(p + 22)) return None
+      val pg = readOggPage(c, i).getOrElse(return None)
       if (first) {
-        if ((flags & 2) == 0) return None // must open with BOS
-        val h = p + 27 + nseg
+        if ((pg.flags & 2) == 0) return None // must open with BOS
+        val h = pg.body
         // \x01vorbis + version(4) + ch(1) + rate(4) + 3 bitrates(12)
         // + blocksizes(1) + framing(1) = 30 bytes
-        if (payLen < 30 || u8(h) != 1 || !(1 to 6).forall(k =>
-          b(h + k) == "vorbis"(k - 1).toByte)) return None
-        if (le32(h + 7) != 0) return None // vorbis_version
-        channels = u8(h + 11)
-        rate = le32(h + 12)
-        nominal = le32(h + 20) // max(16), nominal(20), min(24)
-        val bsByte = u8(h + 28)
+        if (pg.bodyLen < 30 || c.u8(h).getOrElse(return None) != 1 ||
+          !c.tagAt(h + 1, "vorbis")) return None
+        // vorbis_version
+        if (c.le32(h + 7).getOrElse(return None) != 0) return None
+        channels = c.u8(h + 11).getOrElse(return None)
+        rate = c.le32(h + 12).getOrElse(return None)
+        // max(16), nominal(20), min(24)
+        nominal = c.le32(h + 20).getOrElse(return None)
+        val bsByte = c.u8(h + 28).getOrElse(return None)
         bs0 = 1 << (bsByte & 0xf)
         bs1 = 1 << (bsByte >>> 4)
-        if ((u8(h + 29) & 1) == 0) return None // framing bit
+        // framing bit
+        if ((c.u8(h + 29).getOrElse(return None) & 1) == 0) return None
         if (channels < 1 || rate < 1) return None
         if (bs0 < 64 || bs1 > 8192 || bs0 > bs1) return None
         first = false
       }
-      if ((flags & 4) != 0) { sawEos = true; lastGranule = granule }
-      i += total
+      if ((pg.flags & 4) != 0) { sawEos = true; lastGranule = pg.granule }
+      i = pg.end
     }
     if (first || !sawEos || lastGranule < 0) return None
     Some(VorbisId(channels, rate, nominal, bs0, bs1, lastGranule,
@@ -725,8 +686,6 @@ object Binary {
   def oggVorbis(channels: Int, rate: Long, nominal: Long,
                 bs0Exp: Int, bs1Exp: Int, nSamples: Long,
                 dataBytes: Array[Byte]): Array[Byte] = {
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val ident = Array[Byte](1) ++ "vorbis".getBytes("US-ASCII") ++
       le32(0) ++ Array[Byte](channels.toByte) ++ le32(rate) ++
       le32(0) ++ le32(nominal) ++ le32(0) ++
@@ -763,9 +722,6 @@ object Binary {
     */
   def wavHeader(sampleRate: Int, channels: Int, bitsPerSample: Int,
                 nFrames: Long): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val blockAlign = channels * bitsPerSample / 8
     val dataBytes = nFrames * blockAlign
     "RIFF".getBytes("US-ASCII") ++ le32(36 + dataBytes) ++
@@ -778,17 +734,10 @@ object Binary {
 
   def flacHeader(sampleRate: Int, channels: Int, bitsPerSample: Int,
                  nFrames: Long): Array[Byte] = {
-    val packed = new Array[Byte](8)
-    packed(0) = (sampleRate >>> 12).toByte
-    packed(1) = (sampleRate >>> 4).toByte
-    packed(2) = (((sampleRate & 0xf) << 4) | (((channels - 1) & 7) << 1) |
-      (((bitsPerSample - 1) >> 4) & 1)).toByte
-    packed(3) = ((((bitsPerSample - 1) & 0xf) << 4) |
-      ((nFrames >>> 32) & 0xf)).toByte
-    packed(4) = (nFrames >>> 24).toByte
-    packed(5) = (nFrames >>> 16).toByte
-    packed(6) = (nFrames >>> 8).toByte
-    packed(7) = nFrames.toByte
+    // the [[streamInfo]] layout: rate(20) channels-1(3) bits-1(5) samples(36)
+    val packed = be64(((sampleRate & 0xfffffL) << 44) |
+      (((channels - 1) & 7L) << 41) | (((bitsPerSample - 1) & 0x1fL) << 36) |
+      (nFrames & 0xfffffffffL))
     "fLaC".getBytes("US-ASCII") ++
       Array[Byte](0x80.toByte, 0, 0, 34) ++ // last-block flag + STREAMINFO(34)
       Array[Byte](0x10, 0, 0x10, 0) ++ // min/max block size 4096
@@ -806,32 +755,22 @@ object Binary {
     * string + KEY=value UTF-8 records over b[from, end). */
   private def vorbisComments(b: Array[Byte], from: Long,
       end: Long): Option[VorbisTags] = {
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le32(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    var q = from
-    if (q + 4 > end) return None
-    val vlen = le32(q); q += 4
-    if (vlen < 0 || q + vlen + 4 > end) return None
-    val vendor = new String(b, q.toInt, vlen.toInt,
-      java.nio.charset.StandardCharsets.UTF_8)
-    q += vlen
-    val n = le32(q); q += 4
-    if (n < 0 || n > 65536) return None
+    val c = new ByteCursor(b, from, end)
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    val vlen = c.le32().getOrElse(return None)
+    val vendor = new String(c.bytes(vlen).getOrElse(return None), utf8)
+    val n = c.le32().getOrElse(return None)
+    if (n > 65536) return None
     var title = ""; var artist = ""; var album = ""
     var k = 0L
     while (k < n) {
-      if (q + 4 > end) return None
-      val cl = le32(q); q += 4
-      if (cl < 0 || q + cl > end) return None
-      val c = new String(b, q.toInt, cl.toInt,
-        java.nio.charset.StandardCharsets.UTF_8)
-      q += cl
-      val eq = c.indexOf('=')
-      if (eq > 0) c.substring(0, eq).toUpperCase match {
-        case "TITLE" => title = c.substring(eq + 1)
-        case "ARTIST" => artist = c.substring(eq + 1)
-        case "ALBUM" => album = c.substring(eq + 1)
+      val cl = c.le32().getOrElse(return None)
+      val s = new String(c.bytes(cl).getOrElse(return None), utf8)
+      val eq = s.indexOf('=')
+      if (eq > 0) s.substring(0, eq).toUpperCase match {
+        case "TITLE" => title = s.substring(eq + 1)
+        case "ARTIST" => artist = s.substring(eq + 1)
+        case "ALBUM" => album = s.substring(eq + 1)
         case _ => ()
       }
       k += 1
@@ -845,17 +784,17 @@ object Binary {
     * TITLE/ARTIST/ALBUM surface, everything else counts). None when
     * no comment block exists or any length field lies. */
   def parseFlacTags(b: Array[Byte]): Option[VorbisTags] = {
-    if (b == null || b.length < 8 || !(b(0) == 'f' && b(1) == 'L' &&
-      b(2) == 'a' && b(3) == 'C')) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le32(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
+    if (b == null || b.length < 8) return None
+    val c = ByteCursor(b)
+    if (!c.tagAt(0, "fLaC")) return None
     var p = 4L
     var last = false
     while (!last && p + 4 <= b.length) {
-      val h = u8(p); last = (h & 0x80) != 0
-      val typ = h & 0x7f
-      val len = (u8(p + 1) << 16) | (u8(p + 2) << 8) | u8(p + 3)
+      // block header: last-flag(1) type(7) length(24, big-endian)
+      val h = c.be32(p).getOrElse(return None)
+      last = (h & 0x80000000L) != 0
+      val typ = (h >>> 24) & 0x7f
+      val len = h & 0xffffff
       if (p + 4 + len > b.length) return None
       if (typ == 4) return vorbisComments(b, p + 4, p + 4 + len)
       p += 4 + len
@@ -870,8 +809,6 @@ object Binary {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val base = flacHeader(sampleRate, channels, bitsPerSample, nFrames)
     base(4) = (base(4) & 0x7f).toByte // STREAMINFO is no longer last
-    def le32(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val vb = vendor.getBytes(utf8)
     val body = new java.io.ByteArrayOutputStream()
     body.write(le32(vb.length)); body.write(vb)
@@ -881,8 +818,7 @@ object Binary {
       body.write(le32(c.length)); body.write(c)
     }
     val blk = body.toByteArray
-    base ++ Array[Byte]((0x80 | 4).toByte, (blk.length >>> 16).toByte,
-      (blk.length >>> 8).toByte, blk.length.toByte) ++ blk
+    base ++ Array[Byte]((0x80 | 4).toByte) ++ be24(blk.length) ++ blk
   }
 
   /** Deterministic per-id tagged FLAC: rate/frames from the q75
@@ -908,38 +844,17 @@ object Binary {
     * out of documented scope (length checks reject them, never
     * garble). */
   def parseOpusTags(b: Array[Byte]): Option[VorbisTags] = {
-    if (b == null || b.length < 27 || b(0) != 'O' || b(1) != 'g' ||
-      b(2) != 'g' || b(3) != 'S') return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le32(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
+    if (b == null || b.length < 27) return None
+    val c = ByteCursor(b)
+    if (!c.tagAt(0, "OggS")) return None
     var i = 0L
     var first = true
     while (i + 27 <= b.length) {
-      val p = i.toInt
-      if (u8(i) != 'O' || u8(i + 1) != 'g' || u8(i + 2) != 'g' ||
-        u8(i + 3) != 'S' || u8(i + 4) != 0) return None
-      val nseg = u8(i + 26)
-      if (i + 27 + nseg > b.length) return None
-      var payLen = 0L
-      var k = 0
-      while (k < nseg) { payLen += u8(i + 27 + k); k += 1 }
-      val total = 27L + nseg + payLen
-      if (i + total > b.length) return None
-      var crc = 0
-      var j = 0L
-      while (j < total) {
-        val byt = if (j >= 22 && j < 26) 0 else u8(i + j)
-        crc = (crc << 8) ^ oggCrcTable(((crc >>> 24) ^ byt) & 0xff)
-        j += 1
-      }
-      if ((crc.toLong & 0xffffffffL) != le32(i + 22)) return None
-      val h = i + 27 + nseg
-      if (!first && payLen >= 8 && (0 until 8).forall(k =>
-        b((h + k).toInt) == "OpusTags"(k).toByte))
-        return vorbisComments(b, h + 8, h + payLen)
+      val pg = readOggPage(c, i).getOrElse(return None)
+      if (!first && pg.bodyLen >= 8 && c.tagAt(pg.body, "OpusTags"))
+        return vorbisComments(b, pg.body + 8, pg.body + pg.bodyLen)
       first = false
-      i += total
+      i = pg.end
     }
     None
   }
@@ -990,50 +905,26 @@ object Binary {
     * malformed bytes.
     */
   def parseVideoMeta(b: Array[Byte]): Option[VideoMeta] = {
-    def u8(i: Long): Long = b(i.toInt) & 0xffL
-    def be32(i: Long): Long =
-      (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def be64(i: Long): Long =
-      (be32(i) << 32) | be32(i + 4)
-    def fourcc(i: Long): String =
-      new String(b.slice(i.toInt, i.toInt + 4), "US-ASCII")
-    val n = b.length.toLong
-    // (boxType, boxBodyStart, boxEnd) walk over [from, hi)
-    def boxes(from: Long, hi: Long): Iterator[(String, Long, Long)] =
-      new Iterator[(String, Long, Long)] {
-        private var cur = from
-        def hasNext: Boolean = cur >= 0 && cur + 8 <= hi
-        def next(): (String, Long, Long) = {
-          val size32 = be32(cur)
-          val typ = fourcc(cur + 4)
-          val (body, end) =
-            if (size32 == 1L && cur + 16 <= hi) (cur + 16, cur + be64(cur + 8))
-            else if (size32 == 0L) (cur + 8, hi)
-            else (cur + 8, cur + size32)
-          if (end <= cur || end > hi) { cur = -1; (typ, body, -1L) }
-          else { cur = end; (typ, body, end) }
-        }
-      }
-    if (n < 16) return None
+    if (b.length < 16) return None
     var brand: String = null
     var timescale = -1L
     var duration = -1L
     var tracks = 0
-    boxes(0L, n).foreach {
-      case (_, _, -1L) => return None // malformed size
-      case ("ftyp", body, end) =>
-        if (body + 4 <= end) brand = fourcc(body) else return None
-      case ("moov", body, end) =>
-        boxes(body, end).foreach {
-          case (_, _, -1L) => return None
-          case ("mvhd", mb, me) =>
-            val version = u8(mb)
-            if (version == 0L && mb + 20 <= me) {
-              timescale = be32(mb + 12); duration = be32(mb + 16)
-            } else if (version == 1L && mb + 32 <= me) {
-              timescale = be32(mb + 20); duration = be64(mb + 24)
-            } else return None
-          case ("trak", _, _) => tracks += 1
+    ByteCursor(b).boxes().foreach {
+      case None => return None // malformed size
+      case Some(("ftyp", f)) => brand = f.fourcc(f.pos).getOrElse(return None)
+      case Some(("moov", mv)) =>
+        mv.boxes().foreach {
+          case None => return None
+          case Some(("mvhd", m)) =>
+            val (ts, dur) = m.u8(m.pos).getOrElse(return None) match {
+              case 0 => (m.be32(m.pos + 12), m.be32(m.pos + 16))
+              case 1 => (m.be32(m.pos + 20), m.be64(m.pos + 24))
+              case _ => return None
+            }
+            timescale = ts.getOrElse(return None)
+            duration = dur.getOrElse(return None)
+          case Some(("trak", _)) => tracks += 1
           case _ => ()
         }
       case _ => () // skip free/mdat/unknown top-level boxes
@@ -1064,87 +955,68 @@ object Binary {
     * infinite-loop rule). */
   def parseTracks(b: Array[Byte]): Option[Seq[TrackMeta]] = {
     if (b == null || b.length < 16) return None
-    def u8(i: Long): Long = b(i.toInt) & 0xffL
-    def be32(i: Long): Long =
-      (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def be64(i: Long): Long = (be32(i) << 32) | be32(i + 4)
-    def fourcc(i: Long): String =
-      new String(b.slice(i.toInt, i.toInt + 4), "US-ASCII")
-    val n = b.length.toLong
-    def boxes(from: Long, hi: Long): Iterator[(String, Long, Long)] =
-      new Iterator[(String, Long, Long)] {
-        private var cur = from
-        def hasNext: Boolean = cur >= 0 && cur + 8 <= hi
-        def next(): (String, Long, Long) = {
-          val size32 = be32(cur)
-          val typ = fourcc(cur + 4)
-          val (body, end) =
-            if (size32 == 1L && cur + 16 <= hi) (cur + 16, cur + be64(cur + 8))
-            else if (size32 == 0L) (cur + 8, hi)
-            else (cur + 8, cur + size32)
-          if (end <= cur || end > hi) { cur = -1; (typ, body, -1L) }
-          else { cur = end; (typ, body, end) }
-        }
-      }
     if (parseVideoMeta(b).isEmpty) return None // same validity gate
     val out = Vector.newBuilder[TrackMeta]
     var idx = 0
-    boxes(0L, n).foreach {
-      case (_, _, -1L) => return None
-      case ("moov", mvBody, mvEnd) =>
-        boxes(mvBody, mvEnd).foreach {
-          case (_, _, -1L) => return None
-          case ("trak", tkBody, tkEnd) =>
+    ByteCursor(b).boxes().foreach {
+      case None => return None
+      case Some(("moov", mv)) =>
+        mv.boxes().foreach {
+          case None => return None
+          case Some(("trak", tk)) =>
             var handler: String = null
             var timescale = -1L
             var duration = -1L
             var nSamples = -1L
             var sumDelta = -1L
             var totalBytes = -1L
-            boxes(tkBody, tkEnd).foreach {
-              case (_, _, -1L) => return None
-              case ("mdia", mdBody, mdEnd) =>
-                boxes(mdBody, mdEnd).foreach {
-                  case (_, _, -1L) => return None
-                  case ("mdhd", hb, he) =>
-                    val v = u8(hb)
-                    if (v == 0L && hb + 24 <= he) {
-                      timescale = be32(hb + 12); duration = be32(hb + 16)
-                    } else if (v == 1L && hb + 36 <= he) {
-                      timescale = be32(hb + 20); duration = be64(hb + 24)
-                    } else return None
-                  case ("hdlr", hb, he) =>
-                    if (hb + 12 <= he) handler = fourcc(hb + 8)
-                    else return None
-                  case ("minf", mfBody, mfEnd) =>
-                    boxes(mfBody, mfEnd).foreach {
-                      case (_, _, -1L) => return None
-                      case ("stbl", sbBody, sbEnd) =>
-                        boxes(sbBody, sbEnd).foreach {
-                          case (_, _, -1L) => return None
-                          case ("stts", tb, te) =>
-                            if (tb + 8 > te) return None
-                            val entries = be32(tb + 4)
-                            if (tb + 8 + entries * 8 > te) return None
+            tk.boxes().foreach {
+              case None => return None
+              case Some(("mdia", md)) =>
+                md.boxes().foreach {
+                  case None => return None
+                  case Some(("mdhd", h)) =>
+                    val (ts, dur) = h.u8(h.pos).getOrElse(return None) match {
+                      case 0 if h.has(h.pos, 24) =>
+                        (h.be32(h.pos + 12), h.be32(h.pos + 16))
+                      case 1 if h.has(h.pos, 36) =>
+                        (h.be32(h.pos + 20), h.be64(h.pos + 24))
+                      case _ => return None
+                    }
+                    timescale = ts.getOrElse(return None)
+                    duration = dur.getOrElse(return None)
+                  case Some(("hdlr", h)) =>
+                    handler = h.fourcc(h.pos + 8).getOrElse(return None)
+                  case Some(("minf", mf)) =>
+                    mf.boxes().foreach {
+                      case None => return None
+                      case Some(("stbl", sb)) =>
+                        sb.boxes().foreach {
+                          case None => return None
+                          case Some(("stts", t)) =>
+                            val entries = t.be32(t.pos + 4).getOrElse(return None)
+                            if (!t.has(t.pos + 8, entries * 8)) return None
                             var s = 0L; var d = 0L
                             var e = 0L
                             while (e < entries) {
-                              val cnt = be32(tb + 8 + e * 8)
-                              val dl = be32(tb + 12 + e * 8)
+                              val run = t.pos + 8 + e * 8
+                              val cnt = t.be32(run).getOrElse(return None)
+                              val dl = t.be32(run + 4).getOrElse(return None)
                               s += cnt; d += cnt * dl
                               e += 1
                             }
                             nSamples = s; sumDelta = d
-                          case ("stsz", zb, ze) =>
-                            if (zb + 12 > ze) return None
-                            val fixed = be32(zb + 4)
-                            val cnt = be32(zb + 8)
+                          case Some(("stsz", z)) =>
+                            val fixed = z.be32(z.pos + 4).getOrElse(return None)
+                            val cnt = z.be32(z.pos + 8).getOrElse(return None)
                             if (fixed != 0L) totalBytes = fixed * cnt
                             else {
-                              if (zb + 12 + cnt * 4 > ze) return None
+                              if (!z.has(z.pos + 12, cnt * 4)) return None
                               var s = 0L; var e = 0L
                               while (e < cnt) {
-                                s += be32(zb + 12 + e * 4); e += 1
+                                val at = z.pos + 12 + e * 4
+                                s += z.be32(at).getOrElse(return None)
+                                e += 1
                               }
                               totalBytes = s
                             }
@@ -1175,9 +1047,6 @@ object Binary {
     */
   def mp4Header(timescale: Long, duration: Long, nTracks: Int,
                 brand: String = "isom", mvhdV1: Boolean = false): Array[Byte] = {
-    def be32(v: Long) = Array[Byte](
-      (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-    def be64(v: Long) = be32(v >>> 32) ++ be32(v & 0xffffffffL)
     def box(typ: String, body: Array[Byte]): Array[Byte] =
       be32(body.length + 8L) ++ typ.getBytes("US-ASCII") ++ body
     val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ be32(512L) ++
@@ -1225,8 +1094,6 @@ object Binary {
   def mp4WithTracks(brand: String, mvTimescale: Long, mvDuration: Long,
       specs: Seq[(String, Long, Seq[(Long, Long)], Long, Seq[Long])])
       : Array[Byte] = {
-    def be32(v: Long) = Array[Byte](
-      (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
     def box(typ: String, body: Array[Byte]): Array[Byte] =
       be32(body.length + 8L) ++ typ.getBytes("US-ASCII") ++ body
     val v0 = Array[Byte](0, 0, 0, 0) // version 0 + flags
@@ -1300,60 +1167,35 @@ object Binary {
     */
   def parseAvifMeta(b: Array[Byte]): Option[AvifMeta] = {
     if (b == null || b.length < 16) return None
-    def u8(i: Long): Long = b(i.toInt) & 0xffL
-    def be32(i: Long): Long =
-      (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def be64(i: Long): Long = (be32(i) << 32) | be32(i + 4)
-    def fourcc(i: Long): String =
-      new String(b.slice(i.toInt, i.toInt + 4), "US-ASCII")
-    val n = b.length.toLong
-    def boxes(from: Long, hi: Long): Iterator[(String, Long, Long)] =
-      new Iterator[(String, Long, Long)] {
-        private var cur = from
-        def hasNext: Boolean = cur >= 0 && cur + 8 <= hi
-        def next(): (String, Long, Long) = {
-          val size32 = be32(cur)
-          val typ = fourcc(cur + 4)
-          val (body, end) =
-            if (size32 == 1L && cur + 16 <= hi) (cur + 16, cur + be64(cur + 8))
-            else if (size32 == 0L) (cur + 8, hi)
-            else (cur + 8, cur + size32)
-          if (end <= cur || end > hi) { cur = -1; (typ, body, -1L) }
-          else { cur = end; (typ, body, end) }
-        }
-      }
-    if (n < 16) return None
     var brand: String = null
     var width = -1L
     var height = -1L
     var depth = 8
     var alpha = false
-    boxes(0L, n).foreach {
-      case (_, _, -1L) => return None
-      case ("ftyp", body, end) =>
-        if (body + 4 > end) return None
-        brand = fourcc(body)
+    ByteCursor(b).boxes().foreach {
+      case None => return None
+      case Some(("ftyp", f)) =>
+        brand = f.fourcc(f.pos).getOrElse(return None)
         if (brand != "avif" && brand != "avis") return None
-      case ("meta", body, end) =>
-        if (body + 4 > end) return None
-        boxes(body + 4, end).foreach { // meta is a FullBox
-          case (_, _, -1L) => return None
-          case ("iprp", ib, ie) =>
-            boxes(ib, ie).foreach {
-              case (_, _, -1L) => return None
-              case ("ipco", pb, pe) =>
-                boxes(pb, pe).foreach {
-                  case (_, _, -1L) => return None
-                  case ("ispe", sb, se) =>
-                    if (sb + 12 > se) return None
-                    width = be32(sb + 4); height = be32(sb + 8)
-                  case ("pixi", xb, xe) =>
-                    if (xb + 6 > xe) return None
-                    depth = u8(xb + 5).toInt // first channel's bits
-                  case ("auxC", ab, ae) =>
-                    val urn = new String(b.slice((ab + 4).toInt,
-                      (ae min n).toInt), "US-ASCII").takeWhile(_ != '\u0000')
-                    if (urn.contains(":alpha")) alpha = true
+      case Some(("meta", mt)) =>
+        mt.skip(4).getOrElse(return None) // meta is a FullBox
+        mt.boxes().foreach {
+          case None => return None
+          case Some(("iprp", ip)) =>
+            ip.boxes().foreach {
+              case None => return None
+              case Some(("ipco", pc)) =>
+                pc.boxes().foreach {
+                  case None => return None
+                  case Some(("ispe", x)) =>
+                    width = x.be32(x.pos + 4).getOrElse(return None)
+                    height = x.be32(x.pos + 8).getOrElse(return None)
+                  case Some(("pixi", x)) => // first channel's bits
+                    depth = x.u8(x.pos + 5).getOrElse(return None)
+                  case Some(("auxC", x)) =>
+                    val urn = x.bytes(x.pos + 4, x.end - x.pos - 4)
+                      .map(new String(_, "US-ASCII").takeWhile(_ != '\u0000'))
+                    if (urn.exists(_.contains(":alpha"))) alpha = true
                   case _ => ()
                 }
               case _ => () // ipma associations etc.
@@ -1372,8 +1214,6 @@ object Binary {
     * [[parseAvifMeta]] round-trips. */
   def avifHeader(width: Int, height: Int, bitDepth: Int, alpha: Boolean,
                  brand: String = "avif"): Array[Byte] = {
-    def be32(v: Long) = Array[Byte](
-      (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
     def box(typ: String, body: Array[Byte]): Array[Byte] =
       be32(body.length + 8L) ++ typ.getBytes("US-ASCII") ++ body
     def fullBox(typ: String, body: Array[Byte]): Array[Byte] =
@@ -1426,59 +1266,53 @@ object Binary {
   def parseExifMeta(b: Array[Byte]): Option[ExifMeta] = {
     if (b == null || b.length < 4 || (b(0) & 0xff) != 0xff ||
       (b(1) & 0xff) != 0xd8) return None
-    def u8(i: Int): Int = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
+    val c = ByteCursor(b)
     var i = 2
     var tiffAt = -1
     var tiffEnd = -1
     while (tiffAt < 0 && i + 3 < b.length) {
-      if (u8(i) != 0xff) return None
-      val m = u8(i + 1)
+      if ((b(i) & 0xff) != 0xff) return None
+      val m = b(i + 1) & 0xff
       if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7) || m == 0x01) i += 2
       else if (m == 0xda || m == 0xd9) return None // image data: no EXIF
       else {
-        val len = be16(i + 2)
+        val len = c.be16(i + 2).getOrElse(return None)
         if (m == 0xe1 && len >= 16 && i + 2 + len <= b.length &&
-          b(i + 4) == 'E' && b(i + 5) == 'x' && b(i + 6) == 'i' &&
-          b(i + 7) == 'f' && b(i + 8) == 0 && b(i + 9) == 0) {
+          c.tagAt(i + 4, "Exif\u0000\u0000")) {
           tiffAt = i + 10
           tiffEnd = i + 2 + len
         } else i += 2 + len
       }
     }
     if (tiffAt < 0 || tiffEnd > b.length) return None
-    // embedded TIFF (offsets relative to tiffAt)
-    val le = b(tiffAt) == 'I' && b(tiffAt + 1) == 'I'
-    val bigE = b(tiffAt) == 'M' && b(tiffAt + 1) == 'M'
-    if (!le && !bigE) return None
-    def t16(off: Long): Int = {
-      val a = tiffAt + off.toInt
-      if (le) u8(a) | (u8(a + 1) << 8) else (u8(a) << 8) | u8(a + 1)
-    }
-    def t32(off: Long): Long =
-      if (le) t16(off).toLong | (t16(off + 2).toLong << 16)
-      else (t16(off).toLong << 16) | t16(off + 2).toLong
+    // embedded TIFF: offsets relative to tiffAt, reads bounded by the
+    // segment
+    val t = new ByteCursor(b, tiffAt, tiffEnd)
+    val le = t.tagAt(tiffAt, "II")
+    if (!le && !t.tagAt(tiffAt, "MM")) return None
     val n = (tiffEnd - tiffAt).toLong
-    if (n < 8 || t16(2) != 42) return None
-    val ifd = t32(4)
+    if (n < 8 || t.uint(tiffAt + 2, 2, le).getOrElse(return None) != 42)
+      return None
+    val ifd = t.uint(tiffAt + 4, 4, le).getOrElse(return None)
     if (ifd + 2 > n) return None
-    val cnt = t16(ifd)
+    val cnt = t.uint(tiffAt + ifd, 2, le).getOrElse(return None)
     var orientation = -1
     var datetime = ""
     var k = 0
     while (k < cnt) {
-      val e = ifd + 2 + k * 12L
-      if (e + 12 > n) return None
-      val tag = t16(e)
-      val typ = t16(e + 2)
-      val valCnt = t32(e + 4)
+      val e = tiffAt + ifd + 2 + k * 12L
+      if (!t.has(e, 12)) return None
+      val tag = t.uint(e, 2, le).getOrElse(return None)
+      val typ = t.uint(e + 2, 2, le).getOrElse(return None)
+      val valCnt = t.uint(e + 4, 4, le).getOrElse(return None)
       if (tag == 274 && typ == 3 && valCnt == 1L)
-        orientation = t16(e + 8)
+        orientation = t.uint(e + 8, 2, le).getOrElse(return None).toInt
       else if (tag == 306 && typ == 2 && valCnt >= 2 && valCnt <= 32) {
-        val off = t32(e + 8)
-        if (off + valCnt > n) return None
-        datetime = new String(b, tiffAt + off.toInt,
-          valCnt.toInt - 1, "US-ASCII") // NUL terminator dropped
+        val off = tiffAt + t.uint(e + 8, 4, le).getOrElse(return None)
+        if (!t.has(off, valCnt)) return None
+        // NUL terminator dropped
+        datetime = new String(t.bytes(off, valCnt - 1).getOrElse(return None),
+          "US-ASCII")
       }
       k += 1
     }
@@ -1492,8 +1326,6 @@ object Binary {
     * dims from SOF past it, [[parseExifMeta]] reads the EXIF. */
   def jpegWithExif(width: Int, height: Int, orientation: Int,
                    datetime: String): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Int) = le16(v & 0xffff) ++ le16(v >>> 16)
     val dt = datetime.getBytes("US-ASCII") :+ 0.toByte
     // IFD: 2 entries + next-IFD(0); DateTime bytes follow at offset
     // 8 (tiff header) + 2 + 24 + 4 = 38
@@ -1505,8 +1337,7 @@ object Binary {
       ifd ++ dt
     val payload = "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ tiff
     val app1 = Array[Byte](0xff.toByte, 0xe1.toByte) ++
-      Array[Byte](((payload.length + 2) >>> 8).toByte,
-        ((payload.length + 2) & 0xff).toByte) ++ payload
+      be16(payload.length + 2) ++ payload
     val base = jpegHeader(width, height)
     base.take(2) ++ app1 ++ base.drop(2)
   }
@@ -1541,11 +1372,10 @@ object Binary {
   def parseId3v2(b: Array[Byte]): Option[Id3Meta] = {
     if (b == null || b.length < 10 || b(0) != 'I' || b(1) != 'D' ||
       b(2) != '3') return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    val major = u8(3)
+    val c = ByteCursor(b)
+    val major = b(3) & 0xff
     if (major != 2 && major != 3 && major != 4) return None
-    val tagSize = ((u8(6) & 0x7f) << 21) | ((u8(7) & 0x7f) << 14) |
-      ((u8(8) & 0x7f) << 7) | (u8(9) & 0x7f)
+    val tagSize = syncsafe(c.be32(6).getOrElse(return None))
     val end = math.min(10L + tagSize, b.length.toLong)
     var i = 10L
     var title = ""; var artist = ""; var album = ""
@@ -1553,34 +1383,30 @@ object Binary {
     val hdr = if (major == 2) 6 else 10
     val idLen = if (major == 2) 3 else 4
     while (i + hdr <= end) {
-      if (u8(i) == 0) { i = end } // padding begins
+      if (b(i.toInt) == 0) { i = end } // padding begins
       else {
         val id = new String(b, i.toInt, idLen, "US-ASCII")
-        if (!id.forall(c => c.isUpper || c.isDigit)) return None
-        val size = major match {
-          case 2 => (u8(i + 3) << 16) | (u8(i + 4) << 8) | u8(i + 5)
-          case 4 =>
-            ((u8(i + 4) & 0x7f) << 21) | ((u8(i + 5) & 0x7f) << 14) |
-              ((u8(i + 6) & 0x7f) << 7) | (u8(i + 7) & 0x7f)
-          case _ => (u8(i + 4) << 24) | (u8(i + 5) << 16) |
-            (u8(i + 6) << 8) | u8(i + 7)
-        }
-        if (size < 0 || i + hdr + size > end) return None
+        if (!id.forall(ch => ch.isUpper || ch.isDigit)) return None
+        val size64 = (major match {
+          case 2 => c.be(i + 3, 3)
+          case 4 => c.be32(i + 4).map(v => syncsafe(v).toLong)
+          case _ => c.be32(i + 4)
+        }).getOrElse(return None)
+        if (i + hdr + size64 > end) return None
+        val size = size64.toInt // in range: bounded by `end` above
         if (id.startsWith("T") && size >= 1) {
-          val enc = u8(i + hdr)
+          val enc = b((i + hdr).toInt) & 0xff
           val text = enc match {
             case 0 => new String(b, i.toInt + hdr + 1, size - 1,
               java.nio.charset.StandardCharsets.ISO_8859_1)
             case 1 => // UTF-16 with BOM (v2.2 UCS-2 / v2.3 "Unicode")
               if (size <= 3) ""
               else {
-                val b0 = u8(i + hdr + 1); val b1 = u8(i + hdr + 2)
-                val cs =
-                  if (b0 == 0xff && b1 == 0xfe)
-                    java.nio.charset.StandardCharsets.UTF_16LE
-                  else if (b0 == 0xfe && b1 == 0xff)
-                    java.nio.charset.StandardCharsets.UTF_16BE
-                  else return None // enc 1 without a BOM: malformed
+                val cs = c.be16(i + hdr + 1).getOrElse(return None) match {
+                  case 0xfffe => java.nio.charset.StandardCharsets.UTF_16LE
+                  case 0xfeff => java.nio.charset.StandardCharsets.UTF_16BE
+                  case _ => return None // enc 1 without a BOM: malformed
+                }
                 new String(b, i.toInt + hdr + 3, size - 3, cs)
               }
             case 2 => // UTF-16BE, no BOM (v2.4)
@@ -1622,15 +1448,13 @@ object Binary {
       }
       val n = payload.length
       if (major == 2) // 3-char id + 3-byte size, no flags
-        id.getBytes("US-ASCII") ++ Array[Byte]((n >>> 16).toByte,
-          (n >>> 8).toByte, n.toByte) ++ payload
+        id.getBytes("US-ASCII") ++ be24(n) ++ payload
       else {
         val size =
           if (major == 4) Array[Byte](((n >> 21) & 0x7f).toByte,
             ((n >> 14) & 0x7f).toByte, ((n >> 7) & 0x7f).toByte,
             (n & 0x7f).toByte)
-          else Array[Byte]((n >>> 24).toByte, (n >>> 16).toByte,
-            (n >>> 8).toByte, n.toByte)
+          else be32(n)
         id.getBytes("US-ASCII") ++ size ++ Array[Byte](0, 0) ++ payload
       }
     }
@@ -1727,13 +1551,13 @@ object Binary {
     * negative = top-down; magnitude reported), bpp at 28. */
   def parseBmpMeta(b: Array[Byte]): Option[ImageMeta] = {
     if (b == null || b.length < 30 || b(0) != 'B' || b(1) != 'M') return None
-    def le16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def le32(i: Int): Long = le16(i).toLong | (le16(i + 2).toLong << 16)
-    val dibSize = le32(14)
+    val c = ByteCursor(b)
+    val dibSize = c.le32(14).getOrElse(return None)
     if (dibSize < 40) return None // core-header BMPs out of scope
-    val w = le32(18).toInt
-    val h = le32(22).toInt // signed: negative = top-down rows
-    val bpp = le16(28)
+    val w = c.le32(18).getOrElse(return None).toInt
+    // signed: negative = top-down rows
+    val h = c.le32(22).getOrElse(return None).toInt
+    val bpp = c.le16(28).getOrElse(return None)
     if (w <= 0 || h == 0 || h == Int.MinValue) return None
     if (!Set(1, 4, 8, 16, 24, 32).contains(bpp)) return None
     Some(ImageMeta("bmp", w, math.abs(h), bpp))
@@ -1742,13 +1566,15 @@ object Binary {
   /** ICO: the directory's FIRST image entry (0-byte dim = 256). */
   def parseIcoMeta(b: Array[Byte]): Option[ImageMeta] = {
     if (b == null || b.length < 22) return None
-    def le16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    if (le16(0) != 0 || le16(2) != 1) return None // reserved, type=icon
-    val count = le16(4)
+    val c = ByteCursor(b)
+    // reserved, type=icon
+    if (c.le16(0).getOrElse(return None) != 0 ||
+      c.le16(2).getOrElse(return None) != 1) return None
+    val count = c.le16(4).getOrElse(return None)
     if (count < 1) return None
     val w = if ((b(6) & 0xff) == 0) 256 else b(6) & 0xff
     val h = if ((b(7) & 0xff) == 0) 256 else b(7) & 0xff
-    val bpp = le16(12)
+    val bpp = c.le16(12).getOrElse(return None)
     Some(ImageMeta("ico", w, h, if (bpp == 0) 32 else bpp))
   }
 
@@ -1758,33 +1584,26 @@ object Binary {
     * first sample reported). Cursors Long (unsigned-32 offsets). */
   def parseTiffMeta(b: Array[Byte]): Option[ImageMeta] = {
     if (b == null || b.length < 14) return None
-    val le = b(0) == 'I' && b(1) == 'I'
-    val be = b(0) == 'M' && b(1) == 'M'
-    if (!le && !be) return None
-    def u16(i: Long): Int =
-      if (le) (b(i.toInt) & 0xff) | ((b(i.toInt + 1) & 0xff) << 8)
-      else ((b(i.toInt) & 0xff) << 8) | (b(i.toInt + 1) & 0xff)
-    def u32(i: Long): Long =
-      if (le) u16(i).toLong | (u16(i + 2).toLong << 16)
-      else (u16(i).toLong << 16) | u16(i + 2).toLong
-    if (u16(2) != 42) return None
-    val ifd = u32(4)
-    if (ifd + 2 > b.length) return None
-    val n = u16(ifd)
+    val c = ByteCursor(b)
+    val le = c.tagAt(0, "II")
+    if (!le && !c.tagAt(0, "MM")) return None
+    if (c.uint(2, 2, le).getOrElse(return None) != 42) return None
+    val ifd = c.uint(4, 4, le).getOrElse(return None)
+    val n = c.uint(ifd, 2, le).getOrElse(return None)
     var width = -1L
     var height = -1L
     var depth = 1
     var k = 0
     while (k < n) {
       val e = ifd + 2 + k * 12L
-      if (e + 12 > b.length) return None
-      val tag = u16(e)
-      val typ = u16(e + 2)
-      val cnt = u32(e + 4)
+      if (!c.has(e, 12)) return None
+      val tag = c.uint(e, 2, le).getOrElse(return None)
+      val typ = c.uint(e + 2, 2, le).getOrElse(return None)
+      val cnt = c.uint(e + 4, 4, le).getOrElse(return None)
       // SHORT(3) reads 2 bytes, LONG(4) reads 4 — inline when it fits
-      def inlineVal: Long =
-        if (typ == 3) u16(e + 8).toLong
-        else if (typ == 4) u32(e + 8)
+      val inlineVal =
+        if (typ == 3) c.uint(e + 8, 2, le).getOrElse(return None)
+        else if (typ == 4) c.uint(e + 8, 4, le).getOrElse(return None)
         else -1L
       tag match {
         case 256 => width = inlineVal
@@ -1792,9 +1611,9 @@ object Binary {
         case 258 =>
           if (cnt == 1L) depth = inlineVal.toInt
           else if (typ == 3 && cnt >= 2 && cnt <= 16) {
-            val off = u32(e + 8)
-            if (off + 2 > b.length) return None
-            depth = u16(off) // first sample's bits
+            val off = c.uint(e + 8, 4, le).getOrElse(return None)
+            // first sample's bits
+            depth = c.uint(off, 2, le).getOrElse(return None).toInt
           } else return None
         case _ => ()
       }
@@ -1808,8 +1627,6 @@ object Binary {
   /** Minimal valid builders for the three legacy formats. */
   def bmpHeader(width: Int, height: Int, bpp: Int,
                 topDown: Boolean = false): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Int) = le16(v & 0xffff) ++ le16(v >>> 16)
     "BM".getBytes("US-ASCII") ++ le32(54) ++ le32(0) ++ le32(54) ++
       le32(40) ++ le32(width) ++ le32(if (topDown) -height else height) ++
       le16(1) ++ le16(bpp) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0) ++
@@ -1818,8 +1635,6 @@ object Binary {
 
   def icoHeader(width: Int, height: Int, bpp: Int,
                 nImages: Int = 1): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Int) = le16(v & 0xffff) ++ le16(v >>> 16)
     val dir = le16(0) ++ le16(1) ++ le16(nImages)
     val entry = Array[Byte](
       (if (width == 256) 0 else width).toByte,
@@ -1830,10 +1645,8 @@ object Binary {
 
   def tiffHeader(width: Int, height: Int, bitsPerSample: Int,
                  bigEndian: Boolean = false): Array[Byte] = {
-    def w16(v: Int) = if (bigEndian) Array[Byte]((v >>> 8).toByte, v.toByte)
-      else Array[Byte](v.toByte, (v >>> 8).toByte)
-    def w32(v: Int) = if (bigEndian) w16(v >>> 16) ++ w16(v & 0xffff)
-      else w16(v & 0xffff) ++ w16(v >>> 16)
+    def w16(v: Int) = ByteCursor.uint(v, 2, !bigEndian)
+    def w32(v: Int) = ByteCursor.uint(v, 4, !bigEndian)
     val order = if (bigEndian) "MM" else "II"
     // IFD at offset 8: 3 entries + next-IFD 0
     def entry(tag: Int, typ: Int, cnt: Int, v: Int): Array[Byte] = {
@@ -1876,9 +1689,6 @@ object Binary {
     parts.foreach(p => c.update(p))
     c.getValue.toInt
   }
-
-  private def pngBe32(v: Int): Array[Byte] = Array[Byte](
-    (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
 
   private def paeth(a: Int, b: Int, c: Int): Int = {
     val p = a + b - c
@@ -1931,9 +1741,9 @@ object Binary {
     val idat = out.toByteArray
     def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
       val t = typ.getBytes("US-ASCII")
-      pngBe32(data.length) ++ t ++ data ++ pngBe32(crc32Of(t, data))
+      be32(data.length) ++ t ++ data ++ be32(crc32Of(t, data))
     }
-    val ihdr = pngBe32(width) ++ pngBe32(height) ++
+    val ihdr = be32(width) ++ be32(height) ++
       Array[Byte](8, 2, 0, 0, 0) // depth 8, truecolor, deflate, adaptive, no interlace
     Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
       chunk("IHDR", ihdr) ++ chunk("IDAT", idat) ++ chunk("IEND", Array.empty)
@@ -1950,35 +1760,32 @@ object Binary {
     * become a negative step).
     */
   def pngDecode(b: Array[Byte]): Option[PngImage] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
-    if (b.length < 8 + 25 || u8(0) != 0x89 || b(1) != 'P' || b(2) != 'N' ||
-        b(3) != 'G') return None
+    val c = ByteCursor(b)
+    if (b.length < 8 + 25 || (b(0) & 0xff) != 0x89 || !c.tagAt(1, "PNG"))
+      return None
     var pos = 8L
     var w = -1; var h = -1
     val idat = new java.io.ByteArrayOutputStream()
     var sawEnd = false
     while (!sawEnd && pos + 8 <= b.length) {
-      val len = be32(pos.toInt)
-      if (len > Int.MaxValue - 12 || pos + 12 + len > b.length) return None
-      val typ = new String(b, pos.toInt + 4, 4, "US-ASCII")
-      val dataOff = pos.toInt + 8
-      val crcStored = be32(dataOff + len.toInt)
-      val c = new java.util.zip.CRC32
-      c.update(b, pos.toInt + 4, 4 + len.toInt)
-      if ((c.getValue & 0xffffffffL) != crcStored) return None
+      val len = c.be32(pos).getOrElse(return None)
+      val typ = c.fourcc(pos + 4).getOrElse(return None)
+      val dataOff = pos + 8
+      val crcStored = c.be32(dataOff + len).getOrElse(return None)
+      val crc = new java.util.zip.CRC32
+      crc.update(b, pos.toInt + 4, 4 + len.toInt) // in range: CRC read above
+      if ((crc.getValue & 0xffffffffL) != crcStored) return None
       typ match {
         case "IHDR" =>
           if (len != 13) return None
-          w = be32(dataOff).toInt; h = be32(dataOff + 4).toInt
-          val (depth, color, comp, filt, inter) = (u8(dataOff + 8),
-            u8(dataOff + 9), u8(dataOff + 10), u8(dataOff + 11), u8(dataOff + 12))
-          if (depth != 8 || color != 2 || comp != 0 || filt != 0 || inter != 0)
+          w = c.be32(dataOff).getOrElse(return None).toInt
+          h = c.be32(dataOff + 4).getOrElse(return None).toInt
+          // depth 8, truecolor, deflate, adaptive filter, no interlace
+          if (!c.tagAt(dataOff + 8, "\u0008\u0002\u0000\u0000\u0000"))
             return None
           if (w <= 0 || h <= 0 || w.toLong * h * 3 > 64L * 1024 * 1024)
             return None
-        case "IDAT" => idat.write(b, dataOff, len.toInt)
+        case "IDAT" => idat.write(b, dataOff.toInt, len.toInt)
         case "IEND" => sawEnd = true
         case _ => () // ancillary chunk: skip
       }
@@ -2150,17 +1957,8 @@ object Binary {
                    samples: Array[Short]): Array[Byte] = {
     require(channels > 0 && samples.length % channels == 0,
       s"samples (${samples.length}) must be a multiple of channels ($channels)")
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val blockAlign = channels * 2
-    val data = new Array[Byte](samples.length * 2)
-    var i = 0
-    while (i < samples.length) {
-      data(2 * i) = samples(i).toByte
-      data(2 * i + 1) = (samples(i) >> 8).toByte
-      i += 1
-    }
+    val data = samples.flatMap(s => le16(s.toLong))
     val fmt = "fmt ".getBytes("US-ASCII") ++ le32(16) ++ le16(1) ++
       le16(channels) ++ le32(sampleRate.toLong) ++
       le32(sampleRate.toLong * blockAlign) ++ le16(blockAlign) ++ le16(16)
@@ -2186,30 +1984,25 @@ object Binary {
     * byte-walk discipline.
     */
   def wavPcmDecode(b: Array[Byte]): Option[WavPcm] = {
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le16(i: Long): Int = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    def fourcc(i: Long): String =
-      new String(b, i.toInt, 4, "US-ASCII")
+    val c = ByteCursor(b)
     val n = b.length.toLong
-    if (n < 44 || fourcc(0) != "RIFF" || fourcc(8) != "WAVE") return None
-    val riffEnd = math.min(n, 8L + le32(4))
+    if (n < 44 || !c.tagAt(0, "RIFF") || !c.tagAt(8, "WAVE")) return None
+    val riffEnd = math.min(n, 8L + c.le32(4).getOrElse(return None))
     var pos = 12L
     var rate = -1; var ch = -1; var bits = -1; var fmtOk = false
     var dataOff = -1L; var dataLen = -1L
     while (pos + 8 <= riffEnd) {
-      val id = fourcc(pos)
-      val len = le32(pos + 4)
+      val id = c.fourcc(pos).getOrElse(return None)
+      val len = c.le32(pos + 4).getOrElse(return None)
       val body = pos + 8
       if (body + len > n) return None
       id match {
         case "fmt " =>
           if (len < 16) return None
-          val tag = le16(body)
-          ch = le16(body + 2)
-          rate = le32(body + 4).toInt
-          bits = le16(body + 14)
+          val tag = c.le16(body).getOrElse(return None)
+          ch = c.le16(body + 2).getOrElse(return None)
+          rate = c.le32(body + 4).getOrElse(return None).toInt
+          bits = c.le16(body + 14).getOrElse(return None)
           fmtOk = tag == 1 // PCM only; float (3) / ADPCM (2) unsupported
         case "data" => dataOff = body; dataLen = len
         case _ => () // LIST/fact/cue: ancillary, skip
@@ -2219,13 +2012,10 @@ object Binary {
     if (!fmtOk || rate <= 0 || ch <= 0 || bits != 16 || dataOff < 0)
       return None
     if (dataLen % (2L * ch) != 0 || dataLen > 64L * 1024 * 1024) return None
-    val cnt = (dataLen / 2).toInt
-    val out = new Array[Short](cnt)
-    var i = 0
-    while (i < cnt) {
-      out(i) = le16(dataOff + 2L * i).toShort
-      i += 1
-    }
+    val pcm = c.bytes(dataOff, dataLen).getOrElse(return None)
+    val out = new Array[Short]((dataLen / 2).toInt)
+    java.nio.ByteBuffer.wrap(pcm).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .asShortBuffer().get(out) // int16 LE samples
     Some(WavPcm(rate, ch, out))
   }
 
@@ -2429,10 +2219,8 @@ object Binary {
     val gctBits = 32 - Integer.numberOfLeadingZeros(palette.length - 1)
     require(palette.length == (1 << gctBits) && gctBits >= 1 && gctBits <= 8,
       s"palette size ${palette.length} must be a power of two in [2,256]")
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
     val minCode = math.max(2, gctBits)
-    val gct = palette.flatMap(p => Array[Byte](
-      (p >>> 16).toByte, (p >>> 8).toByte, p.toByte))
+    val gct = palette.flatMap(p => be24(p.toLong))
     val lzw = lzwEncode(indices, minCode)
     val sub = new java.io.ByteArrayOutputStream()
     var off = 0
@@ -2463,57 +2251,52 @@ object Binary {
     * sub-frames return None rather than junk pixels.
     */
   def gifDecode(b: Array[Byte]): Option[GifImage] = {
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le16(i: Long): Int = u8(i) | (u8(i + 1) << 8)
+    val c = ByteCursor(b)
     val n = b.length.toLong
     if (n < 14) return None
-    val magic = new String(b, 0, 6, "US-ASCII")
-    if (magic != "GIF87a" && magic != "GIF89a") return None
-    val w = le16(6); val h = le16(8)
-    val packed = u8(10)
+    if (!c.tagAt(0, "GIF87a") && !c.tagAt(0, "GIF89a")) return None
+    val w = c.le16(6).getOrElse(return None)
+    val h = c.le16(8).getOrElse(return None)
+    val packed = b(10) & 0xff
     if ((packed & 0x80) == 0) return None // GCT required in this profile
     val gctSize = 2 << (packed & 7)
     var pos = 13L
-    if (pos + gctSize * 3L > n) return None
     val palette = new Array[Int](gctSize)
     var j = 0
     while (j < gctSize) {
-      palette(j) = (u8(pos + 3L * j) << 16) | (u8(pos + 3L * j + 1) << 8) |
-        u8(pos + 3L * j + 2)
+      palette(j) = c.be(pos + 3L * j, 3).getOrElse(return None).toInt
       j += 1
     }
     pos += gctSize * 3L
     if (w <= 0 || h <= 0 || w.toLong * h > 64L * 1024 * 1024) return None
     while (pos < n) {
-      u8(pos) match {
+      (b(pos.toInt) & 0xff) match {
         case 0x21 => // extension: introducer + label, then sub-blocks
           pos += 2
-          var bs = if (pos < n) u8(pos) else return None
+          var bs = c.u8(pos).getOrElse(return None)
           while (bs != 0) {
             pos += 1 + bs
-            if (pos >= n) return None
-            bs = u8(pos)
+            bs = c.u8(pos).getOrElse(return None)
           }
           pos += 1
         case 0x2c => // image descriptor
-          if (pos + 10 > n) return None
-          val left = le16(pos + 1); val top = le16(pos + 3)
-          val iw = le16(pos + 5); val ih = le16(pos + 7)
-          val ip = u8(pos + 9)
+          val left = c.le16(pos + 1).getOrElse(return None)
+          val top = c.le16(pos + 3).getOrElse(return None)
+          val iw = c.le16(pos + 5).getOrElse(return None)
+          val ih = c.le16(pos + 7).getOrElse(return None)
+          val ip = c.u8(pos + 9).getOrElse(return None)
           if (left != 0 || top != 0 || iw != w || ih != h) return None
           if ((ip & 0x80) != 0 || (ip & 0x40) != 0) return None // LCT/interlace
           pos += 10
-          if (pos >= n) return None
-          val minCode = u8(pos)
+          val minCode = c.u8(pos).getOrElse(return None)
           pos += 1
           val lzw = new java.io.ByteArrayOutputStream()
-          var bs = if (pos < n) u8(pos) else return None
+          var bs = c.u8(pos).getOrElse(return None)
           while (bs != 0) {
             if (pos + 1 + bs > n) return None
             lzw.write(b, pos.toInt + 1, bs)
             pos += 1 + bs
-            if (pos >= n) return None
-            bs = u8(pos)
+            bs = c.u8(pos).getOrElse(return None)
           }
           val idx = lzwDecode(lzw.toByteArray, minCode, w * h) match {
             case Some(x) => x
@@ -2762,7 +2545,6 @@ object Binary {
       s"need ${bw * bh} blocks, got ${blocks.length}")
     require(blocks.forall(blk => blk.length == 64 &&
       blk.forall(c => c > -1024 && c < 1024)), "coef category must be <= 10")
-    def be16(v: Int) = Array[Byte]((v >>> 8).toByte, v.toByte)
     def seg(marker: Int, body: Array[Byte]): Array[Byte] =
       Array[Byte](0xff.toByte, marker.toByte) ++ be16(body.length + 2) ++ body
     val app0 = seg(0xe0, "JFIF".getBytes("US-ASCII") ++
@@ -2850,10 +2632,9 @@ object Binary {
     * overruns.
     */
   def jpegDecode(b: Array[Byte]): Option[JpegImage] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
+    val cur = ByteCursor(b)
     val n = b.length
-    if (n < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
+    if (n < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
     var i = 2
     var w = -1; var h = -1
     val quant = new Array[Array[Int]](4)
@@ -2863,10 +2644,10 @@ object Binary {
     var restartInt = 0
     var segments: Array[Array[Byte]] = null
     while (segments == null) {
-      if (i + 4 > n || u8(i) != 0xff) return None
-      val m = u8(i + 1)
+      if (i + 4 > n || (b(i) & 0xff) != 0xff) return None
+      val m = b(i + 1) & 0xff
       if (m == 0xd9) return None // EOI before scan data
-      val len = be16(i + 2)
+      val len = cur.be16(i + 2).getOrElse(return None)
       val body = i + 4
       if (body + len - 2 > n || len < 2) return None
       m match {
@@ -2874,18 +2655,18 @@ object Binary {
           val segEnd = body + len - 2
           var p = body
           while (p < segEnd) {
-            val pq = u8(p) >> 4; val tq = u8(p) & 0x0f
+            val pq = (b(p) & 0xff) >> 4; val tq = b(p) & 0x0f
             if (pq != 0 || tq > 3 || p + 65 > segEnd) return None
-            quant(tq) = Array.tabulate(64)(k => u8(p + 1 + k))
+            quant(tq) = Array.tabulate(64)(k => b(p + 1 + k) & 0xff)
             p += 65
           }
         case 0xc4 => // DHT: one or more tables
           val segEnd = body + len - 2
           var p = body
           while (p < segEnd) {
-            val tc = u8(p) >> 4; val th = u8(p) & 0x0f
+            val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
             if (tc > 1 || th > 3 || p + 17 > segEnd) return None
-            val bits = Array.tabulate(16)(k => u8(p + 1 + k))
+            val bits = Array.tabulate(16)(k => b(p + 1 + k) & 0xff)
             val total = bits.sum
             if (total > 256 || p + 17 + total > segEnd) return None
             val vals = Array.tabulate(total)(k => b(p + 17 + k))
@@ -2894,20 +2675,21 @@ object Binary {
             p += 17 + total
           }
         case 0xc0 => // SOF0 baseline
-          if (len < 11 || u8(body) != 8) return None
-          h = be16(body + 1); w = be16(body + 3)
-          if (u8(body + 5) != 1) return None // grayscale profile only
-          if (u8(body + 7) != 0x11) return None // no subsampling
-          qSel = u8(body + 8)
+          if (len < 11 || (b(body) & 0xff) != 8) return None
+          h = cur.be16(body + 1).getOrElse(return None)
+          w = cur.be16(body + 3).getOrElse(return None)
+          if ((b(body + 5) & 0xff) != 1) return None // grayscale profile only
+          if ((b(body + 7) & 0xff) != 0x11) return None // no subsampling
+          qSel = b(body + 8) & 0xff
         case 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
              0xcb | 0xcd | 0xce | 0xcf =>
           return None // extended/progressive/arithmetic: not baseline
         case 0xdd => // DRI: restart interval in MCUs (= blocks here)
           if (len != 4) return None
-          restartInt = be16(body)
+          restartInt = cur.be16(body).getOrElse(return None)
         case 0xda => // SOS: header then entropy data (split at RSTn) to EOI
-          if (len < 8 || u8(body) != 1) return None
-          dcSel = u8(body + 2) >> 4; acSel = u8(body + 2) & 0x0f
+          if (len < 8 || (b(body) & 0xff) != 1) return None
+          dcSel = (b(body + 2) & 0xff) >> 4; acSel = b(body + 2) & 0x0f
           var p = body + len - 2
           val segs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
           var raw = new java.io.ByteArrayOutputStream()
@@ -2915,16 +2697,16 @@ object Binary {
           var nRst = 0
           while (end < 0) {
             if (p >= n) return None
-            val c = u8(p)
+            val c = b(p) & 0xff
             if (c != 0xff) { raw.write(c); p += 1 }
-            else if (p + 1 < n && u8(p + 1) == 0x00) { raw.write(0xff); p += 2 }
-            else if (p + 1 < n && u8(p + 1) == 0xd9) end = p
-            else if (p + 1 < n && (u8(p + 1) & 0xf8) == 0xd0) {
+            else if (p + 1 < n && b(p + 1) == 0) { raw.write(0xff); p += 2 }
+            else if (p + 1 < n && (b(p + 1) & 0xff) == 0xd9) end = p
+            else if (p + 1 < n && (b(p + 1) & 0xf8) == 0xd0) {
               // RSTn: valid only under a declared interval, and the
               // 3-bit sequence number must cycle in order — an
               // out-of-sequence marker means dropped data, not junk out
               if (restartInt == 0) return None
-              if ((u8(p + 1) & 0x07) != (nRst % 8)) return None
+              if ((b(p + 1) & 0x07) != (nRst % 8)) return None
               segs += raw.toByteArray
               raw = new java.io.ByteArrayOutputStream()
               nRst += 1; p += 2
@@ -3139,7 +2921,6 @@ object Binary {
     require((yBlocks ++ cbBlocks ++ crBlocks).forall(blk =>
       blk.length == 64 && blk.forall(c => c > -1024 && c < 1024)),
       "coef category must be <= 10")
-    def be16(v: Int) = Array[Byte]((v >>> 8).toByte, v.toByte)
     def seg(marker: Int, body: Array[Byte]): Array[Byte] =
       Array[Byte](0xff.toByte, marker.toByte) ++ be16(body.length + 2) ++ body
     val app0 = seg(0xe0, "JFIF".getBytes("US-ASCII") ++
@@ -3223,10 +3004,9 @@ object Binary {
     * oracles.
     */
   def jpegDecodeColor420(b: Array[Byte]): Option[JpegYCbCr] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
+    val cur = ByteCursor(b)
     val n = b.length
-    if (n < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
+    if (n < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
     var i = 2
     var w = -1; var h = -1
     val quant = new Array[Array[Int]](4)
@@ -3237,10 +3017,10 @@ object Binary {
     val acSel = new Array[Int](3)
     var entropy: Array[Byte] = null
     while (entropy == null) {
-      if (i + 4 > n || u8(i) != 0xff) return None
-      val m = u8(i + 1)
+      if (i + 4 > n || (b(i) & 0xff) != 0xff) return None
+      val m = b(i + 1) & 0xff
       if (m == 0xd9) return None
-      val len = be16(i + 2)
+      val len = cur.be16(i + 2).getOrElse(return None)
       val body = i + 4
       if (body + len - 2 > n || len < 2) return None
       m match {
@@ -3248,18 +3028,18 @@ object Binary {
           val segEnd = body + len - 2
           var p = body
           while (p < segEnd) {
-            val pq = u8(p) >> 4; val tq = u8(p) & 0x0f
+            val pq = (b(p) & 0xff) >> 4; val tq = b(p) & 0x0f
             if (pq != 0 || tq > 3 || p + 65 > segEnd) return None
-            quant(tq) = Array.tabulate(64)(k => u8(p + 1 + k))
+            quant(tq) = Array.tabulate(64)(k => b(p + 1 + k) & 0xff)
             p += 65
           }
         case 0xc4 =>
           val segEnd = body + len - 2
           var p = body
           while (p < segEnd) {
-            val tc = u8(p) >> 4; val th = u8(p) & 0x0f
+            val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
             if (tc > 1 || th > 3 || p + 17 > segEnd) return None
-            val bits = Array.tabulate(16)(k => u8(p + 1 + k))
+            val bits = Array.tabulate(16)(k => b(p + 1 + k) & 0xff)
             val total = bits.sum
             if (total > 256 || p + 17 + total > segEnd) return None
             val vals = Array.tabulate(total)(k => b(p + 17 + k))
@@ -3268,17 +3048,18 @@ object Binary {
             p += 17 + total
           }
         case 0xc0 =>
-          if (len < 17 || u8(body) != 8) return None
-          h = be16(body + 1); w = be16(body + 3)
-          if (u8(body + 5) != 3) return None // color profile only here
+          if (len < 17 || (b(body) & 0xff) != 8) return None
+          h = cur.be16(body + 1).getOrElse(return None)
+          w = cur.be16(body + 3).getOrElse(return None)
+          if ((b(body + 5) & 0xff) != 3) return None // color profile only here
           var c = 0
           while (c < 3) {
-            val cid = u8(body + 6 + 3 * c)
-            val samp = u8(body + 7 + 3 * c)
+            val cid = b(body + 6 + 3 * c) & 0xff
+            val samp = b(body + 7 + 3 * c) & 0xff
             if (cid != c + 1) return None
             if (c == 0 && samp != 0x22) return None
             if (c > 0 && samp != 0x11) return None
-            qSel(c) = u8(body + 8 + 3 * c)
+            qSel(c) = b(body + 8 + 3 * c) & 0xff
             c += 1
           }
         case 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
@@ -3286,12 +3067,12 @@ object Binary {
           return None
         case 0xdd => return None
         case 0xda =>
-          if (len < 12 || u8(body) != 3) return None
+          if (len < 12 || (b(body) & 0xff) != 3) return None
           var c = 0
           while (c < 3) {
-            if (u8(body + 1 + 2 * c) != c + 1) return None
-            dcSel(c) = u8(body + 2 + 2 * c) >> 4
-            acSel(c) = u8(body + 2 + 2 * c) & 0x0f
+            if ((b(body + 1 + 2 * c) & 0xff) != c + 1) return None
+            dcSel(c) = (b(body + 2 + 2 * c) & 0xff) >> 4
+            acSel(c) = b(body + 2 + 2 * c) & 0x0f
             c += 1
           }
           var p = body + len - 2
@@ -3299,10 +3080,10 @@ object Binary {
           var end = -1
           while (end < 0) {
             if (p >= n) return None
-            val cc = u8(p)
+            val cc = b(p) & 0xff
             if (cc != 0xff) { raw.write(cc); p += 1 }
-            else if (p + 1 < n && u8(p + 1) == 0x00) { raw.write(0xff); p += 2 }
-            else if (p + 1 < n && u8(p + 1) == 0xd9) end = p
+            else if (p + 1 < n && b(p + 1) == 0) { raw.write(0xff); p += 2 }
+            else if (p + 1 < n && (b(p + 1) & 0xff) == 0xd9) end = p
             else return None
           }
           entropy = raw.toByteArray
@@ -3522,7 +3303,6 @@ object Binary {
       s"need ${bw * bh} blocks, got ${blocks.length}")
     require(blocks.forall(blk => blk.length == 64 &&
       blk.forall(c => c > -1024 && c < 1024)), "coef category must be <= 10")
-    def be16(v: Int) = Array[Byte]((v >>> 8).toByte, v.toByte)
     def seg(marker: Int, body: Array[Byte]): Array[Byte] =
       Array[Byte](0xff.toByte, marker.toByte) ++ be16(body.length + 2) ++ body
     val app0 = seg(0xe0, "JFIF".getBytes("US-ASCII") ++
@@ -3668,10 +3448,9 @@ object Binary {
     * codes, band violations, or coefficient overruns.
     */
   def jpegDecodeProgressive(b: Array[Byte]): Option[JpegImage] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
+    val cur = ByteCursor(b)
     val n = b.length
-    if (n < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
+    if (n < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
     var i = 2
     var w = -1; var h = -1
     val quant = new Array[Array[Int]](4)
@@ -3683,12 +3462,12 @@ object Binary {
     var sawScan = false
     var done = false
     while (!done) {
-      if (i + 2 > n || u8(i) != 0xff) return None
-      val m = u8(i + 1)
+      if (i + 2 > n || (b(i) & 0xff) != 0xff) return None
+      val m = b(i + 1) & 0xff
       if (m == 0xd9) { done = true } // EOI
       else {
         if (i + 4 > n) return None
-        val len = be16(i + 2)
+        val len = cur.be16(i + 2).getOrElse(return None)
         val body = i + 4
         if (body + len - 2 > n || len < 2) return None
         m match {
@@ -3696,9 +3475,9 @@ object Binary {
             val segEnd = body + len - 2
             var p = body
             while (p < segEnd) {
-              val pq = u8(p) >> 4; val tq = u8(p) & 0x0f
+              val pq = (b(p) & 0xff) >> 4; val tq = b(p) & 0x0f
               if (pq != 0 || tq > 3 || p + 65 > segEnd) return None
-              quant(tq) = Array.tabulate(64)(k => u8(p + 1 + k))
+              quant(tq) = Array.tabulate(64)(k => b(p + 1 + k) & 0xff)
               p += 65
             }
             i = body + len - 2
@@ -3706,9 +3485,9 @@ object Binary {
             val segEnd = body + len - 2
             var p = body
             while (p < segEnd) {
-              val tc = u8(p) >> 4; val th = u8(p) & 0x0f
+              val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
               if (tc > 1 || th > 3 || p + 17 > segEnd) return None
-              val bits = Array.tabulate(16)(k => u8(p + 1 + k))
+              val bits = Array.tabulate(16)(k => b(p + 1 + k) & 0xff)
               val total = bits.sum
               if (total > 256 || p + 17 + total > segEnd) return None
               val vals = Array.tabulate(total)(k => b(p + 17 + k))
@@ -3719,11 +3498,12 @@ object Binary {
             i = body + len - 2
           case 0xc2 => // SOF2 progressive
             if (coefs != null) return None // one frame header only
-            if (len < 11 || u8(body) != 8) return None
-            h = be16(body + 1); w = be16(body + 3)
-            if (u8(body + 5) != 1) return None // grayscale profile only
-            if (u8(body + 7) != 0x11) return None
-            qSel = u8(body + 8)
+            if (len < 11 || (b(body) & 0xff) != 8) return None
+            h = cur.be16(body + 1).getOrElse(return None)
+            w = cur.be16(body + 3).getOrElse(return None)
+            if ((b(body + 5) & 0xff) != 1) return None // grayscale profile only
+            if ((b(body + 7) & 0xff) != 0x11) return None
+            qSel = b(body + 8) & 0xff
             if (qSel > 3) return None
             if (w <= 0 || h <= 0 || w % 8 != 0 || h % 8 != 0) return None
             if (w.toLong * h > 64L * 1024 * 1024) return None
@@ -3736,10 +3516,10 @@ object Binary {
           case 0xdd => return None // DRI unsupported
           case 0xda =>
             if (coefs == null) return None // SOS before SOF2
-            if (len < 8 || u8(body) != 1) return None
-            val dcSel = u8(body + 2) >> 4; val acSel = u8(body + 2) & 0x0f
-            val ss = u8(body + 3); val se = u8(body + 4)
-            val ah = u8(body + 5) >> 4; val al = u8(body + 5) & 0x0f
+            if (len < 8 || (b(body) & 0xff) != 1) return None
+            val dcSel = (b(body + 2) & 0xff) >> 4; val acSel = b(body + 2) & 0x0f
+            val ss = (b(body + 3) & 0xff); val se = b(body + 4) & 0xff
+            val ah = (b(body + 5) & 0xff) >> 4; val al = b(body + 5) & 0x0f
             if (dcSel > 3 || acSel > 3) return None
             // entropy data: unstuff to the next marker
             var p = body + len - 2
@@ -3747,9 +3527,9 @@ object Binary {
             var endMark = -1
             while (endMark < 0) {
               if (p + 1 >= n) return None
-              val c = u8(p)
+              val c = b(p) & 0xff
               if (c != 0xff) { raw.write(c); p += 1 }
-              else if (u8(p + 1) == 0x00) { raw.write(0xff); p += 2 }
+              else if (b(p + 1) == 0) { raw.write(0xff); p += 2 }
               else endMark = p
             }
             if (!decodeProgScan(raw.toByteArray, coefs, nBlocks, ss, se,
@@ -4303,26 +4083,24 @@ object Binary {
   def flacDecode(b: Array[Byte]): Option[FlacAudio] = {
     if (b.length < 42 || b(0) != 'f' || b(1) != 'L' || b(2) != 'a' ||
       b(3) != 'C') return None
-    def u8(i: Int): Int = b(i) & 0xff
+    val cur = ByteCursor(b)
     // metadata walk: STREAMINFO must be first; skip to last block
     var i = 4
     var rate = -1; var ch = -1; var bits = -1; var total = -1L
     var last = false
     var first = true
     while (!last) {
-      if (i + 4 > b.length) return None
-      last = (u8(i) & 0x80) != 0
-      val btype = u8(i) & 0x7f
-      val len = (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
+      // block header: last-flag(1) type(7) length(24, big-endian)
+      val hdr = cur.be32(i).getOrElse(return None)
+      last = (hdr & 0x80000000L) != 0
+      val btype = (hdr >>> 24) & 0x7f
+      val len = (hdr & 0xffffff).toInt
       if (first) {
         if (btype != 0 || len != 34) return None
         val p = i + 4
         if (p + 34 > b.length) return None
-        rate = (u8(p + 10) << 12) | (u8(p + 11) << 4) | (u8(p + 12) >> 4)
-        ch = ((u8(p + 12) >> 1) & 7) + 1
-        bits = (((u8(p + 12) & 1) << 4) | (u8(p + 13) >> 4)) + 1
-        total = ((u8(p + 13) & 0xf).toLong << 32) | (u8(p + 14).toLong << 24) |
-          (u8(p + 15).toLong << 16) | (u8(p + 16).toLong << 8) | u8(p + 17)
+        val info = streamInfo(cur.be64(p + 10).getOrElse(return None))
+        rate = info._1; ch = info._2; bits = info._3; total = info._4
         first = false
       }
       i += 4 + len

@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.sources.ByteCursor
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
@@ -45,55 +47,45 @@ object Ebml {
 
   /** Element ID at `i`: marker bits KEPT, 4-byte cap (Matroska IDs
     * are at most class D). Returns (id, lenBytes). */
-  private def readId(b: Array[Byte], i: Long): Option[(Long, Int)] = {
-    if (i + 1 > b.length) return None
-    val len = vintLen(b(i.toInt) & 0xff)
-    if (len < 1 || len > 4 || i + len > b.length) return None
-    var v = 0L
-    var k = 0
-    while (k < len) { v = (v << 8) | (b((i + k).toInt) & 0xffL); k += 1 }
-    Some((v, len))
+  private def readId(c: ByteCursor, i: Long): Option[(Long, Int)] = {
+    val len = vintLen(c.u8(i).getOrElse(return None))
+    if (len < 1 || len > 4) None else c.be(i, len).map(v => (v, len))
   }
 
   /** Data size at `i`: marker bit stripped. Returns (size, lenBytes,
     * unknown) where unknown = the all-ones reserved value. */
-  private def readSize(b: Array[Byte], i: Long): Option[(Long, Int, Boolean)] = {
-    if (i + 1 > b.length) return None
-    val first = b(i.toInt) & 0xff
-    val len = vintLen(first)
-    if (len < 1 || i + len > b.length) return None
-    var v = (first & (0xff >>> len)).toLong
-    var k = 1
-    while (k < len) { v = (v << 8) | (b((i + k).toInt) & 0xffL); k += 1 }
+  private def readSize(c: ByteCursor, i: Long): Option[(Long, Int, Boolean)] = {
+    val len = vintLen(c.u8(i).getOrElse(return None))
+    if (len < 1) return None
+    // the big-endian value with the length-marker bits stripped
+    val v = c.be(i, len).getOrElse(return None) & ((1L << (7 * len)) - 1)
     val unknown = v == (1L << (7 * len)) - 1
     Some((v, len, unknown))
   }
 
-  private def uint(b: Array[Byte], from: Long, size: Long): Long = {
-    var v = 0L
-    var k = 0L
-    while (k < size && k < 8) { v = (v << 8) | (b((from + k).toInt) & 0xffL); k += 1 }
-    v
-  }
+  /** Big-endian unsigned element body (first 8 bytes of a longer one). */
+  private def uintEl(c: ByteCursor, from: Long, size: Long): Option[Long] =
+    c.be(from, size.min(8L).toInt)
 
-  private def float(b: Array[Byte], from: Long, size: Long): Option[Double] =
+  private def float(c: ByteCursor, from: Long, size: Long): Option[Double] =
     size match {
-      case 4 => Some(java.lang.Float.intBitsToFloat(uint(b, from, 4).toInt)
-        .toDouble)
-      case 8 => Some(java.lang.Double.longBitsToDouble(uint(b, from, 8)))
+      case 4 => c.be32(from).map(v =>
+        java.lang.Float.intBitsToFloat(v.toInt).toDouble)
+      case 8 => c.be64(from).map(java.lang.Double.longBitsToDouble)
       case _ => None
     }
 
   def parseMkv(b: Array[Byte]): Option[MkvMeta] = {
     if (b == null || b.length < 8) return None
     val n = b.length.toLong
+    val c = ByteCursor(b)
     // run `f` over the (id, dataStart, dataEnd) children of [from, hi)
     def children(from: Long, hi: Long)(
         f: (Long, Long, Long) => Unit): Boolean = {
       var i = from
       while (i < hi) {
-        val (id, idLen) = readId(b, i).getOrElse(return false)
-        val (sz, szLen, unk) = readSize(b, i + idLen).getOrElse(return false)
+        val (id, idLen) = readId(c, i).getOrElse(return false)
+        val (sz, szLen, unk) = readSize(c, i + idLen).getOrElse(return false)
         val ds = i + idLen + szLen
         if (unk) return false // unknown size only for the Segment
         if (ds + sz > hi) return false
@@ -103,9 +95,9 @@ object Ebml {
       true
     }
     // top level: EBML header then Segment
-    val (hid, hidLen) = readId(b, 0).getOrElse(return None)
+    val (hid, hidLen) = readId(c, 0).getOrElse(return None)
     if (hid != IdEbml) return None
-    val (hsz, hszLen, hunk) = readSize(b, hidLen).getOrElse(return None)
+    val (hsz, hszLen, hunk) = readSize(c, hidLen).getOrElse(return None)
     if (hunk) return None
     val hStart = hidLen.toLong + hszLen
     if (hStart + hsz > n) return None
@@ -117,10 +109,10 @@ object Ebml {
     }) return None
     // Segment
     val segAt = hStart + hsz
-    val (sid, sidLen) = readId(b, segAt).getOrElse(return None)
+    val (sid, sidLen) = readId(c, segAt).getOrElse(return None)
     if (sid != IdSegment) return None
     val (ssz, sszLen, sunk) =
-      readSize(b, segAt + sidLen).getOrElse(return None)
+      readSize(c, segAt + sidLen).getOrElse(return None)
     val segStart = segAt + sidLen + sszLen
     val segEnd = if (sunk) n else segStart + ssz // streaming: to-EOF
     if (segEnd > n) return None
@@ -132,9 +124,10 @@ object Ebml {
     if (!children(segStart, segEnd) { (id, ds, de) =>
       if (id == IdInfo) {
         if (!children(ds, de) { (cid, cds, cde) =>
-          if (cid == IdTimestampScale) timescale = uint(b, cds, cde - cds)
+          if (cid == IdTimestampScale)
+            timescale = uintEl(c, cds, cde - cds).getOrElse(-1L)
           else if (cid == IdDuration)
-            float(b, cds, cde - cds) match {
+            float(c, cds, cde - cds) match {
               case Some(d) => duration = d
               case None => ok = false
             }
@@ -144,7 +137,8 @@ object Ebml {
           if (cid == IdTrackEntry) {
             var ty = -1L; var codec = ""
             if (!children(cds, cde) { (tid, tds, tde) =>
-              if (tid == IdTrackType) ty = uint(b, tds, tde - tds)
+              if (tid == IdTrackType)
+                ty = uintEl(c, tds, tde - tds).getOrElse(-1L)
               else if (tid == IdCodecId)
                 codec = new String(b.slice(tds.toInt, tde.toInt),
                   "US-ASCII").takeWhile(_ != '\u0000')
@@ -174,27 +168,17 @@ object Ebml {
   /** Minimal VINT size encoding (1-4 bytes). */
   private def vint(v: Long): Array[Byte] = {
     require(v >= 0 && v < (1L << 28) - 1)
-    if (v < 0x7f) Array((0x80 | v).toByte)
-    else if (v < 0x3fff) Array((0x40 | (v >> 8)).toByte, v.toByte)
-    else if (v < 0x1fffff)
-      Array((0x20 | (v >> 16)).toByte, (v >> 8).toByte, v.toByte)
-    else Array((0x10 | (v >> 24)).toByte, (v >> 16).toByte,
-      (v >> 8).toByte, v.toByte)
+    val len = if (v < 0x7f) 1 else if (v < 0x3fff) 2
+      else if (v < 0x1fffff) 3 else 4
+    ByteCursor.be(v | (1L << (7 * len)), len) // length-marker bit on top
   }
 
-  private def idBytes(id: Long): Array[Byte] = {
-    val len = if (id <= 0xff) 1 else if (id <= 0xffff) 2
-      else if (id <= 0xffffff) 3 else 4
-    (0 until len).map(k => ((id >> (8 * (len - 1 - k))) & 0xff).toByte)
-      .toArray
-  }
+  private def idBytes(id: Long): Array[Byte] =
+    ByteCursor.be(id, if (id <= 0xff) 1 else if (id <= 0xffff) 2
+      else if (id <= 0xffffff) 3 else 4)
 
   private def el(id: Long, payload: Array[Byte]): Array[Byte] =
     idBytes(id) ++ vint(payload.length.toLong) ++ payload
-
-  private def uintBytes(v: Long, size: Int): Array[Byte] =
-    (0 until size).map(k => ((v >> (8 * (size - 1 - k))) & 0xff).toByte)
-      .toArray
 
   /** Deterministic per-id Matroska/WebM: doctype+timescale alternate
     * by parity, Duration is float32 (float64 every 4th id),
@@ -204,17 +188,17 @@ object Ebml {
   def synthMkv(id: Long): Array[Byte] = {
     val web = id % 2 == 1
     val header = el(IdEbml,
-      el(0x4286, uintBytes(1, 1)) ++ // EBMLVersion
+      el(0x4286, ByteCursor.be(1, 1)) ++ // EBMLVersion
         el(IdDocType,
           (if (web) "webm" else "matroska").getBytes("US-ASCII")))
     val scale = if (web) 500000L else 1000000L
     val durUnits = (id % 10 + 1).toDouble * 1000.0 * (if (web) 4 else 1)
     val durBytes = if (id % 4 == 0)
-      uintBytes(java.lang.Double.doubleToLongBits(durUnits), 8)
-    else uintBytes(
+      ByteCursor.be(java.lang.Double.doubleToLongBits(durUnits), 8)
+    else ByteCursor.be(
       java.lang.Float.floatToIntBits(durUnits.toFloat).toLong, 4)
     val info = el(IdInfo,
-      el(IdTimestampScale, uintBytes(scale, 3)) ++
+      el(IdTimestampScale, ByteCursor.be(scale, 3)) ++
         el(IdDuration, durBytes))
     val nTracks = (id % 3 + 1).toInt
     val tracks = el(IdTracks,
@@ -226,8 +210,8 @@ object Ebml {
           case _ => "S_TEXT/UTF8"
         }
         el(IdTrackEntry,
-          el(0xD7, uintBytes(t + 1L, 1)) ++ // TrackNumber
-            el(IdTrackType, uintBytes(ty, 1)) ++
+          el(0xD7, ByteCursor.be(t + 1L, 1)) ++ // TrackNumber
+            el(IdTrackType, ByteCursor.be(ty, 1)) ++
             el(IdCodecId, codec.getBytes("US-ASCII")))
       }.toArray)
     val voidEl = el(0xEC, Array.fill(5)(0.toByte))

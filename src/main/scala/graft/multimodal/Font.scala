@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import graft.sources.ByteCursor
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
@@ -31,15 +33,13 @@ object Font {
 
   def parseFont(b: Array[Byte]): Option[FontMeta] = {
     if (b == null || b.length < 12) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def u16(i: Long): Int = (u8(i) << 8) | u8(i + 1)
-    def u32(i: Long): Long = (u16(i).toLong << 16) | u16(i + 2)
+    val c = ByteCursor(b)
     val n = b.length.toLong
-    val ver = u32(0)
+    val ver = c.be32(0).getOrElse(return None)
     val format = if (ver == 0x00010000L) "ttf"
       else if (ver == 0x4F54544FL) "otf" // 'OTTO'
       else return None
-    val numTables = u16(4)
+    val numTables = c.be16(4).getOrElse(return None)
     if (numTables < 1 || numTables > 512) return None
     if (12L + 16L * numTables > n) return None
     var nameAt = -1L; var nameLen = 0L
@@ -48,9 +48,9 @@ object Font {
     var t = 0
     while (t < numTables) {
       val rec = 12L + 16L * t
-      val tag = new String(b.slice(rec.toInt, rec.toInt + 4), "US-ASCII")
-      val off = u32(rec + 8)
-      val len = u32(rec + 12)
+      val tag = c.fourcc(rec).getOrElse(return None)
+      val off = c.be32(rec + 8).getOrElse(return None)
+      val len = c.be32(rec + 12).getOrElse(return None)
       if (off < 0 || len < 0 || off + len > n) return None
       tag match {
         case "name" => nameAt = off; nameLen = len
@@ -61,22 +61,23 @@ object Font {
       t += 1
     }
     if (headAt < 0 || headLen < 54) return None
-    if (u32(headAt + 12) != 0x5F0F3CF5L) return None // head magic
-    val unitsPerEm = u16(headAt + 18)
+    // head magic
+    if (c.be32(headAt + 12).getOrElse(return None) != 0x5F0F3CF5L) return None
+    val unitsPerEm = c.be16(headAt + 18).getOrElse(return None)
     if (maxpAt < 0 || maxpLen < 6) return None
-    val nGlyphs = u16(maxpAt + 4)
+    val nGlyphs = c.be16(maxpAt + 4).getOrElse(return None)
     var family = ""; var subfamily = ""
     var famPlat = -1; var subPlat = -1
     if (nameAt >= 0 && nameLen >= 6) {
-      val count = u16(nameAt + 2)
-      val strBase = nameAt + u16(nameAt + 4)
+      val count = c.be16(nameAt + 2).getOrElse(return None)
+      val strBase = nameAt + c.be16(nameAt + 4).getOrElse(return None)
       var r = 0
       while (r < count && nameAt + 6 + 12L * (r + 1) <= nameAt + nameLen) {
         val rec = nameAt + 6 + 12L * r
-        val plat = u16(rec)
-        val nameId = u16(rec + 6)
-        val len = u16(rec + 8)
-        val off = strBase + u16(rec + 10)
+        val plat = c.be16(rec).getOrElse(return None)
+        val nameId = c.be16(rec + 6).getOrElse(return None)
+        val len = c.be16(rec + 8).getOrElse(return None)
+        val off = strBase + c.be16(rec + 10).getOrElse(return None)
         if ((nameId == 1 || nameId == 2) && off + len <= n &&
           (plat == 1 || plat == 3)) {
           val value =
@@ -97,10 +98,7 @@ object Font {
 
   // ---- fixture ------------------------------------------------------ //
 
-  private def be16(v: Int): Array[Byte] =
-    Array((v >>> 8).toByte, v.toByte)
-  private def be32(v: Long): Array[Byte] =
-    Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
+  import ByteCursor.{be16, be32}
 
   /** Deterministic per-id sfnt with head/maxp/name: format alternates
     * ttf/otf, the name table carries BOTH a Mac (decoy) and a Windows
@@ -108,6 +106,25 @@ object Font {
     * Regular/Bold/Italic. Checksums are zero — the parser must not
     * care. */
   def synthFont(id: Long): Array[Byte] = {
+    val (flavor, tables) = sfntTables(id)
+    val headerLen = 12 + 16 * tables.length
+    var off = headerLen
+    val dir = new java.io.ByteArrayOutputStream()
+    dir.write(be32(flavor))
+    dir.write(be16(tables.length)); dir.write(be16(0))
+    dir.write(be16(0)); dir.write(be16(0))
+    tables.foreach { case (tag, data) =>
+      dir.write(tag.getBytes("US-ASCII"))
+      dir.write(be32(0)) // checksum: deliberately wrong
+      dir.write(be32(off)); dir.write(be32(data.length))
+      off += data.length
+    }
+    tables.foreach { case (_, data) => dir.write(data) }
+    dir.toByteArray
+  }
+
+  /** [[synthFont]]'s sfnt flavor and (tag, table) list. */
+  private def sfntTables(id: Long): (Long, Seq[(String, Array[Byte])]) = {
     val d = id % 10
     val otf = id % 4 == 3
     val family = s"Graft Sans $d"
@@ -134,21 +151,8 @@ object Font {
         be16(winSub.length) ++ be16(macFam.length + winFam.length)
     val name = be16(0) ++ be16(3) ++ be16(6 + recs.length) ++
       recs ++ strings
-    val tables = Seq(("head", head), ("maxp", maxp), ("name", name))
-    val headerLen = 12 + 16 * tables.length
-    var off = headerLen
-    val dir = new java.io.ByteArrayOutputStream()
-    dir.write(be32(if (otf) 0x4F54544FL else 0x00010000L))
-    dir.write(be16(tables.length)); dir.write(be16(0))
-    dir.write(be16(0)); dir.write(be16(0))
-    tables.foreach { case (tag, data) =>
-      dir.write(tag.getBytes("US-ASCII"))
-      dir.write(be32(0)) // checksum: deliberately wrong
-      dir.write(be32(off)); dir.write(be32(data.length))
-      off += data.length
-    }
-    tables.foreach { case (_, data) => dir.write(data) }
-    dir.toByteArray
+    (if (otf) 0x4F54544FL else 0x00010000L,
+      Seq(("head", head), ("maxp", maxp), ("name", name)))
   }
 
   // ---- WOFF1 --------------------------------------------------------- //
@@ -162,21 +166,19 @@ object Font {
     * documented codec-table boundary.) */
   def parseWoff(b: Array[Byte]): Option[FontMeta] = {
     if (b == null || b.length < 44) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def u16(i: Long): Int = (u8(i) << 8) | u8(i + 1)
-    def u32(i: Long): Long = (u16(i).toLong << 16) | u16(i + 2)
-    if (u32(0) != 0x774F4646L) return None // 'wOFF'
-    val flavor = u32(4)
-    val numTables = u16(12)
+    val c = ByteCursor(b)
+    if (c.be32(0).getOrElse(return None) != 0x774F4646L) return None // 'wOFF'
+    val flavor = c.be32(4).getOrElse(return None)
+    val numTables = c.be16(12).getOrElse(return None)
     if (numTables < 1 || numTables > 512) return None
     if (44L + 20L * numTables > b.length) return None
     val n = b.length.toLong
     val entries = (0 until numTables).map { t =>
       val rec = 44L + 20L * t
       val tag = b.slice(rec.toInt, rec.toInt + 4)
-      val off = u32(rec + 4)
-      val compLen = u32(rec + 8)
-      val origLen = u32(rec + 12)
+      val off = c.be32(rec + 4).getOrElse(return None)
+      val compLen = c.be32(rec + 8).getOrElse(return None)
+      val origLen = c.be32(rec + 12).getOrElse(return None)
       if (off < 0 || compLen < 0 || off + compLen > n) return None
       if (origLen < 0 || origLen > (1 << 24)) return None
       val raw = b.slice(off.toInt, (off + compLen).toInt)
@@ -206,18 +208,10 @@ object Font {
     * every second table stored uncompressed (compLength == origLength)
     * to pin both directory paths. */
   def synthWoff(id: Long): Array[Byte] = {
-    val sfnt = synthFont(id)
-    def u16(i: Int): Int = ((sfnt(i) & 0xff) << 8) | (sfnt(i + 1) & 0xff)
-    def u32(i: Int): Long = (u16(i).toLong << 16) | u16(i + 2)
-    val numTables = u16(4)
-    val flavor = u32(0)
-    val tables = (0 until numTables).map { t =>
-      val rec = 12 + 16 * t
-      val tag = sfnt.slice(rec, rec + 4)
-      val off = u32(rec + 8).toInt
-      val len = u32(rec + 12).toInt
-      (tag, sfnt.slice(off, off + len))
-    }
+    val (flavor, named) = sfntTables(id)
+    val tables =
+      named.map { case (tag, data) => (tag.getBytes("US-ASCII"), data) }
+    val numTables = tables.length
     val parts = tables.zipWithIndex.map { case ((tag, data), t) =>
       if (t % 2 == (id % 2).toInt) (tag, data, data.length) // stored
       else {

@@ -39,13 +39,6 @@ object Archives {
   final case class TarEntry(name: String, size: Long, type_flag: String,
                             text: String)
 
-  private def u16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], i: Int): Long =
-    (u16(b, i).toLong) | (u16(b, i + 2).toLong << 16)
-  private def u64(b: Array[Byte], i: Int): Long =
-    u32(b, i) | (u32(b, i + 4) << 32)
-
   /** Central-directory ZIP parse, classic AND ZIP64 (since r14: the
     * EOCD's 0xFFFF/0xFFFFFFFF sentinels route through the ZIP64 EOCD
     * locator to the 64-bit record, and per-entry sentinels resolve
@@ -56,6 +49,7 @@ object Archives {
     * (encryption, methods other than stored/deflate). */
   def parseZip(b: Array[Byte]): Option[Seq[ZipEntry]] = {
     if (b == null || b.length < 22) return None
+    val c = ByteCursor(b)
     // EOCD: signature PK\5\6, comment may pad up to 64 KiB
     var eocd = -1
     var i = b.length - 22
@@ -66,25 +60,27 @@ object Archives {
       i -= 1
     }
     if (eocd < 0) return None
-    var nEntries: Long = u16(b, eocd + 10)
-    if (nEntries != u16(b, eocd + 8)) return None // multi-disk
-    var cdSize = u32(b, eocd + 12)
-    var cdOff = u32(b, eocd + 16)
+    var nEntries: Long = c.le16(eocd + 10).getOrElse(return None)
+    // multi-disk
+    if (nEntries != c.le16(eocd + 8).getOrElse(return None)) return None
+    var cdSize = c.le32(eocd + 12).getOrElse(return None)
+    var cdOff = c.le32(eocd + 16).getOrElse(return None)
     if (nEntries == 0xffffL || cdSize == 0xffffffffL ||
       cdOff == 0xffffffffL) {
       // ZIP64: locator (PK\6\7) sits immediately before the EOCD
       val loc = eocd - 20
       if (loc < 0 || !(b(loc) == 'P' && b(loc + 1) == 'K' &&
         b(loc + 2) == 6 && b(loc + 3) == 7)) return None
-      val z64 = u64(b, loc + 8)
+      val z64 = c.le64(loc + 8).getOrElse(return None)
       if (z64 < 0 || z64 + 56 > b.length) return None
       val zi = z64.toInt
       if (!(b(zi) == 'P' && b(zi + 1) == 'K' && b(zi + 2) == 6 &&
         b(zi + 3) == 6)) return None
-      if (u64(b, zi + 24) != u64(b, zi + 32)) return None // multi-disk
-      nEntries = u64(b, zi + 32)
-      cdSize = u64(b, zi + 40)
-      cdOff = u64(b, zi + 48)
+      nEntries = c.le64(zi + 32).getOrElse(return None)
+      // multi-disk
+      if (c.le64(zi + 24).getOrElse(return None) != nEntries) return None
+      cdSize = c.le64(zi + 40).getOrElse(return None)
+      cdOff = c.le64(zi + 48).getOrElse(return None)
     }
     if (nEntries < 0 || nEntries > (1L << 24)) return None
     if (cdOff < 0 || cdSize < 0 || cdOff + cdSize > eocd) return None
@@ -96,16 +92,16 @@ object Archives {
       if (!(b(p.toInt) == 'P' && b(p.toInt + 1) == 'K' &&
         b(p.toInt + 2) == 1 && b(p.toInt + 3) == 2)) return None
       val pi = p.toInt
-      val flags = u16(b, pi + 8)
+      val flags = c.le16(pi + 8).getOrElse(return None)
       if ((flags & 0x1) != 0) return None // encrypted
-      val method = u16(b, pi + 10)
-      val crc = u32(b, pi + 16)
-      var csize = u32(b, pi + 20)
-      var usize = u32(b, pi + 24)
-      val nameLen = u16(b, pi + 28)
-      val extraLen = u16(b, pi + 30)
-      val commentLen = u16(b, pi + 32)
-      var lho = u32(b, pi + 42)
+      val method = c.le16(pi + 10).getOrElse(return None)
+      val crc = c.le32(pi + 16).getOrElse(return None)
+      var csize = c.le32(pi + 20).getOrElse(return None)
+      var usize = c.le32(pi + 24).getOrElse(return None)
+      val nameLen = c.le16(pi + 28).getOrElse(return None)
+      val extraLen = c.le16(pi + 30).getOrElse(return None)
+      val commentLen = c.le16(pi + 32).getOrElse(return None)
+      var lho = c.le32(pi + 42).getOrElse(return None)
       if (p + 46 + nameLen + extraLen > b.length) return None
       if (csize == 0xffffffffL || usize == 0xffffffffL ||
         lho == 0xffffffffL) {
@@ -115,22 +111,16 @@ object Archives {
         val eEnd = e + extraLen
         var found = false
         while (e + 4 <= eEnd && !found) {
-          val id = u16(b, e); val sz = u16(b, e + 2)
+          val id = c.le16(e).getOrElse(return None)
+          val sz = c.le16(e + 2).getOrElse(return None)
           if (id == 0x0001) {
             // reads are bounded by THIS field's declared size, not the
             // whole extras block — a truncated 0x0001 must reject, not
             // read the next field's header bytes as size data
-            val fEnd = math.min(e + 4 + sz, eEnd)
-            var q = e + 4
-            if (usize == 0xffffffffL) {
-              if (q + 8 > fEnd) return None; usize = u64(b, q); q += 8
-            }
-            if (csize == 0xffffffffL) {
-              if (q + 8 > fEnd) return None; csize = u64(b, q); q += 8
-            }
-            if (lho == 0xffffffffL) {
-              if (q + 8 > fEnd) return None; lho = u64(b, q); q += 8
-            }
+            val f = new ByteCursor(b, e + 4, math.min(e + 4 + sz, eEnd))
+            if (usize == 0xffffffffL) usize = f.le64().getOrElse(return None)
+            if (csize == 0xffffffffL) csize = f.le64().getOrElse(return None)
+            if (lho == 0xffffffffL) lho = f.le64().getOrElse(return None)
             found = true
           } else e += 4 + sz
         }
@@ -144,19 +134,18 @@ object Archives {
       val li = lho.toInt
       if (!(b(li) == 'P' && b(li + 1) == 'K' && b(li + 2) == 3 &&
         b(li + 3) == 4)) return None
-      val dataAt = lho + 30 + u16(b, li + 26) + u16(b, li + 28)
-      if (dataAt + csize > b.length) return None
-      val raw = java.util.Arrays.copyOfRange(b, dataAt.toInt,
-        (dataAt + csize).toInt)
+      val dataAt = lho + 30 + c.le16(li + 26).getOrElse(return None) +
+        c.le16(li + 28).getOrElse(return None)
+      val raw = c.bytes(dataAt, csize).getOrElse(return None)
       val data = method match {
         case 0 => if (csize != usize) return None else raw
         case 8 => inflateRaw(raw, usize).getOrElse(return None)
         case _ => return None
       }
-      val c = new java.util.zip.CRC32()
-      c.update(data)
+      val crc32 = new java.util.zip.CRC32()
+      crc32.update(data)
       out += ZipEntry(name, if (method == 0) "stored" else "deflate",
-        usize, c.getValue == crc,
+        usize, crc32.getValue == crc,
         new String(data, java.nio.charset.StandardCharsets.UTF_8))
       p += 46L + nameLen + extraLen + commentLen
       k += 1
@@ -309,13 +298,8 @@ object Archives {
                zip64: Boolean = false): Array[Byte] = {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    def le32(v: Long): Unit = { le16((v & 0xffff).toInt); le16(((v >>> 16) & 0xffff).toInt) }
-    def le64(v: Long): Unit = { le32(v & 0xffffffffL); le32(v >>> 32) }
     val central = new java.io.ByteArrayOutputStream()
-    def cle16(v: Int): Unit = { central.write(v & 0xff); central.write((v >>> 8) & 0xff) }
-    def cle32(v: Long): Unit = { cle16((v & 0xffff).toInt); cle16(((v >>> 16) & 0xffff).toInt) }
-    def cle64(v: Long): Unit = { cle32(v & 0xffffffffL); cle32(v >>> 32) }
+    import ByteCursor.{le16, le32, le64}
     members.foreach { case (name, text, deflated) =>
       val data = text.getBytes(utf8)
       val crc = new java.util.zip.CRC32(); crc.update(data)
@@ -332,25 +316,32 @@ object Archives {
       val method = if (deflated) 8 else 0
       val lho = out.size().toLong
       out.write(Array[Byte]('P', 'K', 3, 4))
-      le16(20); le16(0); le16(method); le16(0); le16(0x2821) // fixed DOS stamp
-      le32(crc.getValue); le32(comp.length.toLong); le32(data.length.toLong)
-      le16(nameB.length); le16(0)
+      // version, flags, method, fixed DOS stamp
+      out.write(le16(20) ++ le16(0) ++ le16(method) ++ le16(0) ++ le16(0x2821))
+      out.write(le32(crc.getValue) ++ le32(comp.length.toLong) ++
+        le32(data.length.toLong))
+      out.write(le16(nameB.length) ++ le16(0))
       out.write(nameB); out.write(comp)
       central.write(Array[Byte]('P', 'K', 1, 2))
-      cle16(if (zip64) 45 else 20); cle16(if (zip64) 45 else 20)
-      cle16(0); cle16(method); cle16(0); cle16(0x2821)
-      cle32(crc.getValue)
+      central.write(le16(if (zip64) 45 else 20) ++ le16(if (zip64) 45 else 20))
+      central.write(le16(0) ++ le16(method) ++ le16(0) ++ le16(0x2821))
+      central.write(le32(crc.getValue))
       if (zip64) {
-        cle32(0xffffffffL); cle32(0xffffffffL) // csize/usize sentinels
-        cle16(nameB.length); cle16(4 + 24); cle16(0); cle16(0); cle16(0)
-        cle32(0L); cle32(0xffffffffL) // offset sentinel
+        // csize/usize sentinels
+        central.write(le32(0xffffffffL) ++ le32(0xffffffffL))
+        central.write(le16(nameB.length) ++ le16(4 + 24) ++ le16(0) ++
+          le16(0) ++ le16(0))
+        central.write(le32(0L) ++ le32(0xffffffffL)) // offset sentinel
         central.write(nameB)
-        cle16(0x0001); cle16(24) // ZIP64 extra: usize, csize, offset
-        cle64(data.length.toLong); cle64(comp.length.toLong); cle64(lho)
+        // ZIP64 extra: usize, csize, offset
+        central.write(le16(0x0001) ++ le16(24))
+        central.write(le64(data.length.toLong) ++ le64(comp.length.toLong) ++
+          le64(lho))
       } else {
-        cle32(comp.length.toLong); cle32(data.length.toLong)
-        cle16(nameB.length); cle16(0); cle16(0); cle16(0); cle16(0)
-        cle32(0L); cle32(lho)
+        central.write(le32(comp.length.toLong) ++ le32(data.length.toLong))
+        central.write(le16(nameB.length) ++ le16(0) ++ le16(0) ++ le16(0) ++
+          le16(0))
+        central.write(le32(0L) ++ le32(lho))
         central.write(nameB)
       }
     }
@@ -360,18 +351,19 @@ object Archives {
     if (zip64) {
       val z64At = out.size().toLong
       out.write(Array[Byte]('P', 'K', 6, 6)) // ZIP64 EOCD record
-      le64(44); le16(45); le16(45); le32(0); le32(0)
-      le64(members.length.toLong); le64(members.length.toLong)
-      le64(cdSize); le64(cdOff)
+      out.write(le64(44) ++ le16(45) ++ le16(45) ++ le32(0) ++ le32(0))
+      out.write(le64(members.length.toLong) ++ le64(members.length.toLong))
+      out.write(le64(cdSize) ++ le64(cdOff))
       out.write(Array[Byte]('P', 'K', 6, 7)) // locator
-      le32(0); le64(z64At); le32(1)
+      out.write(le32(0) ++ le64(z64At) ++ le32(1))
       out.write(Array[Byte]('P', 'K', 5, 6)) // sentinel'd classic EOCD
-      le16(0); le16(0); le16(0xffff); le16(0xffff)
-      le32(0xffffffffL); le32(0xffffffffL); le16(0)
+      out.write(le16(0) ++ le16(0) ++ le16(0xffff) ++ le16(0xffff))
+      out.write(le32(0xffffffffL) ++ le32(0xffffffffL) ++ le16(0))
     } else {
       out.write(Array[Byte]('P', 'K', 5, 6))
-      le16(0); le16(0); le16(members.length); le16(members.length)
-      le32(cdSize); le32(cdOff); le16(0)
+      out.write(le16(0) ++ le16(0) ++ le16(members.length) ++
+        le16(members.length))
+      out.write(le32(cdSize) ++ le32(cdOff) ++ le16(0))
     }
     out.toByteArray
   }

@@ -36,25 +36,25 @@ object Avro {
     if (b == null || b.length < 20) return None
     if (!(b(0) == 'O' && b(1) == 'b' && b(2) == 'j' && b(3) == 1))
       return None
-    val cur = new Cursor(b, 4L)
+    val cur = new ByteCursor(b, 4L, b.length)
     // file metadata map
     val meta = scala.collection.mutable.Map[String, Array[Byte]]()
-    var blockCount = cur.zigzagLong().getOrElse(return None)
+    var blockCount = cur.zigzag().getOrElse(return None)
     var guard = 0
     while (blockCount != 0 && guard < 64) {
       val n = if (blockCount < 0) {
-        cur.zigzagLong().getOrElse(return None) // block byte size: unused
+        cur.zigzag().getOrElse(return None) // block byte size: unused
         -blockCount
       } else blockCount
       if (n > 1024) return None
       var k = 0L
       while (k < n) {
-        val key = cur.bytes().getOrElse(return None)
-        val value = cur.bytes().getOrElse(return None)
+        val key = lenBytes(cur).getOrElse(return None)
+        val value = lenBytes(cur).getOrElse(return None)
         meta(new String(key, Utf8)) = value
         k += 1
       }
-      blockCount = cur.zigzagLong().getOrElse(return None)
+      blockCount = cur.zigzag().getOrElse(return None)
       guard += 1
     }
     val codec = meta.get("avro.codec").map(new String(_, Utf8))
@@ -63,41 +63,41 @@ object Avro {
     val schema = meta.get("avro.schema").map(new String(_, Utf8))
       .getOrElse(return None)
     val fields = schemaFields(schema).getOrElse(return None)
-    val sync = cur.raw(16).getOrElse(return None)
+    val sync = cur.bytes(16).getOrElse(return None)
     // data blocks
     val records = Vector.newBuilder[Map[String, String]]
     var nBlocks = 0
     while (cur.pos < b.length) {
-      val count = cur.zigzagLong().getOrElse(return None)
-      val size = cur.zigzagLong().getOrElse(return None)
+      val count = cur.zigzag().getOrElse(return None)
+      val size = cur.zigzag().getOrElse(return None)
       if (count < 0 || count > 1000000 || size < 0) return None
-      val payload = cur.raw(size).getOrElse(return None)
-      val blockSync = cur.raw(16).getOrElse(return None)
+      val payload = cur.bytes(size).getOrElse(return None)
+      val blockSync = cur.bytes(16).getOrElse(return None)
       if (!java.util.Arrays.equals(blockSync, sync)) return None
       val data = if (codec == "deflate")
         Inflate(payload, raw = true, cap = 1 << 26)
           .getOrElse(return None)
       else payload
-      val bc = new Cursor(data, 0L)
+      val bc = ByteCursor(data)
       var r = 0L
       while (r < count) {
         val rec = Map.newBuilder[String, String]
         fields.foreach { case (name, typ) =>
           rec += name -> (typ match {
             case "string" =>
-              new String(bc.bytes().getOrElse(return None), Utf8)
+              new String(lenBytes(bc).getOrElse(return None), Utf8)
             case "bytes" =>
-              bc.bytes().getOrElse(return None)
+              lenBytes(bc).getOrElse(return None)
                 .map(x => f"${x & 0xff}%02x").mkString
             case "long" | "int" =>
-              bc.zigzagLong().getOrElse(return None).toString
+              bc.zigzag().getOrElse(return None).toString
             case "double" => java.lang.Double
               .longBitsToDouble(bc.le64().getOrElse(return None)).toString
             case "float" => java.lang.Float
               .intBitsToFloat(bc.le32().getOrElse(return None).toInt)
               .toString
             case "boolean" =>
-              (bc.raw(1).getOrElse(return None)(0) != 0).toString
+              (bc.bytes(1).getOrElse(return None)(0) != 0).toString
             case "null" => ""
             case _ => return None
           })
@@ -149,47 +149,13 @@ object Avro {
     Some(out)
   }
 
-  /** Bounds-checked little cursor over the buffer (positions Long —
-    * the byte-walk rule). */
-  private final class Cursor(b: Array[Byte], var pos: Long) {
-    def raw(n: Long): Option[Array[Byte]] =
-      if (n < 0 || pos + n > b.length) None
-      else { val r = b.slice(pos.toInt, (pos + n).toInt); pos += n; Some(r) }
-    /** zigzag varint (Avro long/int). */
-    def zigzagLong(): Option[Long] = {
-      var v = 0L; var shift = 0; var i = 0
-      while (i < 10) {
-        if (pos >= b.length) return None
-        val byt = b(pos.toInt) & 0xff
-        pos += 1
-        v |= (byt & 0x7fL) << shift
-        if ((byt & 0x80) == 0) return Some((v >>> 1) ^ -(v & 1L))
-        shift += 7; i += 1
-      }
-      None // >10 bytes: not a valid varint
-    }
-    /** length-prefixed byte string. */
-    def bytes(): Option[Array[Byte]] =
-      zigzagLong().flatMap(n => if (n < 0 || n > (1 << 24)) None else raw(n))
-    def le32(): Option[Long] = raw(4).map(a =>
-      (a(0) & 0xffL) | ((a(1) & 0xffL) << 8) | ((a(2) & 0xffL) << 16) |
-        ((a(3) & 0xffL) << 24))
-    def le64(): Option[Long] =
-      for (lo <- le32(); hi <- le32()) yield lo | (hi << 32)
-  }
+  /** Avro's length-prefixed byte string over the shared [[ByteCursor]]. */
+  private def lenBytes(c: ByteCursor): Option[Array[Byte]] =
+    c.zigzag().flatMap(n => if (n > (1 << 24)) None else c.bytes(n))
 
   // ---- fixture ------------------------------------------------------ //
 
-  private def zigzag(v: Long): Array[Byte] = {
-    var n = (v << 1) ^ (v >> 63)
-    val out = new java.io.ByteArrayOutputStream(10)
-    do {
-      val byt = (n & 0x7f).toInt
-      n = n >>> 7
-      out.write(if (n != 0) byt | 0x80 else byt)
-    } while (n != 0)
-    out.toByteArray
-  }
+  import ByteCursor.{le64, zigzag}
 
   private def str(s: String): Array[Byte] = {
     val raw = s.getBytes(Utf8)
@@ -207,7 +173,6 @@ object Avro {
       "{\"name\":\"score\",\"type\":\"double\"}," +
       "{\"name\":\"ok\",\"type\":\"boolean\"}]}"
     val sync = Array.tabulate(16)(k => ((id * 31 + k * 7 + 3) % 256).toByte)
-    def le64(v: Long) = (0 until 8).map(k => (v >>> (8 * k)).toByte).toArray
     def record(i: Long): Array[Byte] =
       str(s"item ${id % 10}-$i") ++ zigzag(id * 10 + i) ++
         le64(java.lang.Double.doubleToLongBits((id % 7).toDouble + 0.5)) ++

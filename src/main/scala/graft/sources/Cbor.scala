@@ -41,26 +41,12 @@ object Cbor {
   def census(b: Array[Byte]): Option[WalkCensus] = {
     if (b == null || b.length == 0) return None
     val st = new St
-    var pos = 0L
-    val end = b.length.toLong
-    def u8(): Option[Int] =
-      if (pos >= end) None
-      else { val v = b(pos.toInt) & 0xff; pos += 1; Some(v) }
-    /** The argument for additional-info `info` (length or value). */
+    val c = ByteCursor(b)
+    /** The argument for additional-info `info` (length or value):
+      * 24..27 carry a 1/2/4/8-byte big-endian follow-on. */
     def arg(info: Int): Option[Long] = info match {
       case n if n < 24 => Some(n.toLong)
-      case 24 => u8().map(_.toLong)
-      case 25 =>
-        for (a <- u8(); c <- u8()) yield (a.toLong << 8) | c
-      case 26 =>
-        for (a <- u8(); c <- u8(); d <- u8(); e <- u8())
-          yield (a.toLong << 24) | (c.toLong << 16) | (d.toLong << 8) | e
-      case 27 =>
-        var v = 0L; var k = 0
-        while (k < 8) {
-          v = (v << 8) | u8().getOrElse(return None).toLong; k += 1
-        }
-        Some(v)
+      case n if n <= 27 => c.be(1 << (n - 24))
       case _ => None // 28-30 reserved, 31 handled by callers
     }
     def topName(major: Int, info: Int): String = major match {
@@ -81,7 +67,7 @@ object Cbor {
     /** Walk one item; false poisons. */
     def item(depth: Int): Boolean = {
       if (depth > 32 || st.nodes > 1000000) return false
-      val ib = u8().getOrElse(return false)
+      val ib = c.u8().getOrElse(return false)
       if (ib == 0xff) return false // lone break
       val major = ib >> 5; val info = ib & 0x1f
       st.nodes += 1
@@ -96,8 +82,7 @@ object Cbor {
         case 2 | 3 =>
           if (info == 31) return false // chunked string: out of scope
           val n = arg(info).getOrElse(return false)
-          if (n < 0 || pos + n > end) return false
-          pos += n
+          c.skip(n).getOrElse(return false)
           if (major == 2) st.byts += 1
           else { st.strs += 1; st.strBytes += n }
           true
@@ -107,8 +92,9 @@ object Cbor {
           if (info == 31) { // indefinite: walk to the break
             var more = true
             while (more) {
-              if (pos >= end) return false
-              if ((b(pos.toInt) & 0xff) == 0xff) { pos += 1; more = false }
+              if (c.u8(c.pos).getOrElse(return false) == 0xff) {
+                c.pos += 1; more = false
+              }
               else {
                 var k = 0
                 while (k < per) {
@@ -133,7 +119,7 @@ object Cbor {
         case 7 => info match {
           case 20 | 21 => st.bools += 1; true
           case 22 | 23 => st.nulls += 1; true
-          case 24 => u8().isDefined // simple value 32..255
+          case 24 => c.u8().isDefined // simple value 32..255
           case 25 => st.floats += 1; arg(25).isDefined // float16
           case 26 => st.floats += 1; arg(26).isDefined
           case 27 => st.floats += 1; arg(27).isDefined
@@ -146,7 +132,7 @@ object Cbor {
     val ib0 = b(0) & 0xff
     val top = topName(ib0 >> 5, ib0 & 0x1f)
     if (!item(1)) return None
-    if (pos != end) return None // trailing bytes: misparse
+    if (c.pos != c.end) return None // trailing bytes: misparse
     Some(WalkCensus(top, st.nodes, st.ints, st.strs, st.byts, st.arrs,
       st.maps, st.bools, st.nulls, st.floats, st.tags, st.maxDepth,
       st.intSum, st.strBytes))
@@ -159,13 +145,8 @@ object Cbor {
     val m = major << 5
     if (v < 24) out.write(m | v.toInt)
     else if (v < 256) { out.write(m | 24); out.write(v.toInt) }
-    else if (v < 65536) {
-      out.write(m | 25); out.write((v >>> 8).toInt); out.write(v.toInt)
-    } else {
-      out.write(m | 26)
-      out.write((v >>> 24).toInt); out.write((v >>> 16).toInt)
-      out.write((v >>> 8).toInt); out.write(v.toInt)
-    }
+    else if (v < 65536) { out.write(m | 25); out.write(ByteCursor.be16(v)) }
+    else { out.write(m | 26); out.write(ByteCursor.be32(v)) }
   }
   private def wText(out: java.io.ByteArrayOutputStream, s: String): Unit = {
     val x = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)

@@ -30,14 +30,10 @@ object Frames {
 
   def parseFrame(b: Array[Byte]): Option[FrameMeta] = {
     if (b == null || b.length < 6) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le32(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    def le64(i: Long): Long = le32(i) | (le32(i + 4) << 32)
-    le32(0) match {
+    val c = ByteCursor(b)
+    c.le32(0).getOrElse(return None) match {
       case 0xFD2FB528L => // zstd
-        if (b.length < 6) return None
-        val fhd = u8(4)
+        val fhd = b(4) & 0xff
         val fcsFlag = fhd >>> 6
         val singleSegment = (fhd & 0x20) != 0
         if ((fhd & 0x08) != 0) return None // reserved bit must be 0
@@ -46,8 +42,7 @@ object Frames {
         var p = 5L
         var window = -1L
         if (!singleSegment) {
-          if (p >= b.length) return None
-          val wd = u8(p); p += 1
+          val wd = c.u8(p).getOrElse(return None); p += 1
           val exp = wd >>> 3
           val mantissa = wd & 7
           if (exp + 10 > 62) return None
@@ -61,13 +56,12 @@ object Frames {
           case 2 => 4
           case _ => 8
         }
-        if (p + fcsSize > b.length) return None
+        // the dictionary ID and content size must both be present
+        if (!c.has(p, fcsSize)) return None
         val contentSize = fcsSize match {
           case 0 => -1L
-          case 1 => u8(p).toLong
-          case 2 => (u8(p) | (u8(p + 1) << 8)).toLong + 256L // biased
-          case 4 => le32(p)
-          case _ => le64(p)
+          case 2 => c.le(p, 2).getOrElse(return None) + 256L // biased
+          case n => c.le(p, n).getOrElse(return None)
         }
         if (singleSegment && contentSize >= 0) window = contentSize
         Some(FrameMeta("zstd", contentSize, window,
@@ -75,29 +69,28 @@ object Frames {
           block_independent = true)) // zstd frames are self-contained
       case 0x184D2204L => // LZ4 frame
         if (b.length < 7) return None
-        val flg = u8(4)
+        val flg = b(4) & 0xff
         if ((flg >>> 6) != 1) return None // version must be 01
         val indep = (flg & 0x20) != 0
         val contentChecksum = (flg & 0x04) != 0
         val hasContentSize = (flg & 0x08) != 0
-        val bd = u8(5)
+        val bd = b(5) & 0xff
         val bmax = (bd >>> 4) & 7
         if (bmax < 4) return None // 4..7 defined
         val window = 1L << (bmax * 2 + 8) // 4→64KB, 5→256KB, 6→1MB, 7→4MB
         var p = 6L
         val contentSize = if (hasContentSize) {
-          if (p + 8 > b.length) return None
-          val v = le64(p); p += 8; v
+          val v = c.le64(p).getOrElse(return None); p += 8; v
         } else -1L
         if (p >= b.length) return None // header-checksum byte
         Some(FrameMeta("lz4", contentSize, window,
           if (contentChecksum) "xxh32" else "none", indep))
       case _ =>
         // XZ: FD 37 7A 58 5A 00, stream flags (2 bytes) + CRC32
-        if (b.length >= 12 && u8(0) == 0xFD && u8(1) == '7' &&
-          u8(2) == 'z' && u8(3) == 'X' && u8(4) == 'Z' && u8(5) == 0) {
-          if (u8(6) != 0) return None // first flags byte must be 0
-          val check = u8(7) & 0x0f
+        if (b.length >= 12 && (b(0) & 0xff) == 0xFD && b(1) == '7' &&
+          b(2) == 'z' && b(3) == 'X' && b(4) == 'Z' && b(5) == 0) {
+          if (b(6) != 0) return None // first flags byte must be 0
+          val check = b(7) & 0x0f
           val name = check match {
             case 0 => "none"
             case 1 => "crc32"
@@ -118,9 +111,7 @@ object Frames {
     * cycling) — headers only, plus deterministic junk payload the
     * parser must never read. */
   def synthFrame(id: Long): Array[Byte] = {
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
-    def le64(v: Long) = le32(v & 0xffffffffL) ++ le32(v >>> 32)
+    import ByteCursor.{le32, le64}
     val junk = Array.tabulate(((id % 16) + 4).toInt)(j =>
       ((id * 37 + j * 11) % 256).toByte)
     (id % 3) match {

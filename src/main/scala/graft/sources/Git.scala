@@ -193,15 +193,14 @@ object Git {
     */
   def parsePackIdx(b: Array[Byte]): Option[PackIdx] = {
     if (b == null || b.length < 8 + 1024 + 40) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def u32(i: Long): Long = (u8(i).toLong << 24) | (u8(i + 1).toLong << 16) |
-      (u8(i + 2).toLong << 8) | u8(i + 3)
-    if (u32(0) != 0xff744f63L) return None // \377tOc
-    if (u32(4) != 2L) return None
-    val fanout = Array.tabulate(256)(k => u32(8L + 4 * k))
-    var k = 1
+    val c = ByteCursor(b)
+    if (c.be32(0).getOrElse(return None) != 0xff744f63L) return None // \377tOc
+    if (c.be32(4).getOrElse(return None) != 2L) return None
+    val fanout = new Array[Long](256)
+    var k = 0
     while (k < 256) {
-      if (fanout(k) < fanout(k - 1)) return None
+      fanout(k) = c.be32(8L + 4 * k).getOrElse(return None)
+      if (k > 0 && fanout(k) < fanout(k - 1)) return None
       k += 1
     }
     val n = fanout(255)
@@ -218,17 +217,13 @@ object Git {
     val hist = new Array[Long](256)
     var i = 0L
     while (i < n) {
-      hist(u8(shaAt + 20 * i)) += 1
-      if (i > 0) {
-        // unsigned lexicographic compare vs the previous sha
-        var j = 0
-        var cmp = 0
-        while (j < 20 && cmp == 0) {
-          cmp = u8(shaAt + 20 * i + j) - u8(shaAt + 20 * (i - 1) + j)
-          j += 1
-        }
-        if (cmp <= 0) return None // unsorted or duplicate
-      }
+      val at = shaAt + 20 * i
+      hist(c.u8(at).getOrElse(return None)) += 1
+      // unsigned lexicographic compare vs the previous sha (in bounds:
+      // rem >= 0 above puts every sha inside the buffer)
+      if (i > 0 && java.util.Arrays.compareUnsigned(b, at.toInt,
+        at.toInt + 20, b, at.toInt - 20, at.toInt) <= 0)
+        return None // unsorted or duplicate
       i += 1
     }
     var acc = 0L
@@ -240,17 +235,18 @@ object Git {
     }
     var sumCrc = 0L
     i = 0L
-    while (i < n) { sumCrc += u32(crcAt + 4 * i); i += 1 }
+    while (i < n) {
+      sumCrc += c.be32(crcAt + 4 * i).getOrElse(return None); i += 1
+    }
     var maxOff = 0L
     var largeSeen = 0
     i = 0L
     while (i < n) {
-      val o = u32(offAt + 4 * i)
+      val o = c.be32(offAt + 4 * i).getOrElse(return None)
       if ((o & 0x80000000L) != 0) {
         val idx = o & 0x7fffffffL
         if (idx >= nLarge) return None
-        val p = largeAt + 8 * idx
-        val big = (u32(p) << 32) | u32(p + 4)
+        val big = c.be64(largeAt + 8 * idx).getOrElse(return None)
         if (big < 0) return None
         if (big > maxOff) maxOff = big
         largeSeen += 1
@@ -258,10 +254,9 @@ object Git {
       i += 1
     }
     if (n == 0) return None
-    def hex8(at: Long): String =
-      f"${u8(at)}%02x${u8(at + 1)}%02x${u8(at + 2)}%02x${u8(at + 3)}%02x"
-    Some(PackIdx(n.toInt, nLarge, sumCrc, maxOff, hex8(shaAt),
-      hex8(shaAt + 20 * (n - 1))))
+    val first = c.be32(shaAt).getOrElse(return None)
+    val last = c.be32(shaAt + 20 * (n - 1)).getOrElse(return None)
+    Some(PackIdx(n.toInt, nLarge, sumCrc, maxOff, f"$first%08x", f"$last%08x"))
   }
 
   /** Deterministic per-id .idx v2: n = id%20+5 sorted shas whose
@@ -272,10 +267,7 @@ object Git {
     val n = (id % 20 + 5).toInt
     val hasLarge = id % 3 == 0
     val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit = {
-      out.write(((v >>> 24) & 0xff).toInt); out.write(((v >>> 16) & 0xff).toInt)
-      out.write(((v >>> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-    }
+    def w32(v: Long): Unit = out.write(ByteCursor.be32(v))
     w32(0xff744f63L); w32(2L)
     def byte0(kk: Int): Int = kk * 256 / n
     (0 until 256).foreach { bb =>

@@ -22,22 +22,11 @@ object Msgpack {
 
   def census(b: Array[Byte]): Option[Cbor.WalkCensus] = {
     if (b == null || b.length == 0) return None
-    var pos = 0L
-    val end = b.length.toLong
+    val c = ByteCursor(b)
     var nodes = 0L; var ints = 0L; var strs = 0L; var byts = 0L
     var arrs = 0L; var maps = 0L; var bools = 0L; var nulls = 0L
     var floats = 0L; var exts = 0L; var maxDepth = 0
     var intSum = 0L; var strBytes = 0L
-    def u8(): Option[Int] =
-      if (pos >= end) None
-      else { val v = b(pos.toInt) & 0xff; pos += 1; Some(v) }
-    def beN(n: Int): Option[Long] = {
-      var v = 0L; var k = 0
-      while (k < n) { v = (v << 8) | u8().getOrElse(return None); k += 1 }
-      Some(v)
-    }
-    def skipN(n: Long): Boolean =
-      if (n < 0 || pos + n > end) false else { pos += n; true }
     def topName(ib: Int): String = ib match {
       case x if x <= 0x7f || x >= 0xe0 => "int"
       case x if (x >= 0x80 && x <= 0x8f) || x == 0xde || x == 0xdf => "map"
@@ -52,7 +41,7 @@ object Msgpack {
     }
     def walk(depth: Int): Boolean = {
       if (depth > 32 || nodes > 1000000) return false
-      val ib = u8().getOrElse(return false)
+      val ib = c.u8().getOrElse(return false)
       nodes += 1
       if (depth > maxDepth) maxDepth = depth
       def kids(n: Long, per: Int): Boolean = {
@@ -62,7 +51,7 @@ object Msgpack {
         true
       }
       def strBody(n: Long): Boolean = {
-        strs += 1; strBytes += n; skipN(n)
+        strs += 1; strBytes += n; c.skip(n).isDefined
       }
       ib match {
         case x if x <= 0x7f => ints += 1; intSum += x; true // pos fixint
@@ -77,22 +66,22 @@ object Msgpack {
         case 0xc3 => bools += 1; true
         case 0xc4 | 0xc5 | 0xc6 => // bin8/16/32
           val w = 1 << (ib - 0xc4)
-          val n = beN(w).getOrElse(return false)
-          byts += 1; skipN(n)
+          val n = c.be(w).getOrElse(return false)
+          byts += 1; c.skip(n).isDefined
         case 0xc7 | 0xc8 | 0xc9 => // ext8/16/32
           val w = 1 << (ib - 0xc7)
-          val n = beN(w).getOrElse(return false)
+          val n = c.be(w).getOrElse(return false)
           exts += 1
-          skipN(1) && skipN(n) // type byte + payload
-        case 0xca => floats += 1; skipN(4)
-        case 0xcb => floats += 1; skipN(8)
+          c.skip(1).isDefined && c.skip(n).isDefined // type byte + payload
+        case 0xca => floats += 1; c.skip(4).isDefined
+        case 0xcb => floats += 1; c.skip(8).isDefined
         case 0xcc | 0xcd | 0xce | 0xcf => // uint8/16/32/64
           val w = 1 << (ib - 0xcc)
-          val v = beN(w).getOrElse(return false)
+          val v = c.be(w).getOrElse(return false)
           ints += 1; intSum += v; true
         case 0xd0 | 0xd1 | 0xd2 | 0xd3 => // int8/16/32/64
           val w = 1 << (ib - 0xd0)
-          val raw = beN(w).getOrElse(return false)
+          val raw = c.be(w).getOrElse(return false)
           val bits = 8 * w
           val v = if (w == 8) raw
           else if ((raw & (1L << (bits - 1))) != 0) raw - (1L << bits)
@@ -100,25 +89,25 @@ object Msgpack {
           ints += 1; intSum += v; true
         case x if x >= 0xd4 && x <= 0xd8 => // fixext1..16
           exts += 1
-          skipN(1) && skipN(1L << (x - 0xd4))
+          c.skip(1).isDefined && c.skip(1L << (x - 0xd4)).isDefined
         case 0xd9 | 0xda | 0xdb => // str8/16/32
           val w = 1 << (ib - 0xd9)
-          val n = beN(w).getOrElse(return false)
+          val n = c.be(w).getOrElse(return false)
           strBody(n)
         case 0xdc | 0xdd => // array16/32
           val w = 2 << (ib - 0xdc)
-          val n = beN(w).getOrElse(return false)
+          val n = c.be(w).getOrElse(return false)
           arrs += 1; kids(n, 1)
         case 0xde | 0xdf => // map16/32
           val w = 2 << (ib - 0xde)
-          val n = beN(w).getOrElse(return false)
+          val n = c.be(w).getOrElse(return false)
           maps += 1; kids(n, 2)
         case _ => false
       }
     }
     val top = topName(b(0) & 0xff)
     if (!walk(1)) return None
-    if (pos != end) return None // trailing bytes: misparse
+    if (c.pos != c.end) return None // trailing bytes: misparse
     Some(Cbor.WalkCensus(top, nodes, ints, strs, byts, arrs, maps,
       bools, nulls, floats, exts, maxDepth, intSum, strBytes))
   }
@@ -145,7 +134,7 @@ object Msgpack {
         case 0 => out.write((id % 100 + j).toInt) // pos fixint (< 0x67)
         case 1 => // uint16: value 1000 + id%1000 forces the width
           val v = (1000 + id % 1000).toInt
-          out.write(0xcd); out.write(v >>> 8); out.write(v & 0xff)
+          out.write(0xcd); out.write(ByteCursor.be16(v))
         case 2 =>
           val n = (id % 2 + 1).toInt
           out.write(0x90 | n)
@@ -158,7 +147,7 @@ object Msgpack {
     text("f")
     out.write(0xcb) // float64
     val dv = java.lang.Double.doubleToLongBits((id % 7).toDouble + 0.5)
-    (7 to 0 by -1).foreach(k => out.write(((dv >>> (8 * k)) & 0xff).toInt))
+    out.write(ByteCursor.be64(dv))
     if (id % 4 == 0) {
       text("x")
       out.write(0xd6); out.write(42) // fixext4, type 42

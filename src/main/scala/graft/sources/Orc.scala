@@ -34,41 +34,31 @@ object Orc {
   private val compNames = Map(0 -> "none", 1 -> "zlib", 2 -> "snappy",
     3 -> "lzo", 4 -> "lz4", 5 -> "zstd")
 
-  /** Minimal bounds-checked protobuf walker over a slice. */
-  private final class PB(b: Array[Byte], var pos: Long, val end: Long) {
-    def varint(): Option[Long] = {
-      var v = 0L; var shift = 0
-      while (shift <= 63) {
-        if (pos >= end) return None
-        val byt = b(pos.toInt) & 0xff
-        pos += 1
-        v |= (byt & 0x7fL) << shift
-        if ((byt & 0x80) == 0) return Some(v)
-        shift += 7
-      }
-      None
+  // Protobuf grammar over the shared [[ByteCursor]].
+
+  private def lenSlice(pb: ByteCursor): Option[(Long, Long)] =
+    pb.varint().flatMap { n =>
+      val from = pb.pos
+      pb.skip(n).map(_ => (from, pb.pos))
     }
-    def lenSlice(): Option[(Long, Long)] = varint().flatMap { n =>
-      if (n < 0 || pos + n > end) None
-      else { val r = (pos, pos + n); pos += n; Some(r) }
+
+  private def skipWire(pb: ByteCursor, wire: Int): Boolean = wire match {
+    case 0 => pb.varint().isDefined
+    case 1 => pb.skip(8).isDefined
+    case 2 => lenSlice(pb).isDefined
+    case 5 => pb.skip(4).isDefined
+    case _ => false // groups / reserved: reject
+  }
+
+  /** Iterate fields; cb must consume the value (false poisons). */
+  private def fields(pb: ByteCursor)(cb: (Long, Int) => Boolean): Boolean = {
+    while (pb.pos < pb.end) {
+      val key = pb.varint().getOrElse(return false)
+      val field = key >>> 3; val wire = (key & 7).toInt
+      if (field == 0) return false
+      if (!cb(field, wire)) return false
     }
-    def skip(wire: Int): Boolean = wire match {
-      case 0 => varint().isDefined
-      case 1 => if (pos + 8 > end) false else { pos += 8; true }
-      case 2 => lenSlice().isDefined
-      case 5 => if (pos + 4 > end) false else { pos += 4; true }
-      case _ => false // groups / reserved: reject
-    }
-    /** Iterate fields; cb must consume the value (false poisons). */
-    def fields(cb: (Long, Int) => Boolean): Boolean = {
-      while (pos < end) {
-        val key = varint().getOrElse(return false)
-        val field = key >>> 3; val wire = (key & 7).toInt
-        if (field == 0) return false
-        if (!cb(field, wire)) return false
-      }
-      true
-    }
+    true
   }
 
   private def str(b: Array[Byte], from: Long, until: Long): String =
@@ -80,17 +70,14 @@ object Orc {
   private def unframe(b: Array[Byte], from: Long, until: Long)
     : Option[Array[Byte]] = {
     val out = new java.io.ByteArrayOutputStream()
-    var p = from
-    while (p < until) {
-      if (p + 3 > until) return None
-      val h = (b(p.toInt) & 0xffL) | ((b(p.toInt + 1) & 0xffL) << 8) |
-        ((b(p.toInt + 2) & 0xffL) << 16)
+    val c = new ByteCursor(b, from, until)
+    while (c.pos < c.end) {
+      val h = c.le(c.pos, 3).getOrElse(return None)
+      c.pos += 3
       val clen = h >>> 1
       val original = (h & 1) == 1
-      p += 3
-      if (clen <= 0 || p + clen > until) return None
-      val chunk = java.util.Arrays.copyOfRange(b, p.toInt, (p + clen).toInt)
-      p += clen
+      if (clen <= 0) return None
+      val chunk = c.bytes(clen).getOrElse(return None)
       if (original) out.write(chunk)
       else out.write(Inflate(chunk, raw = true, cap = 1 << 24)
         .getOrElse(return None))
@@ -110,8 +97,8 @@ object Orc {
     var comp = 0
     var writerVersion = 0L
     var magicOk = false
-    val ps = new PB(b, psStart, b.length - 1L)
-    val psOk = ps.fields { (f, w) =>
+    val ps = new ByteCursor(b, psStart, b.length - 1L)
+    val psOk = fields(ps) { (f, w) =>
       (f, w) match {
         case (1, 0) => ps.varint() match {
           case Some(v) => footerLen = v; true
@@ -125,11 +112,11 @@ object Orc {
           case Some(v) => writerVersion = v; true
           case None => false
         }
-        case (8000, 2) => ps.lenSlice() match {
+        case (8000, 2) => lenSlice(ps) match {
           case Some((a, z)) => magicOk = str(b, a, z) == "ORC"; true
           case None => false
         }
-        case (_, wire) => ps.skip(wire)
+        case (_, wire) => skipWire(ps, wire)
       }
     }
     if (!psOk || !magicOk || footerLen <= 0) return None
@@ -146,19 +133,19 @@ object Orc {
     var nRows = -1L
     var nTypes = 0
     val stripes = Vector.newBuilder[OrcStripe]
-    val fb = new PB(footer, 0L, footer.length.toLong)
-    val fOk = fb.fields { (f, w) =>
+    val fb = new ByteCursor(footer, 0L, footer.length.toLong)
+    val fOk = fields(fb) { (f, w) =>
       (f, w) match {
         case (2, 0) => fb.varint() match {
           case Some(v) => contentLength = v; true
           case None => false
         }
-        case (3, 2) => fb.lenSlice() match { // StripeInformation
+        case (3, 2) => lenSlice(fb) match { // StripeInformation
           case Some((a, z)) =>
             var off = -1L; var il = -1L; var dl = -1L
             var fl = -1L; var nr = -1L
-            val sb = new PB(footer, a, z)
-            val ok = sb.fields { (sf, sw) =>
+            val sb = new ByteCursor(footer, a, z)
+            val ok = fields(sb) { (sf, sw) =>
               (sf, sw) match {
                 case (1, 0) => sb.varint() match {
                   case Some(v) => off = v; true; case None => false
@@ -175,7 +162,7 @@ object Orc {
                 case (5, 0) => sb.varint() match {
                   case Some(v) => nr = v; true; case None => false
                 }
-                case (_, sw2) => sb.skip(sw2)
+                case (_, sw2) => skipWire(sb, sw2)
               }
             }
             if (!ok || off < 0 || nr < 0) return None
@@ -184,7 +171,7 @@ object Orc {
           case None => false
         }
         case (4, 2) => // Type — count them, skip the body
-          fb.lenSlice() match {
+          lenSlice(fb) match {
             case Some(_) => nTypes += 1; true
             case None => false
           }
@@ -192,7 +179,7 @@ object Orc {
           case Some(v) => nRows = v; true
           case None => false
         }
-        case (_, wire) => fb.skip(wire)
+        case (_, wire) => skipWire(fb, wire)
       }
     }
     if (!fOk || nRows < 0 || nTypes == 0) return None
@@ -204,17 +191,11 @@ object Orc {
 
   private final class PW {
     val out = new java.io.ByteArrayOutputStream()
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-      }
-      out.write(v.toInt)
-    }
-    def field(f: Long, wire: Int): Unit = varint((f << 3) | wire)
-    def vint(f: Long, v: Long): Unit = { field(f, 0); varint(v) }
+    def writeVarint(v: Long): Unit = out.write(ByteCursor.varint(v))
+    def field(f: Long, wire: Int): Unit = writeVarint((f << 3) | wire)
+    def vint(f: Long, v: Long): Unit = { field(f, 0); writeVarint(v) }
     def bytes(f: Long, v: Array[Byte]): Unit = {
-      field(f, 2); varint(v.length.toLong); out.write(v)
+      field(f, 2); writeVarint(v.length.toLong); out.write(v)
     }
   }
 
@@ -244,7 +225,7 @@ object Orc {
     // types: struct root + m leaves (kind cycle long/string/double/date)
     val rootT = new PW
     rootT.vint(1, 12L) // STRUCT
-    (0 until m).foreach { j => rootT.field(2, 0); rootT.varint(j + 1L) }
+    (0 until m).foreach { j => rootT.field(2, 0); rootT.writeVarint(j + 1L) }
     fw.bytes(4, rootT.out.toByteArray)
     (0 until m).foreach { j =>
       val t = new PW
@@ -265,9 +246,7 @@ object Orc {
         while (!d.finished()) acc.write(buf, 0, d.deflate(buf))
         d.end()
         val body = acc.toByteArray
-        val h = body.length << 1
-        Array[Byte]((h & 0xff).toByte, ((h >>> 8) & 0xff).toByte,
-          ((h >>> 16) & 0xff).toByte) ++ body
+        ByteCursor.le24(body.length << 1) ++ body
       }
     // PostScript (plain)
     val psw = new PW

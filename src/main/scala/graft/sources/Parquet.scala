@@ -44,110 +44,77 @@ object Parquet {
 
   // ---- thrift compact-protocol reader ------------------------------ //
 
-  /** Bounds-checked cursor over the footer slice (positions Long —
-    * the byte-walk rule). All reads return Option; None poisons the
-    * whole parse.
-    */
-  private final class TC(b: Array[Byte], var pos: Long, val end: Long) {
-    def u8(): Option[Int] =
-      if (pos >= end) None
-      else { val v = b(pos.toInt) & 0xff; pos += 1; Some(v) }
-    def varint(): Option[Long] = {
-      var v = 0L; var shift = 0
-      while (shift <= 63) {
-        val byt = u8().getOrElse(return None)
-        v |= (byt & 0x7fL) << shift
-        if ((byt & 0x80) == 0) return Some(v)
-        shift += 7
-      }
-      None // > 10 bytes: not a varint
-    }
-    def zigzag(): Option[Long] = varint().map(v => (v >>> 1) ^ -(v & 1L))
-    def binary(): Option[Array[Byte]] = varint().flatMap { n =>
-      if (n < 0 || n > (1 << 24) || pos + n > end) None
-      else { val r = b.slice(pos.toInt, (pos + n).toInt); pos += n; Some(r) }
-    }
-    def skipN(n: Long): Boolean =
-      if (n < 0 || pos + n > end) false else { pos += n; true }
+  // Grammar over the shared [[ByteCursor]]: every read is bounds-checked
+  // and a None poisons the whole parse.
 
-    /** Structural skip of one value of compact type `tpe`. */
-    def skip(tpe: Int, depth: Int): Boolean = {
-      if (depth > 16) return false
-      tpe match {
-        case 1 | 2 => true // boolean true/false: value in the type
-        case 3 => skipN(1) // byte
-        case 4 | 5 | 6 => varint().isDefined // i16/i32/i64
-        case 7 => skipN(8) // double (8 bytes)
-        case 8 => binary().isDefined // binary/string
-        case 9 | 10 => // list/set
-          listHeader() match {
-            case Some((n, et)) =>
-              var k = 0L
-              while (k < n) { if (!skip(et, depth + 1)) return false; k += 1 }
-              true
-            case None => false
-          }
-        case 11 => // map
-          varint() match {
-            case Some(n) if n == 0 => true
-            case Some(n) if n > 0 && n <= 100000 =>
-              val kv = u8().getOrElse(return false)
-              val kt = (kv >> 4) & 0xf; val vt = kv & 0xf
-              var k = 0L
-              while (k < n) {
-                if (!skip(kt, depth + 1) || !skip(vt, depth + 1))
-                  return false
-                k += 1
-              }
-              true
-            case _ => false
-          }
-        case 12 => skipStruct(depth + 1) // struct
-        case _ => false
-      }
-    }
+  private def binary(tc: ByteCursor): Option[Array[Byte]] =
+    tc.varint().flatMap(n => if (n > (1 << 24)) None else tc.bytes(n))
 
-    def skipStruct(depth: Int): Boolean = {
-      if (depth > 16) return false
-      var last = 0
-      while (true) {
-        val h = u8().getOrElse(return false)
-        if (h == 0) return true
-        val delta = (h >> 4) & 0xf; val tpe = h & 0xf
-        if (delta == 0) {
-          val id = zigzag().getOrElse(return false)
-          if (id < -32768 || id > 32767) return false
-          last = id.toInt
-        } else last += delta
-        if (!skip(tpe, depth)) return false
-      }
-      true
+  /** Structural skip of one value of compact type `tpe`. */
+  private def skipValue(tc: ByteCursor, tpe: Int, depth: Int): Boolean = {
+    if (depth > 16) return false
+    tpe match {
+      case 1 | 2 => true // boolean true/false: value in the type
+      case 3 => tc.skip(1).isDefined // byte
+      case 4 | 5 | 6 => tc.varint().isDefined // i16/i32/i64
+      case 7 => tc.skip(8).isDefined // double (8 bytes)
+      case 8 => binary(tc).isDefined // binary/string
+      case 9 | 10 => // list/set
+        listHeader(tc) match {
+          case Some((n, et)) =>
+            var k = 0L
+            while (k < n) {
+              if (!skipValue(tc, et, depth + 1)) return false
+              k += 1
+            }
+            true
+          case None => false
+        }
+      case 11 => // map
+        tc.varint() match {
+          case Some(n) if n == 0 => true
+          case Some(n) if n > 0 && n <= 100000 =>
+            val kv = tc.u8().getOrElse(return false)
+            val kt = (kv >> 4) & 0xf; val vt = kv & 0xf
+            var k = 0L
+            while (k < n) {
+              if (!skipValue(tc, kt, depth + 1) || !skipValue(tc, vt, depth + 1))
+                return false
+              k += 1
+            }
+            true
+          case _ => false
+        }
+      case 12 => struct(tc, depth + 1)((_, t) => skipValue(tc, t, depth + 1))
+      case _ => false
     }
+  }
 
-    def listHeader(): Option[(Long, Int)] = u8().flatMap { h =>
-      val sz = (h >> 4) & 0xf; val et = h & 0xf
-      val n = if (sz == 15) varint().getOrElse(return None) else sz.toLong
-      if (n < 0 || n > 100000) None else Some((n, et))
-    }
+  private def listHeader(tc: ByteCursor): Option[(Long, Int)] = {
+    val h = tc.u8().getOrElse(return None)
+    val sz = (h >> 4) & 0xf; val et = h & 0xf
+    val n = if (sz == 15) tc.varint().getOrElse(return None) else sz.toLong
+    if (n < 0 || n > 100000) None else Some((n, et))
+  }
 
-    /** Iterate a struct's fields: cb(fieldId, compactType) must consume
-      * the value (or return false to poison). */
-    def struct(depth: Int)(cb: (Int, Int) => Boolean): Boolean = {
-      if (depth > 16) return false
-      var last = 0
-      while (true) {
-        val h = u8().getOrElse(return false)
-        if (h == 0) return true
-        val delta = (h >> 4) & 0xf; val tpe = h & 0xf
-        if (delta == 0) {
-          val id = zigzag().getOrElse(return false)
-          if (id < -32768 || id > 32767) return false
-          last = id.toInt
-        } else last += delta
-        if (!cb(last, tpe)) return false
-      }
-      true
+  /** Iterate a struct's fields: cb(fieldId, compactType) must consume
+    * the value (or return false to poison). */
+  private def struct(tc: ByteCursor, depth: Int)(
+      cb: (Int, Int) => Boolean): Boolean = {
+    if (depth > 16) return false
+    var last = 0
+    while (true) {
+      val h = tc.u8().getOrElse(return false)
+      if (h == 0) return true
+      val delta = (h >> 4) & 0xf; val tpe = h & 0xf
+      if (delta == 0) {
+        val id = tc.zigzag().getOrElse(return false)
+        if (id < -32768 || id > 32767) return false
+        last = id.toInt
+      } else last += delta
+      if (!cb(last, tpe)) return false
     }
+    true
   }
 
   private def str(b: Array[Byte]): String =
@@ -156,22 +123,18 @@ object Parquet {
   /** Plain (non-compact) little-endian i64 — the Parquet stats
     * encoding for INT64 values. */
   private def statI64(v: Array[Byte]): Option[Long] =
-    if (v.length != 8) None
-    else Some((0 until 8).foldLeft(0L)((a, i) =>
-      a | ((v(i) & 0xffL) << (8 * i))))
+    if (v.length != 8) None else ByteCursor(v).le64(0)
 
   // ---- the census ---------------------------------------------------- //
 
   def parseFooter(b: Array[Byte]): Option[PqMeta] = {
     if (b == null || b.length < 12) return None
-    def magicAt(i: Int): Boolean = b(i) == 'P' && b(i + 1) == 'A' &&
-      b(i + 2) == 'R' && b(i + 3) == '1'
-    if (!magicAt(0) || !magicAt(b.length - 4)) return None
-    val fl = (b(b.length - 8) & 0xffL) | ((b(b.length - 7) & 0xffL) << 8) |
-      ((b(b.length - 6) & 0xffL) << 16) | ((b(b.length - 5) & 0xffL) << 24)
+    val c = ByteCursor(b)
+    if (!c.tagAt(0, "PAR1") || !c.tagAt(b.length - 4, "PAR1")) return None
+    val fl = c.le32(b.length - 8).getOrElse(return None)
     val fStart = b.length - 8L - fl
     if (fl <= 0 || fStart < 4) return None
-    val tc = new TC(b, fStart, b.length - 8L)
+    val tc = new ByteCursor(b, fStart, b.length - 8L)
 
     var version = -1
     var nRows = -1L
@@ -183,10 +146,10 @@ object Parquet {
 
     def readSchemaElement(): Boolean = {
       var name = ""; var numChildren = -1
-      val ok = tc.struct(1) { (id, tpe) =>
+      val ok = struct(tc, 1) { (id, tpe) =>
         (id, tpe) match {
           case (4, 8) =>
-            tc.binary() match {
+            binary(tc) match {
               case Some(v) => name = str(v); true
               case None => false
             }
@@ -195,7 +158,7 @@ object Parquet {
               case Some(v) => numChildren = v.toInt; true
               case None => false
             }
-          case (_, t) => tc.skip(t, 1)
+          case (_, t) => skipValue(tc, t, 1)
         }
       }
       if (!ok) return false
@@ -212,19 +175,19 @@ object Parquet {
       var colType = -1
       var minV: Option[Long] = None; var maxV: Option[Long] = None
       var nulls: Option[Long] = None
-      val ok = tc.struct(3) { (id, tpe) =>
+      val ok = struct(tc, 3) { (id, tpe) =>
         (id, tpe) match {
           case (1, 5) => tc.zigzag() match {
             case Some(v) => colType = v.toInt; true
             case None => false
           }
-          case (3, 9) => tc.listHeader() match { // path_in_schema
+          case (3, 9) => listHeader(tc) match { // path_in_schema
             case Some((n, 8)) =>
               val parts = Vector.newBuilder[String]
               var k = 0L
               var good = true
               while (k < n && good) {
-                tc.binary() match {
+                binary(tc) match {
                   case Some(v) => parts += str(v)
                   case None => good = false
                 }
@@ -251,7 +214,7 @@ object Parquet {
             case None => false
           }
           case (12, 12) => // Statistics
-            tc.struct(4) { (sid, stpe) =>
+            struct(tc, 4) { (sid, stpe) =>
               (sid, stpe) match {
                 case (3, 6) => tc.zigzag() match {
                   case Some(v) => nulls = Some(v); true
@@ -259,20 +222,20 @@ object Parquet {
                 }
                 // max_value/min_value (new) and max/min (legacy):
                 // decode only for INT64 columns
-                case (5, 8) | (1, 8) => tc.binary() match {
+                case (5, 8) | (1, 8) => binary(tc) match {
                   case Some(v) =>
                     if (colType == 2) maxV = statI64(v); true
                   case None => false
                 }
-                case (6, 8) | (2, 8) => tc.binary() match {
+                case (6, 8) | (2, 8) => binary(tc) match {
                   case Some(v) =>
                     if (colType == 2) minV = statI64(v); true
                   case None => false
                 }
-                case (_, t) => tc.skip(t, 4)
+                case (_, t) => skipValue(tc, t, 4)
               }
             }
-          case (_, t) => tc.skip(t, 3)
+          case (_, t) => skipValue(tc, t, 3)
         }
       }
       if (!ok) return false
@@ -284,19 +247,19 @@ object Parquet {
     }
 
     def readColumnChunk(rgIdx: Int): Boolean =
-      tc.struct(2) { (id, tpe) =>
+      struct(tc, 2) { (id, tpe) =>
         (id, tpe) match {
           case (3, 12) => readColumnMeta(rgIdx)
-          case (_, t) => tc.skip(t, 2)
+          case (_, t) => skipValue(tc, t, 2)
         }
       }
 
     def readRowGroup(): Boolean = {
       val rgIdx = rg
       rg += 1
-      tc.struct(1) { (id, tpe) =>
+      struct(tc, 1) { (id, tpe) =>
         (id, tpe) match {
-          case (1, 9) => tc.listHeader() match { // columns
+          case (1, 9) => listHeader(tc) match { // columns
             case Some((n, 12)) =>
               var k = 0L
               while (k < n) {
@@ -306,18 +269,18 @@ object Parquet {
               true
             case _ => false
           }
-          case (_, t) => tc.skip(t, 1)
+          case (_, t) => skipValue(tc, t, 1)
         }
       }
     }
 
-    val ok = tc.struct(0) { (id, tpe) =>
+    val ok = struct(tc, 0) { (id, tpe) =>
       (id, tpe) match {
         case (1, 5) => tc.zigzag() match {
           case Some(v) => version = v.toInt; true
           case None => false
         }
-        case (2, 9) => tc.listHeader() match { // schema
+        case (2, 9) => listHeader(tc) match { // schema
           case Some((n, 12)) =>
             var k = 0L; var good = true
             while (k < n && good) { good = readSchemaElement(); k += 1 }
@@ -328,18 +291,18 @@ object Parquet {
           case Some(v) => nRows = v; true
           case None => false
         }
-        case (4, 9) => tc.listHeader() match { // row_groups
+        case (4, 9) => listHeader(tc) match { // row_groups
           case Some((n, 12)) =>
             var k = 0L; var good = true
             while (k < n && good) { good = readRowGroup(); k += 1 }
             good
           case _ => false
         }
-        case (6, 8) => tc.binary() match {
+        case (6, 8) => binary(tc) match {
           case Some(v) => createdBy = str(v); true
           case None => false
         }
-        case (_, t) => tc.skip(t, 0)
+        case (_, t) => skipValue(tc, t, 0)
       }
     }
     if (!ok || version < 0 || nRows < 0 || !schemaSeen) return None
@@ -355,36 +318,29 @@ object Parquet {
     private var last = List(0) // field-id stack (one frame per struct)
     def bytes: Array[Byte] = out.toByteArray
     def raw(v: Int): Unit = out.write(v & 0xff)
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) { raw(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      raw(v.toInt)
-    }
-    def zigzag(v: Long): Unit = varint((v << 1) ^ (v >> 63))
+    def writeVarint(v: Long): Unit = out.write(ByteCursor.varint(v))
+    def writeZigzag(v: Long): Unit = out.write(ByteCursor.zigzag(v))
     def field(id: Int, tpe: Int): Unit = {
       val delta = id - last.head
       if (delta >= 1 && delta <= 15) raw((delta << 4) | tpe)
-      else { raw(tpe); zigzag(id.toLong) }
+      else { raw(tpe); writeZigzag(id.toLong) }
       last = id :: last.tail
     }
     def push(): Unit = last = 0 :: last
     def pop(): Unit = { raw(0); last = last.tail }
-    def i32(id: Int, v: Long): Unit = { field(id, 5); zigzag(v) }
-    def i64(id: Int, v: Long): Unit = { field(id, 6); zigzag(v) }
+    def i32(id: Int, v: Long): Unit = { field(id, 5); writeZigzag(v) }
+    def i64(id: Int, v: Long): Unit = { field(id, 6); writeZigzag(v) }
     def bin(id: Int, v: Array[Byte]): Unit = {
-      field(id, 8); varint(v.length.toLong); out.write(v)
+      field(id, 8); writeVarint(v.length.toLong); out.write(v)
     }
     def strF(id: Int, v: String): Unit =
       bin(id, v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     def list(id: Int, n: Int, elemType: Int): Unit = {
       field(id, 9)
       if (n < 15) raw((n << 4) | elemType)
-      else { raw(0xf0 | elemType); varint(n.toLong) }
+      else { raw(0xf0 | elemType); writeVarint(n.toLong) }
     }
   }
-
-  private def i64le(v: Long): Array[Byte] =
-    Array.tabulate(8)(i => ((v >>> (8 * i)) & 0xff).toByte)
 
   /** Deterministic per-id parquet file (real footer, filler data
     * region): k = id%3+2 leaf columns alternating INT64/BYTE_ARRAY,
@@ -420,10 +376,10 @@ object Parquet {
         w.field(3, 12) // meta_data struct
         w.push()
         w.i32(1, if (j % 2 == 0) 2L else 6L) // type
-        w.list(2, 1, 5); w.zigzag(0L) // encodings: [PLAIN]
+        w.list(2, 1, 5); w.writeZigzag(0L) // encodings: [PLAIN]
         w.list(3, 1, 8) // path_in_schema
         val p = s"c$j".getBytes("UTF-8")
-        w.varint(p.length.toLong); p.foreach(x => w.raw(x))
+        w.writeVarint(p.length.toLong); p.foreach(x => w.raw(x))
         w.i32(4, (id + j) % 3) // codec
         w.i64(5, rowsPerGroup) // num_values
         w.i64(6, 1000L + 10 * j + r + id % 100) // uncompressed
@@ -433,15 +389,15 @@ object Parquet {
           w.field(12, 12)
           w.push()
           w.i64(3, (id + j) % 3) // null_count
-          w.bin(5, i64le(id + r + rowsPerGroup - 1)) // max_value
-          w.bin(6, i64le(id + r)) // min_value
+          w.bin(5, ByteCursor.le64(id + r + rowsPerGroup - 1)) // max_value
+          w.bin(6, ByteCursor.le64(id + r)) // min_value
           w.pop()
         }
         // an unknown trailing field newer writers might add: the
         // reader must structurally skip it
         w.field(32767, 8)
         val x = s"x$id".getBytes("UTF-8")
-        w.varint(x.length.toLong); x.foreach(c => w.raw(c))
+        w.writeVarint(x.length.toLong); x.foreach(c => w.raw(c))
         w.pop() // ColumnMetaData
         w.pop() // ColumnChunk
       }
@@ -458,8 +414,7 @@ object Parquet {
     val fill = (id % 17 + 3).toInt
     (0 until fill).foreach(j => out.write(((id + j) % 256).toInt))
     out.write(footer)
-    out.write(Array.tabulate[Byte](4)(i =>
-      ((footer.length >>> (8 * i)) & 0xff).toByte))
+    out.write(ByteCursor.le32(footer.length))
     out.write("PAR1".getBytes("UTF-8"))
     out.toByteArray
   }
@@ -481,14 +436,14 @@ object Parquet {
   /** Schema-less census of a bare thrift-compact STRUCT — the triage
     * walk for unknown Thrift payloads (RPC dumps, serialized caches),
     * the exact sibling of the protobuf census (q383): same walker the
-    * parquet footer uses ([[TC]]), counting per-type fields, nesting
-    * depth, zigzag int sums and string byte volume instead of
-    * extracting known ids. Trailing bytes, reserved types, depth
-    * bombs and truncation return None.
+    * parquet footer uses ([[ByteCursor]] + the compact grammar above),
+    * counting per-type fields, nesting depth, zigzag int sums and
+    * string byte volume instead of extracting known ids. Trailing
+    * bytes, reserved types, depth bombs and truncation return None.
     */
   def thriftCensus(b: Array[Byte]): Option[ThriftCensus] = {
     if (b == null || b.length == 0) return None
-    val tc = new TC(b, 0L, b.length.toLong)
+    val tc = ByteCursor(b)
     var nFields = 0L; var nInt = 0L; var nBool = 0L; var nStr = 0L
     var nDouble = 0L; var nList = 0L; var nStruct = 0L
     var maxField = 0L; var maxDepth = 0
@@ -498,18 +453,18 @@ object Parquet {
       if (depth > maxDepth) maxDepth = depth
       tpe match {
         case 1 | 2 => nBool += 1; true
-        case 3 => tc.skipN(1)
+        case 3 => tc.skip(1).isDefined
         case 4 | 5 | 6 =>
           tc.zigzag() match {
             case Some(v) => nInt += 1; intSum += v; true
             case None => false
           }
-        case 7 => nDouble += 1; tc.skipN(8)
-        case 8 => tc.binary() match {
+        case 7 => nDouble += 1; tc.skip(8).isDefined
+        case 8 => binary(tc) match {
           case Some(v) => nStr += 1; strBytes += v.length; true
           case None => false
         }
-        case 9 | 10 => tc.listHeader() match {
+        case 9 | 10 => listHeader(tc) match {
           case Some((n, et)) =>
             nList += 1
             var k = 0L
@@ -539,12 +494,12 @@ object Parquet {
               }
             case _ => false
           }
-        case 12 => nStruct += 1; struct(depth + 1)
+        case 12 => nStruct += 1; fields(depth + 1)
         case _ => false // reserved types: reject
       }
     }
-    def struct(depth: Int): Boolean =
-      tc.struct(depth) { (id, tpe) =>
+    def fields(depth: Int): Boolean =
+      struct(tc, depth) { (id, tpe) =>
         if (id < 0) false
         else {
           nFields += 1
@@ -552,7 +507,7 @@ object Parquet {
           value(tpe, depth)
         }
       }
-    if (!struct(1)) return None
+    if (!fields(1)) return None
     if (tc.pos != tc.end) return None // trailing bytes: misparse
     Some(ThriftCensus(nFields, nInt, nBool, nStr, nDouble, nList,
       nStruct, maxField, maxDepth, intSum, strBytes))
@@ -569,10 +524,10 @@ object Parquet {
     w.field(3, if (id % 2 == 0) 1 else 2) // bool in the type nibble
     w.field(4, 7) // double
     val dv = java.lang.Double.doubleToLongBits((id % 7).toDouble + 0.25)
-    (0 until 8).foreach(k => w.raw(((dv >>> (8 * k)) & 0xff).toInt))
+    ByteCursor.le64(dv).foreach(x => w.raw(x))
     val n = (id % 3 + 1).toInt
     w.list(5, n, 6)
-    (0 until n).foreach(j => w.zigzag(id * 10 + j))
+    (0 until n).foreach(j => w.writeZigzag(id * 10 + j))
     w.field(6, 12) // nested struct
     w.push()
     w.i32(1, -(id % 50) - 1) // negative zigzag

@@ -30,12 +30,8 @@ object Pcap {
 
   def census(b: Array[Byte]): Option[PcapCensus] = {
     if (b == null || b.length < 24) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def raw32be(i: Long): Long = (u8(i).toLong << 24) |
-      (u8(i + 1).toLong << 16) | (u8(i + 2).toLong << 8) | u8(i + 3)
-    def raw32le(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    val magicBe = raw32be(0)
+    val c = ByteCursor(b)
+    val magicBe = c.be32(0).getOrElse(return None)
     val (little, nanos) = magicBe match {
       case 0xA1B2C3D4L => (false, false)
       case 0xA1B23C4DL => (false, true)
@@ -43,23 +39,21 @@ object Pcap {
       case 0x4D3CB2A1L => (true, true)
       case _ => return None
     }
-    def u32(i: Long): Long = if (little) raw32le(i) else raw32be(i)
-    def u16(i: Long): Int =
-      if (little) u8(i) | (u8(i + 1) << 8) else (u8(i) << 8) | u8(i + 1)
-    if (u16(4) != 2) return None // major version
-    val snaplen = u32(16)
-    val linkType = u32(20).toInt
+    // major version
+    if (c.uint(4, 2, little).getOrElse(return None) != 2) return None
+    val snaplen = c.uint(16, 4, little).getOrElse(return None)
+    val linkType = c.uint(20, 4, little).getOrElse(return None).toInt
     var i = 24L
     var n = 0; var bytes = 0L
     var ipv4 = 0; var tcp = 0; var udp = 0; var arp = 0; var other = 0
     var firstTs = -1L; var lastTs = -1L
     val n1 = b.length.toLong
     while (i < n1) {
-      if (i + 16 > n1) return None // torn packet header
-      val sec = u32(i)
-      val frac = u32(i + 4)
-      val incl = u32(i + 8)
-      val orig = u32(i + 12)
+      // a torn packet header reads None
+      val sec = c.uint(i, 4, little).getOrElse(return None)
+      val frac = c.uint(i + 4, 4, little).getOrElse(return None)
+      val incl = c.uint(i + 8, 4, little).getOrElse(return None)
+      val orig = c.uint(i + 12, 4, little).getOrElse(return None)
       if (incl > snaplen || incl > orig || i + 16 + incl > n1) return None
       val tsMs = sec * 1000L + (if (nanos) frac / 1000000L else frac / 1000L)
       if (firstTs < 0) firstTs = tsMs
@@ -69,11 +63,11 @@ object Pcap {
       val p = i + 16
       if (linkType == 1 && incl >= 14) {
         // Ethernet II ethertype is ALWAYS big-endian (network order)
-        val ethertype = (u8(p + 12) << 8) | u8(p + 13)
+        val ethertype = c.be16(p + 12).getOrElse(return None)
         ethertype match {
           case 0x0800 if incl >= 14 + 20 =>
             ipv4 += 1
-            u8(p + 14 + 9) match { // IPv4 protocol field
+            c.u8(p + 14 + 9).getOrElse(return None) match { // IPv4 protocol field
               case 6 => tcp += 1
               case 17 => udp += 1
               case _ => other += 1
@@ -98,14 +92,8 @@ object Pcap {
   def synthPcap(id: Long): Array[Byte] = {
     val little = id % 2 == 0
     val nanos = id % 4 == 3
-    def w32(v: Long): Array[Byte] =
-      if (little) Array[Byte](v.toByte, (v >>> 8).toByte,
-        (v >>> 16).toByte, (v >>> 24).toByte)
-      else Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-        (v >>> 8).toByte, v.toByte)
-    def w16(v: Int): Array[Byte] =
-      if (little) Array[Byte](v.toByte, (v >>> 8).toByte)
-      else Array[Byte]((v >>> 8).toByte, v.toByte)
+    def w32(v: Long): Array[Byte] = ByteCursor.uint(v, 4, little)
+    def w16(v: Int): Array[Byte] = ByteCursor.uint(v, 2, little)
     val out = new java.io.ByteArrayOutputStream()
     out.write(w32(if (nanos) 0xA1B23C4DL else 0xA1B2C3D4L))
     out.write(w16(2)); out.write(w16(4)) // version 2.4
@@ -127,7 +115,7 @@ object Pcap {
       // Ethernet: dst/src MACs + ethertype (network order always)
       (0 until 12).foreach(j => out.write(((id + j) % 256).toInt))
       val ethertype = if (kind == 2) 0x0806 else 0x0800
-      out.write(ethertype >>> 8); out.write(ethertype & 0xff)
+      out.write(ByteCursor.be16(ethertype))
       if (kind != 2) {
         // minimal IPv4 header: version/IHL, ..., protocol at +9
         out.write(0x45)
@@ -173,20 +161,14 @@ object Pcap {
     */
   def censusNg(b: Array[Byte]): Option[PcapngCensus] = {
     if (b == null || b.length < 28) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def raw32be(i: Long): Long = (u8(i).toLong << 24) |
-      (u8(i + 1).toLong << 16) | (u8(i + 2).toLong << 8) | u8(i + 3)
-    def raw32le(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    if (raw32be(0) != 0x0A0D0D0AL) return None // SHB block type
-    val little = raw32be(8) match {
+    val c = ByteCursor(b)
+    // SHB block type
+    if (c.be32(0).getOrElse(return None) != 0x0A0D0D0AL) return None
+    val little = c.be32(8).getOrElse(return None) match {
       case 0x1A2B3C4DL => false
       case 0x4D3C2B1AL => true
       case _ => return None
     }
-    def u32(i: Long): Long = if (little) raw32le(i) else raw32be(i)
-    def u16(i: Long): Int =
-      if (little) u8(i) | (u8(i + 1) << 8) else (u8(i) << 8) | u8(i + 1)
     val n1 = b.length.toLong
     // per-interface (linkType, tsresol power) in IDB order
     val ifaces = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
@@ -197,10 +179,12 @@ object Pcap {
     var sawShb = false
     while (i < n1) {
       if (i + 12 > n1) return None // torn block header
-      val btype = u32(i)
-      val blen = u32(i + 4)
+      val btype = c.uint(i, 4, little).getOrElse(return None)
+      val blen = c.uint(i + 4, 4, little).getOrElse(return None)
       if (blen < 12 || (blen & 3) != 0 || i + blen > n1) return None
-      if (u32(i + blen - 4) != blen) return None // trailing length echo
+      // trailing length echo
+      if (c.uint(i + blen - 4, 4, little).getOrElse(return None) != blen)
+        return None
       val body = i + 8
       val bodyEnd = i + blen - 4
       /** Option walk from `p`: returns Some(map) of the options we
@@ -211,13 +195,14 @@ object Pcap {
         var res = 6 // default: microseconds
         while (p < bodyEnd) {
           if (p + 4 > bodyEnd) return None
-          val code = u16(p); val olen = u16(p + 2)
+          val code = c.uint(p, 2, little).getOrElse(return None)
+          val olen = c.uint(p + 2, 2, little).getOrElse(return None)
           val vEnd = p + 4 + olen
           if (vEnd > bodyEnd) return None
           if (code == 0) return Some(res) // opt_endofopt
           if (code == 9) { // if_tsresol
             if (olen != 1) return None
-            val v = u8(p + 4)
+            val v = c.u8(p + 4).getOrElse(return None)
             if ((v & 0x80) != 0 || v > 9) return None // fixed-point / absurd
             res = v
           }
@@ -228,22 +213,24 @@ object Pcap {
       btype match {
         case 0x0A0D0D0AL => // SHB (the first, or a new section)
           if (i + 28 > n1 || body + 12 > bodyEnd) return None
-          if (u16(body + 4) != 1) return None // major version
+          if (c.uint(body + 4, 2, little).getOrElse(return None) != 1)
+            return None // major version
           if (sawShb) return None // multi-section: out of scope
           sawShb = true
         case 1L => // IDB
           if (body + 8 > bodyEnd) return None
-          val lt = u16(body)
+          val lt = c.uint(body, 2, little).getOrElse(return None).toInt
           val res = tsresolOpt(body + 8).getOrElse(return None)
           ifaces += ((lt, res))
         case 6L => // EPB
           if (body + 20 > bodyEnd) return None
-          val ifId = u32(body)
+          val ifId = c.uint(body, 4, little).getOrElse(return None)
           if (ifId >= ifaces.length) return None // undeclared interface
           val (lt, res) = ifaces(ifId.toInt)
-          val ts = (u32(body + 4) << 32) | u32(body + 8)
-          val incl = u32(body + 12)
-          val orig = u32(body + 16)
+          val ts = (c.uint(body + 4, 4, little).getOrElse(return None) << 32) |
+            c.uint(body + 8, 4, little).getOrElse(return None)
+          val incl = c.uint(body + 12, 4, little).getOrElse(return None)
+          val orig = c.uint(body + 16, 4, little).getOrElse(return None)
           if (incl > orig || body + 20 + incl > bodyEnd) return None
           // resolution 10^-res per tick → milliseconds
           val tsMs =
@@ -255,11 +242,11 @@ object Pcap {
           bytes += orig
           val p = body + 20
           if (lt == 1 && incl >= 14) {
-            val ethertype = (u8(p + 12) << 8) | u8(p + 13)
+            val ethertype = c.be16(p + 12).getOrElse(return None)
             ethertype match {
               case 0x0800 if incl >= 14 + 20 =>
                 ipv4 += 1
-                u8(p + 14 + 9) match {
+                c.u8(p + 14 + 9).getOrElse(return None) match {
                   case 6 => tcp += 1
                   case 17 => udp += 1
                   case _ => other += 1
@@ -289,14 +276,8 @@ object Pcap {
     val little = id % 2 == 0
     val nanos = id % 4 == 3
     val twoIf = id % 3 == 0
-    def w32(v: Long): Array[Byte] =
-      if (little) Array[Byte](v.toByte, (v >>> 8).toByte,
-        (v >>> 16).toByte, (v >>> 24).toByte)
-      else Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-        (v >>> 8).toByte, v.toByte)
-    def w16(v: Int): Array[Byte] =
-      if (little) Array[Byte](v.toByte, (v >>> 8).toByte)
-      else Array[Byte]((v >>> 8).toByte, v.toByte)
+    def w32(v: Long): Array[Byte] = ByteCursor.uint(v, 4, little)
+    def w16(v: Int): Array[Byte] = ByteCursor.uint(v, 2, little)
     def block(btype: Long, body: Array[Byte]): Array[Byte] = {
       val pad = (4 - body.length % 4) % 4
       val blen = 12L + body.length + pad
@@ -351,7 +332,7 @@ object Pcap {
       val pkt = new java.io.ByteArrayOutputStream()
       (0 until 12).foreach(j => pkt.write(((id + j) % 256).toInt))
       val ethertype = if (kind == 2) 0x0806 else 0x0800
-      pkt.write(ethertype >>> 8); pkt.write(ethertype & 0xff)
+      pkt.write(ByteCursor.be16(ethertype))
       if (kind != 2) {
         pkt.write(0x45)
         (1 until 9).foreach(j => pkt.write(((id + j) % 256).toInt))

@@ -34,45 +34,31 @@ object Proto {
 
   private def walk(b: Array[Byte], from: Long, hi: Long,
       probeNested: Boolean): Option[ProtoCensus] = {
-    var i = from
+    val c = new ByteCursor(b, from, hi)
     var nv = 0; var n64 = 0; var nl = 0; var n32 = 0; var nested = 0
     var maxField = 0
     var vsum = 0L; var lbytes = 0L
-    def varint(): Option[Long] = {
-      var v = 0L; var shift = 0; var k = 0
-      while (k < 10) {
-        if (i >= hi) return None
-        val byt = b(i.toInt) & 0xff
-        i += 1
-        v |= (byt & 0x7fL) << shift
-        if ((byt & 0x80) == 0) return Some(v)
-        shift += 7; k += 1
-      }
-      None
-    }
-    while (i < hi) {
-      val tag = varint().getOrElse(return None)
+    while (c.pos < c.end) {
+      val tag = c.varint().getOrElse(return None)
       val field = (tag >>> 3).toInt
       val wt = (tag & 7).toInt
       if (field < 1 || field > 0x1FFFFFFF) return None
       if (field > maxField) maxField = field
       wt match {
         case 0 =>
-          vsum += varint().getOrElse(return None); nv += 1
+          vsum += c.varint().getOrElse(return None); nv += 1
         case 1 =>
-          if (i + 8 > hi) return None
-          i += 8; n64 += 1
+          c.skip(8).getOrElse(return None); n64 += 1
         case 2 =>
-          val len = varint().getOrElse(return None)
-          if (len < 0 || i + len > hi) return None
+          val len = c.varint().getOrElse(return None)
+          val at = c.pos
+          c.skip(len).getOrElse(return None)
           nl += 1; lbytes += len
           if (probeNested && len > 0 &&
-            walk(b, i, i + len, probeNested = false).isDefined)
+            walk(b, at, at + len, probeNested = false).isDefined)
             nested += 1
-          i += len
         case 5 =>
-          if (i + 4 > hi) return None
-          i += 4; n32 += 1
+          c.skip(4).getOrElse(return None); n32 += 1
         case _ => return None // groups (3/4) and invalid types
       }
     }
@@ -82,19 +68,8 @@ object Proto {
 
   // ---- fixture ------------------------------------------------------ //
 
-  private def varintBytes(v: Long): Array[Byte] = {
-    var n = v
-    val out = new java.io.ByteArrayOutputStream(10)
-    do {
-      val byt = (n & 0x7f).toInt
-      n = n >>> 7
-      out.write(if (n != 0) byt | 0x80 else byt)
-    } while (n != 0)
-    out.toByteArray
-  }
-
   private def tag(field: Int, wt: Int): Array[Byte] =
-    varintBytes((field.toLong << 3) | wt)
+    ByteCursor.varint((field.toLong << 3) | wt)
 
   /** Deterministic per-id message: id%5+1 varint fields (values
     * id*3+k), one fixed64, one fixed32, a string field, and a NESTED
@@ -103,18 +78,18 @@ object Proto {
     val out = new java.io.ByteArrayOutputStream()
     val nV = (id % 5 + 1).toInt
     (1 to nV).foreach { k =>
-      out.write(tag(k, 0)); out.write(varintBytes(id * 3 + k))
+      out.write(tag(k, 0)); out.write(ByteCursor.varint(id * 3 + k))
     }
     out.write(tag(9, 1)); out.write(Array.fill(8)(0x11.toByte))
     out.write(tag(10, 5)); out.write(Array.fill(4)(0x22.toByte))
     val s = s"blob ${id % 10}".getBytes("UTF-8")
-    out.write(tag(11, 2)); out.write(varintBytes(s.length.toLong))
+    out.write(tag(11, 2)); out.write(ByteCursor.varint(s.length.toLong))
     out.write(s)
     val inner = new java.io.ByteArrayOutputStream()
-    inner.write(tag(1, 0)); inner.write(varintBytes(id % 100))
-    inner.write(tag(2, 0)); inner.write(varintBytes(7L))
+    inner.write(tag(1, 0)); inner.write(ByteCursor.varint(id % 100))
+    inner.write(tag(2, 0)); inner.write(ByteCursor.varint(7L))
     val ib = inner.toByteArray
-    out.write(tag(12, 2)); out.write(varintBytes(ib.length.toLong))
+    out.write(tag(12, 2)); out.write(ByteCursor.varint(ib.length.toLong))
     out.write(ib)
     out.toByteArray
   }

@@ -34,16 +34,14 @@ object Sqlite {
       if (b(k) != magic.charAt(k).toByte) return None
       k += 1
     }
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def u16(i: Long): Int = (u8(i) << 8) | u8(i + 1)
-    def u32(i: Long): Long = (u16(i).toLong << 16) | u16(i + 2)
-    val pageSize = u16(16) match {
+    val db = ByteCursor(b)
+    val pageSize = db.be16(16).getOrElse(return None) match {
       case 1 => 65536
       case v => v
     }
     if (pageSize < 512 || (pageSize & (pageSize - 1)) != 0) return None
-    val nPages = u32(28)
-    val encoding = u32(56) match {
+    val nPages = db.be32(28).getOrElse(return None)
+    val encoding = db.be32(56).getOrElse(return None) match {
       case 1 => "utf-8"
       case 2 => "utf-16le"
       case 3 => "utf-16be"
@@ -54,10 +52,10 @@ object Sqlite {
     // 100-byte file header
     val ph = 100L
     if (ph + 8 > b.length) return None
-    val pageType = u8(ph)
+    val pageType = db.u8(ph).getOrElse(return None)
     if (pageType == 0x05) return None // interior root: out of scope
     if (pageType != 0x0D) return None
-    val nCells = u16(ph + 3)
+    val nCells = db.be16(ph + 3).getOrElse(return None)
     if (nCells > 10000) return None
     // the cell-pointer array must fit in the buffer BEFORE we index
     // into it — a truncated file whose header claims more cells than
@@ -66,38 +64,34 @@ object Sqlite {
     val tables = Vector.newBuilder[SqliteTable]
     var c = 0
     while (c < nCells) {
-      val cellPtr = u16(ph + 8 + 2L * c).toLong
+      val cellPtr = db.be16(ph + 8 + 2L * c).getOrElse(return None).toLong
       if (cellPtr < ph || cellPtr >= b.length) return None
-      val cur = new Cur(b, cellPtr)
-      val payloadLen = cur.varint().getOrElse(return None)
-      cur.varint().getOrElse(return None) // rowid
+      val cur = new ByteCursor(b, cellPtr, b.length)
+      val payloadLen = bigVarint(cur).getOrElse(return None)
+      bigVarint(cur).getOrElse(return None) // rowid
       // overflow (payload larger than what fits in-page): out of scope
       if (cur.pos + payloadLen > b.length) return None
       if (payloadLen > pageSize - 35L) return None
       val recStart = cur.pos
-      val hdrLen = cur.varint().getOrElse(return None)
+      val hdrLen = bigVarint(cur).getOrElse(return None)
       if (hdrLen < 0 || recStart + hdrLen > b.length) return None
       val serials = Vector.newBuilder[Long]
       while (cur.pos < recStart + hdrLen)
-        serials += cur.varint().getOrElse(return None)
+        serials += bigVarint(cur).getOrElse(return None)
       val st = serials.result()
       if (st.length < 5) return None
       var vp = recStart + hdrLen
       def readVal(serial: Long): Option[(String, Long)] = {
         // returns (text-or-stringified, int value) per serial type
-        def ints(n: Int): Long = {
-          var v = 0L; var i = 0
-          while (i < n) { v = (v << 8) | u8(vp + i); i += 1 }
-          // sign-extend
-          if (n < 8 && (v & (1L << (8 * n - 1))) != 0) v - (1L << (8 * n))
-          else v
-        }
         serial match {
           case 0 => Some(("", 0L))
           case s if s >= 1 && s <= 6 =>
             val n = Seq(1, 2, 3, 4, 6, 8)(s.toInt - 1)
-            if (vp + n > b.length) return None
-            val v = ints(n); vp += n; Some((v.toString, v))
+            val raw = db.be(vp, n).getOrElse(return None)
+            // sign-extend
+            val v = if (n < 8 && (raw & (1L << (8 * n - 1))) != 0)
+              raw - (1L << (8 * n)) else raw
+            vp += n; Some((v.toString, v))
           case 8 => Some(("0", 0L))
           case 9 => Some(("1", 1L))
           case s if s >= 13 && s % 2 == 1 =>
@@ -111,8 +105,8 @@ object Sqlite {
             if (vp + len > b.length) return None
             vp += len; Some(("", 0L)) // blob: skipped
           case 7 =>
-            if (vp + 8 > b.length) return None
-            val v = java.lang.Double.longBitsToDouble(ints(8))
+            val v = java.lang.Double.longBitsToDouble(
+              db.be64(vp).getOrElse(return None))
             vp += 8; Some((v.toString, v.toLong))
           case _ => None
         }
@@ -131,29 +125,20 @@ object Sqlite {
 
   /** SQLite varints are BIG-endian 7-bit groups, at most 9 bytes (the
     * 9th contributes all 8 bits). */
-  private final class Cur(b: Array[Byte], var pos: Long) {
-    def varint(): Option[Long] = {
-      var v = 0L; var k = 0
-      while (k < 8) {
-        if (pos >= b.length) return None
-        val byt = b(pos.toInt) & 0xff
-        pos += 1
-        if ((byt & 0x80) == 0) return Some((v << 7) | byt)
-        v = (v << 7) | (byt & 0x7f)
-        k += 1
-      }
-      if (pos >= b.length) return None
-      val last = b(pos.toInt) & 0xff
-      pos += 1
-      Some((v << 8) | last)
+  private def bigVarint(c: ByteCursor): Option[Long] = {
+    var v = 0L; var k = 0
+    while (k < 8) {
+      val byt = c.u8().getOrElse(return None)
+      if ((byt & 0x80) == 0) return Some((v << 7) | byt)
+      v = (v << 7) | (byt & 0x7f)
+      k += 1
     }
+    c.u8().map(last => (v << 8) | last)
   }
 
   // ---- fixture ------------------------------------------------------ //
 
-  private def be16(v: Int) = Array((v >>> 8).toByte, v.toByte)
-  private def be32(v: Long) = Array((v >>> 24).toByte, (v >>> 16).toByte,
-    (v >>> 8).toByte, v.toByte)
+  import ByteCursor.{be16, be32}
 
   /** Deterministic per-id database: 512-byte pages, id%3+1 tables in
     * sqlite_master (plus an index row the table filter must skip),

@@ -48,12 +48,6 @@ object Warc {
 
   // ---- RFC 1952 member walk --------------------------------------------
 
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
   /** Walk a (possibly multi-member) gzip stream member by member,
     * verifying each member's header, trailer CRC32, and ISIZE, and
     * recording each member's byte offset + compressed length. None on
@@ -62,6 +56,7 @@ object Warc {
   def gunzipMembers(b: Array[Byte]): Option[Vector[GzMember]] = {
     if (b.length == 0) return None // an empty stream is not a gzip stream
     val out = Vector.newBuilder[GzMember]
+    val c = ByteCursor(b)
     var pos = 0L // Long cursor: size fields are unsigned 32-bit
     var total = 0L
     while (pos < b.length) {
@@ -74,8 +69,7 @@ object Warc {
       if ((flg & 0xe0) != 0) return None // reserved bits must be zero
       pos += 10
       if ((flg & 4) != 0) { // FEXTRA
-        if (pos + 2 > b.length) return None
-        val xlen = u16le(b, pos.toInt)
+        val xlen = c.le16(pos).getOrElse(return None)
         pos += 2 + xlen
         if (pos > b.length) return None
       }
@@ -88,10 +82,10 @@ object Warc {
         pos += 1; skip -= 1
       }
       if ((flg & 2) != 0) { // FHCRC: low 16 bits of header CRC32
-        if (pos + 2 > b.length) return None
+        val stored = c.le16(pos).getOrElse(return None)
         val crc = new java.util.zip.CRC32()
         crc.update(b, start.toInt, (pos - start).toInt)
-        if ((crc.getValue & 0xffffL) != u16le(b, pos.toInt)) return None
+        if ((crc.getValue & 0xffffL) != stored) return None
         pos += 2
       }
       val inf = new java.util.zip.Inflater(true)
@@ -112,11 +106,11 @@ object Warc {
         }
         pos += (b.length - pos) - inf.getRemaining // deflate bytes consumed
       } finally inf.end()
-      if (pos + 8 > b.length) return None // trailer
       val data = member.toByteArray
-      if (u32le(b, pos.toInt) != crc.getValue) return None
-      if (u32le(b, pos.toInt + 4) != (data.length.toLong & 0xffffffffL))
-        return None
+      // trailer: CRC32 and ISIZE (input size mod 2^32)
+      if (c.le32(pos).getOrElse(return None) != crc.getValue) return None
+      if (c.le32(pos + 4).getOrElse(return None) !=
+        (data.length.toLong & 0xffffffffL)) return None
       pos += 8
       out += GzMember(start, pos - start, data)
     }

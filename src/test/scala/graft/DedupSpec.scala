@@ -156,31 +156,6 @@ class DedupSpec extends SparkSpec {
     assert(all.toSeq == Seq(10L, 11L, 13L))
   }
 
-  test("deltaDedupBloom output is identical to the exact anti-join path") {
-    val corpus = (1L to 200L).map(i => (i, s"corpus doc number $i body"))
-      .toDF("doc_id", "text")
-    val batch = ((301L to 350L).map(i => (i, s"fresh doc $i")) ++
-      (1L to 20L).map(i => (1000L + i, s"corpus doc number $i body")) ++ // corpus dups
-      Seq((900L, "unique batch doc"), (901L, "twin"), (902L, "twin")) ++ // in-batch dup pair
-      Seq((950L, null.asInstanceOf[String]),   // null text: must not vanish
-        (951L, null.asInstanceOf[String])))    // from the bloom path
-      .toDF("doc_id", "text")
-    val exact = Dedup.deltaDedup(batch, corpus, "doc_id", "text")
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    // tight filter (high collision pressure) AND a roomy one: same answer
-    Seq(50L -> 0.5, 1000L -> 0.01).foreach { case (cap, fpp) =>
-      val bloom = Dedup.deltaDedupBloom(batch, corpus, "doc_id", "text",
-        expectedCorpusDocs = cap, fpp = fpp)
-        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-      assert(bloom == exact, s"bloom path diverged at cap=$cap fpp=$fpp")
-    }
-    // sanity: the corpus dups were dropped, the twin pair kept min-id,
-    // and the null-text group survives (one representative)
-    assert(!exact.exists(id => id > 1000L && id <= 1020L))
-    assert(exact.contains(900L) && exact.contains(901L) && !exact.contains(902L))
-    assert(exact.contains(950L) && !exact.contains(951L))
-  }
-
   test("dupSpanCoverage: interval union of cross-doc duplicated n-grams") {
     val docs = Seq(
       (1L, "a b c d e"),     // grams at 1..3; "a b c","b c d" shared with doc 2

@@ -335,6 +335,25 @@ class MultimodalSpec extends SparkSpec {
       b.n_tracks == (10 % 3 + 1))
   }
 
+  test("ISO-BMFF: an empty mvhd/mdhd box ending the buffer rejects, never throws") {
+    def be32(v: Long) = Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
+      (v >>> 8).toByte, v.toByte)
+    def box(typ: String, body: Array[Byte]): Array[Byte] =
+      be32(body.length + 8L) ++ typ.getBytes("US-ASCII") ++ body
+    val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ be32(0L))
+    // ftyp + moov[mvhd(empty)]: the version byte would sit at b.length
+    val emptyMvhd = ftyp ++ box("moov", box("mvhd", Array.empty[Byte]))
+    assert(emptyMvhd.length == 32)
+    assert(Binary.parseVideoMeta(emptyMvhd).isEmpty)
+    // a valid v0 mvhd, then trak[mdia[mdhd(empty)]] ending the buffer
+    val mvhd = box("mvhd", new Array[Byte](12) ++ be32(1000L) ++ be32(5000L))
+    val emptyMdhd = ftyp ++ box("moov", mvhd ++
+      box("trak", box("mdia", box("mdhd", Array.empty[Byte]))))
+    assert(emptyMdhd.length == 76)
+    assert(Binary.parseVideoMeta(emptyMdhd).isDefined) // passes the gate
+    assert(Binary.parseTracks(emptyMdhd).isEmpty)
+  }
+
   test("PNG pixel codec: exact round-trip through all five filters") {
     import graft.multimodal.Binary
     // 7 rows → filter types 0,1,2,3,4,0,1 all execute; odd width makes

@@ -273,6 +273,11 @@ class PropertySpec extends AnyFunSuite {
       graft.multimodal.Binary.parseFlacTags(b)
       graft.multimodal.Binary.parseOggVorbisMeta(b)
       graft.multimodal.Ebml.parseMkv(b)
+      Binary.pngDecode(b); Binary.gifDecode(b); Binary.jpegDecode(b)
+      Binary.jpegDecodeColor420(b); Binary.jpegDecodeProgressive(b)
+      Binary.wavPcmDecode(b); Binary.flacDecode(b)
+      Binary.parseVideoMeta(b); Binary.parseOpusTags(b)
+      Warc.gunzipAll(b)
       true
     })
     // mutation fuzz: corrupt VALID containers anywhere — parsers must
@@ -341,6 +346,17 @@ class PropertySpec extends AnyFunSuite {
         graft.multimodal.Binary.synthOggVorbis(id)))
       graft.multimodal.Ebml.parseMkv(mut(
         graft.multimodal.Ebml.synthMkv(id)))
+      Binary.pngDecode(mut(Binary.synthPng(id)))
+      Binary.gifDecode(mut(Binary.synthGif(id)))
+      Binary.jpegDecode(mut(Binary.synthJpeg(id)))
+      Binary.jpegDecode(mut(Binary.synthJpegRst(id)))
+      Binary.jpegDecodeColor420(mut(Binary.synthColorJpeg(id)))
+      Binary.jpegDecodeProgressive(mut(Binary.synthJpegProg(id)))
+      Binary.wavPcmDecode(mut(Binary.synthWavPcm(id)))
+      Binary.flacDecode(mut(Binary.synthFlac(id)))
+      Binary.parseVideoMeta(mut(Binary.synthVideoHeader(id)))
+      Binary.parseOpusTags(mut(Binary.synthOggOpus(id)))
+      Warc.gunzipAll(mut(graft.sources.Archives.synthTarGz(id)))
       true
     })
     // DOCX XML-level fuzz: container byte flips die at the CRC gate,
