@@ -153,12 +153,14 @@ object Bench {
       // label the jobs so an event-log reading of a sweep attributes
       // every stage to its query
       sc.setJobDescription(s"bench: $name")
-      // each query starts from a clean slate (its OWN reruns still hit
-      // its caches): neighbours' retained caches and GC debt measured
-      // 2-8× slower mid-sweep than isolated. releaseAll also unpersists
-      // RDDs the registry cannot see (localCheckpoint blocks); CLEAR
-      // CACHE drops CacheManager leftovers; the gc + short drain lets
-      // the ContextCleaner reap dead broadcast blocks.
+      // each query starts from a clean slate: neighbours' retained
+      // caches and GC debt measured 2-8× slower mid-sweep than
+      // isolated. Its own timed reps still hit its persisted frames
+      // whose plans repeat; a localCheckpoint or PrefixScan (and any
+      // persist above one) is rebuilt every rep. releaseAll also
+      // unpersists RDDs the registry cannot see (localCheckpoint
+      // blocks); CLEAR CACHE drops CacheManager leftovers; the gc +
+      // short drain lets the ContextCleaner reap dead broadcast blocks.
       graft.core.Caches.releaseAll()
       spark.sql("CLEAR CACHE")
       System.gc()

@@ -1,52 +1,6 @@
 package graft.core
 
-import org.apache.spark.{Partition, TaskContext}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-
-/** Pass-through over a localCheckpoint's block-backed RDD that makes
-  * re-actioning a TRIMMED checkpoint fail with a NAMED error instead
-  * of Spark's bare "checkpoint block not found". [[kill]] flips the
-  * tombstone and releases the parent's blocks; any later action
-  * re-serializes this RDD into its task binary, so the flag reaches
-  * executors and [[compute]] raises before the doomed block fetch
-  * (and [[getPartitions]] raises driver-side when the partition array
-  * was never memoized). A live wrapper adds one virtual call per
-  * partition — nothing per row.
-  */
-private[graft] final class GuardedCheckpointRdd(
-    parent: RDD[InternalRow], key: String)
-  extends RDD[InternalRow](parent) {
-
-  @volatile private var dead = false
-
-  private def check(): Unit = if (dead) throw new IllegalStateException(
-    s"graft checkpointOnce('$key'): this frame's localCheckpoint blocks " +
-      "were released (per-key LRU trim past maxCkPerKey, or " +
-      "Caches.releaseAll session teardown); re-actioning a trimmed " +
-      "checkpoint is a caller lifecycle bug — re-derive the frame instead")
-
-  /** Tombstone + release the parent checkpoint's blocks (async). */
-  private[graft] def kill(): Unit = {
-    dead = true
-    firstParent[InternalRow].unpersist(false)
-  }
-
-  override protected def getPartitions: Array[Partition] = {
-    check(); firstParent[InternalRow].partitions
-  }
-
-  // keep the checkpoint blocks' executor locality on a real cluster
-  override protected def getPreferredLocations(split: Partition): Seq[String] =
-    firstParent[InternalRow].preferredLocations(split)
-
-  override def compute(split: Partition,
-      context: TaskContext): Iterator[InternalRow] = {
-    check(); firstParent[InternalRow].iterator(split, context)
-  }
-}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lifecycle discipline for intra-operator caches.
   *
@@ -61,20 +15,21 @@ private[graft] final class GuardedCheckpointRdd(
   *
   * The discipline here is a RETENTION POLICY rather than eager release:
   * an operator registers its caches under its own key via [[retain]],
-  * and the registry keeps an LRU of at most `graft.caches.maxSets`
-  * (default 4) keys' working sets, unpersisting the least-recent set
-  * when the bound is exceeded. Consequences:
+  * and the registry keeps an LRU of at most 4 keys' working sets,
+  * unpersisting the least-recent set when the bound is exceeded.
+  * Consequences:
   *
   *  - storage is bounded by a handful of operators' working sets — the
-  *    unbounded-accumulation failure mode is gone, and the bound is
-  *    tunable down to 1 for memory-tight deployments;
+  *    unbounded-accumulation failure mode is gone;
   *  - a returned lazy frame stays backed by live caches until several
-  *    OTHER operators have run — the caller's action, same-operator
-  *    reruns (steady-state benchmarking, grid loops re-deriving an
-  *    identical plan, composite queries chaining a few operators) hit
-  *    warm CacheManager entries instead of recomputing;
+  *    OTHER operators have run, so the caller's action (and a composite
+  *    query chaining a few operators) reads them warm;
   *  - materializing a stale result after its set was evicted is still
   *    correct — it just recomputes uncached.
+  *
+  * A cache serves reuse inside one query; nothing here carries results
+  * from one query to the next. Bench, Verify and perfbench call
+  * [[releaseAll]] between queries.
   *
   * Within one key the frame list is deduplicated by logical plan
   * (`sameResult`): re-registering an identical plan keeps the single
@@ -90,8 +45,7 @@ private[graft] final class GuardedCheckpointRdd(
 object Caches {
 
   private val lock = new Object
-  private def maxSets: Int =
-    sys.props.get("graft.caches.maxSets").map(_.toInt).getOrElse(4)
+  private val maxSets = 4
   private val maxFramesPerSet = 16
 
   // LRU order: head = least recent
@@ -148,128 +102,24 @@ object Caches {
     * lineage cannot recompute), not a slow path. All in-repo callers
     * (Bench/Verify per-query teardown, suite afterAll) satisfy this.
     *
-    * Also drops the [[checkpointOnce]] memo and — because checkpoint
-    * blocks, unregistered persists, and dead broadcast blocks are
-    * exactly the storage residue the registry CANNOT see — unpersists
-    * every persistent RDD still known to the active SparkContext. The
-    * r10 official sweep measured the cost of not doing this: q290 at
-    * 13–30 s (2.2 s isolated) with heap climbing 8.9→17.9 GB and gc≈0
-    * — per-rep `localCheckpoint` blocks pile up in the PROTECTED half
-    * of unified storage memory (`spark.memory.storageFraction`), so
-    * execution memory starves and the big joins spill. After this
-    * teardown, frames previously returned by [[checkpointOnce]] are
-    * dead (lineage truncated, blocks gone) — releaseAll is a session
-    * boundary, not a cache trim.
+    * Because `localCheckpoint` blocks and unregistered persists are
+    * exactly the storage residue the registry CANNOT see, it also
+    * unpersists every persistent RDD still known to the active
+    * SparkContext. The r10 official sweep measured the cost of not
+    * doing this: q290 at 13–30 s (2.2 s isolated) with heap climbing
+    * 8.9→17.9 GB and gc≈0 — per-rep `localCheckpoint` blocks pile up
+    * in the PROTECTED half of unified storage memory
+    * (`spark.memory.storageFraction`), so execution memory starves and
+    * the big joins spill. After this teardown, frames built on a
+    * localCheckpoint are dead (lineage truncated, blocks gone) —
+    * releaseAll is a session boundary, not a cache trim.
     */
   def releaseAll(): Unit = lock.synchronized {
     sets.foreach(_._2.foreach(_.unpersist(blocking = true)))
     sets = Vector.empty
-    // tombstone every memoized checkpoint so a post-teardown re-action
-    // raises the named GuardedCheckpointRdd error, not "blocks gone"
-    ckMemo.valuesIterator.foreach(_.foreach { case (_, f) =>
-      unpersistCheckpoint(f)
-    })
-    ckMemo = Map.empty
-    PrefixScan.reset() // same lifecycle: memoized frames die with the session
     SparkSession.getActiveSession.foreach { s =>
       s.sparkContext.getPersistentRDDs.valuesIterator
         .foreach(_.unpersist(blocking = true))
     }
   }
-
-  // ---- memoized localCheckpoint ---------------------------------------
-
-  private def maxCkPerKey: Int =
-    sys.props.get("graft.caches.maxCkPerKey")
-      .flatMap(_.toIntOption).map(math.max(1, _)).getOrElse(64)
-  // key -> newest-first (analyzed input plan, checkpointed frame)
-  private var ckMemo: Map[String, List[(LogicalPlan, DataFrame)]] = Map.empty
-
-  /** `df.localCheckpoint(eager = true)`, memoized by the ANALYZED plan
-    * of the input under `key`. A re-derivation of the same logical plan
-    * (benchmark reps, grid loops, composite pipelines re-running an
-    * operator) returns the frame checkpointed the first time instead of
-    * materializing fresh blocks — which also lets the caller's
-    * downstream `persist()` dedupe in Spark's CacheManager (two
-    * checkpoints of one plan yield DISTINCT `LogicalRDD`s that
-    * `sameResult` can never unify; the memo restores that identity).
-    *
-    * Without this, every rerun of a checkpoint-using operator leaks one
-    * full copy of its checkpoint blocks into protected storage memory
-    * until a GC + async ContextCleaner pass happens to reap it — the
-    * r10 official-bench heavy-tail mechanism. When the per-key bound is
-    * exceeded, the oldest entry is dropped AND its checkpoint blocks
-    * are unpersisted (unless another surviving memo entry still holds
-    * the same frame) — otherwise a >64-iteration operator, or a long
-    * composite sweep that never reaches [[releaseAll]], re-accumulates
-    * exactly the unbounded protected-storage residue this memo exists
-    * to prevent. Consequence of the trim contract: a frame returned by
-    * checkpointOnce becomes DEAD once `maxCkPerKey` newer distinct
-    * plans have been checkpointed under the same key — and re-actioning
-    * it FAILS LOUD with [[GuardedCheckpointRdd]]'s named error rather
-    * than Spark's bare block-not-found. Iterative operators
-    * satisfy this by construction — iteration k's checkpoint is never
-    * re-actioned after iteration k+1 materializes — and non-iterative
-    * callers never approach the bound.
-    *
-    * Correctness contract: the input plan must be deterministic (every
-    * graft operator's plans are — hash-seeded randomness only), so
-    * same-plan ⇒ same-result and the memo hit is indistinguishable from
-    * a fresh materialization.
-    */
-  def checkpointOnce(key: String, df: DataFrame): DataFrame = {
-    val plan = df.queryExecution.analyzed
-    val hit = lock.synchronized {
-      ckMemo.getOrElse(key, Nil).collectFirst {
-        case (p, f) if p.sameResult(plan) => f
-      }
-    }
-    hit.getOrElse {
-      val ck0 = df.localCheckpoint(true) // eager compute OUTSIDE the lock
-      // wrap the block-backed RDD so a post-trim re-action fails with
-      // a named error (see GuardedCheckpointRdd) instead of Spark's
-      // bare block-not-found; plan-level partitioning/stats preserved
-      val ck = GraftSqlBridge.checkpointRddOf(ck0) match {
-        case Some(rdd) => GraftSqlBridge.rewrapCheckpointRdd(
-          ck0, new GuardedCheckpointRdd(rdd, key))
-        case None => ck0
-      }
-      lock.synchronized {
-        val cur = ckMemo.getOrElse(key, Nil)
-        cur.collectFirst { case (p, f) if p.sameResult(plan) => f } match {
-          case Some(winner) => // racing builder won; ours is redundant —
-            // release its freshly materialized blocks, or they linger in
-            // protected storage until releaseAll
-            unpersistCheckpoint(ck)
-            winner
-          case None =>
-            val next = (plan, ck) :: cur
-            val (kept, trimmed) = next.splitAt(maxCkPerKey)
-            ckMemo = ckMemo.updated(key, kept)
-            // see scaladoc: trimmed entries' blocks are dead residue
-            // unless some surviving entry (any key) holds the same frame
-            trimmed.foreach { case (_, old) =>
-              val live = ckMemo.valuesIterator.exists(_.exists(_._2 eq old))
-              if (!live) unpersistCheckpoint(old)
-            }
-            ck
-        }
-      }
-    }
-  }
-
-  /** Release a localCheckpoint's backing blocks: the checkpointed
-    * frame's plan is a `LogicalRDD` over the persisted internal-row
-    * RDD; unpersist that RDD directly (async — callers are on query
-    * hot paths). After this the frame cannot be re-actioned (truncated
-    * lineage without blocks), which both call sites guarantee.
-    */
-  private def unpersistCheckpoint(ck: DataFrame): Unit =
-    ck.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd match {
-        case g: GuardedCheckpointRdd => g.kill() // tombstone + release
-        case r => r.unpersist(false)
-      }
-      case _ => ()
-    }
 }

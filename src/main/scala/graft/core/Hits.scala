@@ -19,11 +19,9 @@ import org.apache.spark.sql.functions._
   * partition-order-independent) so iterations are bitwise reproducible
   * and the SQL oracle can unroll the same half-steps as CTEs.
   *
-  * Score frames checkpoint every half-step via [[Caches.checkpointOnce]]
-  * — the iterative-lineage rule (planning blows up exponentially
-  * otherwise; persist() does not truncate the plan), memoized so reruns
-  * of the same graph replay the materialized iterates instead of
-  * leaking one block-set per run.
+  * Score frames `localCheckpoint` every half-step — the
+  * iterative-lineage rule (planning blows up exponentially otherwise;
+  * persist() does not truncate the plan).
   *
   * DELIBERATE small-graph operating point: each half-step's groupBy
   * ends in `coalesce(1)` + a single-partition window so the L2 norm
@@ -55,8 +53,9 @@ object Hits {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Caches.retain(cacheKey, e)
     val nH = e.select(col("hub")).distinct().count()
-    var h = Caches.checkpointOnce(cacheKey, e.select(col("hub")).distinct()
-      .select(col("hub"), lit(1.0 / math.sqrt(nH.toDouble)).as("h")))
+    var h = e.select(col("hub")).distinct()
+      .select(col("hub"), lit(1.0 / math.sqrt(nH.toDouble)).as("h"))
+      .localCheckpoint()
     var a: DataFrame = null
     // the L2 norm rides along as a single-partition window sum over
     // the coalesced per-node frame (exact decimal, same value as a
@@ -68,19 +67,19 @@ object Hits {
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val D = org.apache.spark.sql.types.DecimalType(38, 10)
     for (_ <- 1 to iters) {
-      val ar = Caches.checkpointOnce(cacheKey,
-        e.join(broadcast(h), "hub").groupBy("auth")
-          .agg(Stats.dsum(col("h")).as("ar"))
-          .coalesce(1)
-          .withColumn("an2", sum((col("ar") * col("ar")).cast(D)).over(wAll)
-            .cast("double")))
+      val ar = e.join(broadcast(h), "hub").groupBy("auth")
+        .agg(Stats.dsum(col("h")).as("ar"))
+        .coalesce(1)
+        .withColumn("an2", sum((col("ar") * col("ar")).cast(D)).over(wAll)
+          .cast("double"))
+        .localCheckpoint()
       a = ar.select(col("auth"), (col("ar") / sqrt(col("an2"))).as("a"))
-      val hr = Caches.checkpointOnce(cacheKey,
-        e.join(broadcast(a), "auth").groupBy("hub")
-          .agg(Stats.dsum(col("a")).as("hr"))
-          .coalesce(1)
-          .withColumn("hn2", sum((col("hr") * col("hr")).cast(D)).over(wAll)
-            .cast("double")))
+      val hr = e.join(broadcast(a), "auth").groupBy("hub")
+        .agg(Stats.dsum(col("a")).as("hr"))
+        .coalesce(1)
+        .withColumn("hn2", sum((col("hr") * col("hr")).cast(D)).over(wAll)
+          .cast("double"))
+        .localCheckpoint()
       h = hr.select(col("hub"), (col("hr") / sqrt(col("hn2"))).as("h"))
     }
     (h, a)

@@ -40,9 +40,8 @@ object LabelProp {
         .groupBy(col("dst").as("v"), col("nl"))
         .agg(count(lit(1)).as("c"))
       val mx = cnt.groupBy("v").agg(max("c").as("mc"))
-      labels = Caches.checkpointOnce("labelprop",
-        cnt.join(mx, "v").where(col("c") === col("mc"))
-          .groupBy("v").agg(min("nl").as("lbl")))
+      labels = cnt.join(mx, "v").where(col("c") === col("mc"))
+        .groupBy("v").agg(min("nl").as("lbl")).localCheckpoint()
     }
     labels
   }

@@ -13,9 +13,8 @@ import org.apache.spark.sql.functions._
   * [[Stats.dsum]] (exact decimal, partition-order-independent), so
   * ranks are bitwise reproducible and oracle-comparable.
   *
-  * Every third iteration checkpoints the 1-row-per-node rank frame
-  * (via [[Caches.checkpointOnce]], so reruns replay materialized
-  * iterates instead of leaking blocks): iterative lineage otherwise grows without bound and the
+  * Every third iteration `localCheckpoint`s the 1-row-per-node rank
+  * frame: iterative lineage otherwise grows without bound and the
   * PLANNING itself blows up (the label-propagation lesson — persist()
   * does not truncate the plan). Checkpointing each iteration would be
   * safe but pays a blocking materialization per step; every third
@@ -39,8 +38,7 @@ object PageRank {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Caches.retain(cacheKey, nodes, e)
     val nN = nodes.count()
-    var r = Caches.checkpointOnce(cacheKey,
-      nodes.select(col("node"), lit(1.0 / nN).as("r")))
+    var r = nodes.select(col("node"), lit(1.0 / nN).as("r")).localCheckpoint()
     for (i <- 1 to iters) {
       val contrib = e.join(r, e("src") === r("node"))
         .groupBy(e("dst").as("cnode"))
@@ -49,7 +47,7 @@ object PageRank {
       r = nodes.join(contrib, col("node") === col("cnode"), "left")
         .select(col("node"), (lit((1.0 - d) / nN) +
           lit(d) * coalesce(col("s"), lit(0.0))).as("r"))
-      if (i % 3 == 0 || i == iters) r = Caches.checkpointOnce(cacheKey, r)
+      if (i % 3 == 0 || i == iters) r = r.localCheckpoint()
     }
     r
   }

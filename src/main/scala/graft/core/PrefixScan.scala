@@ -32,71 +32,9 @@ object PrefixScan {
     * persisted and registered under `cacheKey` with [[Caches]] —
     * warm for the caller's action, swept when another operator
     * retains.
-    *
-    * MEMOIZED by (analyzed input plan, sortCol, weightCols): a
-    * re-derivation of the same scan (benchmark reps, operators built
-    * twice from one spec) returns the SAME result frame instead of a
-    * fresh RDD-backed one. This matters beyond the saved subtotal job:
-    * the result plan of a fresh call wraps a NEW RDD, so every
-    * downstream plan containing it is unrecognizable to
-    * [[Caches.checkpointOnce]]'s plan-equality memo — each rep then
-    * re-materializes full checkpoint copies (the r11 rising-reps /
-    * q121 re-derivation mechanism). Returning one stable frame makes
-    * downstream plans plan-equal across reps. Memo entries hold only
-    * lazy lineage (the RDD recomputes if its persisted sort frame was
-    * swept), so a hit after [[Caches.releaseAll]] is correct — just
-    * cold.
     */
-  def exclusive(df: DataFrame, sortCol: String, weightCols: Seq[String],
-                cacheKey: String): (DataFrame, Array[Long]) = {
-    val plan = df.queryExecution.analyzed
-    val hit = memoLock.synchronized {
-      memo.getOrElse(cacheKey, Nil).collectFirst {
-        case e if e.sortCol == sortCol && e.weightCols == weightCols &&
-          e.plan.sameResult(plan) => e
-      }
-    }
-    hit match {
-      case Some(e) =>
-        Caches.retain(cacheKey, e.sorted) // refresh recency for the action
-        (e.result, e.totals.clone())
-      case None =>
-        val (result, totals, sorted) = build(df, sortCol, weightCols, cacheKey)
-        memoLock.synchronized {
-          val cur = memo.getOrElse(cacheKey, Nil)
-          val winner = cur.collectFirst {
-            case e if e.sortCol == sortCol && e.weightCols == weightCols &&
-              e.plan.sameResult(plan) => e
-          }
-          winner match {
-            case Some(e) => (e.result, e.totals.clone())
-            case None =>
-              memo = memo.updated(cacheKey,
-                (Entry(plan, sortCol, weightCols, result, totals, sorted) :: cur)
-                  .take(maxMemoPerKey))
-              (result, totals.clone())
-          }
-        }
-    }
-  }
-
-  private case class Entry(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-                           sortCol: String, weightCols: Seq[String],
-                           result: DataFrame, totals: Array[Long],
-                           sorted: DataFrame)
-  private val memoLock = new Object
-  private val maxMemoPerKey = 8
-  private var memo: Map[String, List[Entry]] = Map.empty
-
-  /** Drop every memo entry. Called from [[Caches.releaseAll]] so a
-    * session boundary does not leave analyzed plans (and frames bound
-    * to a possibly-dead SparkSession) pinned forever; a cleared memo
-    * just rebuilds cold on the next call.
-    */
-  private[core] def reset(): Unit = memoLock.synchronized { memo = Map.empty }
-
-  private def build(df: DataFrame, sortCol: String, weightCols: Seq[String],
-                    cacheKey: String): (DataFrame, Array[Long], DataFrame) = {
+  def build(df: DataFrame, sortCol: String, weightCols: Seq[String],
+            cacheKey: String): (DataFrame, Array[Long]) = {
     val spark = df.sparkSession
     val parts = math.max(1, spark.sparkContext.defaultParallelism)
     val sorted = df.repartitionByRange(parts, col(sortCol))
@@ -132,6 +70,6 @@ object PrefixScan {
     val schema = StructType(sorted.schema.fields ++
       weightCols.map(w => StructField(s"cum_${w}_below", LongType)))
     Caches.retain(cacheKey, sorted)
-    (spark.createDataFrame(rows, schema), totals, sorted)
+    (spark.createDataFrame(rows, schema), totals)
   }
 }

@@ -43,7 +43,7 @@ object Rank {
     val valid = df.where(v.isNotNull && !isnan(v))
     val ties = valid.groupBy(v.as("__rk_value"))
       .agg(count(lit(1)).as("__rk_ties"))
-    val (scanned, _) = PrefixScan.exclusive(
+    val (scanned, _) = PrefixScan.build(
       ties, "__rk_value", Seq("__rk_ties"), cacheKey)
     val ranks = scanned.select(col("__rk_value"),
       (col("cum___rk_ties_below").cast(DoubleType) +
@@ -67,7 +67,7 @@ object Rank {
     val v = col(valueCol).cast(DoubleType)
     val t = ties.where(v.isNotNull && !isnan(v))
       .select(v.as("__rk_value"), col(tiesCol).cast("long").as("__rk_ties"))
-    val (scanned, _) = PrefixScan.exclusive(
+    val (scanned, _) = PrefixScan.build(
       t, "__rk_value", Seq("__rk_ties"), cacheKey)
     scanned.select(col("__rk_value").as(valueCol),
       (col("cum___rk_ties_below").cast(DoubleType) +
@@ -126,12 +126,8 @@ object Rank {
     * frame, then compute every pair's Spearman from ONE mergeable
     * moment aggregate (2k + k(k−1)/2 + 1 buffer slots).
     *
-    * LIFETIME: the returned lazy frame aggregates a
-    * [[Caches.checkpointOnce]]-pinned intermediate, so it inherits the
-    * memo's trim contract — re-actioning it after 64 newer DISTINCT
-    * plans have been checkpointed under the same `cacheKey`, or after
-    * [[Caches.releaseAll]], fails (truncated lineage, blocks gone).
-    * Action it promptly; don't stash it across other operators' runs.
+    * The returned lazy frame aggregates a localCheckpoint, so it dies
+    * with [[Caches.releaseAll]] (truncated lineage, blocks gone).
     */
   private def spearmanAllValid(df: DataFrame, cols: Seq[String],
                                pairs: Seq[(String, String)],
@@ -146,7 +142,7 @@ object Rank {
     val rankMaps = cols.map { c =>
       val ties = df.select(col(c).cast(DoubleType).as("__rk_value"))
         .groupBy("__rk_value").agg(count(lit(1)).as("__rk_ties"))
-      val (scanned, _) = PrefixScan.exclusive(
+      val (scanned, _) = PrefixScan.build(
         ties, "__rk_value", Seq("__rk_ties"), cacheKey)
       // distinct-value cardinality: a count on the PrefixScan-persisted
       // tie table (already materialized by the subtotal job — this is a
@@ -171,15 +167,14 @@ object Rank {
       ranked = ranked.join(mh, col(c) <=> col(s"__v_$c"), "left")
         .drop(s"__v_$c")
     }
-    // Pin the k-way rank-joined frame ONCE per plan: a MEMORY_AND_DISK
-    // persist can be evicted mid-sweep under storage pressure, forcing
-    // a full re-derivation (k PrefixScan tie scans + k shuffled
-    // join-backs) inside a single timed action — the r11 official bench
-    // measured q121 reps of [14.8, 2.3, 6.7] s from exactly this. A
-    // memoized localCheckpoint is disk-backed (never silently evicted)
-    // and identical re-derivations reuse the blocks instead of
-    // re-joining.
-    ranked = Caches.checkpointOnce(cacheKey + ":ranked", ranked)
+    // Checkpoint the k-way rank-joined frame: a MEMORY_AND_DISK persist
+    // can be evicted mid-sweep under storage pressure, forcing a full
+    // re-derivation (k PrefixScan tie scans + k shuffled join-backs)
+    // inside a single timed action — the r11 official bench measured
+    // q121 reps of [14.8, 2.3, 6.7] s from exactly this. A
+    // localCheckpoint truncates the lineage, so the aggregate above it
+    // never re-joins.
+    ranked = ranked.localCheckpoint()
     val aggs = cols.flatMap { c =>
       Seq(Stats.dsum(col(rk(c))).as(s"s_$c"),
         Stats.dsum(col(rk(c)) * col(rk(c))).as(s"ss_$c"))

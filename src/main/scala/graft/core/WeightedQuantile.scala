@@ -42,7 +42,7 @@ object WeightedQuantile {
     val perValue = df
       .where(v.isNotNull && !isnan(v) && w.isNotNull && w > 0)
       .groupBy(v.as("__wq_value")).agg(sum(w).as("__wq_w"))
-    val (scanned, totals) = PrefixScan.exclusive(
+    val (scanned, totals) = PrefixScan.build(
       perValue, "__wq_value", Seq("__wq_w"), cacheKey)
     val total = totals(0)
     val frames = ps.map { p =>

@@ -30,9 +30,8 @@ object Components {
     val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = graft.core.Caches.checkpointOnce("components.cc",
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("component", col("id")))
+    var labels = edges.select(col("src").as("id")).distinct()
+      .withColumn("component", col("id")).localCheckpoint()
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIter) {
@@ -55,14 +54,14 @@ object Components {
       // squares it) until planning itself blows up; persist() alone
       // caches data but keeps the exponential plan. On a cluster use
       // reliable checkpoint(dir) for fault tolerance instead.
-      val next = graft.core.Caches.checkpointOnce("components.cc",
-        stepped.as("l")
-          .join(stepped.select(col("id").as("component"),
-            col("component").as("cc")).as("r"), Seq("component"), "left")
-          .select(col("id"),
-            least(col("component"), coalesce(col("cc"), col("component")))
-              .as("component"),
-            col("old")))
+      val next = stepped.as("l")
+        .join(stepped.select(col("id").as("component"),
+          col("component").as("cc")).as("r"), Seq("component"), "left")
+        .select(col("id"),
+          least(col("component"), coalesce(col("cc"), col("component")))
+            .as("component"),
+          col("old"))
+        .localCheckpoint()
       changed = next.agg(count(when(col("component") =!= col("old"), 1)))
         .head().getLong(0)
       labels = next.drop("old")

@@ -2018,11 +2018,12 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     (1 to 8).foreach { _ =>
       prevCount = lastCount
       val sv = surv
-      surv = graft.core.Caches.checkpointOnce("entry.q246", ed
+      surv = ed
         .join(sv.withColumnRenamed("v", "src"), "src")
         .join(sv.withColumnRenamed("v", "dst"), "dst")
         .groupBy(col("src").as("v")).agg(count(lit(1)).as("dg"))
-        .where(col("dg") >= kk).select("v"))
+        .where(col("dg") >= kk).select("v")
+        .localCheckpoint()
       lastCount = surv.count()
     }
     val fix = lastCount == prevCount
@@ -2123,10 +2124,9 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
       perX = perX.join(m, col(sc) <=> col(s"__v_$sc"), "left")
         .drop(s"__v_$sc")
     }
-    // one corpus join-back: pin the per-x map so bench reps reuse it
-    val rankMapX = graft.core.Caches.checkpointOnce("entry.q248.perx",
-      perX.select(col("x").as("__x"), col("s1"), col("s2"), col("s3"),
-        col("r1"), col("r2"), col("r3")))
+    // one corpus join-back against the materialized per-x map
+    val rankMapX = perX.select(col("x").as("__x"), col("s1"), col("s2"),
+      col("s3"), col("r1"), col("r2"), col("r3")).localCheckpoint()
     val ranked = base.join(rankMapX, col("x") <=> col("__x"), "left")
       .drop("__x")
     ranked
@@ -2311,8 +2311,8 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
       val row = pick.select(col("id"), col("vec"), col("n2")).head()
       val (cid, cvec, cn2) =
         (row.getLong(0), row.getSeq[Float](1), row.getDouble(2))
-      cur = graft.core.Caches.checkpointOnce("entry.q252",
-        cur.withColumn("md", least(col("md"), distTo(cvec, cn2))))
+      cur = cur.withColumn("md", least(col("md"), distTo(cvec, cn2)))
+        .localCheckpoint()
       val radius = cur.agg(max("md")).head().getDouble(0)
       out += ((r.toLong, cid, radius))
     }
@@ -2704,7 +2704,7 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
         (lit(1000000L) - expr("u * 1000000 div n_tok")) * lit(8589934592L) +
           col("doc_id"))
     val budget = d.agg(sum("n_tok")).head().getLong(0) / 4
-    val (scanned, _) = graft.core.PrefixScan.exclusive(
+    val (scanned, _) = graft.core.PrefixScan.build(
       d, "key", Seq("n_tok"), "entry.q223")
     scanned.where(col("cum_n_tok_below") + col("n_tok") <= budget)
       .groupBy("source")
@@ -3007,7 +3007,7 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
       val keyed = freq
         .withColumn("sk", col("f") * lit(4294967296L) + col("k"))
         .withColumn("one", lit(1L))
-      val (scanned, totals) = graft.core.PrefixScan.exclusive(
+      val (scanned, totals) = graft.core.PrefixScan.build(
         keyed, "sk", Seq("f", "one"), s"entry.q230.$label")
       val total = totals(0)
       val n = totals(1)

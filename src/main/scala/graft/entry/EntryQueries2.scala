@@ -958,7 +958,7 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
         expr("CAST(round(l_extendedprice * 100) AS LONG)").as("cents"))
       .groupBy("l_partkey").agg(sum("cents").as("cents"))
       .select(col("cents"), (-col("cents")).as("neg"))
-    val (scanned, totals) = PrefixScan.exclusive(pr, "neg", Seq("cents"), "q143")
+    val (scanned, totals) = PrefixScan.build(pr, "neg", Seq("cents"), "q143")
     val tot = totals(0)
     val incl = col("cum_cents_below") + col("cents")
     scanned.select(col("cents"),
@@ -1282,7 +1282,7 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     val tabs = cols.zipWithIndex.map { case (c, i) =>
       val base = li(s, dir).select(col(c).cast("double").as(s"v$i"),
         lit(1L).as("one"))
-      val (scanned, _) = PrefixScan.exclusive(base, s"v$i", Seq("one"), s"q155_$i")
+      val (scanned, _) = PrefixScan.build(base, s"v$i", Seq("one"), s"q155_$i")
       scanned.select(col("cum_one_below").as("pos"), col(s"v$i"))
     }
     val t = tabs(0).join(tabs(1), "pos").join(tabs(2), "pos")
@@ -2130,16 +2130,16 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * math is digit-identical.
     */
   private[graft] def qCcf(s: SparkSession, dir: String): DataFrame = {
-    // checkpointOnce (not persist+retain): bench reps re-derive an
-    // identical plan, so the memo returns the SAME materialized frame —
-    // the q121 rep-stability mechanism. The checkpointed frame has no
-    // stats, so the tiny per-day side is broadcast explicitly.
-    val daily = graft.core.Caches.checkpointOnce("q177", ev(s, dir)
+    // materialized once: both sides of the lag self-join read it. The
+    // checkpoint carries the plan's size ESTIMATE, not its tiny actual
+    // size, so the per-day side is broadcast explicitly.
+    val daily = ev(s, dir)
       .where(col("event_type").isin("click", "purchase"))
       .select(expr("(ts div 1000) div 86400000000").as("d"), col("event_type"))
       .groupBy("d")
       .agg(count(when(col("event_type") === "click", 1)).cast("double").as("x"),
-        count(when(col("event_type") === "purchase", 1)).cast("double").as("y")))
+        count(when(col("event_type") === "purchase", 1)).cast("double").as("y"))
+      .localCheckpoint()
     val lagged = daily.select(col("d"), col("x"),
         explode(array((0 to 5).map(i => lit(i)): _*)).as("k"))
       .join(broadcast(daily.select(col("d").as("d2"), col("y"))),
@@ -2226,7 +2226,7 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     val byVal = per.groupBy("cents").agg(count(lit(1)).as("n"))
       .withColumn("vsum", col("cents") * col("n"))
     val (scanned, totals) =
-      PrefixScan.exclusive(byVal, "cents", Seq("n", "vsum"), "q180")
+      PrefixScan.build(byVal, "cents", Seq("n", "vsum"), "q180")
     val nT = totals(0)
     val cT = totals(1)
     val ex = scanned.select(col("cents"), col("n"), col("cum_n_below").as("cum"),

@@ -353,7 +353,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
           when(!isA, 1L).otherwise(0L).as("cnt_b"),
           when(!isA, vcB).otherwise(0L).as("sum_b_c"))
       val tag = if (shifted) "shifted" else "healthy"
-      val (scanned, _) = PrefixScan.exclusive(ev, "event_id",
+      val (scanned, _) = PrefixScan.build(ev, "event_id",
         Seq("cnt_a", "sum_a_c", "cnt_b", "sum_b_c"), s"entry.q266.$tag")
       // sigma^2 stays the HEALTHY-stream variance in both scenarios
       // (the planning constant of the known-variance mSPRT)
@@ -461,7 +461,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       .withColumn("cb", when(col("event_type") === "view", 1L).otherwise(0L))
       .withColumn("sb", when(col("event_type") === "view", col("vc"))
         .otherwise(0L))
-    val (sc, _) = PrefixScan.exclusive(ev, "key",
+    val (sc, _) = PrefixScan.build(ev, "key",
       Seq("ca", "sa", "cb", "sb"), "entry.q268")
     val agg = sc.select(col("ca"), col("cb"),
         (col("vc") * col("cum_ca_below") - col("cum_sa_below")).as("dA"),
@@ -1085,9 +1085,9 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
         .groupBy("doc_id").agg(count(lit(1)).as("new_g"))
         .orderBy(desc("new_g"), asc("doc_id")).limit(1).head()
       val (docId, g) = (gain.getLong(0), gain.getLong(1))
-      covered = graft.core.Caches.checkpointOnce("entry.q280", covered
+      covered = covered
         .union(grams.where(col("doc_id") === docId).select("g"))
-        .distinct())
+        .distinct().localCheckpoint()
       cum += g
       (k.toLong, docId, g, cum, cum * 1000000L / total)
     }
@@ -1665,7 +1665,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     // at any cluster size, and it re-ran every rep (isolated A/B at
     // sf0.1: 3.8-4.3 s/rep windowed vs 0.3-0.4 s/rep scanned, integer
     // won2 bitwise identical). byScore persists because the three
-    // scans and the scan memo all read it.
+    // scans all read it.
     val byScore = long.groupBy("method", "score").agg(
         sum(col("pos")).cast("long").as("np"),
         sum(lit(1) - col("pos")).cast("long").as("nn"))
@@ -1674,7 +1674,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val agg = Seq("cn", "jaccard", "adamic_adar").map { m =>
       val one = byScore.where(col("method") === m)
         .select(col("score"), col("np"), col("nn"))
-      val (scanned, _) = graft.core.PrefixScan.exclusive(
+      val (scanned, _) = graft.core.PrefixScan.build(
         one, "score", Seq("nn"), s"q290.auc.$m")
       scanned
         .withColumn("won2",
@@ -2075,10 +2075,10 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     graft.core.Caches.retain("q299.pairs", pairs)
     val slim = cand.select(col("qid"), col("cid"), col("rel"))
     val wPick = Window.partitionBy("qid").orderBy(desc("score"), col("cid"))
-    var picked = graft.core.Caches.checkpointOnce("q299.pairs",
-      slim.withColumn("score", col("rel"))
-        .withColumn("rk", row_number().over(wPick)).where(col("rk") === 1)
-        .select(col("qid"), col("cid"), lit(1).as("pick"), col("score")))
+    var picked = slim.withColumn("score", col("rel"))
+      .withColumn("rk", row_number().over(wPick)).where(col("rk") === 1)
+      .select(col("qid"), col("cid"), lit(1).as("pick"), col("score"))
+      .localCheckpoint()
     for (r <- 2 to 5) {
       val ms = pairs.join(picked.select(col("qid"),
           col("cid").as("pb")), Seq("qid", "pb"))
@@ -2093,8 +2093,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       val next = scored.withColumn("rk", row_number().over(wPick))
         .where(col("rk") === 1)
         .select(col("qid"), col("cid"), lit(r).as("pick"), col("score"))
-      picked = graft.core.Caches.checkpointOnce("q299.pairs",
-        picked.unionByName(next))
+      picked = picked.unionByName(next).localCheckpoint()
     }
     picked.select(col("qid"), col("pick"), col("cid"),
         round(col("score"), 6).as("score"))
@@ -2201,7 +2200,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
           (col("sx") / col("n")) * (col("sx") / col("n")), lit(1e-6)))
           .as("s2"),
         lit(0.5).as("p1"))
-    par = graft.core.Caches.checkpointOnce("entry.q301", par)
+    par = par.localCheckpoint()
     def phi(mu: Column, sd: Column) =
       exp(lit(-0.5) * ((xd - mu) / sd) * ((xd - mu) / sd)) /
         (sd * math.sqrt(2.0 * math.Pi))
@@ -2237,7 +2236,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
             lit(100.0)) * (col("srx2").cast(DoubleType) /
             col("sr2").cast(DoubleType) / lit(100.0)), lit(1e-6))).as("s2"),
         (col("sr1").cast(DoubleType) / lit(1e6) / col("n")).as("p1"))
-      par = graft.core.Caches.checkpointOnce("entry.q301", par)
+      par = par.localCheckpoint()
     }
     par.select(col("scenario"), round(col("p1"), 6).as("pi1"),
         round(col("mu1"), 6).as("mu1"), round(col("s1"), 6).as("sigma1"),
@@ -2940,8 +2939,8 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       .agg(sum("w_ij").cast(DoubleType).as("wi"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     graft.core.Caches.retain("q316.wins", wins)
-    var theta = graft.core.Caches.checkpointOnce("q316",
-      wins.select(col("i"), lit(1.0).as("th")).coalesce(1))
+    var theta = wins.select(col("i"), lit(1.0).as("th")).coalesce(1)
+      .localCheckpoint()
     for (_ <- 1 to 5) {
       val denom = games
         .join(broadcast(theta.toDF("i", "thi")), col("sa") === col("i"))
@@ -2953,12 +2952,11 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
         .select(col("i"), (col("wi") / col("dn")).as("tr"))
       val mean = raw.agg(Stats.dsum(col("tr")).as("st"),
         count(lit(1)).cast(DoubleType).as("nn"))
-      theta = graft.core.Caches.checkpointOnce("q316",
-        raw.crossJoin(broadcast(mean))
-          .select(col("i"),
-            (round(col("tr") / (col("st") / col("nn")) * lit(1e9)) /
-              lit(1e9)).as("th"))
-          .coalesce(1))
+      theta = raw.crossJoin(broadcast(mean))
+        .select(col("i"),
+          (round(col("tr") / (col("st") / col("nn")) * lit(1e9)) /
+            lit(1e9)).as("th"))
+        .coalesce(1).localCheckpoint()
     }
     theta.join(wins, Seq("i"))
       .select(col("i").as("supplier"), col("wi").cast("long").as("wins"),
@@ -3493,7 +3491,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
         (lit(1000000L) - expr("u * 1000000 div n_tok")) * lit(8589934592L) +
           col("doc_id"))
     val budget = kept.agg(coalesce(sum("n_tok"), lit(0L))).head().getLong(0) / 4
-    val (scanned, _) = graft.core.PrefixScan.exclusive(
+    val (scanned, _) = graft.core.PrefixScan.build(
       kept.select("source", "doc_id", "n_tok", "key"),
       "key", Seq("n_tok"), "entry.q327")
     val selected = scanned

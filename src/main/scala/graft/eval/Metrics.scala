@@ -140,7 +140,7 @@ object Metrics {
     val y = col(labelCol).cast("int")
     val perScore = df.groupBy(col(scoreCol).cast("double").as("score"))
       .agg(count(when(y === 1, 1)).as("pos"), count(when(y === 0, 1)).as("neg"))
-    val (scanned, totals) = graft.core.PrefixScan.exclusive(
+    val (scanned, totals) = graft.core.PrefixScan.build(
       perScore, "score", Seq("pos", "neg"), "metrics.prefixScan")
     (scanned, totals(0), totals(1))
   }

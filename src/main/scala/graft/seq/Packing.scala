@@ -38,7 +38,7 @@ object Packing {
                          weightCol: String): DataFrame = {
     val slim = df.select(col(keyCol).cast(LongType).as("key"),
       col(weightCol).cast(LongType).as("weight"))
-    val (scanned, _) = graft.core.PrefixScan.exclusive(
+    val (scanned, _) = graft.core.PrefixScan.build(
       slim, "key", Seq("weight"), "packing.prefixSum")
     scanned.withColumnRenamed("cum_weight_below", "cum_before")
   }

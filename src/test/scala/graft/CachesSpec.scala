@@ -1,83 +1,74 @@
 package graft
 
-import java.util.concurrent.CountDownLatch
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.Caches
 
-/** Lifecycle contracts of [[graft.core.Caches.checkpointOnce]]: the
-  * racing-builder dedup path and the per-key LRU trim's block release.
-  * (releaseAll itself is exercised implicitly by Bench/Verify and is a
-  * session boundary — not safe to call mid-suite under a shared session.)
+/** The retention contract of [[graft.core.Caches.retain]]: an LRU of 4
+  * keys' working sets, same-plan frames shared across keys, recency
+  * refreshed on re-registration. Every test uses fresh keys and fresh
+  * plans; releaseAll is a session boundary and is never called here
+  * (the session is shared by every suite).
   */
 class CachesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ckRdd(df: DataFrame) =
-    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }.head
-      match {
-        // storage lives on the wrapped checkpoint RDD, not the guard
-        case g: graft.core.GuardedCheckpointRdd => g.dependencies.head.rdd
-        case r => r
-      }
+  private def frame(tag: String): DataFrame =
+    (1 to 10).toDF("v").withColumn("tag", lit(tag))
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
-  test("checkpointOnce: racing builders converge on one memoized frame") {
-    val df = (1 to 100).toDF("v").withColumn("race", lit("cachesspec"))
-    val start = new CountDownLatch(2)
-    val out = new Array[DataFrame](2)
-    val threads = (0 to 1).map { i =>
-      new Thread(() => {
-        start.countDown(); start.await()
-        out(i) = Caches.checkpointOnce("cachesspec-race", df)
-      })
+  private def cached(df: DataFrame) = df.storageLevel != StorageLevel.NONE
+
+  test("retain: a 5th key unpersists the least-recent key's frames") {
+    val frames = (1 to 5).map { i =>
+      val f = frame(s"cachesspec-lru-$i")
+      Caches.retain(s"cachesspec-lru-$i", f)
+      f
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    // Whether or not the race fired this run, both callers must hold the
-    // SAME frame (memo identity), it must be actionable, and a third call
-    // must hit the memo.
-    assert(out(0) eq out(1))
-    assert(out(0).count() == 100)
-    assert(Caches.checkpointOnce("cachesspec-race", df) eq out(0))
-    assert(ckRdd(out(0)).getStorageLevel != StorageLevel.NONE)
+    assert(!cached(frames.head), "least-recent key must be released")
+    assert(frames.tail.forall(cached), "the other four keys stay cached")
   }
 
-  test("checkpointOnce: LRU trim unpersists the dropped frame's blocks") {
-    val key = "cachesspec-trim"
-    val frames = (0 to 64).map { i => // maxCkPerKey = 64, so #0 is trimmed
-      Caches.checkpointOnce(key, (1 to 10).toDF("v").withColumn("i", lit(i)))
+  test("retain: a same-plan frame under two keys outlives one key's eviction") {
+    val a = frame("cachesspec-shared")
+    val b = frame("cachesspec-shared") // same plan, one CacheManager entry
+    Caches.retain("cachesspec-shared-a", a)
+    Caches.retain("cachesspec-shared-b", b)
+    (1 to 3).foreach { i =>
+      Caches.retain(s"cachesspec-shared-$i", frame(s"cachesspec-shared-$i"))
     }
-    assert(ckRdd(frames.head).getStorageLevel == StorageLevel.NONE,
-      "oldest entry past the per-key bound must have its blocks released")
-    assert(ckRdd(frames.last).getStorageLevel != StorageLevel.NONE,
-      "surviving entries stay persisted")
-    // the survivor still hits the memo and still computes
-    val again = Caches.checkpointOnce(
-      key, (1 to 10).toDF("v").withColumn("i", lit(64)))
-    assert(again eq frames.last)
-    assert(again.count() == 10)
+    // key a is evicted; key b still retains the plan
+    assert(cached(a) && cached(b))
+    assert(a.count() == 10)
+    Caches.retain("cachesspec-shared-4", frame("cachesspec-shared-4"))
+    // now key b is evicted too, and no set retains the plan
+    assert(!cached(a) && !cached(b))
   }
 
-  test("checkpointOnce: re-actioning a trimmed frame fails LOUD by name") {
-    val key = "cachesspec-loud"
-    System.setProperty("graft.caches.maxCkPerKey", "2")
-    try {
-      val first = Caches.checkpointOnce(
-        key, (1 to 10).toDF("v").withColumn("i", lit(1000)))
-      assert(first.count() == 10) // live guard passes through untouched
-      (1001 to 1002).foreach { i => // push #1000 past the per-key bound
-        Caches.checkpointOnce(
-          key, (1 to 10).toDF("v").withColumn("i", lit(i))).count()
-      }
-      val ex = intercept[Exception] { first.count() }
-      def msgs(t: Throwable): List[String] =
-        if (t == null) Nil
-        else Option(t.getMessage).toList ::: msgs(t.getCause)
-      assert(msgs(ex).exists(_.contains(s"checkpointOnce('$key')")),
-        s"expected the named GuardedCheckpointRdd error, got: $ex")
-    } finally System.clearProperty("graft.caches.maxCkPerKey")
+  test("retain: re-retaining a key refreshes its recency") {
+    val frames = (1 to 4).map { i =>
+      val f = frame(s"cachesspec-recency-$i")
+      Caches.retain(s"cachesspec-recency-$i", f)
+      f
+    }
+    Caches.retain("cachesspec-recency-1", frames.head)
+    Caches.retain("cachesspec-recency-5", frame("cachesspec-recency-5"))
+    assert(cached(frames.head), "the refreshed key must survive")
+    assert(!cached(frames(1)), "the least-recent key is now key 2")
+    assert(frames.drop(2).forall(cached))
+  }
+
+  test("queries on localCheckpoint and PrefixScan rebuild to identical rows") {
+    // No releaseAll between the builds: each build checkpoints and scans
+    // afresh while the first build's blocks are still live.
+    Seq("q121_spearman", "q148_pagerank", "q177_ccf").foreach { name =>
+      def rows = SparkEntry.queries(name)(spark, sf).collect()
+        .map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+      val first = rows
+      assert(first.nonEmpty, s"$name returned no rows")
+      assert(rows == first, s"$name: second build differs from the first")
+    }
   }
 }

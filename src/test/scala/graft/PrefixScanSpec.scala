@@ -4,44 +4,37 @@ import org.apache.spark.sql.functions._
 
 import graft.core.PrefixScan
 
-/** The r12 memoization contract of [[graft.core.PrefixScan.exclusive]]:
-  * re-deriving the same scan returns the SAME result frame (so every
-  * downstream plan containing it stays plan-equal across benchmark
-  * reps — the checkpointOnce-memo prerequisite), while different
-  * inputs, sort columns, or weight sets build fresh.
+/** [[graft.core.PrefixScan.build]] keeps no state between calls: two
+  * builds of one scan give equal running totals, and different inputs,
+  * sort columns or weight sets give their own.
   */
 class PrefixScanSpec extends SparkSpec {
   import spark.implicits._
 
   private def base = (1 to 100).map(i => (i, 1L)).toDF("v", "w")
 
-  test("exclusive: memo returns the identical frame for an identical scan") {
-    val (a, ta) = PrefixScan.exclusive(base, "v", Seq("w"), "psspec-memo")
-    val (b, tb) = PrefixScan.exclusive(base, "v", Seq("w"), "psspec-memo")
-    assert(a eq b, "same (plan, sortCol, weights) must hit the memo")
-    assert(ta.toSeq == tb.toSeq && ta.head == 100L)
-    assert(!(ta eq tb), "totals are cloned per call (callers may mutate)")
-    // and the memo hit is still actionable and correct
-    val row = b.orderBy("v").collect()(9)
-    assert(row.getAs[Long]("cum_w_below") == 9L)
+  private def cum(df: org.apache.spark.sql.DataFrame, sortCol: String) =
+    df.orderBy(sortCol).select("cum_w_below").as[Long].collect().toSeq
+
+  test("exclusive: two builds of one scan give equal values") {
+    val (a, ta) = PrefixScan.build(base, "v", Seq("w"), "psspec-rebuild")
+    val (b, tb) = PrefixScan.build(base, "v", Seq("w"), "psspec-rebuild")
+    assert(ta.toSeq == Seq(100L) && tb.toSeq == ta.toSeq)
+    assert(cum(a, "v") == (0L until 100L))
+    assert(cum(b, "v") == cum(a, "v"))
   }
 
   test("exclusive: different sort/weights/input build fresh scans") {
     val df = (1 to 50).map(i => (i, 51 - i, 2L)).toDF("x", "y", "w")
-    val (a, _) = PrefixScan.exclusive(df, "x", Seq("w"), "psspec-fresh")
-    val (b, _) = PrefixScan.exclusive(df, "y", Seq("w"), "psspec-fresh")
-    assert(!(a eq b), "different sortCol must not collide in the memo")
+    val (a, ta) = PrefixScan.build(df, "x", Seq("w"), "psspec-fresh")
+    val (b, tb) = PrefixScan.build(df, "y", Seq("w"), "psspec-fresh")
+    assert(ta.toSeq == Seq(100L) && tb.toSeq == Seq(100L))
+    // x ascends where y descends: the running totals run opposite ways
+    assert(a.where(col("x") === 1).select("cum_w_below").as[Long].head() == 0L)
+    assert(b.where(col("x") === 1).select("cum_w_below").as[Long].head() == 98L)
     val df2 = (1 to 60).map(i => (i, 1L)).toDF("v", "w")
-    val (c, tc) = PrefixScan.exclusive(df2, "v", Seq("w"), "psspec-fresh")
+    val (c, tc) = PrefixScan.build(df2, "v", Seq("w"), "psspec-fresh")
     assert(tc.head == 60L)
-    assert(!(a eq c))
+    assert(cum(c, "v") == (0L until 60L))
   }
-
-  // NOTE deliberately untested here: memo hits after Caches.releaseAll
-  // recompute through intact lineage (the scan result is a lazy RDD
-  // chain, not a checkpoint). Calling releaseAll mid-suite would yank
-  // OTHER suites' checkpoint blocks under the shared session — the
-  // exact single-threaded-session-boundary contract releaseAll
-  // documents — so that property stays covered by Verify/Bench, whose
-  // per-query teardown exercises it 325 times per run.
 }

@@ -44,7 +44,7 @@ class Session3Spec extends SparkSpec {
       .withColumn("sa", when(col("g") === "A", col("v")).otherwise(0L))
       .withColumn("cb", when(col("g") === "B", 1L).otherwise(0L))
       .withColumn("sb", when(col("g") === "B", col("v")).otherwise(0L))
-    val (sc, _) = PrefixScan.exclusive(df, "key",
+    val (sc, _) = PrefixScan.build(df, "key",
       Seq("ca", "sa", "cb", "sb"), "test.energy")
     val r = sc.select(col("ca"), col("cb"),
         (col("v") * col("cum_ca_below") - col("cum_sa_below")).as("da"),
