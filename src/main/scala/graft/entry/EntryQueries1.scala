@@ -34,26 +34,21 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
         count(lit(1)).as("count_order"))
       .orderBy("l_returnflag", "l_linestatus")
 
-  /** Shared pruned lineitem slice for the stats/quantile family
-    * (q02/q03/q14/q16): all four scan the same few numeric columns, so
-    * ONE pruned projection is cached under ONE retention key and
-    * reused across the family (the q39 pattern; round-6 advice item 8,
-    * A/B'd and kept — numbers in PLANS.md). Values are unchanged:
-    * caching swaps the scan for an InMemoryTableScan and every
-    * consumer's math is order-independent (decimal partials, exact
-    * order statistics).
+  /** Pruned lineitem slice for the stats/quantile family (q02/q03/
+    * q14/q16/q108/q162/q190): the few numeric columns they all read.
+    * Not persisted: the quantile consumers go through OrderStats, which
+    * caches the one-column pairs frame its own passes read, and every
+    * query is built after `Caches.releaseAll()`, so a wide cache here
+    * served no second reader (A/B and plans in `plans/r18/`).
     */
   private[graft] def liStats(s: SparkSession, dir: String): DataFrame = {
     val cols = Seq("l_orderkey", "l_linestatus") ++ lineitemNumerics
-    // NOT par()'d (r16 second-pass A/B): the quantile-selection
-    // consumers (q03/q14/q16) run 4-6 short passes over this cache and
-    // a 32-partition cache makes each pass pay 32 tasks of overhead
-    // for trivial per-pass compute (q03 0.72→1.43 s, q16 0.71→1.32 s
-    // with par) — the single-pass profiler repartitions per-call below
-    val df = li(s, dir).select(cols.map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.shared_li_stats", df)
-    df
+    // NOT par()'d (r16 second-pass A/B): the quantile-selection passes
+    // are short, and a 32-partition input makes each pay 32 tasks of
+    // overhead for trivial per-pass compute (q03 0.72→1.43 s, q16
+    // 0.71→1.32 s with par) — the single-pass profiler repartitions
+    // per-call below
+    li(s, dir).select(cols.map(col): _*)
   }
 
   /** A1/A9/A10 — single-pass numeric column profiler (replaces the
@@ -68,11 +63,13 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     val df = liStats(s, dir)
     val qs = Quantiles.exactQuantiles(df, "l_extendedprice", ps)
     val fence = qs(2) + 1.5 * (qs(2) - qs(0))
-    val rows = ps.zip(qs).map { case (p, v) => (f"p$p%.2f", v) } :+ (("iqr_fence", fence))
+    // sorted here, not by an orderBy over the 7-row LocalRelation
+    // (a range sort costs three jobs: sample, map, result)
+    val rows = (ps.zip(qs).map { case (p, v) => (f"p$p%.2f", v) } :+ (("iqr_fence", fence)))
+      .sortBy(_._1)
     import s.implicits._
     rows.toDF("quantile", "value")
       .select(col("quantile"), round(col("value"), 6).as("value"))
-      .orderBy("quantile")
   }
 
   /** P1/P5/L3 — filter + projection + top-k (TakeOrderedAndProject). */

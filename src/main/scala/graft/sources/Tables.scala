@@ -1,8 +1,14 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Parquet table loaders for the harness star schema (TESTDATA.md).
   *
@@ -29,9 +35,46 @@ object Tables {
     // graft's native expressions (graft_dot, graft_strhash) ride every
     // query path; registration is idempotent
     graft.sim.GraftFunctions.register(spark)
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    // the schema comes from the footer AFTER the confs above, so
+    // nanosAsLong shapes it exactly as it shapes Spark's own inference
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
     if (name == "events") withNanosTs(df) else df
   }
+
+  /** The schema `spark.read.parquet(path)` infers, read without a job.
+    * Spark's inference reads the same one footer, but inside a one-task
+    * job (`mergeSchemasInParallel`) that costs a job floor per load;
+    * with the schema given, a load plans without launching a job. For a
+    * directory it reads the file Spark's inference reads: the first
+    * non-hidden data file by path (summary `_metadata` files, which
+    * Spark's writers no longer produce, are not consulted). A missing
+    * path fails here with a FileNotFoundException naming it.
+    */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val file = firstDataFile(root.getFileSystem(conf), root).getOrElse(
+      throw new IllegalArgumentException(s"no Parquet data file under $path"))
+    val options = ParquetReadOptions.builder()
+      .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf), options)
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** Spark's file-index rule for names it skips: `_`/`.` prefixes
+    * (a `_` partition directory such as `_k=v` stays) and in-flight
+    * copies. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  private def firstDataFile(fs: FileSystem, p: Path): Option[Path] =
+    if (!fs.getFileStatus(p).isDirectory) Some(p)
+    else fs.listStatus(p).map(_.getPath).filterNot(c => hidden(c.getName))
+      .sortBy(_.toString).iterator.flatMap(firstDataFile(fs, _)).nextOption()
 
   /** Harness generations have shipped `events.ts` both as
     * TIMESTAMP(NANOS) (surfaced as LongType nanos under nanosAsLong) and

@@ -55,7 +55,7 @@ object ScaleAb {
     val fs = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(fs)
     def reps = spark.range(factor).select(col("id").as("__rep"))
-    def read(t: String) = spark.read.parquet(s"$sfDir/$t.parquet")
+    def read(t: String) = graft.sources.Tables.load(spark, sfDir, t)
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     // small dimensions: copy through unchanged

@@ -55,6 +55,90 @@ class SourcesSpec extends SparkSpec {
     assert(drift.isEmpty, s"schema drift:\n${drift.mkString("\n")}")
   }
 
+  /** Jobs started while `body` runs. The listener bus delivers events
+    * in order, so once a sentinel job from a second job group has been
+    * seen, every job `body` started has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("sources-probe") => jobs.incrementAndGet()
+          case Some("sources-probe-end") => seen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("sources-probe", "jobs of the probed body")
+      body
+      sc.setJobGroup("sources-probe-end", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the sentinel job never reached the listener")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("footer schema equals Spark's inferred schema for every harness table") {
+    Tables.all.foreach { t =>
+      val got = Tables.load(spark, sf, t).schema
+      // inferred under the confs Tables.load just set
+      val inferred = spark.read.parquet(s"$sf/$t.parquet")
+      val want = (if (t == "events") Tables.withNanosTs(inferred) else inferred).schema
+      assert(got == want, s"$t: footer $got, inferred $want")
+    }
+  }
+
+  test("footer schema equals Spark's inferred schema for a multi-file directory") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-footer").toString
+    li.select("l_orderkey", "l_quantity", "l_returnflag", "l_shipdate")
+      .repartition(3).write.parquet(s"$dir/multi.parquet")
+    val data = new java.io.File(s"$dir/multi.parquet").list()
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(data.length == 3, s"expected 3 data files, got ${data.toSeq}")
+    val loaded = Tables.load(spark, dir, "multi")
+    val inferred = spark.read.parquet(s"$dir/multi.parquet")
+    assert(loaded.schema == inferred.schema)
+    assert(loaded.count() == li.count())
+  }
+
+  test("a table load launches no Spark job") {
+    assert(jobsDuring(Tables.all.foreach(t => Tables.load(spark, sf, t))) == 0)
+    // the probe sees the inference job that the footer read replaces
+    assert(jobsDuring(spark.read.parquet(s"$sf/lineitem.parquet")) >= 1)
+  }
+
+  test("a missing table fails at load time, naming the path") {
+    val e = intercept[Exception](Tables.load(spark, sf, "no_such_table"))
+    assert(e.getMessage.contains(s"$sf/no_such_table.parquet"), e.getMessage)
+  }
+
+  test("Tables.load is the only Parquet reader in src/main") {
+    // the two warm-ups mirror the benchmark runner's warm-up read
+    val allowed = Set("Tables.scala", "Bench.scala", "ActionProfile.scala")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repo root")
+    val files = java.nio.file.Files.walk(root)
+    val hits = try {
+      import scala.jdk.CollectionConverters._
+      files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filterNot(f => allowed(f.getFileName.toString))
+        .flatMap { f =>
+          java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+            .collect { case (line, i) if line.contains("read.parquet(") =>
+              s"$f:${i + 1}: ${line.trim}" }
+        }.toList
+    } finally files.close()
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("JSON sink/source round-trips rows") {
     val dir = java.nio.file.Files.createTempDirectory("graft-json").toString
     val sample = li.select("l_orderkey", "l_linenumber", "l_quantity").limit(500)
