@@ -109,11 +109,10 @@ object Binary {
     * 100 TB multimodal pipeline filters and partitions on — needs
     * only these first bytes, so it runs as cheap per-row map work.
     */
-  def parseImageMeta(b: Array[Byte]): Option[ImageMeta] = {
+  def parseImageMeta(b: Array[Byte]): Option[ImageMeta] = ByteCursor.total {
     val c = ByteCursor(b)
     if (c.tagAt(0, PngSignature) && c.tagAt(12, "IHDR"))
-      for (w <- c.be32(16); h <- c.be32(20); depth <- c.u8(24))
-        yield ImageMeta("png", w.toInt, h.toInt, depth)
+      Some(ImageMeta("png", c.be32(16).toInt, c.be32(20).toInt, c.u8(24)))
     else if (b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
       var i = 2
       while (i + 3 < b.length) {
@@ -122,15 +121,13 @@ object Binary {
         if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7) || m == 0x01) i += 2
         else if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc)
           // SOFn: len(2) precision(1) height(2) width(2)
-          return for (h <- c.be16(i + 5); w <- c.be16(i + 7); p <- c.u8(i + 4))
-            yield ImageMeta("jpeg", w, h, p)
-        else i += 2 + c.be16(i + 2).getOrElse(return None) // skip APPn/COM/DQT/...
+          return Some(ImageMeta("jpeg", c.be16(i + 7), c.be16(i + 5), c.u8(i + 4)))
+        else i += 2 + c.be16(i + 2) // skip APPn/COM/DQT/...
       }
       None
     } else if (b.length >= 13 && c.tagAt(0, "GIF8") &&
                (b(4) == '7' || b(4) == '9') && b(5) == 'a')
-      for (w <- c.le16(6); h <- c.le16(8); p <- c.u8(10))
-        yield ImageMeta("gif", w, h, ((p >> 4) & 7) + 1)
+      Some(ImageMeta("gif", c.le16(6), c.le16(8), ((c.u8(10) >> 4) & 7) + 1))
     else if (b.length >= 20 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
              b(3) == 'F' && b(8) == 'W' && b(9) == 'E' && b(10) == 'B' &&
              b(11) == 'P') // WebP is always 8-bit-per-channel
@@ -220,13 +217,13 @@ object Binary {
     * the alpha flag — what a 100 TB pipeline filters and partitions
     * on — need only these bytes, so it runs as cheap per-row map work.
     */
-  def parseWebpMeta(b: Array[Byte]): Option[WebpMeta] = {
+  def parseWebpMeta(b: Array[Byte]): Option[WebpMeta] = ByteCursor.total {
     val c = ByteCursor(b)
     if (b.length < 20 || !c.tagAt(0, "RIFF") || !c.tagAt(8, "WEBP")) return None
     // RIFF size must tile the file
-    if (c.le32(4).getOrElse(return None) != b.length - 8L) return None
+    if (c.le32(4) != b.length - 8L) return None
     // first chunk's payload size (unsigned, kept Long)
-    val size = c.le32(16).getOrElse(return None)
+    val size = c.le32(16)
     val p = 20
     if (c.tagAt(12, "VP8 ")) {
       if (size < 10 || p + 10 > b.length) return None
@@ -235,14 +232,14 @@ object Binary {
       if ((frameTag & 1) != 0) return None // interframe cannot lead a file
       if ((b(p + 3) & 0xff) != 0x9d || b(p + 4) != 0x01 || b(p + 5) != 0x2a)
         return None
-      val w = c.le16(p + 6).getOrElse(return None) & 0x3fff
-      val h = c.le16(p + 8).getOrElse(return None) & 0x3fff
+      val w = c.le16(p + 6) & 0x3fff
+      val h = c.le16(p + 8) & 0x3fff
       if (w == 0 || h == 0) return None
       Some(WebpMeta("vp8", w, h, has_alpha = false))
     } else if (c.tagAt(12, "VP8L")) {
       if (size < 5 || p + 5 > b.length) return None
       if (b(p) != 0x2f) return None
-      val bits = c.le32(p + 1).getOrElse(return None)
+      val bits = c.le32(p + 1)
       if (((bits >> 29) & 0x7L) != 0L) return None // version must be 0
       val w = ((bits & 0x3fffL) + 1L).toInt
       val h = (((bits >> 14) & 0x3fffL) + 1L).toInt
@@ -251,8 +248,8 @@ object Binary {
       if (size != 10 || p + 10 > b.length) return None
       val flags = b(p) & 0xff
       if ((flags & 0xc1) != 0) return None // reserved flag bits must be 0
-      val w = c.le(p + 4, 3).getOrElse(return None).toInt + 1
-      val h = c.le(p + 7, 3).getOrElse(return None).toInt + 1
+      val w = c.le(p + 4, 3).toInt + 1
+      val h = c.le(p + 7, 3).toInt + 1
       Some(WebpMeta("vp8x", w, h, (flags & 0x10) != 0))
     } else None
   }
@@ -324,7 +321,7 @@ object Binary {
     * on — needs only these first bytes, so it runs as cheap per-row
     * map work.
     */
-  def parseAudioMeta(b: Array[Byte]): Option[AudioMeta] = {
+  def parseAudioMeta(b: Array[Byte]): Option[AudioMeta] = ByteCursor.total {
     val c = ByteCursor(b)
     if (c.tagAt(0, "RIFF") && c.tagAt(8, "WAVE")) {
       // chunk walk: [id(4) size(4,LE) payload(size, word-aligned)].
@@ -338,12 +335,12 @@ object Binary {
       var rate = 0; var ch = 0; var bits = 0; var dataBytes = -1L
       var blockAlign = 0
       while (i + 8 <= b.length && (rate == 0 || dataBytes < 0)) {
-        val size = c.le32(i + 4).getOrElse(return None)
+        val size = c.le32(i + 4)
         if (c.tagAt(i, "fmt ") && i + 24 <= b.length) {
-          ch = c.le16(i + 10).getOrElse(return None)
-          rate = c.le32(i + 12).getOrElse(return None).toInt
-          blockAlign = c.le16(i + 20).getOrElse(return None)
-          bits = c.le16(i + 22).getOrElse(return None)
+          ch = c.le16(i + 10)
+          rate = c.le32(i + 12).toInt
+          blockAlign = c.le16(i + 20)
+          bits = c.le16(i + 22)
         } else if (c.tagAt(i, "data")) dataBytes = size
         i += 8L + size + (size & 1L) // chunks are word-aligned
       }
@@ -355,8 +352,7 @@ object Binary {
     } else if (c.tagAt(0, "fLaC") && b.length >= 26 && (b(4) & 0x7f) == 0) {
       // STREAMINFO (block type 0, 34 bytes at offset 8); the packed
       // field at offset 18: rate(20) channels-1(3) bits-1(5) samples(36)
-      val (rate, ch, bits, frames) =
-        streamInfo(c.be64(18).getOrElse(return None))
+      val (rate, ch, bits, frames) = streamInfo(c.be64(18))
       if (rate <= 0) None
       else Some(AudioMeta("flac", rate, ch, bits, frames, frames * 1000L / rate))
     } else if (c.tagAt(0, "OggS")) parseOggOpusMeta(b)
@@ -393,7 +389,7 @@ object Binary {
   private def parseMp3Meta(b: Array[Byte]): Option[AudioMeta] = {
     val c = ByteCursor(b)
     var i = 0L
-    if (c.tagAt(0, "ID3")) i = 10L + syncsafe(c.be32(6).getOrElse(return None))
+    if (c.tagAt(0, "ID3")) i = 10L + syncsafe(c.be32(6))
     val brV1 = Array(-1, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160,
       192, 224, 256, 320, -1)
     val brV2 = Array(-1, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96,
@@ -410,8 +406,8 @@ object Binary {
       if (b.length - i == 128L && c.tagAt(i, "TAG")) {
         i = b.length.toLong
       } else {
-        // a partial trailing header is None
-        val h = c.be32(i).getOrElse(return None)
+        // a partial trailing header rejects
+        val h = c.be32(i)
         // sync = 11 set bits; version 01 is reserved; layer must be III
         if (((h >>> 21) & 0x7ff) != 0x7ff) return None
         val v = ((h >>> 19) & 3).toInt
@@ -497,7 +493,7 @@ object Binary {
     * junk duration. `sample_rate` reports OpusHead's informational
     * input rate; `n_frames` is the 48 kHz sample count.
     */
-  def parseOggOpusMeta(b: Array[Byte]): Option[AudioMeta] = {
+  def parseOggOpusMeta(b: Array[Byte]): Option[AudioMeta] = ByteCursor.total {
     val c = ByteCursor(b)
     var i = 0L
     var first = true
@@ -505,15 +501,15 @@ object Binary {
     var lastGranule = 0L; var sawEos = false
     while (i < b.length) {
       if (sawEos) return None // bytes after the EOS page: trailing garbage
-      val pg = readOggPage(c, i).getOrElse(return None)
+      val pg = readOggPage(c, i)
       if (first) {
         if ((pg.flags & 2) == 0) return None // stream must open with BOS
         val h = pg.body
         if (pg.bodyLen < 19 || !c.tagAt(h, "OpusHead")) return None
-        if (c.u8(h + 8).getOrElse(return None) != 1) return None // version
-        channels = c.u8(h + 9).getOrElse(return None)
-        preskip = c.le16(h + 10).getOrElse(return None)
-        rate = c.le32(h + 12).getOrElse(return None)
+        if (c.u8(h + 8) != 1) return None // version
+        channels = c.u8(h + 9)
+        preskip = c.le16(h + 10)
+        rate = c.le32(h + 12)
         if (channels < 1) return None
         first = false
       }
@@ -533,20 +529,19 @@ object Binary {
 
   /** The strict RFC 3533 page read at `i`: capture pattern, version
     * byte 0, lacing table, and the CRC computed with its own field
-    * read as zero. None on any mismatch or truncation. */
-  private def readOggPage(c: ByteCursor, i: Long): Option[OggPage] = {
-    if (!c.tagAt(i, "OggS") || c.u8(i + 4).getOrElse(return None) != 0)
-      return None
-    val flags = c.u8(i + 5).getOrElse(return None)
-    val granule = c.le64(i + 6).getOrElse(return None)
-    val stored = c.le32(i + 22).getOrElse(return None)
-    val nseg = c.u8(i + 26).getOrElse(return None)
-    if (!c.has(i + 27, nseg)) return None
+    * read as zero. Rejects on any mismatch or truncation. */
+  private def readOggPage(c: ByteCursor, i: Long): OggPage = {
+    if (!c.tagAt(i, "OggS") || c.u8(i + 4) != 0) ByteCursor.reject()
+    val flags = c.u8(i + 5)
+    val granule = c.le64(i + 6)
+    val stored = c.le32(i + 22)
+    val nseg = c.u8(i + 26)
+    if (!c.has(i + 27, nseg)) ByteCursor.reject()
     var payLen = 0L
     var k = 0
     while (k < nseg) { payLen += c.buf((i + 27 + k).toInt) & 0xff; k += 1 }
     val total = 27L + nseg + payLen
-    if (!c.has(i, total)) return None
+    if (!c.has(i, total)) ByteCursor.reject()
     var crc = 0
     var j = 0
     while (j < total) {
@@ -554,8 +549,8 @@ object Binary {
       crc = (crc << 8) ^ oggCrcTable(((crc >>> 24) ^ byt) & 0xff)
       j += 1
     }
-    if ((crc.toLong & 0xffffffffL) != stored) return None
-    Some(OggPage(flags, granule, i + 27 + nseg, payLen, i + total))
+    if ((crc.toLong & 0xffffffffL) != stored) ByteCursor.reject()
+    OggPage(flags, granule, i + 27 + nseg, payLen, i + total)
   }
 
   /** One Ogg page with a correct CRC (general lacing: 255-runs + the
@@ -640,7 +635,7 @@ object Binary {
     * Opus, Vorbis granules are PCM sample counts at the STREAM's own
     * rate, so the EOS granule is n_samples directly and duration
     * needs no 48 kHz rebase. */
-  def parseOggVorbisMeta(b: Array[Byte]): Option[VorbisId] = {
+  def parseOggVorbisMeta(b: Array[Byte]): Option[VorbisId] = ByteCursor.total {
     if (b == null || b.length < 27) return None
     val c = ByteCursor(b)
     var i = 0L
@@ -650,25 +645,25 @@ object Binary {
     var lastGranule = 0L; var sawEos = false
     while (i < b.length) {
       if (sawEos) return None // trailing garbage after EOS
-      val pg = readOggPage(c, i).getOrElse(return None)
+      val pg = readOggPage(c, i)
       if (first) {
         if ((pg.flags & 2) == 0) return None // must open with BOS
         val h = pg.body
         // \x01vorbis + version(4) + ch(1) + rate(4) + 3 bitrates(12)
         // + blocksizes(1) + framing(1) = 30 bytes
-        if (pg.bodyLen < 30 || c.u8(h).getOrElse(return None) != 1 ||
-          !c.tagAt(h + 1, "vorbis")) return None
+        if (pg.bodyLen < 30 || c.u8(h) != 1 || !c.tagAt(h + 1, "vorbis"))
+          return None
         // vorbis_version
-        if (c.le32(h + 7).getOrElse(return None) != 0) return None
-        channels = c.u8(h + 11).getOrElse(return None)
-        rate = c.le32(h + 12).getOrElse(return None)
+        if (c.le32(h + 7) != 0) return None
+        channels = c.u8(h + 11)
+        rate = c.le32(h + 12)
         // max(16), nominal(20), min(24)
-        nominal = c.le32(h + 20).getOrElse(return None)
-        val bsByte = c.u8(h + 28).getOrElse(return None)
+        nominal = c.le32(h + 20)
+        val bsByte = c.u8(h + 28)
         bs0 = 1 << (bsByte & 0xf)
         bs1 = 1 << (bsByte >>> 4)
         // framing bit
-        if ((c.u8(h + 29).getOrElse(return None) & 1) == 0) return None
+        if ((c.u8(h + 29) & 1) == 0) return None
         if (channels < 1 || rate < 1) return None
         if (bs0 < 64 || bs1 > 8192 || bs0 > bs1) return None
         first = false
@@ -754,18 +749,16 @@ object Binary {
   /** The shared Vorbis-comment body parse: little-endian vendor
     * string + KEY=value UTF-8 records over b[from, end). */
   private def vorbisComments(b: Array[Byte], from: Long,
-      end: Long): Option[VorbisTags] = {
+      end: Long): VorbisTags = {
     val c = new ByteCursor(b, from, end)
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
-    val vlen = c.le32().getOrElse(return None)
-    val vendor = new String(c.bytes(vlen).getOrElse(return None), utf8)
-    val n = c.le32().getOrElse(return None)
-    if (n > 65536) return None
+    val vendor = new String(c.bytes(c.le32()), utf8)
+    val n = c.le32()
+    if (n > 65536) ByteCursor.reject()
     var title = ""; var artist = ""; var album = ""
     var k = 0L
     while (k < n) {
-      val cl = c.le32().getOrElse(return None)
-      val s = new String(c.bytes(cl).getOrElse(return None), utf8)
+      val s = new String(c.bytes(c.le32()), utf8)
       val eq = s.indexOf('=')
       if (eq > 0) s.substring(0, eq).toUpperCase match {
         case "TITLE" => title = s.substring(eq + 1)
@@ -775,7 +768,7 @@ object Binary {
       }
       k += 1
     }
-    Some(VorbisTags(vendor, title, artist, album, n.toInt))
+    VorbisTags(vendor, title, artist, album, n.toInt)
   }
 
   /** Metadata-block walk after "fLaC" to the VORBIS_COMMENT block
@@ -783,7 +776,7 @@ object Binary {
     * `KEY=value` UTF-8 records (keys case-insensitive —
     * TITLE/ARTIST/ALBUM surface, everything else counts). None when
     * no comment block exists or any length field lies. */
-  def parseFlacTags(b: Array[Byte]): Option[VorbisTags] = {
+  def parseFlacTags(b: Array[Byte]): Option[VorbisTags] = ByteCursor.total {
     if (b == null || b.length < 8) return None
     val c = ByteCursor(b)
     if (!c.tagAt(0, "fLaC")) return None
@@ -791,12 +784,12 @@ object Binary {
     var last = false
     while (!last && p + 4 <= b.length) {
       // block header: last-flag(1) type(7) length(24, big-endian)
-      val h = c.be32(p).getOrElse(return None)
+      val h = c.be32(p)
       last = (h & 0x80000000L) != 0
       val typ = (h >>> 24) & 0x7f
       val len = h & 0xffffff
       if (p + 4 + len > b.length) return None
-      if (typ == 4) return vorbisComments(b, p + 4, p + 4 + len)
+      if (typ == 4) return Some(vorbisComments(b, p + 4, p + 4 + len))
       p += 4 + len
     }
     None
@@ -843,16 +836,16 @@ object Binary {
     * Vorbis-comment body as FLAC's block. Multi-page tag packets are
     * out of documented scope (length checks reject them, never
     * garble). */
-  def parseOpusTags(b: Array[Byte]): Option[VorbisTags] = {
+  def parseOpusTags(b: Array[Byte]): Option[VorbisTags] = ByteCursor.total {
     if (b == null || b.length < 27) return None
     val c = ByteCursor(b)
     if (!c.tagAt(0, "OggS")) return None
     var i = 0L
     var first = true
     while (i + 27 <= b.length) {
-      val pg = readOggPage(c, i).getOrElse(return None)
+      val pg = readOggPage(c, i)
       if (!first && pg.bodyLen >= 8 && c.tagAt(pg.body, "OpusTags"))
-        return vorbisComments(b, pg.body + 8, pg.body + pg.bodyLen)
+        return Some(vorbisComments(b, pg.body + 8, pg.body + pg.bodyLen))
       first = false
       i = pg.end
     }
@@ -904,27 +897,25 @@ object Binary {
     * from the audio parser). Returns None for unrecognized/truncated/
     * malformed bytes.
     */
-  def parseVideoMeta(b: Array[Byte]): Option[VideoMeta] = {
+  def parseVideoMeta(b: Array[Byte]): Option[VideoMeta] = ByteCursor.total {
     if (b.length < 16) return None
     var brand: String = null
     var timescale = -1L
     var duration = -1L
     var tracks = 0
     ByteCursor(b).boxes().foreach {
-      case None => return None // malformed size
-      case Some(("ftyp", f)) => brand = f.fourcc(f.pos).getOrElse(return None)
-      case Some(("moov", mv)) =>
+      case ("ftyp", f) => brand = f.fourcc(f.pos)
+      case ("moov", mv) =>
         mv.boxes().foreach {
-          case None => return None
-          case Some(("mvhd", m)) =>
-            val (ts, dur) = m.u8(m.pos).getOrElse(return None) match {
-              case 0 => (m.be32(m.pos + 12), m.be32(m.pos + 16))
-              case 1 => (m.be32(m.pos + 20), m.be64(m.pos + 24))
+          case ("mvhd", m) =>
+            m.u8(m.pos) match {
+              case 0 =>
+                timescale = m.be32(m.pos + 12); duration = m.be32(m.pos + 16)
+              case 1 =>
+                timescale = m.be32(m.pos + 20); duration = m.be64(m.pos + 24)
               case _ => return None
             }
-            timescale = ts.getOrElse(return None)
-            duration = dur.getOrElse(return None)
-          case Some(("trak", _)) => tracks += 1
+          case ("trak", _) => tracks += 1
           case _ => ()
         }
       case _ => () // skip free/mdat/unknown top-level boxes
@@ -953,17 +944,15 @@ object Binary {
     * is legal — the q213 fixtures carry them); a malformed size field
     * rejects the file. Long cursors throughout (the crafted-size
     * infinite-loop rule). */
-  def parseTracks(b: Array[Byte]): Option[Seq[TrackMeta]] = {
+  def parseTracks(b: Array[Byte]): Option[Seq[TrackMeta]] = ByteCursor.total {
     if (b == null || b.length < 16) return None
     if (parseVideoMeta(b).isEmpty) return None // same validity gate
     val out = Vector.newBuilder[TrackMeta]
     var idx = 0
     ByteCursor(b).boxes().foreach {
-      case None => return None
-      case Some(("moov", mv)) =>
+      case ("moov", mv) =>
         mv.boxes().foreach {
-          case None => return None
-          case Some(("trak", tk)) =>
+          case ("trak", tk) =>
             var handler: String = null
             var timescale = -1L
             var duration = -1L
@@ -971,51 +960,44 @@ object Binary {
             var sumDelta = -1L
             var totalBytes = -1L
             tk.boxes().foreach {
-              case None => return None
-              case Some(("mdia", md)) =>
+              case ("mdia", md) =>
                 md.boxes().foreach {
-                  case None => return None
-                  case Some(("mdhd", h)) =>
-                    val (ts, dur) = h.u8(h.pos).getOrElse(return None) match {
+                  case ("mdhd", h) =>
+                    h.u8(h.pos) match {
                       case 0 if h.has(h.pos, 24) =>
-                        (h.be32(h.pos + 12), h.be32(h.pos + 16))
+                        timescale = h.be32(h.pos + 12)
+                        duration = h.be32(h.pos + 16)
                       case 1 if h.has(h.pos, 36) =>
-                        (h.be32(h.pos + 20), h.be64(h.pos + 24))
+                        timescale = h.be32(h.pos + 20)
+                        duration = h.be64(h.pos + 24)
                       case _ => return None
                     }
-                    timescale = ts.getOrElse(return None)
-                    duration = dur.getOrElse(return None)
-                  case Some(("hdlr", h)) =>
-                    handler = h.fourcc(h.pos + 8).getOrElse(return None)
-                  case Some(("minf", mf)) =>
+                  case ("hdlr", h) => handler = h.fourcc(h.pos + 8)
+                  case ("minf", mf) =>
                     mf.boxes().foreach {
-                      case None => return None
-                      case Some(("stbl", sb)) =>
+                      case ("stbl", sb) =>
                         sb.boxes().foreach {
-                          case None => return None
-                          case Some(("stts", t)) =>
-                            val entries = t.be32(t.pos + 4).getOrElse(return None)
+                          case ("stts", t) =>
+                            val entries = t.be32(t.pos + 4)
                             if (!t.has(t.pos + 8, entries * 8)) return None
                             var s = 0L; var d = 0L
                             var e = 0L
                             while (e < entries) {
                               val run = t.pos + 8 + e * 8
-                              val cnt = t.be32(run).getOrElse(return None)
-                              val dl = t.be32(run + 4).getOrElse(return None)
-                              s += cnt; d += cnt * dl
+                              val cnt = t.be32(run)
+                              s += cnt; d += cnt * t.be32(run + 4)
                               e += 1
                             }
                             nSamples = s; sumDelta = d
-                          case Some(("stsz", z)) =>
-                            val fixed = z.be32(z.pos + 4).getOrElse(return None)
-                            val cnt = z.be32(z.pos + 8).getOrElse(return None)
+                          case ("stsz", z) =>
+                            val fixed = z.be32(z.pos + 4)
+                            val cnt = z.be32(z.pos + 8)
                             if (fixed != 0L) totalBytes = fixed * cnt
                             else {
                               if (!z.has(z.pos + 12, cnt * 4)) return None
                               var s = 0L; var e = 0L
                               while (e < cnt) {
-                                val at = z.pos + 12 + e * 4
-                                s += z.be32(at).getOrElse(return None)
+                                s += z.be32(z.pos + 12 + e * 4)
                                 e += 1
                               }
                               totalBytes = s
@@ -1165,7 +1147,7 @@ object Binary {
     * (the `av1C` payload) is codec-library territory behind
     * [[stubDecode]], exactly like MP4 frames.
     */
-  def parseAvifMeta(b: Array[Byte]): Option[AvifMeta] = {
+  def parseAvifMeta(b: Array[Byte]): Option[AvifMeta] = ByteCursor.total {
     if (b == null || b.length < 16) return None
     var brand: String = null
     var width = -1L
@@ -1173,29 +1155,28 @@ object Binary {
     var depth = 8
     var alpha = false
     ByteCursor(b).boxes().foreach {
-      case None => return None
-      case Some(("ftyp", f)) =>
-        brand = f.fourcc(f.pos).getOrElse(return None)
+      case ("ftyp", f) =>
+        brand = f.fourcc(f.pos)
         if (brand != "avif" && brand != "avis") return None
-      case Some(("meta", mt)) =>
-        mt.skip(4).getOrElse(return None) // meta is a FullBox
+      case ("meta", mt) =>
+        mt.skip(4) // meta is a FullBox
         mt.boxes().foreach {
-          case None => return None
-          case Some(("iprp", ip)) =>
+          case ("iprp", ip) =>
             ip.boxes().foreach {
-              case None => return None
-              case Some(("ipco", pc)) =>
+              case ("ipco", pc) =>
                 pc.boxes().foreach {
-                  case None => return None
-                  case Some(("ispe", x)) =>
-                    width = x.be32(x.pos + 4).getOrElse(return None)
-                    height = x.be32(x.pos + 8).getOrElse(return None)
-                  case Some(("pixi", x)) => // first channel's bits
-                    depth = x.u8(x.pos + 5).getOrElse(return None)
-                  case Some(("auxC", x)) =>
-                    val urn = x.bytes(x.pos + 4, x.end - x.pos - 4)
-                      .map(new String(_, "US-ASCII").takeWhile(_ != '\u0000'))
-                    if (urn.exists(_.contains(":alpha"))) alpha = true
+                  case ("ispe", x) =>
+                    width = x.be32(x.pos + 4)
+                    height = x.be32(x.pos + 8)
+                  case ("pixi", x) => // first channel's bits
+                    depth = x.u8(x.pos + 5)
+                  case ("auxC", x) =>
+                    // a body too short for the URN carries no alpha
+                    val n = x.end - x.pos - 4
+                    if (x.has(x.pos + 4, n) &&
+                      new String(x.bytes(x.pos + 4, n), "US-ASCII")
+                        .takeWhile(_ != '\u0000').contains(":alpha"))
+                      alpha = true
                   case _ => ()
                 }
               case _ => () // ipma associations etc.
@@ -1263,7 +1244,7 @@ object Binary {
     * malformed — a JPEG without EXIF is not an error for
     * [[parseImageMeta]], only for this extractor.
     */
-  def parseExifMeta(b: Array[Byte]): Option[ExifMeta] = {
+  def parseExifMeta(b: Array[Byte]): Option[ExifMeta] = ByteCursor.total {
     if (b == null || b.length < 4 || (b(0) & 0xff) != 0xff ||
       (b(1) & 0xff) != 0xd8) return None
     val c = ByteCursor(b)
@@ -1276,7 +1257,7 @@ object Binary {
       if (m == 0xd8 || (m >= 0xd0 && m <= 0xd7) || m == 0x01) i += 2
       else if (m == 0xda || m == 0xd9) return None // image data: no EXIF
       else {
-        val len = c.be16(i + 2).getOrElse(return None)
+        val len = c.be16(i + 2)
         if (m == 0xe1 && len >= 16 && i + 2 + len <= b.length &&
           c.tagAt(i + 4, "Exif\u0000\u0000")) {
           tiffAt = i + 10
@@ -1291,27 +1272,27 @@ object Binary {
     val le = t.tagAt(tiffAt, "II")
     if (!le && !t.tagAt(tiffAt, "MM")) return None
     val n = (tiffEnd - tiffAt).toLong
-    if (n < 8 || t.uint(tiffAt + 2, 2, le).getOrElse(return None) != 42)
+    if (n < 8 || t.uint(tiffAt + 2, 2, le) != 42)
       return None
-    val ifd = t.uint(tiffAt + 4, 4, le).getOrElse(return None)
+    val ifd = t.uint(tiffAt + 4, 4, le)
     if (ifd + 2 > n) return None
-    val cnt = t.uint(tiffAt + ifd, 2, le).getOrElse(return None)
+    val cnt = t.uint(tiffAt + ifd, 2, le)
     var orientation = -1
     var datetime = ""
     var k = 0
     while (k < cnt) {
       val e = tiffAt + ifd + 2 + k * 12L
       if (!t.has(e, 12)) return None
-      val tag = t.uint(e, 2, le).getOrElse(return None)
-      val typ = t.uint(e + 2, 2, le).getOrElse(return None)
-      val valCnt = t.uint(e + 4, 4, le).getOrElse(return None)
+      val tag = t.uint(e, 2, le)
+      val typ = t.uint(e + 2, 2, le)
+      val valCnt = t.uint(e + 4, 4, le)
       if (tag == 274 && typ == 3 && valCnt == 1L)
-        orientation = t.uint(e + 8, 2, le).getOrElse(return None).toInt
+        orientation = t.uint(e + 8, 2, le).toInt
       else if (tag == 306 && typ == 2 && valCnt >= 2 && valCnt <= 32) {
-        val off = tiffAt + t.uint(e + 8, 4, le).getOrElse(return None)
+        val off = tiffAt + t.uint(e + 8, 4, le)
         if (!t.has(off, valCnt)) return None
         // NUL terminator dropped
-        datetime = new String(t.bytes(off, valCnt - 1).getOrElse(return None),
+        datetime = new String(t.bytes(off, valCnt - 1),
           "US-ASCII")
       }
       k += 1
@@ -1369,13 +1350,13 @@ object Binary {
     * (a zero where a frame id should start) ends the walk. None for
     * malformed framing.
     */
-  def parseId3v2(b: Array[Byte]): Option[Id3Meta] = {
+  def parseId3v2(b: Array[Byte]): Option[Id3Meta] = ByteCursor.total {
     if (b == null || b.length < 10 || b(0) != 'I' || b(1) != 'D' ||
       b(2) != '3') return None
     val c = ByteCursor(b)
     val major = b(3) & 0xff
     if (major != 2 && major != 3 && major != 4) return None
-    val tagSize = syncsafe(c.be32(6).getOrElse(return None))
+    val tagSize = syncsafe(c.be32(6))
     val end = math.min(10L + tagSize, b.length.toLong)
     var i = 10L
     var title = ""; var artist = ""; var album = ""
@@ -1387,11 +1368,11 @@ object Binary {
       else {
         val id = new String(b, i.toInt, idLen, "US-ASCII")
         if (!id.forall(ch => ch.isUpper || ch.isDigit)) return None
-        val size64 = (major match {
+        val size64 = major match {
           case 2 => c.be(i + 3, 3)
-          case 4 => c.be32(i + 4).map(v => syncsafe(v).toLong)
+          case 4 => syncsafe(c.be32(i + 4)).toLong
           case _ => c.be32(i + 4)
-        }).getOrElse(return None)
+        }
         if (i + hdr + size64 > end) return None
         val size = size64.toInt // in range: bounded by `end` above
         if (id.startsWith("T") && size >= 1) {
@@ -1402,7 +1383,7 @@ object Binary {
             case 1 => // UTF-16 with BOM (v2.2 UCS-2 / v2.3 "Unicode")
               if (size <= 3) ""
               else {
-                val cs = c.be16(i + hdr + 1).getOrElse(return None) match {
+                val cs = c.be16(i + hdr + 1) match {
                   case 0xfffe => java.nio.charset.StandardCharsets.UTF_16LE
                   case 0xfeff => java.nio.charset.StandardCharsets.UTF_16BE
                   case _ => return None // enc 1 without a BOM: malformed
@@ -1549,32 +1530,31 @@ object Binary {
 
   /** BMP: "BM" + BITMAPINFOHEADER — LE dims at 18/22 (height may be
     * negative = top-down; magnitude reported), bpp at 28. */
-  def parseBmpMeta(b: Array[Byte]): Option[ImageMeta] = {
+  def parseBmpMeta(b: Array[Byte]): Option[ImageMeta] = ByteCursor.total {
     if (b == null || b.length < 30 || b(0) != 'B' || b(1) != 'M') return None
     val c = ByteCursor(b)
-    val dibSize = c.le32(14).getOrElse(return None)
+    val dibSize = c.le32(14)
     if (dibSize < 40) return None // core-header BMPs out of scope
-    val w = c.le32(18).getOrElse(return None).toInt
+    val w = c.le32(18).toInt
     // signed: negative = top-down rows
-    val h = c.le32(22).getOrElse(return None).toInt
-    val bpp = c.le16(28).getOrElse(return None)
+    val h = c.le32(22).toInt
+    val bpp = c.le16(28)
     if (w <= 0 || h == 0 || h == Int.MinValue) return None
     if (!Set(1, 4, 8, 16, 24, 32).contains(bpp)) return None
     Some(ImageMeta("bmp", w, math.abs(h), bpp))
   }
 
   /** ICO: the directory's FIRST image entry (0-byte dim = 256). */
-  def parseIcoMeta(b: Array[Byte]): Option[ImageMeta] = {
+  def parseIcoMeta(b: Array[Byte]): Option[ImageMeta] = ByteCursor.total {
     if (b == null || b.length < 22) return None
     val c = ByteCursor(b)
     // reserved, type=icon
-    if (c.le16(0).getOrElse(return None) != 0 ||
-      c.le16(2).getOrElse(return None) != 1) return None
-    val count = c.le16(4).getOrElse(return None)
+    if (c.le16(0) != 0 || c.le16(2) != 1) return None
+    val count = c.le16(4)
     if (count < 1) return None
     val w = if ((b(6) & 0xff) == 0) 256 else b(6) & 0xff
     val h = if ((b(7) & 0xff) == 0) 256 else b(7) & 0xff
-    val bpp = c.le16(12).getOrElse(return None)
+    val bpp = c.le16(12)
     Some(ImageMeta("ico", w, h, if (bpp == 0) 32 else bpp))
   }
 
@@ -1582,14 +1562,14 @@ object Binary {
     * first-IFD walk for ImageWidth(256) / ImageLength(257) /
     * BitsPerSample(258, inline SHORT or via offset for multi-sample —
     * first sample reported). Cursors Long (unsigned-32 offsets). */
-  def parseTiffMeta(b: Array[Byte]): Option[ImageMeta] = {
+  def parseTiffMeta(b: Array[Byte]): Option[ImageMeta] = ByteCursor.total {
     if (b == null || b.length < 14) return None
     val c = ByteCursor(b)
     val le = c.tagAt(0, "II")
     if (!le && !c.tagAt(0, "MM")) return None
-    if (c.uint(2, 2, le).getOrElse(return None) != 42) return None
-    val ifd = c.uint(4, 4, le).getOrElse(return None)
-    val n = c.uint(ifd, 2, le).getOrElse(return None)
+    if (c.uint(2, 2, le) != 42) return None
+    val ifd = c.uint(4, 4, le)
+    val n = c.uint(ifd, 2, le)
     var width = -1L
     var height = -1L
     var depth = 1
@@ -1597,13 +1577,13 @@ object Binary {
     while (k < n) {
       val e = ifd + 2 + k * 12L
       if (!c.has(e, 12)) return None
-      val tag = c.uint(e, 2, le).getOrElse(return None)
-      val typ = c.uint(e + 2, 2, le).getOrElse(return None)
-      val cnt = c.uint(e + 4, 4, le).getOrElse(return None)
+      val tag = c.uint(e, 2, le)
+      val typ = c.uint(e + 2, 2, le)
+      val cnt = c.uint(e + 4, 4, le)
       // SHORT(3) reads 2 bytes, LONG(4) reads 4 — inline when it fits
       val inlineVal =
-        if (typ == 3) c.uint(e + 8, 2, le).getOrElse(return None)
-        else if (typ == 4) c.uint(e + 8, 4, le).getOrElse(return None)
+        if (typ == 3) c.uint(e + 8, 2, le)
+        else if (typ == 4) c.uint(e + 8, 4, le)
         else -1L
       tag match {
         case 256 => width = inlineVal
@@ -1611,9 +1591,9 @@ object Binary {
         case 258 =>
           if (cnt == 1L) depth = inlineVal.toInt
           else if (typ == 3 && cnt >= 2 && cnt <= 16) {
-            val off = c.uint(e + 8, 4, le).getOrElse(return None)
+            val off = c.uint(e + 8, 4, le)
             // first sample's bits
-            depth = c.uint(off, 2, le).getOrElse(return None).toInt
+            depth = c.uint(off, 2, le).toInt
           } else return None
         case _ => ()
       }
@@ -1759,7 +1739,7 @@ object Binary {
     * byte-walk discipline (a crafted 4 GiB length field must not
     * become a negative step).
     */
-  def pngDecode(b: Array[Byte]): Option[PngImage] = {
+  def pngDecode(b: Array[Byte]): Option[PngImage] = ByteCursor.total {
     val c = ByteCursor(b)
     if (b.length < 8 + 25 || (b(0) & 0xff) != 0x89 || !c.tagAt(1, "PNG"))
       return None
@@ -1768,18 +1748,18 @@ object Binary {
     val idat = new java.io.ByteArrayOutputStream()
     var sawEnd = false
     while (!sawEnd && pos + 8 <= b.length) {
-      val len = c.be32(pos).getOrElse(return None)
-      val typ = c.fourcc(pos + 4).getOrElse(return None)
+      val len = c.be32(pos)
+      val typ = c.fourcc(pos + 4)
       val dataOff = pos + 8
-      val crcStored = c.be32(dataOff + len).getOrElse(return None)
+      val crcStored = c.be32(dataOff + len)
       val crc = new java.util.zip.CRC32
       crc.update(b, pos.toInt + 4, 4 + len.toInt) // in range: CRC read above
       if ((crc.getValue & 0xffffffffL) != crcStored) return None
       typ match {
         case "IHDR" =>
           if (len != 13) return None
-          w = c.be32(dataOff).getOrElse(return None).toInt
-          h = c.be32(dataOff + 4).getOrElse(return None).toInt
+          w = c.be32(dataOff).toInt
+          h = c.be32(dataOff + 4).toInt
           // depth 8, truecolor, deflate, adaptive filter, no interlace
           if (!c.tagAt(dataOff + 8, "\u0008\u0002\u0000\u0000\u0000"))
             return None
@@ -1983,26 +1963,26 @@ object Binary {
     * None rather than junk samples. Cursors stay Long per the
     * byte-walk discipline.
     */
-  def wavPcmDecode(b: Array[Byte]): Option[WavPcm] = {
+  def wavPcmDecode(b: Array[Byte]): Option[WavPcm] = ByteCursor.total {
     val c = ByteCursor(b)
     val n = b.length.toLong
     if (n < 44 || !c.tagAt(0, "RIFF") || !c.tagAt(8, "WAVE")) return None
-    val riffEnd = math.min(n, 8L + c.le32(4).getOrElse(return None))
+    val riffEnd = math.min(n, 8L + c.le32(4))
     var pos = 12L
     var rate = -1; var ch = -1; var bits = -1; var fmtOk = false
     var dataOff = -1L; var dataLen = -1L
     while (pos + 8 <= riffEnd) {
-      val id = c.fourcc(pos).getOrElse(return None)
-      val len = c.le32(pos + 4).getOrElse(return None)
+      val id = c.fourcc(pos)
+      val len = c.le32(pos + 4)
       val body = pos + 8
       if (body + len > n) return None
       id match {
         case "fmt " =>
           if (len < 16) return None
-          val tag = c.le16(body).getOrElse(return None)
-          ch = c.le16(body + 2).getOrElse(return None)
-          rate = c.le32(body + 4).getOrElse(return None).toInt
-          bits = c.le16(body + 14).getOrElse(return None)
+          val tag = c.le16(body)
+          ch = c.le16(body + 2)
+          rate = c.le32(body + 4).toInt
+          bits = c.le16(body + 14)
           fmtOk = tag == 1 // PCM only; float (3) / ADPCM (2) unsupported
         case "data" => dataOff = body; dataLen = len
         case _ => () // LIST/fact/cue: ancillary, skip
@@ -2012,7 +1992,7 @@ object Binary {
     if (!fmtOk || rate <= 0 || ch <= 0 || bits != 16 || dataOff < 0)
       return None
     if (dataLen % (2L * ch) != 0 || dataLen > 64L * 1024 * 1024) return None
-    val pcm = c.bytes(dataOff, dataLen).getOrElse(return None)
+    val pcm = c.bytes(dataOff, dataLen)
     val out = new Array[Short]((dataLen / 2).toInt)
     java.nio.ByteBuffer.wrap(pcm).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       .asShortBuffer().get(out) // int16 LE samples
@@ -2250,13 +2230,13 @@ object Binary {
     * single-image case); local color tables, interlace, and offset
     * sub-frames return None rather than junk pixels.
     */
-  def gifDecode(b: Array[Byte]): Option[GifImage] = {
+  def gifDecode(b: Array[Byte]): Option[GifImage] = ByteCursor.total {
     val c = ByteCursor(b)
     val n = b.length.toLong
     if (n < 14) return None
     if (!c.tagAt(0, "GIF87a") && !c.tagAt(0, "GIF89a")) return None
-    val w = c.le16(6).getOrElse(return None)
-    val h = c.le16(8).getOrElse(return None)
+    val w = c.le16(6)
+    val h = c.le16(8)
     val packed = b(10) & 0xff
     if ((packed & 0x80) == 0) return None // GCT required in this profile
     val gctSize = 2 << (packed & 7)
@@ -2264,7 +2244,7 @@ object Binary {
     val palette = new Array[Int](gctSize)
     var j = 0
     while (j < gctSize) {
-      palette(j) = c.be(pos + 3L * j, 3).getOrElse(return None).toInt
+      palette(j) = c.be(pos + 3L * j, 3).toInt
       j += 1
     }
     pos += gctSize * 3L
@@ -2273,30 +2253,30 @@ object Binary {
       (b(pos.toInt) & 0xff) match {
         case 0x21 => // extension: introducer + label, then sub-blocks
           pos += 2
-          var bs = c.u8(pos).getOrElse(return None)
+          var bs = c.u8(pos)
           while (bs != 0) {
             pos += 1 + bs
-            bs = c.u8(pos).getOrElse(return None)
+            bs = c.u8(pos)
           }
           pos += 1
         case 0x2c => // image descriptor
-          val left = c.le16(pos + 1).getOrElse(return None)
-          val top = c.le16(pos + 3).getOrElse(return None)
-          val iw = c.le16(pos + 5).getOrElse(return None)
-          val ih = c.le16(pos + 7).getOrElse(return None)
-          val ip = c.u8(pos + 9).getOrElse(return None)
+          val left = c.le16(pos + 1)
+          val top = c.le16(pos + 3)
+          val iw = c.le16(pos + 5)
+          val ih = c.le16(pos + 7)
+          val ip = c.u8(pos + 9)
           if (left != 0 || top != 0 || iw != w || ih != h) return None
           if ((ip & 0x80) != 0 || (ip & 0x40) != 0) return None // LCT/interlace
           pos += 10
-          val minCode = c.u8(pos).getOrElse(return None)
+          val minCode = c.u8(pos)
           pos += 1
           val lzw = new java.io.ByteArrayOutputStream()
-          var bs = c.u8(pos).getOrElse(return None)
+          var bs = c.u8(pos)
           while (bs != 0) {
             if (pos + 1 + bs > n) return None
             lzw.write(b, pos.toInt + 1, bs)
             pos += 1 + bs
-            bs = c.u8(pos).getOrElse(return None)
+            bs = c.u8(pos)
           }
           val idx = lzwDecode(lzw.toByteArray, minCode, w * h) match {
             case Some(x) => x
@@ -2631,7 +2611,7 @@ object Binary {
     * segment-count mismatches, undefined codes, or coefficient
     * overruns.
     */
-  def jpegDecode(b: Array[Byte]): Option[JpegImage] = {
+  def jpegDecode(b: Array[Byte]): Option[JpegImage] = ByteCursor.total {
     val cur = ByteCursor(b)
     val n = b.length
     if (n < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
@@ -2647,7 +2627,7 @@ object Binary {
       if (i + 4 > n || (b(i) & 0xff) != 0xff) return None
       val m = b(i + 1) & 0xff
       if (m == 0xd9) return None // EOI before scan data
-      val len = cur.be16(i + 2).getOrElse(return None)
+      val len = cur.be16(i + 2)
       val body = i + 4
       if (body + len - 2 > n || len < 2) return None
       m match {
@@ -2676,8 +2656,8 @@ object Binary {
           }
         case 0xc0 => // SOF0 baseline
           if (len < 11 || (b(body) & 0xff) != 8) return None
-          h = cur.be16(body + 1).getOrElse(return None)
-          w = cur.be16(body + 3).getOrElse(return None)
+          h = cur.be16(body + 1)
+          w = cur.be16(body + 3)
           if ((b(body + 5) & 0xff) != 1) return None // grayscale profile only
           if ((b(body + 7) & 0xff) != 0x11) return None // no subsampling
           qSel = b(body + 8) & 0xff
@@ -2686,7 +2666,7 @@ object Binary {
           return None // extended/progressive/arithmetic: not baseline
         case 0xdd => // DRI: restart interval in MCUs (= blocks here)
           if (len != 4) return None
-          restartInt = cur.be16(body).getOrElse(return None)
+          restartInt = cur.be16(body)
         case 0xda => // SOS: header then entropy data (split at RSTn) to EOI
           if (len < 8 || (b(body) & 0xff) != 1) return None
           dcSel = (b(body + 2) & 0xff) >> 4; acSel = b(body + 2) & 0x0f
@@ -3003,7 +2983,7 @@ object Binary {
     * [[jpegDecode]] is untouched: separate profiles, separately pinned
     * oracles.
     */
-  def jpegDecodeColor420(b: Array[Byte]): Option[JpegYCbCr] = {
+  def jpegDecodeColor420(b: Array[Byte]): Option[JpegYCbCr] = ByteCursor.total {
     val cur = ByteCursor(b)
     val n = b.length
     if (n < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
@@ -3020,7 +3000,7 @@ object Binary {
       if (i + 4 > n || (b(i) & 0xff) != 0xff) return None
       val m = b(i + 1) & 0xff
       if (m == 0xd9) return None
-      val len = cur.be16(i + 2).getOrElse(return None)
+      val len = cur.be16(i + 2)
       val body = i + 4
       if (body + len - 2 > n || len < 2) return None
       m match {
@@ -3049,8 +3029,8 @@ object Binary {
           }
         case 0xc0 =>
           if (len < 17 || (b(body) & 0xff) != 8) return None
-          h = cur.be16(body + 1).getOrElse(return None)
-          w = cur.be16(body + 3).getOrElse(return None)
+          h = cur.be16(body + 1)
+          w = cur.be16(body + 3)
           if ((b(body + 5) & 0xff) != 3) return None // color profile only here
           var c = 0
           while (c < 3) {
@@ -3447,7 +3427,7 @@ object Binary {
     * None (never junk) on restart markers, truncation, undefined
     * codes, band violations, or coefficient overruns.
     */
-  def jpegDecodeProgressive(b: Array[Byte]): Option[JpegImage] = {
+  def jpegDecodeProgressive(b: Array[Byte]): Option[JpegImage] = ByteCursor.total {
     val cur = ByteCursor(b)
     val n = b.length
     if (n < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
@@ -3467,7 +3447,7 @@ object Binary {
       if (m == 0xd9) { done = true } // EOI
       else {
         if (i + 4 > n) return None
-        val len = cur.be16(i + 2).getOrElse(return None)
+        val len = cur.be16(i + 2)
         val body = i + 4
         if (body + len - 2 > n || len < 2) return None
         m match {
@@ -3499,8 +3479,8 @@ object Binary {
           case 0xc2 => // SOF2 progressive
             if (coefs != null) return None // one frame header only
             if (len < 11 || (b(body) & 0xff) != 8) return None
-            h = cur.be16(body + 1).getOrElse(return None)
-            w = cur.be16(body + 3).getOrElse(return None)
+            h = cur.be16(body + 1)
+            w = cur.be16(body + 3)
             if ((b(body + 5) & 0xff) != 1) return None // grayscale profile only
             if ((b(body + 7) & 0xff) != 0x11) return None
             qSel = b(body + 8) & 0xff
@@ -4080,7 +4060,7 @@ object Binary {
     * CRC mismatch, sync loss, reserved code, truncation, or
     * sample-count mismatch.
     */
-  def flacDecode(b: Array[Byte]): Option[FlacAudio] = {
+  def flacDecode(b: Array[Byte]): Option[FlacAudio] = ByteCursor.total {
     if (b.length < 42 || b(0) != 'f' || b(1) != 'L' || b(2) != 'a' ||
       b(3) != 'C') return None
     val cur = ByteCursor(b)
@@ -4091,7 +4071,7 @@ object Binary {
     var first = true
     while (!last) {
       // block header: last-flag(1) type(7) length(24, big-endian)
-      val hdr = cur.be32(i).getOrElse(return None)
+      val hdr = cur.be32(i)
       last = (hdr & 0x80000000L) != 0
       val btype = (hdr >>> 24) & 0x7f
       val len = (hdr & 0xffffff).toInt
@@ -4099,7 +4079,7 @@ object Binary {
         if (btype != 0 || len != 34) return None
         val p = i + 4
         if (p + 34 > b.length) return None
-        val info = streamInfo(cur.be64(p + 10).getOrElse(return None))
+        val info = streamInfo(cur.be64(p + 10))
         rate = info._1; ch = info._2; bits = info._3; total = info._4
         first = false
       }

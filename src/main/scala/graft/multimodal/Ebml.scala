@@ -47,72 +47,69 @@ object Ebml {
 
   /** Element ID at `i`: marker bits KEPT, 4-byte cap (Matroska IDs
     * are at most class D). Returns (id, lenBytes). */
-  private def readId(c: ByteCursor, i: Long): Option[(Long, Int)] = {
-    val len = vintLen(c.u8(i).getOrElse(return None))
-    if (len < 1 || len > 4) None else c.be(i, len).map(v => (v, len))
+  private def readId(c: ByteCursor, i: Long): (Long, Int) = {
+    val len = vintLen(c.u8(i))
+    if (len < 1 || len > 4) ByteCursor.reject()
+    (c.be(i, len), len)
   }
 
   /** Data size at `i`: marker bit stripped. Returns (size, lenBytes,
     * unknown) where unknown = the all-ones reserved value. */
-  private def readSize(c: ByteCursor, i: Long): Option[(Long, Int, Boolean)] = {
-    val len = vintLen(c.u8(i).getOrElse(return None))
-    if (len < 1) return None
+  private def readSize(c: ByteCursor, i: Long): (Long, Int, Boolean) = {
+    val len = vintLen(c.u8(i))
+    if (len < 1) ByteCursor.reject()
     // the big-endian value with the length-marker bits stripped
-    val v = c.be(i, len).getOrElse(return None) & ((1L << (7 * len)) - 1)
+    val v = c.be(i, len) & ((1L << (7 * len)) - 1)
     val unknown = v == (1L << (7 * len)) - 1
-    Some((v, len, unknown))
+    (v, len, unknown)
   }
 
   /** Big-endian unsigned element body (first 8 bytes of a longer one). */
-  private def uintEl(c: ByteCursor, from: Long, size: Long): Option[Long] =
+  private def uintEl(c: ByteCursor, from: Long, size: Long): Long =
     c.be(from, size.min(8L).toInt)
 
-  private def float(c: ByteCursor, from: Long, size: Long): Option[Double] =
+  private def float(c: ByteCursor, from: Long, size: Long): Double =
     size match {
-      case 4 => c.be32(from).map(v =>
-        java.lang.Float.intBitsToFloat(v.toInt).toDouble)
-      case 8 => c.be64(from).map(java.lang.Double.longBitsToDouble)
-      case _ => None
+      case 4 => java.lang.Float.intBitsToFloat(c.be32(from).toInt).toDouble
+      case 8 => java.lang.Double.longBitsToDouble(c.be64(from))
+      case _ => ByteCursor.reject()
     }
 
-  def parseMkv(b: Array[Byte]): Option[MkvMeta] = {
+  def parseMkv(b: Array[Byte]): Option[MkvMeta] = ByteCursor.total {
     if (b == null || b.length < 8) return None
     val n = b.length.toLong
     val c = ByteCursor(b)
     // run `f` over the (id, dataStart, dataEnd) children of [from, hi)
-    def children(from: Long, hi: Long)(
-        f: (Long, Long, Long) => Unit): Boolean = {
+    def children(from: Long, hi: Long)(f: (Long, Long, Long) => Unit): Unit = {
       var i = from
       while (i < hi) {
-        val (id, idLen) = readId(c, i).getOrElse(return false)
-        val (sz, szLen, unk) = readSize(c, i + idLen).getOrElse(return false)
+        val (id, idLen) = readId(c, i)
+        val (sz, szLen, unk) = readSize(c, i + idLen)
         val ds = i + idLen + szLen
-        if (unk) return false // unknown size only for the Segment
-        if (ds + sz > hi) return false
+        if (unk) ByteCursor.reject() // unknown size only for the Segment
+        if (ds + sz > hi) ByteCursor.reject()
         f(id, ds, ds + sz)
         i = ds + sz
       }
-      true
     }
     // top level: EBML header then Segment
-    val (hid, hidLen) = readId(c, 0).getOrElse(return None)
+    val (hid, hidLen) = readId(c, 0)
     if (hid != IdEbml) return None
-    val (hsz, hszLen, hunk) = readSize(c, hidLen).getOrElse(return None)
+    val (hsz, hszLen, hunk) = readSize(c, hidLen)
     if (hunk) return None
     val hStart = hidLen.toLong + hszLen
     if (hStart + hsz > n) return None
     var doctype = "matroska" // the EBML-specified default
-    if (!children(hStart, hStart + hsz) { (id, ds, de) =>
+    children(hStart, hStart + hsz) { (id, ds, de) =>
       if (id == IdDocType)
         doctype = new String(b.slice(ds.toInt, de.toInt), "US-ASCII")
           .takeWhile(_ != '\u0000')
-    }) return None
+    }
     // Segment
     val segAt = hStart + hsz
-    val (sid, sidLen) = readId(c, segAt).getOrElse(return None)
+    val (sid, sidLen) = readId(c, segAt)
     if (sid != IdSegment) return None
-    val (ssz, sszLen, sunk) =
-      readSize(c, segAt + sidLen).getOrElse(return None)
+    val (ssz, sszLen, sunk) = readSize(c, segAt + sidLen)
     val segStart = segAt + sidLen + sszLen
     val segEnd = if (sunk) n else segStart + ssz // streaming: to-EOF
     if (segEnd > n) return None
@@ -120,43 +117,34 @@ object Ebml {
     var duration = -1.0
     var nv = 0; var na = 0; var ns = 0
     val codecs = Vector.newBuilder[String]
-    var ok = true
-    if (!children(segStart, segEnd) { (id, ds, de) =>
+    children(segStart, segEnd) { (id, ds, de) =>
       if (id == IdInfo) {
-        if (!children(ds, de) { (cid, cds, cde) =>
-          if (cid == IdTimestampScale)
-            timescale = uintEl(c, cds, cde - cds).getOrElse(-1L)
-          else if (cid == IdDuration)
-            float(c, cds, cde - cds) match {
-              case Some(d) => duration = d
-              case None => ok = false
-            }
-        }) ok = false
+        children(ds, de) { (cid, cds, cde) =>
+          if (cid == IdTimestampScale) timescale = uintEl(c, cds, cde - cds)
+          else if (cid == IdDuration) duration = float(c, cds, cde - cds)
+        }
       } else if (id == IdTracks) {
-        if (!children(ds, de) { (cid, cds, cde) =>
+        children(ds, de) { (cid, cds, cde) =>
           if (cid == IdTrackEntry) {
             var ty = -1L; var codec = ""
-            if (!children(cds, cde) { (tid, tds, tde) =>
-              if (tid == IdTrackType)
-                ty = uintEl(c, tds, tde - tds).getOrElse(-1L)
+            children(cds, cde) { (tid, tds, tde) =>
+              if (tid == IdTrackType) ty = uintEl(c, tds, tde - tds)
               else if (tid == IdCodecId)
                 codec = new String(b.slice(tds.toInt, tde.toInt),
                   "US-ASCII").takeWhile(_ != '\u0000')
-            }) ok = false
-            else {
-              ty match {
-                case 1 => nv += 1
-                case 2 => na += 1
-                case 17 => ns += 1
-                case _ => ()
-              }
-              if (codec.nonEmpty) codecs += codec
             }
+            ty match {
+              case 1 => nv += 1
+              case 2 => na += 1
+              case 17 => ns += 1
+              case _ => ()
+            }
+            if (codec.nonEmpty) codecs += codec
           }
-        }) ok = false
+        }
       } // Cluster/SeekHead/Void/unknown: skipped by size
-    }) return None
-    if (!ok || timescale <= 0) return None
+    }
+    if (timescale <= 0) return None
     val durMs = if (duration < 0) 0L
       else math.round(duration * timescale / 1e6)
     Some(MkvMeta(doctype, timescale, durMs, nv, na, ns,

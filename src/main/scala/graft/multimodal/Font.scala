@@ -31,15 +31,15 @@ object Font {
                             subfamily: String, n_glyphs: Int,
                             units_per_em: Int)
 
-  def parseFont(b: Array[Byte]): Option[FontMeta] = {
+  def parseFont(b: Array[Byte]): Option[FontMeta] = ByteCursor.total {
     if (b == null || b.length < 12) return None
     val c = ByteCursor(b)
     val n = b.length.toLong
-    val ver = c.be32(0).getOrElse(return None)
+    val ver = c.be32(0)
     val format = if (ver == 0x00010000L) "ttf"
       else if (ver == 0x4F54544FL) "otf" // 'OTTO'
       else return None
-    val numTables = c.be16(4).getOrElse(return None)
+    val numTables = c.be16(4)
     if (numTables < 1 || numTables > 512) return None
     if (12L + 16L * numTables > n) return None
     var nameAt = -1L; var nameLen = 0L
@@ -48,9 +48,9 @@ object Font {
     var t = 0
     while (t < numTables) {
       val rec = 12L + 16L * t
-      val tag = c.fourcc(rec).getOrElse(return None)
-      val off = c.be32(rec + 8).getOrElse(return None)
-      val len = c.be32(rec + 12).getOrElse(return None)
+      val tag = c.fourcc(rec)
+      val off = c.be32(rec + 8)
+      val len = c.be32(rec + 12)
       if (off < 0 || len < 0 || off + len > n) return None
       tag match {
         case "name" => nameAt = off; nameLen = len
@@ -62,22 +62,22 @@ object Font {
     }
     if (headAt < 0 || headLen < 54) return None
     // head magic
-    if (c.be32(headAt + 12).getOrElse(return None) != 0x5F0F3CF5L) return None
-    val unitsPerEm = c.be16(headAt + 18).getOrElse(return None)
+    if (c.be32(headAt + 12) != 0x5F0F3CF5L) return None
+    val unitsPerEm = c.be16(headAt + 18)
     if (maxpAt < 0 || maxpLen < 6) return None
-    val nGlyphs = c.be16(maxpAt + 4).getOrElse(return None)
+    val nGlyphs = c.be16(maxpAt + 4)
     var family = ""; var subfamily = ""
     var famPlat = -1; var subPlat = -1
     if (nameAt >= 0 && nameLen >= 6) {
-      val count = c.be16(nameAt + 2).getOrElse(return None)
-      val strBase = nameAt + c.be16(nameAt + 4).getOrElse(return None)
+      val count = c.be16(nameAt + 2)
+      val strBase = nameAt + c.be16(nameAt + 4)
       var r = 0
       while (r < count && nameAt + 6 + 12L * (r + 1) <= nameAt + nameLen) {
         val rec = nameAt + 6 + 12L * r
-        val plat = c.be16(rec).getOrElse(return None)
-        val nameId = c.be16(rec + 6).getOrElse(return None)
-        val len = c.be16(rec + 8).getOrElse(return None)
-        val off = strBase + c.be16(rec + 10).getOrElse(return None)
+        val plat = c.be16(rec)
+        val nameId = c.be16(rec + 6)
+        val len = c.be16(rec + 8)
+        val off = strBase + c.be16(rec + 10)
         if ((nameId == 1 || nameId == 2) && off + len <= n &&
           (plat == 1 || plat == 3)) {
           val value =
@@ -164,21 +164,21 @@ object Font {
     * reconstruct into an in-memory sfnt that [[parseFont]] then
     * reads — one parser, both deliveries. (WOFF2 needs Brotli: the
     * documented codec-table boundary.) */
-  def parseWoff(b: Array[Byte]): Option[FontMeta] = {
+  def parseWoff(b: Array[Byte]): Option[FontMeta] = ByteCursor.total {
     if (b == null || b.length < 44) return None
     val c = ByteCursor(b)
-    if (c.be32(0).getOrElse(return None) != 0x774F4646L) return None // 'wOFF'
-    val flavor = c.be32(4).getOrElse(return None)
-    val numTables = c.be16(12).getOrElse(return None)
+    if (c.be32(0) != 0x774F4646L) return None // 'wOFF'
+    val flavor = c.be32(4)
+    val numTables = c.be16(12)
     if (numTables < 1 || numTables > 512) return None
     if (44L + 20L * numTables > b.length) return None
     val n = b.length.toLong
     val entries = (0 until numTables).map { t =>
       val rec = 44L + 20L * t
       val tag = b.slice(rec.toInt, rec.toInt + 4)
-      val off = c.be32(rec + 4).getOrElse(return None)
-      val compLen = c.be32(rec + 8).getOrElse(return None)
-      val origLen = c.be32(rec + 12).getOrElse(return None)
+      val off = c.be32(rec + 4)
+      val compLen = c.be32(rec + 8)
+      val origLen = c.be32(rec + 12)
       if (off < 0 || compLen < 0 || off + compLen > n) return None
       if (origLen < 0 || origLen > (1 << 24)) return None
       val raw = b.slice(off.toInt, (off + compLen).toInt)

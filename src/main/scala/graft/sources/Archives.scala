@@ -47,7 +47,7 @@ object Archives {
     * 100 TB ingest meets >4 GiB members as a matter of course). None
     * on any structural malformation or unsupported feature
     * (encryption, methods other than stored/deflate). */
-  def parseZip(b: Array[Byte]): Option[Seq[ZipEntry]] = {
+  def parseZip(b: Array[Byte]): Option[Seq[ZipEntry]] = ByteCursor.total {
     if (b == null || b.length < 22) return None
     val c = ByteCursor(b)
     // EOCD: signature PK\5\6, comment may pad up to 64 KiB
@@ -60,27 +60,27 @@ object Archives {
       i -= 1
     }
     if (eocd < 0) return None
-    var nEntries: Long = c.le16(eocd + 10).getOrElse(return None)
+    var nEntries: Long = c.le16(eocd + 10)
     // multi-disk
-    if (nEntries != c.le16(eocd + 8).getOrElse(return None)) return None
-    var cdSize = c.le32(eocd + 12).getOrElse(return None)
-    var cdOff = c.le32(eocd + 16).getOrElse(return None)
+    if (nEntries != c.le16(eocd + 8)) return None
+    var cdSize = c.le32(eocd + 12)
+    var cdOff = c.le32(eocd + 16)
     if (nEntries == 0xffffL || cdSize == 0xffffffffL ||
       cdOff == 0xffffffffL) {
       // ZIP64: locator (PK\6\7) sits immediately before the EOCD
       val loc = eocd - 20
       if (loc < 0 || !(b(loc) == 'P' && b(loc + 1) == 'K' &&
         b(loc + 2) == 6 && b(loc + 3) == 7)) return None
-      val z64 = c.le64(loc + 8).getOrElse(return None)
+      val z64 = c.le64(loc + 8)
       if (z64 < 0 || z64 + 56 > b.length) return None
       val zi = z64.toInt
       if (!(b(zi) == 'P' && b(zi + 1) == 'K' && b(zi + 2) == 6 &&
         b(zi + 3) == 6)) return None
-      nEntries = c.le64(zi + 32).getOrElse(return None)
+      nEntries = c.le64(zi + 32)
       // multi-disk
-      if (c.le64(zi + 24).getOrElse(return None) != nEntries) return None
-      cdSize = c.le64(zi + 40).getOrElse(return None)
-      cdOff = c.le64(zi + 48).getOrElse(return None)
+      if (c.le64(zi + 24) != nEntries) return None
+      cdSize = c.le64(zi + 40)
+      cdOff = c.le64(zi + 48)
     }
     if (nEntries < 0 || nEntries > (1L << 24)) return None
     if (cdOff < 0 || cdSize < 0 || cdOff + cdSize > eocd) return None
@@ -92,16 +92,16 @@ object Archives {
       if (!(b(p.toInt) == 'P' && b(p.toInt + 1) == 'K' &&
         b(p.toInt + 2) == 1 && b(p.toInt + 3) == 2)) return None
       val pi = p.toInt
-      val flags = c.le16(pi + 8).getOrElse(return None)
+      val flags = c.le16(pi + 8)
       if ((flags & 0x1) != 0) return None // encrypted
-      val method = c.le16(pi + 10).getOrElse(return None)
-      val crc = c.le32(pi + 16).getOrElse(return None)
-      var csize = c.le32(pi + 20).getOrElse(return None)
-      var usize = c.le32(pi + 24).getOrElse(return None)
-      val nameLen = c.le16(pi + 28).getOrElse(return None)
-      val extraLen = c.le16(pi + 30).getOrElse(return None)
-      val commentLen = c.le16(pi + 32).getOrElse(return None)
-      var lho = c.le32(pi + 42).getOrElse(return None)
+      val method = c.le16(pi + 10)
+      val crc = c.le32(pi + 16)
+      var csize = c.le32(pi + 20)
+      var usize = c.le32(pi + 24)
+      val nameLen = c.le16(pi + 28)
+      val extraLen = c.le16(pi + 30)
+      val commentLen = c.le16(pi + 32)
+      var lho = c.le32(pi + 42)
       if (p + 46 + nameLen + extraLen > b.length) return None
       if (csize == 0xffffffffL || usize == 0xffffffffL ||
         lho == 0xffffffffL) {
@@ -111,16 +111,16 @@ object Archives {
         val eEnd = e + extraLen
         var found = false
         while (e + 4 <= eEnd && !found) {
-          val id = c.le16(e).getOrElse(return None)
-          val sz = c.le16(e + 2).getOrElse(return None)
+          val id = c.le16(e)
+          val sz = c.le16(e + 2)
           if (id == 0x0001) {
             // reads are bounded by THIS field's declared size, not the
             // whole extras block — a truncated 0x0001 must reject, not
             // read the next field's header bytes as size data
             val f = new ByteCursor(b, e + 4, math.min(e + 4 + sz, eEnd))
-            if (usize == 0xffffffffL) usize = f.le64().getOrElse(return None)
-            if (csize == 0xffffffffL) csize = f.le64().getOrElse(return None)
-            if (lho == 0xffffffffL) lho = f.le64().getOrElse(return None)
+            if (usize == 0xffffffffL) usize = f.le64()
+            if (csize == 0xffffffffL) csize = f.le64()
+            if (lho == 0xffffffffL) lho = f.le64()
             found = true
           } else e += 4 + sz
         }
@@ -134,9 +134,8 @@ object Archives {
       val li = lho.toInt
       if (!(b(li) == 'P' && b(li + 1) == 'K' && b(li + 2) == 3 &&
         b(li + 3) == 4)) return None
-      val dataAt = lho + 30 + c.le16(li + 26).getOrElse(return None) +
-        c.le16(li + 28).getOrElse(return None)
-      val raw = c.bytes(dataAt, csize).getOrElse(return None)
+      val dataAt = lho + 30 + c.le16(li + 26) + c.le16(li + 28)
+      val raw = c.bytes(dataAt, csize)
       val data = method match {
         case 0 => if (csize != usize) return None else raw
         case 8 => inflateRaw(raw, usize).getOrElse(return None)
@@ -168,7 +167,7 @@ object Archives {
     * name; 'g' globals are skipped), and hard/symbolic links
     * (typeflags '1'/'2' — surfaced as `link`/`symlink` with the link
     * target as the text). */
-  def parseTar(b: Array[Byte]): Option[Seq[TarEntry]] = {
+  def parseTar(b: Array[Byte]): Option[Seq[TarEntry]] = ByteCursor.total {
     if (b == null || b.length % 512 != 0) return None
     val out = Vector.newBuilder[TarEntry]
     var pendingName: Option[String] = None
@@ -180,7 +179,7 @@ object Archives {
         return Some(out.result())
       }
       // checksum: header bytes with chksum[148,156) as spaces
-      val stored = octal(b, pi + 148, 8).getOrElse(return None)
+      val stored = octal(b, pi + 148, 8)
       var sum = 0L
       var j = 0
       while (j < 512) {
@@ -194,7 +193,7 @@ object Archives {
       val rawName = cstr(b, pi, 100)
       val prefix = cstr(b, pi + 345, 155)
       val hdrName = if (prefix.isEmpty) rawName else prefix + "/" + rawName
-      val size = octal(b, pi + 124, 12).getOrElse(return None)
+      val size = octal(b, pi + 124, 12)
       val dataBlocks = (size + 511) / 512
       if (p + 512 + dataBlocks * 512 > b.length) return None
       if (size > (256L << 20)) return None // bomb guard
@@ -272,18 +271,19 @@ object Archives {
     new String(b, at, n, java.nio.charset.StandardCharsets.US_ASCII)
   }
 
-  private def octal(b: Array[Byte], at: Int, len: Int): Option[Long] = {
+  /** A space/NUL-padded octal field; no digit or a stray byte rejects. */
+  private def octal(b: Array[Byte], at: Int, len: Int): Long = {
     var v = 0L
     var seen = false
     var i = 0
     while (i < len) {
       val c = (b(at + i) & 0xff).toChar
       if (c >= '0' && c <= '7') { v = v * 8 + (c - '0'); seen = true }
-      else if (c == ' ' || c == 0.toChar) () // padding
-      else return None
+      else if (c != ' ' && c != 0.toChar) ByteCursor.reject() // not padding
       i += 1
     }
-    if (seen) Some(v) else None
+    if (!seen) ByteCursor.reject()
+    v
   }
 
   // -- builders (deterministic fixtures + the write half) ----------- //

@@ -32,29 +32,29 @@ object Avro {
 
   /** (codec, n_blocks, records as field-name → stringified value). */
   def parseAvro(b: Array[Byte])
-    : Option[(String, Int, Seq[Map[String, String]])] = {
+    : Option[(String, Int, Seq[Map[String, String]])] = ByteCursor.total {
     if (b == null || b.length < 20) return None
     if (!(b(0) == 'O' && b(1) == 'b' && b(2) == 'j' && b(3) == 1))
       return None
     val cur = new ByteCursor(b, 4L, b.length)
     // file metadata map
     val meta = scala.collection.mutable.Map[String, Array[Byte]]()
-    var blockCount = cur.zigzag().getOrElse(return None)
+    var blockCount = cur.zigzag()
     var guard = 0
     while (blockCount != 0 && guard < 64) {
       val n = if (blockCount < 0) {
-        cur.zigzag().getOrElse(return None) // block byte size: unused
+        cur.zigzag() // block byte size: unused
         -blockCount
       } else blockCount
       if (n > 1024) return None
       var k = 0L
       while (k < n) {
-        val key = lenBytes(cur).getOrElse(return None)
-        val value = lenBytes(cur).getOrElse(return None)
+        val key = lenBytes(cur)
+        val value = lenBytes(cur)
         meta(new String(key, Utf8)) = value
         k += 1
       }
-      blockCount = cur.zigzag().getOrElse(return None)
+      blockCount = cur.zigzag()
       guard += 1
     }
     val codec = meta.get("avro.codec").map(new String(_, Utf8))
@@ -63,16 +63,16 @@ object Avro {
     val schema = meta.get("avro.schema").map(new String(_, Utf8))
       .getOrElse(return None)
     val fields = schemaFields(schema).getOrElse(return None)
-    val sync = cur.bytes(16).getOrElse(return None)
+    val sync = cur.bytes(16)
     // data blocks
     val records = Vector.newBuilder[Map[String, String]]
     var nBlocks = 0
     while (cur.pos < b.length) {
-      val count = cur.zigzag().getOrElse(return None)
-      val size = cur.zigzag().getOrElse(return None)
+      val count = cur.zigzag()
+      val size = cur.zigzag()
       if (count < 0 || count > 1000000 || size < 0) return None
-      val payload = cur.bytes(size).getOrElse(return None)
-      val blockSync = cur.bytes(16).getOrElse(return None)
+      val payload = cur.bytes(size)
+      val blockSync = cur.bytes(16)
       if (!java.util.Arrays.equals(blockSync, sync)) return None
       val data = if (codec == "deflate")
         Inflate(payload, raw = true, cap = 1 << 26)
@@ -84,20 +84,14 @@ object Avro {
         val rec = Map.newBuilder[String, String]
         fields.foreach { case (name, typ) =>
           rec += name -> (typ match {
-            case "string" =>
-              new String(lenBytes(bc).getOrElse(return None), Utf8)
-            case "bytes" =>
-              lenBytes(bc).getOrElse(return None)
-                .map(x => f"${x & 0xff}%02x").mkString
-            case "long" | "int" =>
-              bc.zigzag().getOrElse(return None).toString
-            case "double" => java.lang.Double
-              .longBitsToDouble(bc.le64().getOrElse(return None)).toString
-            case "float" => java.lang.Float
-              .intBitsToFloat(bc.le32().getOrElse(return None).toInt)
-              .toString
-            case "boolean" =>
-              (bc.bytes(1).getOrElse(return None)(0) != 0).toString
+            case "string" => new String(lenBytes(bc), Utf8)
+            case "bytes" => lenBytes(bc).map(x => f"${x & 0xff}%02x").mkString
+            case "long" | "int" => bc.zigzag().toString
+            case "double" =>
+              java.lang.Double.longBitsToDouble(bc.le64()).toString
+            case "float" =>
+              java.lang.Float.intBitsToFloat(bc.le32().toInt).toString
+            case "boolean" => (bc.u8() != 0).toString
             case "null" => ""
             case _ => return None
           })
@@ -150,8 +144,11 @@ object Avro {
   }
 
   /** Avro's length-prefixed byte string over the shared [[ByteCursor]]. */
-  private def lenBytes(c: ByteCursor): Option[Array[Byte]] =
-    c.zigzag().flatMap(n => if (n > (1 << 24)) None else c.bytes(n))
+  private def lenBytes(c: ByteCursor): Array[Byte] = {
+    val n = c.zigzag()
+    if (n > (1 << 24)) ByteCursor.reject()
+    c.bytes(n)
+  }
 
   // ---- fixture ------------------------------------------------------ //
 

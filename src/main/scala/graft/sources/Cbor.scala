@@ -38,16 +38,16 @@ object Cbor {
     var intSum = 0L; var strBytes = 0L
   }
 
-  def census(b: Array[Byte]): Option[WalkCensus] = {
+  def census(b: Array[Byte]): Option[WalkCensus] = ByteCursor.total {
     if (b == null || b.length == 0) return None
     val st = new St
     val c = ByteCursor(b)
     /** The argument for additional-info `info` (length or value):
       * 24..27 carry a 1/2/4/8-byte big-endian follow-on. */
-    def arg(info: Int): Option[Long] = info match {
-      case n if n < 24 => Some(n.toLong)
+    def arg(info: Int): Long = info match {
+      case n if n < 24 => n.toLong
       case n if n <= 27 => c.be(1 << (n - 24))
-      case _ => None // 28-30 reserved, 31 handled by callers
+      case _ => ByteCursor.reject() // 28-30 reserved, 31 handled by callers
     }
     def topName(major: Int, info: Int): String = major match {
       case 0 | 1 => "int"
@@ -64,74 +64,55 @@ object Cbor {
       }
       case _ => "?"
     }
-    /** Walk one item; false poisons. */
-    def item(depth: Int): Boolean = {
-      if (depth > 32 || st.nodes > 1000000) return false
-      val ib = c.u8().getOrElse(return false)
-      if (ib == 0xff) return false // lone break
+    /** Walk one item; a malformed one rejects. */
+    def item(depth: Int): Unit = {
+      if (depth > 32 || st.nodes > 1000000) ByteCursor.reject()
+      val ib = c.u8()
+      if (ib == 0xff) ByteCursor.reject() // lone break
       val major = ib >> 5; val info = ib & 0x1f
       st.nodes += 1
       if (depth > st.maxDepth) st.maxDepth = depth
       major match {
-        case 0 =>
-          val v = arg(info).getOrElse(return false)
-          st.ints += 1; st.intSum += v; true
-        case 1 =>
-          val v = arg(info).getOrElse(return false)
-          st.ints += 1; st.intSum += -1L - v; true
+        case 0 => st.ints += 1; st.intSum += arg(info)
+        case 1 => st.ints += 1; st.intSum += -1L - arg(info)
         case 2 | 3 =>
-          if (info == 31) return false // chunked string: out of scope
-          val n = arg(info).getOrElse(return false)
-          c.skip(n).getOrElse(return false)
+          if (info == 31) ByteCursor.reject() // chunked string: out of scope
+          val n = arg(info)
+          c.skip(n)
           if (major == 2) st.byts += 1
           else { st.strs += 1; st.strBytes += n }
-          true
         case 4 | 5 =>
           if (major == 4) st.arrs += 1 else st.maps += 1
           val per = if (major == 5) 2 else 1
           if (info == 31) { // indefinite: walk to the break
-            var more = true
-            while (more) {
-              if (c.u8(c.pos).getOrElse(return false) == 0xff) {
-                c.pos += 1; more = false
-              }
-              else {
-                var k = 0
-                while (k < per) {
-                  if (!item(depth + 1)) return false; k += 1
-                }
-              }
+            while (c.u8(c.pos) != 0xff) {
+              var k = 0
+              while (k < per) { item(depth + 1); k += 1 }
             }
-            true
+            c.pos += 1
           } else {
-            val n = arg(info).getOrElse(return false)
-            if (n < 0 || n > 1000000) return false
+            val n = arg(info)
+            if (n < 0 || n > 1000000) ByteCursor.reject()
             var k = 0L
-            while (k < n * per) {
-              if (!item(depth + 1)) return false; k += 1
-            }
-            true
+            while (k < n * per) { item(depth + 1); k += 1 }
           }
         case 6 =>
-          arg(info).getOrElse(return false) // the tag number
+          arg(info) // the tag number
           st.tags += 1
           item(depth + 1) // tag content is one item
-        case 7 => info match {
-          case 20 | 21 => st.bools += 1; true
-          case 22 | 23 => st.nulls += 1; true
-          case 24 => c.u8().isDefined // simple value 32..255
-          case 25 => st.floats += 1; arg(25).isDefined // float16
-          case 26 => st.floats += 1; arg(26).isDefined
-          case 27 => st.floats += 1; arg(27).isDefined
-          case n if n < 20 => true // simple values 0..19
-          case _ => false // 28-31 reserved / break (handled above)
+        case _ => info match { // major 7
+          case 20 | 21 => st.bools += 1
+          case 22 | 23 => st.nulls += 1
+          case 24 => c.u8() // simple value 32..255
+          case 25 | 26 | 27 => st.floats += 1; arg(info) // float16/32/64
+          case n if n < 20 => () // simple values 0..19
+          case _ => ByteCursor.reject() // 28-31: reserved, or a break
         }
-        case _ => false
       }
     }
     val ib0 = b(0) & 0xff
     val top = topName(ib0 >> 5, ib0 & 0x1f)
-    if (!item(1)) return None
+    item(1)
     if (c.pos != c.end) return None // trailing bytes: misparse
     Some(WalkCensus(top, st.nodes, st.ints, st.strs, st.byts, st.arrs,
       st.maps, st.bools, st.nulls, st.floats, st.tags, st.maxDepth,

@@ -28,10 +28,10 @@ object Frames {
                              window_size: Long, checksum: String,
                              block_independent: Boolean)
 
-  def parseFrame(b: Array[Byte]): Option[FrameMeta] = {
+  def parseFrame(b: Array[Byte]): Option[FrameMeta] = ByteCursor.total {
     if (b == null || b.length < 6) return None
     val c = ByteCursor(b)
-    c.le32(0).getOrElse(return None) match {
+    c.le32(0) match {
       case 0xFD2FB528L => // zstd
         val fhd = b(4) & 0xff
         val fcsFlag = fhd >>> 6
@@ -42,7 +42,7 @@ object Frames {
         var p = 5L
         var window = -1L
         if (!singleSegment) {
-          val wd = c.u8(p).getOrElse(return None); p += 1
+          val wd = c.u8(p); p += 1
           val exp = wd >>> 3
           val mantissa = wd & 7
           if (exp + 10 > 62) return None
@@ -60,8 +60,8 @@ object Frames {
         if (!c.has(p, fcsSize)) return None
         val contentSize = fcsSize match {
           case 0 => -1L
-          case 2 => c.le(p, 2).getOrElse(return None) + 256L // biased
-          case n => c.le(p, n).getOrElse(return None)
+          case 2 => c.le(p, 2) + 256L // biased
+          case n => c.le(p, n)
         }
         if (singleSegment && contentSize >= 0) window = contentSize
         Some(FrameMeta("zstd", contentSize, window,
@@ -80,7 +80,7 @@ object Frames {
         val window = 1L << (bmax * 2 + 8) // 4→64KB, 5→256KB, 6→1MB, 7→4MB
         var p = 6L
         val contentSize = if (hasContentSize) {
-          val v = c.le64(p).getOrElse(return None); p += 8; v
+          val v = c.le64(p); p += 8; v
         } else -1L
         if (p >= b.length) return None // header-checksum byte
         Some(FrameMeta("lz4", contentSize, window,

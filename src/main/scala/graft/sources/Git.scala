@@ -191,15 +191,15 @@ object Git {
     * sorted, large-offset indices in range. sum_crc / max_offset /
     * first+last sha prefixes give the oracle its closed forms.
     */
-  def parsePackIdx(b: Array[Byte]): Option[PackIdx] = {
+  def parsePackIdx(b: Array[Byte]): Option[PackIdx] = ByteCursor.total {
     if (b == null || b.length < 8 + 1024 + 40) return None
     val c = ByteCursor(b)
-    if (c.be32(0).getOrElse(return None) != 0xff744f63L) return None // \377tOc
-    if (c.be32(4).getOrElse(return None) != 2L) return None
+    if (c.be32(0) != 0xff744f63L) return None // \377tOc
+    if (c.be32(4) != 2L) return None
     val fanout = new Array[Long](256)
     var k = 0
     while (k < 256) {
-      fanout(k) = c.be32(8L + 4 * k).getOrElse(return None)
+      fanout(k) = c.be32(8L + 4 * k)
       if (k > 0 && fanout(k) < fanout(k - 1)) return None
       k += 1
     }
@@ -218,7 +218,7 @@ object Git {
     var i = 0L
     while (i < n) {
       val at = shaAt + 20 * i
-      hist(c.u8(at).getOrElse(return None)) += 1
+      hist(c.u8(at)) += 1
       // unsigned lexicographic compare vs the previous sha (in bounds:
       // rem >= 0 above puts every sha inside the buffer)
       if (i > 0 && java.util.Arrays.compareUnsigned(b, at.toInt,
@@ -236,17 +236,17 @@ object Git {
     var sumCrc = 0L
     i = 0L
     while (i < n) {
-      sumCrc += c.be32(crcAt + 4 * i).getOrElse(return None); i += 1
+      sumCrc += c.be32(crcAt + 4 * i); i += 1
     }
     var maxOff = 0L
     var largeSeen = 0
     i = 0L
     while (i < n) {
-      val o = c.be32(offAt + 4 * i).getOrElse(return None)
+      val o = c.be32(offAt + 4 * i)
       if ((o & 0x80000000L) != 0) {
         val idx = o & 0x7fffffffL
         if (idx >= nLarge) return None
-        val big = c.be64(largeAt + 8 * idx).getOrElse(return None)
+        val big = c.be64(largeAt + 8 * idx)
         if (big < 0) return None
         if (big > maxOff) maxOff = big
         largeSeen += 1
@@ -254,8 +254,8 @@ object Git {
       i += 1
     }
     if (n == 0) return None
-    val first = c.be32(shaAt).getOrElse(return None)
-    val last = c.be32(shaAt + 20 * (n - 1)).getOrElse(return None)
+    val first = c.be32(shaAt)
+    val last = c.be32(shaAt + 20 * (n - 1))
     Some(PackIdx(n.toInt, nLarge, sumCrc, maxOff, f"$first%08x", f"$last%08x"))
   }
 

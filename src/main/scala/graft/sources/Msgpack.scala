@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions.udf
   */
 object Msgpack {
 
-  def census(b: Array[Byte]): Option[Cbor.WalkCensus] = {
+  def census(b: Array[Byte]): Option[Cbor.WalkCensus] = ByteCursor.total {
     if (b == null || b.length == 0) return None
     val c = ByteCursor(b)
     var nodes = 0L; var ints = 0L; var strs = 0L; var byts = 0L
@@ -39,74 +39,55 @@ object Msgpack {
       case x if x >= 0xcc && x <= 0xd3 => "int"
       case _ => "ext"
     }
-    def walk(depth: Int): Boolean = {
-      if (depth > 32 || nodes > 1000000) return false
-      val ib = c.u8().getOrElse(return false)
+    def walk(depth: Int): Unit = {
+      if (depth > 32 || nodes > 1000000) ByteCursor.reject()
+      val ib = c.u8()
       nodes += 1
       if (depth > maxDepth) maxDepth = depth
-      def kids(n: Long, per: Int): Boolean = {
-        if (n < 0 || n > 1000000) return false
+      def kids(n: Long, per: Int): Unit = {
+        if (n < 0 || n > 1000000) ByteCursor.reject()
         var k = 0L
-        while (k < n * per) { if (!walk(depth + 1)) return false; k += 1 }
-        true
+        while (k < n * per) { walk(depth + 1); k += 1 }
       }
-      def strBody(n: Long): Boolean = {
-        strs += 1; strBytes += n; c.skip(n).isDefined
-      }
+      def strBody(n: Long): Unit = { strs += 1; strBytes += n; c.skip(n) }
       ib match {
-        case x if x <= 0x7f => ints += 1; intSum += x; true // pos fixint
+        case x if x <= 0x7f => ints += 1; intSum += x // pos fixint
         case x if x >= 0xe0 => // neg fixint (-32..-1)
-          ints += 1; intSum += (x - 256); true
+          ints += 1; intSum += (x - 256)
         case x if x >= 0x80 && x <= 0x8f => maps += 1; kids(x - 0x80L, 2)
         case x if x >= 0x90 && x <= 0x9f => arrs += 1; kids(x - 0x90L, 1)
         case x if x >= 0xa0 && x <= 0xbf => strBody(x - 0xa0L) // fixstr
-        case 0xc0 => nulls += 1; true
-        case 0xc1 => false // never used
-        case 0xc2 => bools += 1; true
-        case 0xc3 => bools += 1; true
+        case 0xc0 => nulls += 1
+        case 0xc1 => ByteCursor.reject() // never used
+        case 0xc2 | 0xc3 => bools += 1
         case 0xc4 | 0xc5 | 0xc6 => // bin8/16/32
-          val w = 1 << (ib - 0xc4)
-          val n = c.be(w).getOrElse(return false)
-          byts += 1; c.skip(n).isDefined
-        case 0xc7 | 0xc8 | 0xc9 => // ext8/16/32
-          val w = 1 << (ib - 0xc7)
-          val n = c.be(w).getOrElse(return false)
-          exts += 1
-          c.skip(1).isDefined && c.skip(n).isDefined // type byte + payload
-        case 0xca => floats += 1; c.skip(4).isDefined
-        case 0xcb => floats += 1; c.skip(8).isDefined
+          byts += 1; c.skip(c.be(1 << (ib - 0xc4)))
+        case 0xc7 | 0xc8 | 0xc9 => // ext8/16/32: type byte + payload
+          exts += 1; c.skip(1 + c.be(1 << (ib - 0xc7)))
+        case 0xca => floats += 1; c.skip(4)
+        case 0xcb => floats += 1; c.skip(8)
         case 0xcc | 0xcd | 0xce | 0xcf => // uint8/16/32/64
-          val w = 1 << (ib - 0xcc)
-          val v = c.be(w).getOrElse(return false)
-          ints += 1; intSum += v; true
+          ints += 1; intSum += c.be(1 << (ib - 0xcc))
         case 0xd0 | 0xd1 | 0xd2 | 0xd3 => // int8/16/32/64
           val w = 1 << (ib - 0xd0)
-          val raw = c.be(w).getOrElse(return false)
+          val raw = c.be(w)
           val bits = 8 * w
           val v = if (w == 8) raw
           else if ((raw & (1L << (bits - 1))) != 0) raw - (1L << bits)
           else raw
-          ints += 1; intSum += v; true
+          ints += 1; intSum += v
         case x if x >= 0xd4 && x <= 0xd8 => // fixext1..16
-          exts += 1
-          c.skip(1).isDefined && c.skip(1L << (x - 0xd4)).isDefined
+          exts += 1; c.skip(1 + (1L << (x - 0xd4)))
         case 0xd9 | 0xda | 0xdb => // str8/16/32
-          val w = 1 << (ib - 0xd9)
-          val n = c.be(w).getOrElse(return false)
-          strBody(n)
+          strBody(c.be(1 << (ib - 0xd9)))
         case 0xdc | 0xdd => // array16/32
-          val w = 2 << (ib - 0xdc)
-          val n = c.be(w).getOrElse(return false)
-          arrs += 1; kids(n, 1)
+          arrs += 1; kids(c.be(2 << (ib - 0xdc)), 1)
         case 0xde | 0xdf => // map16/32
-          val w = 2 << (ib - 0xde)
-          val n = c.be(w).getOrElse(return false)
-          maps += 1; kids(n, 2)
-        case _ => false
+          maps += 1; kids(c.be(2 << (ib - 0xde)), 2)
       }
     }
     val top = topName(b(0) & 0xff)
-    if (!walk(1)) return None
+    walk(1)
     if (c.pos != c.end) return None // trailing bytes: misparse
     Some(Cbor.WalkCensus(top, nodes, ints, strs, byts, arrs, maps,
       bools, nulls, floats, exts, maxDepth, intSum, strBytes))

@@ -36,30 +36,30 @@ object Orc {
 
   // Protobuf grammar over the shared [[ByteCursor]].
 
-  private def lenSlice(pb: ByteCursor): Option[(Long, Long)] =
-    pb.varint().flatMap { n =>
-      val from = pb.pos
-      pb.skip(n).map(_ => (from, pb.pos))
-    }
-
-  private def skipWire(pb: ByteCursor, wire: Int): Boolean = wire match {
-    case 0 => pb.varint().isDefined
-    case 1 => pb.skip(8).isDefined
-    case 2 => lenSlice(pb).isDefined
-    case 5 => pb.skip(4).isDefined
-    case _ => false // groups / reserved: reject
+  /** A length-delimited value: its [from, until) span, skipped. */
+  private def lenSlice(pb: ByteCursor): (Long, Long) = {
+    val n = pb.varint()
+    val from = pb.pos
+    pb.skip(n)
+    (from, pb.pos)
   }
 
-  /** Iterate fields; cb must consume the value (false poisons). */
-  private def fields(pb: ByteCursor)(cb: (Long, Int) => Boolean): Boolean = {
+  private def skipWire(pb: ByteCursor, wire: Int): Unit = wire match {
+    case 0 => pb.varint()
+    case 1 => pb.skip(8)
+    case 2 => lenSlice(pb)
+    case 5 => pb.skip(4)
+    case _ => ByteCursor.reject() // groups / reserved
+  }
+
+  /** Iterate fields; cb must consume the value. */
+  private def fields(pb: ByteCursor)(cb: (Long, Int) => Unit): Unit =
     while (pb.pos < pb.end) {
-      val key = pb.varint().getOrElse(return false)
+      val key = pb.varint()
       val field = key >>> 3; val wire = (key & 7).toInt
-      if (field == 0) return false
-      if (!cb(field, wire)) return false
+      if (field == 0) ByteCursor.reject()
+      cb(field, wire)
     }
-    true
-  }
 
   private def str(b: Array[Byte], from: Long, until: Long): String =
     new String(b, from.toInt, (until - from).toInt,
@@ -68,25 +68,25 @@ object Orc {
   /** Un-frame an ORC compressed stream: 3-byte LE chunk headers,
     * `(len << 1) | isOriginal`, raw-deflate non-original chunks. */
   private def unframe(b: Array[Byte], from: Long, until: Long)
-    : Option[Array[Byte]] = {
+    : Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     val c = new ByteCursor(b, from, until)
     while (c.pos < c.end) {
-      val h = c.le(c.pos, 3).getOrElse(return None)
+      val h = c.le(c.pos, 3)
       c.pos += 3
       val clen = h >>> 1
       val original = (h & 1) == 1
-      if (clen <= 0) return None
-      val chunk = c.bytes(clen).getOrElse(return None)
+      if (clen <= 0) ByteCursor.reject()
+      val chunk = c.bytes(clen)
       if (original) out.write(chunk)
       else out.write(Inflate(chunk, raw = true, cap = 1 << 24)
-        .getOrElse(return None))
-      if (out.size > (1 << 24)) return None // footer bomb
+        .getOrElse(ByteCursor.reject()))
+      if (out.size > (1 << 24)) ByteCursor.reject() // footer bomb
     }
-    Some(out.toByteArray)
+    out.toByteArray
   }
 
-  def parseOrc(b: Array[Byte]): Option[OrcMeta] = {
+  def parseOrc(b: Array[Byte]): Option[OrcMeta] = ByteCursor.total {
     if (b == null || b.length < 16) return None
     if (b(0) != 'O' || b(1) != 'R' || b(2) != 'C') return None
     val psLen = b(b.length - 1) & 0xff
@@ -98,35 +98,25 @@ object Orc {
     var writerVersion = 0L
     var magicOk = false
     val ps = new ByteCursor(b, psStart, b.length - 1L)
-    val psOk = fields(ps) { (f, w) =>
+    fields(ps) { (f, w) =>
       (f, w) match {
-        case (1, 0) => ps.varint() match {
-          case Some(v) => footerLen = v; true
-          case None => false
-        }
-        case (2, 0) => ps.varint() match {
-          case Some(v) => comp = v.toInt; true
-          case None => false
-        }
-        case (6, 0) => ps.varint() match {
-          case Some(v) => writerVersion = v; true
-          case None => false
-        }
-        case (8000, 2) => lenSlice(ps) match {
-          case Some((a, z)) => magicOk = str(b, a, z) == "ORC"; true
-          case None => false
-        }
+        case (1, 0) => footerLen = ps.varint()
+        case (2, 0) => comp = ps.varint().toInt
+        case (6, 0) => writerVersion = ps.varint()
+        case (8000, 2) =>
+          val (a, z) = lenSlice(ps)
+          magicOk = str(b, a, z) == "ORC"
         case (_, wire) => skipWire(ps, wire)
       }
     }
-    if (!psOk || !magicOk || footerLen <= 0) return None
+    if (!magicOk || footerLen <= 0) return None
     if (!compNames.contains(comp)) return None
     val fStart = psStart - footerLen
     if (fStart < 3) return None
     // --- Footer (possibly chunk-framed) ------------------------------ //
     val footer: Array[Byte] = comp match {
       case 0 => java.util.Arrays.copyOfRange(b, fStart.toInt, psStart.toInt)
-      case 1 => unframe(b, fStart, psStart).getOrElse(return None)
+      case 1 => unframe(b, fStart, psStart)
       case _ => return None // snappy/lzo/lz4/zstd: codec boundary
     }
     var contentLength = -1L
@@ -134,55 +124,33 @@ object Orc {
     var nTypes = 0
     val stripes = Vector.newBuilder[OrcStripe]
     val fb = new ByteCursor(footer, 0L, footer.length.toLong)
-    val fOk = fields(fb) { (f, w) =>
+    fields(fb) { (f, w) =>
       (f, w) match {
-        case (2, 0) => fb.varint() match {
-          case Some(v) => contentLength = v; true
-          case None => false
-        }
-        case (3, 2) => lenSlice(fb) match { // StripeInformation
-          case Some((a, z)) =>
-            var off = -1L; var il = -1L; var dl = -1L
-            var fl = -1L; var nr = -1L
-            val sb = new ByteCursor(footer, a, z)
-            val ok = fields(sb) { (sf, sw) =>
-              (sf, sw) match {
-                case (1, 0) => sb.varint() match {
-                  case Some(v) => off = v; true; case None => false
-                }
-                case (2, 0) => sb.varint() match {
-                  case Some(v) => il = v; true; case None => false
-                }
-                case (3, 0) => sb.varint() match {
-                  case Some(v) => dl = v; true; case None => false
-                }
-                case (4, 0) => sb.varint() match {
-                  case Some(v) => fl = v; true; case None => false
-                }
-                case (5, 0) => sb.varint() match {
-                  case Some(v) => nr = v; true; case None => false
-                }
-                case (_, sw2) => skipWire(sb, sw2)
-              }
+        case (2, 0) => contentLength = fb.varint()
+        case (3, 2) => // StripeInformation
+          val (a, z) = lenSlice(fb)
+          var off = -1L; var il = -1L; var dl = -1L
+          var fl = -1L; var nr = -1L
+          val sb = new ByteCursor(footer, a, z)
+          fields(sb) { (sf, sw) =>
+            (sf, sw) match {
+              case (1, 0) => off = sb.varint()
+              case (2, 0) => il = sb.varint()
+              case (3, 0) => dl = sb.varint()
+              case (4, 0) => fl = sb.varint()
+              case (5, 0) => nr = sb.varint()
+              case (_, sw2) => skipWire(sb, sw2)
             }
-            if (!ok || off < 0 || nr < 0) return None
-            stripes += OrcStripe(off, il.max(0), dl.max(0), fl.max(0), nr)
-            true
-          case None => false
-        }
-        case (4, 2) => // Type — count them, skip the body
-          lenSlice(fb) match {
-            case Some(_) => nTypes += 1; true
-            case None => false
           }
-        case (6, 0) => fb.varint() match {
-          case Some(v) => nRows = v; true
-          case None => false
-        }
+          if (off < 0 || nr < 0) return None
+          stripes += OrcStripe(off, il.max(0), dl.max(0), fl.max(0), nr)
+        case (4, 2) => // Type — count them, skip the body
+          lenSlice(fb); nTypes += 1
+        case (6, 0) => nRows = fb.varint()
         case (_, wire) => skipWire(fb, wire)
       }
     }
-    if (!fOk || nRows < 0 || nTypes == 0) return None
+    if (nRows < 0 || nTypes == 0) return None
     Some(OrcMeta(compNames(comp), writerVersion, contentLength.max(0),
       nRows, nTypes, stripes.result()))
   }

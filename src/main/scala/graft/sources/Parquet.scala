@@ -23,9 +23,10 @@ import org.apache.spark.sql.functions.udf
   * structurally (full compact-protocol skip with a depth cap), so
   * footers written by newer writers still census.
   *
-  * Totality: every read is bounds-checked, varints are length-capped,
-  * list sizes and skip depth are capped — a corrupt footer returns
-  * None, never throws and never hangs.
+  * Totality: every read is bounds-checked (a short read rejects
+  * through [[ByteCursor.total]]), varints are length-capped, list
+  * sizes and skip depth are capped — a corrupt footer returns None,
+  * never throws and never hangs.
   */
 object Parquet {
 
@@ -44,77 +45,74 @@ object Parquet {
 
   // ---- thrift compact-protocol reader ------------------------------ //
 
-  // Grammar over the shared [[ByteCursor]]: every read is bounds-checked
-  // and a None poisons the whole parse.
+  // Grammar over the shared [[ByteCursor]]: a short read or a
+  // malformed value rejects the whole parse.
 
-  private def binary(tc: ByteCursor): Option[Array[Byte]] =
-    tc.varint().flatMap(n => if (n > (1 << 24)) None else tc.bytes(n))
+  private def binary(tc: ByteCursor): Array[Byte] = {
+    val n = tc.varint()
+    if (n > (1 << 24)) ByteCursor.reject()
+    tc.bytes(n)
+  }
 
   /** Structural skip of one value of compact type `tpe`. */
-  private def skipValue(tc: ByteCursor, tpe: Int, depth: Int): Boolean = {
-    if (depth > 16) return false
+  private def skipValue(tc: ByteCursor, tpe: Int, depth: Int): Unit = {
+    if (depth > 16) ByteCursor.reject()
     tpe match {
-      case 1 | 2 => true // boolean true/false: value in the type
-      case 3 => tc.skip(1).isDefined // byte
-      case 4 | 5 | 6 => tc.varint().isDefined // i16/i32/i64
-      case 7 => tc.skip(8).isDefined // double (8 bytes)
-      case 8 => binary(tc).isDefined // binary/string
+      case 1 | 2 => () // boolean true/false: value in the type
+      case 3 => tc.skip(1) // byte
+      case 4 | 5 | 6 => tc.varint() // i16/i32/i64
+      case 7 => tc.skip(8) // double (8 bytes)
+      case 8 => binary(tc) // binary/string
       case 9 | 10 => // list/set
-        listHeader(tc) match {
-          case Some((n, et)) =>
-            var k = 0L
-            while (k < n) {
-              if (!skipValue(tc, et, depth + 1)) return false
-              k += 1
-            }
-            true
-          case None => false
-        }
+        val (n, et) = listHeader(tc)
+        var k = 0L
+        while (k < n) { skipValue(tc, et, depth + 1); k += 1 }
       case 11 => // map
-        tc.varint() match {
-          case Some(n) if n == 0 => true
-          case Some(n) if n > 0 && n <= 100000 =>
-            val kv = tc.u8().getOrElse(return false)
-            val kt = (kv >> 4) & 0xf; val vt = kv & 0xf
-            var k = 0L
-            while (k < n) {
-              if (!skipValue(tc, kt, depth + 1) || !skipValue(tc, vt, depth + 1))
-                return false
-              k += 1
-            }
-            true
-          case _ => false
+        val (n, kt, vt) = mapHeader(tc)
+        var k = 0L
+        while (k < n) {
+          skipValue(tc, kt, depth + 1); skipValue(tc, vt, depth + 1); k += 1
         }
       case 12 => struct(tc, depth + 1)((_, t) => skipValue(tc, t, depth + 1))
-      case _ => false
+      case _ => ByteCursor.reject()
     }
   }
 
-  private def listHeader(tc: ByteCursor): Option[(Long, Int)] = {
-    val h = tc.u8().getOrElse(return None)
+  /** A list header: (size, element type); an absurd size rejects. */
+  private def listHeader(tc: ByteCursor): (Long, Int) = {
+    val h = tc.u8()
     val sz = (h >> 4) & 0xf; val et = h & 0xf
-    val n = if (sz == 15) tc.varint().getOrElse(return None) else sz.toLong
-    if (n < 0 || n > 100000) None else Some((n, et))
+    val n = if (sz == 15) tc.varint() else sz.toLong
+    if (n < 0 || n > 100000) ByteCursor.reject()
+    (n, et)
+  }
+
+  /** A map header: (size, key type, value type); the type byte is
+    * present only for a non-empty map. */
+  private def mapHeader(tc: ByteCursor): (Long, Int, Int) = {
+    val n = tc.varint()
+    if (n == 0) (0L, 0, 0)
+    else if (n < 0 || n > 100000) ByteCursor.reject()
+    else { val kv = tc.u8(); (n, (kv >> 4) & 0xf, kv & 0xf) }
   }
 
   /** Iterate a struct's fields: cb(fieldId, compactType) must consume
-    * the value (or return false to poison). */
+    * the value. */
   private def struct(tc: ByteCursor, depth: Int)(
-      cb: (Int, Int) => Boolean): Boolean = {
-    if (depth > 16) return false
+      cb: (Int, Int) => Unit): Unit = {
+    if (depth > 16) ByteCursor.reject()
     var last = 0
-    while (true) {
-      val h = tc.u8().getOrElse(return false)
-      if (h == 0) return true
+    var h = tc.u8()
+    while (h != 0) {
       val delta = (h >> 4) & 0xf; val tpe = h & 0xf
       if (delta == 0) {
-        val id = tc.zigzag().getOrElse(return false)
-        if (id < -32768 || id > 32767) return false
+        val id = tc.zigzag()
+        if (id < -32768 || id > 32767) ByteCursor.reject()
         last = id.toInt
       } else last += delta
-      if (!cb(last, tpe)) return false
+      cb(last, tpe)
+      h = tc.u8()
     }
-    true
   }
 
   private def str(b: Array[Byte]): String =
@@ -123,15 +121,23 @@ object Parquet {
   /** Plain (non-compact) little-endian i64 — the Parquet stats
     * encoding for INT64 values. */
   private def statI64(v: Array[Byte]): Option[Long] =
-    if (v.length != 8) None else ByteCursor(v).le64(0)
+    if (v.length != 8) None else Some(ByteCursor(v).le64(0))
+
+  /** A list of `elemType` values, `read` consuming each. */
+  private def listOf(tc: ByteCursor, elemType: Int)(read: => Unit): Unit = {
+    val (n, et) = listHeader(tc)
+    if (et != elemType) ByteCursor.reject()
+    var k = 0L
+    while (k < n) { read; k += 1 }
+  }
 
   // ---- the census ---------------------------------------------------- //
 
-  def parseFooter(b: Array[Byte]): Option[PqMeta] = {
+  def parseFooter(b: Array[Byte]): Option[PqMeta] = ByteCursor.total {
     if (b == null || b.length < 12) return None
     val c = ByteCursor(b)
     if (!c.tagAt(0, "PAR1") || !c.tagAt(b.length - 4, "PAR1")) return None
-    val fl = c.le32(b.length - 8).getOrElse(return None)
+    val fl = c.le32(b.length - 8)
     val fStart = b.length - 8L - fl
     if (fl <= 0 || fStart < 4) return None
     val tc = new ByteCursor(b, fStart, b.length - 8L)
@@ -144,168 +150,92 @@ object Parquet {
     val cols = Vector.newBuilder[PqColumn]
     var rg = 0
 
-    def readSchemaElement(): Boolean = {
-      var name = ""; var numChildren = -1
-      val ok = struct(tc, 1) { (id, tpe) =>
+    def readSchemaElement(): Unit = {
+      var numChildren = -1
+      struct(tc, 1) { (id, tpe) =>
         (id, tpe) match {
-          case (4, 8) =>
-            binary(tc) match {
-              case Some(v) => name = str(v); true
-              case None => false
-            }
-          case (5, 5) =>
-            tc.zigzag() match {
-              case Some(v) => numChildren = v.toInt; true
-              case None => false
-            }
+          case (5, 5) => numChildren = tc.zigzag().toInt
           case (_, t) => skipValue(tc, t, 1)
         }
       }
-      if (!ok) return false
       // the FIRST element is the root (carries num_children); leaves
       // are elements with no children
       if (schemaSeen && numChildren <= 0) leaves += 1
       schemaSeen = true
-      true
     }
 
-    def readColumnMeta(rgIdx: Int): Boolean = {
+    def readColumnMeta(rgIdx: Int): Unit = {
       var path = ""; var codec = -1
       var numValues = -1L; var unc = -1L; var cmp = -1L
       var colType = -1
       var minV: Option[Long] = None; var maxV: Option[Long] = None
       var nulls: Option[Long] = None
-      val ok = struct(tc, 3) { (id, tpe) =>
+      struct(tc, 3) { (id, tpe) =>
         (id, tpe) match {
-          case (1, 5) => tc.zigzag() match {
-            case Some(v) => colType = v.toInt; true
-            case None => false
-          }
-          case (3, 9) => listHeader(tc) match { // path_in_schema
-            case Some((n, 8)) =>
-              val parts = Vector.newBuilder[String]
-              var k = 0L
-              var good = true
-              while (k < n && good) {
-                binary(tc) match {
-                  case Some(v) => parts += str(v)
-                  case None => good = false
-                }
-                k += 1
-              }
-              if (good) path = parts.result().mkString(".")
-              good
-            case _ => false
-          }
-          case (4, 5) => tc.zigzag() match {
-            case Some(v) => codec = v.toInt; true
-            case None => false
-          }
-          case (5, 6) => tc.zigzag() match {
-            case Some(v) => numValues = v; true
-            case None => false
-          }
-          case (6, 6) => tc.zigzag() match {
-            case Some(v) => unc = v; true
-            case None => false
-          }
-          case (7, 6) => tc.zigzag() match {
-            case Some(v) => cmp = v; true
-            case None => false
-          }
+          case (1, 5) => colType = tc.zigzag().toInt
+          case (3, 9) => // path_in_schema
+            val parts = Vector.newBuilder[String]
+            listOf(tc, 8)(parts += str(binary(tc)))
+            path = parts.result().mkString(".")
+          case (4, 5) => codec = tc.zigzag().toInt
+          case (5, 6) => numValues = tc.zigzag()
+          case (6, 6) => unc = tc.zigzag()
+          case (7, 6) => cmp = tc.zigzag()
           case (12, 12) => // Statistics
             struct(tc, 4) { (sid, stpe) =>
               (sid, stpe) match {
-                case (3, 6) => tc.zigzag() match {
-                  case Some(v) => nulls = Some(v); true
-                  case None => false
-                }
+                case (3, 6) => nulls = Some(tc.zigzag())
                 // max_value/min_value (new) and max/min (legacy):
                 // decode only for INT64 columns
-                case (5, 8) | (1, 8) => binary(tc) match {
-                  case Some(v) =>
-                    if (colType == 2) maxV = statI64(v); true
-                  case None => false
-                }
-                case (6, 8) | (2, 8) => binary(tc) match {
-                  case Some(v) =>
-                    if (colType == 2) minV = statI64(v); true
-                  case None => false
-                }
+                case (5, 8) | (1, 8) =>
+                  val v = binary(tc)
+                  if (colType == 2) maxV = statI64(v)
+                case (6, 8) | (2, 8) =>
+                  val v = binary(tc)
+                  if (colType == 2) minV = statI64(v)
                 case (_, t) => skipValue(tc, t, 4)
               }
             }
           case (_, t) => skipValue(tc, t, 3)
         }
       }
-      if (!ok) return false
-      if (codec < 0 || numValues < 0 || unc < 0 || cmp < 0) return false
+      if (codec < 0 || numValues < 0 || unc < 0 || cmp < 0)
+        ByteCursor.reject()
       cols += PqColumn(rgIdx, path,
         codecNames.getOrElse(codec, s"codec_$codec"),
         numValues, cmp, unc, minV, maxV, nulls)
-      true
     }
 
-    def readColumnChunk(rgIdx: Int): Boolean =
-      struct(tc, 2) { (id, tpe) =>
-        (id, tpe) match {
-          case (3, 12) => readColumnMeta(rgIdx)
-          case (_, t) => skipValue(tc, t, 2)
-        }
-      }
-
-    def readRowGroup(): Boolean = {
+    def readRowGroup(): Unit = {
       val rgIdx = rg
       rg += 1
       struct(tc, 1) { (id, tpe) =>
         (id, tpe) match {
-          case (1, 9) => listHeader(tc) match { // columns
-            case Some((n, 12)) =>
-              var k = 0L
-              while (k < n) {
-                if (!readColumnChunk(rgIdx)) return false
-                k += 1
+          case (1, 9) => // columns: ColumnChunk structs
+            listOf(tc, 12) {
+              struct(tc, 2) { (cid, ctpe) =>
+                (cid, ctpe) match {
+                  case (3, 12) => readColumnMeta(rgIdx)
+                  case (_, t) => skipValue(tc, t, 2)
+                }
               }
-              true
-            case _ => false
-          }
+            }
           case (_, t) => skipValue(tc, t, 1)
         }
       }
     }
 
-    val ok = struct(tc, 0) { (id, tpe) =>
+    struct(tc, 0) { (id, tpe) =>
       (id, tpe) match {
-        case (1, 5) => tc.zigzag() match {
-          case Some(v) => version = v.toInt; true
-          case None => false
-        }
-        case (2, 9) => listHeader(tc) match { // schema
-          case Some((n, 12)) =>
-            var k = 0L; var good = true
-            while (k < n && good) { good = readSchemaElement(); k += 1 }
-            good
-          case _ => false
-        }
-        case (3, 6) => tc.zigzag() match {
-          case Some(v) => nRows = v; true
-          case None => false
-        }
-        case (4, 9) => listHeader(tc) match { // row_groups
-          case Some((n, 12)) =>
-            var k = 0L; var good = true
-            while (k < n && good) { good = readRowGroup(); k += 1 }
-            good
-          case _ => false
-        }
-        case (6, 8) => binary(tc) match {
-          case Some(v) => createdBy = str(v); true
-          case None => false
-        }
+        case (1, 5) => version = tc.zigzag().toInt
+        case (2, 9) => listOf(tc, 12)(readSchemaElement()) // schema
+        case (3, 6) => nRows = tc.zigzag()
+        case (4, 9) => listOf(tc, 12)(readRowGroup()) // row_groups
+        case (6, 8) => createdBy = str(binary(tc))
         case (_, t) => skipValue(tc, t, 0)
       }
     }
-    if (!ok || version < 0 || nRows < 0 || !schemaSeen) return None
+    if (version < 0 || nRows < 0 || !schemaSeen) return None
     if (tc.pos != tc.end) return None // trailing bytes: misparse
     Some(PqMeta(version, nRows, rg, leaves, createdBy, cols.result()))
   }
@@ -441,73 +371,44 @@ object Parquet {
     * string byte volume instead of extracting known ids. Trailing
     * bytes, reserved types, depth bombs and truncation return None.
     */
-  def thriftCensus(b: Array[Byte]): Option[ThriftCensus] = {
+  def thriftCensus(b: Array[Byte]): Option[ThriftCensus] = ByteCursor.total {
     if (b == null || b.length == 0) return None
     val tc = ByteCursor(b)
     var nFields = 0L; var nInt = 0L; var nBool = 0L; var nStr = 0L
     var nDouble = 0L; var nList = 0L; var nStruct = 0L
     var maxField = 0L; var maxDepth = 0
     var intSum = 0L; var strBytes = 0L
-    def value(tpe: Int, depth: Int): Boolean = {
-      if (depth > 16 || nFields > 1000000) return false
+    def value(tpe: Int, depth: Int): Unit = {
+      if (depth > 16 || nFields > 1000000) ByteCursor.reject()
       if (depth > maxDepth) maxDepth = depth
       tpe match {
-        case 1 | 2 => nBool += 1; true
-        case 3 => tc.skip(1).isDefined
-        case 4 | 5 | 6 =>
-          tc.zigzag() match {
-            case Some(v) => nInt += 1; intSum += v; true
-            case None => false
-          }
-        case 7 => nDouble += 1; tc.skip(8).isDefined
-        case 8 => binary(tc) match {
-          case Some(v) => nStr += 1; strBytes += v.length; true
-          case None => false
-        }
-        case 9 | 10 => listHeader(tc) match {
-          case Some((n, et)) =>
-            nList += 1
-            var k = 0L
-            while (k < n) {
-              if (!value(et, depth + 1)) return false
-              k += 1
-            }
-            true
-          case None => false
-        }
+        case 1 | 2 => nBool += 1
+        case 3 => tc.skip(1)
+        case 4 | 5 | 6 => nInt += 1; intSum += tc.zigzag()
+        case 7 => nDouble += 1; tc.skip(8)
+        case 8 => nStr += 1; strBytes += binary(tc).length
+        case 9 | 10 =>
+          val (n, et) = listHeader(tc)
+          nList += 1
+          var k = 0L
+          while (k < n) { value(et, depth + 1); k += 1 }
         case 11 => // map: size, one kt/vt nibble byte, then pairs
           nList += 1
-          tc.varint() match {
-            case Some(0) => true
-            case Some(nm) if nm > 0 && nm <= 100000 =>
-              tc.u8() match {
-                case Some(kv) =>
-                  val kt = (kv >> 4) & 0xf; val vt = kv & 0xf
-                  var k = 0L
-                  while (k < nm) {
-                    if (!value(kt, depth + 1) || !value(vt, depth + 1))
-                      return false
-                    k += 1
-                  }
-                  true
-                case None => false
-              }
-            case _ => false
-          }
+          val (n, kt, vt) = mapHeader(tc)
+          var k = 0L
+          while (k < n) { value(kt, depth + 1); value(vt, depth + 1); k += 1 }
         case 12 => nStruct += 1; fields(depth + 1)
-        case _ => false // reserved types: reject
+        case _ => ByteCursor.reject() // reserved types
       }
     }
-    def fields(depth: Int): Boolean =
+    def fields(depth: Int): Unit =
       struct(tc, depth) { (id, tpe) =>
-        if (id < 0) false
-        else {
-          nFields += 1
-          if (id > maxField) maxField = id
-          value(tpe, depth)
-        }
+        if (id < 0) ByteCursor.reject()
+        nFields += 1
+        if (id > maxField) maxField = id
+        value(tpe, depth)
       }
-    if (!fields(1)) return None
+    fields(1)
     if (tc.pos != tc.end) return None // trailing bytes: misparse
     Some(ThriftCensus(nFields, nInt, nBool, nStr, nDouble, nList,
       nStruct, maxField, maxDepth, intSum, strBytes))

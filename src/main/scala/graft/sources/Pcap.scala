@@ -28,10 +28,10 @@ object Pcap {
                               n_udp: Int, n_arp: Int, n_other: Int,
                               span_ms: Long)
 
-  def census(b: Array[Byte]): Option[PcapCensus] = {
+  def census(b: Array[Byte]): Option[PcapCensus] = ByteCursor.total {
     if (b == null || b.length < 24) return None
     val c = ByteCursor(b)
-    val magicBe = c.be32(0).getOrElse(return None)
+    val magicBe = c.be32(0)
     val (little, nanos) = magicBe match {
       case 0xA1B2C3D4L => (false, false)
       case 0xA1B23C4DL => (false, true)
@@ -40,20 +40,20 @@ object Pcap {
       case _ => return None
     }
     // major version
-    if (c.uint(4, 2, little).getOrElse(return None) != 2) return None
-    val snaplen = c.uint(16, 4, little).getOrElse(return None)
-    val linkType = c.uint(20, 4, little).getOrElse(return None).toInt
+    if (c.uint(4, 2, little) != 2) return None
+    val snaplen = c.uint(16, 4, little)
+    val linkType = c.uint(20, 4, little).toInt
     var i = 24L
     var n = 0; var bytes = 0L
     var ipv4 = 0; var tcp = 0; var udp = 0; var arp = 0; var other = 0
     var firstTs = -1L; var lastTs = -1L
     val n1 = b.length.toLong
     while (i < n1) {
-      // a torn packet header reads None
-      val sec = c.uint(i, 4, little).getOrElse(return None)
-      val frac = c.uint(i + 4, 4, little).getOrElse(return None)
-      val incl = c.uint(i + 8, 4, little).getOrElse(return None)
-      val orig = c.uint(i + 12, 4, little).getOrElse(return None)
+      // a torn packet header rejects
+      val sec = c.uint(i, 4, little)
+      val frac = c.uint(i + 4, 4, little)
+      val incl = c.uint(i + 8, 4, little)
+      val orig = c.uint(i + 12, 4, little)
       if (incl > snaplen || incl > orig || i + 16 + incl > n1) return None
       val tsMs = sec * 1000L + (if (nanos) frac / 1000000L else frac / 1000L)
       if (firstTs < 0) firstTs = tsMs
@@ -63,11 +63,11 @@ object Pcap {
       val p = i + 16
       if (linkType == 1 && incl >= 14) {
         // Ethernet II ethertype is ALWAYS big-endian (network order)
-        val ethertype = c.be16(p + 12).getOrElse(return None)
+        val ethertype = c.be16(p + 12)
         ethertype match {
           case 0x0800 if incl >= 14 + 20 =>
             ipv4 += 1
-            c.u8(p + 14 + 9).getOrElse(return None) match { // IPv4 protocol field
+            c.u8(p + 14 + 9) match { // IPv4 protocol field
               case 6 => tcp += 1
               case 17 => udp += 1
               case _ => other += 1
@@ -159,12 +159,12 @@ object Pcap {
     * span from EPB timestamps at each interface's resolution) plus
     * n_interfaces.
     */
-  def censusNg(b: Array[Byte]): Option[PcapngCensus] = {
+  def censusNg(b: Array[Byte]): Option[PcapngCensus] = ByteCursor.total {
     if (b == null || b.length < 28) return None
     val c = ByteCursor(b)
     // SHB block type
-    if (c.be32(0).getOrElse(return None) != 0x0A0D0D0AL) return None
-    val little = c.be32(8).getOrElse(return None) match {
+    if (c.be32(0) != 0x0A0D0D0AL) return None
+    val little = c.be32(8) match {
       case 0x1A2B3C4DL => false
       case 0x4D3C2B1AL => true
       case _ => return None
@@ -179,58 +179,57 @@ object Pcap {
     var sawShb = false
     while (i < n1) {
       if (i + 12 > n1) return None // torn block header
-      val btype = c.uint(i, 4, little).getOrElse(return None)
-      val blen = c.uint(i + 4, 4, little).getOrElse(return None)
+      val btype = c.uint(i, 4, little)
+      val blen = c.uint(i + 4, 4, little)
       if (blen < 12 || (blen & 3) != 0 || i + blen > n1) return None
       // trailing length echo
-      if (c.uint(i + blen - 4, 4, little).getOrElse(return None) != blen)
-        return None
+      if (c.uint(i + blen - 4, 4, little) != blen) return None
       val body = i + 8
       val bodyEnd = i + blen - 4
-      /** Option walk from `p`: returns Some(map) of the options we
-        * read (code → first 4 value bytes as u32-ish), None on a
-        * malformed walk. Codes not asked for are skipped by length. */
-      def tsresolOpt(p0: Long): Option[Int] = {
+      /** The if_tsresol power from the option walk at `p0` (6, for
+        * microseconds, when absent); a malformed walk rejects. Codes
+        * not asked for are skipped by length. */
+      def tsresol(p0: Long): Int = {
         var p = p0
         var res = 6 // default: microseconds
         while (p < bodyEnd) {
-          if (p + 4 > bodyEnd) return None
-          val code = c.uint(p, 2, little).getOrElse(return None)
-          val olen = c.uint(p + 2, 2, little).getOrElse(return None)
+          if (p + 4 > bodyEnd) ByteCursor.reject()
+          val code = c.uint(p, 2, little)
+          val olen = c.uint(p + 2, 2, little)
           val vEnd = p + 4 + olen
-          if (vEnd > bodyEnd) return None
-          if (code == 0) return Some(res) // opt_endofopt
+          if (vEnd > bodyEnd) ByteCursor.reject()
+          if (code == 0) return res // opt_endofopt
           if (code == 9) { // if_tsresol
-            if (olen != 1) return None
-            val v = c.u8(p + 4).getOrElse(return None)
-            if ((v & 0x80) != 0 || v > 9) return None // fixed-point / absurd
+            if (olen != 1) ByteCursor.reject()
+            val v = c.u8(p + 4)
+            // fixed-point / absurd
+            if ((v & 0x80) != 0 || v > 9) ByteCursor.reject()
             res = v
           }
           p = p + 4 + ((olen + 3) & ~3L) // pad to 4
         }
-        Some(res)
+        res
       }
       btype match {
         case 0x0A0D0D0AL => // SHB (the first, or a new section)
           if (i + 28 > n1 || body + 12 > bodyEnd) return None
-          if (c.uint(body + 4, 2, little).getOrElse(return None) != 1)
-            return None // major version
+          if (c.uint(body + 4, 2, little) != 1) return None // major version
           if (sawShb) return None // multi-section: out of scope
           sawShb = true
         case 1L => // IDB
           if (body + 8 > bodyEnd) return None
-          val lt = c.uint(body, 2, little).getOrElse(return None).toInt
-          val res = tsresolOpt(body + 8).getOrElse(return None)
+          val lt = c.uint(body, 2, little).toInt
+          val res = tsresol(body + 8)
           ifaces += ((lt, res))
         case 6L => // EPB
           if (body + 20 > bodyEnd) return None
-          val ifId = c.uint(body, 4, little).getOrElse(return None)
+          val ifId = c.uint(body, 4, little)
           if (ifId >= ifaces.length) return None // undeclared interface
           val (lt, res) = ifaces(ifId.toInt)
-          val ts = (c.uint(body + 4, 4, little).getOrElse(return None) << 32) |
-            c.uint(body + 8, 4, little).getOrElse(return None)
-          val incl = c.uint(body + 12, 4, little).getOrElse(return None)
-          val orig = c.uint(body + 16, 4, little).getOrElse(return None)
+          val ts = (c.uint(body + 4, 4, little) << 32) |
+            c.uint(body + 8, 4, little)
+          val incl = c.uint(body + 12, 4, little)
+          val orig = c.uint(body + 16, 4, little)
           if (incl > orig || body + 20 + incl > bodyEnd) return None
           // resolution 10^-res per tick → milliseconds
           val tsMs =
@@ -242,11 +241,11 @@ object Pcap {
           bytes += orig
           val p = body + 20
           if (lt == 1 && incl >= 14) {
-            val ethertype = c.be16(p + 12).getOrElse(return None)
+            val ethertype = c.be16(p + 12)
             ethertype match {
               case 0x0800 if incl >= 14 + 20 =>
                 ipv4 += 1
-                c.u8(p + 14 + 9).getOrElse(return None) match {
+                c.u8(p + 14 + 9) match {
                   case 6 => tcp += 1
                   case 17 => udp += 1
                   case _ => other += 1

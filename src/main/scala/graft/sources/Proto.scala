@@ -29,7 +29,7 @@ object Proto {
 
   def census(b: Array[Byte]): Option[ProtoCensus] = {
     if (b == null || b.length == 0) return None
-    walk(b, 0L, b.length.toLong, probeNested = true)
+    ByteCursor.total(walk(b, 0L, b.length.toLong, probeNested = true))
   }
 
   private def walk(b: Array[Byte], from: Long, hi: Long,
@@ -39,26 +39,27 @@ object Proto {
     var maxField = 0
     var vsum = 0L; var lbytes = 0L
     while (c.pos < c.end) {
-      val tag = c.varint().getOrElse(return None)
+      val tag = c.varint()
       val field = (tag >>> 3).toInt
       val wt = (tag & 7).toInt
       if (field < 1 || field > 0x1FFFFFFF) return None
       if (field > maxField) maxField = field
       wt match {
         case 0 =>
-          vsum += c.varint().getOrElse(return None); nv += 1
+          vsum += c.varint(); nv += 1
         case 1 =>
-          c.skip(8).getOrElse(return None); n64 += 1
+          c.skip(8); n64 += 1
         case 2 =>
-          val len = c.varint().getOrElse(return None)
+          val len = c.varint()
           val at = c.pos
-          c.skip(len).getOrElse(return None)
+          c.skip(len)
           nl += 1; lbytes += len
           if (probeNested && len > 0 &&
-            walk(b, at, at + len, probeNested = false).isDefined)
+            ByteCursor.total(walk(b, at, at + len, probeNested = false))
+              .isDefined)
             nested += 1
         case 5 =>
-          c.skip(4).getOrElse(return None); n32 += 1
+          c.skip(4); n32 += 1
         case _ => return None // groups (3/4) and invalid types
       }
     }

@@ -26,7 +26,7 @@ object Sqlite {
                               encoding: String,
                               tables: Seq[SqliteTable])
 
-  def parseSqlite(b: Array[Byte]): Option[SqliteMeta] = {
+  def parseSqlite(b: Array[Byte]): Option[SqliteMeta] = ByteCursor.total {
     if (b == null || b.length < 112) return None
     val magic = "SQLite format 3\u0000"
     var k = 0
@@ -35,13 +35,13 @@ object Sqlite {
       k += 1
     }
     val db = ByteCursor(b)
-    val pageSize = db.be16(16).getOrElse(return None) match {
+    val pageSize = db.be16(16) match {
       case 1 => 65536
       case v => v
     }
     if (pageSize < 512 || (pageSize & (pageSize - 1)) != 0) return None
-    val nPages = db.be32(28).getOrElse(return None)
-    val encoding = db.be32(56).getOrElse(return None) match {
+    val nPages = db.be32(28)
+    val encoding = db.be32(56) match {
       case 1 => "utf-8"
       case 2 => "utf-16le"
       case 3 => "utf-16be"
@@ -52,10 +52,10 @@ object Sqlite {
     // 100-byte file header
     val ph = 100L
     if (ph + 8 > b.length) return None
-    val pageType = db.u8(ph).getOrElse(return None)
+    val pageType = db.u8(ph)
     if (pageType == 0x05) return None // interior root: out of scope
     if (pageType != 0x0D) return None
-    val nCells = db.be16(ph + 3).getOrElse(return None)
+    val nCells = db.be16(ph + 3)
     if (nCells > 10000) return None
     // the cell-pointer array must fit in the buffer BEFORE we index
     // into it — a truncated file whose header claims more cells than
@@ -64,58 +64,57 @@ object Sqlite {
     val tables = Vector.newBuilder[SqliteTable]
     var c = 0
     while (c < nCells) {
-      val cellPtr = db.be16(ph + 8 + 2L * c).getOrElse(return None).toLong
+      val cellPtr = db.be16(ph + 8 + 2L * c).toLong
       if (cellPtr < ph || cellPtr >= b.length) return None
       val cur = new ByteCursor(b, cellPtr, b.length)
-      val payloadLen = bigVarint(cur).getOrElse(return None)
-      bigVarint(cur).getOrElse(return None) // rowid
+      val payloadLen = bigVarint(cur)
+      bigVarint(cur) // rowid
       // overflow (payload larger than what fits in-page): out of scope
       if (cur.pos + payloadLen > b.length) return None
       if (payloadLen > pageSize - 35L) return None
       val recStart = cur.pos
-      val hdrLen = bigVarint(cur).getOrElse(return None)
+      val hdrLen = bigVarint(cur)
       if (hdrLen < 0 || recStart + hdrLen > b.length) return None
       val serials = Vector.newBuilder[Long]
       while (cur.pos < recStart + hdrLen)
-        serials += bigVarint(cur).getOrElse(return None)
+        serials += bigVarint(cur)
       val st = serials.result()
       if (st.length < 5) return None
       var vp = recStart + hdrLen
-      def readVal(serial: Long): Option[(String, Long)] = {
+      def readVal(serial: Long): (String, Long) = {
         // returns (text-or-stringified, int value) per serial type
         serial match {
-          case 0 => Some(("", 0L))
+          case 0 => ("", 0L)
           case s if s >= 1 && s <= 6 =>
             val n = Seq(1, 2, 3, 4, 6, 8)(s.toInt - 1)
-            val raw = db.be(vp, n).getOrElse(return None)
+            val raw = db.be(vp, n)
             // sign-extend
             val v = if (n < 8 && (raw & (1L << (8 * n - 1))) != 0)
               raw - (1L << (8 * n)) else raw
-            vp += n; Some((v.toString, v))
-          case 8 => Some(("0", 0L))
-          case 9 => Some(("1", 1L))
+            vp += n; (v.toString, v)
+          case 8 => ("0", 0L)
+          case 9 => ("1", 1L)
           case s if s >= 13 && s % 2 == 1 =>
             val len = (s - 13) / 2
-            if (vp + len > b.length) return None
+            if (vp + len > b.length) ByteCursor.reject()
             val t = new String(b.slice(vp.toInt, (vp + len).toInt),
               java.nio.charset.StandardCharsets.UTF_8)
-            vp += len; Some((t, 0L))
+            vp += len; (t, 0L)
           case s if s >= 12 && s % 2 == 0 =>
             val len = (s - 12) / 2
-            if (vp + len > b.length) return None
-            vp += len; Some(("", 0L)) // blob: skipped
+            if (vp + len > b.length) ByteCursor.reject()
+            vp += len; ("", 0L) // blob: skipped
           case 7 =>
-            val v = java.lang.Double.longBitsToDouble(
-              db.be64(vp).getOrElse(return None))
-            vp += 8; Some((v.toString, v.toLong))
-          case _ => None
+            val v = java.lang.Double.longBitsToDouble(db.be64(vp))
+            vp += 8; (v.toString, v.toLong)
+          case _ => ByteCursor.reject()
         }
       }
-      val typ = readVal(st(0)).getOrElse(return None)._1
-      val name = readVal(st(1)).getOrElse(return None)._1
-      val tblName = readVal(st(2)).getOrElse(return None)._1
-      val rootpage = readVal(st(3)).getOrElse(return None)._2
-      val sql = readVal(st(4)).getOrElse(return None)._1
+      val typ = readVal(st(0))._1
+      val name = readVal(st(1))._1
+      val tblName = readVal(st(2))._1
+      val rootpage = readVal(st(3))._2
+      val sql = readVal(st(4))._1
       if (typ == "table")
         tables += SqliteTable(name, tblName, rootpage, sql)
       c += 1
@@ -125,15 +124,15 @@ object Sqlite {
 
   /** SQLite varints are BIG-endian 7-bit groups, at most 9 bytes (the
     * 9th contributes all 8 bits). */
-  private def bigVarint(c: ByteCursor): Option[Long] = {
+  private def bigVarint(c: ByteCursor): Long = {
     var v = 0L; var k = 0
     while (k < 8) {
-      val byt = c.u8().getOrElse(return None)
-      if ((byt & 0x80) == 0) return Some((v << 7) | byt)
+      val byt = c.u8()
+      if ((byt & 0x80) == 0) return (v << 7) | byt
       v = (v << 7) | (byt & 0x7f)
       k += 1
     }
-    c.u8().map(last => (v << 8) | last)
+    (v << 8) | c.u8()
   }
 
   // ---- fixture ------------------------------------------------------ //

@@ -112,23 +112,6 @@ object Tables {
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.option("header", "true").mode("overwrite").csv(path)
 
-  /** JSON line source/sink — additional interchange format. */
-  def readJson(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
-
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  /** ORC source/sink — the other columnar lake format Spark ships
-    * natively; same pushdown/pruning properties as parquet
-    * (PushedFilters in the scan node, vectorized reader).
-    */
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
   /** Register every harness table as a temp view so the SQL entry
     * surface works (`spark.sql("SELECT … FROM lineitem")`) — parity
     * with the reference's SQL-on-catalog entry point
@@ -152,28 +135,4 @@ object Tables {
 
   def dropTable(spark: SparkSession, name: String): Unit =
     spark.sql(s"DROP TABLE IF EXISTS $name")
-
-  /** Bucketed managed table: rows are hash-clustered into `nBuckets`
-    * files by `bucketCols` and sorted within buckets. Two tables
-    * bucketed the same way join WITHOUT a shuffle on either side — at
-    * 100 TB this turns the fact⋈fact join from the dominant exchange
-    * into a zip of co-located files. (Bucketing requires the session
-    * catalog: `saveAsTable`, not a bare path.)
-    */
-  def writeBucketed(df: DataFrame, name: String, bucketCols: Seq[String],
-                    nBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(name)
-
-  /** Hive-style partitioned parquet sink: one directory per partition
-    * value. At 100 TB this is what makes downstream scans prunable —
-    * a filter on a partition column never touches other partitions'
-    * files (verify via `PartitionFilters` in the scan node).
-    */
-  def writePartitioned(df: DataFrame, path: String,
-                       partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
 }

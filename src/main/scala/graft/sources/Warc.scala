@@ -53,7 +53,7 @@ object Warc {
     * recording each member's byte offset + compressed length. None on
     * ANY malformation — including trailing bytes after the last
     * complete member, which `GZIPInputStream` silently swallows. */
-  def gunzipMembers(b: Array[Byte]): Option[Vector[GzMember]] = {
+  def gunzipMembers(b: Array[Byte]): Option[Vector[GzMember]] = ByteCursor.total {
     if (b.length == 0) return None // an empty stream is not a gzip stream
     val out = Vector.newBuilder[GzMember]
     val c = ByteCursor(b)
@@ -69,7 +69,7 @@ object Warc {
       if ((flg & 0xe0) != 0) return None // reserved bits must be zero
       pos += 10
       if ((flg & 4) != 0) { // FEXTRA
-        val xlen = c.le16(pos).getOrElse(return None)
+        val xlen = c.le16(pos)
         pos += 2 + xlen
         if (pos > b.length) return None
       }
@@ -82,7 +82,7 @@ object Warc {
         pos += 1; skip -= 1
       }
       if ((flg & 2) != 0) { // FHCRC: low 16 bits of header CRC32
-        val stored = c.le16(pos).getOrElse(return None)
+        val stored = c.le16(pos)
         val crc = new java.util.zip.CRC32()
         crc.update(b, start.toInt, (pos - start).toInt)
         if ((crc.getValue & 0xffffL) != stored) return None
@@ -108,9 +108,8 @@ object Warc {
       } finally inf.end()
       val data = member.toByteArray
       // trailer: CRC32 and ISIZE (input size mod 2^32)
-      if (c.le32(pos).getOrElse(return None) != crc.getValue) return None
-      if (c.le32(pos + 4).getOrElse(return None) !=
-        (data.length.toLong & 0xffffffffL)) return None
+      if (c.le32(pos) != crc.getValue) return None
+      if (c.le32(pos + 4) != (data.length.toLong & 0xffffffffL)) return None
       pos += 8
       out += GzMember(start, pos - start, data)
     }

@@ -227,61 +227,74 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  /** Walks a parser's result, so a reject that escapes through a
+    * lazily built value fails the lane here, not in a later consumer. */
+  private def force(r: Any): Unit = r match {
+    case it: IterableOnce[_] => it.iterator.foreach(force)
+    case p: Product => p.productIterator.foreach(force)
+    case _ => ()
+  }
+
   test("binary parsers never throw on arbitrary bytes") {
-    import graft.multimodal.Vp8l
-    import graft.sources.Warc
-    check("warc", Prop.forAll(anyBytes) { b =>
-      Warc.gunzipMembers(b); Warc.parseWarc(b); Warc.parseCrawl(b)
-      Warc.parseHttpResponse(b); Warc.parseWet(b); true
-    })
-    check("media", Prop.forAll(anyBytes) { b =>
-      Binary.parseImageMeta(b); Binary.parseWebpMeta(b)
-      Binary.parseAudioMeta(b); Vp8l.decode(b); true
-    })
-    check("docs-archives", Prop.forAll(anyBytes) { b =>
-      graft.multimodal.Pdf.parse(b)
-      graft.multimodal.Binary.parseAvifMeta(b)
-      graft.multimodal.Binary.parseExifMeta(b)
-      graft.multimodal.Binary.parseBmpMeta(b)
-      graft.multimodal.Binary.parseIcoMeta(b)
-      graft.multimodal.Binary.parseTiffMeta(b)
-      graft.sources.Archives.parseZip(b)
-      graft.sources.Archives.parseTar(b)
-      graft.sources.Archives.parseTarGz(b)
-      graft.sources.Docs.docxText(b); graft.sources.Docs.epubText(b)
-      graft.sources.Docs.epubMeta(b)
-      graft.sources.Office.xlsxCells(b); graft.sources.Office.pptxText(b)
-      graft.sources.Docs.odtText(b)
-      graft.multimodal.Font.parseFont(b)
-      graft.sources.Avro.parseAvro(b)
-      graft.sources.Proto.census(b)
-      graft.sources.Sqlite.parseSqlite(b)
-      graft.sources.Frames.parseFrame(b)
-      graft.multimodal.Font.parseWoff(b)
-      graft.sources.Git.parseLoose(b)
-      graft.sources.Pcap.census(b)
-      graft.sources.Pcap.censusNg(b)
-      graft.sources.Parquet.parseFooter(b)
-      graft.sources.Cbor.census(b)
-      graft.sources.Msgpack.census(b)
-      graft.sources.Git.parsePackIdx(b)
-      graft.sources.Orc.parseOrc(b)
-      graft.sources.Parquet.thriftCensus(b)
-      graft.multimodal.Binary.parseId3v2(b)
-      graft.multimodal.Binary.parseSvgMeta(b)
-      graft.multimodal.Binary.parseTracks(b)
-      graft.multimodal.Binary.parseFlacTags(b)
-      graft.multimodal.Binary.parseOggVorbisMeta(b)
-      graft.multimodal.Ebml.parseMkv(b)
-      Binary.pngDecode(b); Binary.gifDecode(b); Binary.jpegDecode(b)
-      Binary.jpegDecodeColor420(b); Binary.jpegDecodeProgressive(b)
-      Binary.wavPcmDecode(b); Binary.flacDecode(b)
-      Binary.parseVideoMeta(b); Binary.parseOpusTags(b)
-      Warc.gunzipAll(b)
-      true
-    })
+    import graft.multimodal.{Ebml, Font, Pdf, Vp8l}
+    import graft.sources._
+    def lane(name: String, parsers: Seq[Array[Byte] => Any]): Unit =
+      check(name, Prop.forAll(anyBytes) { b =>
+        parsers.foreach(p => force(p(b))); true
+      })
+    lane("warc", Seq(Warc.gunzipMembers, Warc.parseWarc, Warc.parseCrawl,
+      Warc.parseHttpResponse, Warc.parseWet))
+    lane("media", Seq(Binary.parseImageMeta, Binary.parseWebpMeta,
+      Binary.parseAudioMeta, Vp8l.decode))
+    lane("docs-archives", Seq(Pdf.parse, Binary.parseAvifMeta,
+      Binary.parseExifMeta, Binary.parseBmpMeta, Binary.parseIcoMeta,
+      Binary.parseTiffMeta, Archives.parseZip, Archives.parseTar,
+      Archives.parseTarGz, Docs.docxText, Docs.epubText, Docs.epubMeta,
+      Office.xlsxCells, Office.pptxText, Docs.odtText, Font.parseFont,
+      Avro.parseAvro, Proto.census, Sqlite.parseSqlite, Frames.parseFrame,
+      Font.parseWoff, Git.parseLoose, Pcap.census, Pcap.censusNg,
+      Parquet.parseFooter, Cbor.census, Msgpack.census, Git.parsePackIdx,
+      Orc.parseOrc, Parquet.thriftCensus, Binary.parseId3v2,
+      Binary.parseSvgMeta, Binary.parseTracks, Binary.parseFlacTags,
+      Binary.parseOggVorbisMeta, Ebml.parseMkv, Binary.pngDecode,
+      Binary.gifDecode, Binary.jpegDecode, Binary.jpegDecodeColor420,
+      Binary.jpegDecodeProgressive, Binary.wavPcmDecode, Binary.flacDecode,
+      Binary.parseVideoMeta, Binary.parseOpusTags, Warc.gunzipAll))
     // mutation fuzz: corrupt VALID containers anywhere — parsers must
     // stay total (None / surviving prefix), never throw or hang
+    val mutated: Seq[(Long => Array[Byte], Array[Byte] => Any)] = Seq(
+      (Pdf.synthPdf, Pdf.parse), (Pdf.synthCidPdf, Pdf.parse),
+      (Pdf.synthObjStmPdf, Pdf.parse), (Pdf.synthEncryptedPdf, Pdf.parse),
+      (Archives.synthZip, Archives.parseZip),
+      (Archives.synthZip64, Archives.parseZip),
+      (Archives.synthTarGz, Archives.parseTarGz),
+      (Archives.synthTarSpecial, Archives.parseTar),
+      (Docs.synthEpub, Docs.epubText), (Office.synthXlsx, Office.xlsxCells),
+      (Office.synthPptx, Office.pptxText), (Docs.synthOdt, Docs.odtText),
+      (Font.synthFont, Font.parseFont), (Avro.synthAvro, Avro.parseAvro),
+      (Proto.synthProto, Proto.census),
+      (Sqlite.synthSqlite, Sqlite.parseSqlite),
+      (Frames.synthFrame, Frames.parseFrame),
+      (Font.synthWoff, Font.parseWoff), (Git.synthLoose, Git.parseLoose),
+      (Pcap.synthPcap, Pcap.census), (Pcap.synthPcapng, Pcap.censusNg),
+      (Parquet.synthParquet, Parquet.parseFooter),
+      (Cbor.synthCbor, Cbor.census), (Msgpack.synthMsgpack, Msgpack.census),
+      (Git.synthPackIdx, Git.parsePackIdx), (Orc.synthOrc, Orc.parseOrc),
+      (Parquet.synthThrift, Parquet.thriftCensus),
+      (Binary.synthLegacyImage, Binary.parseImageMeta),
+      (Binary.synthExifJpeg, Binary.parseExifMeta),
+      (Binary.synthVideoTracks, Binary.parseTracks),
+      (Binary.synthOggVorbis, Binary.parseOggVorbisMeta),
+      (Ebml.synthMkv, Ebml.parseMkv), (Binary.synthPng, Binary.pngDecode),
+      (Binary.synthGif, Binary.gifDecode), (Binary.synthJpeg, Binary.jpegDecode),
+      (Binary.synthJpegRst, Binary.jpegDecode),
+      (Binary.synthColorJpeg, Binary.jpegDecodeColor420),
+      (Binary.synthJpegProg, Binary.jpegDecodeProgressive),
+      (Binary.synthWavPcm, Binary.wavPcmDecode),
+      (Binary.synthFlac, Binary.flacDecode),
+      (Binary.synthVideoHeader, Binary.parseVideoMeta),
+      (Binary.synthOggOpus, Binary.parseOpusTags),
+      (Archives.synthTarGz, Warc.gunzipAll))
     check("mutate-valid", Prop.forAll(
       Gen.choose(0L, 63L), Gen.choose(0, 1 << 16),
       Gen.choose(0, 255)) { (id, posSeed, v) =>
@@ -289,74 +302,7 @@ class PropertySpec extends AnyFunSuite {
         val c = b.clone(); val p = posSeed % c.length
         c(p) = v.toByte; c
       }
-      graft.multimodal.Pdf.parse(mut(graft.multimodal.Pdf.synthPdf(id)))
-      graft.multimodal.Pdf.parse(mut(graft.multimodal.Pdf.synthCidPdf(id)))
-      graft.multimodal.Pdf.parse(mut(graft.multimodal.Pdf.synthObjStmPdf(id)))
-      graft.multimodal.Pdf.parse(mut(
-        graft.multimodal.Pdf.synthEncryptedPdf(id)))
-      graft.sources.Archives.parseZip(mut(
-        graft.sources.Archives.synthZip(id)))
-      graft.sources.Archives.parseZip(mut(
-        graft.sources.Archives.synthZip64(id)))
-      graft.sources.Archives.parseTarGz(mut(
-        graft.sources.Archives.synthTarGz(id)))
-      graft.sources.Archives.parseTar(mut(
-        graft.sources.Archives.synthTarSpecial(id)))
-      graft.sources.Docs.epubText(mut(graft.sources.Docs.synthEpub(id)))
-      graft.sources.Office.xlsxCells(mut(
-        graft.sources.Office.synthXlsx(id)))
-      graft.sources.Office.pptxText(mut(
-        graft.sources.Office.synthPptx(id)))
-      graft.sources.Docs.odtText(mut(graft.sources.Docs.synthOdt(id)))
-      graft.multimodal.Font.parseFont(mut(
-        graft.multimodal.Font.synthFont(id)))
-      graft.sources.Avro.parseAvro(mut(graft.sources.Avro.synthAvro(id)))
-      graft.sources.Proto.census(mut(graft.sources.Proto.synthProto(id)))
-      graft.sources.Sqlite.parseSqlite(mut(
-        graft.sources.Sqlite.synthSqlite(id)))
-      graft.sources.Frames.parseFrame(mut(
-        graft.sources.Frames.synthFrame(id)))
-      graft.multimodal.Font.parseWoff(mut(
-        graft.multimodal.Font.synthWoff(id)))
-      graft.sources.Git.parseLoose(mut(
-        graft.sources.Git.synthLoose(id)))
-      graft.sources.Pcap.census(mut(
-        graft.sources.Pcap.synthPcap(id)))
-      graft.sources.Pcap.censusNg(mut(
-        graft.sources.Pcap.synthPcapng(id)))
-      graft.sources.Parquet.parseFooter(mut(
-        graft.sources.Parquet.synthParquet(id)))
-      graft.sources.Cbor.census(mut(
-        graft.sources.Cbor.synthCbor(id)))
-      graft.sources.Msgpack.census(mut(
-        graft.sources.Msgpack.synthMsgpack(id)))
-      graft.sources.Git.parsePackIdx(mut(
-        graft.sources.Git.synthPackIdx(id)))
-      graft.sources.Orc.parseOrc(mut(
-        graft.sources.Orc.synthOrc(id)))
-      graft.sources.Parquet.thriftCensus(mut(
-        graft.sources.Parquet.synthThrift(id)))
-      graft.multimodal.Binary.parseImageMeta(mut(
-        graft.multimodal.Binary.synthLegacyImage(id)))
-      graft.multimodal.Binary.parseExifMeta(mut(
-        graft.multimodal.Binary.synthExifJpeg(id)))
-      graft.multimodal.Binary.parseTracks(mut(
-        graft.multimodal.Binary.synthVideoTracks(id)))
-      graft.multimodal.Binary.parseOggVorbisMeta(mut(
-        graft.multimodal.Binary.synthOggVorbis(id)))
-      graft.multimodal.Ebml.parseMkv(mut(
-        graft.multimodal.Ebml.synthMkv(id)))
-      Binary.pngDecode(mut(Binary.synthPng(id)))
-      Binary.gifDecode(mut(Binary.synthGif(id)))
-      Binary.jpegDecode(mut(Binary.synthJpeg(id)))
-      Binary.jpegDecode(mut(Binary.synthJpegRst(id)))
-      Binary.jpegDecodeColor420(mut(Binary.synthColorJpeg(id)))
-      Binary.jpegDecodeProgressive(mut(Binary.synthJpegProg(id)))
-      Binary.wavPcmDecode(mut(Binary.synthWavPcm(id)))
-      Binary.flacDecode(mut(Binary.synthFlac(id)))
-      Binary.parseVideoMeta(mut(Binary.synthVideoHeader(id)))
-      Binary.parseOpusTags(mut(Binary.synthOggOpus(id)))
-      Warc.gunzipAll(mut(graft.sources.Archives.synthTarGz(id)))
+      mutated.foreach { case (synth, parse) => force(parse(mut(synth(id)))) }
       true
     })
     // DOCX XML-level fuzz: container byte flips die at the CRC gate,

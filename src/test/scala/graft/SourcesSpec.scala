@@ -139,66 +139,6 @@ class SourcesSpec extends SparkSpec {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
-  test("JSON sink/source round-trips rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-json").toString
-    val sample = li.select("l_orderkey", "l_linenumber", "l_quantity").limit(500)
-    Tables.writeJson(sample, s"$dir/li")
-    val back = Tables.readJson(spark, s"$dir/li")
-    assert(back.count() == 500)
-    assert(back.agg(sum("l_quantity")).head.getDouble(0) ==
-      sample.agg(sum("l_quantity")).head.getDouble(0))
-  }
-
-  test("ORC sink/source round-trips rows with filter pushdown") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-orc").toString
-    val sample = li.select("l_orderkey", "l_linenumber", "l_quantity").limit(500)
-    Tables.writeOrc(sample, s"$dir/li")
-    val back = Tables.readOrc(spark, s"$dir/li")
-    assert(back.count() == 500)
-    assert(back.agg(sum("l_quantity")).head.getDouble(0) ==
-      sample.agg(sum("l_quantity")).head.getDouble(0))
-    val filtered = back.where(col("l_orderkey") > 100)
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("l_orderkey"),
-      s"no ORC filter pushdown in:\n$plan")
-  }
-
-  test("bucketed tables join without a shuffle on either side") {
-    val a = li.select("l_orderkey", "l_quantity").limit(2000)
-    val b = li.select("l_orderkey", "l_extendedprice").limit(2000)
-    Tables.writeBucketed(a, "graft_bucket_a", Seq("l_orderkey"), 4)
-    Tables.writeBucketed(b, "graft_bucket_b", Seq("l_orderkey"), 4)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force the sort-merge path: broadcast would also avoid a shuffle,
-      // but bucketing's point is the co-located join of two BIG sides
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("graft_bucket_a")
-        .join(spark.table("graft_bucket_b"), "l_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join still shuffles:\n$plan")
-      assert(plan.contains("SortMergeJoin"), s"expected sort-merge join:\n$plan")
-      assert(joined.count() > 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      Tables.dropTable(spark, "graft_bucket_a")
-      Tables.dropTable(spark, "graft_bucket_b")
-    }
-  }
-
-  test("partitioned parquet write enables partition pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
-    Tables.writePartitioned(
-      li.select("l_orderkey", "l_returnflag", "l_extendedprice"),
-      s"$dir/li", Seq("l_returnflag"))
-    val back = spark.read.parquet(s"$dir/li").where(col("l_returnflag") === "R")
-    val plan = back.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.contains("l_returnflag"), s"no partition pruning in:\n$plan")
-    assert(back.count() == li.where(col("l_returnflag") === "R").count())
-  }
-
   test("CSV round-trip with explicit schema") {
     val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString
     val sample = li.select("l_orderkey", "l_quantity").limit(100)
