@@ -1,10 +1,10 @@
 package graft.aug
 
+import graft.core.Caches
 import graft.sim.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deterministic SMOTE minority oversampling (reference SURVEY.md §2.7
   * R2: k-NN interpolation of the minority class,
@@ -40,12 +40,11 @@ object Smote {
   def oversample(df: DataFrame, idCol: String, vecCol: String,
                  minorityPred: Column, k: Int, target: Int): DataFrame = {
     GraftFunctions.register(df.sparkSession)
-    val m = df.where(minorityPred)
+    val m = Caches.keep("smote.oversample", df.where(minorityPred)
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .withColumn("rn",
         row_number().over(Window.orderBy("id")).cast("long") - 1)
-      .withColumn("n2", GraftFunctions.norm2(col("vec")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("n2", GraftFunctions.norm2(col("vec"))))
 
     // k nearest neighbors per minority row: d² = |a|² + |b|² − 2·a·b
     val nCnt = m.count()
@@ -77,7 +76,6 @@ object Smote {
         zip_with(col("va"), col("vb"),
           (x, y) => x.cast("double") + col("u") * (y.cast("double") - x.cast("double")))
           .as("vec"))
-    graft.core.Caches.retain("smote.oversample", m)
     out
   }
 

@@ -1,21 +1,28 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
-/** Lifecycle discipline for intra-operator caches.
+/** How a graft operator caches a frame and keeps it alive.
   *
-  * The recurring trap: an operator persists an intermediate, builds its
-  * result on top, and returns the result lazily — the cache (and its
-  * broadcasts) then outlives the operator, because unpersisting before
-  * the caller's action would recompute the intermediate uncached, and
-  * the caller has no handle to unpersist with. Repeated calls (grid
+  * [[keep]] is the one call: it persists a frame at [[level]], registers
+  * it in its operator's working set under a key, and returns it; it is
+  * the only way to register a frame. No other code in `src/main` names
+  * a storage level or calls a bare `persist()` (CachesSpec scans for
+  * both). The scan does not match `.cache()`: `FrequencyIndexer.fit`'s
+  * `labels.cache()` is the one unregistered cache left.
+  *
+  * The recurring trap it answers: an operator persists an intermediate,
+  * builds its result on top, and returns the result lazily — the cache
+  * (and its broadcasts) then outlives the operator, because unpersisting
+  * before the caller's action would recompute the intermediate uncached,
+  * and the caller has no handle to unpersist with. Repeated calls (grid
   * loops, benchmark reruns, long sessions) accumulate pinned executor
   * storage without bound: CacheManager entries are only freed by
   * explicit unpersist, never by GC.
   *
   * The discipline here is a RETENTION POLICY rather than eager release:
-  * an operator registers its caches under its own key via [[retain]],
-  * and the registry keeps an LRU of at most 4 keys' working sets,
+  * the registry keeps an LRU of at most 4 keys' working sets,
   * unpersisting the least-recent set when the bound is exceeded.
   * Consequences:
   *
@@ -32,15 +39,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[releaseAll]] between queries.
   *
   * Within one key the frame list is deduplicated by logical plan
-  * (`sameResult`): re-registering an identical plan keeps the single
+  * (`sameResult`): keeping an identical plan again keeps the single
   * underlying cache entry, so per-key growth is bounded too. ACROSS
   * keys two sets may legitimately hold same-plan frames — Spark's
   * CacheManager backs both with ONE entry — so eviction unpersists a
   * frame only when no surviving set still retains its plan; evicting
   * one key can therefore never invalidate data another key's frames
   * depend on. Operators that finish consuming a cache before returning
-  * should still unpersist in-function; [[retain]] is for caches the
-  * returned result depends on.
+  * persist it at [[level]] and unpersist it in-function; [[keep]] is
+  * for caches the returned result depends on.
   */
 object Caches {
 
@@ -51,34 +58,41 @@ object Caches {
   // LRU order: head = least recent
   private var sets: Vector[(String, List[DataFrame])] = Vector.empty
 
-  /** Register `frames` (already persisted by the caller) as part of
-    * `key`'s working set, refreshing the key's recency. Evicts (and
+  /** The storage level of every graft cache. */
+  val level: StorageLevel = StorageLevel.MEMORY_AND_DISK
+
+  /** Persist `df` at [[level]], register it in `key`'s working set and
+    * return it. Registering refreshes the key's recency and evicts (and
     * unpersists) the least-recent key's set beyond the retention bound.
     */
-  def retain(key: String, frames: DataFrame*): Unit = lock.synchronized {
-    val (same, others) = sets.partition(_._1 == key)
-    val existing = same.headOption.map(_._2).getOrElse(Nil)
-    val fresh = frames.toList.filterNot { f =>
-      existing.exists(_.queryExecution.analyzed.sameResult(f.queryExecution.analyzed))
+  def keep(key: String, df: DataFrame): DataFrame = {
+    df.persist(level)
+    lock.synchronized {
+      val (same, others) = sets.partition(_._1 == key)
+      val existing = same.headOption.map(_._2).getOrElse(Nil)
+      val plan = df.queryExecution.analyzed
+      var merged =
+        if (existing.exists(_.queryExecution.analyzed.sameResult(plan))) existing
+        else existing :+ df
+      var dropped = List.empty[DataFrame]
+      while (merged.length > maxFramesPerSet) {
+        dropped ::= merged.head
+        merged = merged.tail
+      }
+      sets = others :+ (key -> merged)
+      while (sets.length > maxSets) {
+        dropped :::= sets.head._2
+        sets = sets.tail
+      }
+      // release only plans no surviving set still retains (see scaladoc:
+      // same-plan frames under two keys share one CacheManager entry)
+      dropped.foreach { f =>
+        val p = f.queryExecution.analyzed
+        if (!sets.exists(_._2.exists(_.queryExecution.analyzed.sameResult(p))))
+          f.unpersist()
+      }
     }
-    var merged = existing ::: fresh
-    var dropped = List.empty[DataFrame]
-    while (merged.length > maxFramesPerSet) {
-      dropped ::= merged.head
-      merged = merged.tail
-    }
-    sets = others :+ (key -> merged)
-    while (sets.length > maxSets) {
-      dropped :::= sets.head._2
-      sets = sets.tail
-    }
-    // release only plans no surviving set still retains (see scaladoc:
-    // same-plan frames under two keys share one CacheManager entry)
-    dropped.foreach { f =>
-      val plan = f.queryExecution.analyzed
-      if (!sets.exists(_._2.exists(_.queryExecution.analyzed.sameResult(plan))))
-        f.unpersist()
-    }
+    df
   }
 
   /** Release every retained cache (session teardown / tests /
@@ -90,7 +104,7 @@ object Caches {
     * queries right after big retainers (q131 after q130_bootstrap,
     * q155 after q154, q47 after q46_tfidf). Blocking moves that cost
     * into the caller's own (untimed) teardown window. LRU eviction in
-    * [[retain]] stays async — an operator should not stall on its
+    * [[keep]] stays async — an operator should not stall on its
     * neighbor's cleanup.
     *
     * CONCURRENCY CONTRACT: call only at a single-threaded session

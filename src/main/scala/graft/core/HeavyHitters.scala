@@ -65,10 +65,8 @@ object HeavyHitters {
     val cand = candidates(df, itemCol, k).toSeq
     val bucket = when(col(itemCol).cast("string").isin(cand: _*),
       col(itemCol).cast("string"))
-    val counts = df.groupBy(bucket.as("item"))
-      .agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Caches.retain(s"heavyHitters.$itemCol", counts)
+    val counts = Caches.keep(s"heavyHitters.$itemCol", df.groupBy(bucket.as("item"))
+      .agg(count(lit(1)).as("cnt")))
     val n = counts.agg(sum("cnt")).head().getLong(0)
     counts.where(col("item").isNotNull && col("cnt") * k > n)
       .select(col("item"), col("cnt"),

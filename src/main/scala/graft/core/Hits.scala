@@ -49,9 +49,7 @@ object Hits {
     */
   def run(edges: DataFrame, iters: Int = 6,
           cacheKey: String = "hits"): (DataFrame, DataFrame) = {
-    val e = edges.select(col("hub"), col("auth")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Caches.retain(cacheKey, e)
+    val e = Caches.keep(cacheKey, edges.select(col("hub"), col("auth")).distinct())
     val nH = e.select(col("hub")).distinct().count()
     var h = e.select(col("hub")).distinct()
       .select(col("hub"), lit(1.0 / math.sqrt(nH.toDouble)).as("h"))

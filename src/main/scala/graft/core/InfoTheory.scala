@@ -33,8 +33,9 @@ object InfoTheory {
       .groupBy(col(aCol).as("a"), col(bCol).as("b"))
       .agg(count(lit(1)).as("nab"))
     // the joint table is tiny (|A|·|B| rows) — persist so the three
-    // re-aggregations below don't recompute the data-wide count
-    joint.persist()
+    // re-aggregations below don't recompute the data-wide count; not
+    // kept: released before the one-row result is built
+    joint.persist(Caches.level)
     val n = joint.agg(sum(col("nab"))).head.getLong(0).toDouble
     val ma = joint.groupBy("a").agg(sum(col("nab")).as("na"))
     val mb = joint.groupBy("b").agg(sum(col("nab")).as("nb"))

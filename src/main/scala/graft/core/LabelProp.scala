@@ -28,10 +28,9 @@ object LabelProp {
   def run(edges: DataFrame, srcCol: String, dstCol: String,
           rounds: Int): DataFrame = {
     require(rounds >= 1, s"LabelProp needs rounds >= 1: $rounds")
-    val ed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Caches.retain("labelprop.edges", ed)
+    val ed = Caches.keep("labelprop.edges",
+      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+        .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst"))))
     var labels = ed.select(col("src").as("v")).distinct()
       .withColumn("lbl", col("v"))
     (1 to rounds).foreach { _ =>

@@ -82,7 +82,7 @@ object OrderStats {
     val pairs1 = pairs0.where(col("v").isNotNull)
     val needCache = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val pairs =
-      if (needCache) pairs1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (needCache) pairs1.persist(Caches.level) // released in `finally`
       else pairs1
     try {
       val resolved = selectAll(pairs, cols.length, ps, effBuckets, collectThreshold)
@@ -150,7 +150,7 @@ object OrderStats {
       .where(col("v").isNotNull)
     val needCache = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val pairs =
-      if (needCache) pairs1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (needCache) pairs1.persist(Caches.level) // released in `finally`
       else pairs1
     try {
       val eff = effectiveBuckets(buckets, groups.length)

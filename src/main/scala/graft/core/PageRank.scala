@@ -30,13 +30,10 @@ object PageRank {
   /** edges: (src, dst, w) with long weights; returns (node, r). */
   def run(edges: DataFrame, d: Double = 0.85, iters: Int = 10,
           cacheKey: String = "pagerank"): DataFrame = {
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst").as("node"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val e = edges
-      .join(edges.groupBy("src").agg(sum("w").as("outw")), "src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Caches.retain(cacheKey, nodes, e)
+    val nodes = Caches.keep(cacheKey, edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node"))).distinct())
+    val e = Caches.keep(cacheKey, edges
+      .join(edges.groupBy("src").agg(sum("w").as("outw")), "src"))
     val nN = nodes.count()
     var r = nodes.select(col("node"), lit(1.0 / nN).as("r")).localCheckpoint()
     for (i <- 1 to iters) {

@@ -29,17 +29,15 @@ object PrefixScan {
   /** Append `cum_<w>_below` (exclusive running total in `sortCol`
     * order) for each weight column, plus the grand totals. Weight
     * columns must be non-null longs. The internal sorted frame is
-    * persisted and registered under `cacheKey` with [[Caches]] —
-    * warm for the caller's action, swept when another operator
-    * retains.
+    * kept under `cacheKey` with [[Caches.keep]] — warm for the
+    * caller's action, swept when other operators keep theirs.
     */
   def build(df: DataFrame, sortCol: String, weightCols: Seq[String],
             cacheKey: String): (DataFrame, Array[Long]) = {
     val spark = df.sparkSession
     val parts = math.max(1, spark.sparkContext.defaultParallelism)
-    val sorted = df.repartitionByRange(parts, col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sorted = Caches.keep(cacheKey, df.repartitionByRange(parts, col(sortCol))
+      .sortWithinPartitions(sortCol))
     val wIdx = weightCols.map(sorted.schema.fieldIndex).toArray
     val nW = wIdx.length
     val subtotal = sorted.rdd.mapPartitionsWithIndex { case (i, it) =>
@@ -69,7 +67,6 @@ object PrefixScan {
     }
     val schema = StructType(sorted.schema.fields ++
       weightCols.map(w => StructField(s"cum_${w}_below", LongType)))
-    Caches.retain(cacheKey, sorted)
     (spark.createDataFrame(rows, schema), totals)
   }
 }

@@ -1,8 +1,8 @@
 package graft.dedup
 
+import graft.core.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components over a near-duplicate pair list — the final
   * dedup step: pairs (a≈b) become clusters, each cluster keeps one
@@ -27,9 +27,9 @@ object Components {
                           maxIter: Int = 20): DataFrame = {
     val e0 = pairs.select(col(aCol).cast("long").as("src"),
       col(bCol).cast("long").as("dst"))
-    val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = Caches.keep("components.cc",
+      e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct())
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("component", col("id")).localCheckpoint()
     var changed = 1L
@@ -69,7 +69,6 @@ object Components {
     }
     // labels is checkpointed (lineage truncated); the edge cache is
     // retained for same-operator reruns and swept by the next operator
-    graft.core.Caches.retain("components.cc", edges)
     labels
   }
 

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Caches
 import graft.sim.VectorMath
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
@@ -122,10 +123,10 @@ object Dedup {
                       n: Int, minDocs: Int = 2,
                       hash: Column => Column = TextOps.strHash(_)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = df.select(col(idCol).cast("long").as("id"),
-        TextOps.tokens(col(textCol)).as("toks"))
-      .withColumn("n_tokens", size(col("toks")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = Caches.keep("dedup.dupSpanCoverage",
+      df.select(col(idCol).cast("long").as("id"),
+          TextOps.tokens(col(textCol)).as("toks"))
+        .withColumn("n_tokens", size(col("toks")).cast("long")))
     val grams = base.select(col("id"),
         posexplode(when(size(col("toks")) >= n,
           transform(sequence(lit(1), size(col("toks")) - lit(n - 1)),
@@ -150,7 +151,6 @@ object Dedup {
         when(col("n_tokens") > 0,
           round(covered.cast("double") / col("n_tokens").cast("double"), 6))
           .otherwise(lit(0.0)).as("coverage"))
-    graft.core.Caches.retain("dedup.dupSpanCoverage", base)
     out
   }
 
@@ -163,8 +163,7 @@ object Dedup {
                    maxShingleDocFreq: Long = 0L): DataFrame = {
     // persisted: referenced by the size aggregate and BOTH sides of the
     // pair self-join — shingling would otherwise run four times
-    val rows = shingleRows(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = Caches.keep("dedup.jaccardPairs", shingleRows(df, idCol, textCol, n))
     val pruned =
       if (maxShingleDocFreq <= 0) rows
       else {
@@ -185,7 +184,6 @@ object Dedup {
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .where(col("jaccard") >= threshold)
       .select(col("a"), col("b"), col("inter"), round(col("jaccard"), 6).as("jaccard"))
-    graft.core.Caches.retain("dedup.jaccardPairs", rows)
     out
   }
 
@@ -199,9 +197,9 @@ object Dedup {
     // reuses one materialization for both sides; the pair-stage dot uses
     // the codegen'd kernel (bitwise-identical to the interpreted fold)
     graft.sim.GraftFunctions.register(df.sparkSession)
-    val v = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .withColumn("n2", graft.sim.GraftFunctions.norm2(col("vec")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = Caches.keep("dedup.cosineDupPairs",
+      df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+        .withColumn("n2", graft.sim.GraftFunctions.norm2(col("vec"))))
     val out = v.as("x").join(v.as("y"), col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
         VectorMath.cosineFromNorms(
@@ -209,7 +207,6 @@ object Dedup {
           col("x.n2"), col("y.n2")).as("cos"))
       .where(col("cos") >= threshold)
       .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
-    graft.core.Caches.retain("dedup.cosineDupPairs", v)
     out
   }
 
@@ -227,18 +224,17 @@ object Dedup {
                         tables: Int = 8, bitsPerTable: Int = 6): DataFrame = {
     import graft.sim.{Ann, GraftFunctions}
     GraftFunctions.register(df.sparkSession)
-    val v = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .withColumn("n2", GraftFunctions.norm2(col("vec")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = Caches.keep("dedup.lshCosineDupPairs",
+      df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+        .withColumn("n2", GraftFunctions.norm2(col("vec"))))
     // signs hoisted into their own projection: the plane dots run once
     // per vector, not once per table (lambda inlining)
     // persisted: the self-join below would otherwise recompute the plane
     // dots for BOTH sides (A/B-measured slower than the cache round-trip)
-    val bk = v
+    val bk = Caches.keep("dedup.lshCosineDupPairs", v
       .select(col("id"), Ann.planeSigns(col("vec"), dim, tables * bitsPerTable).as("signs"))
       .select(col("id"), posexplode(Ann.bucketsFromSigns(col("signs"), tables, bitsPerTable)))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket"))
     val cand = bk.as("x")
       .join(bk.as("y"),
         col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
@@ -254,7 +250,6 @@ object Dedup {
           col("an2"), col("bn2")).as("cos"))
       .where(col("cos") >= threshold)
       .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
-    graft.core.Caches.retain("dedup.lshCosineDupPairs", v, bk)
     out
   }
 

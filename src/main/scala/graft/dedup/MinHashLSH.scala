@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Caches
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -85,9 +86,8 @@ object MinHashLSH {
   /** Distinct candidate pairs (a < b) sharing at least one LSH bucket. */
   def candidatePairs(df: DataFrame, idCol: String, textCol: String,
                      n: Int, k: Int, bands: Int): DataFrame = {
-    val bk = bandKeys(df, idCol, textCol, n, k, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("minhash.candidatePairs", bk)
+    val bk = Caches.keep("minhash.candidatePairs",
+      bandKeys(df, idCol, textCol, n, k, bands))
     selfJoinBuckets(bk)
   }
 
@@ -112,12 +112,11 @@ object MinHashLSH {
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
                    n: Int = 3, k: Int = 16, bands: Int = 4,
                    threshold: Double = 0.5): DataFrame = {
-    val sh = df.select(col(idCol).cast("long").as("id"),
-        Dedup.shingles(col(textCol), n).as("sh"))
-      .where(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bk = bandKeysFromShingleFrame(sh, k, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Caches.keep("minhash.nearDupPairs",
+      df.select(col(idCol).cast("long").as("id"),
+          Dedup.shingles(col(textCol), n).as("sh"))
+        .where(size(col("sh")) > 0))
+    val bk = Caches.keep("minhash.nearDupPairs", bandKeysFromShingleFrame(sh, k, bands))
     val cand = selfJoinBuckets(bk)
     val out = cand
       .join(sh.select(col("id").as("a"), col("sh").as("sha")), "a")
@@ -127,7 +126,6 @@ object MinHashLSH {
         (size(col("sha")) + size(col("shb")) - col("inter")))
       .where(col("jaccard") >= threshold)
       .select(col("a"), col("b"), col("inter"), round(col("jaccard"), 6).as("jaccard"))
-    graft.core.Caches.retain("minhash.nearDupPairs", sh, bk)
     out
   }
 
@@ -143,13 +141,12 @@ object MinHashLSH {
     */
   def estimateAudit(df: DataFrame, idCol: String, textCol: String,
                     n: Int = 3, k: Int = 16, bands: Int = 4): DataFrame = {
-    val sh = df.select(col(idCol).cast("long").as("id"),
-        Dedup.shingles(col(textCol), n).as("sh"))
-      .where(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sg = sh.select(col("id"), col("sh"),
-        signatureFromShingles(col("sh"), k).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Caches.keep("minhash.estimateAudit",
+      df.select(col(idCol).cast("long").as("id"),
+          Dedup.shingles(col(textCol), n).as("sh"))
+        .where(size(col("sh")) > 0))
+    val sg = Caches.keep("minhash.estimateAudit", sh.select(col("id"), col("sh"),
+        signatureFromShingles(col("sh"), k).as("sig")))
     val bk = sg.select(col("id"),
         posexplode(bandKeysFromSig(col("sig"), k, bands)))
       .withColumnRenamed("pos", "band_idx")
@@ -168,7 +165,6 @@ object MinHashLSH {
         round(col("n_eq").cast("double") / k, 6).as("est_jaccard"),
         round(col("inter").cast("double") /
           (size(col("sha")) + size(col("shb")) - col("inter")), 6).as("jaccard"))
-    graft.core.Caches.retain("minhash.estimateAudit", sh, sg)
     out
   }
 

@@ -1,8 +1,8 @@
 package graft.dedup
 
+import graft.core.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.sim.{KMeans, VectorMath => V}
 
@@ -164,8 +164,7 @@ object SemDedup {
     */
   def audit(df: DataFrame, idCol: String, vecCol: String,
             k: Int, theta: Double, cap: Int = 64): DataFrame = {
-    val assigned = assign(df, idCol, vecCol, k)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val assigned = Caches.keep("dedup.semdedup", assign(df, idCol, vecCol, k))
     // headOption: an empty input frame must yield the aggregate row,
     // not throw from the dim probe. Distinguish "no rows" from
     // "first vector has dim 0": only a genuinely empty frame may
@@ -175,9 +174,8 @@ object SemDedup {
     val probe = df.select(size(col(vecCol))).limit(1).collect().headOption
     val isEmpty = probe.isEmpty
     val dim = probe.map(_.getInt(0)).getOrElse(0)
-    val pairs = clusterPairs(
-      if (isEmpty) assigned else capBuckets(assigned, dim, cap))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val pairs = Caches.keep("dedup.semdedup", clusterPairs(
+      if (isEmpty) assigned else capBuckets(assigned, dim, cap)))
     val a1 = assigned.agg(count(lit(1)).as("n_vecs"),
       max(size(col("vec"))).cast("long").as("dim"),
       (count(when(col("cluster") === col("cluster_check"), 1)) ===
@@ -185,7 +183,6 @@ object SemDedup {
     val a2 = pairs.agg(
       coalesce(min(abs(col("cos")) <= lit(1.0 + 1e-9)), lit(true)).as("cos_bounded"))
     val a3 = prunedIds(pairs, theta).agg(count(lit(1)).as("n_pruned"))
-    graft.core.Caches.retain("dedup.semdedup", assigned, pairs)
     a1.crossJoin(a2).crossJoin(a3)
       .select(col("n_vecs"), lit(k.toLong).as("k"), col("dim"),
         col("assign_ok"), col("cos_bounded"),

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Caches
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -75,13 +76,11 @@ object SimHash {
                    maxDist: Int, bits: Int = DefaultBits): DataFrame = {
     // persisted: a self-join would otherwise recompute every fingerprint
     // on both sides (fingerprints are tiny — two longs per doc)
-    val fp = fingerprints(df, idCol, textCol, bits)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fp = Caches.keep("simhash.hammingPairs", fingerprints(df, idCol, textCol, bits))
     val out = fp.as("x").join(fp.as("y"), col("x.id") < col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
       .where(col("hamming") <= maxDist)
-    graft.core.Caches.retain("simhash.hammingPairs", fp)
     out
   }
 
@@ -93,8 +92,7 @@ object SimHash {
   def bandCandidates(df: DataFrame, idCol: String, textCol: String,
                      bits: Int = DefaultBits): DataFrame = {
     val chunks = bits / 8
-    val fp = fingerprints(df, idCol, textCol, bits)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fp = Caches.keep("simhash.bandCandidates", fingerprints(df, idCol, textCol, bits))
     val banded = fp.select(col("id"), col("simhash"), posexplode(
       transform(sequence(lit(0), lit(chunks - 1)),
         c => (floor(col("simhash").cast("double") /
@@ -108,7 +106,6 @@ object SimHash {
       .select(col("x.id").as("a"), col("y.id").as("b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
       .distinct()
-    graft.core.Caches.retain("simhash.bandCandidates", fp)
     out
   }
 

@@ -1,5 +1,6 @@
 package graft.drift
 
+import graft.core.Caches
 import graft.core.OrderStats
 import graft.eval.Metrics
 import org.apache.spark.sql.{Column, DataFrame}
@@ -253,10 +254,9 @@ object Drift {
     * determinism. V is null for a degenerate table (r or c = 1).
     */
   def cramersV(df: DataFrame, colA: String, colB: String): DataFrame = {
-    val ct = df.groupBy(col(colA).as("a"), col(colB).as("b"))
-      .agg(count(lit(1)).as("o"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain(s"drift.cramersV:$colA:$colB", ct)
+    val ct = Caches.keep(s"drift.cramersV:$colA:$colB",
+      df.groupBy(col(colA).as("a"), col(colB).as("b"))
+        .agg(count(lit(1)).as("o")))
     val rowTot = ct.groupBy("a").agg(sum("o").as("ra"))
     val colTot = ct.groupBy("b").agg(sum("o").as("cb"))
     val n = ct.agg(sum("o").as("n"), countDistinct("a").as("r"),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{PrefixScan, Profiler, Quantiles, Stats}
+import graft.core.{Caches, PrefixScan, Profiler, Quantiles, Stats}
 import graft.eval.Metrics
 import graft.features.{FrequencyIndexer, Imputers}
 import graft.score.ZScoreAnomaly
@@ -122,10 +122,8 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
   private[graft] def qZscoreAnomaly(s: SparkSession, dir: String): DataFrame = {
     // pruned input cached across the fit pass, the scoring pass, and
     // steady-state reruns (retention-bounded)
-    val base = par(li(s, dir))
-      .select((Seq("l_orderkey", "l_linenumber") ++ anomalyFeatures).map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q07", base)
+    val base = Caches.keep("entry.q07", par(li(s, dir))
+      .select((Seq("l_orderkey", "l_linenumber") ++ anomalyFeatures).map(col): _*))
     ZScoreAnomaly.detect(base, anomalyFeatures, p = 0.95,
         keep = Seq("l_orderkey", "l_linenumber"))
       .filter(col("is_anomaly"))
@@ -227,9 +225,8 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     // par() BEFORE the persist so both decimal-exact passes run on
     // every core instead of the scan's single row-group partition
     // (r16 honest bench: 3.3 s isolated without it)
-    val df = par(li(s, dir).select((cols :+ "l_returnflag").map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q15", df)
+    val df = Caches.keep("entry.q15",
+      par(li(s, dir).select((cols :+ "l_returnflag").map(col): _*)))
     val model = graft.features.Standardizer.fit(df, cols)
     model.transform(df, suffix = "_z")
       .groupBy(col("l_returnflag"))
@@ -410,16 +407,15 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     // the shuffle map pass — guide §2.4's accidental-shuffle cost), and
     // here that child is the whole two-window battery. Materializing
     // the pre-sort frame makes both passes read one computed result.
-    val out = graft.seq.Rolling.rolling(ev(s, dir), Seq("user_id"),
-        col("event_id"), col("value"), k = 4)
-      .select(col("event_id"), col("user_id"), col("roll_n"),
-        round(col("roll_avg"), 6).as("roll_avg"),
-        round(col("roll_std"), 6).as("roll_std"),
-        round(col("roll_min"), 6).as("roll_min"),
-        round(col("roll_max"), 6).as("roll_max"),
-        round(col("roll_delta"), 6).as("roll_delta"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q66", out)
+    val out = Caches.keep("entry.q66",
+      graft.seq.Rolling.rolling(ev(s, dir), Seq("user_id"),
+          col("event_id"), col("value"), k = 4)
+        .select(col("event_id"), col("user_id"), col("roll_n"),
+          round(col("roll_avg"), 6).as("roll_avg"),
+          round(col("roll_std"), 6).as("roll_std"),
+          round(col("roll_min"), 6).as("roll_min"),
+          round(col("roll_max"), 6).as("roll_max"),
+          round(col("roll_delta"), 6).as("roll_delta")))
     out.orderBy("event_id")
   }
 
@@ -678,8 +674,9 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     val totals = base.groupBy("l_returnflag").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val nTotal = totals.values.sum
+    // not kept: the audit's actions below read it, then it is released
     val sampled = graft.aug.Sampling.seededSample(base, p, seed = 42L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Caches.level)
     val sCounts = sampled.groupBy("l_returnflag").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val nSamp = sCounts.values.sum
@@ -745,14 +742,13 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     val base = par(li(s, dir)).withColumn("features", feats)
       .withColumn("fit_id", col("l_orderkey") * 10 + col("l_linenumber"))
       .select(col("fit_id"), col("features"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Caches.level) // not kept: released once `scored` is built
     val model = graft.score.IsolationForest.fit(
       base, "fit_id", "features", numTrees = 100, maxSamples = 16)
     // cache only the score column — the wide features arrays would
     // dominate the cached bytes
-    val scored = model.transform(base, "features", "if_score")
-      .select(col("if_score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val scored = Caches.keep("entry.q35", model.transform(base, "features", "if_score")
+      .select(col("if_score")))
     // approx quantiles (mergeable sketch, no global sort) — the scale
     // path for thresholds on distributed scores; deterministic
     val qs = scored
@@ -777,7 +773,6 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
       count(lit(1)).as("n"),
       count(when(col("if_score") <= 0 || col("if_score") > 1, 1)).as("bad"),
       count(when(col("if_score") > thr, 1)).as("flagged")).head()
-    graft.core.Caches.retain("entry.q35", scored)
     val (n, bad, flagged) = (a.getLong(0), a.getLong(1), a.getLong(2))
     import s.implicits._
     Seq((n, 4L, bad == 0L, plantedMin > median,
@@ -844,11 +839,9 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
       .withColumn("features", col("embedding").cast("array<double>"))
     val model = graft.score.MlpAE.fit(base, "vec_id", "features",
       hidden = 16, epochs = 60)
-    val scored = model.transform(base, "features", "recon_error")
-      .select(col("vec_id"), col("recon_error"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val scored = Caches.keep("entry.q53", model.transform(base, "features", "recon_error")
+      .select(col("vec_id"), col("recon_error")))
     val thr = Quantiles.exactQuantiles(scored, "recon_error", Seq(0.95)).head
-    graft.core.Caches.retain("entry.q53", scored)
     // SELF-VERIFYING audit (q190/q191 pattern): trained weights aren't
     // SQL-expressible, so the output is the exact row count plus
     // invariants the oracle pins TRUE — MSE scores non-negative, the
@@ -897,11 +890,10 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     val model = graft.score.MlpAE.fitStack(base, "vec_id", "features",
       hidden = Seq(32, 16, 8, 16, 32), activation = "relu",
       epochs = 30, sampleSize = 1024)
-    val scored = model.transform(base, "features", "recon_error")
-      .select(col("vec_id"), col("recon_error"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val scored = Caches.keep("entry.q103",
+      model.transform(base, "features", "recon_error")
+        .select(col("vec_id"), col("recon_error")))
     val thr = Quantiles.exactQuantiles(scored, "recon_error", Seq(0.95)).head
-    graft.core.Caches.retain("entry.q103", scored)
     // same self-verifying audit as q53 (see mlpAudit): deep relu stack
     // must beat its own init after 30 epochs, scores non-negative, p95
     // flag fraction in band — the oracle pins every boolean TRUE
@@ -948,18 +940,18 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     // reference would triple the text scans. The content hash is
     // computed ONCE here and passed into both dedup operators as a
     // column ref — three hash walks become one.
-    val kept = stats.where(passAll).select(col("doc_id"), col("text"),
-        TextOps.strHash(col("text")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val kept = Caches.keep("entry.q102",
+      stats.where(passAll).select(col("doc_id"), col("text"),
+          TextOps.strHash(col("text")).as("h")))
     val preHashed: Column => Column = _ => col("h")
     val corpus = kept.where(col("doc_id") % 5 < 4)
     val batch = kept.where(col("doc_id") % 5 === 4)
-    val merged = graft.dedup.Dedup.dropExactDups(corpus, "doc_id", "text", preHashed)
-      .unionByName(
-        graft.dedup.Dedup.deltaDedup(batch, corpus, "doc_id", "text", preHashed))
-      .drop("h")
-      .where(col("doc_id") >= 20)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val merged = Caches.keep("entry.q102",
+      graft.dedup.Dedup.dropExactDups(corpus, "doc_id", "text", preHashed)
+        .unionByName(
+          graft.dedup.Dedup.deltaDedup(batch, corpus, "doc_id", "text", preHashed))
+        .drop("h")
+        .where(col("doc_id") >= 20))
     val cont = graft.text.Decontam.contamination(
       merged, d.where(col("doc_id") < 20), "doc_id", "text", n = 3)
     val cleanIds = cont.where(col("n_contaminated") * 2 <= col("n_shingles"))
@@ -969,7 +961,6 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
       Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
     val weighted = split.select(col("split"), col("doc_id"),
       TextOps.bpeTokenCount(col("text")).as("tokens"))
-    graft.core.Caches.retain("entry.q102", kept, merged)
     graft.seq.Packing.packStatsByGroup(weighted, "split", "doc_id", "tokens",
         budget = 512L)
       .withColumnRenamed("group", "split")
@@ -1107,9 +1098,8 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     val cols = lineitemNumerics
     // pruned input cached across the stats pass, the scoring pass, and
     // steady-state reruns (retention-bounded)
-    val df = par(li(s, dir))
-      .select((Seq("l_orderkey", "l_linenumber") ++ cols).map(col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val df = Caches.keep("entry.q39", par(li(s, dir))
+      .select((Seq("l_orderkey", "l_linenumber") ++ cols).map(col): _*))
     val aggs = cols.flatMap { c =>
       val d = col(c).cast(DoubleType)
       Seq(Stats.dmean(d).as(s"${c}__mu"), Stats.dvarPop(d).as(s"${c}__var"))
@@ -1119,13 +1109,11 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     val vars = cols.indices.map(i => r.getDouble(2 * i + 1))
     // cache only the report columns — caching the 16-col frame would
     // multiply the cached bytes for nothing
-    val scored = df.withColumn("score",
+    val scored = Caches.keep("entry.q39", df.withColumn("score",
         graft.score.ReconstructionError.varNormalizedMaeCols(
           cols.map(col), mus, vars))
-      .select(col("l_orderkey"), col("l_linenumber"), col("score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("l_orderkey"), col("l_linenumber"), col("score")))
     val thr = Quantiles.exactQuantiles(scored, "score", Seq(0.95)).head
-    graft.core.Caches.retain("entry.q39", df, scored)
     scored.where(col("score") > thr)
       .select(col("l_orderkey"), col("l_linenumber"),
         round(col("score"), 6).as("recon_mae"))
@@ -1144,14 +1132,12 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     // persist before the final orderBy (the q66 fix): the window
     // battery + per-sequence scoring otherwise run twice (range-
     // exchange sampling pass + shuffle pass)
-    val out = graft.seq.Sequencer
+    val out = Caches.keep("entry.q40", graft.seq.Sequencer
       .slidingSequences(e, Seq("user_id"), seqOrder, col("value"), seqT)
       .select(col("user_id"), col("row_id"),
         round(graft.score.ReconstructionError.seqVarNormalizedMae(
           transform(col("seq"), v => array(v)), Seq(mu), Seq(vr)), 6)
-          .as("seq_recon_mae"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q40", out)
+          .as("seq_recon_mae")))
     out.orderBy("user_id", "row_id")
   }
 
@@ -1164,10 +1150,9 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     // persisted: the pipeline fit runs one job per stage kind (fills,
     // two label tables, z-params) plus the final query — five scans of
     // the same projection without it
-    val base = par(li(s, dir)).withColumn("qty_n",
+    val base = Caches.keep("entry.q41", par(li(s, dir)).withColumn("qty_n",
       when(col("l_orderkey") % 7 === 0, lit(null).cast(DoubleType))
-        .otherwise(col("l_quantity").cast(DoubleType)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .otherwise(col("l_quantity").cast(DoubleType))))
     val spec = FeaturePipeline.Spec(
       imputeCols = Seq("qty_n"),
       imputeStrategy = graft.features.Imputers.Mean,
@@ -1180,7 +1165,6 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
         round(Stats.dsum(aggregate(col("features"), lit(0.0), (a, x) => a + x)), 4)
           .as("feat_checksum"))
       .orderBy("l_returnflag")
-    graft.core.Caches.retain("entry.q41", base)
     out
   }
 
@@ -1215,17 +1199,14 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     */
   private[graft] def qIvfAnn(s: SparkSession, dir: String): DataFrame = {
     val e = em(s, dir)
-    val ivf = graft.sim.Ann.ivfTopK(e,
+    val ivf = Caches.keep("entry.q45", graft.sim.Ann.ivfTopK(e,
         "vec_id", "embedding", k = 3, nCells = 16, nprobe = 8,
-        queryPred = col("id") < 100)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        queryPred = col("id") < 100))
     // persisted: the exact baseline feeds TWO count actions (nTrue and
     // the semi-join hit count) — unpersisted, the brute-force rerank
     // pass ran twice per rep (r16)
-    val brute = graft.sim.Ann.cosineTopK(e,
-        "vec_id", "embedding", k = 3, queryPred = col("id") < 100)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q45.brute", brute)
+    val brute = Caches.keep("entry.q45.brute", graft.sim.Ann.cosineTopK(e,
+        "vec_id", "embedding", k = 3, queryPred = col("id") < 100))
     val nTrue = brute.count()
     val nHit = brute.select("a", "b")
       .join(ivf.select("a", "b"), Seq("a", "b"), "left_semi").count()
@@ -1233,7 +1214,6 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     val badCos = ivf.agg(count(when(
       col("cos") < lit(-1.0 - 1e-9) || col("cos") > lit(1.0 + 1e-9), 1)))
       .head().getLong(0)
-    graft.core.Caches.retain("entry.q45", ivf)
     val nQueries = e.where(col("vec_id") < 100).count()
     import s.implicits._
     Seq((nQueries, 3L, recall >= 0.75, badCos == 0L))
@@ -1351,17 +1331,15 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     // persisted: the sliding-window frame (scan + window shuffle) feeds
     // BOTH the fit-pool TakeOrdered and the scoring pass — without the
     // cache the whole window computation runs twice (q35/q39 pattern)
-    val seqs = graft.seq.Sequencer
+    val seqs = Caches.keep("entry.q44", graft.seq.Sequencer
       .slidingSequences(ev(s, dir), Seq("user_id"), seqOrder, col("value"), seqT)
       .withColumn("features", col("seq").cast("array<double>"))
       .withColumn("seq_key",
         col("user_id").cast("long") * 1000000L + col("row_id"))
-      .select(col("seq_key"), col("features"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("seq_key"), col("features")))
     val m2 = graft.score.LinearAE.fit(seqs, "seq_key", "features", k = 2)
     val m1 = new graft.score.LinearAE.Model(m2.mean, m2.components.take(1))
     val m0 = new graft.score.LinearAE.Model(m2.mean, Array.empty)
-    graft.core.Caches.retain("entry.q44", seqs)
     val scored = m2.transform(
       m1.transform(m0.transform(seqs, "features", "err0"), "features", "err1"),
       "features", "err2")
@@ -1609,9 +1587,8 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
         StructField("lang", StringType), StructField("note", StringType)))),
       StructField("words", ArrayType(StringType)),
       StructField("nc", LongType)))
-    val p = payload.withColumn("r", from_json(col("payload"), sch))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q235", p)
+    val p = Caches.keep("entry.q235",
+      payload.withColumn("r", from_json(col("payload"), sch)))
     val a = p.agg(
       count(when(col("r.id") === col("doc_id") &&
         col("r.meta.lang") === col("lang") &&
@@ -1638,10 +1615,9 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     */
   private[graft] def qWinnowing(s: SparkSession, dir: String): DataFrame = {
     val d = par(doc(s, dir))
-    val fp = graft.dedup.Winnowing.fingerprints(d, "doc_id", "text",
-        k = 4, w = 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q236", fp)
+    val fp = Caches.keep("entry.q236",
+      graft.dedup.Winnowing.fingerprints(d, "doc_id", "text",
+          k = 4, w = 4))
     val st = fp.agg(countDistinct(col("doc_id")).as("corpus_docs"),
       count(lit(1)).as("corpus_fps"))
     val pairs = fp.as("x").join(fp.as("y"),
@@ -1668,12 +1644,10 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     * `levenshtein` ≡ Spark's, q129-established).
     */
   private[graft] def qBlockingQuality(s: SparkSession, dir: String): DataFrame = {
-    val c = par(Tables.load(s, dir, "customer")
+    val c = Caches.keep("entry.q237", par(Tables.load(s, dir, "customer")
         .where(col("c_custkey") < 1500))
       .select(col("c_custkey").as("id"), col("c_name").as("name"),
-        substring(col("c_name"), 1, 16).as("blk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q237", c)
+        substring(col("c_name"), 1, 16).as("blk")))
     val m = c.count()
     val a = c.as("x").crossJoin(c.as("y")) // labeled all-pairs baseline
       .where(col("x.id") < col("y.id"))
@@ -1708,15 +1682,14 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     */
   private[graft] def qCompressionSignal(s: SparkSession, dir: String): DataFrame = {
     import graft.text.Compress
-    val d = par(doc(s, dir)).select(col("doc_id"), col("source"), col("text"))
-      .withColumn("raw_len", length(col("text")).cast("long"))
-      .withColumn("c_len", Compress.deflatedLenCol(col("text")).cast("long"))
-      .withColumn("c_dup",
-        Compress.deflatedLenCol(concat(col("text"), col("text"))).cast("long"))
-      .withColumn("c_rev",
-        Compress.deflatedLenCol(concat(col("text"), reverse(col("text")))).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q238", d)
+    val d = Caches.keep("entry.q238",
+      par(doc(s, dir)).select(col("doc_id"), col("source"), col("text"))
+        .withColumn("raw_len", length(col("text")).cast("long"))
+        .withColumn("c_len", Compress.deflatedLenCol(col("text")).cast("long"))
+        .withColumn("c_dup",
+          Compress.deflatedLenCol(concat(col("text"), col("text"))).cast("long"))
+        .withColumn("c_rev",
+          Compress.deflatedLenCol(concat(col("text"), reverse(col("text")))).cast("long")))
     val a = d.agg(
       count(when(col("c_len") > 0 &&
         col("c_len") <= col("raw_len") + col("raw_len") / 1000 + 64, 1)).as("nb"),
@@ -1793,15 +1766,13 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     */
   private[graft] def qLshQuality(s: SparkSession, dir: String): DataFrame = {
     val d = par(doc(s, dir))
-    val truth = graft.dedup.Dedup.jaccardPairs(d, "doc_id", "text",
-        n = 3, threshold = 0.5)
-      .select(col("a"), col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q241", truth)
-    val cand = graft.dedup.MinHashLSH.candidatePairs(d, "doc_id", "text",
-        n = 3, k = 16, bands = 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q241", cand)
+    val truth = Caches.keep("entry.q241",
+      graft.dedup.Dedup.jaccardPairs(d, "doc_id", "text",
+          n = 3, threshold = 0.5)
+        .select(col("a"), col("b")))
+    val cand = Caches.keep("entry.q241",
+      graft.dedup.MinHashLSH.candidatePairs(d, "doc_id", "text",
+          n = 3, k = 16, bands = 4))
     val nTruth = truth.count()
     val nCand = cand.count()
     val nFound = cand.join(truth, Seq("a", "b"), "left_semi").count()
@@ -1869,10 +1840,8 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
       .where(col("n_tok") > 0)
       .withColumn("score", expr("u * 1000000 div n_tok"))
       .withColumn("pick", col("score") * lit(8589934592L) - col("doc_id"))
-    val rooted = scored.join(comp, Seq("doc_id"), "left")
-      .withColumn("cluster", coalesce(col("component"), col("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q243", rooted)
+    val rooted = Caches.keep("entry.q243", scored.join(comp, Seq("doc_id"), "left")
+      .withColumn("cluster", coalesce(col("component"), col("doc_id"))))
     val best = rooted.groupBy("cluster").agg(
       count(lit(1)).as("n_members"),
       sum("n_tok").as("total_tokens"),
@@ -1906,13 +1875,11 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     // set elements: distinct 3-gram shingles of the even/odd halves
     // (the token vocabulary is only ~31 words on this corpus; shingles
     // are the cardinality the sketch exists for)
-    val tok = par(doc(s, dir))
+    val tok = Caches.keep("entry.q244", par(doc(s, dir))
       .select((col("doc_id") % 2).as("half"),
         explode(graft.dedup.Dedup.shingles(col("text"), 3)).as("w"))
       .distinct()
-      .withColumn("h", TextOps.strHash(col("w")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q244", tok)
+      .withColumn("h", TextOps.strHash(col("w"))))
     // per-half k smallest hashes: two shingle-vocab-sized partitions
     // (bounded by vocabulary, not corpus — the BPE-trainer class)
     val kth = tok.withColumn("rk", row_number().over(
@@ -1963,12 +1930,11 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     val o = Tables.load(s, dir, "orders")
     val c = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val seg = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment").as("segment"))
-      .agg(count(when(col("o_orderstatus") =!= "F", 1)).as("n_good"),
-        count(when(col("o_orderstatus") === "F", 1)).as("n_bad"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q245", seg)
+    val seg = Caches.keep("entry.q245",
+      o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
+        .groupBy(col("c_mktsegment").as("segment"))
+        .agg(count(when(col("o_orderstatus") =!= "F", 1)).as("n_good"),
+          count(when(col("o_orderstatus") === "F", 1)).as("n_bad")))
     val t = seg.agg(sum("n_good"), sum("n_bad")).head()
     val (g, b) = (t.getLong(0), t.getLong(1))
     val woe = round(log(((col("n_good") + lit(0.5)) * lit(b.toDouble)) /
@@ -1998,16 +1964,12 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
       .join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("ok"), col("p_brand").as("b"))
       .distinct()
-    val e = ob.toDF("ok", "b1")
+    val e = Caches.keep("entry.q246", ob.toDF("ok", "b1")
       .join(ob.toDF("ok2", "b2"), col("ok") === col("ok2") && col("b1") < col("b2"))
       .groupBy("b1", "b2").agg(count(lit(1)).as("np"))
-      .where(col("np") >= 5).select("b1", "b2")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q246", e)
-    val ed = e.select(col("b1").as("src"), col("b2").as("dst"))
-      .union(e.select(col("b2").as("src"), col("b1").as("dst")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q246", ed)
+      .where(col("np") >= 5).select("b1", "b2"))
+    val ed = Caches.keep("entry.q246", e.select(col("b1").as("src"), col("b2").as("dst"))
+      .union(e.select(col("b2").as("src"), col("b1").as("dst"))))
     val kk = 3
     var surv = ed.select(col("src").as("v")).distinct()
     var prevCount = -1L
@@ -2045,12 +2007,11 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     */
   private[graft] def qAssocRules(s: SparkSession, dir: String): DataFrame = {
     val p = Tables.load(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-    val ob = li(s, dir).select(col("l_orderkey"), col("l_partkey"))
-      .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey").as("ok"), col("p_brand").as("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q247", ob)
+    val ob = Caches.keep("entry.q247",
+      li(s, dir).select(col("l_orderkey"), col("l_partkey"))
+        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
+        .select(col("l_orderkey").as("ok"), col("p_brand").as("b"))
+        .distinct())
     val nOrders = ob.select("ok").distinct().count()
     // NOT persisted (r16 A/B: 1.70 -> 1.78 s with supp cached): the two
     // join builds' aggregate subtrees reuse one exchange already
@@ -2095,10 +2056,9 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     * tie table.
     */
   private[graft] def qOutlierEnsemble(s: SparkSession, dir: String): DataFrame = {
-    val base = par(li(s, dir)).select(col("l_orderkey"), col("l_linenumber"),
-        col("l_extendedprice").cast("double").as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q248", base)
+    val base = Caches.keep("entry.q248",
+      par(li(s, dir)).select(col("l_orderkey"), col("l_linenumber"),
+          col("l_extendedprice").cast("double").as("x")))
     val stRow = base.agg(Stats.dmean(col("x")).as("mu"),
       Stats.dstddevSamp(col("x")).as("sd")).head()
     val (mu, sd) = (stRow.getDouble(0), stRow.getDouble(1))
@@ -2106,13 +2066,11 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     val (q1v, medv, q3v) = (qs(0), qs(1), qs(2))
     val dev = base.withColumn("d", abs(col("x") - lit(medv)))
     val madv = graft.core.OrderStats.quantilesOf(dev, "d", Seq(0.5)).head
-    val xt = base.groupBy("x").agg(count(lit(1)).as("__xn"))
+    val xt = Caches.keep("entry.q248", base.groupBy("x").agg(count(lit(1)).as("__xn"))
       .withColumn("s1", abs((col("x") - lit(mu)) / lit(sd)))
       .withColumn("s2", abs(lit(0.6745) * (col("x") - lit(medv)) / lit(madv)))
       .withColumn("s3", greatest(lit(0.0), col("x") - lit(q3v),
-        lit(q1v) - col("x")) / (lit(q3v) - lit(q1v)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q248", xt)
+        lit(q1v) - col("x")) / (lit(q3v) - lit(q1v))))
     var perX = xt
     Seq("s1" -> "r1", "s2" -> "r2", "s3" -> "r3").foreach { case (sc, rc) =>
       val tie = xt.groupBy(sc).agg(sum("__xn").as("__ties"))
@@ -2151,10 +2109,9 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
   private[graft] def qCurationV2(s: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
     val d = par(doc(s, dir))
-    val fp = graft.dedup.Winnowing.fingerprints(d, "doc_id", "text",
-        k = 4, w = 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q249", fp)
+    val fp = Caches.keep("entry.q249",
+      graft.dedup.Winnowing.fingerprints(d, "doc_id", "text",
+          k = 4, w = 4))
     val edges = fp.as("x").join(fp.as("y"),
         col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
@@ -2170,10 +2127,8 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
       .where(col("n_tok") > 0)
       .withColumn("score", expr("u * 1000000 div n_tok"))
       .withColumn("pick", col("score") * lit(8589934592L) - col("doc_id"))
-    val rooted = scored.join(comp, Seq("doc_id"), "left")
-      .withColumn("cluster", coalesce(col("component"), col("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q249", rooted)
+    val rooted = Caches.keep("entry.q249", scored.join(comp, Seq("doc_id"), "left")
+      .withColumn("cluster", coalesce(col("component"), col("doc_id"))))
     val best = rooted.groupBy("cluster").agg(max("pick").as("best_pick"))
     val labeled = rooted.join(best, "cluster")
       .withColumn("kept", col("pick") === col("best_pick"))
@@ -2200,20 +2155,16 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
   private[graft] def qFilteredAnn(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.sim.VectorMath
-    val e = Tables.load(s, dir, "embeddings")
+    val e = Caches.keep("entry.q250", Tables.load(s, dir, "embeddings")
       .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"),
         col("label"))
-      .withColumn("n2", VectorMath.norm2(col("vec")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q250", e)
-    val pairs = e.as("q").where(col("q.id") < 50)
+      .withColumn("n2", VectorMath.norm2(col("vec"))))
+    val pairs = Caches.keep("entry.q250", e.as("q").where(col("q.id") < 50)
       .join(e.as("t"), col("q.id") =!= col("t.id"))
       .select(col("q.id").as("qid"), col("t.id").as("tid"),
         (col("t.label") % 4 === 1).as("ok"),
         (VectorMath.dot(col("q.vec"), col("t.vec")) /
-          (sqrt(col("q.n2")) * sqrt(col("t.n2")))).as("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q250", pairs)
+          (sqrt(col("q.n2")) * sqrt(col("t.n2")))).as("cos")))
     val wq = Window.partitionBy("qid").orderBy(desc("cos"), asc("tid"))
     val exact = pairs.where(col("ok"))
       .withColumn("rk", row_number().over(wq)).where(col("rk") <= 3)
@@ -2250,11 +2201,10 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
   private[graft] def qIntrinsicDim(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.sim.VectorMath
-    val v = Tables.load(s, dir, "embeddings").where(col("vec_id") < 300)
-      .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"))
-      .withColumn("n2", VectorMath.norm2(col("vec")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q251", v)
+    val v = Caches.keep("entry.q251",
+      Tables.load(s, dir, "embeddings").where(col("vec_id") < 300)
+        .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"))
+        .withColumn("n2", VectorMath.norm2(col("vec"))))
     val nn = v.as("x").join(v.as("y"), col("x.id") =!= col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
         (lit(1.0) - VectorMath.dot(col("x.vec"), col("y.vec")) /
@@ -2291,11 +2241,10 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     */
   private[graft] def qKCenter(s: SparkSession, dir: String): DataFrame = {
     import graft.sim.VectorMath
-    val v = Tables.load(s, dir, "embeddings").where(col("vec_id") < 200)
-      .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"))
-      .withColumn("n2", VectorMath.norm2(col("vec")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q252", v)
+    val v = Caches.keep("entry.q252",
+      Tables.load(s, dir, "embeddings").where(col("vec_id") < 200)
+        .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"))
+        .withColumn("n2", VectorMath.norm2(col("vec"))))
     def distTo(cvec: Seq[Float], cn2: Double) =
       lit(1.0) - VectorMath.dot(col("vec"), typedlit(cvec)) /
         (sqrt(col("n2")) * lit(math.sqrt(cn2)))
@@ -2333,34 +2282,27 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     */
   private[graft] def qDedupFunnel(s: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
-    val d = par(doc(s, dir)).select(col("doc_id"), col("text"),
-        size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q253", d)
+    val d = Caches.keep("entry.q253", par(doc(s, dir)).select(col("doc_id"), col("text"),
+        size(TextOps.tokens(col("text"))).cast("long").as("n_tok")))
     def stats(df: DataFrame): (Long, Long) = {
       val r = df.agg(count(lit(1)), sum("n_tok")).head()
       (r.getLong(0), r.getLong(1))
     }
     val (n0, _) = stats(d)
-    val surv1 = d.join(
+    val surv1 = Caches.keep("entry.q253", d.join(
         d.groupBy("text").agg(min("doc_id").as("doc_id")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q253", surv1)
+        Seq("doc_id"), "left_semi"))
     val (n1, t1) = stats(surv1)
     val comp2 = graft.dedup.Components.connectedComponents(
         graft.dedup.Dedup.jaccardPairs(surv1, "doc_id", "text", 3, 0.5),
         "a", "b")
       .withColumnRenamed("id", "doc_id")
-    val surv2 = surv1.join(comp2, Seq("doc_id"), "left")
+    val surv2 = Caches.keep("entry.q253", surv1.join(comp2, Seq("doc_id"), "left")
       .where(col("component").isNull || col("component") === col("doc_id"))
-      .drop("component")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q253", surv2)
+      .drop("component"))
     val (n2, t2) = stats(surv2)
-    val fp = graft.dedup.Winnowing.fingerprints(surv2, "doc_id", "text", 4, 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q253", fp)
+    val fp = Caches.keep("entry.q253",
+      graft.dedup.Winnowing.fingerprints(surv2, "doc_id", "text", 4, 4))
     val pairs3 = fp.as("x").join(fp.as("y"),
         col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
@@ -2461,13 +2403,11 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     // the bounded-frame rank window coalesces to ONE partition — the
     // pair stage must re-spread or the BNLJ runs on a single task
     // (the q237 lesson, reintroduced by the window)
-    val c = par(Tables.load(s, dir, "customer")
+    val c = Caches.keep("entry.q256", par(Tables.load(s, dir, "customer")
         .where(col("c_custkey") < 1500)
         .select(col("c_custkey").as("id"), col("c_name").as("name"))
         .withColumn("rk", row_number().over(
-          Window.orderBy(asc("name"), asc("id"))))) // bounded 1500-row frame
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q256", c)
+          Window.orderBy(asc("name"), asc("id")))))) // bounded 1500-row frame
     val m = c.count()
     val a = c.as("x").crossJoin(c.as("y")) // labeled all-pairs baseline
       .where(col("x.id") < col("y.id"))
@@ -2502,19 +2442,18 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     val o = Tables.load(s, dir, "orders")
     val c = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_acctbal"))
-    val d = o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .select(col("o_orderkey"),
-        col("o_totalprice").cast("double").as("y"),
-        col("c_acctbal").cast("double").as("x"))
-      .withColumn("grp", when(graft.aug.Sampling.keyBucket(
-        col("o_orderkey"), 1234L) < 500000, "A").otherwise("B"))
-      // par() BEFORE the persist: the broadcast join preserves the
-      // scan's single row-group partition, so without it every decimal
-      // pass over the cache (cov/var fit + grouped CUPED aggregates)
-      // runs single-core (r16 second pass)
-      .transform(par)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q257", d)
+    val d = Caches.keep("entry.q257",
+      o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
+        .select(col("o_orderkey"),
+          col("o_totalprice").cast("double").as("y"),
+          col("c_acctbal").cast("double").as("x"))
+        .withColumn("grp", when(graft.aug.Sampling.keyBucket(
+          col("o_orderkey"), 1234L) < 500000, "A").otherwise("B"))
+        // par() BEFORE the persist: the broadcast join preserves the
+        // scan's single row-group partition, so without it every decimal
+        // pass over the cache (cov/var fit + grouped CUPED aggregates)
+        // runs single-core (r16 second pass)
+        .transform(par))
     val st = d.agg(Stats.dcovSamp(col("x"), col("y")).as("cov"),
       Stats.dvarSamp(col("x")).as("vx"),
       Stats.dmean(col("x")).as("mx")).head()
@@ -2600,13 +2539,11 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     */
   private[graft] def qRatioDelta(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.load(s, dir, "orders")
-    val per = o.groupBy("o_custkey")
+    val per = Caches.keep("entry.q260", o.groupBy("o_custkey")
       .agg(count(lit(1)).cast("double").as("x"),
         Stats.dsum(col("o_totalprice")).as("y")) // 2-dp: decimal-exact
       .withColumn("grp", when(graft.aug.Sampling.keyBucket(
-        col("o_custkey"), 777L) < 500000, "A").otherwise("B"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q260", per)
+        col("o_custkey"), 777L) < 500000, "A").otherwise("B")))
     val st = per.groupBy("grp").agg(
         count(lit(1)).as("n"),
         Stats.dmean(col("x")).as("mx"), Stats.dmean(col("y")).as("my"),
@@ -2661,11 +2598,9 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
       n = 3, threshold = 0.5, maxShingleDocFreq = 256L)
     val comp = graft.dedup.Components.connectedComponents(pairs, "a", "b")
       .withColumnRenamed("id", "doc_id")
-    val rooted = d.select(col("doc_id"))
+    val rooted = Caches.keep("entry.q222", d.select(col("doc_id"))
       .join(comp, Seq("doc_id"), "left")
-      .withColumn("root", coalesce(col("component"), col("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q222", rooted)
+      .withColumn("root", coalesce(col("component"), col("doc_id"))))
     val split = graft.aug.Sampling.splitAssign(rooted, "root",
       Seq("train" -> 0.9, "test" -> 0.1))
     val noLeak = split.groupBy("root")
@@ -2738,9 +2673,8 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
   private[graft] def qDomainWeights(s: SparkSession, dir: String): DataFrame = {
     val d = doc(s, dir)
     val sc = graft.text.BigramLm.score(d, "doc_id", "text")
-    val wl = d.select(col("doc_id").as("id"), col("lang")).join(sc, "id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q225", wl)
+    val wl = Caches.keep("entry.q225",
+      d.select(col("doc_id").as("id"), col("lang")).join(sc, "id"))
     val per = wl.groupBy("lang").agg(count(lit(1)).as("n_docs"),
       (Stats.dsum(col("avg_logp")) / count(lit(1))).as("m"))
     val all = wl.agg(
@@ -2774,27 +2708,24 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
   private[graft] def qMatryoshka(s: SparkSession, dir: String): DataFrame = {
     graft.sim.GraftFunctions.register(s)
     import graft.sim.GraftFunctions.{dot, norm2}
-    val v = em(s, dir).select(col("vec_id").cast("long").as("id"),
-        col("embedding").as("vec"))
-      .withColumn("v16", slice(col("vec"), 1, 16))
-      .withColumn("n2", norm2(col("vec")))
-      .withColumn("n2_16", norm2(col("v16")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q226", v)
+    val v = Caches.keep("entry.q226",
+      em(s, dir).select(col("vec_id").cast("long").as("id"),
+          col("embedding").as("vec"))
+        .withColumn("v16", slice(col("vec"), 1, 16))
+        .withColumn("n2", norm2(col("vec")))
+        .withColumn("n2_16", norm2(col("v16"))))
     val q = v.where(col("id") < 30).select(col("id").as("a"),
       col("vec").as("qv"), col("v16").as("qv16"),
       col("n2").as("qn2"), col("n2_16").as("qn2_16"))
     val t = v.where(col("id") >= 30 && col("id") < 130)
       .select(col("id").as("b"), col("vec").as("tv"), col("v16").as("tv16"),
         col("n2").as("tn2"), col("n2_16").as("tn2_16"))
-    val pairs = q.join(t, col("a") =!= col("b"))
+    val pairs = Caches.keep("entry.q226", q.join(t, col("a") =!= col("b"))
       .select(col("a"), col("b"),
         round(dot(col("qv"), col("tv")) /
           (sqrt(col("qn2")) * sqrt(col("tn2"))), 6).as("c64"),
         round(dot(col("qv16"), col("tv16")) /
-          (sqrt(col("qn2_16")) * sqrt(col("tn2_16"))), 6).as("c16"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q226", pairs)
+          (sqrt(col("qn2_16")) * sqrt(col("tn2_16"))), 6).as("c16")))
     val n = count(lit(1)).cast("double")
     val stats = pairs.groupBy("a").agg(
       count(lit(1)).as("n_targets"),
@@ -2882,15 +2813,13 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     // tokens hoisted into their own projection: referenced inside the
     // transform lambda they would be re-split once per n-gram position
     // (the documented HOF shared-subtree inlining trap)
-    val grams = d.select(col("doc_id"), col("source"),
+    val grams = Caches.keep("entry.q231", d.select(col("doc_id"), col("source"),
         TextOps.tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("source"),
         explode(array_distinct(when(size(col("toks")) >= 5,
           transform(sequence(lit(1), size(col("toks")) - 4),
             i => array_join(slice(col("toks"), i, lit(5)), " ")))
-          .otherwise(array().cast("array<string>")))).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q231", grams)
+          .otherwise(array().cast("array<string>")))).as("g")))
     val firstOwner = grams.groupBy("g").agg(min("doc_id").as("first_doc"))
     val perDoc = grams.join(firstOwner, "g")
       .groupBy("doc_id", "source")

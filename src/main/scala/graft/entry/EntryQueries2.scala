@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{PrefixScan, Profiler, Quantiles, Stats}
+import graft.core.{Caches, PrefixScan, Profiler, Quantiles, Stats}
 import graft.eval.Metrics
 import graft.features.{FrequencyIndexer, Imputers}
 import graft.score.ZScoreAnomaly
@@ -461,13 +461,12 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     // persist before the final orderBy: the range exchange's sampling
     // job otherwise re-runs the window+aggregate fit a second time
     // (same fix as q66; the per-user fit table is tiny)
-    val fit = graft.seq.Trend.linearFit(e, Seq("user_id"), "x", "y")
-      .select(col("user_id"), col("n"),
-        round(col("slope") * lit(3.6e9), 6).as("slope_per_hour"),
-        round(col("intercept"), 6).as("intercept"),
-        round(col("r2"), 6).as("r2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q118", fit)
+    val fit = Caches.keep("entry.q118",
+      graft.seq.Trend.linearFit(e, Seq("user_id"), "x", "y")
+        .select(col("user_id"), col("n"),
+          round(col("slope") * lit(3.6e9), 6).as("slope_per_hour"),
+          round(col("intercept"), 6).as("intercept"),
+          round(col("r2"), 6).as("r2")))
     fit.orderBy("user_id")
   }
 
@@ -680,9 +679,8 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     // par() + persist (the q15 shape): both the moment-fit pass and
     // the d² scoring pass are single decimal-heavy passes that
     // otherwise run in the scan's one row-group task (r16 second pass)
-    val base = par(graft.score.Mahalanobis.completeCase(li(s, dir), cols))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q132", base)
+    val base = Caches.keep("entry.q132",
+      par(graft.score.Mahalanobis.completeCase(li(s, dir), cols)))
     val m = graft.score.Mahalanobis.fit(base, cols)
     base.select(m.score.as("d2"))
       .agg(count(lit(1)).as("n"),
@@ -699,19 +697,15 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * exact selection — no per-group buffers.
     */
   private[graft] def qTheilSen(s: SparkSession, dir: String): DataFrame = {
-    val e = ev(s, dir).select(col("user_id"),
-        expr("ts div 1000").as("us"), col("value").cast("double").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q133", e)
+    val e = Caches.keep("q133", ev(s, dir).select(col("user_id"),
+        expr("ts div 1000").as("us"), col("value").cast("double").as("v")))
     val a = e.select(col("user_id"), col("us").as("us_a"), col("v").as("v_a"))
     val b = e.select(col("user_id"), col("us").as("us_b"), col("v").as("v_b"))
-    val slopes = a.join(b, Seq("user_id"))
+    val slopes = Caches.keep("q133", a.join(b, Seq("user_id"))
       .where(col("us_a") < col("us_b"))
       .select(col("user_id"), ((col("v_b") - col("v_a")) /
         ((col("us_b") - col("us_a")).cast("double") / lit(3600000000.0)))
-        .as("slope"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q133", slopes)
+        .as("slope")))
     val med = graft.core.OrderStats.groupedQuantiles(
       slopes, "user_id", "slope", Seq(0.5))
     val counts = slopes.groupBy("user_id").agg(count(lit(1)).as("n_pairs"))
@@ -806,10 +800,8 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
       expr("((ts div 1000) div 86400000000 + 4) % 7").as("dow"),
       col("value").cast("double").as("v"))
     val prof = e.groupBy("user_id", "dow").agg(Stats.dmean(col("v")).as("mu"))
-    val r = e.join(prof, Seq("user_id", "dow"))
-      .select(col("user_id"), (col("v") - col("mu")).as("resid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q137", r)
+    val r = Caches.keep("q137", e.join(prof, Seq("user_id", "dow"))
+      .select(col("user_id"), (col("v") - col("mu")).as("resid")))
     val sd = r.agg(Stats.dstddevSamp(col("resid"))).head().getDouble(0)
     r.groupBy("user_id")
       .agg(count(lit(1)).as("n"),
@@ -928,11 +920,9 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
       .agg(max(col("day")).as("last_day"), count(lit(1)).as("freq"),
         Stats.dsum(col("tp")).as("monetary"))
     val maxDay = per.agg(max("last_day")).head().getLong(0)
-    val rfm = per.select(col("o_custkey"),
+    val rfm = Caches.keep("q142", per.select(col("o_custkey"),
         (lit(maxDay) - col("last_day")).cast("double").as("recency"),
-        col("freq").cast("double").as("frequency"), col("monetary"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q142", rfm)
+        col("freq").cast("double").as("frequency"), col("monetary")))
     val m = Discretizer.fitEqualFreq(rfm,
       Seq("recency", "frequency", "monetary"), 5)
     m.transform(rfm)
@@ -980,12 +970,10 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     */
   private[graft] def qBasket(s: SparkSession, dir: String): DataFrame = {
     val p = Tables.load(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-    val ob = li(s, dir).select(col("l_orderkey"), col("l_partkey"))
+    val ob = Caches.keep("q144", li(s, dir).select(col("l_orderkey"), col("l_partkey"))
       .join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("ok"), col("p_brand").as("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q144", ob)
+      .distinct())
     val nOrders = ob.select("ok").distinct().count()
     val singles = ob.groupBy("b").agg(count(lit(1)).as("nb"))
     val pairs = ob.toDF("ok", "b1")
@@ -1012,11 +1000,9 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * (order-independent) per the [[Stats]] convention.
     */
   private[graft] def qAcf(s: SparkSession, dir: String): DataFrame = {
-    val daily = ev(s, dir)
+    val daily = Caches.keep("q145", ev(s, dir)
       .select(expr("(ts div 1000) div 86400000000").as("d"))
-      .groupBy("d").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q145", daily)
+      .groupBy("d").agg(count(lit(1)).as("c")))
     val mu = daily.agg(Stats.dmean(col("c").cast("double"))).head().getDouble(0)
     val dev = daily.select(col("d"), (col("c").cast("double") - lit(mu)).as("x"))
     val denom = dev.agg(Stats.dsum(col("x") * col("x"))).head().getDouble(0)
@@ -1036,11 +1022,9 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * the q96 convention (`ln` of identical doubles is libm-identical).
     */
   private[graft] def qJsDiv(s: SparkSession, dir: String): DataFrame = {
-    val base = li(s, dir).where(col("l_returnflag").isin("R", "N"))
+    val base = Caches.keep("q146", li(s, dir).where(col("l_returnflag").isin("R", "N"))
       .select(col("l_returnflag").as("g"),
-        col("l_extendedprice").cast("double").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q146", base)
+        col("l_extendedprice").cast("double").as("v")))
     val edges = Quantiles.exactQuantiles(base, "v",
       (1 until 10).map(_.toDouble / 10)).distinct
     val bin = edges.foldLeft(lit(0)) { (acc, e) =>
@@ -1116,12 +1100,10 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     val maxUs = e.agg(max("us")).head().getLong(0)
     val per = e.groupBy("user_id").agg(min("us").as("first_us"),
       min(when(col("event_type") === "purchase", col("us"))).as("p_us"))
-    val tbl = per
+    val tbl = Caches.keep("q149", per
       .select(expr(s"(coalesce(p_us, ${maxUs}) - first_us) div 86400000000").as("t"),
         when(col("p_us").isNotNull, 1L).otherwise(0L).as("died"))
-      .groupBy("t").agg(sum("died").as("d"), count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q149", tbl)
+      .groupBy("t").agg(sum("died").as("d"), count(lit(1)).as("c")))
     val tot = tbl.agg(sum("c")).head().getLong(0)
     val wPrev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
     val wInc = Window.orderBy("t")
@@ -1187,12 +1169,10 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * decimal rank sums.
     */
   private[graft] def qMannWhitney(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.load(s, dir, "orders")
+    val o = Caches.keep("q152", Tables.load(s, dir, "orders")
       .select(col("o_orderpriority").as("g"),
         col("o_totalprice").cast("double").as("v"))
-      .where(col("g").isin("1-URGENT", "5-LOW"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q152", o)
+      .where(col("g").isin("1-URGENT", "5-LOW")))
     val ranked = graft.core.Rank.avgRank(o, "v", "rk", "q152_rank")
     val ag = ranked.agg(
       count(when(col("g") === "1-URGENT", 1)).cast("double").as("n1"),
@@ -1249,11 +1229,9 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     */
   private[graft] def qSeasonalDecompose(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = ev(s, dir)
+    val daily = Caches.keep("q154", ev(s, dir)
       .select(expr("(ts div 1000) div 86400000000").as("d"))
-      .groupBy("d").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q154", daily)
+      .groupBy("d").agg(count(lit(1)).as("c")))
     val w7 = Window.orderBy("d").rowsBetween(-3, 3)
     val dt = daily
       .withColumn("trend", when(count(lit(1)).over(w7) === 7,
@@ -1285,10 +1263,8 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
       val (scanned, _) = PrefixScan.build(base, s"v$i", Seq("one"), s"q155_$i")
       scanned.select(col("cum_one_below").as("pos"), col(s"v$i"))
     }
-    val t = tabs(0).join(tabs(1), "pos").join(tabs(2), "pos")
-      .withColumn("tg", (col("v0") + col("v1") + col("v2")) / lit(3.0))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q155", t)
+    val t = Caches.keep("q155", tabs(0).join(tabs(1), "pos").join(tabs(2), "pos")
+      .withColumn("tg", (col("v0") + col("v1") + col("v2")) / lit(3.0)))
     val aggs = cols.indices.flatMap { i =>
       val x = col(s"v$i"); val y = col("tg")
       Seq(Stats.dsum(x).as(s"sx_$i"), Stats.dsum(x * x).as(s"sxx_$i"),
@@ -1326,12 +1302,10 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
       .join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("ok"), col("p_brand").as("b"))
       .distinct()
-    val e = ob.toDF("ok", "b1")
+    val e = Caches.keep("q156", ob.toDF("ok", "b1")
       .join(ob.toDF("ok2", "b2"), col("ok") === col("ok2") && col("b1") < col("b2"))
       .groupBy("b1", "b2").agg(count(lit(1)).as("np"))
-      .where(col("np") >= 5).select("b1", "b2")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q156", e)
+      .where(col("np") >= 5).select("b1", "b2"))
     val deg = e.select(col("b1").as("b")).union(e.select(col("b2").as("b")))
       .groupBy("b").agg(count(lit(1)).as("dg"))
     val triples = deg.agg(sum(col("dg") * (col("dg") - 1) / 2).as("triples"))
@@ -1363,7 +1337,7 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     val maxUs = e.agg(max("us")).head().getLong(0)
     val per = e.groupBy("user_id").agg(min("us").as("first_us"),
       min(when(col("event_type") === "purchase", col("us"))).as("p_us"))
-    val tbl = per.select(
+    val tbl = Caches.keep("q157", per.select(
         expr(s"(coalesce(p_us, ${maxUs}) - first_us) div 86400000000").as("t"),
         when(col("p_us").isNotNull, 1L).otherwise(0L).as("died"),
         (col("user_id") % 2 === 0).as("a"))
@@ -1371,9 +1345,7 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
         sum(when(col("a"), col("died")).otherwise(0L)).as("d1"),
         sum("died").as("d"),
         count(when(col("a"), 1)).as("c1"),
-        count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q157", tbl)
+        count(lit(1)).as("c")))
     val tots = tbl.agg(sum("c1"), sum("c")).head()
     val (tot1, tot) = (tots.getLong(0), tots.getLong(1))
     val wPrev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
@@ -1404,11 +1376,9 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     */
   private[graft] def qPettitt(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = ev(s, dir)
+    val daily = Caches.keep("q158", ev(s, dir)
       .select(expr("(ts div 1000) div 86400000000").as("d"))
-      .groupBy("d").agg(count(lit(1)).cast("double").as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q158", daily)
+      .groupBy("d").agg(count(lit(1)).cast("double").as("c")))
     val nN = daily.count()
     val ranked = graft.core.Rank.avgRank(daily, "c", "rk", "q158_rank")
     val wInc = Window.orderBy("d")
@@ -1435,17 +1405,13 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * arithmetic over exact counts.
     */
   private[graft] def qPmi(s: SparkSession, dir: String): DataFrame = {
-    val dw = doc(s, dir).select(col("doc_id"),
+    val dw = Caches.keep("q159", doc(s, dir).select(col("doc_id"),
         explode(expr("filter(split(text, ' '), t -> t != '')")).as("w"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q159", dw)
+      .distinct())
     val nD = dw.select("doc_id").distinct().count()
     // wc feeds TWO broadcast builds (the w1 and w2 joins) — vocab-sized,
     // but unpersisted each build re-aggregates the dw cache (r16)
-    val wc = dw.groupBy("w").agg(count(lit(1)).as("cw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q159", wc)
+    val wc = Caches.keep("q159", dw.groupBy("w").agg(count(lit(1)).as("cw")))
     val pairs = dw.toDF("doc_id", "w1")
       .join(dw.toDF("doc2", "w2"),
         col("doc_id") === col("doc2") && col("w1") < col("w2"))
@@ -1495,9 +1461,8 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     val base = li(s, dir)
       .where(col("l_quantity").isNotNull && !isnan(d))
       .select(col("l_returnflag").as("g"), d.as("v"))
-    val ranked = graft.core.Rank.avgRank(base, "v", "rk", "q161_rank")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q161", ranked)
+    val ranked = Caches.keep("q161",
+      graft.core.Rank.avgRank(base, "v", "rk", "q161_rank"))
     val grp = ranked.groupBy("g").agg(count(lit(1)).as("nj"),
       Stats.dsum(col("rk")).as("rj"))
     // second-level rj²/nj terms are wide doubles whose decimal casts
@@ -1530,9 +1495,7 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     val cols = lineitemNumerics
     // persist the par'd slice: the mean pass and the central-moment
     // pass otherwise each pay the serial cache read + re-shuffle (r16)
-    val t = par(liStats(s, dir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q162", t)
+    val t = Caches.keep("entry.q162", par(liStats(s, dir)))
     def vd(c: String) = {
       val d = col(c).cast("double")
       when(col(c).isNotNull && !isnan(d), d)
@@ -1599,8 +1562,7 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     // the centered-F pass below — without it each pass re-runs the
     // caller's whole upstream (scan + par shuffle + centering join)
     // (r16 second pass; guide §5 caching-for-reuse)
-    val gv = gv0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.centeredAnovaF", gv)
+    val gv = Caches.keep("entry.centeredAnovaF", gv0)
     val mrow = gv.agg(Stats.dsum(col("v")).as("s"), count(col("v")).as("c")).head()
     // round the centering constant to 6 dp: every caller feeds v with
     // ≤6 decimal places, so vc = v − mu stays EXACTLY representable in
@@ -1713,11 +1675,9 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     */
   private[graft] def bm25Frame(s: SparkSession, dir: String,
                         terms: Seq[String]): DataFrame = {
-    val base = doc(s, dir)
+    val base = Caches.keep("q164", doc(s, dir)
       .select(col("doc_id"), expr("split(text, ' ')").as("toks"))
-      .withColumn("dl", size(col("toks")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q164", base)
+      .withColumn("dl", size(col("toks"))))
     val statAggs = Seq(count(lit(1)).as("n_docs"),
       Stats.dsum(col("dl")).as("sdl")) ++
       terms.zipWithIndex.map { case (t, i) =>
@@ -1755,10 +1715,9 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
   private[graft] def qRefIntegrity(s: SparkSession, dir: String): DataFrame = {
     def rel(name: String, child: DataFrame, fk: String,
             parent: DataFrame, pk: String): DataFrame = {
-      val ck = child.select(col(fk).as("k")).where(col("k").isNotNull)
-        .groupBy("k").agg(count(lit(1)).as("cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.core.Caches.retain(s"q165_$name", ck)
+      val ck = Caches.keep(s"q165_$name",
+        child.select(col(fk).as("k")).where(col("k").isNotNull)
+          .groupBy("k").agg(count(lit(1)).as("cnt")))
       val orph = ck.join(parent.select(col(pk).as("k")).distinct(),
         Seq("k"), "left_anti")
       ck.agg(count(lit(1)).as("fk_keys"), sum("cnt").as("child_rows"))
@@ -1792,12 +1751,10 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * the equality tests are wide-sum parity-safe on both engines.
     */
   private[graft] def qKendall(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.load(s, dir, "orders")
+    val daily = Caches.keep("q166", Tables.load(s, dir, "orders")
       .groupBy(expr("unix_timestamp(o_orderdate) div 86400").as("d"))
       .agg(count(lit(1)).cast("double").as("x"),
-        Stats.dsum(col("o_totalprice")).as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q166", daily)
+        Stats.dsum(col("o_totalprice")).as("y")))
     val nDays = daily.count()
     val p = daily.toDF("d1", "x1", "y1")
       .join(daily.toDF("d2", "x2", "y2"), col("d1") < col("d2"))
@@ -1856,13 +1813,11 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
   private[graft] def qItemSim(s: SparkSession, dir: String): DataFrame = {
     val p = Tables.load(s, dir, "part").select(col("p_partkey"), col("p_brand"))
     val o = Tables.load(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-    val cb = li(s, dir).select(col("l_orderkey"), col("l_partkey"))
+    val cb = Caches.keep("q168", li(s, dir).select(col("l_orderkey"), col("l_partkey"))
       .join(o, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .groupBy(col("o_custkey").as("cust"), col("p_brand").as("b"))
-      .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q168", cb)
+      .agg(count(lit(1)).as("n")))
     val norms = cb.groupBy("b").agg(sum(col("n") * col("n")).as("sn2"))
       .select(col("b"), sqrt(col("sn2").cast("double")).as("nrm"))
     val pairs = cb.toDF("cust", "b1", "n1")
@@ -1950,12 +1905,10 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
   private[graft] def qStump(s: SparkSession, dir: String): DataFrame = {
     val ps = (1 to 9).map(_ / 10.0)
     val d = col("l_extendedprice").cast("double")
-    val base = li(s, dir)
+    val base = Caches.keep("q171", li(s, dir)
       .select(when(col("l_returnflag") === "R", 1).otherwise(0).as("y"),
         d.as("v"))
-      .where(col("v").isNotNull && !isnan(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q171", base)
+      .where(col("v").isNotNull && !isnan(col("v"))))
     val ts = graft.core.OrderStats.quantilesOf(base, "v", ps)
     val aggs = Seq(count(lit(1)).as("n"), sum("y").as("pos")) ++
       ts.zipWithIndex.flatMap { case (t, i) =>
@@ -2026,11 +1979,9 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     // because the mean pass (head()) and the centered-moment pass are
     // separate actions that otherwise re-run the scan+shuffle (r16
     // second pass, the centeredAnovaF shape)
-    val base = par(li(s, dir).where(ok)
+    val base = Caches.keep("entry.q173", par(li(s, dir).where(ok)
       .select(vd("l_extendedprice").as("y"), vd("l_quantity").as("x1"),
-        vd("l_discount").as("x2")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q173", base)
+        vd("l_discount").as("x2"))))
     val mrow = base.agg(Stats.dsum(col("y")).as("sy"),
       Stats.dsum(col("x1")).as("s1"), Stats.dsum(col("x2")).as("s2"),
       count(lit(1)).as("c")).head()
@@ -2083,11 +2034,9 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * fan-out bounded by the source count squared.
     */
   private[graft] def qVocabOverlap(s: SparkSession, dir: String): DataFrame = {
-    val sw = doc(s, dir).select(col("source"),
+    val sw = Caches.keep("q175", doc(s, dir).select(col("source"),
         explode(expr("filter(split(text, ' '), t -> t != '')")).as("w"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q175", sw)
+      .distinct())
     val vs = sw.groupBy("source").agg(count(lit(1)).as("v"))
     val pairs = sw.toDF("s1", "w")
       .join(sw.toDF("s2", "w2"), col("w") === col("w2") && col("s1") < col("s2"))
@@ -2256,9 +2205,8 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * aggregates.
     */
   private[graft] def qDegreeHist(s: SparkSession, dir: String): DataFrame = {
-    val edges = li(s, dir).select(col("l_suppkey"), col("l_partkey")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q181", edges)
+    val edges = Caches.keep("q181",
+      li(s, dir).select(col("l_suppkey"), col("l_partkey")).distinct())
     val sup = edges.groupBy("l_suppkey").agg(count(lit(1)).as("deg"))
       .groupBy("deg").agg(count(lit(1)).as("n_nodes"))
       .withColumn("side", lit("supplier"))
@@ -2376,9 +2324,7 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * scalar.
     */
   private[graft] def qClassWeights(s: SparkSession, dir: String): DataFrame = {
-    val c = em(s, dir).groupBy("label").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q188", c)
+    val c = Caches.keep("q188", em(s, dir).groupBy("label").agg(count(lit(1)).as("n")))
     val r0 = c.agg(sum("n"), count(lit(1))).head()
     val total = r0.getLong(0)
     val k = r0.getLong(1)
@@ -2533,9 +2479,7 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     // par(): two decimal-exact passes (group means, centered F) over
     // a one-row-group scan otherwise run single-core (r16); persisted
     // because the mean pass and the centering join each re-read it
-    val basePar = par(base)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q195", basePar)
+    val basePar = Caches.keep("entry.q195", par(base))
     val mn = basePar.groupBy("g")
       .agg(round(Stats.dmean(col("v0")), 6).as("mn"))
     centeredAnovaF(basePar.join(broadcast(mn), "g")
@@ -2659,10 +2603,8 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     // and the bucket pass — without it the whole LM pipeline (explode,
     // two count tables, two joins) runs twice (bench-measured 2.2s→
     // roughly the single-pass cost)
-    val withLang = scored.join(
-        d.select(col("doc_id").cast("long").as("id"), col("lang")), "id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.perplexityBuckets", withLang)
+    val withLang = Caches.keep("entry.perplexityBuckets", scored.join(
+        d.select(col("doc_id").cast("long").as("id"), col("lang")), "id"))
     val edges = graft.core.OrderStats.groupedQuantiles(
       withLang, "lang", "avg_logp", Seq(1.0 / 3, 2.0 / 3))
     val e2 = edges.groupBy("lang").agg(
@@ -2815,10 +2757,10 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     */
   private[graft] def qDedupSweep(s: SparkSession, dir: String): DataFrame = {
     val thetas = Seq(0.3, 0.5, 0.7, 0.8, 0.9)
-    val pairs = graft.dedup.MinHashLSH.nearDupPairs(doc(s, dir), "doc_id",
-        "text", n = 3, k = 16, bands = 4, threshold = 0.0)
-      .select(col("a"), col("b"), col("jaccard"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairs = Caches.keep("entry.dedupSweep",
+      graft.dedup.MinHashLSH.nearDupPairs(doc(s, dir), "doc_id",
+          "text", n = 3, k = 16, bands = 4, threshold = 0.0)
+        .select(col("a"), col("b"), col("jaccard")))
     val sel = pairs
       .select(explode(array(thetas.map(lit(_)): _*)).as("theta"),
         col("a"), col("b"), col("jaccard"))
@@ -2827,7 +2769,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     val nDocs = sel
       .select(col("theta"), explode(array(col("a"), col("b"))).as("id"))
       .groupBy("theta").agg(countDistinct("id").as("n_docs"))
-    graft.core.Caches.retain("entry.dedupSweep", pairs)
     nPairs.join(nDocs, Seq("theta"), "left")
       .select(col("theta"), col("n_pairs"),
         coalesce(col("n_docs"), lit(0L)).as("n_docs"))
@@ -2965,15 +2906,14 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     import graft.sim.{Ann, GraftFunctions}
     import org.apache.spark.sql.expressions.Window
     GraftFunctions.register(s)
-    val v = em(s, dir).select(col("vec_id").cast("long").as("id"),
-        col("embedding").as("vec"), col("label"))
-      .withColumn("n2", GraftFunctions.norm2(col("vec")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bk = v
+    val v = Caches.keep("entry.hardNegatives",
+      em(s, dir).select(col("vec_id").cast("long").as("id"),
+          col("embedding").as("vec"), col("label"))
+        .withColumn("n2", GraftFunctions.norm2(col("vec"))))
+    val bk = Caches.keep("entry.hardNegatives", v
       .select(col("id"), Ann.planeSigns(col("vec"), 64, 64).as("signs"))
       .select(col("id"), posexplode(Ann.bucketsFromSigns(col("signs"), 16, 4)))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket"))
     val cand = bk.as("qx").where(col("qx.id") < 100)
       .join(bk.as("tx"),
         col("qx.tbl") === col("tx.tbl") &&
@@ -2991,7 +2931,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
         col("label_a"), col("label_b"),
         (GraftFunctions.dot(col("qvec"), col("tvec")) /
           (sqrt(col("qn2")) * sqrt(col("tn2")))).as("cos"))
-    graft.core.Caches.retain("entry.hardNegatives", v, bk)
     scoredPairs
       .withColumn("rank", row_number().over(
         Window.partitionBy("a").orderBy(desc("cos"), asc("b"))))
@@ -3012,11 +2951,10 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
   private[graft] def qDataCard(s: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
     import org.apache.spark.sql.expressions.Window
-    val d = doc(s, dir).select(col("source"), col("lang"),
+    val d = Caches.keep("entry.dataCard", doc(s, dir).select(col("source"), col("lang"),
         TextOps.tokenCount(col("text")).cast("long").as("n_toks"),
         TextOps.qualityScore(col("text")).as("q"),
-        TextOps.strHash(col("text")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        TextOps.strHash(col("text")).as("h")))
     val base = d.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
       sum("n_toks").as("n_tokens"),
@@ -3032,7 +2970,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
       .groupBy("source")
       .agg(coalesce(sum(when(col("nh") > 1, col("nh"))), lit(0L))
         .as("n_dup_docs"))
-    graft.core.Caches.retain("entry.dataCard", d)
     base.join(langs, "source").join(dups, "source")
       .select(col("source"), col("n_docs"), col("n_tokens"),
         col("n_langs"), col("top_lang"), col("mean_quality"),
@@ -3072,10 +3009,10 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
       .withColumn("rank_lex", row_number().over(
         Window.orderBy(desc("score"), asc("doc_id"))))
       .select(col("doc_id").cast("long").as("id"), col("rank_lex"))
-    val v = em(s, dir).select(col("vec_id").cast("long").as("id"),
-        col("embedding").as("vec"))
-      .withColumn("n2", GraftFunctions.norm2(col("vec")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val v = Caches.keep("entry.hybridRrf",
+      em(s, dir).select(col("vec_id").cast("long").as("id"),
+          col("embedding").as("vec"))
+        .withColumn("n2", GraftFunctions.norm2(col("vec"))))
     val q = v.where(col("id") === 0)
       .select(col("vec").as("qvec"), col("n2").as("qn2"))
     val sem = v.where(col("id") =!= 0).crossJoin(broadcast(q))
@@ -3085,7 +3022,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
       .withColumn("rank_sem", row_number().over(
         Window.orderBy(desc("cos"), asc("id"))))
       .select(col("id"), col("rank_sem"))
-    graft.core.Caches.retain("entry.hybridRrf", v)
     val fused = lex.join(sem, Seq("id"), "full_outer")
       .select(col("id"),
         coalesce(col("rank_lex"), lit(0)).cast("long").as("rank_lex"),
@@ -3137,9 +3073,8 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     val depth = 4
     val width = 256
     val tracked = (1L to 20L)
-    val keyed = li(s, dir)
-      .select(col("l_partkey").cast("string").as("key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keyed = Caches.keep("entry.cms", li(s, dir)
+      .select(col("l_partkey").cast("string").as("key")))
     def cellOf(j: Column, key: Column): Column =
       ((lit(2L) * j + lit(1L)) * TextOps.strHash(key) +
         lit(7919L) * j + lit(12345L)) % lit(TextOps.P) % lit(width.toLong)
@@ -3158,7 +3093,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     val truth = keyed.where(col("key").isin(tracked.map(_.toString): _*))
       .groupBy("key").agg(count(lit(1)).as("true_cnt"))
       .select(col("key").cast("long").as("partkey"), col("true_cnt"))
-    graft.core.Caches.retain("entry.cms", keyed)
     truth.join(est, "partkey")
       .select(col("partkey"), col("true_cnt"), col("est"),
         (col("est") >= col("true_cnt")).as("est_ge_true"),
@@ -3181,17 +3115,15 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
   private[graft] def qIvfPq(s: SparkSession, dir: String): DataFrame = {
     val e = em(s, dir)
     val model = graft.sim.Pq.fit(e, "vec_id", "embedding", m = 8, k = 256)
-    val approx = graft.sim.Pq.ivfPqTopK(e, "vec_id", "embedding", k = 3,
-        model, nCells = 16, nprobe = 8, rerankFactor = 32,
-        queryPred = col("id") < 100)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val approx = Caches.keep("entry.q215",
+      graft.sim.Pq.ivfPqTopK(e, "vec_id", "embedding", k = 3,
+          model, nCells = 16, nprobe = 8, rerankFactor = 32,
+          queryPred = col("id") < 100))
     // persisted: the exact baseline feeds TWO count actions (nTrue and
     // the semi-join hit count) — unpersisted, the brute-force rerank
     // pass ran twice per rep (r16)
-    val brute = graft.sim.Ann.cosineTopK(e,
-        "vec_id", "embedding", k = 3, queryPred = col("id") < 100)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q215.brute", brute)
+    val brute = Caches.keep("entry.q215.brute", graft.sim.Ann.cosineTopK(e,
+        "vec_id", "embedding", k = 3, queryPred = col("id") < 100))
     val nTrue = brute.count()
     val nHit = brute.select("a", "b")
       .join(approx.select("a", "b"), Seq("a", "b"), "left_semi").count()
@@ -3199,7 +3131,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     val badCos = approx.agg(count(when(
       col("cos") < lit(-1.0 - 1e-9) || col("cos") > lit(1.0 + 1e-9), 1)))
       .head().getLong(0)
-    graft.core.Caches.retain("entry.q215", approx)
     val nQueries = e.where(col("vec_id") < 100).count()
     import s.implicits._
     Seq((nQueries, 3L, 8L, 256L, recall >= 0.7, badCos == 0L))
@@ -3221,11 +3152,10 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * O(rows).
     */
   private[graft] def qIncrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    val o = Tables.load(s, dir, "orders")
+    val o = Caches.keep("entry.ivm", Tables.load(s, dir, "orders")
       .select(col("o_orderpriority").as("g"),
         expr("unix_timestamp(o_orderdate) div 86400").as("day"),
-        col("o_totalprice").cast(DecimalType(38, 10)).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("o_totalprice").cast(DecimalType(38, 10)).as("v")))
     val cut = o.agg(max(col("day"))).head().getLong(0)
     val isDelta = col("day") === cut
     def agg0(df: DataFrame) = df.groupBy("g")
@@ -3240,7 +3170,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
           .as("s"))
     val full = agg0(o).withColumnRenamed("n", "n_full")
       .withColumnRenamed("s", "s_full")
-    graft.core.Caches.retain("entry.ivm", o)
     merged.join(full, "g")
       .select(col("g"), col("n"),
         round(col("s").cast(DoubleType), 4).as("sum_price"),
@@ -3261,10 +3190,10 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     */
   private[graft] def qAttribution(s: SparkSession, dir: String): DataFrame = {
     val sevenDaysUs = 7L * 86400000000L
-    val e = ev(s, dir).select(col("user_id"), col("event_id"),
-        col("event_type"), expr("ts div 1000").as("us"),
-        col("value").cast(DoubleType).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = Caches.keep("entry.attribution",
+      ev(s, dir).select(col("user_id"), col("event_id"),
+          col("event_type"), expr("ts div 1000").as("us"),
+          col("value").cast(DoubleType).as("v")))
     val purchases = e.where(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("p_id"),
         col("us").as("p_us"), col("v"))
@@ -3284,7 +3213,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
         counted.select(col("p_id"), col("n_touches")), Seq("p_id"), "left_anti")
       .select(lit("direct").as("touch_type"),
         round(col("v") * lit(1000000.0)).cast("long").as("credit_micro"))
-    graft.core.Caches.retain("entry.attribution", e)
     credited.unionByName(direct)
       .groupBy("touch_type")
       .agg(count(lit(1)).as("n_credited"),

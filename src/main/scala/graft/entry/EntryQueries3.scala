@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{PrefixScan, Profiler, Quantiles, Stats}
+import graft.core.{Caches, PrefixScan, Profiler, Quantiles, Stats}
 import graft.eval.Metrics
 import graft.features.{FrequencyIndexer, Imputers}
 import graft.score.ZScoreAnomaly
@@ -29,15 +29,14 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val o = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority").as("seg"),
         col("o_totalprice").cast(DoubleType).as("y"))
-    val split = graft.aug.Sampling.splitAssign(o, "o_orderkey",
-        Seq("train" -> 0.5, "cal" -> 0.25, "test" -> 0.25))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val split = Caches.keep("entry.conformal",
+      graft.aug.Sampling.splitAssign(o, "o_orderkey",
+          Seq("train" -> 0.5, "cal" -> 0.25, "test" -> 0.25)))
     val means = split.where(col("split") === "train")
       .groupBy("seg").agg(Stats.dmean(col("y")).as("yhat"))
     val withResid = split.join(broadcast(means), "seg")
       .withColumn("r", abs(col("y") - col("yhat")))
-    val cal = withResid.where(col("split") === "cal")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cal = Caches.keep("entry.conformal", withResid.where(col("split") === "cal"))
     val nCal = cal.count()
     // q-hat at the PLAIN (1-alpha) interpolated quantile — constant
     // fraction on both engines (DuckDB's quantile_cont cannot take a
@@ -46,7 +45,6 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     // refinement — same plan, a rank instead of a fraction
     val qhat = graft.core.OrderStats.quantilesOf(cal, "r",
       Seq(1.0 - alpha)).head
-    graft.core.Caches.retain("entry.conformal", split, cal)
     split.where(col("split") === "test")
       .join(broadcast(means), "seg")
       .agg(count(lit(1)).as("n_test"),
@@ -147,15 +145,14 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val d = par(doc(s, dir))
       .select(col("doc_id"), col("source"), col("lang"),
         TextOps.tokens(col("text")).as("toks"))
-    val inst = d.select(col("doc_id"), col("source"), col("lang"),
-        explode(when(size(col("toks")) >= 2,
-          transform(sequence(lit(1), size(col("toks")) - 1),
-            i => TextOps.strHash(concat(
-              element_at(col("toks"), i), lit(" "),
-              element_at(col("toks"), i + 1))) % NB))
-          .otherwise(array().cast("array<long>"))).as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q262", inst)
+    val inst = Caches.keep("entry.q262",
+      d.select(col("doc_id"), col("source"), col("lang"),
+          explode(when(size(col("toks")) >= 2,
+            transform(sequence(lit(1), size(col("toks")) - 1),
+              i => TextOps.strHash(concat(
+                element_at(col("toks"), i), lit(" "),
+                element_at(col("toks"), i + 1))) % NB))
+            .otherwise(array().cast("array<long>"))).as("b")))
     // ONE fused groupBy(b) pass replaces the separate target/raw
     // aggregates and their left join (a zero en-count is identical to
     // the old join's null through the +1 Laplace term), and ONE fused
@@ -405,9 +402,8 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val mo = base0.agg(Stats.dmean(col("x")).as("mu"),
       Stats.dstddevSamp(col("x")).as("sd")).head()
     val (mu, sd) = (mo.getDouble(0), mo.getDouble(1))
-    val base = par(base0).withColumn("z", (col("x") - lit(mu)) / lit(sd))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q267", base)
+    val base = Caches.keep("entry.q267",
+      par(base0).withColumn("z", (col("x") - lit(mu)) / lit(sd)))
     def softplus(u: Column): Column =
       when(u > 30.0, u).otherwise(log(lit(1.0) + exp(u)))
     def step(theta: Double): (Double, Double, Double) = {
@@ -500,13 +496,11 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     */
   private[graft] def qNeyman(s: SparkSession, dir: String): DataFrame = {
     val budget = 1000.0
-    val st = Tables.load(s, dir, "events")
+    val st = Caches.keep("entry.q269", Tables.load(s, dir, "events")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_pop"),
         Stats.dstddevSamp(col("value")).as("sd_raw"))
-      .withColumn("ns", col("n_pop").cast(DoubleType) * col("sd_raw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q269", st)
+      .withColumn("ns", col("n_pop").cast(DoubleType) * col("sd_raw")))
     val tot = st.agg(Stats.dsum(round(col("ns"), 6)).as("tot_ns"),
       sum("n_pop").as("n_tot"))
     st.crossJoin(broadcast(tot))
@@ -535,12 +529,10 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       .join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("ok"), col("p_brand").as("b"))
       .distinct()
-    val e = ob.toDF("ok", "b1")
+    val e = Caches.keep("entry.q270", ob.toDF("ok", "b1")
       .join(ob.toDF("ok2", "b2"), col("ok") === col("ok2") && col("b1") < col("b2"))
       .groupBy("b1", "b2").agg(count(lit(1)).as("np"))
-      .where(col("np") >= 5).select("b1", "b2")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q270", e)
+      .where(col("np") >= 5).select("b1", "b2"))
     graft.core.LabelProp.run(e, "b1", "b2", rounds = 4)
       .groupBy("lbl")
       .agg(count(lit(1)).as("n_members"),
@@ -677,26 +669,22 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
         col("o_totalprice").cast(DoubleType).as("y"),
         (graft.aug.Sampling.keyBucket(col("o_orderkey"), 1234L) <
           lit(500000L)).as("t"))
-    val st = o.groupBy("stratum")
+    val st = Caches.keep("entry.q273", o.groupBy("stratum")
       .agg(count(lit(1)).as("n_h"),
         count(when(col("t"), 1)).as("n_t"),
         count(when(!col("t"), 1)).as("n_c"),
         Stats.dmean(when(col("t"), col("y"))).as("my_t"),
         Stats.dmean(when(!col("t"), col("y"))).as("my_c"),
         Stats.dvarSamp(when(col("t"), col("y"))).as("v_t"),
-        Stats.dvarSamp(when(!col("t"), col("y"))).as("v_c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q273", st)
+        Stats.dvarSamp(when(!col("t"), col("y"))).as("v_c")))
     val tot = st.agg(sum("n_h").as("n_tot"))
     val wgt = col("n_h").cast(DoubleType) / col("n_tot").cast(DoubleType)
-    val per = st.crossJoin(broadcast(tot))
+    val per = Caches.keep("entry.q273", st.crossJoin(broadcast(tot))
       .select(col("stratum"), col("n_h"), col("n_t"), col("n_c"),
         round(col("my_t") - col("my_c"), 6).as("diff_h"),
         (wgt * (col("my_t") - col("my_c"))).as("wdiff_raw"),
         (wgt * wgt * (col("v_t") / col("n_t") + col("v_c") / col("n_c")))
-          .as("wvar_raw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q273", per)
+          .as("wvar_raw")))
     val ate = per.agg(
       Stats.dsum(round(col("wdiff_raw"), 6)).as("ate"),
       Stats.dsum(round(col("wvar_raw"), 6)).as("var_ate")).head()
@@ -726,16 +714,14 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
   private[graft] def qAmsF2(s: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
     val P = 1000000007L
-    val inst = par(doc(s, dir))
+    val inst = Caches.keep("entry.q274", par(doc(s, dir))
       .select(TextOps.tokens(col("text")).as("toks"))
       .select(explode(when(size(col("toks")) >= 2,
         transform(sequence(lit(1), size(col("toks")) - 1),
           i => TextOps.strHash(concat(
             element_at(col("toks"), i), lit(" "),
             element_at(col("toks"), i + 1)))))
-        .otherwise(array().cast("array<long>"))).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q274", inst)
+        .otherwise(array().cast("array<long>"))).as("h")))
     val sums = (1 to 16).map { j =>
       val t = col("h") + lit(j * 1000003L)
       sum(when((t * t) % P % 2 === 0, 1L).otherwise(-1L)).as(s"s$j")
@@ -795,9 +781,8 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
           count(when(col("d"), 1)).as("n_d"))
         .withColumn("scenario", lit(scenario))
     }
-    val g = arm(base, "null").unionByName(arm(base, "injected"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q275", g)
+    val g = Caches.keep("entry.q275",
+      arm(base, "null").unionByName(arm(base, "injected")))
     val z1 = g.where(col("z")).select(col("scenario"), col("n").as("n1"),
       col("my").as("my1"), col("vy").as("vy1"), col("n_d").as("nd1"))
     val z0 = g.where(!col("z")).select(col("scenario"), col("n").as("n0"),
@@ -847,9 +832,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
           Stats.dvarSamp(col("y")).as("vy"))
         .withColumn("scenario", lit(scenario))
     }
-    val g = cells("null").unionByName(cells("injected"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q276", g)
+    val g = Caches.keep("entry.q276", cells("null").unionByName(cells("injected")))
     def cell(t: Boolean, grp: String, suffix: String): DataFrame =
       g.where(col("t") === t && col("grp") === grp)
         .select(col("scenario"), col("n").as(s"n_$suffix"),
@@ -900,12 +883,10 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       .groupBy("o_custkey").agg(Stats.dsum(col("o_totalprice")).as("rev"))
     val c = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_acctbal").cast(DoubleType).as("x"))
-    val base = c.join(o, col("c_custkey") === col("o_custkey"))
+    val base = Caches.keep("entry.q277", c.join(o, col("c_custkey") === col("o_custkey"))
       .where(abs(col("x") - cut) <= bw)
       .select((col("x") - cut).as("xc"), (col("x") >= cut).as("right"),
-        col("rev").as("y0"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q277", base)
+        col("rev").as("y0")))
     def fits(scenario: String): DataFrame = {
       val y = if (scenario == "injected")
         col("y0") + when(col("right"), 300.0).otherwise(0.0)
@@ -1027,9 +1008,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
           count(when(!col("a"), 1)).as("cb"))
         .withColumn("scenario", lit(if (shifted) "shifted" else "healthy"))
     }
-    val g = scen(false).unionByName(scen(true))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q279", g)
+    val g = Caches.keep("entry.q279", scen(false).unionByName(scen(true)))
     val tot = g.groupBy("scenario")
       .agg(sum("ca").as("n_a"), sum("cb").as("n_b"))
     val wsp = Window.partitionBy("scenario").orderBy("v")
@@ -1068,15 +1047,13 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     */
   private[graft] def qCoverageSelect(s: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
-    val grams = par(doc(s, dir))
+    val grams = Caches.keep("entry.q280", par(doc(s, dir))
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
       .select(col("doc_id"), explode(array_distinct(
         when(size(col("toks")) >= 3,
           transform(sequence(lit(1), size(col("toks")) - 2),
             i => TextOps.strHash(array_join(slice(col("toks"), i, lit(3)), " "))))
-          .otherwise(array().cast("array<long>")))).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q280", grams)
+          .otherwise(array().cast("array<long>")))).as("g")))
     val total = grams.select("g").distinct().count()
     var covered = s.range(0).select(col("id").as("g"))
     var cum = 0L
@@ -1111,14 +1088,12 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       Stats.dstddevSamp(col("l_extendedprice")).as("sd")).head()
     val (mu, sd) = (mo.getDouble(0), mo.getDouble(1))
     val theta = 0.025
-    val base = par(li(s, dir)).select(
+    val base = Caches.keep("entry.q281", par(li(s, dir)).select(
         when(col("l_returnflag") === "R", 1.0).otherwise(0.0).as("y"),
         round(lit(1.0) / (lit(1.0) +
           exp(-(lit(theta) * ((col("l_extendedprice") - lit(mu)) / lit(sd))))),
           6).as("p"))
-      .withColumn("bin", least(lit(9L), floor(col("p") * 10).cast("long")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q281", base)
+      .withColumn("bin", least(lit(9L), floor(col("p") * 10).cast("long"))))
     val glob = base.agg(count(lit(1)).as("n_tot"),
       (Stats.dsum(col("y")) / count(lit(1))).as("ybar"),
       round(Stats.dsum(round((col("p") - col("y")) * (col("p") - col("y")),
@@ -1155,7 +1130,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     */
   private[graft] def qCollocations(s: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
-    val bi = par(doc(s, dir))
+    val bi = Caches.keep("entry.q282", par(doc(s, dir))
       .select(TextOps.tokens(col("text")).as("toks"))
       .select(explode(when(size(col("toks")) >= 2,
         transform(sequence(lit(1), size(col("toks")) - 1),
@@ -1163,9 +1138,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
             element_at(col("toks"), i + 1).as("w2"))))
         .otherwise(array().cast("array<struct<w1:string,w2:string>>")))
         .as("b"))
-      .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q282", bi)
+      .select(col("b.w1").as("w1"), col("b.w2").as("w2")))
     val pair = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cab"))
       .where(col("cab") >= 5)
     val c1 = bi.groupBy("w1").agg(count(lit(1)).as("c1"))
@@ -1207,9 +1180,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
         col("o_totalprice").cast(DoubleType).as("y"))
     val isTrain = graft.aug.Sampling.keyBucket(col("o_orderkey"), 17L) <
       lit(500000L)
-    val base = o.withColumn("train", isTrain)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q283", base)
+    val base = Caches.keep("entry.q283", o.withColumn("train", isTrain))
     val means = base.where(col("train"))
       .groupBy("seg").agg(Stats.dmean(col("y")).as("yhat"))
     val test = base.where(!col("train"))
@@ -1294,13 +1265,11 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       cust, "c_acctbal", (1 until 10).map(_.toDouble / 10)).distinct.sorted
     val bin = edges.map(e => when(col("c_acctbal") > lit(e), 1).otherwise(0))
       .reduce(_ + _)
-    val base = cust.join(conv, Seq("c_custkey"), "left")
+    val base = Caches.keep("entry.q285", cust.join(conv, Seq("c_custkey"), "left")
       .na.fill(0, Seq("base_conv"))
       .withColumn("decile", bin.cast("long"))
       .withColumn("treated", keyBucket(col("c_custkey"), 23L) < lit(500000L))
-      .withColumn("lift_draw", keyBucket(col("c_custkey"), 97L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q285", base)
+      .withColumn("lift_draw", keyBucket(col("c_custkey"), 97L)))
     val injectedConv = greatest(col("base_conv"),
       when(col("treated") && col("lift_draw") < col("decile") * lit(20000L),
         1).otherwise(0))
@@ -1396,11 +1365,10 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     */
   private[graft] def qCentroidClassifier(s: SparkSession, dir: String): DataFrame = {
     import graft.aug.Sampling.keyBucket
-    val e = em(s, dir).select(col("vec_id").cast("long").as("id"),
-        col("label").cast("long").as("label"), col("embedding"))
-      .withColumn("train", keyBucket(col("id"), 31L) < lit(600000L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q287", e)
+    val e = Caches.keep("entry.q287",
+      em(s, dir).select(col("vec_id").cast("long").as("id"),
+          col("label").cast("long").as("label"), col("embedding"))
+        .withColumn("train", keyBucket(col("id"), 31L) < lit(600000L)))
     val cent = graft.sim.Centroids.labelCentroids(
         e.where(col("train")), "label", "embedding")
       .select(col("group").cast("long").as("label"), col("dim"), col("mean"))
@@ -1424,9 +1392,8 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val dmin = least(byLabel.map { case (l, _) => col(s"d2_$l") }: _*)
     val pred = least(byLabel.map { case (l, _) =>
       when(col(s"d2_$l") === dmin, lit(l)) }: _*)
-    val scored = withD.select(col("id"), col("label"), pred.as("pred"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q287.scored", scored)
+    val scored = Caches.keep("entry.q287.scored",
+      withD.select(col("id"), col("label"), pred.as("pred")))
     val byTrue = scored.groupBy("label")
       .agg(count(lit(1)).as("n_true"),
         count(when(col("pred") === col("label"), 1)).as("tp"))
@@ -1477,27 +1444,21 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val t = par(doc(s, dir)).select(col("doc_id"),
       TextOps.tokens(col("text")).as("toks"),
       (keyBucket(col("doc_id"), 71L) < lit(900000L)).as("train"))
-    val tok = t.select(col("doc_id"), col("train"),
-        posexplode(col("toks")).as(Seq("i", "w")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tok = Caches.keep("q288", t.select(col("doc_id"), col("train"),
+        posexplode(col("toks")).as(Seq("i", "w"))))
     val vocab = tok.where(col("train")).groupBy("w")
       .agg(count(lit(1)).as("c_raw")).where(col("c_raw") >= 2)
       .select(col("w"), lit(1).as("inv"))
-    val mapped = tok.join(vocab, Seq("w"), "left")
+    val mapped = Caches.keep("q288", tok.join(vocab, Seq("w"), "left")
       .select(col("doc_id"), col("train"), col("i"),
-        when(col("inv").isNotNull, col("w")).otherwise(lit("<unk>")).as("mw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bg = mapped
+        when(col("inv").isNotNull, col("w")).otherwise(lit("<unk>")).as("mw")))
+    val bg = Caches.keep("q288", mapped
       .select(col("doc_id"), col("train"), col("i"), col("mw").as("w1"))
       .join(mapped.select(col("doc_id"), (col("i") - 1).as("i"),
         col("mw").as("w2")), Seq("doc_id", "i"))
-      .select(col("doc_id"), col("train"), col("w1"), col("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q288", tok, mapped, bg)
-    val c12 = bg.where(col("train")).groupBy("w1", "w2")
-      .agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q288.c12", c12)
+      .select(col("doc_id"), col("train"), col("w1"), col("w2")))
+    val c12 = Caches.keep("q288.c12", bg.where(col("train")).groupBy("w1", "w2")
+      .agg(count(lit(1)).as("c12")))
     val c1 = mapped.where(col("train")).groupBy(col("mw").as("w1"))
       .agg(count(lit(1)).as("c1"))
     val fw = c12.groupBy("w1").agg(count(lit(1)).as("n1fw"))
@@ -1543,18 +1504,15 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
   private[graft] def qGoodTuring(s: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
     import graft.aug.Sampling.keyBucket
-    val tok = par(doc(s, dir)).select(col("doc_id"),
+    val tok = Caches.keep("q289", par(doc(s, dir)).select(col("doc_id"),
         TextOps.tokens(col("text")).as("toks"),
         (keyBucket(col("doc_id"), 73L) < lit(900000L)).as("train"))
       .where(size(col("toks")) >= 3)
       .select(col("train"), explode(expr(
         "transform(sequence(0, size(toks) - 3), " +
-          "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val uni = tok.where(col("train")).groupBy("w")
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q289", tok, uni)
+          "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")).as("w")))
+    val uni = Caches.keep("q289", tok.where(col("train")).groupBy("w")
+      .agg(count(lit(1)).as("c")))
     val fof = uni.groupBy("c").agg(count(lit(1)).as("n_r"))
     val totals = uni.agg(sum("c").as("n_train_tokens"))
     val n1 = fof.agg(coalesce(sum(when(col("c") === 1, col("n_r"))), lit(0L))
@@ -1610,11 +1568,10 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       .select(col("l_orderkey").as("ok"), col("l_partkey").cast("long").as("pk"))
     val kk = raw.agg(
       (ceil(sqrt(countDistinct(col("ok")))).cast("long") * lit(6L)).as("k"))
-    val ob = raw.crossJoin(broadcast(kk))
+    val ob = Caches.keep("q290", raw.crossJoin(broadcast(kk))
       .select(col("ok"), (col("pk") % col("k")).as("pk"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val co = ob.toDF("ok", "p1")
+      .distinct())
+    val co = Caches.keep("q290", ob.toDF("ok", "p1")
       .join(ob.toDF("ok2", "p2"), col("ok") === col("ok2") && col("p1") < col("p2"))
       .groupBy("p1", "p2").agg(count(lit(1)).as("npair"))
       .where(col("npair") >= 2)
@@ -1622,13 +1579,10 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       // sf0.1 and keyBucket's 2654435761 multiplier would overflow Long
       .withColumn("test",
         keyBucket((col("p1") * lit(1000003L) + col("p2")) % lit(1000000007L),
-          83L) < lit(200000L))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val trainE = co.where(!col("test")).select("p1", "p2")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val adj = trainE.union(trainE.select(col("p2"), col("p1"))).toDF("a", "b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q290", ob, co, trainE, adj)
+          83L) < lit(200000L)))
+    val trainE = Caches.keep("q290", co.where(!col("test")).select("p1", "p2"))
+    val adj = Caches.keep("q290",
+      trainE.union(trainE.select(col("p2"), col("p1"))).toDF("a", "b"))
     val deg = adj.groupBy("a").agg(count(lit(1)).as("dg"))
     val mids = adj.toDF("x", "m")
       .join(adj.toDF("mm", "y"), col("m") === col("mm"))
@@ -1637,7 +1591,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val pairScores = mids.groupBy("x", "y").agg(
       count(lit(1)).as("cn"),
       round(Stats.dsum(lit(1.0) / log(col("dgm").cast(DoubleType))), 6).as("aa"))
-    val scored = pairScores
+    val scored = Caches.keep("q290.scored", pairScores
       .join(trainE.select(col("p1").as("x"), col("p2").as("y"),
         lit(1).as("istr")), Seq("x", "y"), "left")
       .where(col("istr").isNull).drop("istr")
@@ -1647,9 +1601,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       .join(deg.select(col("a").as("x"), col("dg").as("dgx")), Seq("x"))
       .join(deg.select(col("a").as("y"), col("dg").as("dgy")), Seq("y"))
       .withColumn("jac", round(col("cn").cast(DoubleType) /
-        (col("dgx") + col("dgy") - col("cn")).cast(DoubleType), 6))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q290.scored", scored)
+        (col("dgx") + col("dgy") - col("cn")).cast(DoubleType), 6)))
     val long = scored.select(lit("cn").as("method"),
         col("cn").cast(DoubleType).as("score"), col("pos"))
       .unionByName(scored.select(lit("jaccard").as("method"),
@@ -1666,11 +1618,9 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     // sf0.1: 3.8-4.3 s/rep windowed vs 0.3-0.4 s/rep scanned, integer
     // won2 bitwise identical). byScore persists because the three
     // scans all read it.
-    val byScore = long.groupBy("method", "score").agg(
+    val byScore = Caches.keep("q290.byScore", long.groupBy("method", "score").agg(
         sum(col("pos")).cast("long").as("np"),
-        sum(lit(1) - col("pos")).cast("long").as("nn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q290.byScore", byScore)
+        sum(lit(1) - col("pos")).cast("long").as("nn")))
     val agg = Seq("cn", "jaccard", "adamic_adar").map { m =>
       val one = byScore.where(col("method") === m)
         .select(col("score"), col("np"), col("nn"))
@@ -1719,9 +1669,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val injected = o.select(lit("pareto_injected").as("scenario"),
       (lit(100.0) * exp(log(lit(1.0) / u) / lit(2.5))).as("v"))
     def top(df: DataFrame) = df.orderBy(desc("v")).limit(201)
-    val pool = top(healthy).unionByName(top(injected))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q291", pool)
+    val pool = Caches.keep("q291", top(healthy).unionByName(top(injected)))
     val ranked = pool
       .withColumn("rk", row_number().over(
         Window.partitionBy("scenario").orderBy(desc("v"))))
@@ -1864,14 +1812,12 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     */
   private[graft] def qHeaps(s: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
-    val t = par(doc(s, dir)).select(col("doc_id"),
+    val t = Caches.keep("q295", par(doc(s, dir)).select(col("doc_id"),
         TextOps.tokens(col("text")).as("toks"))
       .where(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(toks) - 3), " +
-          "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q295", t)
+          "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")).as("w")))
     val nd = doc(s, dir).agg(count(lit(1)).as("nd"))
     val cp = s.range(1, 11).toDF("d").crossJoin(broadcast(nd))
       .select(col("d"), floor(col("nd") * col("d") / lit(10)).as("cut"))
@@ -1913,10 +1859,8 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     */
   private[graft] def qTextRank(s: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
-    val tok = par(doc(s, dir)).select(col("doc_id"),
-        posexplode(TextOps.tokens(col("text"))).as(Seq("i", "w")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q296", tok)
+    val tok = Caches.keep("q296", par(doc(s, dir)).select(col("doc_id"),
+        posexplode(TextOps.tokens(col("text"))).as(Seq("i", "w"))))
     val pairs = Seq(1, 2).map { o =>
       tok.select(col("doc_id"), col("i"), col("w").as("wa"))
         .join(tok.select(col("doc_id"), (col("i") - o).as("i"),
@@ -1955,11 +1899,9 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       .select(expr("(ts div 1000) div 86400000000").as("day"), col("value"))
       .groupBy("day").agg(Stats.dsum(col("value")).as("y"))
     val m0 = daily.agg(min("day").as("d0"))
-    val pts = daily.crossJoin(broadcast(m0))
+    val pts = Caches.keep("q297", daily.crossJoin(broadcast(m0))
       .select(col("day"), (col("day") - col("d0"))
-        .cast(DoubleType).as("x"), col("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q297", pts)
+        .cast(DoubleType).as("x"), col("y")))
     val fit = pts.agg(Stats.dsum(col("x")).as("sx"),
         Stats.dsum(col("y")).as("sy"),
         Stats.dsum(col("x") * col("y")).as("sxy"),
@@ -2000,11 +1942,9 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     */
   private[graft] def qSourceJs(s: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
-    val cnt = par(doc(s, dir)).select(col("source"),
+    val cnt = Caches.keep("q298", par(doc(s, dir)).select(col("source"),
         explode(TextOps.tokens(col("text"))).as("w"))
-      .groupBy("source", "w").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q298", cnt)
+      .groupBy("source", "w").agg(count(lit(1)).as("c")))
     val vocab = cnt.select("w").distinct()
     val tot = cnt.groupBy("source").agg(sum("c").as("n"))
     val vsize = vocab.agg(count(lit(1)).as("v"))
@@ -2047,10 +1987,9 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     // 0.30000000000000004, which would diverge from the oracle's 0.3
     val lam = 0.7
     val oneMinusLam = 0.3
-    val v = em(s, dir).select(col("vec_id").as("id"),
+    val v = Caches.keep("q299", em(s, dir).select(col("vec_id").as("id"),
         col("embedding").as("vec"),
-        GraftFunctions.norm2(col("embedding")).as("n2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        GraftFunctions.norm2(col("embedding")).as("n2")))
     val q = v.where(col("id") < 20).toDF("qid", "qv", "qn2")
     val rel0 = v.toDF("cid", "cv", "cn2").join(broadcast(q),
         col("qid") =!= col("cid"))
@@ -2058,21 +1997,17 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
         (GraftFunctions.dot(col("qv"), col("cv")) /
           (sqrt(col("qn2")) * sqrt(col("cn2")))).as("rel"))
     val wTop = Window.partitionBy("qid").orderBy(desc("rel"), col("cid"))
-    val cand = rel0.withColumn("rk", row_number().over(wTop))
-      .where(col("rk") <= 20).drop("rk")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q299", v, cand)
+    val cand = Caches.keep("q299", rel0.withColumn("rk", row_number().over(wTop))
+      .where(col("rk") <= 20).drop("rk"))
     // candidate-pair cosine grid, bounded 20×20 per query
-    val pairs = cand.select(col("qid"), col("cid").as("pa"),
+    val pairs = Caches.keep("q299.pairs", cand.select(col("qid"), col("cid").as("pa"),
         col("cv").as("va"), col("cn2").as("na"))
       .join(cand.select(col("qid"), col("cid").as("pb"),
         col("cv").as("vb"), col("cn2").as("nb")), Seq("qid"))
       .where(col("pa") =!= col("pb"))
       .select(col("qid"), col("pa"), col("pb"),
         (GraftFunctions.dot(col("va"), col("vb")) /
-          (sqrt(col("na")) * sqrt(col("nb")))).as("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q299.pairs", pairs)
+          (sqrt(col("na")) * sqrt(col("nb")))).as("sim")))
     val slim = cand.select(col("qid"), col("cid"), col("rel"))
     val wPick = Window.partitionBy("qid").orderBy(desc("score"), col("cid"))
     var picked = slim.withColumn("score", col("rel"))
@@ -2127,12 +2062,10 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
         col("sx"), col("sy"), col("nn"))
       .select(col("b"), ((col("sy") - col("b") * col("sx")) / col("nn"))
         .as("a"), col("nn"))
-    val e6 = pts.crossJoin(broadcast(fit))
+    val e6 = Caches.keep("q300", pts.crossJoin(broadcast(fit))
       .select(col("day"), col("nn"),
         round(round(col("y") - col("a") - col("b") * col("x"), 6) *
-          lit(1e6)).cast(DecimalType(38, 0)).as("e6"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q300", e6)
+          lit(1e6)).cast(DecimalType(38, 0)).as("e6")))
     val den = e6.agg(sum(col("e6") * col("e6")).as("den"),
       max("nn").as("n"))
     val ks = s.range(1, 11).toDF("k")
@@ -2174,14 +2107,12 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
   private[graft] def qGmmEm(s: SparkSession, dir: String): DataFrame = {
     import graft.aug.Sampling.keyBucket
     val base = ev(s, dir).select(col("event_id"), col("value"))
-    val x = base.select(lit("healthy").as("scenario"),
+    val x = Caches.keep("q301", base.select(lit("healthy").as("scenario"),
         round(col("value") * 100).cast(DecimalType(38, 0)).as("xc"))
       .unionByName(base.select(lit("bimodal_injected").as("scenario"),
         (round(col("value") * 100) +
           when(keyBucket(col("event_id"), 17L) < lit(500000L), lit(40000L))
-            .otherwise(lit(0L))).cast(DecimalType(38, 0)).as("xc")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q301", x)
+            .otherwise(lit(0L))).cast(DecimalType(38, 0)).as("xc"))))
     val xd = col("xc").cast(DoubleType) / lit(100.0)
     // init: quartile-spread means from exact min/max, pooled sd, pi=.5
     var par = x.groupBy("scenario").agg(
@@ -2413,24 +2344,20 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     */
   private[graft] def qContainment(s: SparkSession, dir: String): DataFrame = {
     import graft.text.TextOps
-    val sh = par(doc(s, dir)).select(col("doc_id"),
+    val sh = Caches.keep("q305", par(doc(s, dir)).select(col("doc_id"),
         TextOps.tokens(col("text")).as("toks"))
       .where(size(col("toks")) >= 3)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(0, size(toks) - 3), " +
           "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))")).as("w"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q305", sh)
+      .distinct())
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val dfCap = sh.groupBy("w").agg(count(lit(1)).as("df"))
       .where(col("df") <= 50).select("w")
     // persist the capped side ONCE: a self-join recomputes its whole
     // upstream per side (guide §3.3), which here re-ran the df-cap
     // aggregate + join probe twice (r16 second pass)
-    val filt = sh.join(dfCap, Seq("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q305", filt)
+    val filt = Caches.keep("q305", sh.join(dfCap, Seq("w")))
     val inter = filt
       .select(col("doc_id").as("a"), col("w"))
       .join(filt.select(col("doc_id").as("b"), col("w")),
@@ -2580,12 +2507,11 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val e = ev(s, dir).select(col("user_id"), col("event_id"),
       expr("ts div 1000").as("us"), col("event_type"))
     val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    val cells = e.withColumn("next", lead(col("event_type"), 1).over(w))
-      .where(col("next").isNotNull)
-      .groupBy(col("event_type").as("cur"), col("next"))
-      .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q309", cells)
+    val cells = Caches.keep("q309",
+      e.withColumn("next", lead(col("event_type"), 1).over(w))
+        .where(col("next").isNotNull)
+        .groupBy(col("event_type").as("cur"), col("next"))
+        .agg(count(lit(1)).as("n")))
     val curTot = cells.groupBy("cur").agg(sum("n").as("nc"))
     val nextTot = cells.groupBy("next").agg(sum("n").as("nx"))
     val tot = cells.agg(sum("n").as("nt"))
@@ -2624,13 +2550,11 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     * (strict <) on both engines.
     */
   private[graft] def qSeqPatterns(s: SparkSession, dir: String): DataFrame = {
-    val spans = ev(s, dir)
+    val spans = Caches.keep("q310", ev(s, dir)
       .select(col("user_id"), col("event_type"),
         expr("ts div 1000").as("us"))
       .groupBy("user_id", "event_type")
-      .agg(min("us").as("mn"), max("us").as("mx"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q310", spans)
+      .agg(min("us").as("mn"), max("us").as("mx")))
     val users = spans.select("user_id").distinct()
       .agg(count(lit(1)).as("nu"))
     val pats = spans.toDF("user_id", "ta", "mna", "mxa")
@@ -2706,11 +2630,9 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
         (col("nd").cast(DoubleType) / col("n").cast(DoubleType)).as("p"))
       .withColumn("q_raw", sqrt(col("p")))
     val z = g.agg(Stats.dsum(col("q_raw")).as("zq"))
-    val w = g.crossJoin(broadcast(z))
+    val w = Caches.keep("q311", g.crossJoin(broadcast(z))
       .select(col("lang"), col("nd"), col("n"),
-        ((col("q_raw") / col("zq")) / col("p")).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q311", w)
+        ((col("q_raw") / col("zq")) / col("p")).as("w")))
     val ess = w.agg(
         Stats.dsum(col("nd").cast(DoubleType) * col("w")).as("sw"),
         Stats.dsum(col("nd").cast(DoubleType) * col("w") * col("w"))
@@ -2739,18 +2661,15 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
       .select(col("l_orderkey").as("ok"), col("l_partkey").cast("long").as("pk"))
     val kk = raw.agg(
       (ceil(sqrt(countDistinct(col("ok")))).cast("long") * lit(6L)).as("k"))
-    val ob = raw.crossJoin(broadcast(kk))
+    val ob = Caches.keep("q313", raw.crossJoin(broadcast(kk))
       .select(col("ok"), (col("pk") % col("k")).as("pk"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = ob.toDF("ok", "p1")
+      .distinct())
+    val edges = Caches.keep("q313", ob.toDF("ok", "p1")
       .join(ob.toDF("ok2", "p2"), col("ok") === col("ok2") && col("p1") < col("p2"))
       .groupBy("p1", "p2").agg(count(lit(1)).as("npair"))
-      .where(col("npair") >= 2).select("p1", "p2")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val adj = edges.union(edges.select(col("p2"), col("p1"))).toDF("a", "b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q313", ob, edges, adj)
+      .where(col("npair") >= 2).select("p1", "p2"))
+    val adj = Caches.keep("q313",
+      edges.union(edges.select(col("p2"), col("p1"))).toDF("a", "b"))
     val deg = adj.groupBy("a").agg(count(lit(1)).cast("long").as("dg"))
     // assortativity: Pearson over directed edge list of (deg_a, deg_b)
     val de = adj.join(deg.toDF("a", "da"), Seq("a"))
@@ -2855,23 +2774,18 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
         .cast(DecimalType(38, 0)).as("yc"))
     val c = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
-    val per = o.groupBy("o_custkey").agg(sum("yc").as("yc"))
+    val per = Caches.keep("q315", o.groupBy("o_custkey").agg(sum("yc").as("yc"))
       .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .select(col("c_nationkey").as("nation"), col("yc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q315", per)
+      .select(col("c_nationkey").as("nation"), col("yc")))
     // gtot/tot are nation-count-sized but feed FIVE broadcast builds
     // below — unpersisted, every build re-aggregates the per cache;
     // terms feeds two aggregates (t_total and the per-nation t_g sums)
     // that would each re-run the join+log pass (r16)
-    val gtot = per.groupBy("nation").agg(sum("yc").as("ycg"),
-        count(lit(1)).cast("long").as("ng"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tot = gtot.agg(sum("ycg").as("yct"), sum("ng").as("nt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q315", gtot, tot)
+    val gtot = Caches.keep("q315", per.groupBy("nation").agg(sum("yc").as("ycg"),
+        count(lit(1)).cast("long").as("ng")))
+    val tot = Caches.keep("q315", gtot.agg(sum("ycg").as("yct"), sum("ng").as("nt")))
     // per-customer terms for T_total and (via the group mean) T_within
-    val terms = per.join(broadcast(gtot), Seq("nation"))
+    val terms = Caches.keep("q315", per.join(broadcast(gtot), Seq("nation"))
       .crossJoin(broadcast(tot))
       .select(col("nation"),
         ((col("yc").cast(DoubleType) / col("yct").cast(DoubleType)) *
@@ -2879,9 +2793,7 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
             col("nt").cast(DoubleType))).as("t_tot"),
         ((col("yc").cast(DoubleType) / col("ycg").cast(DoubleType)) *
           log((col("yc").cast(DoubleType) / col("ycg").cast(DoubleType)) *
-            col("ng").cast(DoubleType))).as("t_g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q315", terms)
+            col("ng").cast(DoubleType))).as("t_g")))
     val tTotal = terms.agg(Stats.dsum(col("t_tot")).as("t_total"))
     val tWithin = terms.groupBy("nation")
       .agg(Stats.dsum(col("t_g")).as("tg"))
@@ -2919,26 +2831,20 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     * trajectory is bitwise cross-engine. Mean-normalized; top-20.
     */
   private[graft] def qBradleyTerry(s: SparkSession, dir: String): DataFrame = {
-    val perOs = li(s, dir)
+    val perOs = Caches.keep("q316.perOs", li(s, dir)
       .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"),
         round(col("l_extendedprice") * 100).cast(DecimalType(38, 0))
           .as("pc"))
-      .groupBy("ok", "sk").agg(sum("pc").as("pc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q316.perOs", perOs)
-    val games = perOs.toDF("ok", "sa", "pa")
+      .groupBy("ok", "sk").agg(sum("pc").as("pc")))
+    val games = Caches.keep("q316", perOs.toDF("ok", "sa", "pa")
       .join(perOs.toDF("ok2", "sb", "pb"),
         col("ok") === col("ok2") && col("sa") =!= col("sb"))
       .where(col("pa") =!= col("pb"))
       .groupBy("sa", "sb")
       .agg(count(lit(1)).as("n_ij"),
-        count(when(col("pa") > col("pb"), 1)).as("w_ij"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q316", games)
-    val wins = games.groupBy(col("sa").as("i"))
-      .agg(sum("w_ij").cast(DoubleType).as("wi"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q316.wins", wins)
+        count(when(col("pa") > col("pb"), 1)).as("w_ij")))
+    val wins = Caches.keep("q316.wins", games.groupBy(col("sa").as("i"))
+      .agg(sum("w_ij").cast(DoubleType).as("wi")))
     var theta = wins.select(col("i"), lit(1.0).as("th")).coalesce(1)
       .localCheckpoint()
     for (_ <- 1 to 5) {
@@ -3076,22 +2982,18 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val m0 = daily0.agg(min("day").as("d0"))
     val daily = daily0.crossJoin(broadcast(m0))
       .select((col("day") - col("d0")).as("t"), col("xc"))
-    val series = daily.select(lit("healthy").as("scenario"), col("t"),
+    val series = Caches.keep("q319", daily.select(lit("healthy").as("scenario"), col("t"),
         col("xc"))
       .unionByName(daily.select(lit("trend_injected").as("scenario"),
         col("t"), (col("xc") + col("t") * lit(200000L))
-          .cast(DecimalType(38, 0)).as("xc")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q319", series)
-    val pairs = series.toDF("scenario", "ti", "xi")
+          .cast(DecimalType(38, 0)).as("xc"))))
+    val pairs = Caches.keep("q319.pairs", series.toDF("scenario", "ti", "xi")
       .join(series.toDF("sc2", "tj", "xj"),
         col("scenario") === col("sc2") && col("ti") < col("tj"))
       .select(col("scenario"),
         signum((col("xj") - col("xi")).cast(DoubleType)).as("sg"),
         ((col("xj") - col("xi")).cast(DoubleType) / lit(100.0) /
-          (col("tj") - col("ti")).cast(DoubleType)).as("slope"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q319.pairs", pairs)
+          (col("tj") - col("ti")).cast(DoubleType)).as("slope")))
     val wS = Window.partitionBy("scenario").orderBy("slope")
     val med = pairs
       .withColumn("rk", row_number().over(wS))
@@ -3155,12 +3057,10 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
           lit(100000L)).otherwise(lit(-100000L))
           .cast(DecimalType(38, 0)).as("step"))
       .withColumn("xc", sum("step").over(wWalk)).drop("step")
-    val series = base.select(lit("healthy").as("scenario"), col("t"),
+    val series = Caches.keep("q320", base.select(lit("healthy").as("scenario"), col("t"),
         col("xc"))
       .unionByName(walk.select(lit("walk_injected").as("scenario"),
-        col("t"), col("xc")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("q320", series)
+        col("t"), col("xc"))))
     val sizes = Seq(8, 16, 24)
     val rs = sizes.map { bn =>
       val blk = series.select(col("scenario"), col("t"), col("xc"),
@@ -3259,12 +3159,11 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val gapUs = 30L * 60 * 1000 * 1000
     val eps = 1e-6
     val base = ev(s, dir).withColumn("ts_us", expr("ts div 1000"))
-    val sess = graft.seq.Sessionizer.sessionStats(base, Seq("user_id"),
-        col("ts_us"), Seq(col("event_id")), gapUs, col("value"))
-      .select(col("n_events"),
-        expr("CAST(start_ts AS BIGINT) div 86400000000").as("day"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q322", sess)
+    val sess = Caches.keep("entry.q322",
+      graft.seq.Sessionizer.sessionStats(base, Seq("user_id"),
+          col("ts_us"), Seq(col("event_id")), gapUs, col("value"))
+        .select(col("n_events"),
+          expr("CAST(start_ts AS BIGINT) div 86400000000").as("day")))
     val edges = Seq(1.5, 3.5, 6.5)
     val binned = sess.withColumn("bin",
       graft.drift.Drift.binIndex(col("n_events").cast("double"), edges))
@@ -3463,28 +3362,24 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
         col("r._2").as("text"))
     // 2. quality rules (integer-exact, SQL-mirrorable)
     val toks = TextOps.tokens(col("text"))
-    val scored = parsed
+    val scored = Caches.keep("entry.q327", parsed
       .withColumn("n_tok", size(toks).cast("long"))
       .withColumn("u", size(array_distinct(toks)).cast("long"))
       // division-free ratio rule (u/n_tok >= 0.30): n_tok = 0 rows must
       // yield FALSE, not a null/err from the division, on BOTH engines
       .withColumn("quality", col("n_tok") >= 5 && col("n_tok") <= 2000 &&
         col("u") * lit(1000000L) >= col("n_tok") * lit(300000L))
-      .withColumn("h", TextOps.strHash(col("text")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q327", scored)
+      .withColumn("h", TextOps.strHash(col("text"))))
     // 3. exact content dedup among quality survivors: keep-first by id
     val firstIds = scored.where(col("quality"))
       .groupBy("h").agg(min("doc_id").as("first_id"))
     // persisted: flagged feeds the budget scalar, the prefix scan AND
     // the per-source funnel — three separate actions that otherwise
     // each re-run the dedup join over the scored cache (r16)
-    val flagged = scored
+    val flagged = Caches.keep("entry.q327", scored
       .join(firstIds, scored("h") === firstIds("h"), "left")
       .drop(firstIds("h"))
-      .withColumn("kept", col("quality") && col("doc_id") === col("first_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q327", flagged)
+      .withColumn("kept", col("quality") && col("doc_id") === col("first_id")))
     // 4. token-budget greedy selection over the kept set (q223 machinery)
     val kept = flagged.where(col("kept"))
       .withColumn("key",
@@ -3719,10 +3614,9 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val d = doc(s, dir).select(col("doc_id"), col("text"))
     val base = d.unionByName(d.where(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 10000L).as("doc_id"), col("text")))
-    val bands = graft.dedup.MinHashLSH.bandKeys(base, "doc_id", "text",
-        n = 3, k = 16, bands = 4)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q332", bands)
+    val bands = Caches.keep("entry.q332",
+      graft.dedup.MinHashLSH.bandKeys(base, "doc_id", "text",
+          n = 3, k = 16, bands = 4))
     val firsts = bands.groupBy("band_idx", "band_key")
       .agg(min("id").as("first_id"))
     bands.join(firsts, Seq("band_idx", "band_key"))
@@ -3946,12 +3840,10 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     */
   private[graft] def qFrontierCapstone(s: SparkSession, dir: String): DataFrame = {
     import graft.text.{Html, Robots, TextOps, Urls}
-    val parts = urlFixture(s, dir)
+    val parts = Caches.keep("entry.q338", urlFixture(s, dir)
       .select(col("doc_id"), Urls.partsCol(col("raw")).as("p"))
       .select(col("doc_id"), col("p._1").as("canonical"),
-        col("p._3").as("registrable"), col("p._5").as("path"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("entry.q338", parts)
+        col("p._3").as("registrable"), col("p._5").as("path")))
     val firsts = parts.groupBy("canonical").agg(min("doc_id").as("first_id"))
     val flagged = parts.join(firsts, Seq("canonical"))
       .withColumn("kept", col("doc_id") === col("first_id"))

@@ -1,6 +1,6 @@
 package graft.eval
 
-import graft.core.Quantiles
+import graft.core.{Caches, Quantiles}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -68,8 +68,8 @@ object GridSearch {
     import graft.score.{IfScoreExpr, IsolationForest}
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(col(idCol), col(featuresCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = Caches.keep("gridsearch.ifParamGrid",
+      df.select(col(idCol), col(featuresCol)))
     // one TakeOrdered job: every candidate fits from the same pool
     val pool = IsolationForest.collectPool(base, idCol, featuresCol, poolSize)
     val models = grid.map { case (numTrees, maxSamples) =>
@@ -85,7 +85,6 @@ object GridSearch {
         min(s).as(s"mn_$i"), max(s).as(s"mx_$i"))
     }
     val r = scored.agg(aggs.head, aggs.tail: _*).head()
-    graft.core.Caches.retain("gridsearch.ifParamGrid", base)
     val rows = grid.zipWithIndex.map { case ((numTrees, maxSamples), i) =>
       val mu = r.getDouble(4 * i); val sd = r.getDouble(4 * i + 1)
       val mn = r.getDouble(4 * i + 2); val mx = r.getDouble(4 * i + 3)
@@ -117,7 +116,7 @@ object GridSearch {
     require(k >= 2, "need at least 2 folds")
     val s = col(scoreCol).cast("double")
     val y = col(labelCol)
-    val base = df.select(
+    val base = Caches.keep("gridsearch.cvThresholdGrid", df.select(
         col(idCol).cast("long").as("id"), y.as("y"), s.as("s"))
       // pmod, not %: Scala/Spark % is a signed remainder, so a negative
       // id would land in a negative fold and silently match no
@@ -128,8 +127,7 @@ object GridSearch {
         when(col("id").isNull, raise_error(lit(
           "cvThresholdGrid: id column cast to null — fold assignment needs numeric non-null ids")))
           .otherwise(
-            pmod(pmod(col("id"), lit(FoldP)) * lit(FoldC1 % FoldP) + lit(FoldC2), lit(FoldP)) % k))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            pmod(pmod(col("id"), lit(FoldP)) * lit(FoldC1 % FoldP) + lit(FoldC2), lit(FoldP)) % k)))
     // ALL k×|ps| exact train-side thresholds from ONE multi-fold prefix
     // scan (3 jobs total), instead of k independent quantile selections
     val thr = foldThresholds(base, k, ps)
@@ -163,10 +161,9 @@ object GridSearch {
         when(lit(2) * col("tp") + col("fp") + col("fn") === 0, lit(null))
           .otherwise((lit(2.0) * col("tp")) /
             (lit(2) * col("tp") + col("fp") + col("fn")).cast("double")))
-    // materialize BEFORE releasing `out`'s dependency — then hand the
-    // cache to the retention registry for steady-state reruns
+    // materialize while `base` is still cached: the returned frame is
+    // built from the collected rows
     val local = out.collect().toIndexedSeq
-    graft.core.Caches.retain("gridsearch.cvThresholdGrid", base)
     df.sparkSession.createDataFrame(
       df.sparkSession.sparkContext.parallelize(local, 1), out.schema)
   }
@@ -199,9 +196,10 @@ object GridSearch {
       .groupBy(col("s").cast("double").as("score"))
       .agg(cnts.head, cnts.tail: _*)
     val parts = math.max(1, spark.sparkContext.defaultParallelism)
+    // not kept: the two passes below read it, then it is released
     val sorted = perScore.repartitionByRange(parts, col("score"))
       .sortWithinPartitions("score")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(Caches.level)
     val sub = sorted.rdd.mapPartitionsWithIndex { case (i, it) =>
       val t = new Array[Long](k)
       it.foreach { r => var f = 0; while (f < k) { t(f) += r.getLong(f + 1); f += 1 } }

@@ -1,5 +1,6 @@
 package graft.eval
 
+import graft.core.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -38,10 +39,8 @@ object Isotonic {
     val ps = (1 until bins).map(_.toDouble / bins)
     val ts = graft.core.Quantiles.exactQuantiles(slim, "s", ps).distinct
     val bin = ts.map(t => when(col("s") > lit(t), 1).otherwise(0)).reduce(_ + _)
-    val perBin = slim.groupBy(bin.cast("long").as("bin"))
-      .agg(count(lit(1)).as("n"), sum(col("y")).cast("long").as("pos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("isotonic.bins", perBin)
+    val perBin = Caches.keep("isotonic.bins", slim.groupBy(bin.cast("long").as("bin"))
+      .agg(count(lit(1)).as("n"), sum(col("y")).cast("long").as("pos")))
     // triangle join over bin indices: (i, j ≤ i, l ≥ i) with the range
     // [j, l] rate; every frame here is ≤ B or ≤ B³ rows
     val b = perBin.select(col("bin"))

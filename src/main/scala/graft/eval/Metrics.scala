@@ -1,5 +1,6 @@
 package graft.eval
 
+import graft.core.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -130,10 +131,10 @@ object Metrics {
 
   /** [[prefixScoreCounts]] plus the grand totals (P, N) — the subtotal
     * fold already produces them, so callers avoid a separate
-    * full-input counting scan. The internal cached sort is registered
-    * with [[graft.core.Caches]]: it stays warm for the caller's action
-    * and same-operator reruns, and is swept when a different operator
-    * retains — bounded, not leaked.
+    * full-input counting scan. The internal cached sort is kept with
+    * [[graft.core.Caches.keep]]: it stays warm for the caller's action
+    * and same-operator reruns, and is swept when other operators keep
+    * theirs — bounded, not leaked.
     */
   private def prefixScan(df: DataFrame, labelCol: String,
                          scoreCol: String): (DataFrame, Long, Long) = {
@@ -194,9 +195,9 @@ object Metrics {
   def calibrationBins(df: DataFrame, labelCol: String, scoreCol: String,
                       bins: Int = 10): DataFrame = {
     require(bins >= 2, s"calibrationBins needs at least 2 bins: $bins")
-    val slim = df.select(col(labelCol).cast("int").as("y"),
-        col(scoreCol).cast("double").as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val slim = Caches.keep("metrics.calibration",
+      df.select(col(labelCol).cast("int").as("y"),
+          col(scoreCol).cast("double").as("s")))
     val ps = (1 until bins).map(_.toDouble / bins)
     val ts = graft.core.Quantiles.exactQuantiles(slim, "s", ps).distinct
     val bin = ts.map(t => when(col("s") > lit(t), 1).otherwise(0)).reduce(_ + _)
@@ -204,7 +205,6 @@ object Metrics {
       .agg(count(lit(1)).as("n"),
         (graft.core.Stats.dsum(col("s")) / count(lit(1))).as("mean_score"),
         (sum(col("y")).cast("double") / count(lit(1)).cast("double")).as("pos_rate"))
-    graft.core.Caches.retain("metrics.calibration", slim)
     out
   }
 
@@ -245,9 +245,9 @@ object Metrics {
   private def binnedCounts(df: DataFrame, labelCol: String, scoreCol: String,
                            bins: Int): (Array[org.apache.spark.sql.Row],
                             org.apache.spark.sql.types.StructType, Long, Long) = {
-    val slim = df.select(col(labelCol).cast("int").as("y"),
-        col(scoreCol).cast("double").as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val slim = Caches.keep("metrics.binnedRoc",
+      df.select(col(labelCol).cast("int").as("y"),
+          col(scoreCol).cast("double").as("s")))
     val ps = (1 until bins).map(_.toDouble / bins)
     val ts = graft.core.Quantiles.exactQuantiles(slim, "s", ps).distinct
     val bin = ts.map(t => when(col("s") > lit(t), 1).otherwise(0)).reduce(_ + _)
@@ -255,7 +255,6 @@ object Metrics {
       .agg(count(when(col("y") === 1, 1)).as("pos"),
         count(when(col("y") === 0, 1)).as("neg"))
     val rows = agged.collect()
-    graft.core.Caches.retain("metrics.binnedRoc", slim)
     (rows, agged.schema, rows.map(_.getLong(1)).sum, rows.map(_.getLong(2)).sum)
   }
 

@@ -1,6 +1,6 @@
 package graft.score
 
-import graft.core.{Quantiles, Stats}
+import graft.core.{Caches, Quantiles, Stats}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -62,9 +62,8 @@ object ZScoreAnomaly {
     val full = score(df, cols, fitStats(df, cols), scoreCol)
     val slim = if (keep.isEmpty) full
       else full.select((keep.filterNot(_ == scoreCol) :+ scoreCol).map(col): _*)
-    val scored = slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val scored = Caches.keep("zscore.detect", slim)
     val thr = Quantiles.exactQuantiles(scored, scoreCol, Seq(p)).head
-    graft.core.Caches.retain("zscore.detect", scored)
     scored.withColumn(flagCol, col(scoreCol) > lit(thr))
   }
 }

@@ -1,9 +1,9 @@
 package graft.sim
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -91,11 +91,10 @@ object Ann {
   def cosineTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
                  queryPred: Column = lit(true)): DataFrame = {
     GraftFunctions.register(df.sparkSession)
-    val v = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .withColumn("n2", GraftFunctions.norm2(col("vec")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val v = Caches.keep("ann.cosineTopK",
+      df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+        .withColumn("n2", GraftFunctions.norm2(col("vec"))))
     val q = v.where(queryPred)
-    graft.core.Caches.retain("ann.cosineTopK", v)
     rerank(q, v, k)
   }
 
@@ -107,16 +106,15 @@ object Ann {
               dim: Int, tables: Int = 4, bitsPerTable: Int = 8,
               queryPred: Column = lit(true)): DataFrame = {
     GraftFunctions.register(df.sparkSession)
-    val v = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .withColumn("n2", GraftFunctions.norm2(col("vec")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val bk = v
+    val v = Caches.keep("ann.lshTopK",
+      df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+        .withColumn("n2", GraftFunctions.norm2(col("vec"))))
+    val bk = Caches.keep("ann.lshTopK", v
       .select(col("id"),
         planeSigns(col("vec"), dim, tables * bitsPerTable).as("signs"))
       .select(col("id"),
         posexplode(bucketsFromSigns(col("signs"), tables, bitsPerTable)))
-      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket"))
     // candidate (query, target) pairs sharing any bucket
     val cand = bk.as("qx").where(queryPredOnId(queryPred))
       .join(bk.as("tx"),
@@ -130,7 +128,6 @@ object Ann {
       .select(col("qid").as("a"), col("tid").as("b"),
         (GraftFunctions.dot(col("qvec"), col("tvec")) /
           (sqrt(col("qn2")) * sqrt(col("tn2")))).as("cos"))
-    graft.core.Caches.retain("ann.lshTopK", v, bk)
     topK(withVecs, k)
   }
 
@@ -144,9 +141,9 @@ object Ann {
               nCells: Int = 16, nprobe: Int = 2,
               queryPred: Column = lit(true)): DataFrame = {
     GraftFunctions.register(df.sparkSession)
-    val v = df.select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("vec"))
-      .withColumn("n2", GraftFunctions.norm2(col("vec")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val v = Caches.keep("ann.ivfTopK",
+      df.select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("vec"))
+        .withColumn("n2", GraftFunctions.norm2(col("vec"))))
     val km = KMeans.fit(v, "id", "vec", nCells)
     // cell assignment and probe selection are codegen'd expressions
     // over a typedlit codebook (the Pq.ivfPqTopK / SemDedup.assign
@@ -160,12 +157,11 @@ object Ann {
     val centersLit = typedlit(km.centers.map(_.toSeq).toSeq)
     val cdists = transform(centersLit, ctr =>
       GraftFunctions.sqDist(col("vec"), ctr))
-    val assigned = v.withColumn("cdists", cdists)
+    val assigned = Caches.keep("ann.ivfTopK", v.withColumn("cdists", cdists)
       .withColumn("cell",
         element_at(filter(sequence(lit(0), lit(nCells - 1)),
           i => element_at(col("cdists"), i + 1) === array_min(col("cdists"))), 1))
-      .drop("cdists")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .drop("cdists"))
     // nprobe nearest cells: sort (distance, index) structs — same
     // order as the old sortBy(identity) on (d, c) for finite doubles
     val probes = assigned.where(queryPred)
@@ -184,7 +180,6 @@ object Ann {
         (GraftFunctions.dot(col("qvec"), col("tvec")) /
           (sqrt(col("qn2")) * sqrt(col("tn2")))).as("cos"))
       .distinct()
-    graft.core.Caches.retain("ann.ivfTopK", v, assigned)
     topK(pairs, k)
   }
 
@@ -202,9 +197,7 @@ object Ann {
       df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
         .withColumn("n2", GraftFunctions.norm2(col("vec")))
     val q = prep(queries)
-    val t = prep(corpus)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("ann.knnJoin", t)
+    val t = Caches.keep("ann.knnJoin", prep(corpus))
     rerank(q, t, k)
   }
 

@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.core.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -33,12 +34,10 @@ object Dbscan {
   def cluster(df: DataFrame, idCol: String, xCol: String, yCol: String,
               epsCenti: Long, minPts: Int): DataFrame = {
     val eps2 = epsCenti * epsCenti
-    val pts = df.select(col(idCol).cast("long").as("id"),
+    val pts = Caches.keep("dbscan.pts", df.select(col(idCol).cast("long").as("id"),
         col(xCol).cast("long").as("x"), col(yCol).cast("long").as("y"))
       .withColumn("cx", expr(s"x div $epsCenti"))
-      .withColumn("cy", expr(s"y div $epsCenti"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("dbscan.pts", pts)
+      .withColumn("cy", expr(s"y div $epsCenti")))
     // each point probes its 3x3 cell neighborhood: every ordered
     // eps-pair is found exactly once (via the offset aiming at the
     // neighbor's cell) -- completeness is geometric, not probabilistic
@@ -49,23 +48,19 @@ object Dbscan {
       .select(col("id").as("a"), col("x").as("xa"), col("y").as("ya"),
         (col("cx") + col("off._1")).as("kcx"),
         (col("cy") + col("off._2")).as("kcy"))
-    val nbr = probe.join(
+    val nbr = Caches.keep("dbscan.nbr", probe.join(
         pts.select(col("id").as("b"), col("x").as("xb"),
           col("y").as("yb"), col("cx").as("kcx"), col("cy").as("kcy")),
         Seq("kcx", "kcy"))
       .where(col("a") =!= col("b") &&
         (col("xa") - col("xb")) * (col("xa") - col("xb")) +
         (col("ya") - col("yb")) * (col("ya") - col("yb")) <= eps2)
-      .select(col("a"), col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("dbscan.nbr", nbr)
+      .select(col("a"), col("b")))
     val counts = nbr.groupBy("a").agg(count(lit(1)).as("n_nbr"))
-    val roles = pts.select(col("id"))
+    val roles = Caches.keep("dbscan.roles", pts.select(col("id"))
       .join(counts.withColumnRenamed("a", "id"), Seq("id"), "left")
       .withColumn("n_in_eps", coalesce(col("n_nbr"), lit(0L)) + 1) // + self
-      .withColumn("is_core", col("n_in_eps") >= minPts)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("dbscan.roles", roles)
+      .withColumn("is_core", col("n_in_eps") >= minPts))
     val coreIds = roles.where(col("is_core")).select(col("id"))
     val coreEdges = nbr
       .join(coreIds.withColumnRenamed("id", "a"), "a")

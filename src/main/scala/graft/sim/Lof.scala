@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.core.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,22 +41,18 @@ object Lof {
     * (id, k_dist_micro, lrd_micro, lof) — lof as double.
     */
   def scores(df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val v = df.select(col(idCol).cast("long").as("id"),
+    val v = Caches.keep("lof.vectors", df.select(col(idCol).cast("long").as("id"),
         col(vecCol).as("vec"))
-      .withColumn("n2", VectorMath.norm2(col("vec")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("lof.vectors", v)
+      .withColumn("n2", VectorMath.norm2(col("vec"))))
     val pairs = v.as("x").join(v.as("y"), col("x.id") =!= col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
         (lit(1.0) - VectorMath.dot(col("x.vec"), col("y.vec")) /
           (sqrt(col("x.n2")) * sqrt(col("y.n2")))).as("dist"))
     val wRank = Window.partitionBy("a").orderBy(asc("dist"), asc("b"))
-    val knn = pairs.withColumn("rank", row_number().over(wRank))
+    val knn = Caches.keep("lof.knn", pairs.withColumn("rank", row_number().over(wRank))
       .where(col("rank") <= k)
       // micro-unit distance: exact integer from here on
-      .withColumn("dist_micro", round(col("dist") * 1e6).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("lof.knn", knn)
+      .withColumn("dist_micro", round(col("dist") * 1e6).cast("long")))
     val kdist = knn.groupBy("a")
       .agg(max("dist_micro").as("k_dist_micro")) // rank-k row has max dist
     // reach-dist(a,b) = max(k-distance(b), dist(a,b)) in micro-units
@@ -67,14 +64,12 @@ object Lof {
     // every lrd/LOF; on a full fixture count(*) == k and the outputs —
     // and the SQL oracle, which divides by its own per-group counts the
     // same way — are unchanged
-    val lrd = reach.groupBy("a")
+    val lrd = Caches.keep("lof.lrd", reach.groupBy("a")
       .agg(sum("reach_micro").as("sum_reach_micro"),
         count(lit(1)).as("n_nbr"))
       // lrd = |N_k| / (sum_reach/1e6); micro-scaled: round(n*1e12/sum)
       .withColumn("lrd_micro",
-        round(col("n_nbr") * lit(1e12) / col("sum_reach_micro")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain("lof.lrd", lrd)
+        round(col("n_nbr") * lit(1e12) / col("sum_reach_micro")).cast("long")))
     val sumLrdB = knn.join(lrd.select(col("a").as("b"),
         col("lrd_micro").as("lrd_b")), "b")
       .groupBy("a").agg(sum("lrd_b").as("sum_lrd_b"),

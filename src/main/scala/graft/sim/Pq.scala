@@ -1,8 +1,8 @@
 package graft.sim
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Product quantization (Jégou et al. 2011) — the vector-store
   * compression step one tier beyond q76's int8 scalar quantization:
@@ -137,14 +137,13 @@ object Pq {
     def cellDists(vec: Column): Column = transform(coarseLit, ctr =>
       aggregate(zip_with(vec, ctr, (x, y) => (x - y) * (x - y)),
         lit(0.0), (a, x) => a + x))
-    val enc = encode(df, idCol, vecCol, model)
+    val enc = Caches.keep("sim.ivfPq", encode(df, idCol, vecCol, model)
       .withColumn("n2", GraftFunctions.norm2(col("vec")))
       .withColumn("cdists", cellDists(col("vec")))
       .withColumn("cell", element_at(filter(
         sequence(lit(0), lit(nCells - 1)),
         i => element_at(col("cdists"), i + 1) === array_min(col("cdists"))), 1))
-      .drop("cdists")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .drop("cdists"))
     // queries: nprobe nearest cells + the M per-sub-space ADC tables
     val qBase = enc.where(queryPred)
       .withColumn("cdists", cellDists(col("vec")))
@@ -178,7 +177,6 @@ object Pq {
       .withColumn("arank", row_number().over(
         Window.partitionBy("qid").orderBy(asc("adc"), asc("tid"))))
       .where(col("arank") <= k * rerankFactor)
-    graft.core.Caches.retain("sim.ivfPq", enc)
     shortlist
       .select(col("qid").as("a"), col("tid").as("b"),
         (GraftFunctions.dot(col("qvec"), col("tvec")) /
@@ -201,13 +199,13 @@ object Pq {
     val model = fit(df, idCol, vecCol, m, k)
     val enc = encode(df, idCol, vecCol, model)
     // dual path: per sub-space, the KMeans scorer UDF on the slice
-    val withCheck = (0 until m).foldLeft(enc) { (acc, mi) =>
+    val withCheck = Caches.keep("sim.pqAudit", (0 until m).foldLeft(enc) { (acc, mi) =>
       val sub = model.subDim
       val km = new KMeans.Model(model.codebooks(mi))
       km.transform(
         acc.withColumn(s"sub_$mi", slice(col("vec"), mi * sub + 1, sub)),
         s"sub_$mi", s"code_check_$mi")
-    }.persist(StorageLevel.MEMORY_AND_DISK)
+    })
     val codesValid = (0 until m).map(mi =>
       col(s"code_$mi") >= 0 && col(s"code_$mi") < k).reduce(_ && _)
     val assignOk = (0 until m).map(mi =>
@@ -227,7 +225,6 @@ object Pq {
       (count(when(assignOk, 1)) === count(lit(1))).as("assign_ok"),
       (count(when(qerrNonneg, 1)) === count(lit(1))).as("qerr_nonneg"),
       (count(when(qerrMinimal, 1)) === count(lit(1))).as("qerr_minimal"))
-    graft.core.Caches.retain("sim.pqAudit", withCheck)
     out.select(col("n_vecs"), col("dim"), lit(m.toLong).as("m"),
       lit(k.toLong).as("k"),
       (col("dim") * 8).as("bytes_raw"), lit(m.toLong).as("bytes_pq"),

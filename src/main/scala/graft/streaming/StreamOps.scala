@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming surface.
   *
@@ -11,85 +11,20 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * incremental counterpart: the same Column-expression operators
   * (profilers, scorers, text ops are all pure row-wise/aggregation
   * expressions) applied to an unbounded source with event-time
-  * semantics. Three shapes cover the reference's scoring flows:
+  * semantics. Four incremental twins of batch operators, each checked
+  * against its batch form (StreamingSpec, `tools.StreamParity`):
   *
-  *  - [[windowedStats]] — watermarked sliding-window aggregates
-  *    (profiling over a moving horizon);
-  *  - [[foreachBatchScorer]] — per-micro-batch application of ANY batch
-  *    transform (e.g. a broadcast IsolationForest/LinearAE scorer):
-  *    incremental scoring with zero operator changes;
-  *  - [[runningMaxPerKey]] — custom keyed state via mapGroupsWithState
-  *    (per-series cumulative extremes, the stateful primitive the
-  *    sliding-sequence operators need in streaming form);
   *  - [[streamingPsi]] — continuous drift monitoring: PSI per
-  *    event-time window against a frozen training baseline.
+  *    event-time window against a frozen training baseline;
+  *  - [[streamingSessionize]] — gap-based sessionization with
+  *    event-time-timeout keyed state;
+  *  - [[streamingNearDupAlerts]] — banded near-duplicate candidates
+  *    across micro-batches;
+  *  - [[streamingEwma]] — a per-key EWMA carried in keyed state.
   *
-  * Scale: watermarks bound state; per-key state is O(distinct keys);
-  * foreachBatch inherits the batch operators' shuffle/broadcast shapes.
+  * Scale: watermarks bound state; per-key state is O(distinct keys).
   */
 object StreamOps {
-
-  /** Watermarked sliding-window stats per key: count / sum / mean of
-    * `valueCol` over `windowDur` windows sliding every `slideDur`.
-    * Late rows beyond `watermarkDelay` are dropped (deterministic
-    * completeness contract instead of unbounded state).
-    */
-  def windowedStats(stream: DataFrame, tsCol: String, keyCol: String,
-                    valueCol: String, windowDur: String, slideDur: String,
-                    watermarkDelay: String): DataFrame =
-    stream
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowDur, slideDur), col(keyCol))
-      .agg(count(lit(1)).as("n"),
-        sum(col(valueCol)).as("value_sum"),
-        avg(col(valueCol)).as("value_mean"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"),
-        col(keyCol), col("n"), col("value_sum"), col("value_mean"))
-
-  /** Threshold alert stream: rows whose score exceeds thr (the P9
-    * anomaly-flag predicate, streaming form — pure stateless filter).
-    */
-  def thresholdAlerts(stream: DataFrame, scoreCol: String, thr: Double): DataFrame =
-    stream.where(col(scoreCol) > thr)
-
-  /** Apply an arbitrary *batch* transform to every micro-batch and hand
-    * the result to `sink`. This is how the fitted anomaly models score
-    * incrementally: `batchTransform = df => model.transform(df, ...)`.
-    */
-  def foreachBatchScorer(stream: DataFrame,
-                         batchTransform: DataFrame => DataFrame,
-                         sink: (DataFrame, Long) => Unit,
-                         checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink(batchTransform(batch), id)
-      }
-      .start()
-
-  /** Streaming exact deduplication: drop rows whose key was already
-    * seen, with state bounded by the event-time watermark
-    * (`dropDuplicatesWithinWatermark`) — the incremental form of
-    * [[graft.dedup.Dedup.dropExactDups]] for continuously-ingested
-    * corpora. Keys older than the watermark are evicted from state, so
-    * memory is O(keys per watermark window), not O(stream).
-    */
-  def streamingDedup(stream: DataFrame, keyCols: Seq[String], tsCol: String,
-                     watermarkDelay: String): DataFrame =
-    stream
-      .withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Stream–static enrichment join: each micro-batch joins against a
-    * (small) static dimension — broadcast per batch, no stream-side
-    * state. The streaming form of the engine's dim joins (q31).
-    */
-  def enrich(stream: DataFrame, dim: DataFrame,
-             joinCols: Seq[String]): DataFrame =
-    stream.join(org.apache.spark.sql.functions.broadcast(dim), joinCols)
 
   /** Streaming drift monitor: PSI per event-time window against a
     * frozen training-time baseline
@@ -164,8 +99,8 @@ object StreamOps {
     * idle keys time out, emit, and are removed. Events are processed
     * in event-time order within each micro-batch; cross-batch
     * disorder beyond the watermark delay is dropped upstream by the
-    * watermark itself (the same completeness contract as
-    * [[windowedStats]]).
+    * watermark itself: a window or session closes once the watermark
+    * passes its end, and later events for it are not counted.
     */
   def streamingSessionize(stream: DataFrame, tsCol: String, keyCol: String,
                           valueCol: String, gapMs: Long,
@@ -321,25 +256,5 @@ object StreamOps {
           (key, n, s)
       }
       .toDF("key", "n", "ewma")
-  }
-
-  /** Keyed running maximum via explicit state (mapGroupsWithState):
-    * emits (key, running_max_so_far) once per key per micro-batch.
-    */
-  def runningMaxPerKey(stream: DataFrame, keyCol: String,
-                       valueCol: String): DataFrame = {
-    import stream.sparkSession.implicits._
-    stream
-      .select(col(keyCol).cast("string").as("k"), col(valueCol).cast("double").as("v"))
-      .as[(String, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Double)], state: GroupState[Double]) =>
-          val localMax = rows.map(_._2).foldLeft(Double.NegativeInfinity)(math.max)
-          val newMax = if (state.exists) math.max(state.get, localMax) else localMax
-          state.update(newMax)
-          (key, newMax)
-      }
-      .toDF("key", "running_max")
   }
 }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -24,18 +25,16 @@ object BigramLm {
 
   /** (id, n_bigrams, avg_logp) for every document with ≥ 2 tokens. */
   def score(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = df.select(col(idCol).cast("long").as("id"),
-        TextOps.tokens(col(textCol)).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val t = Caches.keep("text.bigramLm", df.select(col(idCol).cast("long").as("id"),
+        TextOps.tokens(col(textCol)).as("toks")))
     val pairType = "array<struct<w1:string,w2:string>>"
-    val bg = t.select(col("id"), explode(
+    val bg = Caches.keep("text.bigramLm", t.select(col("id"), explode(
         when(size(col("toks")) >= 2,
           transform(sequence(lit(1), size(col("toks")) - 1),
             i => struct(element_at(col("toks"), i).as("w1"),
               element_at(col("toks"), i + 1).as("w2"))))
           .otherwise(array().cast(pairType))).as("b"))
-      .select(col("id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), col("b.w1").as("w1"), col("b.w2").as("w2")))
     val bc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
     val uc = t.select(explode(col("toks")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c1"))
@@ -49,7 +48,6 @@ object BigramLm {
       .groupBy("id")
       .agg(count(lit(1)).as("n_bigrams"),
         round(sum("lp").cast("double") / count(lit(1)), 6).as("avg_logp"))
-    graft.core.Caches.retain("text.bigramLm", t, bg)
     out
   }
 

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -55,12 +56,13 @@ object BpeTrainer {
 
   /** Train k merges over the corpus text column. */
   def train(df: DataFrame, textCol: String, k: Int): Trained = {
-    val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // each round persists its frame and releases the previous one, so
+    // only the last round's frame is registered, after the loop
     var words = df
       .select(explode(TextOps.tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
       .withColumn("syms", charSyms(col("w")))
-      .persist(storage)
+      .persist(Caches.level)
     val merges = scala.collection.mutable.ListBuffer.empty[Merge]
     val sizes = scala.collection.mutable.ListBuffer.empty[Long]
     var r = 0
@@ -78,7 +80,7 @@ object BpeTrainer {
         merges += m
         val next = words
           .withColumn("syms", applyMerge(col("syms"), m.p1, m.p2))
-          .persist(storage)
+          .persist(Caches.level)
         sizes += next.agg(sum(size(col("syms")).cast("long") * col("c")))
           .head().getLong(0) // materializes `next` before the release
         words.unpersist()
@@ -86,7 +88,7 @@ object BpeTrainer {
         r += 1
       }
     }
-    graft.core.Caches.retain("text.bpeTrainer", words)
+    Caches.keep("text.bpeTrainer", words)
     Trained(words, merges.toList, sizes.toList)
   }
 }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -47,14 +48,12 @@ object FuzzyJoin {
     */
   def blockedPairs(df: DataFrame, idCol: String, textCol: String,
                    blockKey: Column, maxDist: Int): DataFrame = {
-    val keyed = df.select(blockKey.as("__block"),
-      col(idCol), col(textCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain(s"fuzzyjoin:$idCol:$textCol", keyed)
-    val dt = keyed.select(col("__block"), col(textCol).as("__ta"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.Caches.retain(s"fuzzyjoin:$idCol:$textCol", dt)
+    val keyed = Caches.keep(s"fuzzyjoin:$idCol:$textCol",
+      df.select(blockKey.as("__block"),
+        col(idCol), col(textCol)))
+    val dt = Caches.keep(s"fuzzyjoin:$idCol:$textCol",
+      keyed.select(col("__block"), col(textCol).as("__ta"))
+        .distinct())
     // candidate DISTINCT-text pairs, canonical text order; equal texts
     // form one dist-0 candidate class per text
     val cand = dt

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -46,9 +47,8 @@ object Vocab {
     // persisted: the exploded token rows feed BOTH the df counts and
     // the capped-id window — without the cache the tokenize + distinct
     // + explode map stage (the expensive part) runs twice
-    val rows = df.select(col(idCol).cast("long").as("id"),
-        explode(array_distinct(TextOps.tokens(col(textCol)))).as("token"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = Caches.keep("vocab.postings", df.select(col(idCol).cast("long").as("id"),
+        explode(array_distinct(TextOps.tokens(col(textCol)))).as("token")))
     val dfc = rows.groupBy("token").agg(count(lit(1)).as("df"))
       .where(col("df") >= minDf)
     val top = rows
@@ -57,7 +57,6 @@ object Vocab {
       .where(col("rk") <= cap)
       .groupBy("token")
       .agg(array_join(sort_array(collect_list("id")), ",").as("doc_ids"))
-    graft.core.Caches.retain("vocab.postings", rows)
     dfc.join(top, Seq("token"))
   }
 

@@ -42,7 +42,7 @@ object StreamParity {
       .select(col("user_id").cast("string").as("k"),
         expr("ts div 1000000").cast("long").as("t_ms"),
         col("value").cast("double").as("v"))
-      .persist()
+      .persist(graft.core.Caches.level) // not kept: the run's session ends with it
     val n = ev.count()
     require(n > 0, s"no events in $sfDir")
 

@@ -11,56 +11,6 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(minute: Int) = new Timestamp(minute * 60000L)
 
-  test("windowedStats: watermarked sliding windows aggregate per key") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, String, Double)]
-    val out = StreamOps.windowedStats(
-      in.toDF.toDF("ts", "user", "value"),
-      "ts", "user", "value", "10 minutes", "5 minutes", "5 minutes")
-    val q = out.writeStream.format("memory").queryName("ws")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData((ts(1), "u1", 10.0), (ts(2), "u1", 20.0), (ts(3), "u2", 5.0))
-      q.processAllAvailable()
-      // advance event time far past watermark to close the early windows
-      in.addData((ts(60), "u1", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("ws").collect()
-      val u1 = rows.filter(r => r.getAs[String]("user") == "u1" &&
-        r.getAs[Timestamp]("window_start").getTime == 0L)
-      assert(u1.length == 1)
-      assert(u1.head.getAs[Long]("n") == 2L)
-      assert(u1.head.getAs[Double]("value_sum") == 30.0)
-    } finally q.stop()
-  }
-
-  test("foreachBatchScorer applies a fitted batch model per micro-batch") {
-    implicit val sqlCtx = spark.sqlContext
-    // fit a linear AE on static rank-1 data, then score a stream with it
-    val fitDf = (0 until 50).map(i => (i.toLong, Seq(i * 0.1, i * 0.1)))
-      .toDF("id", "features")
-    val model = graft.score.LinearAE.fit(fitDf, "id", "features", k = 1,
-      sampleSize = 50)
-    val in = MemoryStream[(Long, Seq[Double])]
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    val q = StreamOps.foreachBatchScorer(
-      in.toDF.toDF("id", "features"),
-      batch => model.transform(batch, "features", "err"),
-      (scored, _) => seen.synchronized {
-        seen ++= scored.select("id", "err").collect()
-          .map(r => (r.getLong(0), r.getDouble(1)))
-      },
-      ckpt)
-    try {
-      in.addData((1L, Seq(0.5, 0.5)), (2L, Seq(5.0, -5.0)))
-      q.awaitTermination()
-      val m = seen.toMap
-      assert(m(1L) < 1e-10)   // on the learned subspace
-      assert(m(2L) > 1.0)     // far off-subspace
-    } finally q.stop()
-  }
-
   test("streamingSessionize: gap-break within a batch, timeout via watermark") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Timestamp, String, Double)]
@@ -158,25 +108,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("runningMaxPerKey keeps cumulative state across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(String, Double)]
-    val out = StreamOps.runningMaxPerKey(in.toDF.toDF("k", "v"), "k", "v")
-    val q = out.writeStream.format("memory").queryName("rm")
-      .outputMode(OutputMode.Update).start()
-    try {
-      in.addData(("a", 1.0), ("a", 3.0), ("b", 2.0))
-      q.processAllAvailable()
-      in.addData(("a", 2.0), ("b", 9.0))
-      q.processAllAvailable()
-      val last = spark.table("rm").collect()
-        .map(r => (r.getString(0), r.getDouble(1)))
-        .groupBy(_._1).map { case (k, vs) => k -> vs.last._2 }
-      assert(last("a") == 3.0) // 2.0 did not lower the running max
-      assert(last("b") == 9.0)
-    } finally q.stop()
-  }
-
   test("streamingNearDupAlerts matches batch banded candidates across batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -256,40 +187,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streamingDedup drops repeated keys across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Timestamp, Long, String)]
-    val out = StreamOps.streamingDedup(
-      in.toDF.toDF("ts", "doc_id", "text"), Seq("doc_id"), "ts", "10 minutes")
-    val q = out.writeStream.format("memory").queryName("sd")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData((ts(1), 1L, "a"), (ts(1), 2L, "b"), (ts(2), 1L, "a-dup"))
-      q.processAllAvailable()
-      in.addData((ts(3), 2L, "b-dup"), (ts(3), 3L, "c"))
-      q.processAllAvailable()
-      val ids = spark.table("sd").select("doc_id").as[Long].collect().sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  test("enrich: stream-static broadcast join per micro-batch") {
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
-    val in = MemoryStream[(Long, Double)]
-    val out = StreamOps.enrich(in.toDF.toDF("user_id", "value"), dim,
-      Seq("user_id"))
-    val q = out.writeStream.format("memory").queryName("en")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData((1L, 5.0), (2L, 6.0), (3L, 7.0))
-      q.processAllAvailable()
-      val rows = spark.table("en").collect()
-        .map(r => r.getAs[Long]("user_id") -> r.getAs[String]("tier")).toMap
-      assert(rows == Map(1L -> "gold", 2L -> "silver")) // 3 has no dim row
-    } finally q.stop()
-  }
-
   test("streamingPsi flags a shifted window against a frozen baseline") {
     implicit val sqlCtx = spark.sqlContext
     val baseline = (1 to 100).map(_.toDouble).toDF("x")
@@ -350,20 +247,6 @@ class StreamingSpec extends SparkSpec {
         assert(math.abs(streamed(wStart) - batchPsi) <= 1e-6,
           s"window $wStart: streaming ${streamed(wStart)} vs batch $batchPsi")
       }
-    } finally q.stop()
-  }
-
-  test("thresholdAlerts is a stateless pass-through filter") {
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Long, Double)]
-    val out = StreamOps.thresholdAlerts(in.toDF.toDF("id", "score"), "score", 0.5)
-    val q = out.writeStream.format("memory").queryName("ta")
-      .outputMode(OutputMode.Append).start()
-    try {
-      in.addData((1L, 0.1), (2L, 0.9), (3L, 0.6))
-      q.processAllAvailable()
-      val ids = spark.table("ta").select("id").as[Long].collect().sorted
-      assert(ids.toSeq == Seq(2L, 3L))
     } finally q.stop()
   }
 }
