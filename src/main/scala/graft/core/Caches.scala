@@ -8,9 +8,8 @@ import org.apache.spark.storage.StorageLevel
   * [[keep]] is the one call: it persists a frame at [[level]], registers
   * it in its operator's working set under a key, and returns it; it is
   * the only way to register a frame. No other code in `src/main` names
-  * a storage level or calls a bare `persist()` (CachesSpec scans for
-  * both). The scan does not match `.cache()`: `FrequencyIndexer.fit`'s
-  * `labels.cache()` is the one unregistered cache left.
+  * a storage level or calls a bare `persist()` or `.cache()` (CachesSpec
+  * scans for all three).
   *
   * The recurring trap it answers: an operator persists an intermediate,
   * builds its result on top, and returns the result lazily — the cache

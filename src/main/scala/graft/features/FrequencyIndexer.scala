@@ -3,6 +3,8 @@ package graft.features
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Caches
+
 /** Categorical → index by descending frequency — parity with spark.ml
   * `StringIndexer` with `handleInvalid="keep"` as fitted by the reference
   * (`lib/utils.py:205-207`).
@@ -33,7 +35,7 @@ object FrequencyIndexer {
       .groupBy(col(colName).as("label")).agg(count(lit(1)).as("cnt"))
       .withColumn("label_index", row_number().over(w).cast("long") - 1)
       .drop("cnt")
-    val cached = labels.cache()
+    val cached = Caches.keep("features.frequencyIndexer", labels)
     Model(colName, cached, cached.count())
   }
 }

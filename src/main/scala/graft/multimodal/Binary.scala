@@ -161,14 +161,9 @@ object Binary {
       Array[Byte](bitDepth.toByte, 2, 0, 0, 0) ++ be32(0) // truecolor, stub CRC
   }
 
-  def jpegHeader(width: Int, height: Int): Array[Byte] = {
-    val app0 = Array[Byte](0xff.toByte, 0xe0.toByte) ++ be16(16) ++
-      "JFIF".getBytes("US-ASCII") ++ Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0)
-    val sof0 = Array[Byte](0xff.toByte, 0xc0.toByte) ++ be16(17) ++
-      Array[Byte](8) ++ be16(height) ++ be16(width) ++
-      Array[Byte](3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)
-    Array[Byte](0xff.toByte, 0xd8.toByte) ++ app0 ++ sof0
-  }
+  def jpegHeader(width: Int, height: Int): Array[Byte] =
+    jpegSoi ++ jpegJfif ++
+      jpegSof(0xc0, width, height, 3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)
 
   def gifHeader(width: Int, height: Int, colorBits: Int): Array[Byte] = {
     "GIF89a".getBytes("US-ASCII") ++ le16(width) ++ le16(height) ++
@@ -1317,10 +1312,8 @@ object Binary {
     val tiff = "II".getBytes("US-ASCII") ++ le16(42) ++ le32(8) ++
       ifd ++ dt
     val payload = "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ tiff
-    val app1 = Array[Byte](0xff.toByte, 0xe1.toByte) ++
-      be16(payload.length + 2) ++ payload
     val base = jpegHeader(width, height)
-    base.take(2) ++ app1 ++ base.drop(2)
+    base.take(2) ++ seg(0xe1, payload) ++ base.drop(2)
   }
 
   /** Deterministic per-id EXIF fixture (orientation cycles 1..8,
@@ -1655,7 +1648,7 @@ object Binary {
   // ------------------------------------------------------------------ //
   // REAL PNG pixel codec — dependency-free (java.util.zip only).
   // PNG is the one mainstream image format whose full pixel path is
-  // decodable with nothing beyond the JDK: zlib (Inflater) + the five
+  // decodable with nothing beyond the JDK: zlib inflate + the five
   // scanline filters. This closes the pixel half of the multimodal
   // boundary for PNG; JPEG/PCM/video payloads remain behind
   // [[stubDecode]] (their entropy coders need a codec library).
@@ -1730,11 +1723,13 @@ object Binary {
   }
 
   /** REAL PNG pixel decode, dependency-free: chunk walk with CRC-32
-    * verification, concatenated-IDAT zlib inflate, and full scanline
-    * defiltering (none/sub/up/average/paeth). Supports the 8-bit
-    * truecolor non-interlaced profile ([[pngEncode]]'s output and the
-    * overwhelmingly common case); anything else (palette, alpha,
-    * 16-bit, interlaced, corrupt CRC, short stream) returns None
+    * verification, concatenated-IDAT zlib inflate (the shared
+    * [[graft.sources.Inflate.exact]], to the size the header fixes),
+    * and full scanline defiltering (none/sub/up/average/paeth).
+    * Supports the 8-bit truecolor non-interlaced profile
+    * ([[pngEncode]]'s output and the overwhelmingly common case);
+    * anything else (palette, alpha, 16-bit, interlaced, corrupt CRC,
+    * short stream, a zlib preset dictionary) returns None
     * rather than junk pixels. Cursor arithmetic stays in Long per the
     * byte-walk discipline (a crafted 4 GiB length field must not
     * become a negative step).
@@ -1774,27 +1769,16 @@ object Binary {
     if (!sawEnd || w < 0) return None
     val bpp = 3
     val stride = w * bpp
-    val raw = new Array[Byte](h * (1 + stride))
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    var got = 0
-    try {
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        if (n == 0 && inf.needsInput()) return None // truncated stream
-        got += n
-      }
-    } catch { case _: java.util.zip.DataFormatException => return None }
-    finally inf.end()
-    if (got != raw.length) return None
+    val rows = graft.sources.Inflate.exact(idat.toByteArray, raw = false,
+      h.toLong * (1 + stride)).getOrElse(return None)
     val px = new Array[Byte](h * stride)
     var y = 0
     while (y < h) {
-      val f = raw(y * (1 + stride)) & 0xff
+      val f = rows(y * (1 + stride)) & 0xff
       if (f > 4) return None
       var i = 0
       while (i < stride) {
-        val v = raw(y * (1 + stride) + 1 + i) & 0xff
+        val v = rows(y * (1 + stride) + 1 + i) & 0xff
         val left = if (i >= bpp) px(y * stride + i - bpp) & 0xff else 0
         val above = if (y > 0) px((y - 1) * stride + i) & 0xff else 0
         val ul = if (y > 0 && i >= bpp) px((y - 1) * stride + i - bpp) & 0xff else 0
@@ -2355,22 +2339,41 @@ object Binary {
     udf { b: Array[Byte] => gifChannelStats(b) }.apply(c)
 
   // ------------------------------------------------------------------ //
-  // REAL baseline JPEG entropy decoder — dependency-free. The layer
-  // that "needs a codec library" in JPEG is Huffman coding + the DCT;
-  // the Huffman layer needs nothing beyond bit arithmetic, and the
-  // DCT is exact in integers for flat (DC-only) blocks. This decoder
-  // implements the full baseline grayscale path — marker walk, DQT,
-  // DHT (canonical code reconstruction per T.81 C.2), SOS, byte
-  // unstuffing, DC-diff + AC run-length entropy decode, dequant,
-  // IDCT — with an exact integer fast path for DC-only blocks and a
-  // float IDCT for general ones. Fixtures are DC-only with q0=16 so
-  // every decoded sample is integer-exact and a SQL oracle can
+  // REAL JPEG codec (ITU T.81) — dependency-free, one implementation
+  // behind three profile entry points. The layer that "needs a codec
+  // library" in JPEG is Huffman coding + the DCT; the Huffman layer
+  // needs nothing beyond bit arithmetic, and the DCT is exact in
+  // integers for flat (DC-only) blocks. Decoding is one marker walk
+  // ([[jpegFrame]]: tables, the frame header, DRI, every scan with its
+  // table bindings and unstuffed entropy data), one sequential scan
+  // decoder ([[decodeSeqScan]]: gray 1x1 or Y 2x2 + Cb/Cr 1x1 MCUs),
+  // the progressive scan decoder ([[decodeProgScan]]) and one block
+  // renderer ([[renderJpegBlock]]). Each public decoder is a profile
+  // check on the parsed frame plus calls into that shared code:
+  //  - [[jpegDecode]]: SOF0, one component, sampling 1x1, DRI allowed;
+  //  - [[jpegDecodeColor420]]: SOF0, components 1-3 at Y 2x2 and
+  //    chroma 1x1, no DRI, dimensions a multiple of 16;
+  //  - [[jpegDecodeProgressive]]: SOF2, one component, no DRI.
+  // The encoders share one segment writer ([[seg]]) and one block
+  // entropy coder ([[jpegPutBlock]]). Fixtures are DC-only with q0=16
+  // so every decoded sample is integer-exact and a SQL oracle can
   // recompute the whole image; the entropy machinery exercised
-  // (category coding, EXTEND, diff chain, EOB) is the real thing.
+  // (category coding, EXTEND, diff chains, EOB and EOBn runs,
+  // correction bits) is the real thing. The reference keeps all media
+  // handling out of engine scope (no codec anywhere in
+  // francesco-camaione/dataquality_ML).
   // ------------------------------------------------------------------ //
 
   /** Decoded grayscale image: one luma byte per pixel, row-major. */
   final case class JpegImage(width: Int, height: Int, pixels: Array[Byte])
+
+  /** Decoded color image: full-resolution luma plane + quarter-size
+    * (w/2 × h/2) chroma planes, exactly as they sit in the codestream —
+    * no upsampling, so every sample is decoder output, not interpolator
+    * output, and per-plane statistics are integer-exact.
+    */
+  final case class JpegYCbCr(width: Int, height: Int, y: Array[Byte],
+                             cb: Array[Byte], cr: Array[Byte])
 
   private val jpegZigzag: Array[Int] = Array(
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -2378,16 +2381,41 @@ object Binary {
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
 
-  // standard luminance Huffman tables (ITU T.81 Annex K.3) — carried
-  // in the DHT segment, so encoder and decoder are self-consistent by
+  /** An encoder-side Huffman table: BITS/HUFFVAL as a DHT segment
+    * carries them, and each symbol's canonical code (T.81 C.2). */
+  private final class JpegHuffTable(bits: Array[Int], vals: Array[Byte]) {
+    private val code = new Array[Int](256)
+    private val len = new Array[Int](256) // 0: symbol not in the table
+    locally {
+      var c = 0; var k = 0; var l = 1
+      while (l <= 16) {
+        var i = 0
+        while (i < bits(l - 1)) {
+          code(vals(k) & 0xff) = c; len(vals(k) & 0xff) = l
+          c += 1; k += 1; i += 1
+        }
+        c <<= 1
+        l += 1
+      }
+    }
+    /** The DHT table entry under class/id byte `tcTh`. */
+    def dht(tcTh: Int): Array[Byte] =
+      tcTh.toByte +: (bits.map(_.toByte) ++ vals)
+    def put(w: JpegBitWriter, sym: Int): Unit = {
+      require(len(sym) > 0, f"symbol 0x$sym%02x not in the table")
+      w.put(code(sym), len(sym))
+    }
+  }
+
+  // standard Huffman tables (ITU T.81 Annex K.3) — carried in the DHT
+  // segment, so encoder and decoder are self-consistent by
   // construction even though only DC categories + EOB are exercised
   // by the DC-only fixtures
-  private val jpegDcBits: Array[Int] =
-    Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
-  private val jpegDcVals: Array[Byte] = (0 to 11).map(_.toByte).toArray
-  private val jpegAcBits: Array[Int] =
-    Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125)
-  private val jpegAcVals: Array[Byte] = Array(
+  private val jpegDcTable = new JpegHuffTable(
+    Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0),
+    (0 to 11).map(_.toByte).toArray)
+  private val jpegAcTable = new JpegHuffTable(
+    Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125), Array(
     0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
     0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
     0xa1, 0x08, 0x23, 0x42, 0xb1, 0xc1, 0x15, 0x52, 0xd1, 0xf0, 0x24,
@@ -2402,25 +2430,17 @@ object Binary {
     0xb8, 0xb9, 0xba, 0xc2, 0xc3, 0xc4, 0xc5, 0xc6, 0xc7, 0xc8, 0xc9,
     0xca, 0xd2, 0xd3, 0xd4, 0xd5, 0xd6, 0xd7, 0xd8, 0xd9, 0xda, 0xe1,
     0xe2, 0xe3, 0xe4, 0xe5, 0xe6, 0xe7, 0xe8, 0xe9, 0xea, 0xf1, 0xf2,
-    0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8, 0xf9, 0xfa).map(_.toByte)
+    0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8, 0xf9, 0xfa).map(_.toByte))
 
-  /** Canonical Huffman codes from BITS/HUFFVAL (T.81 C.2): returns
-    * (code, length) per value index, in HUFFVAL order. */
-  private def jpegHuffCodes(bits: Array[Int]): (Array[Int], Array[Int]) = {
-    val total = bits.sum
-    val codes = new Array[Int](total)
-    val lens = new Array[Int](total)
-    var code = 0; var k = 0; var l = 1
-    while (l <= 16) {
-      var i = 0
-      while (i < bits(l - 1)) {
-        codes(k) = code; lens(k) = l; code += 1; k += 1; i += 1
-      }
-      code <<= 1
-      l += 1
-    }
-    (codes, lens)
-  }
+  /** Custom AC Huffman table covering ALL 256 symbols (255 at 9 bits,
+    * one at 10): progressive AC scans emit EOBn symbols (r<<4, r ≥ 1)
+    * that the Annex-K baseline table does not contain. Compression is
+    * irrelevant here; exercising the decoder's full symbol space is
+    * the point.
+    */
+  private val jpegProgAcTable = new JpegHuffTable(
+    Array(0, 0, 0, 0, 0, 0, 0, 0, 255, 1, 0, 0, 0, 0, 0, 0),
+    (0 to 255).map(_.toByte).toArray)
 
   /** MSB-first bit writer with 0xFF→0xFF00 byte stuffing; flush pads
     * the final partial byte with 1-bits per the standard. */
@@ -2502,6 +2522,80 @@ object Binary {
     }
   }
 
+  // ---- encoders ------------------------------------------------------ //
+
+  private val jpegSoi = Array[Byte](0xff.toByte, 0xd8.toByte)
+  private val jpegEoi = Array[Byte](0xff.toByte, 0xd9.toByte)
+
+  /** One marker segment: FF, marker, 2-byte length, body (T.81 B.1.1.4). */
+  private def seg(marker: Int, body: Array[Byte]): Array[Byte] =
+    Array[Byte](0xff.toByte, marker.toByte) ++ be16(body.length + 2) ++ body
+
+  private def jpegJfif: Array[Byte] = seg(0xe0,
+    "JFIF".getBytes("US-ASCII") ++ Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
+
+  /** A frame header `sof` over 8-bit samples: Nf, then Ci, Hi|Vi, Tqi
+    * per component in `comps`. */
+  private def jpegSof(sof: Int, width: Int, height: Int,
+                      comps: Int*): Array[Byte] =
+    seg(sof, Array[Byte](8) ++ be16(height) ++ be16(width) ++
+      comps.map(_.toByte))
+
+  /** SOI, JFIF APP0, one DQT segment holding `nQuant` flat q=16 tables,
+    * and the frame header. */
+  private def jpegHead(sof: Int, width: Int, height: Int, nQuant: Int,
+                       comps: Int*): Array[Byte] =
+    jpegSoi ++ jpegJfif ++ seg(0xdb, (0 until nQuant).toArray.flatMap(
+      t => t.toByte +: Array.fill[Byte](64)(16))) ++
+      jpegSof(sof, width, height, comps: _*)
+
+  private def jpegCheckBlocks(width: Int, height: Int, unit: Int,
+                              blocks: Array[Array[Int]]*): Unit = {
+    require(width % unit == 0 && height % unit == 0,
+      s"dims must be multiples of $unit, got ${width}x$height")
+    require(blocks.forall(_.forall(blk => blk.length == 64 &&
+      blk.forall(c => c > -1024 && c < 1024))), "coef category must be <= 10")
+  }
+
+  /** The symbol `(run << 4) | category(v)` of `tab`, then v's EXTEND
+    * bits — a DC difference (run 0) or an AC coefficient. */
+  private def jpegPutCoef(w: JpegBitWriter, tab: JpegHuffTable, run: Int,
+                          v: Int): Unit = {
+    val s = 32 - Integer.numberOfLeadingZeros(math.abs(v))
+    tab.put(w, (run << 4) | s)
+    if (s > 0) w.put(if (v < 0) v + (1 << s) - 1 else v, s)
+  }
+
+  /** An EOBn symbol for a run of `eobrun` empty bands (T.81 G.1.2.2). */
+  private def jpegPutEobRun(w: JpegBitWriter, eobrun: Int): Unit = {
+    val rb = 31 - Integer.numberOfLeadingZeros(eobrun)
+    jpegProgAcTable.put(w, rb << 4)
+    if (rb > 0) w.put(eobrun - (1 << rb), rb)
+  }
+
+  /** One sequential block with the Annex-K tables: its DC difference
+    * from `pred`, then AC run-length coding in zigzag order (ZRL for
+    * runs ≥ 16, EOB for the zero tail). Returns the block's DC, the
+    * component's next predictor. */
+  private def jpegPutBlock(w: JpegBitWriter, blk: Array[Int], pred: Int): Int = {
+    jpegPutCoef(w, jpegDcTable, 0, blk(0) - pred)
+    val lastNz = (63 to 1 by -1).find(k => blk(jpegZigzag(k)) != 0).getOrElse(0)
+    var k = 1
+    var run = 0
+    while (k <= lastNz) {
+      val c = blk(jpegZigzag(k))
+      if (c == 0) run += 1
+      else {
+        while (run >= 16) { jpegAcTable.put(w, 0xf0); run -= 16 } // ZRL
+        jpegPutCoef(w, jpegAcTable, run, c)
+        run = 0
+      }
+      k += 1
+    }
+    if (lastNz < 63) jpegAcTable.put(w, 0x00) // EOB
+    blk(0)
+  }
+
   /** REAL baseline JPEG encoder (grayscale): JFIF APP0, DQT (flat
     * q=16), SOF0, the standard Annex-K DHT pair, SOS, and a genuine
     * entropy stream — Huffman-coded DC category + EXTEND bits on the
@@ -2518,77 +2612,30 @@ object Binary {
   def jpegEncodeBlocks(width: Int, height: Int,
                        blocks: Array[Array[Int]],
                        restartInterval: Int = 0): Array[Byte] = {
-    require(width % 8 == 0 && height % 8 == 0,
-      s"dims must be multiples of 8, got ${width}x$height")
-    val bw = width / 8; val bh = height / 8
-    require(blocks.length == bw * bh,
-      s"need ${bw * bh} blocks, got ${blocks.length}")
-    require(blocks.forall(blk => blk.length == 64 &&
-      blk.forall(c => c > -1024 && c < 1024)), "coef category must be <= 10")
-    def seg(marker: Int, body: Array[Byte]): Array[Byte] =
-      Array[Byte](0xff.toByte, marker.toByte) ++ be16(body.length + 2) ++ body
-    val app0 = seg(0xe0, "JFIF".getBytes("US-ASCII") ++
-      Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    val dqt = seg(0xdb, Array[Byte](0) ++ Array.fill[Byte](64)(16))
-    val sof0 = seg(0xc0, Array[Byte](8) ++ be16(height) ++ be16(width) ++
-      Array[Byte](1, 1, 0x11, 0))
-    val dhtDc = seg(0xc4, Array[Byte](0x00) ++
-      jpegDcBits.map(_.toByte) ++ jpegDcVals)
-    val dhtAc = seg(0xc4, Array[Byte](0x10) ++
-      jpegAcBits.map(_.toByte) ++ jpegAcVals)
-    val sos = seg(0xda, Array[Byte](1, 1, 0x00, 0, 63, 0))
-    val (dcCodes, dcLens) = jpegHuffCodes(jpegDcBits)
-    val (acCodes, acLens) = jpegHuffCodes(jpegAcBits)
-    // AC symbol byte (run<<4 | size) → index into the Annex-K HUFFVAL
-    val acIdx = new Array[Int](256)
-    java.util.Arrays.fill(acIdx, -1)
-    jpegAcVals.zipWithIndex.foreach { case (v, k) => acIdx(v & 0xff) = k }
-    def putAc(w: JpegBitWriter, sym: Int): Unit = {
-      val k = acIdx(sym)
-      require(k >= 0, f"AC symbol 0x$sym%02x not in the standard table")
-      w.put(acCodes(k), acLens(k))
-    }
-    def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    val dri = if (restartInterval > 0)
-      seg(0xdd, be16(restartInterval)) else Array.empty[Byte]
-    val entropyOut = new java.io.ByteArrayOutputStream()
+    jpegCheckBlocks(width, height, 8, blocks)
+    require(blocks.length == (width / 8) * (height / 8),
+      s"need ${(width / 8) * (height / 8)} blocks, got ${blocks.length}")
+    val entropy = new java.io.ByteArrayOutputStream()
     var w = new JpegBitWriter
-    var prev = 0
+    var pred = 0
     blocks.zipWithIndex.foreach { case (blk, bi) =>
       if (restartInterval > 0 && bi > 0 && bi % restartInterval == 0) {
-        w.flush(); entropyOut.write(w.out.toByteArray)
-        entropyOut.write(0xff)
-        entropyOut.write(0xd0 + ((bi / restartInterval - 1) % 8))
+        w.flush(); entropy.write(w.out.toByteArray)
+        entropy.write(0xff)
+        entropy.write(0xd0 + ((bi / restartInterval - 1) % 8))
         w = new JpegBitWriter
-        prev = 0
+        pred = 0
       }
-      val diff = blk(0) - prev
-      prev = blk(0)
-      val s = category(diff)
-      w.put(dcCodes(s), dcLens(s)) // DC category symbol == value index
-      if (s > 0)
-        w.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-      val lastNz = (63 to 1 by -1).find(k => blk(jpegZigzag(k)) != 0).getOrElse(0)
-      var k = 1
-      var run = 0
-      while (k <= lastNz) {
-        val c = blk(jpegZigzag(k))
-        if (c == 0) run += 1
-        else {
-          while (run >= 16) { putAc(w, 0xf0); run -= 16 } // ZRL
-          val sz = category(c)
-          putAc(w, (run << 4) | sz)
-          w.put(if (c < 0) c + (1 << sz) - 1 else c, sz)
-          run = 0
-        }
-        k += 1
-      }
-      if (lastNz < 63) putAc(w, 0x00) // EOB
+      pred = jpegPutBlock(w, blk, pred)
     }
-    w.flush(); entropyOut.write(w.out.toByteArray)
-    Array[Byte](0xff.toByte, 0xd8.toByte) ++ app0 ++ dqt ++ sof0 ++
-      dri ++ dhtDc ++ dhtAc ++ sos ++ entropyOut.toByteArray ++
-      Array[Byte](0xff.toByte, 0xd9.toByte)
+    w.flush(); entropy.write(w.out.toByteArray)
+    val dri = if (restartInterval > 0)
+      seg(0xdd, be16(restartInterval)) else Array.empty[Byte]
+    jpegHead(0xc0, width, height, 1, 1, 1, 0x11, 0) ++ dri ++
+      seg(0xc4, jpegDcTable.dht(0x00)) ++
+      seg(0xc4, jpegAcTable.dht(0x10)) ++
+      seg(0xda, Array[Byte](1, 1, 0x00, 0, 63, 0)) ++
+      entropy.toByteArray ++ jpegEoi
   }
 
   /** DC-only convenience wrapper: flat blocks from raster-ordered DC
@@ -2598,206 +2645,463 @@ object Binary {
       val blk = new Array[Int](64); blk(0) = dc; blk
     })
 
-  /** REAL baseline JPEG decode (grayscale single-scan profile): marker
-    * walk, DQT (8-bit tables), DHT canonical-code reconstruction, SOF0
-    * (baseline only — progressive/arithmetic/multi-component return
-    * None), SOS, byte unstuffing, full entropy decode (DC diff chain,
+  /** REAL baseline color JPEG encoder — 3-component YCbCr with 4:2:0
+    * subsampling (the overwhelmingly dominant profile in the wild):
+    * two DQT tables (flat q=16 luma + chroma), TWO DHT pairs (the
+    * Annex-K code lengths registered at table ids 0 and 1, so the
+    * decoder's table SELECTION logic is exercised, not just one shared
+    * table), SOF0 with sampling factors Y=2x2 / Cb=Cr=1x1, and an MCU-
+    * interleaved entropy stream: per 16x16 MCU four Y blocks (left-
+    * right, top-bottom) then Cb then Cr, each component carrying its
+    * OWN DC difference chain (T.81 E.2.4). Dims must be multiples of
+    * 16. `yBlocks` are raster-ordered (w/8 x h/8) quantized blocks;
+    * `cbBlocks`/`crBlocks` raster-ordered (w/16 x h/16).
+    */
+  def jpegEncodeColor420(width: Int, height: Int,
+                         yBlocks: Array[Array[Int]],
+                         cbBlocks: Array[Array[Int]],
+                         crBlocks: Array[Array[Int]]): Array[Byte] = {
+    jpegCheckBlocks(width, height, 16, yBlocks, cbBlocks, crBlocks)
+    val bw = width / 8
+    val cw = width / 16; val ch = height / 16
+    require(yBlocks.length == bw * (height / 8) && cbBlocks.length == cw * ch &&
+      crBlocks.length == cw * ch, "block counts must match dims")
+    val w = new JpegBitWriter
+    val pred = new Array[Int](3) // per-component DC predictor
+    def put(blk: Array[Int], comp: Int): Unit =
+      pred(comp) = jpegPutBlock(w, blk, pred(comp))
+    var my = 0
+    while (my < ch) {
+      var mx = 0
+      while (mx < cw) {
+        put(yBlocks((my * 2) * bw + mx * 2), 0)
+        put(yBlocks((my * 2) * bw + mx * 2 + 1), 0)
+        put(yBlocks((my * 2 + 1) * bw + mx * 2), 0)
+        put(yBlocks((my * 2 + 1) * bw + mx * 2 + 1), 0)
+        put(cbBlocks(my * cw + mx), 1)
+        put(crBlocks(my * cw + mx), 2)
+        mx += 1
+      }
+      my += 1
+    }
+    w.flush()
+    jpegHead(0xc0, width, height, 2, 3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1) ++
+      seg(0xc4, jpegDcTable.dht(0x00) ++ jpegAcTable.dht(0x10) ++
+        jpegDcTable.dht(0x01) ++ jpegAcTable.dht(0x11)) ++
+      seg(0xda, Array[Byte](3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)) ++
+      w.out.toByteArray ++ jpegEoi
+  }
+
+  /** The fixed progressive scan script (Ss, Se, Ah, Al) — libjpeg's
+    * default grayscale progression: DC approximation, two AC bands at
+    * Al=2, one AC refinement step to Al=1, the DC bit, the final AC
+    * refinement to Al=0. Completing all scans reconstructs every
+    * coefficient EXACTLY (each refinement step restores one bit).
+    */
+  private val jpegProgScript: Seq[(Int, Int, Int, Int)] = Seq(
+    (0, 0, 0, 1), (1, 5, 0, 2), (6, 63, 0, 2),
+    (1, 63, 2, 1), (0, 0, 1, 0), (1, 63, 1, 0))
+
+  /** REAL progressive JPEG encoder (grayscale): SOI, APP0, DQT (flat
+    * q=16), SOF2, DHT (standard DC + full-symbol AC), then one
+    * SOS + entropy segment per script scan — spectral selection +
+    * successive approximation per ITU T.81 G.1/G.2: DC first/refine
+    * scans (point transform = arithmetic shift), AC first scans per
+    * spectral band with EOBn run coding, and AC refinement scans with
+    * correction bits (the G.1.2.3 algorithm). `blocks` are raster-order
+    * 64-entry QUANTIZED coefficient blocks in natural order, as in
+    * [[jpegEncodeBlocks]].
+    */
+  def jpegEncodeProgressive(width: Int, height: Int,
+                            blocks: Array[Array[Int]]): Array[Byte] = {
+    jpegCheckBlocks(width, height, 8, blocks)
+    require(blocks.length == (width / 8) * (height / 8),
+      s"need ${(width / 8) * (height / 8)} blocks, got ${blocks.length}")
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(jpegHead(0xc2, width, height, 1, 1, 1, 0x11, 0))
+    out.write(seg(0xc4, jpegDcTable.dht(0x00)))
+    out.write(seg(0xc4, jpegProgAcTable.dht(0x10)))
+    jpegProgScript.foreach { case (ss, se, ah, al) =>
+      out.write(seg(0xda,
+        Array[Byte](1, 1, 0x00, ss.toByte, se.toByte, ((ah << 4) | al).toByte)))
+      val w = new JpegBitWriter
+      if (ss == 0 && ah == 0) {
+        // DC first: diff chain on the point-transformed values
+        var prev = 0
+        blocks.foreach { blk =>
+          val t = blk(0) >> al // arithmetic shift = T.81 DC point transform
+          jpegPutCoef(w, jpegDcTable, 0, t - prev); prev = t
+        }
+      } else if (ss == 0) {
+        // DC refinement: one raw bit per block
+        blocks.foreach(blk => w.put((blk(0) >> al) & 1, 1))
+      } else if (ah == 0) {
+        // AC first scan of band [ss, se] at Al=al, EOBn run coding
+        var eobrun = 0
+        def flushEob(): Unit = if (eobrun > 0) {
+          jpegPutEobRun(w, eobrun); eobrun = 0
+        }
+        def pt(v: Int): Int = if (v >= 0) v >> al else -((-v) >> al)
+        blocks.foreach { blk =>
+          val t = Array.tabulate(se - ss + 1)(j => pt(blk(jpegZigzag(ss + j))))
+          val lastNz = t.lastIndexWhere(_ != 0)
+          if (lastNz < 0) {
+            eobrun += 1; if (eobrun == 0x7fff) flushEob()
+          } else {
+            flushEob()
+            var r = 0
+            var j = 0
+            while (j <= lastNz) {
+              val v = t(j)
+              if (v == 0) r += 1
+              else {
+                while (r >= 16) { jpegProgAcTable.put(w, 0xf0); r -= 16 }
+                jpegPutCoef(w, jpegProgAcTable, r, v)
+                r = 0
+              }
+              j += 1
+            }
+            if (lastNz < se - ss) { eobrun += 1; if (eobrun == 0x7fff) flushEob() }
+          }
+        }
+        flushEob()
+      } else {
+        // AC refinement scan (T.81 G.1.2.3, mirroring libjpeg's
+        // encode_mcu_AC_refine control flow exactly): newly-significant
+        // coefficients code as (run-of-zero-history<<4)|1 + sign bit;
+        // already-significant ones contribute one correction bit each.
+        // TWO bit buffers, like libjpeg's BE/BR split: `eobBits` ride
+        // with the deferred EOBn (bits of blocks absorbed into the EOB
+        // run, in block order), `runBits` belong to the current
+        // intra-block run and are emitted after the ZRL or significance
+        // symbol whose advance crosses their positions. The ZRL check
+        // runs at EVERY nonzero position (not only newly-significant
+        // ones) — that placement is what keeps the decoder's
+        // advance-and-correct loop bit-synchronized.
+        var eobrun = 0
+        val eobBits = scala.collection.mutable.ArrayBuffer.empty[Int]
+        val runBits = scala.collection.mutable.ArrayBuffer.empty[Int]
+        def emitRunBits(): Unit = { runBits.foreach(w.put(_, 1)); runBits.clear() }
+        def flushEob(): Unit = if (eobrun > 0) {
+          jpegPutEobRun(w, eobrun); eobrun = 0
+          eobBits.foreach(w.put(_, 1)); eobBits.clear()
+        }
+        blocks.foreach { blk =>
+          val band = Array.tabulate(se - ss + 1)(j => blk(jpegZigzag(ss + j)))
+          val temp = band.map(v => math.abs(v) >> al)
+          val eobIdx = temp.lastIndexWhere(_ == 1)
+          var r = 0
+          var j = 0
+          while (j < temp.length) {
+            if (temp(j) == 0) r += 1
+            else {
+              while (r > 15 && j <= eobIdx) {
+                flushEob()
+                jpegProgAcTable.put(w, 0xf0); r -= 16
+                emitRunBits()
+              }
+              if (temp(j) > 1) runBits += (temp(j) & 1)
+              else { // newly significant: symbol (r<<4)|1, then the sign bit
+                flushEob()
+                jpegPutCoef(w, jpegProgAcTable, r, if (band(j) > 0) 1 else -1)
+                emitRunBits()
+                r = 0
+              }
+            }
+            j += 1
+          }
+          if (r > 0 || runBits.nonEmpty) {
+            eobrun += 1
+            eobBits ++= runBits; runBits.clear()
+            if (eobrun == 0x7fff) flushEob()
+          }
+        }
+        flushEob()
+      }
+      w.flush()
+      out.write(w.out.toByteArray)
+    }
+    out.write(jpegEoi)
+    out.toByteArray
+  }
+
+  // ---- decoders ------------------------------------------------------ //
+
+  /** One scan as [[jpegFrame]] read it: its component selectors (Cs),
+    * the DC/AC decoders their Td/Ta bound when the SOS was read (null
+    * where undefined), the spectral band and successive-approximation
+    * bits (Ss, Se, Ah, Al), the restart interval then in force, the
+    * unstuffed entropy data split at RSTn, and the offset of the marker
+    * that ended it. */
+  private final case class JpegScan(ids: Array[Int],
+      dc: Array[JpegHuffDecoder], ac: Array[JpegHuffDecoder],
+      ss: Int, se: Int, ah: Int, al: Int, restart: Int,
+      segments: collection.IndexedSeq[Array[Byte]], end: Int)
+
+  /** A parsed frame: dimensions, per-component ids, sampling bytes
+    * (Hi<<4 | Vi) and quantization tables (as defined at EOI), whether
+    * a DRI segment appeared, the scans in order, and the offset of EOI. */
+  private final case class JpegFrame(width: Int, height: Int,
+      ids: Array[Int], sampling: Array[Int], quant: Array[Array[Int]],
+      dri: Boolean, scans: collection.IndexedSeq[JpegScan], eoi: Int)
+
+  /** The one JPEG marker walk (T.81 B.2), SOI to EOI: DQT (8-bit
+    * tables), DHT (canonical-code reconstruction, T.81 C.2), the one
+    * frame header — `sof` is the only SOFn accepted, another SOFn or a
+    * second frame header rejects — DRI, and every SOS with its
+    * entropy data: unstuffed, split at RSTn while a restart interval
+    * is in force (the 3-bit sequence numbers must cycle in order; an
+    * out-of-sequence marker means dropped data), and ended by any other
+    * marker. Tables may be redefined between scans: a scan keeps the
+    * Huffman tables bound when it was read, and quantization tables
+    * resolve at EOI. APPn, COM and unknown segments are skipped.
+    * Rejects (through [[ByteCursor.reject]]) truncation, malformed
+    * segments, a scan before the frame header, undefined quantization
+    * tables, and dimensions that are not multiples of 8 or exceed
+    * 64 Mpx.
+    */
+  private def jpegFrame(b: Array[Byte], sof: Int): JpegFrame = {
+    val cur = ByteCursor(b)
+    val n = b.length
+    if (n < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8)
+      ByteCursor.reject()
+    val quant = new Array[Array[Int]](4)
+    val dcTabs = new Array[JpegHuffDecoder](4)
+    val acTabs = new Array[JpegHuffDecoder](4)
+    var w = 0; var h = 0
+    var ids: Array[Int] = null
+    var sampling: Array[Int] = null
+    var tq: Array[Int] = null
+    var restart = 0
+    var dri = false
+    val scans = scala.collection.mutable.ArrayBuffer.empty[JpegScan]
+    // `n` unsigned bytes, `step` apart from `at`; every caller has
+    // checked them against the segment length
+    def bytesAt(at: Int, n: Int, step: Int): Array[Int] = {
+      val out = new Array[Int](n)
+      var k = 0
+      while (k < n) { out(k) = b(at + k * step) & 0xff; k += 1 }
+      out
+    }
+    var i = 2
+    var eoi = -1
+    while (eoi < 0) {
+      if (cur.u8(i) != 0xff) ByteCursor.reject()
+      val m = cur.u8(i + 1)
+      if (m == 0xd9) eoi = i
+      else {
+        val len = cur.be16(i + 2)
+        val body = i + 4
+        val next = body + len - 2
+        if (next > n || len < 2) ByteCursor.reject()
+        i = next
+        m match {
+          case 0xdb => // DQT: one or more tables, Pq = 0 (8-bit)
+            var p = body
+            while (p < next) {
+              val t = cur.u8(p)
+              if (t > 3 || p + 65 > next) ByteCursor.reject()
+              quant(t) = bytesAt(p + 1, 64, 1)
+              p += 65
+            }
+          case 0xc4 => // DHT: one or more tables
+            var p = body
+            while (p < next) {
+              val tc = cur.u8(p) >> 4; val th = cur.u8(p) & 0x0f
+              if (tc > 1 || th > 3 || p + 17 > next) ByteCursor.reject()
+              val bits = bytesAt(p + 1, 16, 1)
+              val total = bits.sum
+              if (total > 256 || p + 17 + total > next) ByteCursor.reject()
+              val dec = new JpegHuffDecoder(bits, cur.bytes(p + 17, total))
+              if (tc == 0) dcTabs(th) = dec else acTabs(th) = dec
+              p += 17 + total
+            }
+          case 0xdd => // DRI: restart interval in MCUs (0 = none)
+            if (len != 4) ByteCursor.reject()
+            restart = cur.be16(body)
+            dri = true
+          case 0xda => // SOS: header, then entropy data to the next marker
+            if (ids == null) ByteCursor.reject()
+            val ns = cur.u8(body)
+            if (len < 6 + 2 * ns) ByteCursor.reject()
+            val dc = new Array[JpegHuffDecoder](ns)
+            val ac = new Array[JpegHuffDecoder](ns)
+            var k = 0
+            while (k < ns) {
+              val t = cur.u8(body + 2 + 2 * k) // Td << 4 | Ta
+              if ((t >> 4) > 3 || (t & 0x0f) > 3) ByteCursor.reject()
+              dc(k) = dcTabs(t >> 4); ac(k) = acTabs(t & 0x0f)
+              k += 1
+            }
+            val band = body + 1 + 2 * ns
+            val segs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+            var raw = new java.io.ByteArrayOutputStream()
+            var p = next
+            var end = -1
+            while (end < 0) {
+              var q = p
+              while (q < n && b(q) != -1) q += 1 // -1 = 0xff
+              raw.write(b, p, q - p)
+              p = q
+              if (p + 1 >= n) ByteCursor.reject() // truncated mid-scan
+              val m2 = b(p + 1) & 0xff
+              if (m2 == 0) { raw.write(0xff); p += 2 }
+              else if (restart > 0 && (m2 & 0xf8) == 0xd0) {
+                if ((m2 & 0x07) != segs.length % 8) ByteCursor.reject()
+                segs += raw.toByteArray
+                raw = new java.io.ByteArrayOutputStream()
+                p += 2
+              } else end = p
+            }
+            segs += raw.toByteArray
+            scans += JpegScan(bytesAt(body + 1, ns, 2), dc, ac,
+              cur.u8(band), cur.u8(band + 1), cur.u8(band + 2) >> 4,
+              cur.u8(band + 2) & 0x0f, restart, segs, end)
+            i = end
+          case _ if m >= 0xc0 && m <= 0xcf && m != 0xc8 && m != 0xcc => // SOFn
+            if (m != sof || ids != null) ByteCursor.reject()
+            if (cur.u8(body) != 8) ByteCursor.reject() // 8-bit samples
+            h = cur.be16(body + 1)
+            w = cur.be16(body + 3)
+            val nf = cur.u8(body + 5)
+            if (len < 8 + 3 * nf) ByteCursor.reject()
+            ids = bytesAt(body + 6, nf, 3)
+            sampling = bytesAt(body + 7, nf, 3)
+            tq = bytesAt(body + 8, nf, 3)
+            if (tq.exists(_ > 3)) ByteCursor.reject() // Tq is 0..3
+            if (w <= 0 || h <= 0 || w % 8 != 0 || h % 8 != 0 ||
+                w.toLong * h > 64L * 1024 * 1024) ByteCursor.reject()
+          case _ => () // APPn/COM/unknown: skip
+        }
+      }
+    }
+    if (ids == null) ByteCursor.reject()
+    val q = tq.map(quant(_))
+    if (q.contains(null)) ByteCursor.reject()
+    JpegFrame(w, h, ids, sampling, q, dri, scans, eoi)
+  }
+
+  /** The sequential (baseline) scan decoder over the frame's one scan,
+    * which EOI must end: MCUs in raster order, each holding every
+    * component's Hi x Vi blocks (gray 1x1; Y 2x2 then Cb and Cr 1x1
+    * for 4:2:0 — the caller has checked the sampling factors), scan
+    * component k coding frame component k. Every component keeps its
+    * own DC difference chain, reset at each restart interval (one
+    * RSTn-split segment per interval). Per block: DC category +
+    * EXTEND, AC run-length with ZRL and EOB, dequantization, then
+    * [[renderJpegBlock]] into the component's plane; a block is flat
+    * when it decoded no AC symbol. Returns the planes (full size for
+    * the largest sampling factors). Rejects a segment count that does
+    * not match the interval, undefined tables or codes, and
+    * coefficient overruns.
+    */
+  private def decodeSeqScan(f: JpegFrame): Array[Array[Byte]] = {
+    if (f.scans.length != 1 || f.scans.head.end != f.eoi) ByteCursor.reject()
+    val s = f.scans.head
+    val nc = f.ids.length
+    if (s.ids.length != nc || s.dc.contains(null) || s.ac.contains(null))
+      ByteCursor.reject()
+    val hs = f.sampling.map(_ >> 4); val vs = f.sampling.map(_ & 0x0f)
+    val hMax = hs.max; val vMax = vs.max
+    val mcuW = f.width / (8 * hMax)
+    val nMcu = mcuW * (f.height / (8 * vMax))
+    val expectSegs =
+      if (s.restart > 0) (nMcu + s.restart - 1) / s.restart else 1
+    if (s.segments.length != expectSegs) ByteCursor.reject()
+    val planeW = hs.map(f.width * _ / hMax)
+    val planes = Array.tabulate(nc)(c =>
+      new Array[Byte](planeW(c) * (f.height * vs(c) / vMax)))
+    var r = new JpegBitReader(s.segments(0))
+    val pred = new Array[Int](nc)
+    val coef = new Array[Int](64)
+    def block(c: Int, bx: Int, by: Int): Unit = {
+      val q = f.quant(c)
+      java.util.Arrays.fill(coef, 0)
+      val t = s.dc(c).decode(r)
+      if (t < 0 || t > 11) ByteCursor.reject()
+      val dv = r.receive(t)
+      if (dv == Int.MinValue) ByteCursor.reject()
+      pred(c) += jpegExtend(dv, t)
+      coef(0) = pred(c) * q(0)
+      var k = 1
+      var eob = false
+      var hasAc = false
+      while (!eob && k < 64) {
+        val sym = s.ac(c).decode(r)
+        if (sym < 0) ByteCursor.reject()
+        if (sym == 0x00) eob = true
+        else if (sym == 0xf0) k += 16 // ZRL: sixteen zeros
+        else {
+          val run = sym >> 4; val size = sym & 0x0f
+          if (size == 0) ByteCursor.reject()
+          k += run
+          if (k > 63) ByteCursor.reject()
+          val av = r.receive(size)
+          if (av == Int.MinValue) ByteCursor.reject()
+          coef(jpegZigzag(k)) = jpegExtend(av, size) * q(k)
+          hasAc = true
+          k += 1
+        }
+      }
+      renderJpegBlock(coef, hasAc, planes(c), planeW(c), bx, by)
+    }
+    var mcu = 0
+    while (mcu < nMcu) {
+      if (s.restart > 0 && mcu > 0 && mcu % s.restart == 0) {
+        // restart boundary: byte-aligned new segment, DC chains reset
+        r = new JpegBitReader(s.segments(mcu / s.restart))
+        java.util.Arrays.fill(pred, 0)
+      }
+      val mx = mcu % mcuW; val my = mcu / mcuW
+      var c = 0
+      while (c < nc) {
+        var y = 0
+        while (y < vs(c)) {
+          var x = 0
+          while (x < hs(c)) { block(c, mx * hs(c) + x, my * vs(c) + y); x += 1 }
+          y += 1
+        }
+        c += 1
+      }
+      mcu += 1
+    }
+    planes
+  }
+
+  /** REAL baseline JPEG decode (grayscale single-scan profile): a SOF0
+    * frame of one component at sampling 1x1, decoded by the shared walk
+    * and sequential scan decoder — full entropy decode (DC diff chain,
     * AC run-length with ZRL and EOB), dequantization, IDCT, and
     * RESTART intervals (DRI + RST0–RST7: byte-aligned segments with
     * cycling sequence numbers; each segment restarts the DC chain).
     * Flat (DC-only) blocks take the exact integer path; blocks with AC
     * coefficients go through a float IDCT. Returns None (never junk)
-    * on truncation, undeclared or out-of-sequence restart markers,
-    * segment-count mismatches, undefined codes, or coefficient
-    * overruns.
+    * on any other profile, truncation, undeclared or out-of-sequence
+    * restart markers, segment-count mismatches, undefined codes, or
+    * coefficient overruns.
     */
   def jpegDecode(b: Array[Byte]): Option[JpegImage] = ByteCursor.total {
-    val cur = ByteCursor(b)
-    val n = b.length
-    if (n < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var i = 2
-    var w = -1; var h = -1
-    val quant = new Array[Array[Int]](4)
-    val dcTabs = new Array[JpegHuffDecoder](4)
-    val acTabs = new Array[JpegHuffDecoder](4)
-    var qSel = -1; var dcSel = -1; var acSel = -1
-    var restartInt = 0
-    var segments: Array[Array[Byte]] = null
-    while (segments == null) {
-      if (i + 4 > n || (b(i) & 0xff) != 0xff) return None
-      val m = b(i + 1) & 0xff
-      if (m == 0xd9) return None // EOI before scan data
-      val len = cur.be16(i + 2)
-      val body = i + 4
-      if (body + len - 2 > n || len < 2) return None
-      m match {
-        case 0xdb => // DQT: one or more tables
-          val segEnd = body + len - 2
-          var p = body
-          while (p < segEnd) {
-            val pq = (b(p) & 0xff) >> 4; val tq = b(p) & 0x0f
-            if (pq != 0 || tq > 3 || p + 65 > segEnd) return None
-            quant(tq) = Array.tabulate(64)(k => b(p + 1 + k) & 0xff)
-            p += 65
-          }
-        case 0xc4 => // DHT: one or more tables
-          val segEnd = body + len - 2
-          var p = body
-          while (p < segEnd) {
-            val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
-            if (tc > 1 || th > 3 || p + 17 > segEnd) return None
-            val bits = Array.tabulate(16)(k => b(p + 1 + k) & 0xff)
-            val total = bits.sum
-            if (total > 256 || p + 17 + total > segEnd) return None
-            val vals = Array.tabulate(total)(k => b(p + 17 + k))
-            val dec = new JpegHuffDecoder(bits, vals)
-            if (tc == 0) dcTabs(th) = dec else acTabs(th) = dec
-            p += 17 + total
-          }
-        case 0xc0 => // SOF0 baseline
-          if (len < 11 || (b(body) & 0xff) != 8) return None
-          h = cur.be16(body + 1)
-          w = cur.be16(body + 3)
-          if ((b(body + 5) & 0xff) != 1) return None // grayscale profile only
-          if ((b(body + 7) & 0xff) != 0x11) return None // no subsampling
-          qSel = b(body + 8) & 0xff
-        case 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
-             0xcb | 0xcd | 0xce | 0xcf =>
-          return None // extended/progressive/arithmetic: not baseline
-        case 0xdd => // DRI: restart interval in MCUs (= blocks here)
-          if (len != 4) return None
-          restartInt = cur.be16(body)
-        case 0xda => // SOS: header then entropy data (split at RSTn) to EOI
-          if (len < 8 || (b(body) & 0xff) != 1) return None
-          dcSel = (b(body + 2) & 0xff) >> 4; acSel = b(body + 2) & 0x0f
-          var p = body + len - 2
-          val segs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-          var raw = new java.io.ByteArrayOutputStream()
-          var end = -1
-          var nRst = 0
-          while (end < 0) {
-            if (p >= n) return None
-            val c = b(p) & 0xff
-            if (c != 0xff) { raw.write(c); p += 1 }
-            else if (p + 1 < n && b(p + 1) == 0) { raw.write(0xff); p += 2 }
-            else if (p + 1 < n && (b(p + 1) & 0xff) == 0xd9) end = p
-            else if (p + 1 < n && (b(p + 1) & 0xf8) == 0xd0) {
-              // RSTn: valid only under a declared interval, and the
-              // 3-bit sequence number must cycle in order — an
-              // out-of-sequence marker means dropped data, not junk out
-              if (restartInt == 0) return None
-              if ((b(p + 1) & 0x07) != (nRst % 8)) return None
-              segs += raw.toByteArray
-              raw = new java.io.ByteArrayOutputStream()
-              nRst += 1; p += 2
-            }
-            else return None // truncation mid-scan
-          }
-          segs += raw.toByteArray
-          segments = segs.toArray
-        case _ => () // APPn/COM: skip
-      }
-      if (segments == null) i = body + len - 2
-    }
-    if (w <= 0 || h <= 0 || w % 8 != 0 || h % 8 != 0) return None
-    if (w.toLong * h > 64L * 1024 * 1024) return None
-    val q = if (qSel >= 0 && qSel < 4) quant(qSel) else null
-    val dcT = if (dcSel >= 0 && dcSel < 4) dcTabs(dcSel) else null
-    val acT = if (acSel >= 0 && acSel < 4) acTabs(acSel) else null
-    if (q == null || dcT == null || acT == null) return None
-    val bw = w / 8; val bh = h / 8
-    // restart discipline: segment count must match the declared
-    // interval exactly (extra/missing RSTn = dropped data)
-    val expectSegs =
-      if (restartInt > 0) (bw * bh + restartInt - 1) / restartInt else 1
-    if (segments.length != expectSegs) return None
-    val px = new Array[Byte](w * h)
-    var r = new JpegBitReader(segments(0))
-    var segIdx = 0
-    var blockNo = 0
-    val coef = new Array[Int](64)
-    var prev = 0
-    var by = 0
-    while (by < bh) {
-      var bx = 0
-      while (bx < bw) {
-        if (restartInt > 0 && blockNo > 0 && blockNo % restartInt == 0) {
-          // restart boundary: byte-aligned new segment, DC chain resets
-          segIdx += 1
-          r = new JpegBitReader(segments(segIdx))
-          prev = 0
-        }
-        blockNo += 1
-        java.util.Arrays.fill(coef, 0)
-        val s = dcT.decode(r)
-        if (s < 0 || s > 11) return None
-        val dv = r.receive(s)
-        if (dv == Int.MinValue) return None
-        prev += jpegExtend(dv, s)
-        coef(0) = prev * q(0)
-        var k = 1
-        var eob = false
-        var hasAc = false
-        while (!eob && k < 64) {
-          val sym = acT.decode(r)
-          if (sym < 0) return None
-          if (sym == 0x00) eob = true
-          else if (sym == 0xf0) k += 16 // ZRL: sixteen zeros
-          else {
-            val run = sym >> 4; val size = sym & 0x0f
-            if (size == 0) return None
-            k += run
-            if (k > 63) return None
-            val av = r.receive(size)
-            if (av == Int.MinValue) return None
-            coef(jpegZigzag(k)) = jpegExtend(av, size) * q(k)
-            hasAc = true
-            k += 1
-          }
-        }
-        if (!hasAc) {
-          // exact integer path: flat block = round(DC/8) + 128
-          val dcq = coef(0)
-          val v = math.max(0, math.min(255,
-            Math.floorDiv(2 * dcq + 8, 16) + 128)) // round-half-up of dcq/8
-          var yy = 0
-          while (yy < 8) {
-            java.util.Arrays.fill(px, (by * 8 + yy) * w + bx * 8,
-              (by * 8 + yy) * w + bx * 8 + 8, v.toByte)
-            yy += 1
-          }
-        } else {
-          // general float IDCT (T.81 A.3.3), clamped
-          var yy = 0
-          while (yy < 8) {
-            var xx = 0
-            while (xx < 8) {
-              var acc = 0.0
-              var v = 0
-              while (v < 8) {
-                var u = 0
-                while (u < 8) {
-                  val cu = if (u == 0) 0.7071067811865476 else 1.0
-                  val cv = if (v == 0) 0.7071067811865476 else 1.0
-                  acc += cu * cv * coef(v * 8 + u) *
-                    math.cos((2 * xx + 1) * u * math.Pi / 16) *
-                    math.cos((2 * yy + 1) * v * math.Pi / 16)
-                  u += 1
-                }
-                v += 1
-              }
-              val sv = math.max(0, math.min(255, math.round(acc / 4 + 128).toInt))
-              px((by * 8 + yy) * w + bx * 8 + xx) = sv.toByte
-              xx += 1
-            }
-            yy += 1
-          }
-        }
-        bx += 1
-      }
-      by += 1
-    }
-    Some(JpegImage(w, h, px))
+    val f = jpegFrame(b, 0xc0)
+    if (f.ids.length != 1 || f.sampling(0) != 0x11) return None
+    Some(JpegImage(f.width, f.height, decodeSeqScan(f)(0)))
+  }
+
+  /** REAL baseline color JPEG decode (3-component YCbCr 4:2:0 single
+    * interleaved scan — the profile [[jpegEncodeColor420]] emits and
+    * the one phone cameras and web encoders emit): a SOF0 frame with
+    * components 1, 2, 3 at sampling Y 2x2 / chroma 1x1, scanned in that
+    * order, decoded by the shared walk and sequential scan decoder
+    * (per-component table binding and DC chains). Restart markers
+    * (any DRI) and every other layout return None, never junk.
+    */
+  def jpegDecodeColor420(b: Array[Byte]): Option[JpegYCbCr] = ByteCursor.total {
+    val f = jpegFrame(b, 0xc0)
+    if (!f.ids.sameElements(Array(1, 2, 3)) ||
+        !f.sampling.sameElements(Array(0x22, 0x11, 0x11)) || f.dri ||
+        f.width % 16 != 0 || f.height % 16 != 0 ||
+        !f.scans.forall(_.ids.sameElements(f.ids))) return None
+    val p = decodeSeqScan(f)
+    Some(JpegYCbCr(f.width, f.height, p(0), p(1), p(2)))
   }
 
   /** Deterministic synthetic DC-only JPEG per id: dims 8·(id%3+1) ×
@@ -2845,338 +3149,28 @@ object Binary {
   def synthJpegRstCol(c: Column): Column =
     udf { id: Long => synthJpegRst(id) }.apply(c)
 
-  /** Decoded-luma statistics: (n, sum, mean, std) per image (exact
-    * integer sums; population std, same conventions as
-    * [[pngChannelStats]]). */
-  def jpegLumaStats(b: Array[Byte]): Option[(Long, Long, Double, Double)] =
-    jpegDecode(b).map { img =>
-      val n = img.width.toLong * img.height
-      var s = 0L; var ss = 0L
-      var i = 0
-      while (i < img.pixels.length) {
-        val v = img.pixels(i) & 0xff
-        s += v; ss += v.toLong * v
-        i += 1
-      }
-      val mean = s.toDouble / n
-      val variance = ss.toDouble / n - mean * mean
-      (n, s, mean, math.sqrt(math.max(0.0, variance)))
+  /** (n, sum, mean, std) of a decoded gray image: exact integer sums,
+    * population std, same conventions as [[pngChannelStats]]. */
+  private def jpegLumaStatsOf(img: JpegImage): (Long, Long, Double, Double) = {
+    val n = img.width.toLong * img.height
+    var s = 0L; var ss = 0L
+    var i = 0
+    while (i < img.pixels.length) {
+      val v = img.pixels(i) & 0xff
+      s += v; ss += v.toLong * v
+      i += 1
     }
+    val mean = s.toDouble / n
+    val variance = ss.toDouble / n - mean * mean
+    (n, s, mean, math.sqrt(math.max(0.0, variance)))
+  }
+
+  /** Decoded-luma statistics of a baseline JPEG: (n, sum, mean, std). */
+  def jpegLumaStats(b: Array[Byte]): Option[(Long, Long, Double, Double)] =
+    jpegDecode(b).map(jpegLumaStatsOf)
 
   def jpegLumaStatsCol(c: Column): Column =
     udf { b: Array[Byte] => jpegLumaStats(b) }.apply(c)
-
-  // ---- baseline COLOR JPEG (3-component YCbCr, 4:2:0) --------------- //
-
-  /** Decoded color image: full-resolution luma plane + quarter-size
-    * (w/2 × h/2) chroma planes, exactly as they sit in the codestream —
-    * no upsampling, so every sample is decoder output, not interpolator
-    * output, and per-plane statistics are integer-exact.
-    */
-  final case class JpegYCbCr(width: Int, height: Int, y: Array[Byte],
-                             cb: Array[Byte], cr: Array[Byte])
-
-  /** REAL baseline color JPEG encoder — 3-component YCbCr with 4:2:0
-    * subsampling (the overwhelmingly dominant profile in the wild):
-    * two DQT tables (flat q=16 luma + chroma), TWO DHT pairs (the
-    * Annex-K code lengths registered at table ids 0 and 1, so the
-    * decoder's table SELECTION logic is exercised, not just one shared
-    * table), SOF0 with sampling factors Y=2x2 / Cb=Cr=1x1, and an MCU-
-    * interleaved entropy stream: per 16x16 MCU four Y blocks (left-
-    * right, top-bottom) then Cb then Cr, each component carrying its
-    * OWN DC difference chain (T.81 E.2.4). Dims must be multiples of
-    * 16. `yBlocks` are raster-ordered (w/8 x h/8) quantized blocks;
-    * `cbBlocks`/`crBlocks` raster-ordered (w/16 x h/16).
-    */
-  def jpegEncodeColor420(width: Int, height: Int,
-                         yBlocks: Array[Array[Int]],
-                         cbBlocks: Array[Array[Int]],
-                         crBlocks: Array[Array[Int]]): Array[Byte] = {
-    require(width % 16 == 0 && height % 16 == 0,
-      s"dims must be multiples of 16, got ${width}x$height")
-    val bw = width / 8; val bh = height / 8
-    val cw = width / 16; val ch = height / 16
-    require(yBlocks.length == bw * bh && cbBlocks.length == cw * ch &&
-      crBlocks.length == cw * ch, "block counts must match dims")
-    require((yBlocks ++ cbBlocks ++ crBlocks).forall(blk =>
-      blk.length == 64 && blk.forall(c => c > -1024 && c < 1024)),
-      "coef category must be <= 10")
-    def seg(marker: Int, body: Array[Byte]): Array[Byte] =
-      Array[Byte](0xff.toByte, marker.toByte) ++ be16(body.length + 2) ++ body
-    val app0 = seg(0xe0, "JFIF".getBytes("US-ASCII") ++
-      Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    val dqt = seg(0xdb, Array[Byte](0x00) ++ Array.fill[Byte](64)(16) ++
-      Array[Byte](0x01) ++ Array.fill[Byte](64)(16))
-    val sof0 = seg(0xc0, Array[Byte](8) ++ be16(height) ++ be16(width) ++
-      Array[Byte](3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1))
-    val dht = seg(0xc4,
-      Array[Byte](0x00) ++ jpegDcBits.map(_.toByte) ++ jpegDcVals ++
-      Array[Byte](0x10) ++ jpegAcBits.map(_.toByte) ++ jpegAcVals ++
-      Array[Byte](0x01) ++ jpegDcBits.map(_.toByte) ++ jpegDcVals ++
-      Array[Byte](0x11) ++ jpegAcBits.map(_.toByte) ++ jpegAcVals)
-    val sos = seg(0xda,
-      Array[Byte](3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0))
-    val (dcCodes, dcLens) = jpegHuffCodes(jpegDcBits)
-    val (acCodes, acLens) = jpegHuffCodes(jpegAcBits)
-    val acIdx = new Array[Int](256)
-    java.util.Arrays.fill(acIdx, -1)
-    jpegAcVals.zipWithIndex.foreach { case (v, k) => acIdx(v & 0xff) = k }
-    def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    val w = new JpegBitWriter
-    val prev = new Array[Int](3) // per-component DC predictor
-    def putBlock(blk: Array[Int], comp: Int): Unit = {
-      val diff = blk(0) - prev(comp)
-      prev(comp) = blk(0)
-      val s = category(diff)
-      w.put(dcCodes(s), dcLens(s))
-      if (s > 0)
-        w.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-      val lastNz = (63 to 1 by -1).find(k => blk(jpegZigzag(k)) != 0).getOrElse(0)
-      var k = 1
-      var run = 0
-      while (k <= lastNz) {
-        val c = blk(jpegZigzag(k))
-        if (c == 0) run += 1
-        else {
-          while (run >= 16) {
-            w.put(acCodes(acIdx(0xf0)), acLens(acIdx(0xf0))); run -= 16
-          }
-          val sz = category(c)
-          w.put(acCodes(acIdx((run << 4) | sz)), acLens(acIdx((run << 4) | sz)))
-          w.put(if (c < 0) c + (1 << sz) - 1 else c, sz)
-          run = 0
-        }
-        k += 1
-      }
-      if (lastNz < 63) w.put(acCodes(acIdx(0x00)), acLens(acIdx(0x00))) // EOB
-    }
-    var my = 0
-    while (my < ch) {
-      var mx = 0
-      while (mx < cw) {
-        putBlock(yBlocks((my * 2) * bw + mx * 2), 0)
-        putBlock(yBlocks((my * 2) * bw + mx * 2 + 1), 0)
-        putBlock(yBlocks((my * 2 + 1) * bw + mx * 2), 0)
-        putBlock(yBlocks((my * 2 + 1) * bw + mx * 2 + 1), 0)
-        putBlock(cbBlocks(my * cw + mx), 1)
-        putBlock(crBlocks(my * cw + mx), 2)
-        mx += 1
-      }
-      my += 1
-    }
-    w.flush()
-    Array[Byte](0xff.toByte, 0xd8.toByte) ++ app0 ++ dqt ++ sof0 ++
-      dht ++ sos ++ w.out.toByteArray ++
-      Array[Byte](0xff.toByte, 0xd9.toByte)
-  }
-
-  /** REAL baseline color JPEG decode (3-component YCbCr 4:2:0 single
-    * interleaved scan — the profile [[jpegEncodeColor420]] emits and
-    * the one phone cameras and web encoders emit): marker walk, up to
-    * four DQT/DHT tables, SOF0 with sampling validation (Y 2x2, chroma
-    * 1x1; anything else → None), SOS component→table binding, MCU-
-    * interleaved entropy decode with per-component DC chains, dequant,
-    * exact integer path for flat blocks / float IDCT otherwise —
-    * sharing the grayscale decoder's primitives ([[JpegBitReader]],
-    * [[JpegHuffDecoder]], EXTEND). Progressive/arithmetic/restart
-    * markers return None, never junk. The grayscale entry point
-    * [[jpegDecode]] is untouched: separate profiles, separately pinned
-    * oracles.
-    */
-  def jpegDecodeColor420(b: Array[Byte]): Option[JpegYCbCr] = ByteCursor.total {
-    val cur = ByteCursor(b)
-    val n = b.length
-    if (n < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var i = 2
-    var w = -1; var h = -1
-    val quant = new Array[Array[Int]](4)
-    val dcTabs = new Array[JpegHuffDecoder](4)
-    val acTabs = new Array[JpegHuffDecoder](4)
-    val qSel = new Array[Int](3)   // per-component quant table id
-    val dcSel = new Array[Int](3)  // per-component DC table id (from SOS)
-    val acSel = new Array[Int](3)
-    var entropy: Array[Byte] = null
-    while (entropy == null) {
-      if (i + 4 > n || (b(i) & 0xff) != 0xff) return None
-      val m = b(i + 1) & 0xff
-      if (m == 0xd9) return None
-      val len = cur.be16(i + 2)
-      val body = i + 4
-      if (body + len - 2 > n || len < 2) return None
-      m match {
-        case 0xdb =>
-          val segEnd = body + len - 2
-          var p = body
-          while (p < segEnd) {
-            val pq = (b(p) & 0xff) >> 4; val tq = b(p) & 0x0f
-            if (pq != 0 || tq > 3 || p + 65 > segEnd) return None
-            quant(tq) = Array.tabulate(64)(k => b(p + 1 + k) & 0xff)
-            p += 65
-          }
-        case 0xc4 =>
-          val segEnd = body + len - 2
-          var p = body
-          while (p < segEnd) {
-            val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
-            if (tc > 1 || th > 3 || p + 17 > segEnd) return None
-            val bits = Array.tabulate(16)(k => b(p + 1 + k) & 0xff)
-            val total = bits.sum
-            if (total > 256 || p + 17 + total > segEnd) return None
-            val vals = Array.tabulate(total)(k => b(p + 17 + k))
-            val dec = new JpegHuffDecoder(bits, vals)
-            if (tc == 0) dcTabs(th) = dec else acTabs(th) = dec
-            p += 17 + total
-          }
-        case 0xc0 =>
-          if (len < 17 || (b(body) & 0xff) != 8) return None
-          h = cur.be16(body + 1)
-          w = cur.be16(body + 3)
-          if ((b(body + 5) & 0xff) != 3) return None // color profile only here
-          var c = 0
-          while (c < 3) {
-            val cid = b(body + 6 + 3 * c) & 0xff
-            val samp = b(body + 7 + 3 * c) & 0xff
-            if (cid != c + 1) return None
-            if (c == 0 && samp != 0x22) return None
-            if (c > 0 && samp != 0x11) return None
-            qSel(c) = b(body + 8 + 3 * c) & 0xff
-            c += 1
-          }
-        case 0xc1 | 0xc2 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
-             0xcb | 0xcd | 0xce | 0xcf =>
-          return None
-        case 0xdd => return None
-        case 0xda =>
-          if (len < 12 || (b(body) & 0xff) != 3) return None
-          var c = 0
-          while (c < 3) {
-            if ((b(body + 1 + 2 * c) & 0xff) != c + 1) return None
-            dcSel(c) = (b(body + 2 + 2 * c) & 0xff) >> 4
-            acSel(c) = b(body + 2 + 2 * c) & 0x0f
-            c += 1
-          }
-          var p = body + len - 2
-          val raw = new java.io.ByteArrayOutputStream()
-          var end = -1
-          while (end < 0) {
-            if (p >= n) return None
-            val cc = b(p) & 0xff
-            if (cc != 0xff) { raw.write(cc); p += 1 }
-            else if (p + 1 < n && b(p + 1) == 0) { raw.write(0xff); p += 2 }
-            else if (p + 1 < n && (b(p + 1) & 0xff) == 0xd9) end = p
-            else return None
-          }
-          entropy = raw.toByteArray
-        case _ => ()
-      }
-      if (entropy == null) i = body + len - 2
-    }
-    if (w <= 0 || h <= 0 || w % 16 != 0 || h % 16 != 0) return None
-    if (w.toLong * h > 64L * 1024 * 1024) return None
-    val qs = Array.tabulate(3) { c =>
-      if (qSel(c) < 0 || qSel(c) > 3) return None
-      quant(qSel(c))
-    }
-    val dcs = Array.tabulate(3) { c =>
-      if (dcSel(c) < 0 || dcSel(c) > 3) return None
-      dcTabs(dcSel(c))
-    }
-    val acs = Array.tabulate(3) { c =>
-      if (acSel(c) < 0 || acSel(c) > 3) return None
-      acTabs(acSel(c))
-    }
-    if (qs.exists(_ == null) || dcs.exists(_ == null) || acs.exists(_ == null))
-      return None
-    val cw = w / 16; val chh = h / 16
-    val py = new Array[Byte](w * h)
-    val pcb = new Array[Byte]((w / 2) * (h / 2))
-    val pcr = new Array[Byte]((w / 2) * (h / 2))
-    val r = new JpegBitReader(entropy)
-    val coef = new Array[Int](64)
-    val prev = new Array[Int](3)
-    // decode one block of component `comp` into plane at block (bx, by)
-    def block(comp: Int, plane: Array[Byte], planeW: Int,
-              bx: Int, by: Int): Boolean = {
-      java.util.Arrays.fill(coef, 0)
-      val s = dcs(comp).decode(r)
-      if (s < 0 || s > 11) return false
-      val dv = r.receive(s)
-      if (dv == Int.MinValue) return false
-      prev(comp) += jpegExtend(dv, s)
-      coef(0) = prev(comp) * qs(comp)(0)
-      var k = 1
-      var eob = false
-      var hasAc = false
-      while (!eob && k < 64) {
-        val sym = acs(comp).decode(r)
-        if (sym < 0) return false
-        if (sym == 0x00) eob = true
-        else if (sym == 0xf0) k += 16
-        else {
-          val run = sym >> 4; val size = sym & 0x0f
-          if (size == 0) return false
-          k += run
-          if (k > 63) return false
-          val av = r.receive(size)
-          if (av == Int.MinValue) return false
-          coef(jpegZigzag(k)) = jpegExtend(av, size) * qs(comp)(k)
-          hasAc = true
-          k += 1
-        }
-      }
-      if (!hasAc) {
-        val v = math.max(0, math.min(255,
-          Math.floorDiv(2 * coef(0) + 8, 16) + 128))
-        var yy = 0
-        while (yy < 8) {
-          java.util.Arrays.fill(plane, (by * 8 + yy) * planeW + bx * 8,
-            (by * 8 + yy) * planeW + bx * 8 + 8, v.toByte)
-          yy += 1
-        }
-      } else {
-        var yy = 0
-        while (yy < 8) {
-          var xx = 0
-          while (xx < 8) {
-            var acc = 0.0
-            var v = 0
-            while (v < 8) {
-              var u = 0
-              while (u < 8) {
-                val cu = if (u == 0) 0.7071067811865476 else 1.0
-                val cv = if (v == 0) 0.7071067811865476 else 1.0
-                acc += cu * cv * coef(v * 8 + u) *
-                  math.cos((2 * xx + 1) * u * math.Pi / 16) *
-                  math.cos((2 * yy + 1) * v * math.Pi / 16)
-                u += 1
-              }
-              v += 1
-            }
-            val sv = math.max(0, math.min(255, math.round(acc / 4 + 128).toInt))
-            plane((by * 8 + yy) * planeW + bx * 8 + xx) = sv.toByte
-            xx += 1
-          }
-          yy += 1
-        }
-      }
-      true
-    }
-    var my = 0
-    while (my < chh) {
-      var mx = 0
-      while (mx < cw) {
-        if (!block(0, py, w, mx * 2, my * 2)) return None
-        if (!block(0, py, w, mx * 2 + 1, my * 2)) return None
-        if (!block(0, py, w, mx * 2, my * 2 + 1)) return None
-        if (!block(0, py, w, mx * 2 + 1, my * 2 + 1)) return None
-        if (!block(1, pcb, w / 2, mx, my)) return None
-        if (!block(2, pcr, w / 2, mx, my)) return None
-        mx += 1
-      }
-      my += 1
-    }
-    Some(JpegYCbCr(w, h, py, pcb, pcr))
-  }
 
   /** Deterministic synthetic DC-only COLOR JPEG per id: (id%2+1) MCUs
     * wide x 1 MCU tall (16 or 32 x 16 px). Per-block DC values by
@@ -3229,302 +3223,32 @@ object Binary {
   def jpegColorStatsCol(c: Column): Column =
     udf { b: Array[Byte] => jpegColorStats(b) }.apply(c)
 
-  // ------------------------------------------------------------------ //
-  // REAL PROGRESSIVE JPEG codec (grayscale SOF2) — the last media
-  // profile a crawl-scale pipeline hits at frequency (r11 brief item
-  // 8). Spectral selection + successive approximation per ITU T.81
-  // G.1/G.2: DC first/refine scans (point transform = arithmetic
-  // shift), AC first scans per spectral band with EOBn run coding, and
-  // AC refinement scans with correction bits (the G.1.2.3 algorithm).
-  // The encoder emits the libjpeg-style six-scan script, so the
-  // decoder's every path — band placement, EOBRUN absorption, ZRL in
-  // refinement, correction-bit ordering — is exercised by the
-  // round-trip spec against the BASELINE decoder's pixels (same
-  // coefficients, two codings, one rendering). The reference keeps all
-  // media handling out of engine scope (no codec anywhere in
-  // francesco-camaione/dataquality_ML); this closes the progressive
-  // half of the boundary the way q234/q321 closed baseline/color.
-  // After this, [[stubDecode]] stands in only for FLAC subframe
-  // samples and MP4 video frames.
-  // ------------------------------------------------------------------ //
-
-  /** Custom AC Huffman table covering ALL 256 symbols (255 at 9 bits,
-    * one at 10): progressive AC scans emit EOBn symbols (r<<4, r ≥ 1)
-    * that the Annex-K baseline table does not contain. Compression is
-    * irrelevant here; exercising the decoder's full symbol space is
-    * the point.
-    */
-  private val jpegProgAcBits: Array[Int] =
-    Array(0, 0, 0, 0, 0, 0, 0, 0, 255, 1, 0, 0, 0, 0, 0, 0)
-  private val jpegProgAcVals: Array[Byte] = (0 to 255).map(_.toByte).toArray
-
-  /** The fixed scan script (Ss, Se, Ah, Al) — libjpeg's default
-    * grayscale progression: DC approximation, two AC bands at Al=2,
-    * one AC refinement step to Al=1, the DC bit, the final AC
-    * refinement to Al=0. Completing all scans reconstructs every
-    * coefficient EXACTLY (each refinement step restores one bit).
-    */
-  private val jpegProgScript: Seq[(Int, Int, Int, Int)] = Seq(
-    (0, 0, 0, 1), (1, 5, 0, 2), (6, 63, 0, 2),
-    (1, 63, 2, 1), (0, 0, 1, 0), (1, 63, 1, 0))
-
-  /** REAL progressive JPEG encoder (grayscale): SOI, APP0, DQT (flat
-    * q=16), SOF2, DHT (standard DC + full-symbol AC), then one
-    * SOS + entropy segment per script scan. `blocks` are raster-order
-    * 64-entry QUANTIZED coefficient blocks in natural order, as in
-    * [[jpegEncodeBlocks]].
-    */
-  def jpegEncodeProgressive(width: Int, height: Int,
-                            blocks: Array[Array[Int]]): Array[Byte] = {
-    require(width % 8 == 0 && height % 8 == 0,
-      s"dims must be multiples of 8, got ${width}x$height")
-    val bw = width / 8; val bh = height / 8
-    require(blocks.length == bw * bh,
-      s"need ${bw * bh} blocks, got ${blocks.length}")
-    require(blocks.forall(blk => blk.length == 64 &&
-      blk.forall(c => c > -1024 && c < 1024)), "coef category must be <= 10")
-    def seg(marker: Int, body: Array[Byte]): Array[Byte] =
-      Array[Byte](0xff.toByte, marker.toByte) ++ be16(body.length + 2) ++ body
-    val app0 = seg(0xe0, "JFIF".getBytes("US-ASCII") ++
-      Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    val dqt = seg(0xdb, Array[Byte](0) ++ Array.fill[Byte](64)(16))
-    val sof2 = seg(0xc2, Array[Byte](8) ++ be16(height) ++ be16(width) ++
-      Array[Byte](1, 1, 0x11, 0))
-    val dhtDc = seg(0xc4, Array[Byte](0x00) ++
-      jpegDcBits.map(_.toByte) ++ jpegDcVals)
-    val dhtAc = seg(0xc4, Array[Byte](0x10) ++
-      jpegProgAcBits.map(_.toByte) ++ jpegProgAcVals)
-    val (dcCodes, dcLens) = jpegHuffCodes(jpegDcBits)
-    val (acCodes, acLens) = jpegHuffCodes(jpegProgAcBits) // HUFFVAL = 0..255
-    def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(Array[Byte](0xff.toByte, 0xd8.toByte)); out.write(app0)
-    out.write(dqt); out.write(sof2); out.write(dhtDc); out.write(dhtAc)
-    jpegProgScript.foreach { case (ss, se, ah, al) =>
-      out.write(seg(0xda,
-        Array[Byte](1, 1, 0x00, ss.toByte, se.toByte, ((ah << 4) | al).toByte)))
-      val w = new JpegBitWriter
-      if (ss == 0 && ah == 0) {
-        // DC first: diff chain on the point-transformed values
-        var prev = 0
-        blocks.foreach { blk =>
-          val t = blk(0) >> al // arithmetic shift = T.81 DC point transform
-          val diff = t - prev; prev = t
-          val s = category(diff)
-          w.put(dcCodes(s), dcLens(s))
-          if (s > 0)
-            w.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-        }
-      } else if (ss == 0) {
-        // DC refinement: one raw bit per block
-        blocks.foreach(blk => w.put((blk(0) >> al) & 1, 1))
-      } else if (ah == 0) {
-        // AC first scan of band [ss, se] at Al=al, EOBn run coding
-        var eobrun = 0
-        def flushEob(): Unit = if (eobrun > 0) {
-          val rb = 31 - Integer.numberOfLeadingZeros(eobrun)
-          w.put(acCodes(rb << 4), acLens(rb << 4))
-          if (rb > 0) w.put(eobrun - (1 << rb), rb)
-          eobrun = 0
-        }
-        def pt(v: Int): Int = if (v >= 0) v >> al else -((-v) >> al)
-        blocks.foreach { blk =>
-          val t = Array.tabulate(se - ss + 1)(j => pt(blk(jpegZigzag(ss + j))))
-          val lastNz = t.lastIndexWhere(_ != 0)
-          if (lastNz < 0) {
-            eobrun += 1; if (eobrun == 0x7fff) flushEob()
-          } else {
-            flushEob()
-            var r = 0
-            var j = 0
-            while (j <= lastNz) {
-              val v = t(j)
-              if (v == 0) r += 1
-              else {
-                while (r >= 16) { w.put(acCodes(0xf0), acLens(0xf0)); r -= 16 }
-                val sz = category(v)
-                val sym = (r << 4) | sz
-                w.put(acCodes(sym), acLens(sym))
-                w.put(if (v < 0) v + (1 << sz) - 1 else v, sz)
-                r = 0
-              }
-              j += 1
-            }
-            if (lastNz < se - ss) { eobrun += 1; if (eobrun == 0x7fff) flushEob() }
-          }
-        }
-        flushEob()
-      } else {
-        // AC refinement scan (T.81 G.1.2.3, mirroring libjpeg's
-        // encode_mcu_AC_refine control flow exactly): newly-significant
-        // coefficients code as (run-of-zero-history<<4)|1 + sign bit;
-        // already-significant ones contribute one correction bit each.
-        // TWO bit buffers, like libjpeg's BE/BR split: `eobBits` ride
-        // with the deferred EOBn (bits of blocks absorbed into the EOB
-        // run, in block order), `runBits` belong to the current
-        // intra-block run and are emitted after the ZRL or significance
-        // symbol whose advance crosses their positions. The ZRL check
-        // runs at EVERY nonzero position (not only newly-significant
-        // ones) — that placement is what keeps the decoder's
-        // advance-and-correct loop bit-synchronized.
-        var eobrun = 0
-        val eobBits = scala.collection.mutable.ArrayBuffer.empty[Int]
-        val runBits = scala.collection.mutable.ArrayBuffer.empty[Int]
-        def emitRunBits(): Unit = { runBits.foreach(w.put(_, 1)); runBits.clear() }
-        def flushEob(): Unit = if (eobrun > 0) {
-          val rb = 31 - Integer.numberOfLeadingZeros(eobrun)
-          w.put(acCodes(rb << 4), acLens(rb << 4))
-          if (rb > 0) w.put(eobrun - (1 << rb), rb)
-          eobrun = 0
-          eobBits.foreach(w.put(_, 1)); eobBits.clear()
-        }
-        blocks.foreach { blk =>
-          val band = Array.tabulate(se - ss + 1)(j => blk(jpegZigzag(ss + j)))
-          val temp = band.map(v => math.abs(v) >> al)
-          val eobIdx = temp.lastIndexWhere(_ == 1)
-          var r = 0
-          var j = 0
-          while (j < temp.length) {
-            if (temp(j) == 0) r += 1
-            else {
-              while (r > 15 && j <= eobIdx) {
-                flushEob()
-                w.put(acCodes(0xf0), acLens(0xf0)); r -= 16
-                emitRunBits()
-              }
-              if (temp(j) > 1) runBits += (temp(j) & 1)
-              else { // newly significant
-                flushEob()
-                w.put(acCodes((r << 4) | 1), acLens((r << 4) | 1))
-                w.put(if (band(j) > 0) 1 else 0, 1)
-                emitRunBits()
-                r = 0
-              }
-            }
-            j += 1
-          }
-          if (r > 0 || runBits.nonEmpty) {
-            eobrun += 1
-            eobBits ++= runBits; runBits.clear()
-            if (eobrun == 0x7fff) flushEob()
-          }
-        }
-        flushEob()
-      }
-      w.flush()
-      out.write(w.out.toByteArray)
-    }
-    out.write(Array[Byte](0xff.toByte, 0xd9.toByte))
-    out.toByteArray
-  }
-
   /** REAL progressive JPEG decode (grayscale SOF2 single-component
-    * profile): multi-scan marker walk (tables may be redefined between
-    * scans), per-scan dispatch on (Ss, Se, Ah, Al) — DC first/refine,
-    * AC first with EOBn runs and ZRL, AC refinement with correction
-    * bits — then dequantization and the same rendering as the baseline
-    * path (exact integer flat blocks, float IDCT otherwise). Returns
-    * None (never junk) on restart markers, truncation, undefined
-    * codes, band violations, or coefficient overruns.
+    * profile): exactly one SOF2 frame of one component at sampling
+    * 1x1, no DRI, at least one scan. The shared walk reads every scan
+    * (tables may be redefined between them); [[decodeProgScan]]
+    * dispatches each on (Ss, Se, Ah, Al) — DC first/refine, AC first
+    * with EOBn runs and ZRL, AC refinement with correction bits — into
+    * one quantized coefficient array; then dequantization and the
+    * shared rendering, where a block is flat when it has no nonzero
+    * dequantized AC coefficient. Returns None (never junk) on restart
+    * markers, truncation, undefined codes, band violations, or
+    * coefficient overruns (a coefficient beyond ±32767).
     */
   def jpegDecodeProgressive(b: Array[Byte]): Option[JpegImage] = ByteCursor.total {
-    val cur = ByteCursor(b)
-    val n = b.length
-    if (n < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    var i = 2
-    var w = -1; var h = -1
-    val quant = new Array[Array[Int]](4)
-    val dcTabs = new Array[JpegHuffDecoder](4)
-    val acTabs = new Array[JpegHuffDecoder](4)
-    var qSel = -1
-    var coefs: Array[Int] = null // bw*bh*64, QUANTIZED, natural order
-    var nBlocks = 0
-    var sawScan = false
-    var done = false
-    while (!done) {
-      if (i + 2 > n || (b(i) & 0xff) != 0xff) return None
-      val m = b(i + 1) & 0xff
-      if (m == 0xd9) { done = true } // EOI
-      else {
-        if (i + 4 > n) return None
-        val len = cur.be16(i + 2)
-        val body = i + 4
-        if (body + len - 2 > n || len < 2) return None
-        m match {
-          case 0xdb =>
-            val segEnd = body + len - 2
-            var p = body
-            while (p < segEnd) {
-              val pq = (b(p) & 0xff) >> 4; val tq = b(p) & 0x0f
-              if (pq != 0 || tq > 3 || p + 65 > segEnd) return None
-              quant(tq) = Array.tabulate(64)(k => b(p + 1 + k) & 0xff)
-              p += 65
-            }
-            i = body + len - 2
-          case 0xc4 =>
-            val segEnd = body + len - 2
-            var p = body
-            while (p < segEnd) {
-              val tc = (b(p) & 0xff) >> 4; val th = b(p) & 0x0f
-              if (tc > 1 || th > 3 || p + 17 > segEnd) return None
-              val bits = Array.tabulate(16)(k => b(p + 1 + k) & 0xff)
-              val total = bits.sum
-              if (total > 256 || p + 17 + total > segEnd) return None
-              val vals = Array.tabulate(total)(k => b(p + 17 + k))
-              val dec = new JpegHuffDecoder(bits, vals)
-              if (tc == 0) dcTabs(th) = dec else acTabs(th) = dec
-              p += 17 + total
-            }
-            i = body + len - 2
-          case 0xc2 => // SOF2 progressive
-            if (coefs != null) return None // one frame header only
-            if (len < 11 || (b(body) & 0xff) != 8) return None
-            h = cur.be16(body + 1)
-            w = cur.be16(body + 3)
-            if ((b(body + 5) & 0xff) != 1) return None // grayscale profile only
-            if ((b(body + 7) & 0xff) != 0x11) return None
-            qSel = b(body + 8) & 0xff
-            if (qSel > 3) return None
-            if (w <= 0 || h <= 0 || w % 8 != 0 || h % 8 != 0) return None
-            if (w.toLong * h > 64L * 1024 * 1024) return None
-            nBlocks = (w / 8) * (h / 8)
-            coefs = new Array[Int](nBlocks * 64)
-            i = body + len - 2
-          case 0xc0 | 0xc1 | 0xc3 | 0xc5 | 0xc6 | 0xc7 | 0xc9 | 0xca |
-               0xcb | 0xcd | 0xce | 0xcf =>
-            return None // any other SOF: not this profile
-          case 0xdd => return None // DRI unsupported
-          case 0xda =>
-            if (coefs == null) return None // SOS before SOF2
-            if (len < 8 || (b(body) & 0xff) != 1) return None
-            val dcSel = (b(body + 2) & 0xff) >> 4; val acSel = b(body + 2) & 0x0f
-            val ss = (b(body + 3) & 0xff); val se = b(body + 4) & 0xff
-            val ah = (b(body + 5) & 0xff) >> 4; val al = b(body + 5) & 0x0f
-            if (dcSel > 3 || acSel > 3) return None
-            // entropy data: unstuff to the next marker
-            var p = body + len - 2
-            val raw = new java.io.ByteArrayOutputStream()
-            var endMark = -1
-            while (endMark < 0) {
-              if (p + 1 >= n) return None
-              val c = b(p) & 0xff
-              if (c != 0xff) { raw.write(c); p += 1 }
-              else if (b(p + 1) == 0) { raw.write(0xff); p += 2 }
-              else endMark = p
-            }
-            if (!decodeProgScan(raw.toByteArray, coefs, nBlocks, ss, se,
-                ah, al, dcTabs(dcSel), acTabs(acSel))) return None
-            sawScan = true
-            i = endMark
-          case _ => i = body + len - 2 // APPn/COM
-        }
-      }
-    }
-    if (coefs == null || !sawScan) return None
-    val q = quant(qSel)
-    if (q == null) return None
-    val bw = w / 8; val bh = h / 8
-    val px = new Array[Byte](w * h)
+    val f = jpegFrame(b, 0xc2)
+    if (f.ids.length != 1 || f.sampling(0) != 0x11 || f.dri ||
+        f.scans.isEmpty) return None
+    val w = f.width
+    val bw = w / 8
+    val nBlocks = bw * (f.height / 8)
+    val coefs = new Array[Int](nBlocks * 64) // QUANTIZED, natural order
+    // no DRI: each scan's entropy data is one segment
+    if (!f.scans.forall(s => s.ids.length == 1 && decodeProgScan(
+        s.segments(0), coefs, nBlocks, s.ss, s.se, s.ah, s.al, s.dc(0),
+        s.ac(0)))) return None
+    val q = f.quant(0)
+    val px = new Array[Byte](w * f.height)
     val deq = new Array[Int](64)
     var bi = 0
     while (bi < nBlocks) {
@@ -3542,7 +3266,7 @@ object Binary {
       renderJpegBlock(deq, hasAc, px, w, bi % bw, bi / bw)
       bi += 1
     }
-    Some(JpegImage(w, h, px))
+    Some(JpegImage(w, f.height, px))
   }
 
   /** One progressive scan over the (quantized, natural-order) shared
@@ -3687,9 +3411,10 @@ object Binary {
     }
   }
 
-  /** Shared block rendering (baseline semantics): exact integer path
-    * for flat blocks, T.81 A.3.3 float IDCT otherwise. `deq` is the
-    * DEQUANTIZED natural-order block. */
+  /** The one block renderer: exact integer path for flat blocks
+    * (round(DC/8) + 128), T.81 A.3.3 float IDCT otherwise, clamped to
+    * 0..255 into the 8x8 block (bx, by) of a `w`-wide plane. `deq` is
+    * the DEQUANTIZED natural-order block; the caller decides flatness. */
   private def renderJpegBlock(deq: Array[Int], hasAc: Boolean,
                               px: Array[Byte], w: Int,
                               bx: Int, by: Int): Unit = {
@@ -3758,19 +3483,7 @@ object Binary {
   /** Decoded-luma statistics of a progressive JPEG: (n, sum, mean,
     * std), same conventions as [[jpegLumaStats]]. */
   def jpegProgLumaStats(b: Array[Byte]): Option[(Long, Long, Double, Double)] =
-    jpegDecodeProgressive(b).map { img =>
-      val n = img.width.toLong * img.height
-      var s = 0L; var ss = 0L
-      var i = 0
-      while (i < img.pixels.length) {
-        val v = img.pixels(i) & 0xff
-        s += v; ss += v.toLong * v
-        i += 1
-      }
-      val mean = s.toDouble / n
-      val variance = ss.toDouble / n - mean * mean
-      (n, s, mean, math.sqrt(math.max(0.0, variance)))
-    }
+    jpegDecodeProgressive(b).map(jpegLumaStatsOf)
 
   def jpegProgLumaStatsCol(c: Column): Column =
     udf { b: Array[Byte] => jpegProgLumaStats(b) }.apply(c)

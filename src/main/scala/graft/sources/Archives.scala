@@ -156,7 +156,7 @@ object Archives {
     * shared bounds-guarded [[Inflate.exact]] (r16 consolidation). */
   private def inflateRaw(data: Array[Byte],
       expected: Long): Option[Array[Byte]] =
-    Inflate.exact(data, expected)
+    Inflate.exact(data, raw = true, expected)
 
   /** ustar walk; None on a bad checksum/octal field/truncation.
     * Directories surface with empty text; only regular files carry

@@ -2,11 +2,13 @@ package graft.sources
 
 /** The one bounds-guarded JDK inflate used by every format reader
   * (WOFF table data, git loose objects, Avro deflate blocks, PDF
-  * /FlateDecode, ZIP members) — a single implementation so the stall
-  * handling and bomb guard can never diverge between copies. r16
-  * folded the two remaining older copies in (Pdf via [[apply]] with
-  * its 64 MiB cap, Archives via [[exact]] which keeps its
-  * declared-size contract).
+  * /FlateDecode, ZIP members, PNG IDAT) — a single implementation so
+  * the stall handling and bomb guard can never diverge between copies.
+  * Pdf goes through [[apply]] with its 64 MiB cap; Archives and PNG go
+  * through [[exact]], which keeps the declared-size contract. The one
+  * exception is [[Warc]]'s gzip member walk: it needs the inflater's
+  * `getRemaining` after each member to find where the next one starts.
+  * ByteCursorSpec fails on a `java.util.zip.Inflater` anywhere else.
   */
 private[graft] object Inflate {
 
@@ -34,15 +36,17 @@ private[graft] object Inflate {
     finally inf.end()
   }
 
-  /** Inflate RAW deflate into an exact `expected`-byte buffer (ZIP
-    * members, where the central directory declares the size).
-    * Keeps the original Archives contract: output of exactly
-    * `expected` bytes is accepted even with unconsumed trailing
-    * compressed bytes (the member CRC gates content); shorter
-    * output, stalls and bombs (expected > 256 MiB) return None. */
-  def exact(data: Array[Byte], expected: Long): Option[Array[Byte]] = {
+  /** Inflate `data` into an exact `expected`-byte buffer, where the
+    * container declares the size (ZIP members: `raw` deflate; PNG
+    * IDAT: a zlib stream, whose size the header's dimensions fix).
+    * Output of exactly `expected` bytes is accepted even with
+    * unconsumed trailing compressed bytes (the member CRC gates
+    * content); shorter output, stalls (a zlib preset dictionary
+    * included) and bombs (expected > 256 MiB) return None. */
+  def exact(data: Array[Byte], raw: Boolean,
+            expected: Long): Option[Array[Byte]] = {
     if (expected < 0 || expected > (256L << 20)) return None
-    val inf = new java.util.zip.Inflater(true)
+    val inf = new java.util.zip.Inflater(raw)
     try {
       inf.setInput(data)
       val out = new Array[Byte](expected.toInt)

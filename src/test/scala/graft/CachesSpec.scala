@@ -11,7 +11,8 @@ import graft.core.Caches
   * LRU of 4 keys' working sets, same-plan frames shared across keys,
   * recency refreshed on re-registration. The `retain:` tests cover that
   * retention rule through `keep`. A source scan pins `Caches` as the
-  * only place that names a storage level. Every test uses fresh keys
+  * only place that names a storage level or caches a frame (a bare
+  * `persist()` or `.cache()` fails it). Every test uses fresh keys
   * and fresh plans; releaseAll is a session boundary and is never
   * called here (the session is shared by every suite).
   */
@@ -78,9 +79,10 @@ class CachesSpec extends SparkSpec {
   }
 
   test("Caches is the only code in src/main that names a storage level") {
-    // a bare persist() picks Spark's default level without naming it
+    // a bare persist() or cache() picks Spark's default level without
+    // naming it, and registers nothing
     val patterns = Seq("""MEMORY_AND_DISK""", """\bStorageLevel\.\w+""",
-      """\.persist\(\s*\)""").map(_.r)
+      """\.persist\(\s*\)""", """\.cache\(\s*\)""").map(_.r)
     // OrderStats tests `storageLevel == NONE` to see whether its input
     // is already cached
     val allowed = Map(

@@ -387,6 +387,33 @@ class MultimodalSpec extends SparkSpec {
     assert(Binary.pngDecode(headerOnly).isEmpty)
   }
 
+  test("PNG decoder: an IDAT zlib stream with a preset dictionary returns None") {
+    import graft.sources.ByteCursor.be32
+    def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
+      val t = typ.getBytes("US-ASCII")
+      val crc = new java.util.zip.CRC32
+      crc.update(t); crc.update(data)
+      be32(data.length) ++ t ++ data ++ be32(crc.getValue)
+    }
+    // zlib header 78 BB sets FDICT ((0x78 * 256 + 0xbb) % 31 == 0); a
+    // DICTID and deflate bytes follow. Every chunk CRC is valid, so
+    // the stream reaches the inflater, which then waits for a
+    // dictionary and makes no progress.
+    val idat = Array(0x78, 0xbb, 0, 0, 0, 1, 0x63, 0x60, 0, 0).map(_.toByte)
+    val png = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
+      chunk("IHDR", be32(1) ++ be32(1) ++ Array[Byte](8, 2, 0, 0, 0)) ++
+      chunk("IDAT", idat) ++ chunk("IEND", Array.empty)
+    // A decoder that spins never returns, and a spin loop ignores
+    // interrupts: decode on a daemon thread so such a decoder fails
+    // this test after the timeout instead of hanging the suite.
+    @volatile var got: Option[Option[Binary.PngImage]] = None
+    val t = new Thread(() => got = Some(Binary.pngDecode(png)))
+    t.setDaemon(true)
+    t.start()
+    t.join(30000)
+    assert(got.contains(None), "pngDecode did not return None within 30 s")
+  }
+
   test("PNG channel stats match the closed-form pixel formula") {
     import graft.multimodal.Binary
     val id = 23L
