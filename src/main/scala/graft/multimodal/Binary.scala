@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.ByteCursor
+import graft.sources.{BitCursor, BitWriter, ByteCursor, Huffman}
 import graft.sources.ByteCursor.{be16, be24, be32, be64, le16, le24, le32,
   le64}
 
@@ -2061,16 +2061,9 @@ object Binary {
   private[multimodal] def lzwEncode(indices: Array[Byte], minCode: Int): Array[Byte] = {
     val clear = 1 << minCode
     val eoi = clear + 1
-    val out = new java.io.ByteArrayOutputStream()
-    var bitBuf = 0L; var bitCnt = 0
+    val w = new BitWriter(msb = false, pad = 0)
     var width = minCode + 1
-    def put(code: Int): Unit = {
-      bitBuf |= code.toLong << bitCnt
-      bitCnt += width
-      while (bitCnt >= 8) {
-        out.write((bitBuf & 0xff).toInt); bitBuf >>>= 8; bitCnt -= 8
-      }
-    }
+    def put(code: Int): Unit = w.bits(code, width)
     var nextCode = eoi + 1
     val dict = new java.util.HashMap[Integer, Integer]()
     put(clear)
@@ -2096,8 +2089,7 @@ object Binary {
       i += 1
     }
     put(cur); put(eoi)
-    if (bitCnt > 0) out.write((bitBuf & 0xff).toInt)
-    out.toByteArray
+    w.bytes
   }
 
   /** GIF-variant LZW decoder: prefix-chain dictionary in flat arrays,
@@ -2107,23 +2099,12 @@ object Binary {
     * codes, truncated bitstreams, or output exceeding `maxPixels`.
     */
   private[multimodal] def lzwDecode(data: Array[Byte], minCode: Int,
-                                    maxPixels: Int): Option[Array[Byte]] = {
+      maxPixels: Int): Option[Array[Byte]] = ByteCursor.total {
     if (minCode < 2 || minCode > 8) return None
     val clear = 1 << minCode
     val eoi = clear + 1
     var width = minCode + 1
-    var bitPos = 0L
-    val nBits = data.length.toLong * 8
-    def read(): Int = {
-      if (bitPos + width > nBits) return -1
-      var v = 0; var i = 0
-      while (i < width) {
-        val bit = (data((bitPos >> 3).toInt) >> (bitPos & 7L).toInt) & 1
-        v |= bit << i
-        bitPos += 1; i += 1
-      }
-      v
-    }
+    val r = new BitCursor(data, 0L, data.length.toLong, msb = false)
     val prefix = new Array[Int](4096)
     val suffix = new Array[Byte](4096)
     val csize = new Array[Int](4096)
@@ -2145,8 +2126,7 @@ object Binary {
     var prev = -1
     var done = false
     while (!done) {
-      val code = read()
-      if (code < 0) return None // truncated before EOI
+      val code = r.bits(width).toInt
       if (code == clear) { nextCode = eoi + 1; width = minCode + 1; prev = -1 }
       else if (code == eoi) done = true
       else if (prev < 0) {
@@ -2381,40 +2361,19 @@ object Binary {
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
 
-  /** An encoder-side Huffman table: BITS/HUFFVAL as a DHT segment
-    * carries them, and each symbol's canonical code (T.81 C.2). */
-  private final class JpegHuffTable(bits: Array[Int], vals: Array[Byte]) {
-    private val code = new Array[Int](256)
-    private val len = new Array[Int](256) // 0: symbol not in the table
-    locally {
-      var c = 0; var k = 0; var l = 1
-      while (l <= 16) {
-        var i = 0
-        while (i < bits(l - 1)) {
-          code(vals(k) & 0xff) = c; len(vals(k) & 0xff) = l
-          c += 1; k += 1; i += 1
-        }
-        c <<= 1
-        l += 1
-      }
-    }
-    /** The DHT table entry under class/id byte `tcTh`. */
-    def dht(tcTh: Int): Array[Byte] =
-      tcTh.toByte +: (bits.map(_.toByte) ++ vals)
-    def put(w: JpegBitWriter, sym: Int): Unit = {
-      require(len(sym) > 0, f"symbol 0x$sym%02x not in the table")
-      w.put(code(sym), len(sym))
-    }
-  }
+  /** `h` as a DHT table entry (BITS, HUFFVAL) under class/id byte
+    * `tcTh`. */
+  private def dht(tcTh: Int, h: Huffman): Array[Byte] =
+    tcTh.toByte +: (h.counts ++ h.symbols).map(_.toByte)
 
   // standard Huffman tables (ITU T.81 Annex K.3) — carried in the DHT
   // segment, so encoder and decoder are self-consistent by
   // construction even though only DC categories + EOB are exercised
   // by the DC-only fixtures
-  private val jpegDcTable = new JpegHuffTable(
+  private[graft] val jpegDcTable = Huffman(
     Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0),
-    (0 to 11).map(_.toByte).toArray)
-  private val jpegAcTable = new JpegHuffTable(
+    (0 to 11).toArray)
+  private[graft] val jpegAcTable = Huffman(
     Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125), Array(
     0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
     0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
@@ -2430,7 +2389,7 @@ object Binary {
     0xb8, 0xb9, 0xba, 0xc2, 0xc3, 0xc4, 0xc5, 0xc6, 0xc7, 0xc8, 0xc9,
     0xca, 0xd2, 0xd3, 0xd4, 0xd5, 0xd6, 0xd7, 0xd8, 0xd9, 0xda, 0xe1,
     0xe2, 0xe3, 0xe4, 0xe5, 0xe6, 0xe7, 0xe8, 0xe9, 0xea, 0xf1, 0xf2,
-    0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8, 0xf9, 0xfa).map(_.toByte))
+    0xf3, 0xf4, 0xf5, 0xf6, 0xf7, 0xf8, 0xf9, 0xfa))
 
   /** Custom AC Huffman table covering ALL 256 symbols (255 at 9 bits,
     * one at 10): progressive AC scans emit EOBn symbols (r<<4, r ≥ 1)
@@ -2438,88 +2397,37 @@ object Binary {
     * irrelevant here; exercising the decoder's full symbol space is
     * the point.
     */
-  private val jpegProgAcTable = new JpegHuffTable(
+  private val jpegProgAcTable = Huffman(
     Array(0, 0, 0, 0, 0, 0, 0, 0, 255, 1, 0, 0, 0, 0, 0, 0),
-    (0 to 255).map(_.toByte).toArray)
+    (0 to 255).toArray)
 
-  /** MSB-first bit writer with 0xFF→0xFF00 byte stuffing; flush pads
-    * the final partial byte with 1-bits per the standard. */
-  private final class JpegBitWriter {
-    val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0
-    private var nb = 0
-    def put(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((code >> i) & 1)
-        nb += 1
-        if (nb == 8) {
-          out.write(acc)
-          if (acc == 0xff) out.write(0)
-          acc = 0; nb = 0
-        }
-        i -= 1
-      }
+  /** A T.81 bit writer: MSB first, the last byte padded with 1 bits. */
+  private def jpegBits() = new BitWriter(msb = true, pad = 1)
+
+  /** A T.81 bit reader over one unstuffed entropy segment. */
+  private def jpegReader(seg: Array[Byte]) =
+    new BitCursor(seg, 0L, seg.length.toLong, msb = true)
+
+  /** The finished entropy bytes of `w` with every 0xFF followed by a
+    * stuffed 0x00 (T.81 B.1.1.5), so no data byte reads as a marker:
+    * the mirror of the unstuffing [[jpegFrame]] does on read. */
+  private def jpegStuffed(w: BitWriter): Array[Byte] = {
+    val b = w.bytes
+    val out = new java.io.ByteArrayOutputStream(b.length + 16)
+    var i = 0
+    while (i < b.length) {
+      out.write(b(i))
+      if (b(i) == -1) out.write(0)
+      i += 1
     }
-    def flush(): Unit = while (nb != 0) put(1, 1)
+    out.toByteArray
   }
 
-  /** MSB-first bit reader over unstuffed entropy bytes. */
-  private final class JpegBitReader(data: Array[Byte]) {
-    private var pos = 0
-    private var acc = 0
-    private var nb = 0
-    def readBit(): Int = {
-      if (nb == 0) {
-        if (pos >= data.length) return -1
-        acc = data(pos) & 0xff; pos += 1; nb = 8
-      }
-      nb -= 1
-      (acc >> nb) & 1
-    }
-    def receive(s: Int): Int = {
-      var v = 0; var i = 0
-      while (i < s) {
-        val b = readBit()
-        if (b < 0) return Int.MinValue
-        v = (v << 1) | b
-        i += 1
-      }
-      v
-    }
-  }
-
-  private def jpegExtend(v: Int, s: Int): Int =
+  /** `s` bits (MSB first) read as a T.81 RECEIVE, then EXTENDed to a
+    * signed coefficient of category `s`. */
+  private def jpegReceiveExtend(r: BitCursor, s: Int): Int = {
+    val v = r.bits(s).toInt
     if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
-
-  /** Sequential Huffman decode per T.81 F.16 (min/max-code tables). */
-  private final class JpegHuffDecoder(bits: Array[Int], vals: Array[Byte]) {
-    private val minCode = new Array[Int](17)
-    private val maxCode = new Array[Int](17)
-    private val valPtr = new Array[Int](17)
-    locally {
-      var code = 0; var k = 0; var l = 1
-      while (l <= 16) {
-        valPtr(l) = k
-        minCode(l) = code
-        code += bits(l - 1); k += bits(l - 1)
-        maxCode(l) = code - 1
-        code <<= 1
-        l += 1
-      }
-    }
-    def decode(r: JpegBitReader): Int = {
-      var code = 0; var l = 0
-      while (l < 16) {
-        val bit = r.readBit()
-        if (bit < 0) return -1
-        code = (code << 1) | bit
-        l += 1
-        if (bits(l - 1) > 0 && code >= minCode(l) && code <= maxCode(l))
-          return vals(valPtr(l) + code - minCode(l)) & 0xff
-      }
-      -1
-    }
   }
 
   // ---- encoders ------------------------------------------------------ //
@@ -2559,25 +2467,25 @@ object Binary {
 
   /** The symbol `(run << 4) | category(v)` of `tab`, then v's EXTEND
     * bits — a DC difference (run 0) or an AC coefficient. */
-  private def jpegPutCoef(w: JpegBitWriter, tab: JpegHuffTable, run: Int,
+  private def jpegPutCoef(w: BitWriter, tab: Huffman, run: Int,
                           v: Int): Unit = {
     val s = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    tab.put(w, (run << 4) | s)
-    if (s > 0) w.put(if (v < 0) v + (1 << s) - 1 else v, s)
+    tab.encode(w, (run << 4) | s)
+    w.bits(if (v < 0) v + (1 << s) - 1 else v, s)
   }
 
   /** An EOBn symbol for a run of `eobrun` empty bands (T.81 G.1.2.2). */
-  private def jpegPutEobRun(w: JpegBitWriter, eobrun: Int): Unit = {
+  private def jpegPutEobRun(w: BitWriter, eobrun: Int): Unit = {
     val rb = 31 - Integer.numberOfLeadingZeros(eobrun)
-    jpegProgAcTable.put(w, rb << 4)
-    if (rb > 0) w.put(eobrun - (1 << rb), rb)
+    jpegProgAcTable.encode(w, rb << 4)
+    w.bits(eobrun - (1 << rb), rb)
   }
 
   /** One sequential block with the Annex-K tables: its DC difference
     * from `pred`, then AC run-length coding in zigzag order (ZRL for
     * runs ≥ 16, EOB for the zero tail). Returns the block's DC, the
     * component's next predictor. */
-  private def jpegPutBlock(w: JpegBitWriter, blk: Array[Int], pred: Int): Int = {
+  private def jpegPutBlock(w: BitWriter, blk: Array[Int], pred: Int): Int = {
     jpegPutCoef(w, jpegDcTable, 0, blk(0) - pred)
     val lastNz = (63 to 1 by -1).find(k => blk(jpegZigzag(k)) != 0).getOrElse(0)
     var k = 1
@@ -2586,13 +2494,13 @@ object Binary {
       val c = blk(jpegZigzag(k))
       if (c == 0) run += 1
       else {
-        while (run >= 16) { jpegAcTable.put(w, 0xf0); run -= 16 } // ZRL
+        while (run >= 16) { jpegAcTable.encode(w, 0xf0); run -= 16 } // ZRL
         jpegPutCoef(w, jpegAcTable, run, c)
         run = 0
       }
       k += 1
     }
-    if (lastNz < 63) jpegAcTable.put(w, 0x00) // EOB
+    if (lastNz < 63) jpegAcTable.encode(w, 0x00) // EOB
     blk(0)
   }
 
@@ -2616,24 +2524,24 @@ object Binary {
     require(blocks.length == (width / 8) * (height / 8),
       s"need ${(width / 8) * (height / 8)} blocks, got ${blocks.length}")
     val entropy = new java.io.ByteArrayOutputStream()
-    var w = new JpegBitWriter
+    var w = jpegBits()
     var pred = 0
     blocks.zipWithIndex.foreach { case (blk, bi) =>
       if (restartInterval > 0 && bi > 0 && bi % restartInterval == 0) {
-        w.flush(); entropy.write(w.out.toByteArray)
+        entropy.write(jpegStuffed(w))
         entropy.write(0xff)
         entropy.write(0xd0 + ((bi / restartInterval - 1) % 8))
-        w = new JpegBitWriter
+        w = jpegBits()
         pred = 0
       }
       pred = jpegPutBlock(w, blk, pred)
     }
-    w.flush(); entropy.write(w.out.toByteArray)
+    entropy.write(jpegStuffed(w))
     val dri = if (restartInterval > 0)
       seg(0xdd, be16(restartInterval)) else Array.empty[Byte]
     jpegHead(0xc0, width, height, 1, 1, 1, 0x11, 0) ++ dri ++
-      seg(0xc4, jpegDcTable.dht(0x00)) ++
-      seg(0xc4, jpegAcTable.dht(0x10)) ++
+      seg(0xc4, dht(0x00, jpegDcTable)) ++
+      seg(0xc4, dht(0x10, jpegAcTable)) ++
       seg(0xda, Array[Byte](1, 1, 0x00, 0, 63, 0)) ++
       entropy.toByteArray ++ jpegEoi
   }
@@ -2666,7 +2574,7 @@ object Binary {
     val cw = width / 16; val ch = height / 16
     require(yBlocks.length == bw * (height / 8) && cbBlocks.length == cw * ch &&
       crBlocks.length == cw * ch, "block counts must match dims")
-    val w = new JpegBitWriter
+    val w = jpegBits()
     val pred = new Array[Int](3) // per-component DC predictor
     def put(blk: Array[Int], comp: Int): Unit =
       pred(comp) = jpegPutBlock(w, blk, pred(comp))
@@ -2684,12 +2592,11 @@ object Binary {
       }
       my += 1
     }
-    w.flush()
     jpegHead(0xc0, width, height, 2, 3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1) ++
-      seg(0xc4, jpegDcTable.dht(0x00) ++ jpegAcTable.dht(0x10) ++
-        jpegDcTable.dht(0x01) ++ jpegAcTable.dht(0x11)) ++
+      seg(0xc4, dht(0x00, jpegDcTable) ++ dht(0x10, jpegAcTable) ++
+        dht(0x01, jpegDcTable) ++ dht(0x11, jpegAcTable)) ++
       seg(0xda, Array[Byte](3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)) ++
-      w.out.toByteArray ++ jpegEoi
+      jpegStuffed(w) ++ jpegEoi
   }
 
   /** The fixed progressive scan script (Ss, Se, Ah, Al) — libjpeg's
@@ -2719,12 +2626,12 @@ object Binary {
       s"need ${(width / 8) * (height / 8)} blocks, got ${blocks.length}")
     val out = new java.io.ByteArrayOutputStream()
     out.write(jpegHead(0xc2, width, height, 1, 1, 1, 0x11, 0))
-    out.write(seg(0xc4, jpegDcTable.dht(0x00)))
-    out.write(seg(0xc4, jpegProgAcTable.dht(0x10)))
+    out.write(seg(0xc4, dht(0x00, jpegDcTable)))
+    out.write(seg(0xc4, dht(0x10, jpegProgAcTable)))
     jpegProgScript.foreach { case (ss, se, ah, al) =>
       out.write(seg(0xda,
         Array[Byte](1, 1, 0x00, ss.toByte, se.toByte, ((ah << 4) | al).toByte)))
-      val w = new JpegBitWriter
+      val w = jpegBits()
       if (ss == 0 && ah == 0) {
         // DC first: diff chain on the point-transformed values
         var prev = 0
@@ -2734,7 +2641,7 @@ object Binary {
         }
       } else if (ss == 0) {
         // DC refinement: one raw bit per block
-        blocks.foreach(blk => w.put((blk(0) >> al) & 1, 1))
+        blocks.foreach(blk => w.bits((blk(0) >> al) & 1, 1))
       } else if (ah == 0) {
         // AC first scan of band [ss, se] at Al=al, EOBn run coding
         var eobrun = 0
@@ -2755,7 +2662,7 @@ object Binary {
               val v = t(j)
               if (v == 0) r += 1
               else {
-                while (r >= 16) { jpegProgAcTable.put(w, 0xf0); r -= 16 }
+                while (r >= 16) { jpegProgAcTable.encode(w, 0xf0); r -= 16 }
                 jpegPutCoef(w, jpegProgAcTable, r, v)
                 r = 0
               }
@@ -2781,10 +2688,10 @@ object Binary {
         var eobrun = 0
         val eobBits = scala.collection.mutable.ArrayBuffer.empty[Int]
         val runBits = scala.collection.mutable.ArrayBuffer.empty[Int]
-        def emitRunBits(): Unit = { runBits.foreach(w.put(_, 1)); runBits.clear() }
+        def emitRunBits(): Unit = { runBits.foreach(w.bits(_, 1)); runBits.clear() }
         def flushEob(): Unit = if (eobrun > 0) {
           jpegPutEobRun(w, eobrun); eobrun = 0
-          eobBits.foreach(w.put(_, 1)); eobBits.clear()
+          eobBits.foreach(w.bits(_, 1)); eobBits.clear()
         }
         blocks.foreach { blk =>
           val band = Array.tabulate(se - ss + 1)(j => blk(jpegZigzag(ss + j)))
@@ -2797,7 +2704,7 @@ object Binary {
             else {
               while (r > 15 && j <= eobIdx) {
                 flushEob()
-                jpegProgAcTable.put(w, 0xf0); r -= 16
+                jpegProgAcTable.encode(w, 0xf0); r -= 16
                 emitRunBits()
               }
               if (temp(j) > 1) runBits += (temp(j) & 1)
@@ -2818,8 +2725,7 @@ object Binary {
         }
         flushEob()
       }
-      w.flush()
-      out.write(w.out.toByteArray)
+      out.write(jpegStuffed(w))
     }
     out.write(jpegEoi)
     out.toByteArray
@@ -2834,7 +2740,7 @@ object Binary {
     * unstuffed entropy data split at RSTn, and the offset of the marker
     * that ended it. */
   private final case class JpegScan(ids: Array[Int],
-      dc: Array[JpegHuffDecoder], ac: Array[JpegHuffDecoder],
+      dc: Array[Huffman], ac: Array[Huffman],
       ss: Int, se: Int, ah: Int, al: Int, restart: Int,
       segments: collection.IndexedSeq[Array[Byte]], end: Int)
 
@@ -2866,8 +2772,8 @@ object Binary {
     if (n < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8)
       ByteCursor.reject()
     val quant = new Array[Array[Int]](4)
-    val dcTabs = new Array[JpegHuffDecoder](4)
-    val acTabs = new Array[JpegHuffDecoder](4)
+    val dcTabs = new Array[Huffman](4)
+    val acTabs = new Array[Huffman](4)
     var w = 0; var h = 0
     var ids: Array[Int] = null
     var sampling: Array[Int] = null
@@ -2912,7 +2818,7 @@ object Binary {
               val bits = bytesAt(p + 1, 16, 1)
               val total = bits.sum
               if (total > 256 || p + 17 + total > next) ByteCursor.reject()
-              val dec = new JpegHuffDecoder(bits, cur.bytes(p + 17, total))
+              val dec = Huffman(bits, bytesAt(p + 17, total, 1))
               if (tc == 0) dcTabs(th) = dec else acTabs(th) = dec
               p += 17 + total
             }
@@ -2924,8 +2830,8 @@ object Binary {
             if (ids == null) ByteCursor.reject()
             val ns = cur.u8(body)
             if (len < 6 + 2 * ns) ByteCursor.reject()
-            val dc = new Array[JpegHuffDecoder](ns)
-            val ac = new Array[JpegHuffDecoder](ns)
+            val dc = new Array[Huffman](ns)
+            val ac = new Array[Huffman](ns)
             var k = 0
             while (k < ns) {
               val t = cur.u8(body + 2 + 2 * k) // Td << 4 | Ta
@@ -3011,24 +2917,21 @@ object Binary {
     val planeW = hs.map(f.width * _ / hMax)
     val planes = Array.tabulate(nc)(c =>
       new Array[Byte](planeW(c) * (f.height * vs(c) / vMax)))
-    var r = new JpegBitReader(s.segments(0))
+    var r = jpegReader(s.segments(0))
     val pred = new Array[Int](nc)
     val coef = new Array[Int](64)
     def block(c: Int, bx: Int, by: Int): Unit = {
       val q = f.quant(c)
       java.util.Arrays.fill(coef, 0)
       val t = s.dc(c).decode(r)
-      if (t < 0 || t > 11) ByteCursor.reject()
-      val dv = r.receive(t)
-      if (dv == Int.MinValue) ByteCursor.reject()
-      pred(c) += jpegExtend(dv, t)
+      if (t > 11) ByteCursor.reject()
+      pred(c) += jpegReceiveExtend(r, t)
       coef(0) = pred(c) * q(0)
       var k = 1
       var eob = false
       var hasAc = false
       while (!eob && k < 64) {
         val sym = s.ac(c).decode(r)
-        if (sym < 0) ByteCursor.reject()
         if (sym == 0x00) eob = true
         else if (sym == 0xf0) k += 16 // ZRL: sixteen zeros
         else {
@@ -3036,9 +2939,7 @@ object Binary {
           if (size == 0) ByteCursor.reject()
           k += run
           if (k > 63) ByteCursor.reject()
-          val av = r.receive(size)
-          if (av == Int.MinValue) ByteCursor.reject()
-          coef(jpegZigzag(k)) = jpegExtend(av, size) * q(k)
+          coef(jpegZigzag(k)) = jpegReceiveExtend(r, size) * q(k)
           hasAc = true
           k += 1
         }
@@ -3049,7 +2950,7 @@ object Binary {
     while (mcu < nMcu) {
       if (s.restart > 0 && mcu > 0 && mcu % s.restart == 0) {
         // restart boundary: byte-aligned new segment, DC chains reset
-        r = new JpegBitReader(s.segments(mcu / s.restart))
+        r = jpegReader(s.segments(mcu / s.restart))
         java.util.Arrays.fill(pred, 0)
       }
       val mx = mcu % mcuW; val my = mcu / mcuW
@@ -3244,9 +3145,11 @@ object Binary {
     val nBlocks = bw * (f.height / 8)
     val coefs = new Array[Int](nBlocks * 64) // QUANTIZED, natural order
     // no DRI: each scan's entropy data is one segment
-    if (!f.scans.forall(s => s.ids.length == 1 && decodeProgScan(
-        s.segments(0), coefs, nBlocks, s.ss, s.se, s.ah, s.al, s.dc(0),
-        s.ac(0)))) return None
+    f.scans.foreach { s =>
+      if (s.ids.length != 1) ByteCursor.reject()
+      decodeProgScan(s.segments(0), coefs, nBlocks, s.ss, s.se, s.ah, s.al,
+        s.dc(0), s.ac(0))
+    }
     val q = f.quant(0)
     val px = new Array[Byte](w * f.height)
     val deq = new Array[Int](64)
@@ -3270,39 +3173,33 @@ object Binary {
   }
 
   /** One progressive scan over the (quantized, natural-order) shared
-    * coefficient array. Returns false on any stream violation. */
+    * coefficient array. Rejects any stream violation. */
   private def decodeProgScan(data: Array[Byte], coefs: Array[Int],
                              nBlocks: Int, ss: Int, se: Int, ah: Int,
-                             al: Int, dcT: JpegHuffDecoder,
-                             acT: JpegHuffDecoder): Boolean = {
-    if (ss < 0 || se > 63 || ss > se || al > 13) return false
-    if (ss == 0 && se != 0) return false // this profile: DC scans are DC-only
-    val r = new JpegBitReader(data)
+                             al: Int, dcT: Huffman, acT: Huffman): Unit = {
+    if (ss < 0 || se > 63 || ss > se || al > 13) ByteCursor.reject()
+    // this profile: DC scans are DC-only
+    if (ss == 0 && se != 0) ByteCursor.reject()
+    if ((ss == 0 && ah == 0 && dcT == null) || (ss > 0 && acT == null))
+      ByteCursor.reject()
+    val r = jpegReader(data)
     if (ss == 0 && ah == 0) {
-      if (dcT == null) return false
       var pred = 0
       var bi = 0
       while (bi < nBlocks) {
         val s = dcT.decode(r)
-        if (s < 0 || s > 11) return false
-        val dv = r.receive(s)
-        if (dv == Int.MinValue) return false
-        pred += jpegExtend(dv, s)
+        if (s > 11) ByteCursor.reject()
+        pred += jpegReceiveExtend(r, s)
         coefs(bi * 64) = pred << al
         bi += 1
       }
-      true
     } else if (ss == 0) {
       var bi = 0
       while (bi < nBlocks) {
-        val bit = r.readBit()
-        if (bit < 0) return false
-        if (bit == 1) coefs(bi * 64) |= (1 << al)
+        if (r.bit() == 1) coefs(bi * 64) |= (1 << al)
         bi += 1
       }
-      true
     } else if (ah == 0) {
-      if (acT == null) return false
       var eobrun = 0
       var bi = 0
       while (bi < nBlocks) {
@@ -3312,46 +3209,31 @@ object Binary {
           var break = false
           while (k <= se && !break) {
             val sym = acT.decode(r)
-            if (sym < 0) return false
             val run = sym >> 4; val sz = sym & 0x0f
             if (sz == 0) {
               if (run < 15) {
-                eobrun = (1 << run) - 1
-                if (run > 0) {
-                  val extra = r.receive(run)
-                  if (extra == Int.MinValue) return false
-                  eobrun += extra
-                }
+                eobrun = (1 << run) - 1 + r.bits(run).toInt
                 break = true
               } else k += 16 // ZRL
             } else {
               k += run
-              if (k > se) return false
-              val av = r.receive(sz)
-              if (av == Int.MinValue) return false
-              coefs(bi * 64 + jpegZigzag(k)) = jpegExtend(av, sz) << al
+              if (k > se) ByteCursor.reject()
+              coefs(bi * 64 + jpegZigzag(k)) = jpegReceiveExtend(r, sz) << al
               k += 1
             }
           }
         }
         bi += 1
       }
-      true
     } else {
       // AC refinement (T.81 G.1.2.3 / libjpeg decode_mcu_AC_refine)
-      if (acT == null) return false
       val p1 = 1 << al; val m1 = -1 << al
       var eobrun = 0
       var bi = 0
-      def correct(bi: Int, k: Int): Boolean = {
+      def correct(bi: Int, k: Int): Unit = {
         val idx = bi * 64 + jpegZigzag(k)
-        if (coefs(idx) != 0) {
-          val bit = r.readBit()
-          if (bit < 0) return false
-          if (bit == 1 && (coefs(idx) & p1) == 0)
-            coefs(idx) += (if (coefs(idx) >= 0) p1 else m1)
-        }
-        true
+        if (coefs(idx) != 0 && r.bit() == 1 && (coefs(idx) & p1) == 0)
+          coefs(idx) += (if (coefs(idx) >= 0) p1 else m1)
       }
       while (bi < nBlocks) {
         var k = ss
@@ -3359,21 +3241,13 @@ object Binary {
           var break = false
           while (k <= se && !break) {
             val sym = acT.decode(r)
-            if (sym < 0) return false
             var run = sym >> 4; val sz = sym & 0x0f
             var placed = 0
             if (sz != 0) {
-              if (sz != 1) return false
-              val sb = r.readBit()
-              if (sb < 0) return false
-              placed = if (sb == 1) p1 else m1
+              if (sz != 1) ByteCursor.reject()
+              placed = if (r.bit() == 1) p1 else m1
             } else if (run < 15) {
-              eobrun = 1 << run
-              if (run > 0) {
-                val extra = r.receive(run)
-                if (extra == Int.MinValue) return false
-                eobrun += extra
-              }
+              eobrun = (1 << run) + r.bits(run).toInt
               break = true
             }
             if (!break) {
@@ -3383,13 +3257,13 @@ object Binary {
               while (adv && k <= se) {
                 val idx = bi * 64 + jpegZigzag(k)
                 if (coefs(idx) != 0) {
-                  if (!correct(bi, k)) return false
+                  correct(bi, k)
                   k += 1
                 } else if (run == 0) adv = false
                 else { run -= 1; k += 1 }
               }
               if (placed != 0) {
-                if (k > se) return false
+                if (k > se) ByteCursor.reject()
                 coefs(bi * 64 + jpegZigzag(k)) = placed
               }
               k += 1
@@ -3400,16 +3274,20 @@ object Binary {
           // correction bits for the rest of the band (and, for absorbed
           // blocks, the whole band)
           while (k <= se) {
-            if (!correct(bi, k)) return false
+            correct(bi, k)
             k += 1
           }
           eobrun -= 1
         }
         bi += 1
       }
-      true
     }
   }
+
+  /** cos((2x + 1)·u·π/16) at `x * 8 + u`: the 64 factors of the IDCT,
+    * each computed by the same expression it replaces. */
+  private val jpegCos: Array[Double] =
+    Array.tabulate(64)(i => math.cos((2 * (i / 8) + 1) * (i % 8) * math.Pi / 16))
 
   /** The one block renderer: exact integer path for flat blocks
     * (round(DC/8) + 128), T.81 A.3.3 float IDCT otherwise, clamped to
@@ -3439,9 +3317,8 @@ object Binary {
             while (u < 8) {
               val cu = if (u == 0) 0.7071067811865476 else 1.0
               val cv = if (v == 0) 0.7071067811865476 else 1.0
-              acc += cu * cv * deq(v * 8 + u) *
-                math.cos((2 * xx + 1) * u * math.Pi / 16) *
-                math.cos((2 * yy + 1) * v * math.Pi / 16)
+              acc += cu * cv * deq(v * 8 + u) * jpegCos(xx * 8 + u) *
+                jpegCos(yy * 8 + v)
               u += 1
             }
             v += 1
@@ -3540,61 +3417,8 @@ object Binary {
     crc
   }
 
-  /** MSB-first bit writer without byte stuffing (FLAC framing). */
-  private final class FlacBitWriter {
-    val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0
-    private var nb = 0
-    def put(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        acc = (acc << 1) | ((v >>> i) & 1L).toInt
-        nb += 1
-        if (nb == 8) { out.write(acc); acc = 0; nb = 0 }
-        i -= 1
-      }
-    }
-    def putUnary(q: Int): Unit = { put(0L, q); put(1L, 1) }
-    def alignZero(): Unit = if (nb != 0) put(0L, 8 - nb)
-    def toBytes: Array[Byte] = { alignZero(); out.toByteArray }
-  }
-
-  /** MSB-first bit reader with byte-align (FLAC framing). Returns -1
-    * sentinels on exhaustion — callers bail to None. */
-  private final class FlacBitReader(data: Array[Byte], var pos: Int) {
-    private var acc = 0
-    private var nb = 0
-    def readBit(): Int = {
-      if (nb == 0) {
-        if (pos >= data.length) return -1
-        acc = data(pos) & 0xff; pos += 1; nb = 8
-      }
-      nb -= 1
-      (acc >> nb) & 1
-    }
-    def readBits(n: Int): Long = { // n <= 32, -1L on EOF
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        val b = readBit()
-        if (b < 0) return -1L
-        v = (v << 1) | b
-        i += 1
-      }
-      v
-    }
-    def readUnary(max: Int): Int = { // zeros before a 1; -1 on EOF/overrun
-      var q = 0
-      while (q <= max) {
-        val b = readBit()
-        if (b < 0) return -1
-        if (b == 1) return q
-        q += 1
-      }
-      -1
-    }
-    def alignToByte(): Unit = { nb = 0 }
-  }
+  /** A FLAC bit writer: MSB first, the last byte padded with 0 bits. */
+  private def flacBits() = new BitWriter(msb = true, pad = 0)
 
   private def signExtend(v: Long, n: Int): Int =
     if (n == 0) 0
@@ -3627,7 +3451,7 @@ object Binary {
     * best FIXED 0-2), -2 VERBATIM, -3 LPC order-2 test form (qlp
     * [2,-1], shift 0 — the fixed-order-2 predictor routed through the
     * general LPC path), 0..4 forced FIXED order. */
-  private def flacWriteSubframe(w: FlacBitWriter, xs0: Array[Int], bps0: Int,
+  private def flacWriteSubframe(w: BitWriter, xs0: Array[Int], bps0: Int,
                                 mode: Int): Unit = {
     // wasted bits: shared trailing zeros move into the subframe header
     // (flag + unary count-1) and samples code at the reduced width
@@ -3636,48 +3460,49 @@ object Binary {
     val wasted = if (tz == 32 || tz == 0) 0 else math.min(tz, bps0 - 1)
     val xs = if (wasted > 0) xs0.map(_ >> wasted) else xs0
     val bps = bps0 - wasted
+    def unary(q: Int): Unit = { w.bits(0L, q); w.bits(1L, 1) }
     def putHeader(typeBits: Long): Unit = {
-      w.put(0L, 1); w.put(typeBits, 6)
-      if (wasted == 0) w.put(0L, 1)
-      else { w.put(1L, 1); w.putUnary(wasted - 1) }
+      w.bits(0L, 1); w.bits(typeBits, 6)
+      if (wasted == 0) w.bits(0L, 1)
+      else { w.bits(1L, 1); unary(wasted - 1) }
     }
     def writeResiduals(res: Array[Long], order: Int): Unit = {
       // rice method 0, partition order 0, one partition
-      w.put(0L, 2); w.put(0L, 4)
+      w.bits(0L, 2); w.bits(0L, 4)
       val maxAbs = res.foldLeft(0L)((m, v) => math.max(m, math.abs(v)))
       // pick the rice param so quotients stay small; escape to raw for
       // the occasional pathological block
       var p = 0
       while (p < 14 && (maxAbs >> p) > 8) p += 1
       if (p >= 14) { // escape: raw n-bit residuals (5-bit count field)
-        w.put(0x0fL, 4)
+        w.bits(0x0fL, 4)
         val nbits = 31
-        w.put(nbits.toLong, 5)
-        res.foreach(v => w.put(v & 0x7fffffffL, nbits))
+        w.bits(nbits.toLong, 5)
+        res.foreach(v => w.bits(v & 0x7fffffffL, nbits))
       } else {
-        w.put(p.toLong, 4)
+        w.bits(p.toLong, 4)
         res.foreach { v =>
           val u = (v << 1) ^ (v >> 63) // zigzag
-          w.putUnary((u >>> p).toInt)
-          w.put(u & ((1L << p) - 1), p)
+          unary((u >>> p).toInt)
+          w.bits(u & ((1L << p) - 1), p)
         }
       }
     }
     if (mode == -2) {
       putHeader(1L) // VERBATIM
-      xs.foreach(v => w.put(v.toLong & ((1L << bps) - 1), bps))
+      xs.foreach(v => w.bits(v.toLong & ((1L << bps) - 1), bps))
     } else if (mode == -3) {
       val order = 2
       putHeader(32L | (order - 1).toLong) // LPC
-      xs.take(order).foreach(v => w.put(v.toLong & ((1L << bps) - 1), bps))
-      w.put(14L, 4) // qlp precision 15 (-1 coded)
-      w.put(0L, 5)  // shift 0
-      w.put(2L & 0x7fffL, 15)  // coef a1 = 2
-      w.put((-1L) & 0x7fffL, 15) // coef a2 = -1
+      xs.take(order).foreach(v => w.bits(v.toLong & ((1L << bps) - 1), bps))
+      w.bits(14L, 4) // qlp precision 15 (-1 coded)
+      w.bits(0L, 5)  // shift 0
+      w.bits(2L & 0x7fffL, 15)  // coef a1 = 2
+      w.bits((-1L) & 0x7fffL, 15) // coef a2 = -1
       writeResiduals(flacFixedResiduals(xs, 2), order)
     } else if (mode == -1 && xs.forall(_ == xs(0))) {
       putHeader(0L) // CONSTANT
-      w.put(xs(0).toLong & ((1L << bps) - 1), bps)
+      w.bits(xs(0).toLong & ((1L << bps) - 1), bps)
     } else {
       val order =
         if (mode >= 0) mode
@@ -3686,7 +3511,7 @@ object Binary {
           else flacFixedResiduals(xs, o).foldLeft(0L)((s, v) => s + math.abs(v))
         }
       putHeader(8L | order.toLong) // FIXED
-      xs.take(order).foreach(v => w.put(v.toLong & ((1L << bps) - 1), bps))
+      xs.take(order).foreach(v => w.bits(v.toLong & ((1L << bps) - 1), bps))
       writeResiduals(flacFixedResiduals(xs, order), order)
     }
   }
@@ -3716,26 +3541,26 @@ object Binary {
     var frameNo = 0L
     while (start < samplesByCh(0).length) {
       val bs = math.min(blockSize, samplesByCh(0).length - start)
-      val hdr = new FlacBitWriter
-      hdr.put(0x3ffeL, 14); hdr.put(0L, 1); hdr.put(0L, 1) // sync, rsvd, fixed-bs
+      val hdr = flacBits()
+      hdr.bits(0x3ffeL, 14); hdr.bits(0L, 1); hdr.bits(0L, 1) // sync, rsvd, fixed-bs
       // block size: code 6 (8-bit value-1) keeps arbitrary tails legal
-      hdr.put(6L, 4)
-      hdr.put(0L, 4) // sample rate: from STREAMINFO
+      hdr.bits(6L, 4)
+      hdr.bits(0L, 4) // sample rate: from STREAMINFO
       val chAssign = if (stereo >= 0) stereo else ch - 1
-      hdr.put(chAssign.toLong, 4)
-      hdr.put(4L, 3) // sample size: 16-bit
-      hdr.put(0L, 1)
+      hdr.bits(chAssign.toLong, 4)
+      hdr.bits(4L, 3) // sample size: 16-bit
+      hdr.bits(0L, 1)
       // UTF-8 frame number (same scheme as codepoints)
-      if (frameNo < 0x80) hdr.put(frameNo, 8)
+      if (frameNo < 0x80) hdr.bits(frameNo, 8)
       else {
-        hdr.put(0xc0L | (frameNo >> 6), 8)
-        hdr.put(0x80L | (frameNo & 0x3f), 8)
+        hdr.bits(0xc0L | (frameNo >> 6), 8)
+        hdr.bits(0x80L | (frameNo & 0x3f), 8)
       }
-      hdr.put((bs - 1).toLong, 8)
-      val hb = hdr.toBytes
-      val fw = new FlacBitWriter
-      hb.foreach(b => fw.put(b.toLong & 0xff, 8))
-      fw.put(crc8(hb, 0, hb.length).toLong, 8)
+      hdr.bits((bs - 1).toLong, 8)
+      val hb = hdr.bytes
+      val fw = flacBits()
+      hb.foreach(b => fw.bits(b.toLong & 0xff, 8))
+      fw.bits(crc8(hb, 0, hb.length).toLong, 8)
       // subframes (stereo decorrelation on the coded channels)
       val coded: Array[(Array[Int], Int)] = // (samples, bps)
         if (stereo < 0) samplesByCh.map(a =>
@@ -3753,8 +3578,7 @@ object Binary {
           }
         }
       coded.foreach { case (xs, b) => flacWriteSubframe(fw, xs, b, mode) }
-      fw.alignZero()
-      val body = fw.toBytes
+      val body = fw.bytes
       out.write(body, 0, body.length)
       val c16 = crc16(body, 0, body.length)
       out.write(c16 >> 8); out.write(c16 & 0xff)
@@ -3805,20 +3629,17 @@ object Binary {
     while (got < total) {
       if (i + 5 > b.length) return None
       val frameStart = i
-      val r = new FlacBitReader(b, i)
-      if (r.readBits(14) != 0x3ffe) return None
-      if (r.readBit() != 0) return None
-      val blockingStrategy = r.readBit()
-      if (blockingStrategy < 0) return None
-      val bsCode = r.readBits(4).toInt
-      val srCode = r.readBits(4).toInt
-      val chAssign = r.readBits(4).toInt
-      val ssCode = r.readBits(3).toInt
-      if (r.readBit() != 0) return None
-      if (bsCode < 0 || srCode < 0 || chAssign < 0 || ssCode < 0) return None
+      val r = new BitCursor(b, i, b.length, msb = true)
+      if (r.bits(14) != 0x3ffe) return None
+      if (r.bit() != 0) return None
+      r.bit() // blocking strategy
+      val bsCode = r.bits(4).toInt
+      val srCode = r.bits(4).toInt
+      val chAssign = r.bits(4).toInt
+      val ssCode = r.bits(3).toInt
+      if (r.bit() != 0) return None
       // UTF-8 coded number (frame or sample): 1-7 bytes
-      val lead = r.readBits(8).toInt
-      if (lead < 0) return None
+      val lead = r.bits(8).toInt
       var extra = 0
       var tmp = lead
       if (lead >= 0x80) {
@@ -3827,20 +3648,19 @@ object Binary {
         if (extra < 1 || extra > 6) return None
         var k = 0
         while (k < extra) {
-          val c = r.readBits(8).toInt
-          if (c < 0 || (c & 0xc0) != 0x80) return None
+          if ((r.bits(8) & 0xc0) != 0x80) return None
           k += 1
         }
       }
       val bs = bsCode match {
         case 0 => return None
-        case 6 => val v = r.readBits(8); if (v < 0) return None else v.toInt + 1
-        case 7 => val v = r.readBits(16); if (v < 0) return None else v.toInt + 1
+        case 6 => r.bits(8).toInt + 1
+        case 7 => r.bits(16).toInt + 1
         case c => flacBlockSizes(c)
       }
       srCode match { // explicit-rate codes carry extra header bytes
-        case 12 => if (r.readBits(8) < 0) return None
-        case 13 | 14 => if (r.readBits(16) < 0) return None
+        case 12 => r.bits(8)
+        case 13 | 14 => r.bits(16)
         case 15 => return None
         case _ => ()
       }
@@ -3859,9 +3679,8 @@ object Binary {
       if (nCh != ch) return None
       if (bs <= 0 || got + bs > total) return None
       // header CRC-8: bytes from frameStart up to reader position
-      val hdrEnd = r.pos
-      val crcH = r.readBits(8).toInt
-      if (crcH < 0 || crcH != crc8(b, frameStart, hdrEnd)) return None
+      val hdrEnd = r.pos.toInt
+      if (r.bits(8) != crc8(b, frameStart, hdrEnd)) return None
       // subframes
       val sub = new Array[Array[Int]](nCh)
       var c = 0
@@ -3873,13 +3692,11 @@ object Binary {
           case _ => 0
         })
         sub(c) = flacReadSubframe(r, bs, sbps)
-        if (sub(c) == null) return None
         c += 1
       }
-      r.alignToByte()
-      val bodyEnd = r.pos
-      val crcF = r.readBits(16).toInt
-      if (crcF < 0 || crcF != crc16(b, frameStart, bodyEnd)) return None
+      r.align()
+      val bodyEnd = r.pos.toInt
+      if (r.bits(16) != crc16(b, frameStart, bodyEnd)) return None
       // undecorrelate + copy out
       val off = got.toInt
       chAssign match {
@@ -3915,152 +3732,105 @@ object Binary {
           }
       }
       got += bs
-      i = r.pos
+      i = r.pos.toInt
     }
     // nothing but padding may follow the last frame
     while (i < b.length) { if (b(i) != 0) return None; i += 1 }
     Some(FlacAudio(rate, ch, bits, outCh))
   }
 
-  /** One subframe: returns the reconstructed samples or null on any
-    * stream violation. */
-  private def flacReadSubframe(r: FlacBitReader, bs: Int,
-                               bps: Int): Array[Int] = {
-    if (r.readBit() != 0) return null
-    val t = r.readBits(6).toInt
-    if (t < 0) return null
-    val wastedFlag = r.readBit()
-    if (wastedFlag < 0) return null
-    var wasted = 0
-    if (wastedFlag == 1) {
-      val q = r.readUnary(32)
-      if (q < 0) return null
-      wasted = q + 1
-    }
+  /** One subframe's reconstructed samples; rejects any stream
+    * violation. */
+  private def flacReadSubframe(r: BitCursor, bs: Int, bps: Int): Array[Int] = {
+    if (r.bit() != 0) ByteCursor.reject()
+    val t = r.bits(6).toInt
+    val wasted = if (r.bit() == 1) r.unary(32) + 1 else 0
     val eb = bps - wasted
-    if (eb <= 0 || eb > 33) return null
+    if (eb <= 0 || eb > 33) ByteCursor.reject()
     val xs = new Array[Int](bs)
-    def readResiduals(order: Int): Boolean = {
-      val method = r.readBits(2).toInt
-      if (method < 0 || method > 1) return false
+    def readWarmup(order: Int): Unit = {
+      if (order > bs) ByteCursor.reject()
+      var k = 0
+      while (k < order) { xs(k) = signExtend(r.bits(eb), eb); k += 1 }
+    }
+    def readResiduals(order: Int): Unit = {
+      val method = r.bits(2).toInt
+      if (method > 1) ByteCursor.reject()
       val pWidth = if (method == 0) 4 else 5
       val escape = if (method == 0) 0xf else 0x1f
-      val pOrder = r.readBits(4).toInt
-      if (pOrder < 0) return false
+      val pOrder = r.bits(4).toInt
       val nPart = 1 << pOrder
-      if (bs % nPart != 0) return false
+      if (bs % nPart != 0) ByteCursor.reject()
       var idx = order
       var part = 0
       while (part < nPart) {
         val cnt = (bs >> pOrder) - (if (part == 0) order else 0)
-        if (cnt < 0) return false
-        val prm = r.readBits(pWidth).toInt
-        if (prm < 0) return false
+        if (cnt < 0) ByteCursor.reject()
+        val prm = r.bits(pWidth).toInt
         if (prm == escape) {
-          val nb = r.readBits(5).toInt
-          if (nb < 0) return false
+          val nb = r.bits(5).toInt
           var k = 0
           while (k < cnt) {
-            val v = r.readBits(nb)
-            if (nb > 0 && v < 0) return false
-            xs(idx) = signExtend(v, nb); idx += 1; k += 1
+            xs(idx) = signExtend(r.bits(nb), nb); idx += 1; k += 1
           }
         } else {
           var k = 0
           while (k < cnt) {
-            val q = r.readUnary(1 << 24)
-            if (q < 0) return false
-            val rem = r.readBits(prm)
-            if (prm > 0 && rem < 0) return false
-            xs(idx) = zigzagDec((q.toLong << prm) | (if (prm > 0) rem else 0L))
+            val q = r.unary(1 << 24)
+            xs(idx) = zigzagDec((q.toLong << prm) | r.bits(prm))
             idx += 1; k += 1
           }
         }
         part += 1
       }
-      true
     }
-    val ok: Boolean =
-      if (t == 0) { // CONSTANT
-        val v = r.readBits(eb)
-        if (v < 0 && eb > 0) false
-        else { java.util.Arrays.fill(xs, signExtend(v, eb)); true }
-      } else if (t == 1) { // VERBATIM
-        var k = 0
-        var good = true
-        while (good && k < bs) {
-          val v = r.readBits(eb)
-          if (v < 0) good = false else { xs(k) = signExtend(v, eb); k += 1 }
+    // residuals plus `predict(i)` become sample i, for i from `order`
+    def restore(order: Int)(predict: Int => Long): Unit = {
+      var i2 = order
+      while (i2 < bs) {
+        val v = predict(i2) + xs(i2)
+        if (v < Int.MinValue || v > Int.MaxValue) ByteCursor.reject()
+        xs(i2) = v.toInt
+        i2 += 1
+      }
+    }
+    if (t == 0) { // CONSTANT
+      java.util.Arrays.fill(xs, signExtend(r.bits(eb), eb))
+    } else if (t == 1) { // VERBATIM
+      readWarmup(bs)
+    } else if (t >= 8 && t <= 12) { // FIXED
+      val order = t - 8
+      readWarmup(order)
+      readResiduals(order)
+      restore(order) { i2 =>
+        order match {
+          case 0 => 0L
+          case 1 => xs(i2 - 1).toLong
+          case 2 => 2L * xs(i2 - 1) - xs(i2 - 2)
+          case 3 => 3L * xs(i2 - 1) - 3L * xs(i2 - 2) + xs(i2 - 3)
+          case _ =>
+            4L * xs(i2 - 1) - 6L * xs(i2 - 2) + 4L * xs(i2 - 3) - xs(i2 - 4)
         }
-        good
-      } else if (t >= 8 && t <= 12) { // FIXED
-        val order = t - 8
-        if (order > bs) false
-        else {
-          var k = 0
-          var good = true
-          while (good && k < order) {
-            val v = r.readBits(eb)
-            if (v < 0) good = false else { xs(k) = signExtend(v, eb); k += 1 }
-          }
-          good && readResiduals(order) && {
-            var i2 = order
-            while (i2 < bs) {
-              val p: Long = order match {
-                case 0 => 0L
-                case 1 => xs(i2 - 1).toLong
-                case 2 => 2L * xs(i2 - 1) - xs(i2 - 2)
-                case 3 => 3L * xs(i2 - 1) - 3L * xs(i2 - 2) + xs(i2 - 3)
-                case _ =>
-                  4L * xs(i2 - 1) - 6L * xs(i2 - 2) + 4L * xs(i2 - 3) - xs(i2 - 4)
-              }
-              val v = p + xs(i2)
-              if (v < Int.MinValue || v > Int.MaxValue) return null
-              xs(i2) = v.toInt
-              i2 += 1
-            }
-            true
-          }
-        }
-      } else if (t >= 32) { // LPC, order (t & 31) + 1
-        val order = (t & 31) + 1
-        if (order > bs) false
-        else {
-          var k = 0
-          var good = true
-          while (good && k < order) {
-            val v = r.readBits(eb)
-            if (v < 0) good = false else { xs(k) = signExtend(v, eb); k += 1 }
-          }
-          val precM1 = r.readBits(4).toInt
-          if (precM1 < 0 || precM1 == 15) good = false
-          val prec = precM1 + 1
-          val shiftRaw = if (good) r.readBits(5).toInt else -1
-          if (shiftRaw < 0) good = false
-          val shift = signExtend(shiftRaw.toLong, 5)
-          if (shift < 0) good = false
-          val coefs = new Array[Int](order)
-          var j = 0
-          while (good && j < order) {
-            val cv = r.readBits(prec)
-            if (cv < 0) good = false else { coefs(j) = signExtend(cv, prec); j += 1 }
-          }
-          good && readResiduals(order) && {
-            var i2 = order
-            while (i2 < bs) {
-              var acc = 0L
-              var jj = 0
-              while (jj < order) { acc += coefs(jj).toLong * xs(i2 - 1 - jj); jj += 1 }
-              val v = (acc >> shift) + xs(i2)
-              if (v < Int.MinValue || v > Int.MaxValue) return null
-              xs(i2) = v.toInt
-              i2 += 1
-            }
-            true
-          }
-        }
-      } else false // reserved types
-    if (!ok) return null
+      }
+    } else if (t >= 32) { // LPC, order (t & 31) + 1
+      val order = (t & 31) + 1
+      readWarmup(order)
+      val precM1 = r.bits(4).toInt
+      if (precM1 == 15) ByteCursor.reject()
+      val prec = precM1 + 1
+      val shift = signExtend(r.bits(5), 5)
+      if (shift < 0) ByteCursor.reject()
+      val coefs = new Array[Int](order)
+      var j = 0
+      while (j < order) { coefs(j) = signExtend(r.bits(prec), prec); j += 1 }
+      readResiduals(order)
+      restore(order) { i2 =>
+        var acc = 0L
+        var jj = 0
+        while (jj < order) { acc += coefs(jj).toLong * xs(i2 - 1 - jj); jj += 1 }
+        acc >> shift
+      }
+    } else ByteCursor.reject() // reserved types
     if (wasted > 0) {
       var k = 0
       while (k < bs) { xs(k) = xs(k) << wasted; k += 1 }

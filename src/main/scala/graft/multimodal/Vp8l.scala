@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
+import graft.sources.{BitCursor, BitWriter, ByteCursor, Huffman}
+
 /** WebP lossless (VP8L) pixel codec — dependency-free, spec-derived
   * (the "WebP Lossless Bitstream Specification": LSB-first bitstream,
   * canonical Huffman code groups with the code-length-code machinery,
@@ -33,104 +35,8 @@ import org.apache.spark.sql.functions.udf
   */
 object Vp8l {
 
-  // ---- bit IO (LSB-first, per spec) ------------------------------------
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-    def writeBit(b: Int): Unit = {
-      cur |= (b & 1) << nBits
-      nBits += 1
-      if (nBits == 8) { out.write(cur); cur = 0; nBits = 0 }
-    }
-    /** `n` bits of `v`, least-significant first (ReadBits mirror). */
-    def writeBits(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) { writeBit((v >>> i) & 1); i += 1 }
-    }
-    /** A Huffman code's bits, MSB of the code first. */
-    def writeCode(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { writeBit((code >>> i) & 1); i -= 1 }
-    }
-    def toBytes: Array[Byte] = {
-      if (nBits > 0) { out.write(cur); cur = 0; nBits = 0 }
-      out.toByteArray
-    }
-  }
-
-  private final class BitReader(b: Array[Byte], from: Int) {
-    private var pos = from
-    private var bit = 0
-    var bad = false
-    def readBit(): Int = {
-      if (pos >= b.length) { bad = true; 0 }
-      else {
-        val v = (b(pos) >> bit) & 1
-        bit += 1
-        if (bit == 8) { bit = 0; pos += 1 }
-        v
-      }
-    }
-    def readBits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v |= readBit() << i; i += 1 }
-      v
-    }
-  }
-
-  // ---- canonical Huffman -----------------------------------------------
-
-  /** Canonical codes from lengths (RFC 1951 assignment: by (length,
-    * symbol)); returns code per symbol, -1 for unused. */
-  private def canonicalCodes(lengths: Array[Int]): Array[Int] = {
-    val maxLen = if (lengths.isEmpty) 0 else lengths.max
-    val codes = Array.fill(lengths.length)(-1)
-    var code = 0
-    var len = 1
-    while (len <= maxLen) {
-      var s = 0
-      while (s < lengths.length) {
-        if (lengths(s) == len) { codes(s) = code; code += 1 }
-        s += 1
-      }
-      code <<= 1
-      len += 1
-    }
-    codes
-  }
-
-  /** Bit-at-a-time canonical decoder: (len, code) → symbol. */
-  private final class HuffDecoder(lengths: Array[Int]) {
-    private val single: Int = {
-      val used = lengths.indices.filter(lengths(_) > 0)
-      if (used.length == 1) used.head else -1
-    }
-    val singleSymbol: Int = single // codes of one symbol consume 0 bits
-    private val table: Map[(Int, Int), Int] = {
-      val codes = canonicalCodes(lengths)
-      lengths.indices.collect {
-        case s if lengths(s) > 0 => (lengths(s), codes(s)) -> s
-      }.toMap
-    }
-    def read(br: BitReader): Int = {
-      if (single >= 0) return single
-      var code = 0
-      var len = 0
-      while (len < 16) {
-        code = (code << 1) | br.readBit()
-        len += 1
-        table.get((len, code)) match {
-          case Some(s) => return s
-          case None => ()
-        }
-      }
-      br.bad = true
-      0
-    }
-  }
+  // bits run LSB-first (spec); Huffman codes (RFC 1951 assignment: by
+  // length, then symbol) read and write their top bit first
 
   /** Balanced COMPLETE code over the used symbols (Kraft = 1): with k
     * used symbols and L = ⌈log₂ k⌉, the first 2^L − k get length L−1,
@@ -195,12 +101,12 @@ object Vp8l {
       (code, log - 1, x & ((1 << (log - 1)) - 1))
     }
 
-  private def prefixDecode(code: Int, br: BitReader): Int =
+  private def prefixDecode(code: Int, br: BitCursor): Int =
     if (code < 4) code + 1
     else {
       val extraBits = (code - 2) >> 1
       val offset = (2 + (code & 1)) << extraBits
-      offset + br.readBits(extraBits) + 1
+      offset + bits(br, extraBits) + 1
     }
 
   private def cacheIndex(argb: Int, bits: Int): Int =
@@ -236,24 +142,24 @@ object Vp8l {
     require(!palette || (!subtractGreen && predictorBits == 0 &&
       colorBits == 0), "a palette composes with no other transform")
     val hasAlpha = argb.exists(p => (p >>> 24) != 0xff)
-    val w = new BitWriter
+    val w = new BitWriter(msb = false, pad = 0)
     // header: signature byte is written by the byte assembler below
-    w.writeBits(width - 1, 14)
-    w.writeBits(height - 1, 14)
-    w.writeBits(if (hasAlpha) 1 else 0, 1)
-    w.writeBits(0, 3) // version
+    w.bits(width - 1, 14)
+    w.bits(height - 1, 14)
+    w.bits(if (hasAlpha) 1 else 0, 1)
+    w.bits(0, 3) // version
     if (palette) {
       val colors = scala.collection.mutable.LinkedHashSet[Int]()
       argb.foreach(colors += _)
       require(colors.size <= 256, "palette needs <= 256 distinct colors")
       val pal = colors.toArray
       val lookup = pal.zipWithIndex.toMap
-      w.writeBit(1); w.writeBits(3, 2) // COLOR_INDEXING
-      w.writeBits(pal.length - 1, 8)
+      w.bits(1, 1); w.bits(3, 2) // COLOR_INDEXING
+      w.bits(pal.length - 1, 8)
       val deltas = Array.tabulate(pal.length)(i =>
         if (i == 0) pal(0) else subPixels(pal(i), pal(i - 1)))
       writeCodedImage(w, pal.length, 1, deltas, 0, topLevel = false)
-      w.writeBit(0) // end of transforms
+      w.bits(0, 1) // end of transforms
       val widthBits =
         if (pal.length <= 2) 3
         else if (pal.length <= 4) 2
@@ -280,9 +186,9 @@ object Vp8l {
       }
       writeCodedImage(w, effW, height, bundled, cacheBits,
         topLevel = true, metaBits = metaBits, groupOf = metaGroup)
-      return Binary.riffWebp("VP8L", Array[Byte](0x2f) ++ w.toBytes)
+      return Binary.riffWebp("VP8L", Array[Byte](0x2f) ++ w.bytes)
     }
-    if (subtractGreen) { w.writeBit(1); w.writeBits(2, 2) }
+    if (subtractGreen) { w.bits(1, 1); w.bits(2, 2) }
     var coded = argb.map { p =>
       if (!subtractGreen) p
       else {
@@ -292,8 +198,8 @@ object Vp8l {
       }
     }
     if (predictorBits > 0) {
-      w.writeBit(1); w.writeBits(0, 2) // PREDICTOR
-      w.writeBits(predictorBits - 2, 3)
+      w.bits(1, 1); w.bits(0, 2) // PREDICTOR
+      w.bits(predictorBits - 2, 3)
       val (res, tiles) =
         forwardPredictor(coded, width, height, predictorBits, predictorMode)
       val tpr = (width + (1 << predictorBits) - 1) >> predictorBits
@@ -302,8 +208,8 @@ object Vp8l {
       coded = res
     }
     if (colorBits > 0) {
-      w.writeBit(1); w.writeBits(1, 2) // COLOR
-      w.writeBits(colorBits - 2, 3)
+      w.bits(1, 1); w.bits(1, 2) // COLOR
+      w.bits(colorBits - 2, 3)
       val (res, tiles) =
         forwardColorTransform(coded, width, height, colorBits, colorElem)
       val tpr = (width + (1 << colorBits) - 1) >> colorBits
@@ -311,10 +217,10 @@ object Vp8l {
       writeCodedImage(w, tpr, tpc, tiles, 0, topLevel = false)
       coded = res
     }
-    w.writeBit(0) // end of transforms
+    w.bits(0, 1) // end of transforms
     writeCodedImage(w, width, height, coded, cacheBits,
       topLevel = true, metaBits = metaBits, groupOf = metaGroup)
-    Binary.riffWebp("VP8L", Array[Byte](0x2f) ++ w.toBytes)
+    Binary.riffWebp("VP8L", Array[Byte](0x2f) ++ w.bytes)
   }
 
   /** One entropy-coded image stream: color-cache bit(s), the (absent
@@ -322,8 +228,8 @@ object Vp8l {
   private def writeCodedImage(w: BitWriter, width: Int, height: Int,
       coded: Array[Int], cacheBits: Int, topLevel: Boolean,
       metaBits: Int = 0, groupOf: (Int, Int) => Int = null): Unit = {
-    if (cacheBits > 0) { w.writeBit(1); w.writeBits(cacheBits, 4) }
-    else w.writeBit(0)
+    if (cacheBits > 0) { w.bits(1, 1); w.bits(cacheBits, 4) }
+    else w.bits(0, 1)
     val useMeta = topLevel && metaBits > 0 && groupOf != null
     // meta-Huffman: entropy image of group ids, then per-group codes
     val metaW = if (useMeta) (width + (1 << metaBits) - 1) >> metaBits else 1
@@ -334,10 +240,10 @@ object Vp8l {
         groupOf(i % metaW, i / metaW) & 0xffff)
     val nGroups = groupIds.max + 1
     if (topLevel) {
-      if (!useMeta) w.writeBit(0)
+      if (!useMeta) w.bits(0, 1)
       else {
-        w.writeBit(1)
-        w.writeBits(metaBits - 2, 3)
+        w.bits(1, 1)
+        w.bits(metaBits - 2, 3)
         val tiles = groupIds.map(g =>
           0xff000000 | ((g >> 8) << 16) | ((g & 0xff) << 8))
         writeCodedImage(w, metaW, metaH, tiles, 0, topLevel = false)
@@ -417,22 +323,21 @@ object Vp8l {
       val syms = if (used.isEmpty) Seq(0) else used
       if (syms.length <= 2 && syms.max <= 255) {
         // simple form
-        w.writeBit(1)
-        w.writeBits(syms.length - 1, 1)
+        w.bits(1, 1)
+        w.bits(syms.length - 1, 1)
         val is8 = if (syms.head > 1) 1 else 0
-        w.writeBits(is8, 1)
-        w.writeBits(syms.head, if (is8 == 1) 8 else 1)
-        if (syms.length == 2) w.writeBits(syms(1), 8)
+        w.bits(is8, 1)
+        w.bits(syms.head, if (is8 == 1) 8 else 1)
+        if (syms.length == 2) w.bits(syms(1), 8)
         val lengths = Array.fill(alphabet)(0)
         if (syms.length == 1) lengths(syms.head) = 1 // marker; 0-bit read
         else { lengths(syms.head) = 1; lengths(syms(1)) = 1 }
         lengths
       } else {
-        w.writeBit(0) // full form
+        w.bits(0, 1) // full form
         // one used symbol above the simple form's 8-bit cap (a group
         // whose only token is a copy or cache hit): transmit a single
-        // length-1 entry — the decoder's single-symbol codes read 0
-        // bits, matching the suppressed emit below
+        // length-1 entry — a single-symbol code reads and writes 0 bits
         val lengths =
           if (syms.length == 1) {
             val l = Array.fill(alphabet)(0); l(syms.head) = 1; l
@@ -443,49 +348,44 @@ object Vp8l {
         val clLengths = Array.fill(19)(0)
         if (usedCl.length == 1) clLengths(usedCl.head) = 1
         else balancedLengths(19, usedCl).copyToArray(clLengths)
-        w.writeBits(15, 4) // num_code_lengths = 4 + 15 = 19
-        ClOrder.foreach(s => w.writeBits(clLengths(s), 3))
-        w.writeBit(0) // no max_symbol cap: lengths cover the alphabet
-        val clCodes = canonicalCodes(clLengths)
+        w.bits(15, 4) // num_code_lengths = 4 + 15 = 19
+        ClOrder.foreach(s => w.bits(clLengths(s), 3))
+        w.bits(0, 1) // no max_symbol cap: lengths cover the alphabet
+        // a single-CL-symbol code writes (and reads) 0 bits
+        val cl = Huffman.fromLengths(clLengths)
         runsEncoded.foreach { case (sym, extraBits, extraVal) =>
-          if (usedCl.length > 1) w.writeCode(clCodes(sym), clLengths(sym))
-          // single-CL-symbol code consumes 0 bits on read
-          if (extraBits > 0) w.writeBits(extraVal, extraBits)
+          cl.encode(w, sym)
+          w.bits(extraVal, extraBits)
         }
         lengths
       }
     }
     // per-group code tables, written in group order 0..nGroups-1
-    final case class Ch(lengths: Array[Int], codes: Array[Int], nUsed: Int)
-    def channel(alphabet: Int, used: Seq[Int]): Ch = {
-      val lengths = writeChannelCode(alphabet, used)
-      Ch(lengths, canonicalCodes(lengths), math.max(used.size, 1))
-    }
+    def channel(alphabet: Int, used: Seq[Int]): Huffman =
+      Huffman.fromLengths(writeChannelCode(alphabet, used))
     val chans = Array.tabulate(nGroups) { g =>
       (channel(greenAlpha, usedG(g).toSeq), channel(256, usedR(g).toSeq),
         channel(256, usedB(g).toSeq), channel(256, usedA(g).toSeq),
         channel(40, usedD(g).toSeq))
     }
-    def emit(ch: Ch, sym: Int): Unit =
-      if (ch.nUsed > 1) w.writeCode(ch.codes(sym), ch.lengths(sym))
     toks.foreach {
       case (g, Lit(p)) =>
         val (cg, cr, cb, ca, _) = chans(g)
-        emit(cg, (p >> 8) & 0xff)
-        emit(cr, (p >> 16) & 0xff)
-        emit(cb, p & 0xff)
-        emit(ca, p >>> 24)
+        cg.encode(w, (p >> 8) & 0xff)
+        cr.encode(w, (p >> 16) & 0xff)
+        cb.encode(w, p & 0xff)
+        ca.encode(w, p >>> 24)
       case (g, Copy(len, dist)) =>
         val (cg, _, _, _, cd) = chans(g)
         val (lc, lb, lv) = prefixEncode(len)
-        emit(cg, 256 + lc)
-        w.writeBits(lv, lb)
+        cg.encode(w, 256 + lc)
+        w.bits(lv, lb)
         val (dc, db, dv) = prefixEncode(dist + 120)
-        emit(cd, dc)
-        w.writeBits(dv, db)
+        cd.encode(w, dc)
+        w.bits(dv, db)
       case (g, Hit(idx)) =>
         val (cg, _, _, _, _) = chans(g)
-        emit(cg, 256 + 24 + idx)
+        cg.encode(w, 256 + 24 + idx)
     }
   }
 
@@ -516,19 +416,22 @@ object Vp8l {
 
   // ---- decoder ---------------------------------------------------------
 
-  private final case class HuffGroup(g: HuffDecoder, r: HuffDecoder,
-      b: HuffDecoder, a: HuffDecoder, d: HuffDecoder)
+  private final case class HuffGroup(g: Huffman, r: Huffman, b: Huffman,
+      a: Huffman, d: Huffman)
+
+  /** `n` bits as an Int: no VP8L field is wider than 18 bits. */
+  private def bits(br: BitCursor, n: Int): Int = br.bits(n).toInt
 
   /** Decode a WebP VP8L file → (width, height, ARGB row-major). None on
     * malformation or an out-of-scope transform — never junk pixels. */
-  def decode(b: Array[Byte]): Option[(Int, Int, Array[Int])] = {
+  def decode(b: Array[Byte]): Option[(Int, Int, Array[Int])] = ByteCursor.total {
     val meta = Binary.parseWebpMeta(b)
     if (!meta.exists(_.variant == "vp8l")) return None
     // payload begins after RIFF(12) + chunk header(8) + signature(1)
-    val br = new BitReader(b, 21)
-    val width = br.readBits(14) + 1
-    val height = br.readBits(14) + 1
-    br.readBits(1 + 3) // alpha hint + version (validated by parseWebpMeta)
+    val br = new BitCursor(b, 21L, b.length.toLong, msb = false)
+    val width = bits(br, 14) + 1
+    val height = bits(br, 14) + 1
+    br.bits(1 + 3) // alpha hint + version (validated by parseWebpMeta)
     // transform list, read order recorded: inverses apply in REVERSE
     // read order (the encoder applied them forward in read order)
     var subtractGreen = false
@@ -536,23 +439,21 @@ object Vp8l {
     var colorT: Option[(Int, Array[Int])] = None // (sizeBits, tiles)
     var palette: Option[(Int, Array[Int])] = None // (widthBits, colors)
     val order = scala.collection.mutable.ArrayBuffer[Int]()
-    while (br.readBit() == 1) {
-      br.readBits(2) match {
+    while (br.bit() == 1) {
+      bits(br, 2) match {
         case 0 => // PREDICTOR: tile-mode sub-resolution image
           if (predictor.isDefined) return None
-          val bits = br.readBits(3) + 2
-          val subW = (width + (1 << bits) - 1) >> bits
-          val subH = (height + (1 << bits) - 1) >> bits
-          val tiles = decodeSubImage(br, subW, subH).getOrElse(return None)
-          predictor = Some((bits, tiles))
+          val tb = bits(br, 3) + 2
+          val subW = (width + (1 << tb) - 1) >> tb
+          val subH = (height + (1 << tb) - 1) >> tb
+          predictor = Some((tb, decodeSubImage(br, subW, subH)))
           order += 0
         case 1 => // COLOR: per-tile cross-color transform elements
           if (colorT.isDefined) return None
-          val bits = br.readBits(3) + 2
-          val subW = (width + (1 << bits) - 1) >> bits
-          val subH = (height + (1 << bits) - 1) >> bits
-          val tiles = decodeSubImage(br, subW, subH).getOrElse(return None)
-          colorT = Some((bits, tiles))
+          val tb = bits(br, 3) + 2
+          val subW = (width + (1 << tb) - 1) >> tb
+          val subH = (height + (1 << tb) - 1) >> tb
+          colorT = Some((tb, decodeSubImage(br, subW, subH)))
           order += 1
         case 2 =>
           if (subtractGreen) return None
@@ -560,8 +461,8 @@ object Vp8l {
           order += 2
         case _ => // COLOR_INDEXING: delta-coded palette sub-image
           if (palette.isDefined) return None
-          val tableSize = br.readBits(8) + 1
-          val pal = decodeSubImage(br, tableSize, 1).getOrElse(return None)
+          val tableSize = bits(br, 8) + 1
+          val pal = decodeSubImage(br, tableSize, 1)
           var i = 1
           while (i < pal.length) { // entries are per-channel deltas
             pal(i) = addPixels(pal(i), pal(i - 1)); i += 1
@@ -583,33 +484,31 @@ object Vp8l {
       case Some((wb, _)) => (width + (1 << wb) - 1) >> wb
       case None => width
     }
-    val cacheBits = if (br.readBit() == 1) br.readBits(4) else 0
+    val cacheBits = if (br.bit() == 1) bits(br, 4) else 0
     if (cacheBits > 11) return None
     val cacheSize = if (cacheBits > 0) 1 << cacheBits else 0
     // optional meta-Huffman: an entropy image maps each tile to one of
     // N Huffman groups, read sequentially after it (group index packs
     // as (red << 8) | green); the color cache stays shared
     val (groups, metaBits, metaTiles) =
-      if (br.readBit() == 1) {
-        val mb = br.readBits(3) + 2
+      if (br.bit() == 1) {
+        val mb = bits(br, 3) + 2
         val mw = (effWidth + (1 << mb) - 1) >> mb
         val mh = (height + (1 << mb) - 1) >> mb
-        val img = decodeSubImage(br, mw, mh).getOrElse(return None)
-        val idx = img.map(p => (p >> 8) & 0xffff)
+        val idx = decodeSubImage(br, mw, mh).map(p => (p >> 8) & 0xffff)
         val nG = idx.max + 1
         (Array.fill(nG)(readGroup(br, cacheSize)), mb, idx)
       } else (Array(readGroup(br, cacheSize)), 0, null)
-    if (br.bad) return None
     if (width.toLong * height > 64 * 1024 * 1024) return None
     var px = decodePixelData(br, effWidth, height, cacheBits,
-      groups, metaBits, metaTiles).getOrElse(return None)
+      groups, metaBits, metaTiles)
     order.reverseIterator.foreach {
       case 0 =>
-        val (bits, tiles) = predictor.get
-        if (!inversePredictor(px, width, height, bits, tiles)) return None
+        val (tb, tiles) = predictor.get
+        inversePredictor(px, width, height, tb, tiles)
       case 1 =>
-        val (bits, tiles) = colorT.get
-        inverseColorTransform(px, width, height, bits, tiles)
+        val (tb, tiles) = colorT.get
+        inverseColorTransform(px, width, height, tb, tiles)
       case 2 => addGreenInverse(px)
       case _ =>
         val (wb, pal) = palette.get
@@ -621,74 +520,65 @@ object Vp8l {
   /** Sub-resolution image stream (transform data): optional color
     * cache + ONE Huffman group + pixel data — no transform list and no
     * meta-Huffman bit (the spec recurses only at the top level). */
-  private def decodeSubImage(br: BitReader, width: Int,
-      height: Int): Option[Array[Int]] = {
-    val cacheBits = if (br.readBit() == 1) br.readBits(4) else 0
-    if (cacheBits > 11) return None
+  private def decodeSubImage(br: BitCursor, width: Int,
+      height: Int): Array[Int] = {
+    val cacheBits = if (br.bit() == 1) bits(br, 4) else 0
+    if (cacheBits > 11) ByteCursor.reject()
     val grp = readGroup(br, if (cacheBits > 0) 1 << cacheBits else 0)
-    if (br.bad) return None
     decodePixelData(br, width, height, cacheBits, Array(grp), 0, null)
   }
 
-  private def readGroup(br: BitReader, cacheSize: Int): HuffGroup =
+  private def readGroup(br: BitCursor, cacheSize: Int): HuffGroup =
     HuffGroup(readCode(br, 256 + 24 + cacheSize), readCode(br, 256),
       readCode(br, 256), readCode(br, 256), readCode(br, 40))
 
-  private def readCode(br: BitReader, alphabet: Int): HuffDecoder = {
-      if (br.readBit() == 1) { // simple
-        val numSym = br.readBits(1) + 1
-        val is8 = br.readBits(1)
-        val s0 = br.readBits(if (is8 == 1) 8 else 1)
-        val lengths = Array.fill(alphabet)(0)
-        if (s0 >= alphabet) { br.bad = true; return new HuffDecoder(lengths) }
-        lengths(s0) = 1
-        if (numSym == 2) {
-          val s1 = br.readBits(8)
-          if (s1 >= alphabet) { br.bad = true; return new HuffDecoder(lengths) }
-          lengths(s1) = 1
-        }
-        new HuffDecoder(lengths)
-      } else {
-        val numCl = 4 + br.readBits(4)
-        val clLengths = Array.fill(19)(0)
-        var i = 0
-        while (i < numCl) { clLengths(ClOrder(i)) = br.readBits(3); i += 1 }
-        val cl = new HuffDecoder(clLengths)
-        var maxSymbol =
-          if (br.readBit() == 1) {
-            val nbits = 2 + 2 * br.readBits(3)
-            2 + br.readBits(nbits)
-          } else alphabet
-        val lengths = Array.fill(alphabet)(0)
-        var sym = 0
-        var prev = 8
-        while (sym < alphabet && maxSymbol > 0 && !br.bad) {
-          maxSymbol -= 1
-          val c = cl.read(br)
-          if (c < 16) {
-            lengths(sym) = c; sym += 1
-            if (c != 0) prev = c
-          } else {
-            val (repeat, fill) = c match {
-              case 16 => (3 + br.readBits(2), prev)
-              case 17 => (3 + br.readBits(3), 0)
-              case 18 => (11 + br.readBits(7), 0)
-              case _ => return new HuffDecoder(Array.fill(alphabet)(0))
-            }
-            if (sym + repeat > alphabet) { br.bad = true }
-            else {
-              var k = 0
-              while (k < repeat) { lengths(sym) = fill; sym += 1; k += 1 }
-            }
-          }
-        }
-        new HuffDecoder(lengths)
+  private def readCode(br: BitCursor, alphabet: Int): Huffman = {
+    val lengths = Array.fill(alphabet)(0)
+    if (br.bit() == 1) { // simple: one or two symbols of length 1
+      val numSym = br.bit() + 1
+      val s0 = bits(br, if (br.bit() == 1) 8 else 1)
+      if (s0 >= alphabet) ByteCursor.reject()
+      lengths(s0) = 1
+      if (numSym == 2) {
+        val s1 = bits(br, 8)
+        if (s1 >= alphabet) ByteCursor.reject()
+        lengths(s1) = 1
       }
+    } else {
+      val numCl = 4 + bits(br, 4)
+      val clLengths = Array.fill(19)(0)
+      var i = 0
+      while (i < numCl) { clLengths(ClOrder(i)) = bits(br, 3); i += 1 }
+      val cl = Huffman.fromLengths(clLengths)
+      var maxSymbol =
+        if (br.bit() == 1) 2 + bits(br, 2 + 2 * bits(br, 3))
+        else alphabet
+      var sym = 0
+      var prev = 8
+      while (sym < alphabet && maxSymbol > 0) {
+        maxSymbol -= 1
+        val c = cl.decode(br)
+        if (c < 16) {
+          lengths(sym) = c; sym += 1
+          if (c != 0) prev = c
+        } else {
+          val (repeat, fill) = c match {
+            case 16 => (3 + bits(br, 2), prev)
+            case 17 => (3 + bits(br, 3), 0)
+            case _ => (11 + bits(br, 7), 0) // 18, the last CL symbol
+          }
+          if (sym + repeat > alphabet) ByteCursor.reject()
+          var k = 0
+          while (k < repeat) { lengths(sym) = fill; sym += 1; k += 1 }
+        }
+      }
+    }
+    Huffman.fromLengths(lengths)
   }
 
-  private def decodePixelData(br: BitReader, width: Int, height: Int,
+  private def decodePixelData(br: BitCursor, width: Int, height: Int,
       cacheBits: Int, groups: Array[HuffGroup], metaBits: Int,
-      metaTiles: Array[Int]): Option[Array[Int]] = {
+      metaTiles: Array[Int]): Array[Int] = {
     val cacheSize = if (cacheBits > 0) 1 << cacheBits else 0
     val n = width * height
     val px = new Array[Int](n)
@@ -698,22 +588,22 @@ object Vp8l {
     val metaW = if (metaTiles == null) 0
       else (width + (1 << metaBits) - 1) >> metaBits
     var pos = 0
-    while (pos < n && !br.bad) {
+    while (pos < n) {
       val grp =
         if (metaTiles == null) groups(0)
         else groups(metaTiles(
           ((pos / width) >> metaBits) * metaW + ((pos % width) >> metaBits)))
-      val g = grp.g.read(br)
+      val g = grp.g.decode(br)
       if (g < 256) {
-        val r = grp.r.read(br); val bl = grp.b.read(br)
-        val a = grp.a.read(br)
+        val r = grp.r.decode(br); val bl = grp.b.decode(br)
+        val a = grp.a.decode(br)
         val p = (a << 24) | (r << 16) | (g << 8) | bl
         px(pos) = p; insert(p); pos += 1
       } else if (g < 256 + 24) {
         val len = prefixDecode(g - 256, br)
         val dist = planeCodeToDistance(width,
-          prefixDecode(grp.d.read(br), br))
-        if (dist > pos || pos + len > n) return None
+          prefixDecode(grp.d.decode(br), br))
+        if (dist > pos || pos + len > n) ByteCursor.reject()
         var k = 0
         while (k < len) {
           val p = px(pos - dist)
@@ -721,12 +611,12 @@ object Vp8l {
         }
       } else {
         val idx = g - 256 - 24
-        if (cacheBits == 0 || idx >= cacheSize) return None
+        if (cacheBits == 0 || idx >= cacheSize) ByteCursor.reject()
         val p = cache(idx)
         px(pos) = p; insert(p); pos += 1
       }
     }
-    if (br.bad || pos < n) None else Some(px)
+    px
   }
 
   /** In-place SUBTRACT_GREEN inverse: add green back to red/blue. */
@@ -816,7 +706,8 @@ object Vp8l {
     * Border rules: (0,0) predicts opaque black, row 0 predicts L,
     * column 0 predicts T; otherwise `mode`. The top-right neighbor of
     * the rightmost column wraps to the current row's first pixel
-    * (contiguous-buffer semantics the spec codifies). -1 = bad mode.
+    * (contiguous-buffer semantics the spec codifies). A mode above 13
+    * never gets here: both callers check it first (-1 below).
     */
   private def predictAt(buf: Array[Int], idx: Int, x: Int, y: Int,
       width: Int, mode: Int): Int = {
@@ -848,9 +739,9 @@ object Vp8l {
   /** In-place inverse predictor: residuals become pixels top-left to
     * bottom-right (predictions only read already-reconstructed
     * indices). Tile modes are the GREEN channel of the sub-image.
-    * False on a mode above 13 (malformed, not junk pixels). */
+    * Rejects a mode above 13 (malformed, not junk pixels). */
   private def inversePredictor(px: Array[Int], width: Int, height: Int,
-      bits: Int, tiles: Array[Int]): Boolean = {
+      bits: Int, tiles: Array[Int]): Unit = {
     val tilesPerRow = (width + (1 << bits) - 1) >> bits
     var idx = 0
     var y = 0
@@ -860,13 +751,12 @@ object Vp8l {
         val mode =
           if (x == 0 || y == 0) 1 // border rules ignore the tile mode
           else (tiles((y >> bits) * tilesPerRow + (x >> bits)) >> 8) & 0xff
-        if (mode > 13) return false
+        if (mode > 13) ByteCursor.reject()
         px(idx) = addPixels(px(idx), predictAt(px, idx, x, y, width, mode))
         x += 1; idx += 1
       }
       y += 1
     }
-    true
   }
 
   // ---- color transform (spec §4.2.3) -------------------------------------

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions.udf
   * block boundary, two zero blocks at end (tolerated absent at EOF) —
   * plus the record types real tarballs carry: GNU 'L' long names, PAX
   * 'x' path overrides ('g' globals skipped), hard/symbolic links.
-  * `.tar.gz` wraps the walk in a gzip inflate.
+  * `.tar.gz` wraps the walk in Warc's strict gzip member walk.
   */
 object Archives {
 
@@ -246,24 +246,11 @@ object Archives {
     Some(out.result()) // EOF without zero blocks: tolerated
   }
 
-  /** `.tar.gz`: gzip inflate (JDK, multi-member tolerant) then the
-    * ustar walk. */
-  def parseTarGz(b: Array[Byte]): Option[Seq[TarEntry]] = {
-    if (b == null || b.length < 2) return None
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(b))
-      val out = new java.io.ByteArrayOutputStream(b.length * 4 + 1024)
-      val buf = new Array[Byte](8192)
-      var k = in.read(buf)
-      while (k >= 0) {
-        out.write(buf, 0, k)
-        if (out.size() > (256 << 20)) return None
-        k = in.read(buf)
-      }
-      parseTar(out.toByteArray)
-    } catch { case _: java.io.IOException => None }
-  }
+  /** `.tar.gz`: the strict gzip member walk ([[Warc.gunzipAll]]: every
+    * member's header, CRC32 and ISIZE checked, no trailing bytes, a
+    * 256 MiB cap), then the ustar walk. */
+  def parseTarGz(b: Array[Byte]): Option[Seq[TarEntry]] =
+    Option(b).flatMap(Warc.gunzipAll).flatMap(parseTar)
 
   private def cstr(b: Array[Byte], at: Int, max: Int): String = {
     var n = 0
@@ -449,13 +436,6 @@ object Archives {
     out.toByteArray
   }
 
-  def gzip(b: Array[Byte]): Array[Byte] = {
-    val o = new java.io.ByteArrayOutputStream(b.length / 2 + 64)
-    val g = new java.util.zip.GZIPOutputStream(o)
-    g.write(b); g.close()
-    o.toByteArray
-  }
-
   // -- fixtures + Column lifts --------------------------------------- //
 
   /** Deterministic per-id ZIP: a 3-file mini source tree (stored
@@ -473,7 +453,7 @@ object Archives {
   /** Deterministic per-id tar.gz: dir + two files. */
   def synthTarGz(id: Long): Array[Byte] = {
     val d = (id % 10).toString
-    gzip(buildTar(Seq(
+    Warc.gzipMember(buildTar(Seq(
       ("src", None),
       ("src/lib.rs", Some(s"// SPDX-License-Identifier: MIT\nfn f$d() {}\n")),
       ("notes.txt", Some(s"note $d\n")))))
@@ -508,7 +488,7 @@ object Archives {
   def synthZip64Col(c: Column): Column =
     udf { id: Long => synthZip64(id) }.apply(c)
   def synthTarSpecialCol(c: Column): Column =
-    udf { id: Long => gzip(synthTarSpecial(id)) }.apply(c)
+    udf { id: Long => Warc.gzipMember(synthTarSpecial(id)) }.apply(c)
   def synthTarGzCol(c: Column): Column =
     udf { id: Long => synthTarGz(id) }.apply(c)
   /** bytes → array<struct<name, method, usize, crc_ok, text>>. */

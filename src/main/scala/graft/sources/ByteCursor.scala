@@ -194,3 +194,192 @@ object ByteCursor {
   /** Zigzag-then-LEB128: small magnitudes of either sign stay short. */
   def zigzag(v: Long): Array[Byte] = varint((v << 1) ^ (v >> 63))
 }
+
+/** The one bit reader: JPEG, FLAC, WebP lossless (VP8L) and GIF read
+  * their entropy-coded data through it. It walks the byte window
+  * `[from, end)` of `buf` bit by bit in one order, fixed when it is
+  * built, as `ByteCursor.uint` takes a byte-order flag: `msb` takes each
+  * byte's bits from the top (T.81, RFC 9639), otherwise from the bottom
+  * (the WebP lossless bitstream, GIF's LZW codes). `bits(n)` puts the
+  * first bit read at the top of its value in MSB order and at the
+  * bottom in LSB order. A read past `end` throws the shared
+  * [[ByteCursor.Reject]], so a parser runs it inside `ByteCursor.total`
+  * and never checks a sentinel. A bad window is a program error, as
+  * for `ByteCursor`.
+  */
+final class BitCursor(buf: Array[Byte], from: Long, end: Long,
+                      msb: Boolean) {
+  require(from >= 0L && from <= end && end <= buf.length,
+    s"bit window [$from, $end) outside a ${buf.length}-byte buffer")
+
+  private val stop = end.toInt
+  private var next = from.toInt // the next byte to load
+  private var cur = 0 // the loaded byte
+  private var left = 0 // its unread bits
+
+  private def load(): Unit = {
+    if (next >= stop) throw ByteCursor.Reject
+    cur = buf(next) & 0xff; next += 1; left = 8
+  }
+
+  def bit(): Int = {
+    if (left == 0) load()
+    left -= 1
+    (if (msb) cur >> left else cur >> (7 - left)) & 1
+  }
+
+  /** `n` (0..64) bits as one unsigned value. */
+  def bits(n: Int): Long = {
+    var v = 0L; var got = 0
+    while (got < n) { // whole runs of the loaded byte at a time
+      if (left == 0) load()
+      val k = math.min(n - got, left)
+      val run = (if (msb) cur >> (left - k) else cur >> (8 - left)) & ((1 << k) - 1)
+      v = if (msb) (v << k) | run else v | (run.toLong << got)
+      left -= k; got += k
+    }
+    v
+  }
+
+  /** The number of 0 bits before the next 1; more than `max` rejects. */
+  def unary(max: Int): Int = {
+    var q = 0
+    while (bit() == 0) { q += 1; if (q > max) ByteCursor.reject() }
+    q
+  }
+
+  /** Skips the rest of a partly read byte. */
+  def align(): Unit = left = 0
+
+  /** The offset of the first byte no read has touched. */
+  def pos: Long = next
+}
+
+/** The one bit writer, [[BitCursor]]'s mirror in the same bit order.
+  * `pad` fills the last partial byte: T.81 pads with 1 bits, FLAC,
+  * WebP lossless and GIF with 0 bits. Format framing (JPEG's 0xFF
+  * stuffing, markers, CRCs) stays with the format's encoder.
+  */
+final class BitWriter(msb: Boolean, pad: Int) {
+  private val out = new java.io.ByteArrayOutputStream()
+  private var acc = 0
+  private var nb = 0
+
+  private def put(b: Int): Unit = {
+    acc |= (b & 1) << (if (msb) 7 - nb else nb)
+    nb += 1
+    if (nb == 8) { out.write(acc); acc = 0; nb = 0 }
+  }
+
+  /** The low `n` bits of `v`, read back by `BitCursor.bits(n)`. */
+  def bits(v: Long, n: Int): Unit =
+    if (msb) { var i = n - 1; while (i >= 0) { put((v >>> i).toInt); i -= 1 } }
+    else { var i = 0; while (i < n) { put((v >>> i).toInt); i += 1 } }
+
+  /** A `len`-bit Huffman code, its top bit first in either order. */
+  def code(c: Int, len: Int): Unit = {
+    var i = len - 1
+    while (i >= 0) { put(c >>> i); i -= 1 }
+  }
+
+  /** Pads to the next byte boundary. */
+  def align(): Unit = while (nb != 0) put(pad)
+
+  /** Everything written, padded to whole bytes. */
+  def bytes: Array[Byte] = { align(); out.toByteArray }
+}
+
+/** One canonical Huffman code (T.81 Annex C, RFC 1951 §3.2.2):
+  * `counts(l - 1)` codes of each length l in 1..16, assigned in order to
+  * `symbols`, each length's codes following the last code of the
+  * length before, shifted up one bit. `decode` is the T.81 F.16
+  * min/max-code decoder, MSB of the code first in either bit order; a
+  * code no length matches rejects. `encode` writes a symbol's code.
+  * Built by [[Huffman.apply]] from a JPEG DHT (BITS, HUFFVAL) or by
+  * [[Huffman.fromLengths]] from per-symbol code lengths (WebP lossless).
+  */
+final class Huffman private (val counts: Array[Int], val symbols: Array[Int],
+                             single: Int) {
+  private val minCode = new Array[Int](17)
+  private val maxCode = new Array[Int](17)
+  private val valPtr = new Array[Int](17)
+  locally {
+    var code = 0; var k = 0; var l = 1
+    while (l <= 16) {
+      valPtr(l) = k
+      minCode(l) = code
+      code += counts(l - 1); k += counts(l - 1)
+      maxCode(l) = code - 1
+      code <<= 1
+      l += 1
+    }
+    require(k == symbols.length, "the counts must cover every symbol")
+  }
+
+  def decode(r: BitCursor): Int = {
+    if (single >= 0) return single
+    var code = 0; var l = 1
+    while (l <= 16) {
+      code = (code << 1) | r.bit()
+      if (counts(l - 1) > 0 && code >= minCode(l) && code <= maxCode(l))
+        return symbols(valPtr(l) + code - minCode(l))
+      l += 1
+    }
+    ByteCursor.reject()
+  }
+
+  // each symbol's code and length (0: not in the code); only the
+  // encoders need them, so a decoder never builds them
+  private lazy val (codeOf, lenOf) = {
+    val n = if (symbols.isEmpty) 0 else symbols.max + 1
+    val code = new Array[Int](n); val len = new Array[Int](n)
+    var c = 0; var k = 0; var l = 1
+    while (l <= 16) {
+      var i = 0
+      while (i < counts(l - 1)) {
+        code(symbols(k)) = c; len(symbols(k)) = l
+        c += 1; k += 1; i += 1
+      }
+      c <<= 1
+      l += 1
+    }
+    (code, len)
+  }
+
+  /** Writes `sym`'s code; a single-symbol code writes nothing. */
+  def encode(w: BitWriter, sym: Int): Unit = if (single < 0) {
+    require(sym < lenOf.length && lenOf(sym) > 0,
+      f"symbol 0x$sym%02x not in the code")
+    w.code(codeOf(sym), lenOf(sym))
+  }
+}
+
+object Huffman {
+
+  /** The code a JPEG DHT carries: BITS (16 counts) and HUFFVAL. */
+  def apply(counts: Array[Int], symbols: Array[Int]): Huffman = {
+    require(counts.length == 16, "one count per code length 1..16")
+    new Huffman(counts, symbols, -1)
+  }
+
+  /** The code of per-symbol lengths (0 = unused, at most 16), symbols
+    * ordered by length, then by symbol. A code of one used symbol
+    * reads and writes 0 bits, as WebP lossless specifies. */
+  def fromLengths(lengths: Array[Int]): Huffman = {
+    val counts = new Array[Int](16)
+    var s = 0
+    while (s < lengths.length) {
+      if (lengths(s) > 0) counts(lengths(s) - 1) += 1
+      s += 1
+    }
+    val next = counts.scanLeft(0)(_ + _) // first slot of each length
+    val symbols = new Array[Int](next(16))
+    s = 0
+    while (s < lengths.length) {
+      val l = lengths(s)
+      if (l > 0) { symbols(next(l - 1)) = s; next(l - 1) += 1 }
+      s += 1
+    }
+    new Huffman(counts, symbols, if (symbols.length == 1) symbols(0) else -1)
+  }
+}

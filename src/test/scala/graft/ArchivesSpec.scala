@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.Archives
+import graft.sources.{Archives, Warc}
 
 class ArchivesSpec extends AnyFunSuite {
 
@@ -62,13 +62,29 @@ class ArchivesSpec extends AnyFunSuite {
     // non-512-multiple rejects
     assert(Archives.parseTar(tar.take(tar.length - 1).toArray).isEmpty)
     // tar.gz round-trip
-    val tgz = Archives.gzip(tar)
+    val tgz = Warc.gzipMember(tar)
     assert(Archives.parseTarGz(tgz).get.map(_.name) == es.map(_.name))
     assert(Archives.parseTarGz(Array[Byte](1, 2)).isEmpty)
     // synth fixture
     val s = Archives.parseTarGz(Archives.synthTarGz(3)).get
     assert(s.map(_.name) == Seq("src", "src/lib.rs", "notes.txt"))
     assert(s(1).text == "// SPDX-License-Identifier: MIT\nfn f3() {}\n")
+  }
+
+  test("tar.gz reads through the strict gzip member walk") {
+    val tgz = Archives.synthTarGz(3)
+    assert(Archives.parseTarGz(tgz).get.length == 3)
+    // two members concatenate, as a multi-member stream should
+    val two = Warc.gzipMember(Archives.synthTarGz(3).take(0)) ++ tgz
+    assert(Archives.parseTarGz(two).get.length == 3)
+    // trailing bytes after the last member and reserved flag bits
+    // reject (the JDK's GZIPInputStream accepted both)
+    assert(Archives.parseTarGz(tgz ++ Array[Byte](0)).isEmpty)
+    assert(Archives.parseTarGz(tgz ++ "junk".getBytes).isEmpty)
+    val reserved = tgz.clone(); reserved(3) = 0x80.toByte
+    assert(Archives.parseTarGz(reserved).isEmpty)
+    assert(Archives.parseTarGz(null).isEmpty)
+    assert(Archives.parseTarGz(Array.emptyByteArray).isEmpty)
   }
 
   test("zip64: sentinel'd EOCD routes through the locator; extras resolve") {
@@ -99,6 +115,6 @@ class ArchivesSpec extends AnyFunSuite {
     assert(t(3).name == "plain4.txt" && t(3).text == "plain 4\n")
     // the gz lift round-trips too
     assert(Archives.parseTarGz(
-      Archives.gzip(Archives.synthTarSpecial(4))).get.length == 4)
+      Warc.gzipMember(Archives.synthTarSpecial(4))).get.length == 4)
   }
 }

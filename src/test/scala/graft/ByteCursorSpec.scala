@@ -1,6 +1,7 @@
 package graft
 
-import graft.sources.ByteCursor
+import graft.multimodal.Binary
+import graft.sources.{BitCursor, BitWriter, ByteCursor, Huffman}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
@@ -136,6 +137,111 @@ class ByteCursorSpec extends AnyFunSuite {
     }
   }
 
+  private def bitsOf(b: Array[Byte], msb: Boolean): BitCursor =
+    new BitCursor(b, 0L, b.length.toLong, msb)
+
+  test("bit cursor: MSB and LSB order, the window's last bit, the reject") {
+    val pair = bytes(0xa5, 0x0f)
+    assert(bitsOf(pair, msb = true).bits(12) == 0xa50L)
+    assert(bitsOf(pair, msb = false).bits(12) == 0xfa5L)
+    val msb = bitsOf(pair, msb = true)
+    assert(Seq.fill(16)(msb.bit()) ==
+      Seq(1, 0, 1, 0, 0, 1, 0, 1, 0, 0, 0, 0, 1, 1, 1, 1))
+    val lsb = bitsOf(pair, msb = false)
+    assert(Seq.fill(16)(lsb.bit()) ==
+      Seq(1, 0, 1, 0, 0, 1, 0, 1, 1, 1, 1, 1, 0, 0, 0, 0))
+    // the window ends at 1 of 2 buffer bytes: bit 7 reads, bit 8 rejects
+    val one = new BitCursor(pair, 0L, 1L, msb = true)
+    assert(one.bits(7) == 0x52L && one.bit() == 1 && one.pos == 1L)
+    assert(rejects(one.bit()))
+    assert(rejects(bitsOf(bytes(), msb = false).bit()))
+    assert(rejects(bitsOf(pair, msb = true).bits(17)))
+    assertThrows[IllegalArgumentException](new BitCursor(pair, 1L, 3L, true))
+  }
+
+  test("bit cursor: unary cap, align and the byte position, 33-bit reads") {
+    // 15 zeros, then a 1
+    assert(bitsOf(bytes(0, 1), msb = true).unary(15) == 15)
+    assert(rejects(bitsOf(bytes(0, 1), msb = true).unary(14)))
+    assert(rejects(bitsOf(bytes(0, 0), msb = true).unary(100)))
+    val c = new BitCursor(bytes(9, 0xe0, 0x3c), 1L, 3L, msb = true)
+    assert(c.pos == 1L && c.bits(3) == 7L && c.pos == 2L)
+    c.align()
+    assert(c.pos == 2L && c.bits(8) == 0x3cL && c.pos == 3L)
+    c.align() // already aligned: stays
+    assert(c.pos == 3L && rejects(c.bit()))
+    val wide = bitsOf(bytes(0xff, 0xff, 0xff, 0xff, 0x80), msb = true)
+    assert(wide.bits(33) == (1L << 33) - 1 && wide.pos == 5L)
+    val low = bitsOf(bytes(0, 0, 0, 0, 1), msb = false)
+    assert(low.bits(33) == 1L << 32)
+  }
+
+  test("bit writer round-trips through the cursor in both orders") {
+    val fields = Seq((1L, 1), (0x1f0L, 9), (0L, 3), (0x1fedcba98L, 33),
+      (5L, 3), (0L, 0), (0xabcdL, 16), (1L, 1))
+    Seq(true, false).foreach { msb =>
+      Seq(0, 1).foreach { pad =>
+        val w = new BitWriter(msb, pad)
+        fields.foreach { case (v, n) => w.bits(v, n) }
+        w.code(0x5, 3) // a Huffman code goes top bit first in either order
+        val out = w.bytes
+        val nBits = fields.map(_._2).sum + 3
+        assert(out.length == (nBits + 7) / 8)
+        val r = bitsOf(out, msb)
+        fields.foreach { case (v, n) => assert(r.bits(n) == v, s"$v/$n") }
+        assert(Seq.fill(3)(r.bit()) == Seq(1, 0, 1))
+        // the padding fills the last byte, then the window ends
+        assert(Seq.fill(8 - nBits % 8)(r.bit()).forall(_ == pad))
+        assert(rejects(r.bit()))
+      }
+    }
+    // only the low n bits are written
+    val w = new BitWriter(msb = true, pad = 0)
+    w.bits(0x1ffL, 4); w.bits(0L, 4)
+    assert(w.bytes.sameElements(bytes(0xf0)))
+  }
+
+  test("huffman: T.81 Annex K tables round-trip every symbol") {
+    Seq(Binary.jpegDcTable, Binary.jpegAcTable).foreach { h =>
+      Seq(true, false).foreach { msb =>
+        val w = new BitWriter(msb, pad = 1)
+        h.symbols.foreach(h.encode(w, _))
+        val r = bitsOf(w.bytes, msb)
+        assert(h.symbols.forall(s => h.decode(r) == s))
+      }
+    }
+    // K.3 table K.3: DC category 0 is 00, category 11 is 111111110
+    val w = new BitWriter(msb = true, pad = 1)
+    Binary.jpegDcTable.encode(w, 11); Binary.jpegDcTable.encode(w, 0)
+    assert(w.bytes.sameElements(bytes(0xff, 0x1f)))
+    // sixteen 1 bits are no DC code: a code no length matches rejects
+    assert(rejects(Binary.jpegDcTable.decode(bitsOf(bytes(0xff, 0xff), true))))
+    assert(rejects(Binary.jpegDcTable.decode(bitsOf(bytes(0xff), true))))
+    assertThrows[IllegalArgumentException](
+      Binary.jpegDcTable.encode(new BitWriter(true, 1), 12))
+  }
+
+  test("huffman from lengths: by length then symbol; one symbol reads 0 bits") {
+    // lengths A=2 B=1 C=3 D=3 (RFC 1951 3.2.2): B=0, A=10, C=110, D=111
+    val h = Huffman.fromLengths(Array(2, 1, 3, 3))
+    assert(h.counts.take(3).sameElements(Array(1, 1, 2)))
+    assert(h.symbols.sameElements(Array(1, 0, 2, 3)))
+    val w = new BitWriter(msb = false, pad = 0)
+    Seq(0, 1, 2, 3).foreach(h.encode(w, _))
+    val r = bitsOf(w.bytes, msb = false)
+    assert(Seq.fill(4)(h.decode(r)) == Seq(0, 1, 2, 3))
+    // a code of one used symbol consumes (and writes) no bits
+    val single = Huffman.fromLengths(Array(0, 0, 5, 0))
+    val empty = bitsOf(bytes(), msb = false)
+    assert(single.decode(empty) == 2 && single.decode(empty) == 2)
+    val none = new BitWriter(msb = false, pad = 0)
+    single.encode(none, 2)
+    assert(none.bytes.isEmpty)
+    // a code of no symbols matches nothing
+    assert(rejects(Huffman.fromLengths(Array(0, 0)).decode(
+      bitsOf(bytes(0, 0), msb = false))))
+  }
+
   test("no byte-helper copies outside ByteCursor.scala") {
     val helper = ("""def (u8|u16|u24|u32|u64|le16|le24|le32|le64|be16|be24|""" +
       """be32|be64|u16le|u32le|raw32le|raw32be|varint|zigzag|zigzagLong|""" +
@@ -152,6 +258,12 @@ class ByteCursorSpec extends AnyFunSuite {
     // `Inflate` is the one inflater; Warc's gzip member walk keeps its
     // own because it needs `getRemaining` after each member
     val inflater = """\bjava\.util\.zip\.Inflater\b|\bnew\s+Inflater\b""".r
+    // Warc's member walk is the one gzip reader; its scaladoc names
+    // GZIPInputStream, so only a construction counts
+    val gunzip = """\bnew\s+(java\.util\.zip\.)?GZIPInputStream\b""".r
+    // `BitCursor`, `BitWriter` and `Huffman` are the one bit reader,
+    // bit writer and canonical Huffman code
+    val bitCopy = """\bclass\s+\w*Bit(Reader|Writer)\b|\bclass\s+\w*Huff\w*Decoder\b""".r
     val inflaterFiles = Set("Inflate.scala", "Warc.scala")
     val parserDirs = Set("sources", "multimodal", "text")
     val root = java.nio.file.Paths.get("src/main/scala")
@@ -173,7 +285,9 @@ class ByteCursorSpec extends AnyFunSuite {
             if (inflaterFiles.contains(f.getFileName.toString)) Nil
             else inflater.findAllMatchIn(text)
               .map(m => s"${at(m.start)}: raw ${m.matched}").toList
-          copies.toList ++ caught ++ inflates
+          val more = (gunzip.findAllMatchIn(text) ++ bitCopy.findAllMatchIn(text))
+            .map(m => s"${at(m.start)}: ${m.matched}").toList
+          copies.toList ++ caught ++ inflates ++ more
         }.toList
     } finally files.close()
     assert(hits.isEmpty, hits.mkString("\n"))

@@ -291,7 +291,7 @@ class PropertySpec extends AnyFunSuite {
       (Binary.synthColorJpeg, Binary.jpegDecodeColor420),
       (Binary.synthJpegProg, Binary.jpegDecodeProgressive),
       (Binary.synthWavPcm, Binary.wavPcmDecode),
-      (Binary.synthFlac, Binary.flacDecode),
+      (Binary.synthFlac, Binary.flacDecode), (Vp8l.synthVp8l, Vp8l.decode),
       (Binary.synthVideoHeader, Binary.parseVideoMeta),
       (Binary.synthOggOpus, Binary.parseOpusTags),
       (Archives.synthTarGz, Warc.gunzipAll))
