@@ -39,7 +39,6 @@ object Smote {
     */
   def oversample(df: DataFrame, idCol: String, vecCol: String,
                  minorityPred: Column, k: Int, target: Int): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val m = Caches.keep("smote.oversample", df.where(minorityPred)
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .withColumn("rn",

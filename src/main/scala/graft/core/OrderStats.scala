@@ -65,7 +65,6 @@ object OrderStats {
       s"quantile probabilities must be in [0,1]: $ps")
     require(buckets >= 2, s"need at least 2 buckets: $buckets")
     val effBuckets = effectiveBuckets(buckets, cols.length)
-    CoreFunctions.register(df.sparkSession)
     def valid(c: String): Column = {
       val d = col(c).cast(DoubleType)
       when(d.isNotNull && !isnan(d), d)
@@ -123,7 +122,6 @@ object OrderStats {
     require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
       s"quantile probabilities must be in [0,1]: $ps")
     val spark = df.sparkSession
-    CoreFunctions.register(spark)
     // bounded collect: LIMIT maxGroups+1 so the cardinality guard is
     // enforced BEFORE anything unbounded reaches the driver — a
     // high-cardinality group column fails with the loud message below,
@@ -205,7 +203,7 @@ object OrderStats {
   private def selectAll(pairs: DataFrame, nCols: Int, ps: Seq[Double],
                         buckets: Int, collectThr: Int): Array[(Long, Map[Long, Double])] = {
     val bitsPerLevel = 63 - java.lang.Long.numberOfLeadingZeros(buckets.toLong)
-    val bits = CoreFunctions.dbits(col("v"))
+    val bits = graft.sim.GraftFunctions.dbits(col("v"))
     val out = Array.fill(nCols)(scala.collection.mutable.Map.empty[Long, Double])
     val ns = new Array[Long](nCols)
 

@@ -1,11 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Order-preserving integer image of a double: the IEEE-754 bit pattern
@@ -56,27 +53,4 @@ case class SortableBitsExpr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): SortableBitsExpr =
     copy(child = newChild)
-}
-
-/** Session registration for graft's core native functions. Idempotent
-  * and quiet: the fixed-name function is only created when absent, so
-  * repeated registration neither replaces state nor logs warnings.
-  */
-object CoreFunctions {
-  val DBitsName = "graft_dbits"
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(DBitsName)))
-      reg.createOrReplaceTempFunction(
-        DBitsName,
-        { args: Seq[Expression] =>
-          require(args.length == 1, s"$DBitsName takes 1 argument")
-          SortableBitsExpr(args.head)
-        },
-        "built-in")
-  }
-
-  /** Sortable-bits image of a double column (requires [[register]]). */
-  def dbits(c: Column): Column = call_function(DBitsName, c)
 }

@@ -196,7 +196,6 @@ object Dedup {
     // persisted: norms are computed once per vector, and the self-join
     // reuses one materialization for both sides; the pair-stage dot uses
     // the codegen'd kernel (bitwise-identical to the interpreted fold)
-    graft.sim.GraftFunctions.register(df.sparkSession)
     val v = Caches.keep("dedup.cosineDupPairs",
       df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
         .withColumn("n2", graft.sim.GraftFunctions.norm2(col("vec"))))
@@ -223,7 +222,6 @@ object Dedup {
                         threshold: Double, dim: Int,
                         tables: Int = 8, bitsPerTable: Int = 6): DataFrame = {
     import graft.sim.{Ann, GraftFunctions}
-    GraftFunctions.register(df.sparkSession)
     val v = Caches.keep("dedup.lshCosineDupPairs",
       df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
         .withColumn("n2", GraftFunctions.norm2(col("vec"))))

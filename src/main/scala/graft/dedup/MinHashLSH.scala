@@ -37,7 +37,7 @@ object MinHashLSH {
     graft.sim.GraftFunctions.minhashSig(sh, k)
 
   /** Higher-order-function form of [[signatureFromShingles]] (slow
-    * path, no session registration needed) — kept for parity testing.
+    * path) — kept for parity testing.
     * Single-pass fold: the naive `transform(0..k-1, i ->
     * array_min(transform(shingles, hash)))` re-evaluates every shingle
     * hash k times per row (Catalyst inlines the shared subtree into

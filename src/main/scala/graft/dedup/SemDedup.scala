@@ -51,7 +51,6 @@ object SemDedup {
     */
   def assign(df: DataFrame, idCol: String, vecCol: String,
              k: Int, iters: Int = 8): DataFrame = {
-    graft.sim.GraftFunctions.register(df.sparkSession)
     val e = df.select(col(idCol).cast("long").as("id"),
       transform(col(vecCol), x => x.cast("double")).as("vec"))
     // fewer rows than k (including zero): the fit pool can't seed k
@@ -140,7 +139,6 @@ object SemDedup {
     * cluster id is the bucket-confined quadratic stage.
     */
   def clusterPairs(assigned: DataFrame): DataFrame = {
-    graft.sim.GraftFunctions.register(assigned.sparkSession)
     val right = assigned.select(col("cluster"), col("id").as("b"),
       col("vec").as("vb"), col("n2").as("n2b"))
     assigned.select(col("cluster"), col("id"), col("vec"), col("n2"))

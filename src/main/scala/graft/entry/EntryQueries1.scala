@@ -2154,16 +2154,16 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     */
   private[graft] def qFilteredAnn(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.sim.VectorMath
+    import graft.sim.GraftFunctions
     val e = Caches.keep("entry.q250", Tables.load(s, dir, "embeddings")
       .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"),
         col("label"))
-      .withColumn("n2", VectorMath.norm2(col("vec"))))
+      .withColumn("n2", GraftFunctions.norm2(col("vec"))))
     val pairs = Caches.keep("entry.q250", e.as("q").where(col("q.id") < 50)
       .join(e.as("t"), col("q.id") =!= col("t.id"))
       .select(col("q.id").as("qid"), col("t.id").as("tid"),
         (col("t.label") % 4 === 1).as("ok"),
-        (VectorMath.dot(col("q.vec"), col("t.vec")) /
+        (GraftFunctions.dot(col("q.vec"), col("t.vec")) /
           (sqrt(col("q.n2")) * sqrt(col("t.n2")))).as("cos")))
     val wq = Window.partitionBy("qid").orderBy(desc("cos"), asc("tid"))
     val exact = pairs.where(col("ok"))
@@ -2200,14 +2200,14 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     */
   private[graft] def qIntrinsicDim(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import graft.sim.VectorMath
+    import graft.sim.GraftFunctions
     val v = Caches.keep("entry.q251",
       Tables.load(s, dir, "embeddings").where(col("vec_id") < 300)
         .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"))
-        .withColumn("n2", VectorMath.norm2(col("vec"))))
+        .withColumn("n2", GraftFunctions.norm2(col("vec"))))
     val nn = v.as("x").join(v.as("y"), col("x.id") =!= col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
-        (lit(1.0) - VectorMath.dot(col("x.vec"), col("y.vec")) /
+        (lit(1.0) - GraftFunctions.dot(col("x.vec"), col("y.vec")) /
           (sqrt(col("x.n2")) * sqrt(col("y.n2")))).as("dist"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("a").orderBy(asc("dist"), asc("b"))))
@@ -2240,13 +2240,13 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     * oracle replays all 8 rounds as chained MATERIALIZED CTEs.
     */
   private[graft] def qKCenter(s: SparkSession, dir: String): DataFrame = {
-    import graft.sim.VectorMath
+    import graft.sim.GraftFunctions
     val v = Caches.keep("entry.q252",
       Tables.load(s, dir, "embeddings").where(col("vec_id") < 200)
         .select(col("vec_id").cast("long").as("id"), col("embedding").as("vec"))
-        .withColumn("n2", VectorMath.norm2(col("vec"))))
+        .withColumn("n2", GraftFunctions.norm2(col("vec"))))
     def distTo(cvec: Seq[Float], cn2: Double) =
-      lit(1.0) - VectorMath.dot(col("vec"), typedlit(cvec)) /
+      lit(1.0) - GraftFunctions.dot(col("vec"), typedlit(cvec)) /
         (sqrt(col("n2")) * lit(math.sqrt(cn2)))
     var cur = v.withColumn("md", lit(Double.MaxValue))
     val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
@@ -2706,7 +2706,6 @@ private[graft] trait EntryQueries1 { this: SparkEntry.type =>
     * moment sums are decimal-exact cross-engine.
     */
   private[graft] def qMatryoshka(s: SparkSession, dir: String): DataFrame = {
-    graft.sim.GraftFunctions.register(s)
     import graft.sim.GraftFunctions.{dot, norm2}
     val v = Caches.keep("entry.q226",
       em(s, dir).select(col("vec_id").cast("long").as("id"),

@@ -15,6 +15,12 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 private[graft] trait EntryQueries2 { this: SparkEntry.type =>
 
+  /** Column `c` as a double, null where it is null or NaN. */
+  private def vd(c: String): Column = {
+    val d = col(c).cast("double")
+    when(col(c).isNotNull && !isnan(d), d)
+  }
+
   /** SK2 — salted skew join: lineitem⋈part on the (potentially hot)
     * part key via replicate-and-salt, then revenue per brand. The
     * oracle is the PLAIN join + group-by — the salted plan must be
@@ -1496,10 +1502,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     // persist the par'd slice: the mean pass and the central-moment
     // pass otherwise each pay the serial cache read + re-shuffle (r16)
     val t = Caches.keep("entry.q162", par(liStats(s, dir)))
-    def vd(c: String) = {
-      val d = col(c).cast("double")
-      when(col(c).isNotNull && !isnan(d), d)
-    }
     val meanAggs = cols.flatMap { c =>
       Seq(Stats.dsum(vd(c)).as(s"s_$c"), count(vd(c)).as(s"n_$c"))
     }
@@ -1967,10 +1969,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
     * scans total.
     */
   private[graft] def qOls(s: SparkSession, dir: String): DataFrame = {
-    def vd(c: String) = {
-      val d = col(c).cast("double")
-      when(col(c).isNotNull && !isnan(d), d)
-    }
     val ok = vd("l_extendedprice").isNotNull && vd("l_quantity").isNotNull &&
       vd("l_discount").isNotNull
     // par(): both passes are decimal-exact sums of double products —
@@ -2905,7 +2903,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
   private[graft] def qHardNegatives(s: SparkSession, dir: String): DataFrame = {
     import graft.sim.{Ann, GraftFunctions}
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
     val v = Caches.keep("entry.hardNegatives",
       em(s, dir).select(col("vec_id").cast("long").as("id"),
           col("embedding").as("vec"), col("label"))
@@ -3001,7 +2998,6 @@ private[graft] trait EntryQueries2 { this: SparkEntry.type =>
   private[graft] def qHybridRrf(s: SparkSession, dir: String): DataFrame = {
     import graft.sim.GraftFunctions
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
     val rrfK = 60
     val topN = 100
     val lex = bm25Frame(s, dir, Seq("join", "hash", "filter"))

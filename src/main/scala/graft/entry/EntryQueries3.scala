@@ -15,6 +15,11 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 private[graft] trait EntryQueries3 { this: SparkEntry.type =>
 
+  /** A driver-side double rounded HALF_UP at 6 decimals through its
+    * shortest decimal form, the way Spark's `round` rounds a double. */
+  private def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
+    .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
   /** A37 — split-conformal prediction interval: the
     * distribution-free uncertainty wrapper around ANY point predictor
     * (Vovk; Angelopoulos & Bates 2021). Hash-split train/cal/test; the
@@ -416,8 +421,6 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
           .as("h")).head()
       (r.getDouble(0), r.getDouble(1), r.getDouble(2))
     }
-    def r6(v: Double): Double = java.math.BigDecimal.valueOf(v)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     var theta = 1.0
     val rows = (1 to 3).map { k =>
       val (nll, g, h) = step(theta)
@@ -736,8 +739,6 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val estMean = sq.sum / 16.0
     val groupMeans = sq.grouped(4).map(g => g.sum / 4.0).toSeq.sorted
     val estMom = (groupMeans(1) + groupMeans(2)) / 2.0
-    def r6(v: Double) = BigDecimal(v)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     import s.implicits._
     Seq((nInst, nDistinct, f2, r6(estMean), r6(estMom),
         r6((estMean - f2) / f2), r6((estMom - f2) / f2)))
@@ -950,8 +951,6 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val colsB = cells.map(_._2).distinct.sorted
     val nPopTot = pop.values.sum
     val nSampTot = samp.values.sum
-    def r6(v: Double) = BigDecimal(v)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     // w starts uniform N/n; each half-round scales by target/achieved
     // margin; sums accumulate over ROUNDED per-cell products so the
     // fold is order-free (decimal-sum semantics, mirrored in SQL)
@@ -1982,7 +1981,6 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
   private[graft] def qMmr(s: SparkSession, dir: String): DataFrame = {
     import graft.sim.GraftFunctions
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(s)
     // both weights as EXPLICIT literals: 1.0 − 0.7 in IEEE is
     // 0.30000000000000004, which would diverge from the oracle's 0.3
     val lam = 0.7
@@ -2919,8 +2917,6 @@ private[graft] trait EntryQueries3 { this: SparkEntry.type =>
     val groupMeans = prods.grouped(8).map(_.sum / 8.0).toSeq.sorted
     val estMom = (groupMeans(3) + groupMeans(4)) / 2.0
     val (nA, nB, jx) = (sk.getLong(0), sk.getLong(1), sk.getLong(2))
-    def r6(v: Double) = BigDecimal(v)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     import s.implicits._
     Seq((nA, nB, jx, r6(estMean), r6(estMom),
       r6((estMean - jx.toDouble) / jx.toDouble),

@@ -65,7 +65,7 @@ object GridSearch {
                   grid: Seq[(Int, Int)], poolSize: Int = 4096,
                   seed: Long = 42L): DataFrame = {
     import graft.core.Stats
-    import graft.score.{IfScoreExpr, IsolationForest}
+    import graft.score.IsolationForest
     val spark = df.sparkSession
     import spark.implicits._
     val base = Caches.keep("gridsearch.ifParamGrid",
@@ -77,7 +77,7 @@ object GridSearch {
         numTrees = numTrees, maxSamples = maxSamples, seed = seed)
     }
     val scored = models.zipWithIndex.foldLeft(base) { case (acc, (m, i)) =>
-      IfScoreExpr.withScore(acc, m, featuresCol, s"__s$i")
+      m.transform(acc, featuresCol, s"__s$i")
     }
     val aggs = grid.indices.flatMap { i =>
       val s = col(s"__s$i")

@@ -1704,14 +1704,7 @@ object Binary {
       }
       y += 1
     }
-    val deflater = new java.util.zip.Deflater()
-    deflater.setInput(raw); deflater.finish()
-    val buf = new Array[Byte](raw.length + 64)
-    val out = new java.io.ByteArrayOutputStream()
-    while (!deflater.finished())
-      out.write(buf, 0, deflater.deflate(buf))
-    deflater.end()
-    val idat = out.toByteArray
+    val idat = graft.sources.Inflate.deflate(raw, raw = false)
     def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
       val t = typ.getBytes("US-ASCII")
       be32(data.length) ++ t ++ data ++ be32(crc32Of(t, data))
@@ -3450,9 +3443,12 @@ object Binary {
   /** One subframe into `w`. `mode`: -1 auto (CONSTANT if flat, else
     * best FIXED 0-2), -2 VERBATIM, -3 LPC order-2 test form (qlp
     * [2,-1], shift 0 — the fixed-order-2 predictor routed through the
-    * general LPC path), 0..4 forced FIXED order. */
+    * general LPC path), 0..4 forced FIXED order. A block shorter than
+    * the forced order (a stream's tail block) codes VERBATIM. */
   private def flacWriteSubframe(w: BitWriter, xs0: Array[Int], bps0: Int,
-                                mode: Int): Unit = {
+                                forced: Int): Unit = {
+    val order = if (forced == -3) 2 else forced
+    val mode = if (order > xs0.length) -2 else forced
     // wasted bits: shared trailing zeros move into the subframe header
     // (flag + unary count-1) and samples code at the reduced width
     val tz = xs0.foldLeft(32)((m, v) =>
@@ -3492,7 +3488,6 @@ object Binary {
       putHeader(1L) // VERBATIM
       xs.foreach(v => w.bits(v.toLong & ((1L << bps) - 1), bps))
     } else if (mode == -3) {
-      val order = 2
       putHeader(32L | (order - 1).toLong) // LPC
       xs.take(order).foreach(v => w.bits(v.toLong & ((1L << bps) - 1), bps))
       w.bits(14L, 4) // qlp precision 15 (-1 coded)
@@ -3504,15 +3499,15 @@ object Binary {
       putHeader(0L) // CONSTANT
       w.bits(xs(0).toLong & ((1L << bps) - 1), bps)
     } else {
-      val order =
+      val fixed =
         if (mode >= 0) mode
         else (0 to 2).minBy { o =>
           if (xs.length <= o) Long.MaxValue
           else flacFixedResiduals(xs, o).foldLeft(0L)((s, v) => s + math.abs(v))
         }
-      putHeader(8L | order.toLong) // FIXED
-      xs.take(order).foreach(v => w.bits(v.toLong & ((1L << bps) - 1), bps))
-      writeResiduals(flacFixedResiduals(xs, order), order)
+      putHeader(8L | fixed.toLong) // FIXED
+      xs.take(fixed).foreach(v => w.bits(v.toLong & ((1L << bps) - 1), bps))
+      writeResiduals(flacFixedResiduals(xs, fixed), fixed)
     }
   }
 

@@ -215,13 +215,7 @@ object Font {
     val parts = tables.zipWithIndex.map { case ((tag, data), t) =>
       if (t % 2 == (id % 2).toInt) (tag, data, data.length) // stored
       else {
-        val d = new java.util.zip.Deflater()
-        d.setInput(data); d.finish()
-        val out = new java.io.ByteArrayOutputStream(data.length + 32)
-        val buf = new Array[Byte](8192)
-        while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-        d.end()
-        val comp = out.toByteArray
+        val comp = graft.sources.Inflate.deflate(data, raw = false)
         if (comp.length < data.length) (tag, comp, data.length)
         else (tag, data, data.length)
       }

@@ -686,7 +686,7 @@ object Pdf {
     }
     val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
     val c1Raw = content1.getBytes(latin1)
-    val c1 = if (v == 1) deflate(c1Raw) else c1Raw
+    val c1 = if (v == 1) graft.sources.Inflate.deflate(c1Raw, raw = false) else c1Raw
     val filter1 = if (v == 1) " /Filter /FlateDecode" else ""
     val out = new java.io.ByteArrayOutputStream()
     def w(str: String): Unit = out.write(str.getBytes(latin1))
@@ -709,16 +709,6 @@ object Pdf {
     }
     if (v == 3) w(s"7 0 obj ${c1.length} endobj\n")
     w("trailer << /Size 8 /Root 1 0 R >>\n%%EOF\n")
-    out.toByteArray
-  }
-
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(data); d.finish()
-    val out = new java.io.ByteArrayOutputStream(data.length + 32)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
     out.toByteArray
   }
 
@@ -802,7 +792,7 @@ object Pdf {
       s"$num $off"
     }.mkString(" ") + " "
     val payload = (header + bodies.map(_._2).mkString(" ")).getBytes(latin1)
-    val packed = deflate(payload)
+    val packed = graft.sources.Inflate.deflate(payload, raw = false)
     val out = new java.io.ByteArrayOutputStream()
     def w(str: String): Unit = out.write(str.getBytes(latin1))
     w("%PDF-1.5\n")

@@ -1,17 +1,19 @@
 package graft.score
 
+import graft.sim.FloatArrays
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, col}
 import org.apache.spark.sql.types._
 
 /** A broadcastable per-row scorer over a primitive feature vector —
   * the engine's contract for driver-fit models scored distributed
-  * (LinearAE, MlpAE; the reference's `model.predict` after `collect()`,
+  * (LinearAE, MlpAE, the isolation forest's [[FlatForest]]; the
+  * reference's `model.predict` after `collect()`,
   * `app/AE_model.py:218-226`, minus the driver boundary).
   */
 trait ArrayScorer extends Serializable {
@@ -19,38 +21,32 @@ trait ArrayScorer extends Serializable {
 }
 
 /** Scores an `array<float|double>` column with a broadcast
-  * [[ArrayScorer]], reading elements straight out of `ArrayData` (one
-  * bulk primitive copy per row) — no Seq materialization, no
-  * per-element boxing, no Scala-UDF encoder round-trip. CodegenFallback
-  * (the scorer is an opaque closure), but the per-row work is a matrix
-  * multiply that dwarfs the fallback dispatch. Feature arrays must have
-  * non-null elements.
+  * [[ArrayScorer]], inside whole-stage codegen: the generated code
+  * unwraps the broadcast once per task, copies each row once into a
+  * primitive `double[]` ([[FloatArrays.toDoubles]]) and makes one
+  * `score` call — no Seq materialization, no per-element boxing, no
+  * Scala-UDF encoder round-trip. Feature arrays must have non-null
+  * elements.
   */
 case class ArrayScoreExpr(child: Expression, scorer: Broadcast[ArrayScorer])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
 
   override def dataType: DataType = DoubleType
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  override def checkInputDataTypes(): TypeCheckResult =
+    FloatArrays.check("graft_arrayscore", child)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft array scorer expects array<float|double>, got ${other.catalogString}")
-  }
+  override def nullSafeEval(a: Any): Any = scorer.value.score(
+    FloatArrays.toDoubles(a.asInstanceOf[ArrayData], FloatArrays.isFloat(child)))
 
-  override def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val x =
-      if (isFloat) {
-        val f = arr.toFloatArray()
-        val d = new Array[Double](f.length)
-        var i = 0
-        while (i < f.length) { d(i) = f(i).toDouble; i += 1 }
-        d
-      } else arr.toDoubleArray()
-    scorer.value.score(x)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val scorerClass = classOf[ArrayScorer].getName
+    val bc = ctx.addReferenceObj("graftScorerBc", scorer, classOf[Broadcast[_]].getName)
+    // unwrap the broadcast once per task, not once per row
+    val s = ctx.addMutableState(scorerClass, "graftScorer",
+      v => s"$v = ($scorerClass) $bc.value();")
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $s.score(" +
+      s"graft.sim.FloatArrays.toDoubles($a, ${FloatArrays.isFloat(child)}));")
   }
 
   override protected def withNewChildInternal(newChild: Expression): ArrayScoreExpr =
@@ -72,10 +68,9 @@ object ArrayScoreExpr {
     * drop, the broadcast lives exactly as long as plans referencing it
     * and is ContextCleaner-collected with them.
     */
-  private[score] def scored(df: DataFrame, featuresCol: String, outCol: String,
-                            prefix: String,
-                            builder: Seq[Expression] => Expression): DataFrame = {
-    val name = s"${prefix}_${nextId.incrementAndGet()}"
+  private def scored(df: DataFrame, featuresCol: String, outCol: String,
+                     builder: Seq[Expression] => Expression): DataFrame = {
+    val name = s"graft_arrayscore_${nextId.incrementAndGet()}"
     val reg = df.sparkSession.sessionState.functionRegistry
     reg.createOrReplaceTempFunction(name, builder, "built-in")
     try {
@@ -90,13 +85,14 @@ object ArrayScoreExpr {
     }
   }
 
-  /** The scored frame `df` + `outCol`: broadcast the scorer, apply as a
-    * no-boxing map expression (scoped registration — no session leak).
+  /** The scored frame `df` + `outCol`: broadcast the scorer, apply it as
+    * one codegen'd map expression (scoped registration — no session
+    * leak).
     */
   def withScore(df: DataFrame, scorer: ArrayScorer, featuresCol: String,
                 outCol: String): DataFrame = {
     val bc = df.sparkSession.sparkContext.broadcast(scorer)
-    scored(df, featuresCol, outCol, "graft_arrayscore", { args: Seq[Expression] =>
+    scored(df, featuresCol, outCol, { args: Seq[Expression] =>
       require(args.length == 1, "graft_arrayscore takes 1 argument")
       ArrayScoreExpr(args.head, bc)
     })

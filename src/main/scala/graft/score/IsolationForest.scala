@@ -54,12 +54,12 @@ object IsolationForest {
     }
 
     /** Distributed scoring: broadcast the [[FlatForest flattened forest]],
-      * apply as a codegen'd map stage ([[IfScoreExpr]]) — no boxing, no
+      * apply as a codegen'd map stage ([[ArrayScoreExpr]]) — no boxing, no
       * encoder round-trip; bitwise-identical scores to [[udfTransform]].
       */
     def transform(df: DataFrame, featuresCol: String,
                   outCol: String = "if_score"): DataFrame =
-      IfScoreExpr.withScore(df, this, featuresCol, outCol)
+      ArrayScoreExpr.withScore(df, FlatForest(this), featuresCol, outCol)
 
     /** Boxed Scala-UDF scoring — correctness baseline for the codegen
       * path (ModelSpec asserts bitwise equality); not used by queries.

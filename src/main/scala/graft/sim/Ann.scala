@@ -90,7 +90,6 @@ object Ann {
     */
   def cosineTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
                  queryPred: Column = lit(true)): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val v = Caches.keep("ann.cosineTopK",
       df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
         .withColumn("n2", GraftFunctions.norm2(col("vec"))))
@@ -105,7 +104,6 @@ object Ann {
   def lshTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
               dim: Int, tables: Int = 4, bitsPerTable: Int = 8,
               queryPred: Column = lit(true)): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val v = Caches.keep("ann.lshTopK",
       df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
         .withColumn("n2", GraftFunctions.norm2(col("vec"))))
@@ -140,7 +138,6 @@ object Ann {
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String, k: Int,
               nCells: Int = 16, nprobe: Int = 2,
               queryPred: Column = lit(true)): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val v = Caches.keep("ann.ivfTopK",
       df.select(col(idCol).cast("long").as("id"), col(vecCol).cast("array<double>").as("vec"))
         .withColumn("n2", GraftFunctions.norm2(col("vec"))))
@@ -192,7 +189,6 @@ object Ann {
     */
   def knnJoin(queries: DataFrame, corpus: DataFrame,
               idCol: String, vecCol: String, k: Int): DataFrame = {
-    GraftFunctions.register(queries.sparkSession)
     def prep(df: DataFrame) =
       df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
         .withColumn("n2", GraftFunctions.norm2(col("vec")))

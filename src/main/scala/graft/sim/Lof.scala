@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *   LOF(p) = (Σ_{o∈N_k(p)} lrd(o)) / (k · lrd(p))
   *
   * Engine-parity discipline: raw cosines are bitwise identical across
-  * engines (the fixed-order fold of `VectorMath`), so the kNN ranking
+  * engines (the fixed-order fold of `GraftFunctions.dot`), so the kNN ranking
   * is exact; every DERIVED quantity is rounded to micro-units and
   * summed as exact integers (reach-dist at 1e-6, lrd at 1e-6) so no
   * unordered floating sum ever reaches the output — the q121/q96
@@ -43,10 +43,10 @@ object Lof {
   def scores(df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     val v = Caches.keep("lof.vectors", df.select(col(idCol).cast("long").as("id"),
         col(vecCol).as("vec"))
-      .withColumn("n2", VectorMath.norm2(col("vec"))))
+      .withColumn("n2", GraftFunctions.norm2(col("vec"))))
     val pairs = v.as("x").join(v.as("y"), col("x.id") =!= col("y.id"))
       .select(col("x.id").as("a"), col("y.id").as("b"),
-        (lit(1.0) - VectorMath.dot(col("x.vec"), col("y.vec")) /
+        (lit(1.0) - GraftFunctions.dot(col("x.vec"), col("y.vec")) /
           (sqrt(col("x.n2")) * sqrt(col("y.n2")))).as("dist"))
     val wRank = Window.partitionBy("a").orderBy(asc("dist"), asc("b"))
     val knn = Caches.keep("lof.knn", pairs.withColumn("rank", row_number().over(wRank))

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * (deterministic rotation order, sign-normalized eigenvectors), which
   * is exact territory for d in the hundreds. Transform is k dot
   * products per row against broadcast-literal components
-  * (`VectorMath.dot`, codegen'd HOF) minus precomputed scalar offsets
+  * (`GraftFunctions.dot`, the codegen'd native kernel) minus precomputed scalar offsets
   * — centering never materializes.
   *
   * At 100 TB: the fit moves d(d+3)/2 doubles per partition up a merge
@@ -40,7 +40,7 @@ object Pca {
       components.zipWithIndex.foldLeft(df) { case (acc, (comp, j)) =>
         val offset = comp.zip(mean).map { case (c, m) => c * m }.sum
         acc.withColumn(s"$prefix$j",
-          VectorMath.dot(col(vecCol), typedLit(comp.toSeq)) - lit(offset))
+          GraftFunctions.dot(col(vecCol), typedLit(comp.toSeq)) - lit(offset))
       }
 
     /** Fraction of total variance captured by the leading components. */

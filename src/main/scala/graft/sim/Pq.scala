@@ -128,7 +128,6 @@ object Pq {
                 rerankFactor: Int = 4,
                 queryPred: Column = lit(true)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    GraftFunctions.register(df.sparkSession)
     val coarse = KMeans.fit(
       df.select(col(idCol).cast("long").as("id"),
         transform(col(vecCol), x => x.cast("double")).as("v")),

@@ -3,17 +3,21 @@ package graft.sim
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector math over `ArrayType(Float/Double)` embedding columns as pure
-  * higher-order-function expressions (codegen'd, no UDFs).
+/** Cosine from precomputed norms (with its DuckDB twins) over
+  * `ArrayType(Float/Double)` embedding columns, and the higher-order-
+  * function references of the native kernels.
   *
-  * Determinism: `aggregate` folds the array sequentially in index order,
-  * so double summation here is order-fixed and bitwise-reproducible across
-  * partitionings AND across engines (DuckDB `list_reduce` folds the same
-  * way) — no decimal widening needed, unlike shuffled aggregates
-  * (see graft.core.Stats).
+  * Queries compute dot products and norms with the codegen'd
+  * [[GraftFunctions.dot]] / [[GraftFunctions.norm2]]. The interpreted
+  * [[dot]], [[norm2]] and [[cosine]] here are kept only as the references
+  * AnnSpec and DedupSpec compare those kernels against: `aggregate` folds
+  * the array sequentially in index order, exactly as the kernels and
+  * DuckDB's `list_reduce` do, so for same-length vectors all three are
+  * bitwise identical across partitionings and engines — no decimal
+  * widening needed, unlike shuffled aggregates (see graft.core.Stats).
   *
   * Scale: norms are meant to be computed once per vector *before* any
-  * pair join (`withNorm`), so an n×n similarity stage joins pre-reduced
+  * pair join, so an n×n similarity stage joins pre-reduced
   * (id, vec, norm) tuples and the O(d) work per pair is a single dot
   * product.
   */

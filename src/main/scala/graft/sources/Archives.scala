@@ -290,15 +290,7 @@ object Archives {
     members.foreach { case (name, text, deflated) =>
       val data = text.getBytes(utf8)
       val crc = new java.util.zip.CRC32(); crc.update(data)
-      val comp = if (deflated) {
-        val d = new java.util.zip.Deflater(
-          java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-        d.setInput(data); d.finish()
-        val o = new java.io.ByteArrayOutputStream(data.length + 32)
-        val buf = new Array[Byte](8192)
-        while (!d.finished()) o.write(buf, 0, d.deflate(buf))
-        d.end(); o.toByteArray
-      } else data
+      val comp = if (deflated) Inflate.deflate(data, raw = true) else data
       val nameB = name.getBytes(utf8)
       val method = if (deflated) 8 else 0
       val lho = out.size().toLong

@@ -178,7 +178,7 @@ object Avro {
     def block(b0: Int): Array[Byte] = {
       val payload = (0 until perBlock).toArray
         .flatMap(i => record(b0 * perBlock + i.toLong))
-      val data = if (deflateCodec) deflateRaw(payload) else payload
+      val data = if (deflateCodec) Inflate.deflate(payload, raw = true) else payload
       zigzag(perBlock.toLong) ++ zigzag(data.length.toLong) ++ data ++ sync
     }
     val metaMap = zigzag(2L) ++
@@ -187,17 +187,6 @@ object Avro {
       zigzag(0L)
     "Obj".getBytes(Utf8) ++ Array[Byte](1) ++ metaMap ++ sync ++
       block(0) ++ block(1)
-  }
-
-  private def deflateRaw(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(
-      java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-    d.setInput(data); d.finish()
-    val out = new java.io.ByteArrayOutputStream(data.length + 32)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
   }
 
   def synthAvroCol(c: Column): Column =

@@ -108,19 +108,9 @@ object Git {
 
   // ---- fixture ------------------------------------------------------ //
 
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(data); d.finish()
-    val out = new java.io.ByteArrayOutputStream(data.length + 32)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
   private def loose(typ: String, content: Array[Byte]): Array[Byte] =
-    deflate((s"$typ ${content.length}" + "\u0000").getBytes("US-ASCII") ++
-      content)
+    Inflate.deflate((s"$typ ${content.length}" + "\u0000").getBytes("US-ASCII") ++
+      content, raw = false)
 
   /** 40-hex deterministic pseudo-sha of (id, salt) — an 8-hex word
     * repeated 5×, so a SQL oracle rebuilds it with

@@ -4,6 +4,8 @@ package graft.sources
   * (WOFF table data, git loose objects, Avro deflate blocks, PDF
   * /FlateDecode, ZIP members, PNG IDAT) — a single implementation so
   * the stall handling and bomb guard can never diverge between copies.
+  * Its mirror [[deflate]] is the one JDK deflate, for the fixture
+  * encoders of the same formats; ByteCursorSpec fails on another.
   * Pdf goes through [[apply]] with its 64 MiB cap; Archives and PNG go
   * through [[exact]], which keeps the declared-size contract. The one
   * exception is [[Warc]]'s gzip member walk: it needs the inflater's
@@ -34,6 +36,20 @@ private[graft] object Inflate {
       Some(out.toByteArray)
     } catch { case _: java.util.zip.DataFormatException => None }
     finally inf.end()
+  }
+
+  /** Deflate `data` at zlib's default level (6), the mirror of
+    * [[apply]]: `raw` = headerless deflate, else a zlib stream. Every
+    * fixture encoder and `Compress.deflatedLen` deflate through it. */
+  def deflate(data: Array[Byte], raw: Boolean): Array[Byte] = {
+    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, raw)
+    try {
+      d.setInput(data); d.finish()
+      val out = new java.io.ByteArrayOutputStream(data.length + 32)
+      val buf = new Array[Byte](8192)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      out.toByteArray
+    } finally d.end()
   }
 
   /** Inflate `data` into an exact `expected`-byte buffer, where the

@@ -206,14 +206,7 @@ object Orc {
       if (!zlib) footerPlain
       else {
         // one non-original chunk: 3-byte LE header (len << 1) | 0
-        val d = new java.util.zip.Deflater(
-          java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-        d.setInput(footerPlain); d.finish()
-        val acc = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        while (!d.finished()) acc.write(buf, 0, d.deflate(buf))
-        d.end()
-        val body = acc.toByteArray
+        val body = Inflate.deflate(footerPlain, raw = true)
         ByteCursor.le24(body.length << 1) ++ body
       }
     // PostScript (plain)

@@ -32,9 +32,6 @@ object Tables {
     // session the same way so timestamp→epoch math is engine-identical
     // regardless of which entry point built the session
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // graft's native expressions (graft_dot, graft_strhash) ride every
-    // query path; registration is idempotent
-    graft.sim.GraftFunctions.register(spark)
     // the schema comes from the footer AFTER the confs above, so
     // nanosAsLong shapes it exactly as it shapes Spark's own inference
     val path = s"$dir/$name.parquet"

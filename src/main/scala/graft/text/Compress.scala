@@ -23,21 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object Compress {
 
-  /** Deflated byte count of a string (level 6, zlib-wrapped). The
-    * output buffer allows for the stored-block worst case (5 bytes per
-    * 65535 + constant) so a single pass always fits.
-    */
-  def deflatedLen(t: String): Int = {
-    val bytes = t.getBytes("UTF-8")
-    val d = new java.util.zip.Deflater(6, false)
-    d.setInput(bytes)
-    d.finish()
-    val buf = new Array[Byte](bytes.length + bytes.length / 1000 + 64)
-    var n = 0
-    while (!d.finished()) n += d.deflate(buf, n, buf.length - n)
-    d.end()
-    n
-  }
+  /** Deflated byte count of a string (level 6, zlib-wrapped). */
+  def deflatedLen(t: String): Int =
+    graft.sources.Inflate.deflate(t.getBytes("UTF-8"), raw = false).length
 
   def deflatedLenCol(c: Column): Column = udf { t: String => deflatedLen(t) }.apply(c)
 

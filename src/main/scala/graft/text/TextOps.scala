@@ -43,10 +43,9 @@ object TextOps {
     *
     * Dispatches to the native codegen kernel
     * ([[graft.sim.StrHashExpr]], one static call per value instead of
-    * one lambda invocation per character); sessions are registered by
-    * `Tables.load` / `GraftFunctions.register`. [[strHashHof]] is the
-    * pure higher-order form (identical results on BMP text, no session
-    * registration needed) kept for parity testing.
+    * one lambda invocation per character), which registers itself on
+    * the active session. [[strHashHof]] is the pure higher-order form
+    * (identical results on BMP text) kept for parity testing.
     */
   def strHash(c: Column, seed: Long = HashSeed): Column =
     graft.sim.GraftFunctions.strHash(c, seed)

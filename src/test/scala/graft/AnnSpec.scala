@@ -22,7 +22,6 @@ class AnnSpec extends SparkSpec {
   }
 
   test("codegen dot kernel is bitwise-identical to the interpreted fold") {
-    GraftFunctions.register(spark)
     val df = clustered(4, 5, 16)
     val both = df.as("x").join(df.as("y"), col("x.vec_id") < col("y.vec_id"))
       .select(
@@ -37,13 +36,29 @@ class AnnSpec extends SparkSpec {
   }
 
   test("dot kernel handles float and double arrays") {
-    GraftFunctions.register(spark)
     val d = Seq((Seq(1.0f, 2.0f), Seq(3.0, 4.0))).toDF("f", "d")
     val r = d.select(
       GraftFunctions.dot(col("f"), col("f")),
       GraftFunctions.dot(col("d"), col("d")),
       GraftFunctions.dot(col("f"), col("d"))).head
     assert(r.getDouble(0) == 5.0 && r.getDouble(1) == 25.0 && r.getDouble(2) == 11.0)
+  }
+
+  test("native functions register themselves once, and again after a drop") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier("graft_dot")
+    val d = Seq((Seq(1.0f, 2.0f), Seq(3.0, 4.0))).toDF("f", "d")
+    reg.dropFunction(id)
+    assert(!reg.functionExists(id))
+    // a freshly built call registers the function before it returns
+    assert(d.select(GraftFunctions.dot(col("f"), col("d"))).head.getDouble(0) == 11.0)
+    val first = reg.lookupFunctionBuilder(id)
+    assert(first.isDefined)
+    // a second build keeps the registered builder: no replacement, so
+    // Spark logs no "replaced a previously registered function" WARN
+    assert(d.select(GraftFunctions.norm2(col("d"))).head.getDouble(0) == 25.0)
+    assert(reg.lookupFunctionBuilder(id).get eq first.get)
   }
 
   test("cosineTopK: nearest neighbors are same-cluster members") {

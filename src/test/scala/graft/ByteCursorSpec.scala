@@ -266,30 +266,59 @@ class ByteCursorSpec extends AnyFunSuite {
     val bitCopy = """\bclass\s+\w*Bit(Reader|Writer)\b|\bclass\s+\w*Huff\w*Decoder\b""".r
     val inflaterFiles = Set("Inflate.scala", "Warc.scala")
     val parserDirs = Set("sources", "multimodal", "text")
+    val hits = scanMain { (f, text, at) =>
+      if (f.getFileName.toString == "ByteCursor.scala") Nil
+      else {
+        val copies =
+          helper.findAllMatchIn(text).map(m => s"${at(m.start)}: ${m.matched}")
+        val caught =
+          if (!parserDirs.contains(f.getParent.getFileName.toString)) Nil
+          else catches.flatMap(_.findAllMatchIn(text)
+            .map(m => s"${at(m.start)}: catch ${m.matched}"))
+        val inflates =
+          if (inflaterFiles.contains(f.getFileName.toString)) Nil
+          else inflater.findAllMatchIn(text)
+            .map(m => s"${at(m.start)}: raw ${m.matched}").toList
+        val more = (gunzip.findAllMatchIn(text) ++ bitCopy.findAllMatchIn(text))
+          .map(m => s"${at(m.start)}: ${m.matched}").toList
+        copies.toList ++ caught ++ inflates ++ more
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("one native-expression seam and one deflater in src/main") {
+    // native functions register only in GraftFunctions (idempotent) and
+    // in ArrayScoreExpr.scored (scoped to one analysis); a driver-fit
+    // model is an ArrayScorer, so no expression falls back from codegen
+    val rules = Seq(
+      """\bcreateOrReplaceTempFunction\b""".r ->
+        Set("GraftFunctions.scala", "ArrayScoreExpr.scala"),
+      """\bCodegenFallback\b""".r -> Set.empty[String],
+      """\bregister\s*\(""".r -> Set("GraftFunctions.scala"),
+      // Inflate.deflate is the one deflater
+      """\bnew\s+(java\.util\.zip\.)?Deflater\b""".r -> Set("Inflate.scala"))
+    val hits = scanMain { (f, text, at) =>
+      rules.flatMap { case (re, allowed) =>
+        if (allowed.contains(f.getFileName.toString)) Nil
+        else re.findAllMatchIn(text).map(m => s"${at(m.start)}: ${m.matched}")
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  /** `check(file, text, at)` over every Scala file in src/main, where
+    * `at(offset)` names the file and line of a match. */
+  private def scanMain(
+      check: (java.nio.file.Path, String, Int => String) => Seq[String]): List[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root")
     val files = java.nio.file.Files.walk(root)
-    val hits = try {
-      files.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .filterNot(_.getFileName.toString == "ByteCursor.scala")
-        .flatMap { f =>
-          val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-          def at(i: Int) = s"$f:${text.substring(0, i).count(_ == '\n') + 1}"
-          val copies =
-            helper.findAllMatchIn(text).map(m => s"${at(m.start)}: ${m.matched}")
-          val caught =
-            if (!parserDirs.contains(f.getParent.getFileName.toString)) Nil
-            else catches.flatMap(_.findAllMatchIn(text)
-              .map(m => s"${at(m.start)}: catch ${m.matched}"))
-          val inflates =
-            if (inflaterFiles.contains(f.getFileName.toString)) Nil
-            else inflater.findAllMatchIn(text)
-              .map(m => s"${at(m.start)}: raw ${m.matched}").toList
-          val more = (gunzip.findAllMatchIn(text) ++ bitCopy.findAllMatchIn(text))
-            .map(m => s"${at(m.start)}: ${m.matched}").toList
-          copies.toList ++ caught ++ inflates ++ more
-        }.toList
+    try {
+      files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        check(f, text, i => s"$f:${text.substring(0, i).count(_ == '\n') + 1}")
+      }.toList
     } finally files.close()
-    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -47,6 +47,31 @@ class ModelSpec extends SparkSpec {
     fast.zip(slow).foreach { case (a, b) => assert(a == b, s"$a != $b") }
   }
 
+  test("distributed forest and linear AE scores equal the driver score bitwise") {
+    val base = planted(150)
+    val forest = IsolationForest.fit(base, "id", "features", numTrees = 40,
+      maxSamples = 16, poolSize = 151)
+    val linear = LinearAE.fit(base, "id", "features", k = 1, sampleSize = 151)
+    def bits(v: Double) = java.lang.Double.doubleToLongBits(v)
+    for (elem <- Seq("float", "double")) {
+      val df = base.select(col("id"),
+        col("features").cast(s"array<$elem>").as("features"))
+      val rows = linear.transform(forest.transform(df, "features"), "features")
+        .collect()
+      assert(rows.length == 151)
+      rows.foreach { r =>
+        val x = r.getSeq[Any](1).map {
+          case f: Float => f.toDouble
+          case d: Double => d
+        }.toArray
+        assert(bits(r.getAs[Double]("if_score")) == bits(forest.score(x)),
+          s"$elem forest score differs at id ${r.getLong(0)}")
+        assert(bits(r.getAs[Double]("recon_error")) == bits(linear.score(x)),
+          s"$elem linear AE score differs at id ${r.getLong(0)}")
+      }
+    }
+  }
+
   test("isolation forest c(n) matches known values") {
     assert(IsolationForest.c(1) == 0.0)
     assert(math.abs(IsolationForest.c(2) - 0.15443133) < 1e-6)

@@ -927,6 +927,25 @@ class MultimodalSpec extends SparkSpec {
       meta.channels == 1)
   }
 
+  test("FLAC codec: a tail block shorter than the forced order codes VERBATIM") {
+    // 194 samples in 192-sample blocks leave a 2-sample tail: orders 3
+    // and 4 cannot predict it, orders 1 and 2 and the LPC form just can
+    val xs = Array.tabulate(194)(i => (900 * math.sin(i / 6.0)).toInt - (i % 5))
+    for (mode <- Seq(-3, 1, 2, 3, 4); stereo <- Seq(-1, 10)) {
+      val chans = if (stereo < 0) Array(xs) else Array(xs, xs.map(v => -v / 2))
+      val enc = Binary.flacEncode(16000, chans, 192, mode = mode, stereo = stereo)
+      val dec = Binary.flacDecode(enc)
+      assert(dec.isDefined, s"mode $mode stereo $stereo failed to decode")
+      chans.indices.foreach { c =>
+        assert(dec.get.samples(c).sameElements(chans(c)),
+          s"mode $mode stereo $stereo channel $c mismatch")
+      }
+    }
+    // a 1-sample tail under the LPC order-2 form
+    val one = Binary.flacEncode(16000, Array(xs.take(193)), 192, mode = -3)
+    assert(Binary.flacDecode(one).get.samples(0).sameElements(xs.take(193)))
+  }
+
   test("FLAC codec: stereo decorrelation modes reconstruct exactly") {
     val n = 300
     val l = Array.tabulate(n)(i => (1500 * math.sin(i / 9.0)).toInt + (i % 7))

@@ -928,13 +928,17 @@ class PlanAuditSpec extends SparkSpec {
     val df = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("features"))
-    val m = graft.score.IsolationForest.fit(df, "id", "features",
+    val forest = graft.score.IsolationForest.fit(df, "id", "features",
       numTrees = 10, maxSamples = 8, poolSize = 50)
-    val scored = m.transform(df, "features")
-    val p = plan(scored)
-    // "*(n)" node prefixes mark whole-stage-codegen regions in the
-    // compact plan string; the scoring Project must carry one
-    assert(p.linesIterator.exists(l => l.contains("ifscoreexpr") && l.contains("*(")),
-      s"scoring fell out of codegen:\n$p")
+    val linear = graft.score.LinearAE.fit(df, "id", "features", k = 2,
+      sampleSize = 50)
+    for ((name, scored) <- Seq("forest" -> forest.transform(df, "features"),
+                               "linear AE" -> linear.transform(df, "features"))) {
+      val p = plan(scored)
+      // "*(n)" node prefixes mark whole-stage-codegen regions in the
+      // compact plan string; the one scorer node's Project must carry one
+      assert(p.linesIterator.exists(l => l.contains("arrayscoreexpr") && l.contains("*(")),
+        s"$name scoring fell out of codegen:\n$p")
+    }
   }
 }

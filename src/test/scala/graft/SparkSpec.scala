@@ -10,10 +10,6 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = Session(cpus = 4, warehouseDir =
-      Some(java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
-    graft.sim.GraftFunctions.register(s)
-    s
-  }
+  lazy val session: SparkSession = Session(cpus = 4, warehouseDir =
+    Some(java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
